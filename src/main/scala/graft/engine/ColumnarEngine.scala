@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.codecs._
-import graft.core.{BlockReader, BlockWriter}
+import graft.core.BlockWriter
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Input row after the derive stage: the five source columns plus the
@@ -864,8 +864,7 @@ object ColumnarEngine {
         if (m.chunkIndex.isEmpty) Seq((file, Seq.empty[ChunkStats]))
         else m.chunkIndex.map(cs => (file, Seq(cs)))
       }
-    val neededL = longColumns.toSet
-    val neededS = stringColumns.toSet
+    val needed = Lane.ofSpecs(DefaultSchema)
     // parallelize places exactly one chunk task per partition WITHOUT
     // an exchange (createDataset + repartition paid a full shuffle
     // stage of the task descriptors on every decode job — measured
@@ -873,41 +872,20 @@ object ColumnarEngine {
     val rdd = spark.sparkContext
       .parallelize(tasks, math.max(tasks.size, 1))
       .flatMap { case (file, chunkIndex) =>
-        val conf = ContainerIO.confFrom(confKv)
-        val fs = ContainerIO.fs(file, conf)
-        val p = new org.apache.hadoop.fs.Path(file)
-        val fileLen = fs.getFileStatus(p).getLen
-        val in = fs.open(p)
+        val (in, fileLen) =
+          ContainerFormat.open(file, ContainerIO.confFrom(confKv))
         Option(TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit](_ => in.close()))
-        val chunks: Iterator[DecodedChunk] =
-          if (chunkIndex.nonEmpty) chunkIndex.iterator.map { cs =>
-            val ci = new ContainerInput(in, cs.offset, cs.offset + cs.length)
-            ContainerFormat.readChunk(ci, neededL, neededS, cs.blockCrcs)
-          } else {
-            val ci = new ContainerInput(in, 0L, fileLen)
-            ContainerFormat.readPrelude(ci)
-            new Iterator[DecodedChunk] {
-              override def hasNext: Boolean = !ci.atEnd
-              override def next(): DecodedChunk =
-                ContainerFormat.readChunk(ci, neededL, neededS, Map.empty)
-            }
-          }
-        chunks.flatMap { chunk =>
+        ContainerFormat.chunks(in, fileLen, file, chunkIndex, needed).flatMap { chunk =>
           ContainerFormat.verifyContentDigest(chunk)
-          val longs = chunk.longs
           // typed rows need Java Strings: materialize each column once
-          val repo = chunk.strs.get("repo").strings
-          val pth = chunk.strs.get("path").strings
-          val cmt = chunk.strs.get("commit").strings
-          val lng = chunk.strs.get("lang").strings
-          val content = chunk.strs.get("content").strings
+          val Seq(repo, pth, cmt, lng, content) =
+            stringColumns.map(chunk.col(_).bytes.strings)
+          val Seq(lenC, hash, ord, repoC, langC, pathC) =
+            longColumns.map(chunk.col(_).longs)
           (0 until chunk.rows).iterator.map { j =>
-            DerivedRow(
-              repo(j), pth(j), cmt(j), lng(j), content(j),
-              longs.get("len_content")(j), longs.get("hash64")(j),
-              longs.get("commit_ord")(j), longs.get("repo_code")(j),
-              longs.get("lang_code")(j), longs.get("path_code")(j))
+            DerivedRow(repo(j), pth(j), cmt(j), lng(j), content(j), lenC(j),
+              hash(j), ord(j), repoC(j), langC(j), pathC(j))
           }
         }
       }
@@ -925,85 +903,5 @@ object ColumnarEngine {
     val unknown = columns.toSet -- longColumns.toSet -- stringColumns.toSet
     require(unknown.isEmpty, s"unknown columns: $unknown")
     spark.read.format("graft").load(outDir).select(columns.map(col): _*)
-  }
-
-  /** Parse one chunk's header fields with corruption guards shared by
-    * [[decodeContainer]] and [[readColumns]]: any implausible count or
-    * length raises a require-failure/DecodeError, never an out-of-bounds
-    * access or unbounded allocation (fuzz contract, FuzzSpec).
-    */
-  private def readChunkHeader(r: BlockReader): (Int, Int) = {
-    val n = r.getVarint()
-    require(n >= 0 && n <= LongCodecs.MaxDecodeRows, s"implausible chunk row count $n")
-    val nCols = r.getVarint()
-    require(nCols >= 0 && nCols <= 4096, s"implausible column count $nCols")
-    (n.toInt, nCols.toInt)
-  }
-
-  private def readColHeader(r: BlockReader): (String, Int, Int) = {
-    val nameLen = r.getVarint()
-    require(nameLen >= 0 && nameLen <= 4096, s"implausible column name length $nameLen")
-    val name = new String(r.getBytes(nameLen.toInt), UTF_8)
-    val kind = r.getByte()
-    require(kind == 0 || kind == 1, s"unknown column kind $kind")
-    val blockLen = r.getVarint()
-    require(blockLen >= 0 && blockLen <= r.remaining, s"block length $blockLen overruns container")
-    (name, kind, blockLen.toInt)
-  }
-
-  def decodeContainer(bytes: Array[Byte]): Iterator[DerivedRow] = {
-    val r = new BlockReader(bytes)
-    val magic = r.getBytes(Magic.length)
-    require(java.util.Arrays.equals(magic, Magic), "bad container magic")
-    r.getVarint() // part id (informational)
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
-    val out = Iterator.unfold(()) { _ =>
-      if (!r.hasRemaining) None
-      else {
-        val (n, nCols) = readChunkHeader(r)
-        val longs = new java.util.HashMap[String, Array[Long]]()
-        val strs = new java.util.HashMap[String, Array[String]]()
-        var c = 0
-        while (c < nCols) {
-          val (name, kind, blockLen) = readColHeader(r)
-          val blockOff = r.position
-          r.skip(blockLen) // decode in place — no per-block copy
-          if (kind == 0)
-            longs.put(name, LongCodecs.decodeSlice(bytes, blockOff, blockOff + blockLen))
-          else
-            strs.put(name, StringCodecs.decodeSlice(bytes, blockOff, blockOff + blockLen))
-          c += 1
-        }
-        for (col <- longColumns) {
-          val a = longs.get(col)
-          require(a != null && a.length == n, s"container missing/short long column $col")
-        }
-        for (col <- stringColumns) {
-          val a = strs.get(col)
-          require(a != null && a.length == n, s"container missing/short string column $col")
-        }
-        val stored = r.getBytes(32)
-        val chunkSha = java.security.MessageDigest.getInstance("SHA-256")
-        val content = strs.get("content")
-        var i = 0
-        while (i < n) {
-          sha.reset()
-          chunkSha.update(sha.digest(content(i).getBytes(UTF_8)))
-          i += 1
-        }
-        require(java.util.Arrays.equals(chunkSha.digest(), stored),
-          "chunk content digest mismatch: decoded rows differ from encoded rows")
-        val rows = (0 until n).iterator.map { j =>
-          DerivedRow(
-            strs.get("repo")(j), strs.get("path")(j), strs.get("commit")(j),
-            strs.get("lang")(j), content(j),
-            longs.get("len_content")(j), longs.get("hash64")(j),
-            longs.get("commit_ord")(j), longs.get("repo_code")(j),
-            longs.get("lang_code")(j), longs.get("path_code")(j))
-        }
-        Some((rows, ()))
-      }
-    }
-    out.flatten
   }
 }

@@ -125,40 +125,92 @@ private[graft] final class ContainerInput(
   }
 }
 
-/** One decoded chunk: only the `needed` columns are materialized.
-  * String columns are UTF-8 slices ([[graft.codecs.Utf8Column]]) — Java
-  * Strings are materialized only by consumers that need them. `doubles`
-  * holds kind-5 columns un-mapped back from their sortable-long storage
-  * form. `nulls` holds the validity bitmaps of columns whose chunk
-  * carried nulls (bit j set = row j is NULL; a column absent from the
-  * map has no nulls in this chunk).
+/** The in-memory lane a stored column kind decodes into. */
+private[graft] sealed abstract class Lane(val label: String)
+
+private[graft] object Lane {
+  case object Longs extends Lane("long")
+  case object Ints extends Lane("int")
+  case object Doubles extends Lane("double")
+  /** UTF-8 strings and binary share the (pool, offsets, lens) slice shape. */
+  case object Bytes extends Lane("byte-slice")
+  case object Floats extends Lane("float-array")
+
+  /** The kind -> lane mapping. Temporal kinds are integer columns with a
+    * logical label (3 = timestamp micros, 4 = date days), 8 (decimal) is
+    * the unscaled long, 9 (boolean) surfaces as 0/1 ints, 10 (float) as
+    * its sortable-int bits, and 5 (double) is un-mapped from its
+    * sortable-long storage form.
+    */
+  def of(kind: Int): Lane = kind match {
+    case 0 | 3 | 8 => Longs
+    case 2 | 4 | 9 | 10 => Ints
+    case 5 => Doubles
+    case 1 | 6 => Bytes
+    case 7 => Floats
+    case k => throw new IllegalArgumentException(s"unknown column kind $k")
+  }
+
+  /** Lanes of a schema's live columns (dropped positions hold no data). */
+  def ofSpecs(specs: Seq[ColumnSpec]): Map[String, Lane] =
+    specs.filterNot(_.dropped).map(s => s.name -> of(s.kind)).toMap
+}
+
+/** One decoded column of a chunk: its lane's values and, when the chunk
+  * carried nulls for it, its validity bitmap (bit j set = row j is NULL;
+  * null rows hold placeholder values). The typed accessors are safe for
+  * the column's own lane, which [[ContainerFormat.readChunk]] checks
+  * against the lane the caller asked for.
+  */
+private[graft] final class DecodedColumn(val lane: Lane, values: AnyRef,
+                                         val nulls: Array[Byte]) {
+  val rows: Int = values match {
+    case a: Array[Long] => a.length
+    case a: Array[Int] => a.length
+    case a: Array[Double] => a.length
+    case u: graft.codecs.Utf8Column => u.n
+    case f: graft.codecs.FloatsColumn => f.n
+  }
+  def longs: Array[Long] = values.asInstanceOf[Array[Long]]
+  def ints: Array[Int] = values.asInstanceOf[Array[Int]]
+  def doubles: Array[Double] = values.asInstanceOf[Array[Double]]
+  def bytes: graft.codecs.Utf8Column = values.asInstanceOf[graft.codecs.Utf8Column]
+  def floats: graft.codecs.FloatsColumn = values.asInstanceOf[graft.codecs.FloatsColumn]
+  @inline def validAt(j: Int): Boolean =
+    nulls == null || (nulls(j >> 3) & (1 << (j & 7))) == 0
+}
+
+/** One decoded chunk: only the `needed` columns are materialized, each
+  * in its lane. Strings stay UTF-8 slices ([[graft.codecs.Utf8Column]]) —
+  * Java Strings are materialized only by consumers that need them.
   */
 private[graft] final case class DecodedChunk(
     rows: Int,
-    longs: java.util.HashMap[String, Array[Long]],
-    strs: java.util.HashMap[String, graft.codecs.Utf8Column],
-    storedDigest: Array[Byte],
-    ints: java.util.HashMap[String, Array[Int]] =
-      new java.util.HashMap[String, Array[Int]](),
-    doubles: java.util.HashMap[String, Array[Double]] =
-      new java.util.HashMap[String, Array[Double]](),
-    nulls: java.util.HashMap[String, Array[Byte]] =
-      new java.util.HashMap[String, Array[Byte]](),
-    flts: java.util.HashMap[String, graft.codecs.FloatsColumn] =
-      new java.util.HashMap[String, graft.codecs.FloatsColumn]()) {
+    cols: java.util.HashMap[String, DecodedColumn],
+    storedDigest: Array[Byte]) {
 
-  /** Is row j of column c non-null? (Columns without a bitmap are all
-    * non-null.)
-    */
+  def col(c: String): DecodedColumn = cols.get(c)
+
+  /** Is row j of column c non-null? */
   def validAt(c: String, j: Int): Boolean = {
-    val b = nulls.get(c)
-    b == null || (b(j >> 3) & (1 << (j & 7))) == 0
+    val d = cols.get(c)
+    d == null || d.validAt(j)
   }
 }
 
-/** Shared streaming parse of the container format (prelude + chunks),
-  * used by the row and columnar DSv2 readers. Mirrors the validation caps
-  * of [[ColumnarEngine.decodeContainer]].
+/** A chunk's place in its container: byte range, row count and the block
+  * CRCs the manifest recorded.
+  */
+private[graft] trait ChunkRange {
+  def offset: Long
+  def length: Long
+  def rows: Int
+  def crcs: Map[String, Long]
+}
+
+/** Streaming parse of the container format (prelude + chunks), shared by
+  * every read of a container: the DSv2 reader, the engine decode, and
+  * maintenance rewrites.
   */
 private[graft] object ContainerFormat {
 
@@ -180,18 +232,48 @@ private[graft] object ContainerFormat {
     ci.readVarint()
   }
 
+  /** Open a container file: its input stream and length. */
+  def open(file: String, conf: org.apache.hadoop.conf.Configuration)
+      : (FSDataInputStream, Long) = {
+    val p = new org.apache.hadoop.fs.Path(file)
+    val fs = ContainerIO.fs(file, conf)
+    val len = fs.getFileStatus(p).getLen
+    (fs.open(p), len)
+  }
+
+  /** The decoded chunks of one open container: the indexed `ranges` when
+    * given (each range must lie inside the file, parse to exactly its
+    * end, and hold its indexed row count), else the whole file streamed
+    * from its prelude (legacy manifests without a chunk index).
+    */
+  def chunks(in: FSDataInputStream, fileLen: Long, file: String,
+             ranges: Seq[ChunkRange],
+             needed: Map[String, Lane]): Iterator[DecodedChunk] =
+    if (ranges.nonEmpty) ranges.iterator.map { cs =>
+      require(cs.offset >= 0 && cs.length >= 0 && cs.offset + cs.length <= fileLen,
+        s"chunk range [${cs.offset}, +${cs.length}) overruns $file ($fileLen bytes)")
+      val ci = new ContainerInput(in, cs.offset, cs.offset + cs.length)
+      val chunk = readChunk(ci, needed, cs.crcs)
+      require(ci.atEnd, s"chunk at ${cs.offset} shorter than its indexed length")
+      require(chunk.rows == cs.rows, s"chunk at ${cs.offset} row count mismatch")
+      chunk
+    } else {
+      val ci = new ContainerInput(in, 0L, fileLen)
+      readPrelude(ci)
+      new Iterator[DecodedChunk] {
+        override def hasNext: Boolean = !ci.atEnd
+        override def next(): DecodedChunk = readChunk(ci, needed, Map.empty)
+      }
+    }
+
   /** Parse one chunk starting at the cursor. Non-needed column blocks are
     * position advances (no IO); needed blocks are read, CRC-verified when
-    * the manifest recorded a CRC, and decoded.
+    * the manifest recorded a CRC, and decoded into their kind's lane. A
+    * needed column that is missing, short, or of another lane than asked
+    * for fails the read.
     */
-  def readChunk(ci: ContainerInput, neededLongs: Set[String],
-                neededStrs: Set[String], crcs: Map[String, Long],
-                neededInts: Set[String] = Set.empty,
-                neededDbls: Set[String] = Set.empty,
-                neededFlts: Set[String] = Set.empty): DecodedChunk = {
-    val needed = (name: String) =>
-      neededLongs(name) || neededStrs(name) || neededInts(name) ||
-        neededDbls(name) || neededFlts(name)
+  def readChunk(ci: ContainerInput, needed: Map[String, Lane],
+                crcs: Map[String, Long]): DecodedChunk = {
     val n = {
       val l = ci.readVarint()
       require(l >= 1 && l <= LongCodecs.MaxDecodeRows, s"implausible chunk rows $l")
@@ -202,12 +284,7 @@ private[graft] object ContainerFormat {
       require(l >= 0 && l <= 4096, s"implausible column count $l")
       l.toInt
     }
-    val longs = new java.util.HashMap[String, Array[Long]]()
-    val strs = new java.util.HashMap[String, graft.codecs.Utf8Column]()
-    val ints = new java.util.HashMap[String, Array[Int]]()
-    val dbls = new java.util.HashMap[String, Array[Double]]()
-    val nulls = new java.util.HashMap[String, Array[Byte]]()
-    val flts = new java.util.HashMap[String, graft.codecs.FloatsColumn]()
+    val cols = new java.util.HashMap[String, DecodedColumn]()
     var c = 0
     while (c < nCols) {
       val nameLen = ci.readVarint()
@@ -227,7 +304,7 @@ private[graft] object ContainerFormat {
           s"block length $l exceeds the $MaxBlockBytes streaming buffer cap")
         l.toInt
       }
-      if (needed(name)) {
+      if (needed.contains(name)) {
         val block = ci.readFullyBytes(blockLen)
         crcs.get(name).foreach { want =>
           require(Manifests.crc32c(block) == want,
@@ -236,80 +313,48 @@ private[graft] object ContainerFormat {
         // validity prefix: ceil(n/8) bytes ahead of the plain value
         // block (null rows hold placeholder values the codecs compress
         // away); the CRC above covers bitmap + values together
-        val off =
-          if (!hasNulls) 0
-          else {
-            val bm = (n + 7) >> 3
-            require(blockLen >= bm,
-              s"column $name block shorter than its validity bitmap")
-            nulls.put(name, java.util.Arrays.copyOfRange(block, 0, bm))
-            bm
-          }
-        // kind 3 (timestamp micros) decodes like kind 0; kind 4 (date
-        // days) decodes like kind 2 — temporal types are integer columns
-        // with a logical label; kind 5 (double) is kind-0 storage behind
-        // the order-preserving bit mapping; kind 8 (decimal) is the
-        // unscaled long straight through the kind-0 path
-        if (kind == 0 || kind == 3 || kind == 8)
-          longs.put(name, LongCodecs.decodeSlice(block, off, block.length))
-        // kind 10 (float) is kind-2 narrow storage behind the
-        // order-preserving bit mapping: the ints lane carries the
-        // sortable bits; readers flip at the column boundary
-        else if (kind == 2 || kind == 4 || kind == 10)
-          ints.put(name, graft.codecs.IntCodecs.decodeSlice(block, off, block.length))
-        else if (kind == 9) {
-          // boolean: kind-0 stats-selected storage (bit-pack/RLE),
-          // surfaced through the narrow int lane; anything outside 0/1
-          // is corruption, not data
-          val wide = LongCodecs.decodeSlice(block, off, block.length)
-          val out = new Array[Int](wide.length)
-          var i = 0
-          while (i < wide.length) {
-            val v = wide(i)
-            if (v != 0L && v != 1L) throw new graft.core.DecodeError.Overflow
-            out(i) = v.toInt
-            i += 1
-          }
-          ints.put(name, out)
+        val bm = if (hasNulls) (n + 7) >> 3 else 0
+        require(blockLen >= bm, s"column $name block shorter than its validity bitmap")
+        val nulls = if (hasNulls) java.util.Arrays.copyOfRange(block, 0, bm) else null
+        val lane = Lane.of(kind)
+        val values: AnyRef = lane match {
+          case Lane.Longs => LongCodecs.decodeSlice(block, bm, block.length)
+          // boolean: kind-0 stats-selected storage (bit-pack/RLE); anything
+          // outside 0/1 is corruption, not data
+          case Lane.Ints if kind == 9 =>
+            val wide = LongCodecs.decodeSlice(block, bm, block.length)
+            val out = new Array[Int](wide.length)
+            var i = 0
+            while (i < wide.length) {
+              val v = wide(i)
+              if (v != 0L && v != 1L) throw new graft.core.DecodeError.Overflow
+              out(i) = v.toInt
+              i += 1
+            }
+            out
+          // kind 10 (float) is kind-2 narrow storage behind the
+          // order-preserving bit mapping; readers flip at the boundary
+          case Lane.Ints => graft.codecs.IntCodecs.decodeSlice(block, bm, block.length)
+          case Lane.Doubles => graft.codecs.DoubleBits.toDoubles(
+            LongCodecs.decodeSlice(block, bm, block.length))
+          // binary decodes zero-copy into the slice shape strings use —
+          // readers pick Binary vs UTF8String by the Spark field type
+          case Lane.Bytes if kind == 6 =>
+            graft.codecs.BytesCodecs.decodeBinary(block, bm, block.length)
+          case Lane.Bytes => StringCodecs.decodeSliceUtf8(block, bm, block.length)
+          case Lane.Floats => graft.codecs.BytesCodecs.decodeFloats(block, bm, block.length)
         }
-        else if (kind == 5)
-          dbls.put(name, graft.codecs.DoubleBits.toDoubles(
-            LongCodecs.decodeSlice(block, off, block.length)))
-        // kind 6 (binary) decodes zero-copy into the same byte-slice
-        // column shape strings use — readers pick Binary vs UTF8String
-        // materialization by the Spark field type
-        else if (kind == 6)
-          strs.put(name, graft.codecs.BytesCodecs.decodeBinary(
-            block, off, block.length))
-        else if (kind == 7)
-          flts.put(name, graft.codecs.BytesCodecs.decodeFloats(
-            block, off, block.length))
-        else strs.put(name, StringCodecs.decodeSliceUtf8(block, off, block.length))
+        cols.put(name, new DecodedColumn(lane, values, nulls))
       } else ci.skipBytes(blockLen.toLong)
       c += 1
     }
     val digest = ci.readFullyBytes(32)
-    for (col <- neededLongs) {
-      val a = longs.get(col)
-      require(a != null && a.length == n, s"container missing/short long column $col")
+    needed.foreach { case (col, lane) =>
+      val d = cols.get(col)
+      require(d != null && d.lane == lane && d.rows == n,
+        s"container missing/short ${lane.label} column $col")
     }
-    for (col <- neededStrs) {
-      val a = strs.get(col)
-      require(a != null && a.n == n, s"container missing/short string column $col")
-    }
-    for (col <- neededInts) {
-      val a = ints.get(col)
-      require(a != null && a.length == n, s"container missing/short int column $col")
-    }
-    for (col <- neededDbls) {
-      val a = dbls.get(col)
-      require(a != null && a.length == n, s"container missing/short double column $col")
-    }
-    for (col <- neededFlts) {
-      val a = flts.get(col)
-      require(a != null && a.n == n, s"container missing/short float-array column $col")
-    }
-    DecodedChunk(n, longs, strs, digest, ints, dbls, nulls, flts)
+    DecodedChunk(n, cols, digest)
   }
 
   /** Recompute the chunk's per-row digest-column sha256 digest and
@@ -319,8 +364,10 @@ private[graft] object ContainerFormat {
     * generic tables).
     */
   def verifyContentDigest(chunk: DecodedChunk, digestCol: String = "content"): Unit = {
-    val content = chunk.strs.get(digestCol)
-    require(content != null, s"verifyContentDigest needs the $digestCol column")
+    val col = chunk.col(digestCol)
+    require(col != null && col.lane == Lane.Bytes,
+      s"verifyContentDigest needs the $digestCol column")
+    val content = col.bytes
     val sha = java.security.MessageDigest.getInstance("SHA-256")
     val chunkSha = java.security.MessageDigest.getInstance("SHA-256")
     var i = 0

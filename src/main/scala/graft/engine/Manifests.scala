@@ -40,7 +40,9 @@ final case class ChunkStats(
     strDicts: Map[String, Seq[String]],
     strRanges: Map[String, (String, String)],
     blockCrcs: Map[String, Long],
-    nullCounts: Map[String, Int] = Map.empty)
+    nullCounts: Map[String, Int] = Map.empty) extends ChunkRange {
+  def crcs: Map[String, Long] = blockCrcs
+}
 
 /** Container-level fold of the per-chunk statistics — the GROUP SUMMARY
   * of the two-level metadata tree (round 8). An entry appears only when

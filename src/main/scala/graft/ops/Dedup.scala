@@ -38,7 +38,7 @@ object Dedup {
     * aggregations downstream (ngramJaccard's prefix groupBy) reuse this
     * exchange instead of adding their own (guide §2.4).
     */
-  private def widen(df: DataFrame, idCol: String): DataFrame = {
+  private[ops] def widen(df: DataFrame, idCol: String): DataFrame = {
     // cores/4 target: enough to unserialize the expression stages while
     // keeping the per-task fixed cost of every DOWNSTREAM stage low —
     // measured on d6 at sf0.1: 1 part = 1.9 s wall (serial simhash),

@@ -32,21 +32,6 @@ object Similarity {
 
   private def asDouble(c: Column): Column = transform(c, _.cast("double"))
 
-  /** Input-skew guard (round 10, guide §2.5; [[graft.ops.Dedup]] has the
-    * same one): a corpus arriving in far fewer partitions than the session
-    * has cores serializes the bucketing/scoring stages on one task — the
-    * bench's single-file corpus scans as ONE partition. Deterministic
-    * hash-repartition by id; a no-op once the input has >= cores/2
-    * partitions, so at scale nothing is shuffled.
-    */
-  private def widen(df: DataFrame, idCol: String): DataFrame = {
-    // cores/4 target — see [[graft.ops.Dedup]]'s widen for the measured
-    // wall/CPU trade behind the divisor
-    val target = math.max(df.sparkSession.sparkContext.defaultParallelism / 4, 2)
-    if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target, col(idCol))
-    else df
-  }
-
   /** Exact brute-force top-k cosine neighbors for each query vector.
     *
     * Scale shape: the query set is broadcast (queries are the small side
@@ -239,7 +224,8 @@ object Similarity {
     // tiny, so probe volume is cheap here, unlike the all-pairs near-dup).
     def buckets(vec: Column, nProbes: Int) = explode(
       graft.functions.LshProbes.lshProbes(vec, dim, planes, tables, nProbes, 42L))
-    val c = widen(corpus, idCol)
+    // input-skew guard shared with the dedup operators (Dedup.widen)
+    val c = Dedup.widen(corpus, idCol)
       .select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
       .withColumn("tb", buckets(col("cv"), 0))
       .select(col("neighbor_id"), col("cv"), col("tb.tbl"), col("tb.bucket"))

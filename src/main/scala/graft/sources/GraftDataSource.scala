@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.{ChunkStats, ColumnarEngine, ContainerFormat, ContainerInput, ContainerIO, DecodedChunk, DerivedRow, Manifests, ParsedManifest}
+import graft.engine.{ChunkStats, ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, DecodedChunk, DecodedColumn, DerivedRow, Lane, Manifests, ParsedManifest}
 
 /** `spark.read.format("graft")` / `df.write.format("graft")` — the
   * engine's container+manifest layout as a DataSource V2 table.
@@ -277,30 +277,13 @@ object GraftDataSource {
     if (ms.isEmpty) None else Some(currentSpecsOf(ms))
   }
 
-  private[sources] val longCols = ColumnarEngine.longColumns.toSet
-  private[sources] val strCols = ColumnarEngine.stringColumns.toSet
-
-  // classification is by PHYSICAL representation: TIMESTAMP_NTZ columns
-  // decode into the per-chunk long arrays (micros), DATE columns into
-  // the int arrays (days), DECIMAL into the long arrays (unscaled), and
-  // BOOLEAN into the int arrays (0/1) — each rides its lane's reader path
-  private[sources] def longColsOf(st: StructType): Set[String] =
-    st.fields.collect {
-      case f if f.dataType == LongType || f.dataType == TimestampNTZType ||
-        f.dataType.isInstanceOf[DecimalType] => f.name
-    }.toSet
-
-  /** DECIMAL columns and their scales — filter-constant translation
-    * (logical BigDecimal -> stored unscaled long) needs the scale.
+  /** The table's column layout: name -> [[graft.engine.ColumnSpec]]
+    * (kind, nullability, decimal scale). Pushdown, readers and rewrites
+    * address decoded data through it; a column's decoded lane is
+    * [[Lane.of]] its kind.
     */
-  private[sources] def decScaleOf(st: StructType): Map[String, Int] =
-    st.fields.collect {
-      case f if f.dataType.isInstanceOf[DecimalType] =>
-        f.name -> f.dataType.asInstanceOf[DecimalType].scale
-    }.toMap
-
-  private[sources] def boolColsOf(st: StructType): Set[String] =
-    st.fields.collect { case f if f.dataType == BooleanType => f.name }.toSet
+  private[sources] def layoutOf(st: StructType): Map[String, ColumnSpec] =
+    specsOf(st).map(s => s.name -> s).toMap
 
   /** Rewrite pushed filters on DECIMAL/BOOLEAN columns into their
     * PHYSICAL form (unscaled-long / 0-1 int constants) so every
@@ -312,8 +295,8 @@ object GraftDataSource {
     * matches nothing and stays UNTRANSLATED (so [[pushable]] rejects it
     * and Spark evaluates it residually). Constants beyond long range
     * likewise stay untranslated.
-    */
-  /** (Round 9) FLOAT (kind 10) constants likewise pre-translate to their
+    *
+    * (Round 9) FLOAT (kind 10) constants likewise pre-translate to their
     * order-preserving sortable-int storage form: the mapping is a
     * bijection so every comparison is exact — except ±0.0f, which SQL
     * calls equal but which map to TWO adjacent storage values (-1, 0):
@@ -322,8 +305,7 @@ object GraftDataSource {
     * (unpushed — Spark evaluates them residually), mirroring kind 5.
     */
   private[sources] def translateFilters(filters: Array[Filter],
-      decScale: Map[String, Int], boolCols: Set[String],
-      f32Cols: Set[String] = Set.empty): Array[Filter] = {
+      layout: Map[String, ColumnSpec]): Array[Filter] = {
     def f32(f: Float): java.lang.Integer =
       java.lang.Integer.valueOf(graft.codecs.FloatBits.toSortableInt(f))
     // the inclusive sortable range SQL considers EQUAL to the constant
@@ -336,83 +318,65 @@ object GraftDataSource {
     def exactU(bd: java.math.BigDecimal, s: Int): Option[Long] =
       try Some(bd.setScale(s).unscaledValue().longValueExact())
       catch { case _: ArithmeticException => None }
+    def decimal(f: Filter, s: Int): Filter = f match {
+      case EqualTo(c, x: java.math.BigDecimal) =>
+        exactU(x, s).fold(f)(u => EqualTo(c, java.lang.Long.valueOf(u)))
+      case GreaterThan(c, x: java.math.BigDecimal) =>
+        GreaterThan(c, java.lang.Long.valueOf(floorU(x, s)))
+      case GreaterThanOrEqual(c, x: java.math.BigDecimal) =>
+        GreaterThanOrEqual(c, java.lang.Long.valueOf(ceilU(x, s)))
+      case LessThan(c, x: java.math.BigDecimal) =>
+        LessThan(c, java.lang.Long.valueOf(ceilU(x, s)))
+      case LessThanOrEqual(c, x: java.math.BigDecimal) =>
+        LessThanOrEqual(c, java.lang.Long.valueOf(floorU(x, s)))
+      case In(c, vs) if vs.nonEmpty &&
+          vs.forall(_.isInstanceOf[java.math.BigDecimal]) =>
+        // members unrepresentable at the column scale can never match:
+        // dropping them preserves IN semantics exactly
+        val exact = vs.flatMap(v => exactU(v.asInstanceOf[java.math.BigDecimal], s))
+        if (exact.isEmpty) f
+        else In(c, exact.map(java.lang.Long.valueOf(_): AnyRef))
+      case other => other
+    }
+    def float(f: Filter): Filter = f match {
+      case EqualTo(c, x: java.lang.Float) if !x.isNaN =>
+        val (lo, hi) = (f32Lo(x), f32Hi(x))
+        if (lo == hi) EqualTo(c, lo) else In(c, Array[Any](lo, hi))
+      case GreaterThan(c, x: java.lang.Float) if !x.isNaN => GreaterThan(c, f32Hi(x))
+      case GreaterThanOrEqual(c, x: java.lang.Float) if !x.isNaN =>
+        GreaterThanOrEqual(c, f32Lo(x))
+      case LessThan(c, x: java.lang.Float) if !x.isNaN => LessThan(c, f32Lo(x))
+      case LessThanOrEqual(c, x: java.lang.Float) if !x.isNaN =>
+        LessThanOrEqual(c, f32Hi(x))
+      case In(c, vs) if vs.nonEmpty &&
+          vs.forall(v => v.isInstanceOf[java.lang.Float] &&
+            !v.asInstanceOf[java.lang.Float].isNaN) =>
+        In(c, vs.flatMap { v =>
+          val x = v.asInstanceOf[java.lang.Float].floatValue()
+          if (x == 0.0f) Seq[Any](f32Lo(x), f32Hi(x)) else Seq[Any](f32(x))
+        })
+      case other => other
+    }
+    def bool(f: Filter): Filter = f match {
+      case EqualTo(c, x: java.lang.Boolean) =>
+        EqualTo(c, java.lang.Integer.valueOf(if (x) 1 else 0))
+      case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Boolean]) =>
+        In(c, vs.map(v => java.lang.Integer.valueOf(
+          if (v.asInstanceOf[java.lang.Boolean]) 1 else 0): AnyRef))
+      case other => other
+    }
     def tr(f: Filter): Filter =
-      try f match {
-        case EqualTo(c, x: java.math.BigDecimal) if decScale.contains(c) =>
-          exactU(x, decScale(c)).fold(f)(u => EqualTo(c, java.lang.Long.valueOf(u)))
-        case GreaterThan(c, x: java.math.BigDecimal) if decScale.contains(c) =>
-          GreaterThan(c, java.lang.Long.valueOf(floorU(x, decScale(c))))
-        case GreaterThanOrEqual(c, x: java.math.BigDecimal) if decScale.contains(c) =>
-          GreaterThanOrEqual(c, java.lang.Long.valueOf(ceilU(x, decScale(c))))
-        case LessThan(c, x: java.math.BigDecimal) if decScale.contains(c) =>
-          LessThan(c, java.lang.Long.valueOf(ceilU(x, decScale(c))))
-        case LessThanOrEqual(c, x: java.math.BigDecimal) if decScale.contains(c) =>
-          LessThanOrEqual(c, java.lang.Long.valueOf(floorU(x, decScale(c))))
-        case In(c, vs) if decScale.contains(c) && vs.nonEmpty &&
-            vs.forall(_.isInstanceOf[java.math.BigDecimal]) =>
-          // members unrepresentable at the column scale can never match:
-          // dropping them preserves IN semantics exactly
-          val exact = vs.flatMap(v =>
-            exactU(v.asInstanceOf[java.math.BigDecimal], decScale(c)))
-          if (exact.isEmpty) f
-          else In(c, exact.map(java.lang.Long.valueOf(_): AnyRef))
-        case EqualTo(c, x: java.lang.Float) if f32Cols(c) && !x.isNaN =>
-          val (lo, hi) = (f32Lo(x), f32Hi(x))
-          if (lo == hi) EqualTo(c, lo) else In(c, Array[Any](lo, hi))
-        case GreaterThan(c, x: java.lang.Float) if f32Cols(c) && !x.isNaN =>
-          GreaterThan(c, f32Hi(x))
-        case GreaterThanOrEqual(c, x: java.lang.Float) if f32Cols(c) && !x.isNaN =>
-          GreaterThanOrEqual(c, f32Lo(x))
-        case LessThan(c, x: java.lang.Float) if f32Cols(c) && !x.isNaN =>
-          LessThan(c, f32Lo(x))
-        case LessThanOrEqual(c, x: java.lang.Float) if f32Cols(c) && !x.isNaN =>
-          LessThanOrEqual(c, f32Hi(x))
-        case In(c, vs) if f32Cols(c) && vs.nonEmpty &&
-            vs.forall(v => v.isInstanceOf[java.lang.Float] &&
-              !v.asInstanceOf[java.lang.Float].isNaN) =>
-          In(c, vs.flatMap { v =>
-            val x = v.asInstanceOf[java.lang.Float].floatValue()
-            if (x == 0.0f) Seq[Any](f32Lo(x), f32Hi(x)) else Seq[Any](f32(x))
-          })
-        case EqualTo(c, x: java.lang.Boolean) if boolCols(c) =>
-          EqualTo(c, java.lang.Integer.valueOf(if (x) 1 else 0))
-        case In(c, vs) if boolCols(c) && vs.nonEmpty &&
-            vs.forall(_.isInstanceOf[java.lang.Boolean]) =>
-          In(c, vs.map(v => java.lang.Integer.valueOf(
-            if (v.asInstanceOf[java.lang.Boolean]) 1 else 0): AnyRef))
-        case other => other
+      try f.references match {
+        case Array(c) => layout.get(c) match {
+          case Some(s) if s.kind == 8 => decimal(f, s.scale)
+          case Some(s) if s.kind == 9 => bool(f)
+          case Some(s) if s.kind == 10 => float(f)
+          case _ => f
+        }
+        case _ => f
       } catch { case _: ArithmeticException => f } // out-of-long constant
     filters.map(tr)
   }
-  /** String AND binary columns: kind 6 decodes into the same byte-slice
-    * column shape (a pushed string constant can never reach a binary
-    * column — Spark types the filters — so sharing the needed-set is
-    * safe and saves a fourth plumbing lane).
-    */
-  private[sources] def strColsOf(st: StructType): Set[String] =
-    st.fields.collect {
-      case f if f.dataType == StringType || f.dataType == BinaryType => f.name
-    }.toSet
-  private[sources] def fltColsOf(st: StructType): Set[String] =
-    st.fields.collect {
-      case f if f.dataType == ArrayType(FloatType, containsNull = false) ||
-        f.dataType == ArrayType(FloatType, containsNull = true) => f.name
-    }.toSet
-  private[sources] def intColsOf(st: StructType): Set[String] =
-    st.fields.collect {
-      case f if f.dataType == IntegerType || f.dataType == DateType ||
-        f.dataType == BooleanType || f.dataType == FloatType => f.name
-    }.toSet
-
-  /** Scalar FLOAT columns (kind 10): pushed Float constants pre-translate
-    * to their order-preserving sortable-int storage form.
-    */
-  private[sources] def f32ColsOf(st: StructType): Set[String] =
-    st.fields.collect { case f if f.dataType == FloatType => f.name }.toSet
-  private[sources] def dblColsOf(st: StructType): Set[String] =
-    st.fields.collect { case f if f.dataType == DoubleType => f.name }.toSet
-  private[sources] def nullableColsOf(st: StructType): Set[String] =
-    st.fields.collect { case f if f.nullable => f.name }.toSet
 
   /** Physical value of a pushed temporal filter constant: TIMESTAMP_NTZ
     * constants arrive as [[java.time.LocalDateTime]] (micros since epoch
@@ -592,157 +556,134 @@ object GraftDataSource {
     * Spark ordering (greater than everything, equal to itself) diverges
     * from both IEEE and the sortable mapping's tail; they stay in Spark.
     * IsNotNull/IsNull prune whole chunks via per-chunk null counts and
-    * re-check against the validity bitmaps.
+    * re-check against the validity bitmaps. Dispatch is on the column's
+    * lane first, then on the filter shape.
     */
-  private[sources] def pushable(f: Filter, longCols: Set[String],
-                                strCols: Set[String],
-                                intCols: Set[String] = Set.empty,
-                                dblCols: Set[String] = Set.empty,
-                                fltCols: Set[String] = Set.empty): Boolean = f match {
-    case EqualTo(c, x: java.lang.Double) => dblCols(c) && !x.isNaN
-    case GreaterThan(c, x: java.lang.Double) => dblCols(c) && !x.isNaN
-    case GreaterThanOrEqual(c, x: java.lang.Double) => dblCols(c) && !x.isNaN
-    case LessThan(c, x: java.lang.Double) => dblCols(c) && !x.isNaN
-    case LessThanOrEqual(c, x: java.lang.Double) => dblCols(c) && !x.isNaN
-    case In(c, vs) if dblCols(c) =>
-      vs.nonEmpty && vs.forall(v => v.isInstanceOf[java.lang.Double] &&
-        !v.asInstanceOf[java.lang.Double].isNaN)
-    case EqualTo(c, _: Long) => longCols(c)
-    case GreaterThan(c, _: Long) => longCols(c)
-    case GreaterThanOrEqual(c, _: Long) => longCols(c)
-    case LessThan(c, _: Long) => longCols(c)
-    case LessThanOrEqual(c, _: Long) => longCols(c)
-    // temporal IN must precede the generic long/int IN cases: those
-    // guard only on the COLUMN set (which contains ts/date columns) and
-    // would match-and-reject a temporal value list before these fire
-    case In(c, vs) if longCols(c) &&
-        vs.nonEmpty && vs.forall(_.isInstanceOf[java.time.LocalDateTime]) => true
-    case In(c, vs) if intCols(c) &&
-        vs.nonEmpty && vs.forall(daysOf(_).isDefined) => true
-    case In(c, vs) if longCols(c) =>
-      vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Long])
-    case EqualTo(c, _: Int) => intCols(c)
-    case GreaterThan(c, _: Int) => intCols(c)
-    case GreaterThanOrEqual(c, _: Int) => intCols(c)
-    case LessThan(c, _: Int) => intCols(c)
-    case LessThanOrEqual(c, _: Int) => intCols(c)
-    case In(c, vs) if intCols(c) =>
-      vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Integer])
-    case EqualTo(c, _: java.time.LocalDateTime) => longCols(c)
-    case GreaterThan(c, _: java.time.LocalDateTime) => longCols(c)
-    case GreaterThanOrEqual(c, _: java.time.LocalDateTime) => longCols(c)
-    case LessThan(c, _: java.time.LocalDateTime) => longCols(c)
-    case LessThanOrEqual(c, _: java.time.LocalDateTime) => longCols(c)
-    case EqualTo(c, x) if daysOf(x).isDefined => intCols(c)
-    case GreaterThan(c, x) if daysOf(x).isDefined => intCols(c)
-    case GreaterThanOrEqual(c, x) if daysOf(x).isDefined => intCols(c)
-    case LessThan(c, x) if daysOf(x).isDefined => intCols(c)
-    case LessThanOrEqual(c, x) if daysOf(x).isDefined => intCols(c)
-    case EqualTo(c, _: String) => strCols(c)
-    case In(c, vs) if strCols(c) =>
-      vs.nonEmpty && vs.forall(_.isInstanceOf[String])
-    case IsNotNull(c) =>
-      longCols(c) || strCols(c) || intCols(c) || dblCols(c) || fltCols(c)
-    case IsNull(c) =>
-      longCols(c) || strCols(c) || intCols(c) || dblCols(c) || fltCols(c)
-    case _ => false
-  }
+  private[sources] def pushable(f: Filter,
+                                layout: Map[String, ColumnSpec]): Boolean =
+    f.references match {
+      case Array(c) if layout.contains(c) =>
+        val lane = Lane.of(layout(c).kind)
+        // constants arrive typed by the column: temporal ones as
+        // LocalDateTime (micros lane) or Date/LocalDate (days lane)
+        def const(x: Any): Boolean = (lane, x) match {
+          case (Lane.Longs, _: java.lang.Long | _: java.time.LocalDateTime) => true
+          case (Lane.Ints, _: java.lang.Integer) => true
+          case (Lane.Ints, _) => daysOf(x).isDefined
+          case (Lane.Doubles, d: java.lang.Double) => !d.isNaN
+          case (Lane.Bytes, _: String) => true
+          case _ => false
+        }
+        def ordered(x: Any): Boolean = lane != Lane.Bytes && const(x)
+        f match {
+          case IsNull(_) | IsNotNull(_) => true
+          case EqualTo(_, x) => const(x)
+          case GreaterThan(_, x) => ordered(x)
+          case GreaterThanOrEqual(_, x) => ordered(x)
+          case LessThan(_, x) => ordered(x)
+          case LessThanOrEqual(_, x) => ordered(x)
+          case In(_, vs) => vs.nonEmpty && vs.forall(const)
+          case _ => false
+        }
+      case _ => false
+    }
 
   /** Compiled row-level predicate over a decoded chunk: the reader
-    * enforces exactly what pushFilters claimed. String constants are
+    * enforces exactly what pushFilters claimed. Per chunk it looks up
+    * its column once and returns the per-row test. String constants are
     * pre-encoded to UTF-8 ONCE and compared against the decoded slices —
     * no per-row String materialization. SQL null semantics: every
     * comparison/IN on a NULL row is not-true (the chunk's validity
     * bitmap gates each predicate), IsNull/IsNotNull test the bitmap
     * itself.
     */
-  private[sources] type RowPred = (DecodedChunk, Int) => Boolean
+  private[sources] type RowPred = DecodedChunk => (Int => Boolean)
 
-  /** Wrap a value predicate so NULL rows of column `c` never pass. */
-  @inline private def nn(c: String, p: RowPred): RowPred =
-    (ch, j) => ch.validAt(c, j) && p(ch, j)
+  /** Physical value of a pushed long-lane constant (micros for TIMESTAMP_NTZ). */
+  private def longOf(x: Any): Long = x match {
+    case t: java.time.LocalDateTime => microsOf(t)
+    case v => v.asInstanceOf[java.lang.Long].longValue()
+  }
+
+  /** Physical value of a pushed int-lane constant (days for DATE). */
+  private def intOf(x: Any): Int = x match {
+    case v: java.lang.Integer => v.intValue()
+    case _ => daysOf(x).get
+  }
+
+  /** The inclusive [lo, hi] an integer comparison admits (empty when
+    * lo > hi).
+    */
+  private def bounds(f: Filter, v: Any => Long): (Long, Long) = f match {
+    case EqualTo(_, x) => val n = v(x); (n, n)
+    case GreaterThan(_, x) =>
+      val n = v(x); if (n == Long.MaxValue) (1L, 0L) else (n + 1, Long.MaxValue)
+    case GreaterThanOrEqual(_, x) => (v(x), Long.MaxValue)
+    case LessThan(_, x) =>
+      val n = v(x); if (n == Long.MinValue) (1L, 0L) else (Long.MinValue, n - 1)
+    case LessThanOrEqual(_, x) => (Long.MinValue, v(x))
+    case _ => throw new IllegalStateException(s"unpushable filter $f")
+  }
 
   private[sources] def compileFilters(filters: Array[Filter],
-                                      longCols: Set[String]): Array[RowPred] =
-    filters.map[RowPred] {
-      case EqualTo(c, x: Long) => nn(c, (ch, j) => ch.longs.get(c)(j) == x)
-      case GreaterThan(c, x: Long) => nn(c, (ch, j) => ch.longs.get(c)(j) > x)
-      case GreaterThanOrEqual(c, x: Long) => nn(c, (ch, j) => ch.longs.get(c)(j) >= x)
-      case LessThan(c, x: Long) => nn(c, (ch, j) => ch.longs.get(c)(j) < x)
-      case LessThanOrEqual(c, x: Long) => nn(c, (ch, j) => ch.longs.get(c)(j) <= x)
-      case EqualTo(c, x: Int) => nn(c, (ch, j) => ch.ints.get(c)(j) == x)
-      case GreaterThan(c, x: Int) => nn(c, (ch, j) => ch.ints.get(c)(j) > x)
-      case GreaterThanOrEqual(c, x: Int) => nn(c, (ch, j) => ch.ints.get(c)(j) >= x)
-      case LessThan(c, x: Int) => nn(c, (ch, j) => ch.ints.get(c)(j) < x)
-      case LessThanOrEqual(c, x: Int) => nn(c, (ch, j) => ch.ints.get(c)(j) <= x)
-      // doubles: IEEE comparisons except that a NaN ROW ranks above
-      // every constant (Spark's total order); NaN CONSTANTS are never
-      // pushed. IEEE == makes -0.0 = 0.0, matching SQL equality.
-      case EqualTo(c, x: Double) => nn(c, (ch, j) => ch.doubles.get(c)(j) == x)
-      case GreaterThan(c, x: Double) =>
-        nn(c, (ch, j) => { val a = ch.doubles.get(c)(j); a > x || a.isNaN })
-      case GreaterThanOrEqual(c, x: Double) =>
-        nn(c, (ch, j) => { val a = ch.doubles.get(c)(j); a >= x || a.isNaN })
-      case LessThan(c, x: Double) => nn(c, (ch, j) => ch.doubles.get(c)(j) < x)
-      case LessThanOrEqual(c, x: Double) => nn(c, (ch, j) => ch.doubles.get(c)(j) <= x)
-      // temporal constants compare against the stored physical values
-      // (micros in the long arrays, days in the int arrays)
-      case EqualTo(c, x: java.time.LocalDateTime) =>
-        val m = microsOf(x); nn(c, (ch, j) => ch.longs.get(c)(j) == m)
-      case GreaterThan(c, x: java.time.LocalDateTime) =>
-        val m = microsOf(x); nn(c, (ch, j) => ch.longs.get(c)(j) > m)
-      case GreaterThanOrEqual(c, x: java.time.LocalDateTime) =>
-        val m = microsOf(x); nn(c, (ch, j) => ch.longs.get(c)(j) >= m)
-      case LessThan(c, x: java.time.LocalDateTime) =>
-        val m = microsOf(x); nn(c, (ch, j) => ch.longs.get(c)(j) < m)
-      case LessThanOrEqual(c, x: java.time.LocalDateTime) =>
-        val m = microsOf(x); nn(c, (ch, j) => ch.longs.get(c)(j) <= m)
-      case EqualTo(c, x) if daysOf(x).isDefined =>
-        val d = daysOf(x).get; nn(c, (ch, j) => ch.ints.get(c)(j) == d)
-      case GreaterThan(c, x) if daysOf(x).isDefined =>
-        val d = daysOf(x).get; nn(c, (ch, j) => ch.ints.get(c)(j) > d)
-      case GreaterThanOrEqual(c, x) if daysOf(x).isDefined =>
-        val d = daysOf(x).get; nn(c, (ch, j) => ch.ints.get(c)(j) >= d)
-      case LessThan(c, x) if daysOf(x).isDefined =>
-        val d = daysOf(x).get; nn(c, (ch, j) => ch.ints.get(c)(j) < d)
-      case LessThanOrEqual(c, x) if daysOf(x).isDefined =>
-        val d = daysOf(x).get; nn(c, (ch, j) => ch.ints.get(c)(j) <= d)
-      case In(c, vs) if vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[java.time.LocalDateTime]) =>
-        val set = vs.map(x =>
-          microsOf(x.asInstanceOf[java.time.LocalDateTime])).toSet
-        nn(c, (ch, j) => set.contains(ch.longs.get(c)(j)))
-      case In(c, vs) if vs.nonEmpty && vs.forall(daysOf(_).isDefined) =>
-        val set = vs.map(daysOf(_).get).toSet
-        nn(c, (ch, j) => set.contains(ch.ints.get(c)(j)))
-      case EqualTo(c, x: String) =>
-        val b = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        nn(c, (ch, j) => ch.strs.get(c).equalsBytes(j, b))
-      case In(c, vs) if longCols(c) =>
-        val set = vs.map(_.asInstanceOf[java.lang.Long].longValue()).toSet
-        nn(c, (ch, j) => set.contains(ch.longs.get(c)(j)))
-      case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Integer]) =>
-        val set = vs.map(_.asInstanceOf[java.lang.Integer].intValue()).toSet
-        nn(c, (ch, j) => set.contains(ch.ints.get(c)(j)))
-      case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Double]) =>
-        // an ARRAY scan with IEEE ==, not a Set: boxed-Double set
-        // membership would miss -0.0 vs 0.0 (SQL calls them equal)
-        val arr = vs.map(_.asInstanceOf[java.lang.Double].doubleValue())
-        nn(c, (ch, j) => {
-          val a = ch.doubles.get(c)(j)
-          var i = 0
-          var hit = false
-          while (!hit && i < arr.length) { hit = a == arr(i); i += 1 }
-          hit
-        })
-      case In(c, vs) =>
-        val bs = vs.map(_.asInstanceOf[String]
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        nn(c, (ch, j) => bs.exists(b => ch.strs.get(c).equalsBytes(j, b)))
-      case IsNotNull(c) => (ch, j) => ch.validAt(c, j)
-      case IsNull(c) => (ch, j) => !ch.validAt(c, j)
-      case f => throw new IllegalStateException(s"unpushable filter $f")
+      layout: Map[String, ColumnSpec]): Array[RowPred] = filters.map { f =>
+    val c = f.references.head
+    val test: DecodedColumn => (Int => Boolean) =
+      (Lane.of(layout(c).kind), f) match {
+        case (_, IsNotNull(_)) => d => j => d.validAt(j)
+        case (_, IsNull(_)) => d => j => !d.validAt(j)
+        case (Lane.Longs, In(_, vs)) =>
+          val set = vs.map(longOf).toSet
+          d => { val a = d.longs; j => set.contains(a(j)) }
+        case (Lane.Longs, _) =>
+          val (lo, hi) = bounds(f, longOf)
+          d => { val a = d.longs; j => a(j) >= lo && a(j) <= hi }
+        case (Lane.Ints, In(_, vs)) =>
+          val set = vs.map(intOf).toSet
+          d => { val a = d.ints; j => set.contains(a(j)) }
+        case (Lane.Ints, _) =>
+          val (lo, hi) = bounds(f, intOf(_).toLong)
+          d => { val a = d.ints; j => a(j) >= lo && a(j) <= hi }
+        // doubles: IEEE comparisons except that a NaN ROW ranks above
+        // every constant (Spark's total order); NaN CONSTANTS are never
+        // pushed. IEEE == makes -0.0 = 0.0, matching SQL equality.
+        case (Lane.Doubles, EqualTo(_, x: Double)) =>
+          d => { val a = d.doubles; j => a(j) == x }
+        case (Lane.Doubles, GreaterThan(_, x: Double)) =>
+          d => { val a = d.doubles; j => a(j) > x || a(j).isNaN }
+        case (Lane.Doubles, GreaterThanOrEqual(_, x: Double)) =>
+          d => { val a = d.doubles; j => a(j) >= x || a(j).isNaN }
+        case (Lane.Doubles, LessThan(_, x: Double)) =>
+          d => { val a = d.doubles; j => a(j) < x }
+        case (Lane.Doubles, LessThanOrEqual(_, x: Double)) =>
+          d => { val a = d.doubles; j => a(j) <= x }
+        case (Lane.Doubles, In(_, vs)) =>
+          // an ARRAY scan with IEEE ==, not a Set: boxed-Double set
+          // membership would miss -0.0 vs 0.0 (SQL calls them equal)
+          val arr = vs.map(_.asInstanceOf[java.lang.Double].doubleValue())
+          d => { val a = d.doubles; j => {
+            val x = a(j)
+            var i = 0
+            var hit = false
+            while (!hit && i < arr.length) { hit = x == arr(i); i += 1 }
+            hit
+          } }
+        case (Lane.Bytes, EqualTo(_, x: String)) =>
+          val b = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          d => { val u = d.bytes; j => u.equalsBytes(j, b) }
+        case (Lane.Bytes, In(_, vs)) =>
+          val bs = vs.map(_.asInstanceOf[String]
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          d => { val u = d.bytes; j => bs.exists(b => u.equalsBytes(j, b)) }
+        case _ => throw new IllegalStateException(s"unpushable filter $f")
+      }
+    val gated = !f.isInstanceOf[IsNull] && !f.isInstanceOf[IsNotNull]
+    ch => {
+      val d = ch.col(c)
+      val t = test(d)
+      if (!gated || d.nulls == null) t else j => d.validAt(j) && t(j)
     }
+  }
 
   /** Rewrite a pushed filter's column reference through a rename map
     * (current name -> a container's stored name, or the reverse). Only
@@ -957,11 +898,10 @@ object GraftDataSource {
       kept
     }
 
-  private[sources] def rowPasses(preds: Array[RowPred],
-      chunk: DecodedChunk, j: Int): Boolean = {
+  private[sources] def rowPasses(tests: Array[Int => Boolean], j: Int): Boolean = {
     var i = 0
-    while (i < preds.length) {
-      if (!preds(i)(chunk, j)) return false
+    while (i < tests.length) {
+      if (!tests(i)(j)) return false
       i += 1
     }
     true
@@ -1022,11 +962,7 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
     with SupportsPushDownFilters with SupportsPushDownAggregates
     with SupportsPushDownLimit {
 
-  private val longCols = GraftDataSource.longColsOf(tableSchema)
-  private val strCols = GraftDataSource.strColsOf(tableSchema)
-  private val intCols = GraftDataSource.intColsOf(tableSchema)
-  private val dblCols = GraftDataSource.dblColsOf(tableSchema)
-  private val fltCols = GraftDataSource.fltColsOf(tableSchema)
+  private val layout = GraftDataSource.layoutOf(tableSchema)
   private var required: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
   private var aggs: Option[Seq[GraftAgg]] = None
@@ -1182,23 +1118,16 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
       }
       else requiredSchema
 
-  private val decScale = GraftDataSource.decScaleOf(tableSchema)
-  private val boolCols = GraftDataSource.boolColsOf(tableSchema)
-  private val f32Cols = GraftDataSource.f32ColsOf(tableSchema)
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     // decimal/boolean/float predicates are first rewritten to their
     // PHYSICAL constants (unscaled long / 0-1 int / sortable int), then
     // the existing long/int pushdown machinery admits them untouched; a
     // filter whose translated form is unpushable stays residual in its
     // ORIGINAL form
-    val translated =
-      GraftDataSource.translateFilters(filters, decScale, boolCols, f32Cols)
-    val paired = filters.zip(translated)
-    pushed = paired.collect { case (_, t) if
-      GraftDataSource.pushable(t, longCols, strCols, intCols, dblCols, fltCols) => t }
-    paired.collect { case (o, t) if
-      !GraftDataSource.pushable(t, longCols, strCols, intCols, dblCols, fltCols) => o }
+    val (in, out) = filters.zip(GraftDataSource.translateFilters(filters, layout))
+      .partition(p => GraftDataSource.pushable(p._2, layout))
+    pushed = in.map(_._2)
+    out.map(_._1)
     // fully enforced below: chunk zone-map skip + row-level check
   }
 
@@ -1214,8 +1143,7 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
       case Some(specs) => new GraftAggScan(path, specs, confKv, pinned,
         chainNames)
       case None => new GraftScan(path, required, pushed, confKv, limit,
-        maxSplit, verify, longCols, strCols, intCols, dblCols, fltCols,
-        pinned, chainNames)
+        maxSplit, verify, layout, pinned, chainNames)
     }
   }
 }
@@ -1387,7 +1315,7 @@ case class GraftAggPartition(values: Array[Any]) extends InputPartition
 
 /** One chunk's read plan: byte range + expected block CRCs. */
 case class ChunkSpec(offset: Long, length: Long, rows: Int,
-                     crcs: Map[String, Long])
+                     crcs: Map[String, Long]) extends graft.engine.ChunkRange
 
 /** A run of chunks from one container. Empty `chunks` = stream the whole
   * file sequentially (legacy manifests without a chunk index, and the
@@ -1406,14 +1334,9 @@ case class GraftInputPartition(file: String, chunks: Seq[ChunkSpec],
 
 class GraftScan(path: String, required: StructType,
                 initialFilters: Array[Filter],
-                confKv: Map[String, String], limit: Int = Int.MaxValue,
-                maxSplitBytes: Long = GraftDataSource.DefaultMaxSplitBytes,
-                verifyContent: Boolean = true,
-                longCols: Set[String] = GraftDataSource.longCols,
-                strCols: Set[String] = GraftDataSource.strCols,
-                intCols: Set[String] = Set.empty,
-                dblCols: Set[String] = Set.empty,
-                fltCols: Set[String] = Set.empty,
+                confKv: Map[String, String], limit: Int,
+                maxSplitBytes: Long, verifyContent: Boolean,
+                layout: Map[String, ColumnSpec],
                 asOf: Option[Long] = None,
                 tableCols: Seq[String] = Nil)
     extends Scan with Batch with SupportsReportStatistics
@@ -1442,11 +1365,8 @@ class GraftScan(path: String, required: StructType,
   override def filter(runtime: Array[Filter]): Unit = {
     // runtime (DPP) filters on decimal/boolean keys arrive in LOGICAL
     // form — translate to physical constants like the builder did
-    val accepted = GraftDataSource.translateFilters(runtime,
-      GraftDataSource.decScaleOf(required), GraftDataSource.boolColsOf(required),
-      GraftDataSource.f32ColsOf(required))
-      .filter(GraftDataSource.pushable(_, longCols, strCols, intCols,
-        dblCols, fltCols))
+    val accepted = GraftDataSource.translateFilters(runtime, layout)
+      .filter(GraftDataSource.pushable(_, layout))
     filters = filters ++ accepted
   }
 
@@ -1542,8 +1462,8 @@ class GraftScan(path: String, required: StructType,
       tableCols)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, filters, confKv, limit, verifyContent,
-      longCols, strCols, intCols, dblCols, fltCols)
+    new GraftReaderFactory(required, filters, layout, confKv, limit,
+      verifyContent)
 
   /** `readStream.format("graft")` — micro-batch TAILING of this table:
     * each trigger reads exactly the manifests committed since the last
@@ -1557,105 +1477,60 @@ class GraftScan(path: String, required: StructType,
       "graft time travel (versionAsOf/timestampAsOf) is batch-only; a " +
         "stream tails the live table")
     new GraftMicroBatchStream(path, checkpointLocation, required, filters,
-      confKv, maxSplitBytes, verifyContent, longCols, strCols, intCols,
-      dblCols, fltCols, tableCols)
+      confKv, maxSplitBytes, verifyContent, layout, tableCols)
   }
 }
 
 class GraftReaderFactory(required: StructType, filters: Array[Filter],
+                         layout: Map[String, ColumnSpec],
                          confKv: Map[String, String], limit: Int,
-                         verifyContent: Boolean,
-                         longCols: Set[String] = GraftDataSource.longCols,
-                         strCols: Set[String] = GraftDataSource.strCols,
-                         intCols: Set[String] = Set.empty,
-                         dblCols: Set[String] = Set.empty,
-                         fltCols: Set[String] = Set.empty)
+                         verifyContent: Boolean)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    new GraftPartitionReader(p.file, p.chunks, required, filters, confKv,
-      limit, verifyContent, longCols, strCols, p.digestCol, intCols, dblCols,
-      fltCols, p.absentCols, p.renames)
-  }
 
-  /** The decoded data is already columnar (`Array[Long]`/`Array[String]`
-    * per block) — hand Spark `ColumnarBatch`es instead of materializing a
-    * `GenericInternalRow` per row; `ColumnarToRow` (codegen'd) or
-    * downstream columnar operators take it from there.
+  /** The decoded data is already columnar (one array per block) — every
+    * partition hands Spark `ColumnarBatch`es instead of materializing a
+    * row object per row; `ColumnarToRow` (codegen'd) or downstream
+    * columnar operators take it from there.
     */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    // ARRAY<FLOAT> needs a child vector per batch — the row reader's
-    // primitive-array path is simpler and the embedding consumers
-    // (ANN/dedup) immediately explode into scalar math anyway
-    !required.fields.exists(_.dataType.isInstanceOf[ArrayType])
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft scans are read columnar")
 
   override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    new GraftColumnarReader(p.file, p.chunks, required, filters, confKv,
-      limit, verifyContent, longCols, strCols, p.digestCol, intCols, dblCols,
-      fltCols, p.absentCols, p.renames)
-  }
+      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition],
+      required, filters, layout, confKv, limit, verifyContent)
 }
 
-/** Shared streaming chunk iteration for the row and columnar readers:
-  * per chunk, needed column blocks are read (bounded by one block at a
-  * time) and decoded, non-needed blocks are position advances; reads
-  * that decode `content` verify the chunk digest.
+/** Streaming chunk iteration for the reader: per chunk, `needed` column
+  * blocks (current name -> lane) are read (bounded by one block at a
+  * time) and decoded, the rest are position advances; reads that decode
+  * `digestCol` verify the chunk digest ("" = never verify).
   */
 private[sources] final class ChunkCursor(
-    file: String, chunks: Seq[ChunkSpec], required: StructType,
-    filters: Array[Filter], confKv: Map[String, String],
-    verifyContent: Boolean,
-    longCols: Set[String] = GraftDataSource.longCols,
-    strCols: Set[String] = GraftDataSource.strCols,
-    digestCol: String = "content",
-    intCols: Set[String] = Set.empty,
-    dblCols: Set[String] = Set.empty,
-    fltCols: Set[String] = Set.empty,
-    renames: Map[String, String] = Map.empty) {
+    file: String, chunks: Seq[ChunkSpec], needed: Map[String, Lane],
+    confKv: Map[String, String], digestCol: String,
+    renames: Map[String, String]) {
 
-  private val filterCols: Set[String] = filters.toSeq.flatMap(_.references).toSet
-  // rename support: the query works in CURRENT names, this container's
-  // blocks are keyed by its stored names — request stored, then re-key
-  // each decoded chunk back to current before anything row-level runs
-  @inline private def st(c: String): String = renames.getOrElse(c, c)
-  val neededLongs: Set[String] =
-    (required.fieldNames.toSet ++ filterCols).intersect(longCols).map(st)
-  val neededStrs: Set[String] =
-    (required.fieldNames.toSet ++ filterCols).intersect(strCols).map(st)
-  val neededInts: Set[String] =
-    (required.fieldNames.toSet ++ filterCols).intersect(intCols).map(st)
-  val neededDbls: Set[String] =
-    (required.fieldNames.toSet ++ filterCols).intersect(dblCols).map(st)
-  val neededFlts: Set[String] =
-    (required.fieldNames.toSet ++ filterCols).intersect(fltCols).map(st)
   private val verify =
-    verifyContent && digestCol.nonEmpty && neededStrs.contains(st(digestCol))
+    digestCol.nonEmpty && needed.get(digestCol).contains(Lane.Bytes)
 
-  /** Re-key a decoded chunk's column maps stored -> current. Two-phase
+  /** Re-key a decoded chunk's columns stored -> current. Two-phase
     * (remove all, then insert) so a SWAP rename (a<->b across two
     * renames) can't clobber one side mid-move.
     */
   private def rekey(c: DecodedChunk): DecodedChunk = {
-    def fix[T](m: java.util.HashMap[String, T]): Unit = {
-      val moved = new java.util.HashMap[String, T]()
-      renames.foreach { case (cur, stored) =>
-        if (cur != stored) {
-          val v = m.remove(stored)
-          if (v != null) moved.put(cur, v)
-        }
+    val moved = new java.util.HashMap[String, DecodedColumn]()
+    renames.foreach { case (cur, stored) =>
+      if (cur != stored) {
+        val v = c.cols.remove(stored)
+        if (v != null) moved.put(cur, v)
       }
-      m.putAll(moved)
     }
-    fix(c.longs); fix(c.strs); fix(c.ints); fix(c.doubles); fix(c.nulls)
-    fix(c.flts)
+    c.cols.putAll(moved)
     c
   }
-
-  private val conf = ContainerIO.confFrom(confKv)
-  private val hPath = new org.apache.hadoop.fs.Path(file)
-  private val fs = ContainerIO.fs(file, conf)
 
   /** A scan planned from a prior index snapshot can race an overwrite,
     * epoch replay, or compaction that deletes the old generation's block
@@ -1665,39 +1540,20 @@ private[sources] final class ChunkCursor(
     * a raw FileNotFoundException (every other corruption path here is
     * require-guarded the same way).
     */
-  private def snapshotSuperseded(): Nothing =
-    throw new IllegalStateException(
-      s"graft snapshot superseded: $file was removed by a concurrent " +
-        "overwrite/compaction after this scan was planned — re-run the query")
-
-  private val fileLen =
-    try fs.getFileStatus(hPath).getLen
-    catch { case _: java.io.FileNotFoundException => snapshotSuperseded() }
-  private val in =
-    try fs.open(hPath)
-    catch { case _: java.io.FileNotFoundException => snapshotSuperseded() }
+  private val (in, fileLen) =
+    try ContainerFormat.open(file, ContainerIO.confFrom(confKv))
+    catch { case _: java.io.FileNotFoundException =>
+      throw new IllegalStateException(
+        s"graft snapshot superseded: $file was removed by a concurrent " +
+          "overwrite/compaction after this scan was planned — re-run the query")
+    }
 
   val chunkIter: Iterator[DecodedChunk] = {
-    val raw0 =
-      if (chunks.nonEmpty) chunks.iterator.map { cs =>
-        require(cs.offset >= 0 && cs.length >= 0 && cs.offset + cs.length <= fileLen,
-          s"chunk range [${cs.offset}, +${cs.length}) overruns $file ($fileLen bytes)")
-        val ci = new ContainerInput(in, cs.offset, cs.offset + cs.length)
-        val chunk = ContainerFormat.readChunk(ci, neededLongs, neededStrs,
-          cs.crcs, neededInts, neededDbls, neededFlts)
-        require(ci.atEnd, s"chunk at ${cs.offset} shorter than its indexed length")
-        require(chunk.rows == cs.rows, s"chunk at ${cs.offset} row count mismatch")
-        chunk
-      } else {
-        val ci = new ContainerInput(in, 0L, fileLen)
-        ContainerFormat.readPrelude(ci)
-        new Iterator[DecodedChunk] {
-          override def hasNext: Boolean = !ci.atEnd
-          override def next(): DecodedChunk =
-            ContainerFormat.readChunk(ci, neededLongs, neededStrs,
-              Map.empty, neededInts, neededDbls, neededFlts)
-        }
-      }
+    // rename support: the query works in CURRENT names, this container's
+    // blocks are keyed by its stored names — request stored, then re-key
+    // each decoded chunk back to current before anything row-level runs
+    val stored = needed.map { case (c, l) => renames.getOrElse(c, c) -> l }
+    val raw0 = ContainerFormat.chunks(in, fileLen, file, chunks, stored)
     val raw = if (renames.isEmpty) raw0 else raw0.map(rekey)
     if (!verify) raw
     else raw.map { c => ContainerFormat.verifyContentDigest(c, digestCol); c }
@@ -1706,21 +1562,15 @@ private[sources] final class ChunkCursor(
   def close(): Unit = in.close()
 }
 
-/** Vectorized reader: one `ColumnarBatch` per (filtered) chunk, filled
-  * straight from the decoded column arrays.
+/** The DSv2 reader: one `ColumnarBatch` per (filtered) chunk, filled
+  * straight from the decoded column arrays. Pushed filters are re-checked
+  * per row; reads that decode the digest column verify the chunk digest.
   */
-class GraftColumnarReader(file: String, chunks: Seq[ChunkSpec],
-                          required: StructType, filters: Array[Filter],
+class GraftColumnarReader(p: GraftInputPartition, required: StructType,
+                          filters: Array[Filter],
+                          layout: Map[String, ColumnSpec],
                           confKv: Map[String, String],
-                          limit: Int, verifyContent: Boolean,
-                          longCols: Set[String] = GraftDataSource.longCols,
-                          strCols: Set[String] = GraftDataSource.strCols,
-                          digestCol: String = "content",
-                          intCols: Set[String] = Set.empty,
-                          dblCols: Set[String] = Set.empty,
-                          fltCols: Set[String] = Set.empty,
-                          absentCols: Set[String] = Set.empty,
-                          renames: Map[String, String] = Map.empty)
+                          limit: Int, verifyContent: Boolean)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
@@ -1729,15 +1579,15 @@ class GraftColumnarReader(file: String, chunks: Seq[ChunkSpec],
   // are all-NULL here. IsNull on them is trivially true (dropped from
   // the compiled predicates); planning skipped containers any other
   // filter on them would empty; the cursor must not request their blocks.
-  private val effFilters = GraftDataSource.effectiveFilters(filters, absentCols)
-  private val cursor = new ChunkCursor(file, chunks, required, effFilters,
-    confKv, verifyContent, longCols -- absentCols, strCols -- absentCols,
-    digestCol, intCols -- absentCols, dblCols -- absentCols,
-    fltCols -- absentCols, renames)
-  private val preds = GraftDataSource.compileFilters(effFilters, longCols)
+  private val effFilters = GraftDataSource.effectiveFilters(filters, p.absentCols)
+  private val cursor = new ChunkCursor(p.file, p.chunks,
+    ((required.fieldNames ++ effFilters.flatMap(_.references)).toSet -- p.absentCols)
+      .map(c => c -> Lane.of(layout(c).kind)).toMap,
+    confKv, if (verifyContent) p.digestCol else "", p.renames)
+  private val preds = GraftDataSource.compileFilters(effFilters, layout)
   private val fields = required.fields
   private val fieldAbsent: Array[Boolean] =
-    required.fields.map(f => absentCols.contains(f.name))
+    required.fields.map(f => p.absentCols.contains(f.name))
   private var batch: ColumnarBatch = _
   private var emitted = 0
 
@@ -1745,12 +1595,13 @@ class GraftColumnarReader(file: String, chunks: Seq[ChunkSpec],
     if (batch != null) { batch.close(); batch = null }
     while (emitted < limit && cursor.chunkIter.hasNext) {
       val chunk = cursor.chunkIter.next()
+      val tests = preds.map(_(chunk))
       // selection vector: row indices surviving the pushed filters
       val sel = new Array[Int](chunk.rows)
       var m = 0
       var j = 0
       while (j < chunk.rows && emitted + m < limit) {
-        if (GraftDataSource.rowPasses(preds, chunk, j)) {
+        if (GraftDataSource.rowPasses(tests, j)) {
           sel(m) = j; m += 1
         }
         j += 1
@@ -1759,83 +1610,9 @@ class GraftColumnarReader(file: String, chunks: Seq[ChunkSpec],
         val vecs = new Array[ColumnVector](fields.length)
         var i = 0
         while (i < fields.length) {
-          val name = fields(i).name
           val v = new OnHeapColumnVector(m, fields(i).dataType)
-          // per-chunk validity bitmap (nullable columns only); selected
-          // NULL rows become vector nulls, their placeholder values are
-          // never surfaced
-          val nullBm = chunk.nulls.get(name)
-          @inline def isNullRow(r: Int): Boolean =
-            nullBm != null && (nullBm(r >> 3) & (1 << (r & 7))) != 0
           if (fieldAbsent(i)) v.putNulls(0, m)
-          else fields(i).dataType match {
-            case LongType | TimestampNTZType =>
-              val src = chunk.longs.get(name)
-              var k = 0
-              while (k < m) {
-                val r = sel(k)
-                if (isNullRow(r)) v.putNull(k) else v.putLong(k, src(r))
-                k += 1
-              }
-            case IntegerType | DateType =>
-              val src = chunk.ints.get(name)
-              var k = 0
-              while (k < m) {
-                val r = sel(k)
-                if (isNullRow(r)) v.putNull(k) else v.putInt(k, src(r))
-                k += 1
-              }
-            case DoubleType =>
-              val src = chunk.doubles.get(name)
-              var k = 0
-              while (k < m) {
-                val r = sel(k)
-                if (isNullRow(r)) v.putNull(k) else v.putDouble(k, src(r))
-                k += 1
-              }
-            case d: DecimalType =>
-              // p <= 18: the vector's decimal storage is the unscaled
-              // long — exactly what the chunk holds
-              val src = chunk.longs.get(name)
-              var k = 0
-              while (k < m) {
-                val r = sel(k)
-                if (isNullRow(r)) v.putNull(k)
-                else v.putDecimal(k, org.apache.spark.sql.types.Decimal
-                  .createUnsafe(src(r), d.precision, d.scale), d.precision)
-                k += 1
-              }
-            case BooleanType =>
-              val src = chunk.ints.get(name)
-              var k = 0
-              while (k < m) {
-                val r = sel(k)
-                if (isNullRow(r)) v.putNull(k)
-                else v.putBoolean(k, src(r) != 0)
-                k += 1
-              }
-            case FloatType =>
-              // kind 10: sortable-int bits in the narrow lane
-              val src = chunk.ints.get(name)
-              var k = 0
-              while (k < m) {
-                val r = sel(k)
-                if (isNullRow(r)) v.putNull(k)
-                else v.putFloat(k, graft.codecs.FloatBits.fromSortableInt(src(r)))
-                k += 1
-              }
-            case _ =>
-              // straight from the decoded UTF-8 slices: no String
-              // materialization, no re-encode
-              val u = chunk.strs.get(name)
-              var k = 0
-              while (k < m) {
-                val r = sel(k)
-                if (isNullRow(r)) v.putNull(k)
-                else v.putByteArray(k, u.pool, u.offsets(r), u.lens(r))
-                k += 1
-              }
-          }
+          else fill(v, fields(i).dataType, chunk.col(fields(i).name), sel, m)
           vecs(i) = v
           i += 1
         }
@@ -1847,102 +1624,108 @@ class GraftColumnarReader(file: String, chunks: Seq[ChunkSpec],
     false
   }
 
+  /** Copy the selected rows of one decoded column into a vector; NULL
+    * rows (per the chunk's validity bitmap) become vector nulls, their
+    * placeholder values are never surfaced.
+    */
+  private def fill(v: OnHeapColumnVector, dt: DataType, col: DecodedColumn,
+                   sel: Array[Int], m: Int): Unit = dt match {
+    case LongType | TimestampNTZType =>
+      val src = col.longs
+      var k = 0
+      while (k < m) {
+        val r = sel(k)
+        if (!col.validAt(r)) v.putNull(k) else v.putLong(k, src(r))
+        k += 1
+      }
+    case IntegerType | DateType =>
+      val src = col.ints
+      var k = 0
+      while (k < m) {
+        val r = sel(k)
+        if (!col.validAt(r)) v.putNull(k) else v.putInt(k, src(r))
+        k += 1
+      }
+    case DoubleType =>
+      val src = col.doubles
+      var k = 0
+      while (k < m) {
+        val r = sel(k)
+        if (!col.validAt(r)) v.putNull(k) else v.putDouble(k, src(r))
+        k += 1
+      }
+    case d: DecimalType =>
+      // p <= 18: the vector's decimal storage is the unscaled long —
+      // exactly what the chunk holds
+      val src = col.longs
+      var k = 0
+      while (k < m) {
+        val r = sel(k)
+        if (!col.validAt(r)) v.putNull(k)
+        else v.putDecimal(k, org.apache.spark.sql.types.Decimal
+          .createUnsafe(src(r), d.precision, d.scale), d.precision)
+        k += 1
+      }
+    case BooleanType =>
+      val src = col.ints
+      var k = 0
+      while (k < m) {
+        val r = sel(k)
+        if (!col.validAt(r)) v.putNull(k) else v.putBoolean(k, src(r) != 0)
+        k += 1
+      }
+    case FloatType =>
+      // kind 10: sortable-int bits in the narrow lane
+      val src = col.ints
+      var k = 0
+      while (k < m) {
+        val r = sel(k)
+        if (!col.validAt(r)) v.putNull(k)
+        else v.putFloat(k, graft.codecs.FloatBits.fromSortableInt(src(r)))
+        k += 1
+      }
+    case _: ArrayType =>
+      // ARRAY<FLOAT>: one float child vector per batch, each row an
+      // (offset, length) view into it
+      val fc = col.floats
+      val child = v.arrayData()
+      var total = 0
+      var k = 0
+      while (k < m) {
+        if (col.validAt(sel(k))) total += fc.lens(sel(k))
+        k += 1
+      }
+      child.reserve(total)
+      var off = 0
+      k = 0
+      while (k < m) {
+        val r = sel(k)
+        if (!col.validAt(r)) v.putNull(k)
+        else {
+          child.putFloats(off, fc.lens(r), fc.pool, fc.offsets(r))
+          v.putArray(k, off, fc.lens(r))
+          off += fc.lens(r)
+        }
+        k += 1
+      }
+    case _ =>
+      // strings and binary straight from the decoded byte slices: no
+      // String materialization, no re-encode
+      val u = col.bytes
+      var k = 0
+      while (k < m) {
+        val r = sel(k)
+        if (!col.validAt(r)) v.putNull(k)
+        else v.putByteArray(k, u.pool, u.offsets(r), u.lens(r))
+        k += 1
+      }
+  }
+
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
   override def close(): Unit = {
     if (batch != null) { batch.close(); batch = null }
     cursor.close()
   }
-}
-
-/** Streaming reader over one partition's chunk ranges: per chunk, needed
-  * column blocks are read (bounded by one block at a time) and decoded,
-  * non-needed blocks are position advances. Pushed filters are re-checked
-  * per row; reads that decode `content` verify the chunk digest.
-  */
-class GraftPartitionReader(file: String, chunks: Seq[ChunkSpec],
-                           required: StructType, filters: Array[Filter],
-                           confKv: Map[String, String],
-                           limit: Int, verifyContent: Boolean,
-                           longCols: Set[String] = GraftDataSource.longCols,
-                           strCols: Set[String] = GraftDataSource.strCols,
-                           digestCol: String = "content",
-                           intCols: Set[String] = Set.empty,
-                           dblCols: Set[String] = Set.empty,
-                           fltCols: Set[String] = Set.empty,
-                           absentCols: Set[String] = Set.empty,
-                           renames: Map[String, String] = Map.empty)
-    extends PartitionReader[InternalRow] {
-
-  /** Sequential whole-file stream (legacy tables; fuzz surface). */
-  def this(file: String, required: StructType, filters: Array[Filter],
-           confKv: Map[String, String]) =
-    this(file, Nil, required, filters, confKv, Int.MaxValue, false)
-
-  // schema evolution: see GraftColumnarReader — absent columns are
-  // all-NULL in this container and their blocks are never requested
-  private val effFilters = GraftDataSource.effectiveFilters(filters, absentCols)
-  private val cursor = new ChunkCursor(file, chunks, required, effFilters,
-    confKv, verifyContent, longCols -- absentCols, strCols -- absentCols,
-    digestCol, intCols -- absentCols, dblCols -- absentCols,
-    fltCols -- absentCols, renames)
-  private val preds = GraftDataSource.compileFilters(effFilters, longCols)
-
-  private val fields = required.fields
-  private val fieldAbsent: Array[Boolean] =
-    required.fields.map(f => absentCols.contains(f.name))
-  private val it: Iterator[InternalRow] = cursor.chunkIter.flatMap { chunk =>
-    (0 until chunk.rows).iterator.flatMap { j =>
-      if (!GraftDataSource.rowPasses(preds, chunk, j)) None
-      else {
-        val row = new GenericInternalRow(fields.length)
-        var i = 0
-        while (i < fields.length) {
-          val name = fields(i).name
-          if (fieldAbsent(i) || !chunk.validAt(name, j)) row.setNullAt(i)
-          else fields(i).dataType match {
-            case LongType | TimestampNTZType =>
-              row.setLong(i, chunk.longs.get(name)(j))
-            case IntegerType | DateType =>
-              row.setInt(i, chunk.ints.get(name)(j))
-            case DoubleType =>
-              row.setDouble(i, chunk.doubles.get(name)(j))
-            case d: DecimalType =>
-              row.update(i, org.apache.spark.sql.types.Decimal.createUnsafe(
-                chunk.longs.get(name)(j), d.precision, d.scale))
-            case BooleanType =>
-              row.setBoolean(i, chunk.ints.get(name)(j) != 0)
-            case FloatType =>
-              row.setFloat(i, graft.codecs.FloatBits.fromSortableInt(
-                chunk.ints.get(name)(j)))
-            case BinaryType =>
-              // InternalRow owns its binary — copy the slice out
-              val u = chunk.strs.get(name)
-              row.update(i, java.util.Arrays.copyOfRange(
-                u.pool, u.offsets(j), u.offsets(j) + u.lens(j)))
-            case _: ArrayType =>
-              row.update(i,
-                org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-                  .fromPrimitiveArray(chunk.flts.get(name).slice(j)))
-            case _ =>
-              // zero-copy view over the decoded UTF-8 slice
-              val u = chunk.strs.get(name)
-              row.update(i, UTF8String.fromBytes(u.pool, u.offsets(j), u.lens(j)))
-          }
-          i += 1
-        }
-        Some(row: InternalRow)
-      }
-    }
-  }
-
-  private var cur: InternalRow = _
-  private var emitted = 0
-
-  override def next(): Boolean =
-    if (emitted < limit && it.hasNext) { cur = it.next(); emitted += 1; true }
-    else false
-  override def get(): InternalRow = cur
-  override def close(): Unit = cursor.close()
 }
 
 // -------------------------------------------------------------- streaming read
@@ -2000,10 +1783,7 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
                             filters: Array[Filter],
                             confKv: Map[String, String],
                             maxSplitBytes: Long, verifyContent: Boolean,
-                            longCols: Set[String], strCols: Set[String],
-                            intCols: Set[String],
-                            dblCols: Set[String] = Set.empty,
-                            fltCols: Set[String] = Set.empty,
+                            layout: Map[String, ColumnSpec],
                             tableCols: Seq[String] = Nil)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
@@ -2193,8 +1973,8 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, filters, confKv, Int.MaxValue,
-      verifyContent, longCols, strCols, intCols, dblCols, fltCols)
+    new GraftReaderFactory(required, filters, layout, confKv, Int.MaxValue,
+      verifyContent)
 
   /** Fold per-batch seen-log entries at or below the COMMITTED offset
     * into one `<end>.compact.json` once [[GraftMicroBatchStream

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, ContainerInput, DecodedChunk, Manifests, ParsedManifest, PartManifest}
+import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, Lane, Manifests, ParsedManifest, PartManifest}
 
 /** Table maintenance for graft tables — the operational side a
   * long-running streaming sink needs: every micro-batch epoch commits
@@ -378,8 +378,7 @@ object GraftMaintenance {
     }
     val pushed = conjuncts(cond).flatMap(sourceFilterOf)
     val admission = GraftDataSource.translateFilters(pushed.toArray,
-      GraftDataSource.decScaleOf(st), GraftDataSource.boolColsOf(st),
-      GraftDataSource.f32ColsOf(st)).toSeq
+      GraftDataSource.layoutOf(st)).toSeq
     val defaultNames = GraftDataSource.schema.fieldNames.toSeq
     val affected = committed.filter { m =>
       GraftDataSource.containerFilters(m, admission, tableCols, defaultNames)
@@ -533,8 +532,7 @@ object GraftMaintenance {
     }
     val pushed = conjuncts(cond).flatMap(sourceFilterOf)
     val admission = GraftDataSource.translateFilters(pushed.toArray,
-      GraftDataSource.decScaleOf(st), GraftDataSource.boolColsOf(st),
-      GraftDataSource.f32ColsOf(st)).toSeq
+      GraftDataSource.layoutOf(st)).toSeq
     val defaultNames = GraftDataSource.schema.fieldNames.toSeq
     val affected = committed.filter { m =>
       GraftDataSource.containerFilters(m, admission, tableCols, defaultNames)
@@ -759,8 +757,7 @@ object GraftMaintenance {
             }
           }
         GraftDataSource.translateFilters(raw.toArray,
-          GraftDataSource.decScaleOf(st), GraftDataSource.boolColsOf(st),
-          GraftDataSource.f32ColsOf(st)).toSeq
+          GraftDataSource.layoutOf(st)).toSeq
       }
     val defaultNames = GraftDataSource.schema.fieldNames.toSeq
     val affected =
@@ -930,16 +927,7 @@ object GraftMaintenance {
     val binNulls = new Array[Boolean](enc.binNames.length)
     val fltNulls = new Array[Boolean](enc.fltNames.length)
     // read EVERY live column of the container (full rewrite)
-    val live = containerSpecs.filterNot(_.dropped)
-    val neededL = live.collect {
-      case s if s.kind == 0 || s.kind == 3 || s.kind == 8 => s.name }.toSet
-    val neededS6 = live.collect {
-      case s if s.kind == 1 || s.kind == 6 => s.name }.toSet
-    val neededI = live.collect {
-      case s if s.kind == 2 || s.kind == 4 || s.kind == 9 ||
-        s.kind == 10 => s.name }.toSet
-    val neededD = live.collect { case s if s.kind == 5 => s.name }.toSet
-    val neededF = live.collect { case s if s.kind == 7 => s.name }.toSet
+    val needed = Lane.ofSpecs(containerSpecs)
     val ancestors = Manifests.capAncestors(
       Seq(Manifests.epochKey(Manifests.logicalName(m.name))) ++ m.ancestors)
     // partition-transform metadata survives only when no updated column
@@ -953,27 +941,9 @@ object GraftMaintenance {
         p.contains(s"($t)") || p.contains(s",$t)")))
     var updated = 0L
     val file = m.blockFile(path)
-    val fs = ContainerIO.fs(file, conf)
-    val p = new org.apache.hadoop.fs.Path(file)
-    val fileLen = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
+    val (in, fileLen) = ContainerFormat.open(file, conf)
     try {
-      val chunks: Iterator[DecodedChunk] =
-        if (m.chunkIndex.nonEmpty) m.chunkIndex.iterator.map { cs =>
-          val ci = new ContainerInput(in, cs.offset, cs.offset + cs.length)
-          ContainerFormat.readChunk(ci, neededL, neededS6, cs.blockCrcs,
-            neededI, neededD, neededF)
-        } else {
-          val ci = new ContainerInput(in, 0L, fileLen)
-          ContainerFormat.readPrelude(ci)
-          new Iterator[DecodedChunk] {
-            override def hasNext: Boolean = !ci.atEnd
-            override def next(): DecodedChunk =
-              ContainerFormat.readChunk(ci, neededL, neededS6, Map.empty,
-                neededI, neededD, neededF)
-          }
-        }
-      chunks.foreach { chunk =>
+      ContainerFormat.chunks(in, fileLen, file, m.chunkIndex, needed).foreach { chunk =>
         if (m.digestCol.nonEmpty)
           ContainerFormat.verifyContentDigest(chunk, m.digestCol)
         var j = 0
@@ -1377,20 +1347,7 @@ object GraftMaintenance {
         ms.flatMap(_.ancestors))
     // dropped positions (round 9) hold no data: request no block, read
     // no lane (the encoder's own lanes are live-filtered the same way)
-    val liveSchema = schema.filterNot(_.dropped)
-    val neededL = liveSchema.collect {
-      case s if s.kind == 0 || s.kind == 3 || s.kind == 8 => s.name }.toSet
-    val neededS = liveSchema.collect { case s if s.kind == 1 => s.name }.toSet
-    val neededI = liveSchema.collect {
-      case s if s.kind == 2 || s.kind == 4 || s.kind == 9 ||
-        s.kind == 10 => s.name }.toSet
-    val neededD = liveSchema.collect { case s if s.kind == 5 => s.name }.toSet
-    // kind 6 (binary) decodes into the byte-slice (str) map
-    val neededS6 = neededS ++ liveSchema.collect { case s if s.kind == 6 => s.name }
-    val neededF = liveSchema.collect { case s if s.kind == 7 => s.name }.toSet
-    val numKind: Array[Int] =
-      liveSchema.filter(s => s.kind != 1 && s.kind != 6 && s.kind != 7)
-        .map(_.kind).toArray
+    val needed = Lane.ofSpecs(schema)
     val strNames = enc.strNames
     val longNames = enc.longNames
     val binNames = enc.binNames
@@ -1398,7 +1355,7 @@ object GraftMaintenance {
     // null masks reused per row (addRow reads them synchronously); only
     // nullable schemas pay for them — and they must be PROPAGATED here or
     // compaction would silently turn NULLs into their stored placeholders
-    val anyNullable = liveSchema.exists(_.nullable)
+    val anyNullable = schema.exists(s => !s.dropped && s.nullable)
     val strNulls = if (anyNullable) new Array[Boolean](strNames.length) else null
     val longNulls = if (anyNullable) new Array[Boolean](longNames.length) else null
     val binNulls = if (anyNullable) new Array[Boolean](binNames.length) else null
@@ -1406,29 +1363,15 @@ object GraftMaintenance {
     var dropped = 0L
     ms.foreach { m =>
       val file = m.blockFile(path)
-      val fs = ContainerIO.fs(file, conf)
-      val p = new org.apache.hadoop.fs.Path(file)
-      val fileLen = fs.getFileStatus(p).getLen
-      val in = fs.open(p)
+      val (in, fileLen) = ContainerFormat.open(file, conf)
       try {
-        val chunks: Iterator[DecodedChunk] =
-          if (m.chunkIndex.nonEmpty) m.chunkIndex.iterator.map { cs =>
-            val ci = new ContainerInput(in, cs.offset, cs.offset + cs.length)
-            ContainerFormat.readChunk(ci, neededL, neededS6, cs.blockCrcs,
-              neededI, neededD, neededF)
-          } else {
-            val ci = new ContainerInput(in, 0L, fileLen)
-            ContainerFormat.readPrelude(ci)
-            new Iterator[DecodedChunk] {
-              override def hasNext: Boolean = !ci.atEnd
-              override def next(): DecodedChunk =
-                ContainerFormat.readChunk(ci, neededL, neededS6, Map.empty,
-                  neededI, neededD, neededF)
-            }
-          }
-        chunks.foreach { chunk =>
+        ContainerFormat.chunks(in, fileLen, file, m.chunkIndex, needed).foreach { chunk =>
           if (digestCol.nonEmpty) ContainerFormat.verifyContentDigest(chunk, digestCol)
-          val strCols = strNames.map(n => chunk.strs.get(n).strings)
+          val strCols = strNames.map(chunk.col)
+          val strVals = strCols.map(_.bytes.strings)
+          val longCols = longNames.map(chunk.col)
+          val binCols = binNames.map(chunk.col)
+          val fltCols = fltNames.map(chunk.col)
           var j = 0
           while (j < chunk.rows) {
             if (drop != null && drop.matches(chunk, j)) { dropped += 1; j += 1 }
@@ -1436,32 +1379,32 @@ object GraftMaintenance {
             val strs = new Array[String](strNames.length)
             var i = 0
             while (i < strNames.length) {
-              if (anyNullable) strNulls(i) = !chunk.validAt(strNames(i), j)
-              strs(i) = strCols(i)(j)
+              if (anyNullable) strNulls(i) = !strCols(i).validAt(j)
+              strs(i) = strVals(i)(j)
               i += 1
             }
             val longs = new Array[Long](longNames.length)
             i = 0
             while (i < longNames.length) {
-              if (anyNullable) longNulls(i) = !chunk.validAt(longNames(i), j)
-              longs(i) = numKind(i) match {
+              val c = longCols(i)
+              if (anyNullable) longNulls(i) = !c.validAt(j)
+              longs(i) = c.lane match {
                 // booleans (kind 9) decode into the int lane as 0/1;
                 // floats (kind 10) pass their sortable bits through
-                case 2 | 4 | 9 | 10 => chunk.ints.get(longNames(i))(j).toLong
+                case Lane.Ints => c.ints(j).toLong
                 // back to the sortable-long storage form (bijective on
                 // stored values: the writer already canonicalized NaN)
-                case 5 => graft.codecs.DoubleBits.toSortableLong(
-                  chunk.doubles.get(longNames(i))(j))
+                case Lane.Doubles => graft.codecs.DoubleBits.toSortableLong(c.doubles(j))
                 // kind 8 (decimal unscaled) passes through the long lane
-                case _ => chunk.longs.get(longNames(i))(j)
+                case _ => c.longs(j)
               }
               i += 1
             }
             val binsRow = new Array[Array[Byte]](binNames.length)
             i = 0
             while (i < binNames.length) {
-              if (anyNullable) binNulls(i) = !chunk.validAt(binNames(i), j)
-              val u = chunk.strs.get(binNames(i))
+              if (anyNullable) binNulls(i) = !binCols(i).validAt(j)
+              val u = binCols(i).bytes
               binsRow(i) = java.util.Arrays.copyOfRange(
                 u.pool, u.offsets(j), u.offsets(j) + u.lens(j))
               i += 1
@@ -1469,8 +1412,8 @@ object GraftMaintenance {
             val fltsRow = new Array[Array[Float]](fltNames.length)
             i = 0
             while (i < fltNames.length) {
-              if (anyNullable) fltNulls(i) = !chunk.validAt(fltNames(i), j)
-              fltsRow(i) = chunk.flts.get(fltNames(i)).slice(j)
+              if (anyNullable) fltNulls(i) = !fltCols(i).validAt(j)
+              fltsRow(i) = fltCols(i).floats.slice(j)
               i += 1
             }
             enc.addRow(strs, longs, binsRow, fltsRow, strNulls, longNulls,
@@ -1522,9 +1465,9 @@ private[sources] final class StoredKeyMatcher(
       val s = graft.engine.ColumnSpec.fromPacked(n0, packed)
       val n = s.name
       val get: (DecodedChunk, Int) => Any = s.kind match {
-        case 0 | 3 | 8 => (c, j) => c.longs.get(n)(j)
-        case 2 | 4 | 9 => (c, j) => c.ints.get(n)(j)
-        case 1 => (c, j) => c.strs.get(n).string(j)
+        case 0 | 3 | 8 => (c, j) => c.col(n).longs(j)
+        case 2 | 4 | 9 => (c, j) => c.col(n).ints(j)
+        case 1 => (c, j) => c.col(n).bytes.string(j)
         case other => throw new IllegalStateException(
           s"unsupported upsert key kind $other for '$n'")
       }
@@ -1573,26 +1516,26 @@ private[sources] final class StoredRowMatcher(
       val s = graft.engine.ColumnSpec.fromPacked(n0, packed)
       val n = s.name
       val get: (DecodedChunk, Int) => Any = s.kind match {
-        case 0 | 3 => (c, j) => c.longs.get(n)(j)
-        case 2 | 4 => (c, j) => c.ints.get(n)(j)
-        case 5 => (c, j) => c.doubles.get(n)(j)
+        case 0 | 3 => (c, j) => c.col(n).longs(j)
+        case 2 | 4 => (c, j) => c.col(n).ints(j)
+        case 5 => (c, j) => c.col(n).doubles(j)
         case 8 => (c, j) => org.apache.spark.sql.types.Decimal
-          .createUnsafe(c.longs.get(n)(j), s.precision, s.scale)
-        case 9 => (c, j) => c.ints.get(n)(j) != 0
+          .createUnsafe(c.col(n).longs(j), s.precision, s.scale)
+        case 9 => (c, j) => c.col(n).ints(j) != 0
         case 10 => (c, j) => java.lang.Float.valueOf(
-          graft.codecs.FloatBits.fromSortableInt(c.ints.get(n)(j)))
+          graft.codecs.FloatBits.fromSortableInt(c.col(n).ints(j)))
         case 1 => (c, j) => {
-          val u = c.strs.get(n)
+          val u = c.col(n).bytes
           org.apache.spark.unsafe.types.UTF8String
             .fromBytes(u.pool, u.offsets(j), u.lens(j))
         }
         case 6 => (c, j) => {
-          val u = c.strs.get(n)
+          val u = c.col(n).bytes
           java.util.Arrays.copyOfRange(u.pool, u.offsets(j),
             u.offsets(j) + u.lens(j))
         }
         case 7 => (c, j) => org.apache.spark.sql.catalyst.expressions
-          .UnsafeArrayData.fromPrimitiveArray(c.flts.get(n).slice(j))
+          .UnsafeArrayData.fromPrimitiveArray(c.col(n).floats.slice(j))
         case other => throw new IllegalStateException(
           s"unknown column kind $other for '$n'")
       }

@@ -2,7 +2,7 @@ package graft.codecs
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{BlockReader, BlockWriter, DecodeError, PrefixVarInt}
-import graft.engine.{ColumnarEngine, SourceTable, SparkTestSession}
+import graft.engine.{ColumnarEngine, ContainerFormat, Lane, SourceTable, SparkTestSession}
 
 /** Fuzz-grade decode robustness, porting the intent of the reference's
   * libFuzzer targets (reference: the fuzz/fuzz_targets dir, tests/fuzz.rs:4-17):
@@ -24,6 +24,16 @@ class FuzzSpec extends AnyFunSuite {
 
   private def hex(b: Array[Byte]): String = b.map(x => f"$x%02x").mkString
 
+  private lazy val engineLanes = Lane.ofSpecs(ColumnarEngine.DefaultSchema)
+
+  /** Whole-container decode through the production parser: the
+    * prelude + chunk stream every reader uses, with each chunk's content
+    * digest verified (the engine schema's `content` column).
+    */
+  private def parseContainer(bytes: Array[Byte]): Unit =
+    ContainerFormat.chunks(memStream(bytes), bytes.length.toLong, "fuzz", Nil,
+      engineLanes).foreach(ContainerFormat.verifyContentDigest(_))
+
   test("random bytes never crash decodePair / BlockReader / codec / container decode (>1M buffers)") {
     val rnd = new java.util.Random(0xf00dL)
     val longIds = Array[Byte](1, 2, 3, 4, 5, 6)
@@ -40,7 +50,7 @@ class FuzzSpec extends AnyFunSuite {
       }
       controlled(hex(b))(LongCodecs.decodeSlice(b, 0, b.length))
       controlled(hex(b))(StringCodecs.decodeSlice(b, 0, b.length))
-      controlled(hex(b))(ColumnarEngine.decodeContainer(b).foreach(_ => ()))
+      controlled(hex(b))(parseContainer(b))
       // force a valid codec id so decode gets past the id check
       b(0) = longIds(rnd.nextInt(longIds.length))
       controlled(hex(b))(LongCodecs.decodeSlice(b, 0, b.length))
@@ -105,10 +115,10 @@ class FuzzSpec extends AnyFunSuite {
       while (k < 600) {
         val m = bytes.clone()
         m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte
-        controlled(s"container mut $k")(ColumnarEngine.decodeContainer(m).foreach(_ => ()))
+        controlled(s"container mut $k")(parseContainer(m))
         val cut = 1 + rnd.nextInt(bytes.length)
         controlled(s"container trunc $k")(
-          ColumnarEngine.decodeContainer(java.util.Arrays.copyOf(bytes, cut)).foreach(_ => ()))
+          parseContainer(java.util.Arrays.copyOf(bytes, cut)))
         k += 1
       }
     }
@@ -186,17 +196,17 @@ class FuzzSpec extends AnyFunSuite {
     val files = new java.io.File(s"$dir/blocks").listFiles()
       .filter(_.getName.endsWith(".gblk"))
     assert(files.nonEmpty)
-    val neededL = Set("id", "ts", "m") // decimal decodes into the long map
-    val neededS = Set("s", "b") // binary decodes into the byte-slice map
-    val neededI = Set("i", "dt", "f", "g") // boolean + float ride the int map
-    val neededD = Set("d")
-    val neededF = Set("v")
+    val needed = Map("id" -> Lane.Longs, "ts" -> Lane.Longs,
+      "m" -> Lane.Longs, // decimal decodes into the long lane
+      "s" -> Lane.Bytes, "b" -> Lane.Bytes, // binary shares the byte-slice lane
+      // boolean + float ride the int lane
+      "i" -> Lane.Ints, "dt" -> Lane.Ints, "f" -> Lane.Ints, "g" -> Lane.Ints,
+      "d" -> Lane.Doubles, "v" -> Lane.Floats)
     def parseAll(bytes: Array[Byte]): Unit = {
       val ci = new graft.engine.ContainerInput(memStream(bytes), 0L, bytes.length.toLong)
       graft.engine.ContainerFormat.readPrelude(ci)
       while (!ci.atEnd)
-        graft.engine.ContainerFormat.readChunk(ci, neededL, neededS,
-          Map.empty, neededI, neededD, neededF)
+        graft.engine.ContainerFormat.readChunk(ci, needed, Map.empty)
     }
     val rnd = new java.util.Random(29L)
     for (f <- files) {

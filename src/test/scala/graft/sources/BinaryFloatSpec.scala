@@ -83,6 +83,23 @@ class BinaryFloatSpec extends AnyFunSuite {
     }
   }
 
+  test("ARRAY<FLOAT> scans are columnar: BatchScan under ColumnarToRow") {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val d = tmp("flt-columnar")
+    embDf(100, 8).write.format("graft").option("chunkRows", "40")
+      .mode("overwrite").save(d)
+    val q = spark.read.format("graft").load(d).select("vec_id", "embedding")
+    val plan = q.queryExecution.executedPlan
+    val columnar = plan.collect { case c: ColumnarToRowExec => c.child }.exists {
+      case _: BatchScanExec => true
+      case i: InputAdapter => i.child.isInstanceOf[BatchScanExec]
+      case _ => false
+    }
+    assert(columnar, s"expected BatchScan under ColumnarToRow:\n$plan")
+    assert(q.collect().length === 100)
+  }
+
   test("nullable BINARY and ARRAY<FLOAT>: nulls round-trip; IS NOT NULL pushes") {
     val d = tmp("binflt-null")
     val schema = StructType(Seq(

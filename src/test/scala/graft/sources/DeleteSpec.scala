@@ -251,7 +251,7 @@ class DeleteSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     def mkStream() = new GraftMicroBatchStream(d, ckpt, schema, Array.empty,
-      confKv, 128L << 20, true, Set("id"), Set("tag"), Set.empty)
+      confKv, 128L << 20, true, GraftDataSource.layoutOf(schema))
     val s1 = mkStream()
     val off0 = s1.initialOffset()
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "tag").coalesce(1)
@@ -266,10 +266,12 @@ class DeleteSpec extends AnyFunSuite {
     val parts = s2.planInputPartitions(off0, off1)
     val rf = s2.createReaderFactory()
     val ids = parts.toSeq.flatMap { p =>
-      val r = rf.createReader(p)
+      val r = rf.createColumnarReader(p)
       val b = Seq.newBuilder[Long]
-      try while (r.next()) b += r.get().getLong(0)
-      finally r.close()
+      try while (r.next()) {
+        val batch = r.get()
+        b ++= (0 until batch.numRows).map(batch.column(0).getLong)
+      } finally r.close()
       b.result()
     }
     assert(ids.sorted === Seq(1L, 3L),

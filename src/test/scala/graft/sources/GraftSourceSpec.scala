@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThan, LessThan}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{ColumnarEngine, SourceTable, SparkTestSession}
+import graft.engine.{ColumnarEngine, Lane, SourceTable, SparkTestSession}
 
 class GraftSourceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -635,28 +635,38 @@ class GraftSourceSpec extends AnyFunSuite {
     // format level: a crafted container whose kind-2 block holds an
     // overflowing value fails the read with DecodeError, never a wrong int
     val d = java.nio.file.Files.createTempDirectory("graft-int-ovf").toString
-    val w = new graft.core.BlockWriter(256)
-    w.putBytes(ColumnarEngine.Magic)
-    w.putVarint(0L) // part id
-    w.putVarint(3L) // chunk rows
-    w.putVarint(1L) // one column
-    val nm = "x".getBytes("UTF-8")
-    w.putVarint(nm.length.toLong); w.putBytes(nm)
-    w.putByte(2) // kind 2 = i32
-    w.putVarint(block.length.toLong); w.putBytes(block)
-    w.putBytes(new Array[Byte](32)) // digest (no string columns)
-    val file = s"$d/crafted.gblk"
-    java.nio.file.Files.write(java.nio.file.Paths.get(file), w.result())
+    def crafted(name: String, kind2Block: Array[Byte]): String = {
+      val w = new graft.core.BlockWriter(256)
+      w.putBytes(ColumnarEngine.Magic)
+      w.putVarint(0L) // part id
+      w.putVarint(3L) // chunk rows
+      w.putVarint(1L) // one column
+      val nm = "x".getBytes("UTF-8")
+      w.putVarint(nm.length.toLong); w.putBytes(nm)
+      w.putByte(2) // kind 2 = i32
+      w.putVarint(kind2Block.length.toLong); w.putBytes(kind2Block)
+      w.putBytes(new Array[Byte](32)) // digest (no string columns)
+      val file = s"$d/$name.gblk"
+      java.nio.file.Files.write(java.nio.file.Paths.get(file), w.result())
+      file
+    }
     val confKv = graft.engine.ContainerIO.confSnapshot(spark)
-    val cursor = new ChunkCursor(file, Nil,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("x",
-          org.apache.spark.sql.types.IntegerType, nullable = false))),
-      Array.empty, confKv, verifyContent = false,
-      longCols = Set.empty, strCols = Set.empty, digestCol = "",
-      intCols = Set("x"))
+    val cursor = new ChunkCursor(crafted("crafted", block), Nil,
+      Map("x" -> Lane.Ints), confKv, digestCol = "", renames = Map.empty)
     try intercept[graft.core.DecodeError] { cursor.chunkIter.next() }
     finally cursor.close()
+    // lane mismatch: a valid kind-2 block read as a BIGINT column fails
+    // the controlled missing-column require, never a ClassCastException
+    // or NullPointerException
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val asLong = StructType(Seq(StructField("x", LongType, nullable = false)))
+    val reader = new GraftColumnarReader(
+      GraftInputPartition(crafted("lane-mismatch", ok), Nil, digestCol = ""),
+      asLong, Array.empty, GraftDataSource.layoutOf(asLong), confKv,
+      Int.MaxValue, verifyContent = false)
+    val e = try intercept[IllegalArgumentException] { reader.next() }
+      finally reader.close()
+    assert(e.getMessage.contains("missing/short long column x"), e.getMessage)
   }
 
   test("aggregate pushdown over an empty table: count 0, null min/max") {
@@ -679,6 +689,15 @@ class GraftSourceSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempFile("graft-dsv2-fuzz", ".gblk")
     val schema = StructType(Seq(StructField("repo", StringType),
       StructField("hash64", LongType)))
+    // the columnar reader over the whole-file stream (a partition with
+    // no chunk index: the ChunkCursor path with Nil chunks), unverified
+    def readAll(): Unit = {
+      val r = new GraftColumnarReader(
+        GraftInputPartition(tmp.toString, Nil, digestCol = ""), schema,
+        Array.empty, GraftDataSource.layoutOf(schema), Map.empty,
+        Int.MaxValue, verifyContent = false)
+      try while (r.next()) r.get() finally r.close()
+    }
     def controlled(ctx: String)(f: => Any): Unit =
       try { f; () }
       catch {
@@ -693,25 +712,16 @@ class GraftSourceSpec extends AnyFunSuite {
       val m = bytes.clone()
       m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte
       java.nio.file.Files.write(tmp, m)
-      controlled(s"reader mut $k") {
-        val r = new GraftPartitionReader(tmp.toString, schema,
-          Array.empty, Map.empty)
-        while (r.next()) r.get()
-      }
+      controlled(s"reader mut $k")(readAll())
       val cut = 1 + rnd.nextInt(bytes.length)
       java.nio.file.Files.write(tmp, java.util.Arrays.copyOf(bytes, cut))
-      controlled(s"reader trunc $k") {
-        val r = new GraftPartitionReader(tmp.toString, schema,
-          Array.empty, Map.empty)
-        while (r.next()) r.get()
-      }
+      controlled(s"reader trunc $k")(readAll())
       k += 1
     }
   }
 
   test("fuzz: bit-flipped kind-2 int containers fail controlled (Overflow/Eob/require)") {
     import spark.implicits._
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     val d = java.nio.file.Files.createTempDirectory("graft-int-fuzz").toString
     (0 until 200).map(i => (i - 100, i.toLong)).toDF("n", "id")
       .coalesce(1)
@@ -722,7 +732,6 @@ class GraftSourceSpec extends AnyFunSuite {
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$d/blocks/$block"))
     val tmp = java.nio.file.Files.createTempFile("graft-int-fuzz", ".gblk")
-    val schema = StructType(Seq(StructField("n", IntegerType)))
     val rnd = new scala.util.Random(29)
     var k = 0
     while (k < 200) {
@@ -732,10 +741,9 @@ class GraftSourceSpec extends AnyFunSuite {
       try {
         // direct sequential reader (no manifest CRCs shielding the flip):
         // every outcome must be correct data or a typed decode failure
-        val cursor = new ChunkCursor(tmp.toString, Nil, schema, Array.empty,
-          graft.engine.ContainerIO.confSnapshot(spark),
-          verifyContent = false, longCols = Set.empty, strCols = Set.empty,
-          digestCol = "", intCols = Set("n"))
+        val cursor = new ChunkCursor(tmp.toString, Nil, Map("n" -> Lane.Ints),
+          graft.engine.ContainerIO.confSnapshot(spark), digestCol = "",
+          renames = Map.empty)
         try while (cursor.chunkIter.hasNext) cursor.chunkIter.next()
         finally cursor.close()
       } catch {

@@ -519,7 +519,7 @@ class MaintenanceSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     def mkStream() = new GraftMicroBatchStream(d, ckpt, schema, Array.empty,
-      confKv, 128L << 20, true, Set("id"), Set("tag"), Set.empty)
+      confKv, 128L << 20, true, GraftDataSource.layoutOf(schema))
     val stream = mkStream()
     var last = stream.initialOffset()
     for (w <- 0 until 100) {
@@ -601,7 +601,7 @@ class MaintenanceSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     def mkStream() = new GraftMicroBatchStream(d, ckpt, schema, Array.empty,
-      confKv, 128L << 20, true, Set("id"), Set("tag"), Set.empty)
+      confKv, 128L << 20, true, GraftDataSource.layoutOf(schema))
     val s1 = mkStream()
     val off0 = s1.initialOffset()
     Seq((1L, "a"), (2L, "b")).toDF("id", "tag").coalesce(1)
@@ -621,10 +621,12 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(parts.nonEmpty, "substitution must plan the compacted generation")
     val rf = s2.createReaderFactory()
     val ids = parts.toSeq.flatMap { p =>
-      val r = rf.createReader(p)
+      val r = rf.createColumnarReader(p)
       val b = Seq.newBuilder[Long]
-      try while (r.next()) b += r.get().getLong(0)
-      finally r.close()
+      try while (r.next()) {
+        val batch = r.get()
+        b ++= (0 until batch.numRows).map(batch.column(0).getLong)
+      } finally r.close()
       b.result()
     }
     assert(ids.sorted === Seq(1L, 2L, 3L, 4L),
@@ -658,7 +660,7 @@ class MaintenanceSpec extends AnyFunSuite {
     (0 until 10).map(i => (i.toLong, "new")).toDF("id", "tag")
       .write.format("graft").mode("overwrite").save(d)
     val ex = intercept[IllegalStateException] {
-      val r = scan.createReaderFactory().createReader(parts.head)
+      val r = scan.createReaderFactory().createColumnarReader(parts.head)
       try while (r.next()) r.get()
       finally r.close()
     }
