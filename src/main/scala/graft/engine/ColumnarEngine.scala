@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.codecs._
 import graft.core.BlockWriter
+import org.apache.spark.sql.catalyst.InternalRow
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Input row after the derive stage: the five source columns plus the
@@ -306,15 +307,18 @@ object ColumnarEngine {
     e.finish()
   }
 
-  /** Push-style single-partition encoder: `add`/`addRow` rows (chunks
-    * flush at the same thresholds as the pull path), `finish` commits the
-    * container + manifest atomically. Shared by the `mapPartitions`
-    * encode job and the `graft` DataSource V2 writer, so neither buffers
-    * more than one chunk beyond the flush thresholds.
+  /** Push-style single-partition encoder: one typed put per live column
+    * (`putLong`/`putString`/`putBinary`/`putFloats`/`putNull`, addressed
+    * by column index), then `endRow()`; chunks flush at the same
+    * thresholds as the pull path, and `finish` commits the container +
+    * manifest atomically. Shared by the `mapPartitions` encode job, the
+    * `graft` DataSource V2 writer and the maintenance rewrites, so none
+    * buffers more than one chunk beyond the flush thresholds.
     *
-    * `schema` may be ANY mix of long/string columns
+    * `schema` may hold any [[ColumnSpec]] kinds
     * ([[ColumnarEngine.DefaultSchema]] = the engine's [[DerivedRow]]
-    * shape): buffering is columnar, the chunk digest covers
+    * shape): buffering is columnar, one buffer per live column whose
+    * stored form its kind fixes here, once. The chunk digest covers
     * [[ColumnarEngine.digestColumnOf]] (all-zero when the schema has no
     * string column), and the manifest records the schema + digest column
     * so readers infer both.
@@ -325,51 +329,26 @@ object ColumnarEngine {
       partName: String = null,
       chunkRowsCap: Int = ChunkRows,
       schema: Seq[ColumnSpec] = DefaultSchema) {
+    import PartitionEncoder._
     require(chunkRowsCap >= 1, s"chunkRowsCap must be >= 1: $chunkRowsCap")
     require(schema.nonEmpty && schema.map(_.name).distinct.size == schema.size,
       s"schema must be non-empty with distinct names: $schema")
     /** Block-file suffix; epoch-qualified for DSv2 writes (append-safe). */
     val name: String = if (partName == null) part.toString else partName
-    /** Positional contract of [[addRow]]: string columns in schema order,
-      * then NUMERIC columns (kind 0 longs and kind 2 ints, widened to
-      * Long) in schema order. Position-DROPPED columns (round 9) stay in
-      * the manifest's schema chain but hold no data: they have no lane.
+    /** The put index space: live columns in schema order. Position-DROPPED
+      * columns (round 9) stay in the manifest's schema chain but hold no
+      * data, so they take no puts.
       */
-    private val live: Seq[ColumnSpec] = schema.filterNot(_.dropped)
-    val strNames: Array[String] = live.filter(_.kind == 1).map(_.name).toArray
-    val longNames: Array[String] =
-      live.filter(s => s.kind != 1 && s.kind != 6 && s.kind != 7)
-        .map(_.name).toArray
-    /** Kind-6 (binary) and kind-7 (float array) columns, each its own
-      * positional group of the extended [[addRow]] (round 7).
+    val columns: IndexedSeq[ColumnSpec] = schema.filterNot(_.dropped).toIndexedSeq
+    private val bufs: Array[ColumnBuffer] =
+      columns.map(ColumnBuffer(_, chunkRowsCap)).toArray
+    /** Block order inside a chunk: numeric columns, then strings,
+      * binaries and float arrays, each group in schema order (stable sort).
       */
-    val binNames: Array[String] = live.filter(_.kind == 6).map(_.name).toArray
-    val fltNames: Array[String] = live.filter(_.kind == 7).map(_.name).toArray
-    private val numKinds: Array[Int] =
-      live.filter(s => s.kind != 1 && s.kind != 6 && s.kind != 7)
-        .map(_.kind).toArray
-    // nullable columns (round 7): per-chunk validity bitmaps, allocated
-    // lazily on the first null; all-present chunks write the plain layout
-    private val strNullable: Array[Boolean] =
-      live.filter(_.kind == 1).map(_.nullable).toArray
-    private val longNullable: Array[Boolean] =
-      live.filter(s => s.kind != 1 && s.kind != 6 && s.kind != 7)
-        .map(_.nullable).toArray
-    private val binNullable: Array[Boolean] =
-      live.filter(_.kind == 6).map(_.nullable).toArray
-    private val fltNullable: Array[Boolean] =
-      live.filter(_.kind == 7).map(_.nullable).toArray
+    private val blockOrder: Array[Int] = bufs.indices.sortBy(bufs(_).group).toArray
     private val bmBytes = (chunkRowsCap + 7) >> 3
-    private val strNullBms: Array[Array[Byte]] = new Array(strNames.length)
-    private val longNullBms: Array[Array[Byte]] = new Array(longNames.length)
-    private val binNullBms: Array[Array[Byte]] = new Array(binNames.length)
-    private val fltNullBms: Array[Array[Byte]] = new Array(fltNames.length)
-    private val strNullCnt = new Array[Int](strNames.length)
-    private val longNullCnt = new Array[Int](longNames.length)
-    private val binNullCnt = new Array[Int](binNames.length)
-    private val fltNullCnt = new Array[Int](fltNames.length)
     private val digestCol = digestColumnOf(schema)
-    private val digestIdx = strNames.indexOf(digestCol)
+    private val digestIdx = columns.indexWhere(_.name == digestCol)
     private val w = new BlockWriter(1 << 20)
     w.putBytes(Magic)
     w.putVarint(part.toLong)
@@ -383,19 +362,11 @@ object ColumnarEngine {
     private var chunks = 0
     private var rawTotal = 0L
 
-    // columnar chunk buffers (round 4 buffered row OBJECTS; columnar
-    // buffers serve any schema and feed the codecs without per-column
-    // re-extraction)
+    // rows buffered in the current chunk, the value bytes they hold, and
+    // the puts made into the row being built
     private var bufN = 0
-    private val strBufs = Array.fill(strNames.length)(
-      new scala.collection.mutable.ArrayBuffer[String](1024))
-    private val binBufs = Array.fill(binNames.length)(
-      new scala.collection.mutable.ArrayBuffer[Array[Byte]](1024))
-    private val fltBufs = Array.fill(fltNames.length)(
-      new scala.collection.mutable.ArrayBuffer[Array[Float]](1024))
-    private var longCap = math.min(chunkRowsCap, 1024)
-    private var longBufs = Array.fill(longNames.length)(new Array[Long](longCap))
     private var bufBytes = 0L
+    private var rowPuts = 0
     // FSST training amortized across this partition's chunks, per column
     private val fsstStates = new java.util.HashMap[String, StringCodecs.FsstState]()
 
@@ -414,15 +385,14 @@ object ColumnarEngine {
       // NULL chunk pruning — see [[graft.engine.ChunkStats]])
       var chunkNullCounts = Map.empty[String, Int]
       w.putVarint(n.toLong)
-      w.putVarint((longNames.length + strNames.length +
-        binNames.length + fltNames.length).toLong)
+      w.putVarint(bufs.length.toLong)
       // per-row digest-column sha256 -> chunk digest (all-zero when the
       // schema has no string column: block CRCs still cover every block)
       val digest =
         if (digestIdx < 0) new Array[Byte](32)
         else {
           val chunkSha = java.security.MessageDigest.getInstance("SHA-256")
-          val vals = strBufs(digestIdx)
+          val vals = bufs(digestIdx).asInstanceOf[StrBuffer].vals
           var i = 0
           while (i < n) {
             sha.reset()
@@ -472,121 +442,99 @@ object ColumnarEngine {
         codecByCol.merge(name, codecName, (a, b) => if (a == b) a else s"$a+$b")
       }
 
-      var ci = 0
-      while (ci < longNames.length) {
-        val nm = longNames(ci)
-        val vals = longBufs(ci)
-        val nc = longNullCnt(ci)
-        val bm = if (nc > 0) longNullBms(ci) else null
-        if (nc > 0) {
-          // rewrite null slots with the chunk's first non-null value:
-          // compression-friendly (RLE/FoR see a repeated real value) AND
-          // it keeps codec stats/zone ranges exactly the non-null range —
-          // placeholder values can never widen min/max past real data, so
-          // zone-map pruning and manifest-answered MIN/MAX stay exact
-          var fill = 0L
-          var f = 0
-          var found = false
-          while (!found && f < n) {
-            if ((bm(f >> 3) & (1 << (f & 7))) == 0) { fill = vals(f); found = true }
-            f += 1
-          }
-          var r = 0
-          while (r < n) {
-            if ((bm(r >> 3) & (1 << (r & 7))) != 0) vals(r) = fill
-            r += 1
-          }
+      var k = 0
+      while (k < blockOrder.length) {
+        val b = bufs(blockOrder(k))
+        val nm = b.spec.name
+        val kind = b.spec.kind
+        val nc = b.nullCount
+        val bm = if (nc > 0) b.nulls else null
+        val nullCount = if (b.spec.nullable) nc else -1
+        b match {
+          case l: LongBuffer =>
+            val vals = l.vals
+            if (nc > 0) {
+              // rewrite null slots with the chunk's first non-null value:
+              // compression-friendly (RLE/FoR see a repeated real value)
+              // AND it keeps codec stats/zone ranges exactly the non-null
+              // range — placeholder values can never widen min/max past
+              // real data, so zone-map pruning and manifest-answered
+              // MIN/MAX stay exact
+              var fill = 0L
+              var f = 0
+              var found = false
+              while (!found && f < n) {
+                if ((bm(f >> 3) & (1 << (f & 7))) == 0) { fill = vals(f); found = true }
+                f += 1
+              }
+              var r = 0
+              while (r < n) {
+                if ((bm(r >> 3) & (1 << (r & 7))) != 0) vals(r) = fill
+                r += 1
+              }
+            }
+            // an all-null chunk has no real values: record no range at all
+            val hasRange = nc < n
+            val st = LongCodecs.stats(vals, n)
+            if (l.narrow)
+              // narrow i32 column (int / date days / float sortable bits):
+              // zigzag-varint block behind the overflow-checked narrow
+              // decode ([[graft.codecs.IntCodecs]]); the block carries its
+              // true kind
+              writeCol(nm, kind, IntCodecs.encode(vals, n), "varint-i32",
+                4L * n, st.min, st.max, hasRange, bm, nullCount)
+            else {
+              // wide int64 column (long / timestamp micros / double
+              // sortable bits / decimal unscaled / boolean 0-1):
+              // stats-selected codec through the kind-0 machinery
+              // (booleans bit-pack to ~1 bit)
+              val codec = LongCodecs.select(st)
+              writeCol(nm, kind, codec.encode(vals, n), codec.name,
+                8L * n, st.min, st.max, hasRange, bm, nullCount)
+            }
+          case s: StrBuffer =>
+            val strs = new Array[String](n)
+            s.vals.copyToArray(strs, 0, n)
+            val st = StringCodecs.stats(strs, n)
+            val (codec, block) = StringCodecs.encodeBest(strs, n, st,
+              fsstStates.computeIfAbsent(nm, _ => new StringCodecs.FsstState))
+            // null rows hold the "" placeholder in the block (the digest
+            // and string zone stats include it — "" can only widen a
+            // dict/range, never exclude a real value, so pruning stays
+            // sound)
+            writeCol(nm, kind, block, codec.name, st.totalBytes,
+              nullBm = bm, nullCount = nullCount)
+            val (dict, range) = strZoneStats(strs, n)
+            dict.foreach(d => chunkStrDicts = chunkStrDicts.updated(nm, d))
+            range.foreach(r => chunkStrRanges = chunkStrRanges.updated(nm, r))
+          case bb: BinBuffer =>
+            // raw length-prefixed payloads — no zone stats (blob
+            // equality/range pruning has no sound proof shape here)
+            val vals = new Array[Array[Byte]](n)
+            bb.vals.copyToArray(vals, 0, n)
+            var raw = 0L
+            var i = 0
+            while (i < n) { raw += vals(i).length; i += 1 }
+            writeCol(nm, kind, BytesCodecs.encodeBinary(vals, n), "bin-raw", raw,
+              nullBm = bm, nullCount = nullCount)
+          case f: FltBuffer =>
+            // packed little-endian IEEE-754
+            val vals = new Array[Array[Float]](n)
+            f.vals.copyToArray(vals, 0, n)
+            var raw = 0L
+            var i = 0
+            while (i < n) { raw += 4L * vals(i).length; i += 1 }
+            writeCol(nm, kind, BytesCodecs.encodeFloats(vals, n), "f32-raw", raw,
+              nullBm = bm, nullCount = nullCount)
         }
-        // an all-null chunk has no real values: record no range at all
-        val hasRange = nc < n
-        if (numKinds(ci) == 2 || numKinds(ci) == 4 || numKinds(ci) == 10) {
-          // narrow i32 column (int / date days / float sortable bits):
-          // zigzag-varint block behind the overflow-checked narrow decode
-          // ([[graft.codecs.IntCodecs]]); the block carries its true kind
-          val st = LongCodecs.stats(vals, n)
-          writeCol(nm, numKinds(ci), IntCodecs.encode(vals, n), "varint-i32",
-            4L * n, st.min, st.max, hasRange = hasRange, nullBm = bm,
-            nullCount = if (longNullable(ci)) nc else -1)
-        } else {
-          // wide int64 column (long / timestamp micros / double sortable
-          // bits / decimal unscaled / boolean 0-1): stats-selected codec
-          // through the kind-0 machinery (booleans bit-pack to ~1 bit)
-          val st = LongCodecs.stats(vals, n)
-          val codec = LongCodecs.select(st)
-          writeCol(nm, numKinds(ci), codec.encode(vals, n), codec.name,
-            8L * n, st.min, st.max, hasRange = hasRange, nullBm = bm,
-            nullCount = if (longNullable(ci)) nc else -1)
-        }
-        ci += 1
-      }
-      val strs = new Array[String](n)
-      ci = 0
-      while (ci < strNames.length) {
-        val nm = strNames(ci)
-        strBufs(ci).copyToArray(strs, 0, n)
-        val st = StringCodecs.stats(strs, n)
-        val (codec, block) = StringCodecs.encodeBest(strs, n, st,
-          fsstStates.computeIfAbsent(nm, _ => new StringCodecs.FsstState))
-        // null rows hold the "" placeholder in the block (the digest and
-        // string zone stats include it — "" can only widen a dict/range,
-        // never exclude a real value, so pruning stays sound)
-        writeCol(nm, 1, block, codec.name, st.totalBytes,
-          nullBm = if (strNullCnt(ci) > 0) strNullBms(ci) else null,
-          nullCount = if (strNullable(ci)) strNullCnt(ci) else -1)
-        val (dict, range) = strZoneStats(strs, n)
-        dict.foreach(d => chunkStrDicts = chunkStrDicts.updated(nm, d))
-        range.foreach(r => chunkStrRanges = chunkStrRanges.updated(nm, r))
-        ci += 1
-      }
-      // kind 6 (binary): raw length-prefixed payloads — no zone stats
-      // (blob equality/range pruning has no sound proof shape here)
-      ci = 0
-      while (ci < binNames.length) {
-        val vals = new Array[Array[Byte]](n)
-        binBufs(ci).copyToArray(vals, 0, n)
-        var raw = 0L
-        var i = 0
-        while (i < n) { raw += vals(i).length; i += 1 }
-        writeCol(binNames(ci), 6, graft.codecs.BytesCodecs.encodeBinary(vals, n),
-          "bin-raw", raw,
-          nullBm = if (binNullCnt(ci) > 0) binNullBms(ci) else null,
-          nullCount = if (binNullable(ci)) binNullCnt(ci) else -1)
-        ci += 1
-      }
-      // kind 7 (float array): packed little-endian IEEE-754
-      ci = 0
-      while (ci < fltNames.length) {
-        val vals = new Array[Array[Float]](n)
-        fltBufs(ci).copyToArray(vals, 0, n)
-        var raw = 0L
-        var i = 0
-        while (i < n) { raw += 4L * vals(i).length; i += 1 }
-        writeCol(fltNames(ci), 7, graft.codecs.BytesCodecs.encodeFloats(vals, n),
-          "f32-raw", raw,
-          nullBm = if (fltNullCnt(ci) > 0) fltNullBms(ci) else null,
-          nullCount = if (fltNullable(ci)) fltNullCnt(ci) else -1)
-        ci += 1
+        b.clear()
+        k += 1
       }
       w.putBytes(digest)
       partDigest.update(digest)
       chunkIndex += ChunkStats(chunkStart, w.size.toLong - chunkStart, n,
         chunkLongRanges, chunkStrDicts, chunkStrRanges, chunkCrcs,
         chunkNullCounts)
-      strBufs.foreach(_.clear())
-      binBufs.foreach(_.clear())
-      fltBufs.foreach(_.clear())
-      def resetBms(bms: Array[Array[Byte]], cnts: Array[Int]): Unit = {
-        var z = 0
-        while (z < bms.length) {
-          if (cnts(z) > 0) java.util.Arrays.fill(bms(z), 0.toByte)
-          cnts(z) = 0
-          z += 1
-        }
-      }
-      resetBms(strNullBms, strNullCnt)
-      resetBms(longNullBms, longNullCnt)
-      resetBms(binNullBms, binNullCnt)
-      resetBms(fltNullBms, fltNullCnt)
       bufN = 0
       bufBytes = 0L
     }
@@ -632,150 +580,151 @@ object ColumnarEngine {
        if (rangeOk && i == n && min != null) Some((min, max)) else None)
     }
 
-    /** One row, positionally: `strs` in [[strNames]] order, `longs` in
-      * [[longNames]] order. Kind-5 (double) columns take the
-      * order-preserving sortable-long representation
-      * ([[graft.codecs.DoubleBits.toSortableLong]]).
-      */
-    def addRow(strVals: Array[String], longVals: Array[Long]): Unit =
-      addRow(strVals, longVals, null, null)
+    private def wrongLane(b: ColumnBuffer, lane: String): Nothing =
+      throw new IllegalArgumentException(
+        s"column '${b.spec.name}' (kind ${b.spec.kind}) takes no $lane put")
 
-    /** Nullable-aware variant: `strNullMask`/`longNullMask` flag NULL
-      * positions (either may be null = no nulls in that group). A flagged
-      * position must be a declared-nullable column; its value slot is
-      * ignored (placeholders are substituted internally). The masks are
-      * read synchronously — callers may reuse one array across rows.
+    /** An integer-stored value: the column's storage form (long, micros,
+      * sortable double/float bits, unscaled decimal, 0/1 boolean).
       */
-    def addRow(strVals: Array[String], longVals: Array[Long],
-               strNullMask: Array[Boolean], longNullMask: Array[Boolean]): Unit = {
-      require(binNames.isEmpty && fltNames.isEmpty,
-        "schema has binary/float-array columns: use the full addRow overload")
-      addRow(strVals, longVals, PartitionEncoder.NoBins, PartitionEncoder.NoFlts,
-        strNullMask, longNullMask, null, null)
+    def putLong(c: Int, v: Long): Unit = bufs(c) match {
+      case b: LongBuffer =>
+        require(!b.narrow || v == v.toInt.toLong,
+          s"value $v out of i32 range for narrow column '${b.spec.name}' " +
+            s"(partition $part)")
+        b.put(bufN, v)
+        rowPuts += 1
+      case b => wrongLane(b, "long")
     }
 
-    /** Full positional contract (round 7): strings, numerics (kinds
-      * 0/2/3/4/5 widened to Long), binaries (kind 6), float arrays
-      * (kind 7), each in schema order, with optional per-group null
-      * masks (see the 4-arg overload).
-      */
-    def addRow(strVals: Array[String], longVals: Array[Long],
-               binVals: Array[Array[Byte]], fltVals: Array[Array[Float]],
-               strNullMask: Array[Boolean], longNullMask: Array[Boolean],
-               binNullMask: Array[Boolean], fltNullMask: Array[Boolean]): Unit = {
-      require(strVals.length == strNames.length && longVals.length == longNames.length &&
-          binVals.length == binNames.length && fltVals.length == fltNames.length,
-        s"addRow arity (${strVals.length} strs, ${longVals.length} longs, " +
-          s"${binVals.length} bins, ${fltVals.length} flts) != schema " +
-          s"(${strNames.length} strs, ${longNames.length} longs, " +
-          s"${binNames.length} bins, ${fltNames.length} flts)")
-      var bytes = 0L
-      var i = 0
-      while (i < strVals.length) {
-        if (strNullMask != null && strNullMask(i)) {
-          require(strNullable(i),
-            s"null value in non-nullable column '${strNames(i)}' (partition $part)")
-        } else {
-          val v = strVals(i)
-          require(v != null, s"null value in column '${strNames(i)}' (partition $part)")
-          require(v.length <= MaxValueChars,
-            s"string value exceeds MaxValueChars ($MaxValueChars) in column " +
-              s"'${strNames(i)}' of partition $part")
-          bytes += v.length
-        }
-        i += 1
-      }
-      if (bufN == longCap && longNames.length > 0) {
-        longCap = math.min(chunkRowsCap.toLong.max(1L), longCap * 2L).toInt
-        longBufs = longBufs.map(java.util.Arrays.copyOf(_, longCap))
-      }
-      var j = 0
-      while (j < longVals.length) {
-        if (longNullMask != null && longNullMask(j)) {
-          require(longNullable(j),
-            s"null value in non-nullable column '${longNames(j)}' (partition $part)")
-          var bm = longNullBms(j)
-          if (bm == null) { bm = new Array[Byte](bmBytes); longNullBms(j) = bm }
-          bm(bufN >> 3) = (bm(bufN >> 3) | (1 << (bufN & 7))).toByte
-          longNullCnt(j) += 1
-          longBufs(j)(bufN) = 0L // placeholder; flushChunk re-fills
-        } else {
-          require((numKinds(j) != 2 && numKinds(j) != 4 && numKinds(j) != 10) ||
-              longVals(j) == longVals(j).toInt.toLong,
-            s"value ${longVals(j)} out of i32 range for narrow column " +
-              s"'${longNames(j)}' (partition $part)")
-          longBufs(j)(bufN) = longVals(j)
-        }
-        j += 1
-      }
-      i = 0
-      while (i < strVals.length) {
-        if (strNullMask != null && strNullMask(i)) {
-          var bm = strNullBms(i)
-          if (bm == null) { bm = new Array[Byte](bmBytes); strNullBms(i) = bm }
-          bm(bufN >> 3) = (bm(bufN >> 3) | (1 << (bufN & 7))).toByte
-          strNullCnt(i) += 1
-          strBufs(i) += "" // placeholder (digest + zone stats include it)
-        } else strBufs(i) += strVals(i)
-        i += 1
-      }
-      i = 0
-      while (i < binVals.length) {
-        if (binNullMask != null && binNullMask(i)) {
-          require(binNullable(i),
-            s"null value in non-nullable column '${binNames(i)}' (partition $part)")
-          var bm = binNullBms(i)
-          if (bm == null) { bm = new Array[Byte](bmBytes); binNullBms(i) = bm }
-          bm(bufN >> 3) = (bm(bufN >> 3) | (1 << (bufN & 7))).toByte
-          binNullCnt(i) += 1
-          binBufs(i) += PartitionEncoder.EmptyBytes
-        } else {
-          val v = binVals(i)
-          require(v != null, s"null value in column '${binNames(i)}' (partition $part)")
-          require(v.length <= graft.codecs.BytesCodecs.MaxBinaryBytes,
-            s"binary value exceeds MaxBinaryBytes in column '${binNames(i)}'")
-          bytes += v.length
-          binBufs(i) += v
-        }
-        i += 1
-      }
-      i = 0
-      while (i < fltVals.length) {
-        if (fltNullMask != null && fltNullMask(i)) {
-          require(fltNullable(i),
-            s"null value in non-nullable column '${fltNames(i)}' (partition $part)")
-          var bm = fltNullBms(i)
-          if (bm == null) { bm = new Array[Byte](bmBytes); fltNullBms(i) = bm }
-          bm(bufN >> 3) = (bm(bufN >> 3) | (1 << (bufN & 7))).toByte
-          fltNullCnt(i) += 1
-          fltBufs(i) += PartitionEncoder.EmptyFloats
-        } else {
-          val v = fltVals(i)
-          require(v != null, s"null value in column '${fltNames(i)}' (partition $part)")
-          require(v.length <= graft.codecs.BytesCodecs.MaxFloatDim,
-            s"float array exceeds MaxFloatDim in column '${fltNames(i)}'")
-          bytes += 4L * v.length
-          fltBufs(i) += v
-        }
-        i += 1
-      }
+    /** A string value; `null` is [[putNull]]. */
+    def putString(c: Int, v: String): Unit = bufs(c) match {
+      case _ if v == null => putNull(c)
+      case b: StrBuffer =>
+        require(v.length <= MaxValueChars,
+          s"string value exceeds MaxValueChars ($MaxValueChars) in column " +
+            s"'${b.spec.name}' of partition $part")
+        b.vals += v
+        // ALL string bytes count toward the flush threshold (not just
+        // content): that is what bounds every encoded block under
+        // [[ContainerFormat.MaxBlockBytes]] (256 MiB — sized for the 3x
+        // worst-case UTF-8 expansion of a chunk's chars) on wide tables
+        bufBytes += v.length
+        rowPuts += 1
+      case b => wrongLane(b, "string")
+    }
+
+    /** A binary value; `null` is [[putNull]]. */
+    def putBinary(c: Int, v: Array[Byte]): Unit = bufs(c) match {
+      case _ if v == null => putNull(c)
+      case b: BinBuffer =>
+        require(v.length <= BytesCodecs.MaxBinaryBytes,
+          s"binary value exceeds MaxBinaryBytes in column '${b.spec.name}'")
+        b.vals += v
+        bufBytes += v.length
+        rowPuts += 1
+      case b => wrongLane(b, "binary")
+    }
+
+    /** A float-array value; `null` is [[putNull]]. */
+    def putFloats(c: Int, v: Array[Float]): Unit = bufs(c) match {
+      case _ if v == null => putNull(c)
+      case b: FltBuffer =>
+        require(v.length <= BytesCodecs.MaxFloatDim,
+          s"float array exceeds MaxFloatDim in column '${b.spec.name}'")
+        b.vals += v
+        bufBytes += 4L * v.length
+        rowPuts += 1
+      case b => wrongLane(b, "float-array")
+    }
+
+    /** NULL in column `c`, which must be declared nullable. */
+    def putNull(c: Int): Unit = {
+      val b = bufs(c)
+      require(b.spec.nullable,
+        s"null value in non-nullable column '${b.spec.name}' (partition $part)")
+      b.putNull(bufN, bmBytes)
+      rowPuts += 1
+    }
+
+    /** Close the row: every live column took exactly one put. */
+    def endRow(): Unit = {
+      require(rowPuts == bufs.length,
+        s"row has $rowPuts puts for ${bufs.length} columns (partition $part)")
+      rowPuts = 0
       bufN += 1
-      // ALL string bytes count toward the flush threshold (not just
-      // content): that is what bounds every encoded block under
-      // [[ContainerFormat.MaxBlockBytes]] (256 MiB — sized for the 3x
-      // worst-case UTF-8 expansion of a chunk's chars) on wide-path tables
-      bufBytes += bytes
       if (bufN >= chunkRowsCap || bufBytes >= ChunkContentBytes) flushChunk()
     }
 
+    /** The one Spark-value -> stored-value conversion: field `c` of `row`,
+      * in Spark's internal representation of live column `c`'s type —
+      * sortable-long bits for doubles, sortable-int bits for floats, the
+      * unscaled long for decimals, 0/1 for booleans. A float array may
+      * hold no null element (the stored shape is a dense vector; a null
+      * would silently decode as 0.0f).
+      */
+    def putField(c: Int, row: InternalRow): Unit =
+      if (row.isNullAt(c)) putNull(c)
+      else {
+        val s = bufs(c).spec
+        s.kind match {
+          case 0 | 3 => putLong(c, row.getLong(c))
+          case 2 | 4 => putLong(c, row.getInt(c).toLong)
+          case 5 => putLong(c, DoubleBits.toSortableLong(row.getDouble(c)))
+          case 8 => putLong(c, row.getDecimal(c, s.precision, s.scale).toUnscaledLong)
+          case 9 => putLong(c, if (row.getBoolean(c)) 1L else 0L)
+          case 10 => putLong(c, FloatBits.toSortableInt(row.getFloat(c)).toLong)
+          case 1 => putString(c, row.getUTF8String(c).toString)
+          case 6 => putBinary(c, row.getBinary(c))
+          case 7 =>
+            val a = row.getArray(c)
+            var e = 0
+            while (e < a.numElements()) {
+              if (a.isNullAt(e)) throw new IllegalArgumentException(
+                s"null element in float array column '${s.name}' (partition $part)")
+              e += 1
+            }
+            putFloats(c, a.toFloatArray())
+        }
+      }
+
+    /** One row whose field i is live column i ([[putField]] each), closed. */
+    def putRow(row: InternalRow): Unit = {
+      var c = 0
+      while (c < bufs.length) { putField(c, row); c += 1 }
+      endRow()
+    }
+
+    /** The inverse of the container decode ([[ContainerFormat.readChunk]]):
+      * row `j` of a decoded column back into column `c`'s stored form
+      * (bijective on stored values: the writer already canonicalized NaN).
+      */
+    def putDecoded(c: Int, d: DecodedColumn, j: Int): Unit =
+      if (!d.validAt(j)) putNull(c)
+      else d.lane match {
+        case Lane.Longs => putLong(c, d.longs(j))
+        // booleans decode to 0/1 ints, floats to their sortable-int bits
+        case Lane.Ints => putLong(c, d.ints(j).toLong)
+        case Lane.Doubles => putLong(c, DoubleBits.toSortableLong(d.doubles(j)))
+        case Lane.Bytes =>
+          val u = d.bytes
+          if (bufs(c).spec.kind == 1) putString(c, u.string(j))
+          else putBinary(c, java.util.Arrays.copyOfRange(
+            u.pool, u.offsets(j), u.offsets(j) + u.lens(j)))
+        case Lane.Floats => putFloats(c, d.floats.slice(j))
+      }
+
     /** [[DerivedRow]] convenience for the engine encode job; valid only
-      * with the default schema (the positional mapping below IS
+      * with the default schema (the column indices below ARE
       * [[DefaultSchema]]'s order).
       */
-    def add(r: DerivedRow): Unit = addRow(
-      Array(r.repo, r.path, r.commit, r.lang, r.content),
-      Array(r.len_content, r.hash64, r.commit_ord,
-        r.repo_code, r.lang_code, r.path_code))
+    def add(r: DerivedRow): Unit = {
+      putString(0, r.repo); putString(1, r.path); putString(2, r.commit)
+      putString(3, r.lang); putString(4, r.content)
+      putLong(5, r.len_content); putLong(6, r.hash64); putLong(7, r.commit_ord)
+      putLong(8, r.repo_code); putLong(9, r.lang_code); putLong(10, r.path_code)
+      endRow()
+    }
 
     def finish(): PartManifest = finish(publishManifest = true)
 
@@ -817,10 +766,70 @@ object ColumnarEngine {
   }
 
   private[graft] object PartitionEncoder {
-    val NoBins = new Array[Array[Byte]](0)
-    val NoFlts = new Array[Array[Float]](0)
-    val EmptyBytes = new Array[Byte](0)
-    val EmptyFloats = new Array[Float](0)
+    private val EmptyBytes = new Array[Byte](0)
+    private val EmptyFloats = new Array[Float](0)
+
+    /** One live column's chunk buffer; its class is the column's stored
+      * form. A NULL row sets a bit in the lazily allocated validity
+      * bitmap and buffers a placeholder.
+      */
+    private sealed abstract class ColumnBuffer(val spec: ColumnSpec) {
+      /** Block group: 0 numeric, 1 string, 2 binary, 3 float array. */
+      def group: Int
+      var nulls: Array[Byte] = null
+      var nullCount = 0
+      protected def putPlaceholder(r: Int): Unit
+      final def putNull(r: Int, bmBytes: Int): Unit = {
+        if (nulls == null) nulls = new Array[Byte](bmBytes)
+        nulls(r >> 3) = (nulls(r >> 3) | (1 << (r & 7))).toByte
+        nullCount += 1
+        putPlaceholder(r)
+      }
+      def clear(): Unit = {
+        if (nullCount > 0) java.util.Arrays.fill(nulls, 0.toByte)
+        nullCount = 0
+      }
+    }
+
+    private object ColumnBuffer {
+      def apply(s: ColumnSpec, chunkRowsCap: Int): ColumnBuffer = s.kind match {
+        case 1 => new StrBuffer(s)
+        case 6 => new BinBuffer(s)
+        case 7 => new FltBuffer(s)
+        case _ => new LongBuffer(s, chunkRowsCap)
+      }
+    }
+
+    /** Integer-stored kinds: wide int64 (0/3/5/8/9) or narrow i32
+      * (2/4/10). Grows by doubling up to the chunk row cap.
+      */
+    private final class LongBuffer(spec: ColumnSpec, maxRows: Int)
+        extends ColumnBuffer(spec) {
+      def group = 0
+      val narrow: Boolean = spec.kind == 2 || spec.kind == 4 || spec.kind == 10
+      var vals = new Array[Long](math.min(maxRows, 1024))
+      def put(r: Int, v: Long): Unit = {
+        if (r == vals.length)
+          vals = java.util.Arrays.copyOf(vals, math.min(maxRows.toLong, 2L * r).toInt)
+        vals(r) = v
+      }
+      // flushChunk re-fills null slots with a real value
+      protected def putPlaceholder(r: Int): Unit = put(r, 0L)
+    }
+
+    private sealed abstract class RefBuffer[T <: AnyRef](spec: ColumnSpec, placeholder: T)
+        extends ColumnBuffer(spec) {
+      val vals = new scala.collection.mutable.ArrayBuffer[T](1024)
+      protected def putPlaceholder(r: Int): Unit = vals += placeholder
+      override def clear(): Unit = { super.clear(); vals.clear() }
+    }
+    // the "" placeholder is part of the digest and string zone stats
+    private final class StrBuffer(spec: ColumnSpec)
+        extends RefBuffer[String](spec, "") { def group = 1 }
+    private final class BinBuffer(spec: ColumnSpec)
+        extends RefBuffer[Array[Byte]](spec, EmptyBytes) { def group = 2 }
+    private final class FltBuffer(spec: ColumnSpec)
+        extends RefBuffer[Array[Float]](spec, EmptyFloats) { def group = 3 }
   }
 
   /** Manifests as a DataFrame (metrics/lineage query surface). */

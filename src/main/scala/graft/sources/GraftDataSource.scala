@@ -42,14 +42,14 @@ import graft.engine.{ChunkStats, ColumnarEngine, ColumnSpec, ContainerFormat, Co
   * index, so a failed or killed job never exposes a partial table and an
   * overwrite destroys the old data only after the new table is live.
   *
-  * Schema: ANY mix of BIGINT/INT/STRING (round 5), TIMESTAMP_NTZ/DATE
-  * (round 6), and DOUBLE/BINARY/ARRAY<FLOAT> (round 7) columns, each
-  * independently nullable. A first write defines the table's schema;
-  * reads infer it from the committed manifests (the widest, under the
-  * add-only-evolution prefix rule); appends must match it or extend it
-  * with trailing nullable columns. The engine's own source-code shape
-  * ([[graft.engine.DerivedRow]]) is simply the default for tables that
-  * don't exist yet.
+  * Schema: any mix of the kinds `specsOf` accepts (BIGINT, INT, STRING,
+  * TIMESTAMP_NTZ, DATE, DOUBLE, FLOAT, BINARY, ARRAY<FLOAT>,
+  * DECIMAL(<=18), BOOLEAN), each independently nullable. A first write
+  * defines the table's schema; reads infer it from the committed
+  * manifests (the widest, under the add-only-evolution prefix rule);
+  * appends must match it or extend it with trailing nullable columns.
+  * The engine's own source-code shape ([[graft.engine.DerivedRow]]) is
+  * simply the default for tables that don't exist yet.
   */
 class GraftDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft"
@@ -2031,15 +2031,14 @@ class GraftWriteBuilder(path: String, info: LogicalWriteInfo)
 
   override def build(): Write = {
     val in0 = info.schema()
-    // any mix of BIGINT/INT/STRING/TIMESTAMP_NTZ/DATE/DOUBLE columns is
-    // writable (specsOf validates); a first write defines the table's
-    // schema, an APPEND must match the committed one on (name, kind) in
-    // order, and an overwrite may replace it. NULLABILITY is the
-    // table's, not the incoming DataFrame's: Spark schemas routinely
-    // carry nullable=true for columns that hold no nulls (every toDF
-    // string field does), so appends adopt the committed nullability —
-    // an actual null aimed at a non-nullable table column still fails
-    // per value in the writer, exactly as before
+    // any schema of the kinds specsOf accepts is writable (specsOf
+    // validates); a first write defines the table's schema, an APPEND
+    // must match the committed one on (name, kind) in order, and an
+    // overwrite may replace it. NULLABILITY is the table's, not the
+    // incoming DataFrame's: Spark schemas routinely carry nullable=true
+    // for columns that hold no nulls (every toDF string field does), so
+    // appends adopt the committed nullability — an actual null aimed at
+    // a non-nullable table column still fails per value in the encoder
     val specs0 = GraftDataSource.specsOf(in0)
     val in =
       if (doTruncate) in0
@@ -2132,10 +2131,10 @@ class GraftWriteBuilder(path: String, info: LogicalWriteInfo)
   */
 class GraftWrite(path: String, truncate: Boolean, epoch: String,
                  chunkRows: Int, writeSchema: StructType,
-                 sortBy: Seq[String] = Nil,
-                 partBy: Seq[GraftDataSource.PartTransform] = Nil,
-                 writeParts: Int = 0,
-                 fullCols: Seq[(String, Int)] = Nil)
+                 sortBy: Seq[String],
+                 partBy: Seq[GraftDataSource.PartTransform],
+                 writeParts: Int,
+                 fullCols: Seq[(String, Int)])
     extends Write
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
   import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -2389,9 +2388,9 @@ private[sources] object GraftCommits {
   */
 class GraftBatchWrite(path: String, truncate: Boolean, epoch: String,
                       confKv: Map[String, String], chunkRows: Int,
-                      writeSchema: StructType = GraftDataSource.schema,
-                      partBy: Seq[GraftDataSource.PartTransform] = Nil,
-                      fullCols: Seq[(String, Int)] = Nil)
+                      writeSchema: StructType,
+                      partBy: Seq[GraftDataSource.PartTransform],
+                      fullCols: Seq[(String, Int)])
     extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new GraftWriterFactory(path, epoch, confKv, chunkRows, writeSchema, partBy,
@@ -2409,9 +2408,9 @@ class GraftBatchWrite(path: String, truncate: Boolean, epoch: String,
   */
 class GraftStreamingWrite(path: String, queryEpoch: String,
                           confKv: Map[String, String], chunkRows: Int,
-                          writeSchema: StructType = GraftDataSource.schema,
-                          partBy: Seq[GraftDataSource.PartTransform] = Nil,
-                          fullCols: Seq[(String, Int)] = Nil)
+                          writeSchema: StructType,
+                          partBy: Seq[GraftDataSource.PartTransform],
+                          fullCols: Seq[(String, Int)])
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
@@ -2431,9 +2430,9 @@ class GraftStreamingWrite(path: String, queryEpoch: String,
 
 class GraftStreamingWriterFactory(path: String, queryEpoch: String,
                                   confKv: Map[String, String], chunkRows: Int,
-                                  writeSchema: StructType = GraftDataSource.schema,
-                                  partBy: Seq[GraftDataSource.PartTransform] = Nil,
-                                  fullCols: Seq[(String, Int)] = Nil)
+                                  writeSchema: StructType,
+                                  partBy: Seq[GraftDataSource.PartTransform],
+                                  fullCols: Seq[(String, Int)])
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
@@ -2443,9 +2442,9 @@ class GraftStreamingWriterFactory(path: String, queryEpoch: String,
 
 class GraftWriterFactory(path: String, epoch: String,
                          confKv: Map[String, String], chunkRows: Int,
-                         writeSchema: StructType = GraftDataSource.schema,
-                         partBy: Seq[GraftDataSource.PartTransform] = Nil,
-                         fullCols: Seq[(String, Int)] = Nil)
+                         writeSchema: StructType,
+                         partBy: Seq[GraftDataSource.PartTransform],
+                         fullCols: Seq[(String, Int)])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftDataWriter(path, partitionId, epoch, confKv, chunkRows, taskId,
@@ -2470,99 +2469,33 @@ class GraftWriterFactory(path: String, epoch: String,
 class GraftDataWriter(path: String, part: Int, epoch: String,
                       confKv: Map[String, String], chunkRows: Int,
                       taskId: Long,
-                      writeSchema: StructType = GraftDataSource.schema,
-                      partBy: Seq[GraftDataSource.PartTransform] = Nil,
-                      fullCols: Seq[(String, Int)] = Nil)
+                      writeSchema: StructType,
+                      partBy: Seq[GraftDataSource.PartTransform],
+                      fullCols: Seq[(String, Int)])
     extends DataWriter[InternalRow] {
+  // field i of a written row is the encoder's live column i: fullCols
+  // (round 9, tables with dropped positions) is the manifest's positional
+  // chain incl. dropped placeholders, and its live columns are exactly
+  // the write schema's, in order
   private val enc = new ColumnarEngine.PartitionEncoder(
     part, path, ContainerIO.confFrom(confKv),
     partName = s"$epoch-$part-a$taskId", chunkRowsCap = chunkRows,
-    // fullCols (round 9, tables with dropped positions): the manifest's
-    // positional chain incl. dropped placeholders; its live columns are
-    // exactly the write schema's, in order
     schema = if (fullCols.isEmpty) GraftDataSource.specsOf(writeSchema)
       else fullCols.map { case (n, k) =>
         graft.engine.ColumnSpec.fromPacked(n, k) })
-  // row positions of the string/numeric fields, in the encoder's
-  // (strNames, longNames) order — both preserve writeSchema field order;
-  // narrow (INT/DATE) fields ride the numeric array widened to Long (the
-  // encoder writes them as kind-2/4 narrow blocks); TIMESTAMP_NTZ is
-  // already a micros long in the InternalRow
-  private def isNumeric(dt: DataType): Boolean =
-    dt != StringType && dt != BinaryType && !dt.isInstanceOf[ArrayType]
-  private def isNarrow(dt: DataType): Boolean =
-    dt == IntegerType || dt == DateType
-  private val strPos: Array[Int] = writeSchema.fields.zipWithIndex
-    .collect { case (f, i) if f.dataType == StringType => i }
-  private val binPos: Array[Int] = writeSchema.fields.zipWithIndex
-    .collect { case (f, i) if f.dataType == BinaryType => i }
-  private val fltPos: Array[Int] = writeSchema.fields.zipWithIndex
-    .collect { case (f, i) if f.dataType.isInstanceOf[ArrayType] => i }
-  private val longPos: Array[Int] = writeSchema.fields.zipWithIndex
-    .collect { case (f, i) if isNumeric(f.dataType) => i }
-  private val longIsInt: Array[Boolean] = writeSchema.fields
-    .collect { case f if isNumeric(f.dataType) => isNarrow(f.dataType) }
-  private val longIsDbl: Array[Boolean] = writeSchema.fields
-    .collect { case f if isNumeric(f.dataType) => f.dataType == DoubleType }
-  // float scalar (kind 10): sortable-int bits ride the numeric lane
-  private val longIsF32: Array[Boolean] = writeSchema.fields
-    .collect { case f if isNumeric(f.dataType) => f.dataType == FloatType }
-  // decimal (kind 8): unscaled long; boolean (kind 9): 0/1
-  private val longDec: Array[DecimalType] = writeSchema.fields
-    .collect { case f if isNumeric(f.dataType) => f.dataType match {
-      case d: DecimalType => d
-      case _ => null
-    } }
-  private val longIsBool: Array[Boolean] = writeSchema.fields
-    .collect { case f if isNumeric(f.dataType) => f.dataType == BooleanType }
-  private val strNullable: Array[Boolean] = writeSchema.fields
-    .collect { case f if f.dataType == StringType => f.nullable }
-  private val longNullable: Array[Boolean] = writeSchema.fields
-    .collect { case f if isNumeric(f.dataType) => f.nullable }
-  private val binNullable: Array[Boolean] = writeSchema.fields
-    .collect { case f if f.dataType == BinaryType => f.nullable }
-  private val fltNullable: Array[Boolean] = writeSchema.fields
-    .collect { case f if f.dataType.isInstanceOf[ArrayType] => f.nullable }
-  private val fltElemNullable: Array[Boolean] = writeSchema.fields
-    .collect { case f if f.dataType.isInstanceOf[ArrayType] =>
-      f.dataType.asInstanceOf[ArrayType].containsNull }
-  // value/mask arrays reused across rows (the encoder copies synchronously);
-  // masks exist only when the schema declares any nullable column of that
-  // group, so non-nullable tables keep the round-6 fast path
-  private val strs = new Array[String](strPos.length)
-  private val longs = new Array[Long](longPos.length)
-  private val bins = new Array[Array[Byte]](binPos.length)
-  private val fltsArr = new Array[Array[Float]](fltPos.length)
-  private val strNulls: Array[Boolean] =
-    if (strNullable.exists(identity)) new Array[Boolean](strPos.length) else null
-  private val longNulls: Array[Boolean] =
-    if (longNullable.exists(identity)) new Array[Boolean](longPos.length) else null
-  private val binNulls: Array[Boolean] =
-    if (binNullable.exists(identity)) new Array[Boolean](binPos.length) else null
-  private val fltNulls: Array[Boolean] =
-    if (fltNullable.exists(identity)) new Array[Boolean](fltPos.length) else null
   private var n = 0L
 
   // bucket(n, col) transforms: observe each container's bucket-id set
   // (bounded by n entries) for manifest-recorded container elimination.
-  // lane: 0 = long, 1 = int, 2 = string (the hash must match the
-  // constant type admission will see)
-  private val bucketSpecs: Array[(Int, Int, Int)] = partBy.collect {
+  // The id hashes the column's lane value — the constant type admission
+  // will see
+  private val bucketSpecs: Array[(Int, Int, Lane)] = partBy.collect {
     case GraftDataSource.BucketT(bn, c) =>
       val pos = writeSchema.fieldNames.indexOf(c)
-      val lane = writeSchema.fields(pos).dataType match {
-        case LongType => 0
-        case IntegerType => 1
-        case _ => 2
-      }
-      (pos, bn, lane)
+      (pos, bn, Lane.of(enc.columns(pos).kind))
   }.toArray
   private val bucketSeen: Array[scala.collection.mutable.BitSet] =
     bucketSpecs.map(s => new scala.collection.mutable.BitSet(s._2))
-
-  private def nullError(i: Int): Nothing = throw new IllegalArgumentException(
-    s"graft write: null value in non-nullable column " +
-      s"'${writeSchema.fields(i).name}' (row ${n + 1} of task $part)")
 
   override def write(row: InternalRow): Unit = {
     var b = 0
@@ -2570,92 +2503,16 @@ class GraftDataWriter(path: String, part: Int, epoch: String,
       val (pos, bn, lane) = bucketSpecs(b)
       if (!row.isNullAt(pos)) {
         val id = lane match {
-          case 0 => GraftDataSource.bucketIdOfLong(row.getLong(pos), bn)
-          case 1 => GraftDataSource.bucketIdOfInt(row.getInt(pos), bn)
-          case _ => GraftDataSource.bucketIdOfString(
+          case Lane.Longs => GraftDataSource.bucketIdOfLong(row.getLong(pos), bn)
+          case Lane.Ints => GraftDataSource.bucketIdOfInt(row.getInt(pos), bn)
+          case _ => GraftDataSource.bucketIdOfString( // Lane.Bytes
             row.getUTF8String(pos).toString, bn)
         }
         bucketSeen(b) += id
       }
       b += 1
     }
-    var i = 0
-    while (i < strPos.length) {
-      if (row.isNullAt(strPos(i))) {
-        if (strNulls == null || !strNullable(i)) nullError(strPos(i))
-        strNulls(i) = true
-        strs(i) = null
-      } else {
-        if (strNulls != null) strNulls(i) = false
-        strs(i) = row.getUTF8String(strPos(i)).toString
-      }
-      i += 1
-    }
-    i = 0
-    while (i < longPos.length) {
-      if (row.isNullAt(longPos(i))) {
-        if (longNulls == null || !longNullable(i)) nullError(longPos(i))
-        longNulls(i) = true
-        longs(i) = 0L
-      } else {
-        if (longNulls != null) longNulls(i) = false
-        longs(i) =
-          if (longIsInt(i)) row.getInt(longPos(i)).toLong
-          else if (longIsDbl(i))
-            // kind 5: order-preserving sortable-long storage form
-            graft.codecs.DoubleBits.toSortableLong(row.getDouble(longPos(i)))
-          else if (longIsF32(i))
-            // kind 10: sortable-int bits, widened through the narrow path
-            graft.codecs.FloatBits.toSortableInt(row.getFloat(longPos(i))).toLong
-          else if (longDec(i) != null)
-            // kind 8: the unscaled long at the column's declared scale
-            row.getDecimal(longPos(i), longDec(i).precision, longDec(i).scale)
-              .toUnscaledLong
-          else if (longIsBool(i))
-            (if (row.getBoolean(longPos(i))) 1L else 0L) // kind 9
-          else row.getLong(longPos(i))
-      }
-      i += 1
-    }
-    i = 0
-    while (i < binPos.length) {
-      if (row.isNullAt(binPos(i))) {
-        if (binNulls == null || !binNullable(i)) nullError(binPos(i))
-        binNulls(i) = true
-        bins(i) = null
-      } else {
-        if (binNulls != null) binNulls(i) = false
-        bins(i) = row.getBinary(binPos(i))
-      }
-      i += 1
-    }
-    i = 0
-    while (i < fltPos.length) {
-      if (row.isNullAt(fltPos(i))) {
-        if (fltNulls == null || !fltNullable(i)) nullError(fltPos(i))
-        fltNulls(i) = true
-        fltsArr(i) = null
-      } else {
-        if (fltNulls != null) fltNulls(i) = false
-        val ad = row.getArray(fltPos(i))
-        // a null ELEMENT would silently decode as 0.0f downstream —
-        // reject loudly (the stored shape is a dense float vector)
-        if (fltElemNullable(i)) {
-          var e = 0
-          val m = ad.numElements()
-          while (e < m) {
-            if (ad.isNullAt(e)) throw new IllegalArgumentException(
-              s"graft write: null element in float array column " +
-                s"'${writeSchema.fields(fltPos(i)).name}' (row ${n + 1})")
-            e += 1
-          }
-        }
-        fltsArr(i) = ad.toFloatArray()
-      }
-      i += 1
-    }
-    enc.addRow(strs, longs, bins, fltsArr, strNulls, longNulls,
-      binNulls, fltNulls)
+    enc.putRow(row)
     n += 1
   }
 

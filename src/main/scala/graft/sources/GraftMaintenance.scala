@@ -905,27 +905,9 @@ object GraftMaintenance {
     val containerSpecs: Seq[ColumnSpec] =
       if (m.schemaCols.isEmpty) ColumnarEngine.DefaultSchema
       else m.schemaCols.map { case (n, k) => ColumnSpec.fromPacked(n, k) }
+    // the visible row's field i is the chain's live column i
     val enc = new ColumnarEngine.PartitionEncoder(bin, path, conf,
       partName = partName, schema = chainSpecs)
-    // visible-ordinal -> (lane, laneIdx, spec) routing over the CURRENT
-    // chain's live lanes (enc's own order)
-    val visSpecs = visPositions.map(chainSpecs)
-    val strIdx = scala.collection.mutable.Map.empty[String, Int]
-    enc.strNames.zipWithIndex.foreach { case (n, i) => strIdx(n) = i }
-    val longIdx = scala.collection.mutable.Map.empty[String, Int]
-    enc.longNames.zipWithIndex.foreach { case (n, i) => longIdx(n) = i }
-    val binIdx = scala.collection.mutable.Map.empty[String, Int]
-    enc.binNames.zipWithIndex.foreach { case (n, i) => binIdx(n) = i }
-    val fltIdx = scala.collection.mutable.Map.empty[String, Int]
-    enc.fltNames.zipWithIndex.foreach { case (n, i) => fltIdx(n) = i }
-    val strs = new Array[String](enc.strNames.length)
-    val longs = new Array[Long](enc.longNames.length)
-    val binsRow = new Array[Array[Byte]](enc.binNames.length)
-    val fltsRow = new Array[Array[Float]](enc.fltNames.length)
-    val strNulls = new Array[Boolean](enc.strNames.length)
-    val longNulls = new Array[Boolean](enc.longNames.length)
-    val binNulls = new Array[Boolean](enc.binNames.length)
-    val fltNulls = new Array[Boolean](enc.fltNames.length)
     // read EVERY live column of the container (full rewrite)
     val needed = Lane.ofSpecs(containerSpecs)
     val ancestors = Manifests.capAncestors(
@@ -958,58 +940,7 @@ object GraftMaintenance {
               row.update(ord, v)
             }
           }
-          // internal row -> encoder lanes, per kind (bijective on
-          // stored values; the writer already canonicalized NaN)
-          var v = 0
-          while (v < visSpecs.length) {
-            val s = visSpecs(v)
-            val x = row.values(v)
-            if (x == null) {
-              require(s.nullable, s"update produced NULL for " +
-                s"non-nullable column '${s.name}'")
-              s.kind match {
-                case 1 => strNulls(strIdx(s.name)) = true
-                  strs(strIdx(s.name)) = null
-                case 6 => binNulls(binIdx(s.name)) = true
-                  binsRow(binIdx(s.name)) = null
-                case 7 => fltNulls(fltIdx(s.name)) = true
-                  fltsRow(fltIdx(s.name)) = null
-                case _ => longNulls(longIdx(s.name)) = true
-                  longs(longIdx(s.name)) = 0L
-              }
-            } else s.kind match {
-              case 1 =>
-                strNulls(strIdx(s.name)) = false
-                strs(strIdx(s.name)) =
-                  x.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
-              case 6 =>
-                binNulls(binIdx(s.name)) = false
-                binsRow(binIdx(s.name)) = x.asInstanceOf[Array[Byte]]
-              case 7 =>
-                fltNulls(fltIdx(s.name)) = false
-                fltsRow(fltIdx(s.name)) = x
-                  .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-                  .toFloatArray()
-              case k =>
-                longNulls(longIdx(s.name)) = false
-                longs(longIdx(s.name)) = k match {
-                  case 0 | 3 => x.asInstanceOf[Long]
-                  case 2 | 4 => x.asInstanceOf[Int].toLong
-                  case 5 => graft.codecs.DoubleBits
-                    .toSortableLong(x.asInstanceOf[Double])
-                  case 8 => x.asInstanceOf[org.apache.spark.sql.types.Decimal]
-                    .toUnscaledLong
-                  case 9 => if (x.asInstanceOf[Boolean]) 1L else 0L
-                  case 10 => graft.codecs.FloatBits
-                    .toSortableInt(x.asInstanceOf[Float]).toLong
-                  case other => throw new IllegalStateException(
-                    s"unknown column kind $other for '${s.name}'")
-                }
-            }
-            v += 1
-          }
-          enc.addRow(strs, longs, binsRow, fltsRow, strNulls, longNulls,
-            binNulls, fltNulls)
+          enc.putRow(row)
           j += 1
         }
       }
@@ -1348,18 +1279,6 @@ object GraftMaintenance {
     // dropped positions (round 9) hold no data: request no block, read
     // no lane (the encoder's own lanes are live-filtered the same way)
     val needed = Lane.ofSpecs(schema)
-    val strNames = enc.strNames
-    val longNames = enc.longNames
-    val binNames = enc.binNames
-    val fltNames = enc.fltNames
-    // null masks reused per row (addRow reads them synchronously); only
-    // nullable schemas pay for them — and they must be PROPAGATED here or
-    // compaction would silently turn NULLs into their stored placeholders
-    val anyNullable = schema.exists(s => !s.dropped && s.nullable)
-    val strNulls = if (anyNullable) new Array[Boolean](strNames.length) else null
-    val longNulls = if (anyNullable) new Array[Boolean](longNames.length) else null
-    val binNulls = if (anyNullable) new Array[Boolean](binNames.length) else null
-    val fltNulls = if (anyNullable) new Array[Boolean](fltNames.length) else null
     var dropped = 0L
     ms.foreach { m =>
       val file = m.blockFile(path)
@@ -1367,59 +1286,18 @@ object GraftMaintenance {
       try {
         ContainerFormat.chunks(in, fileLen, file, m.chunkIndex, needed).foreach { chunk =>
           if (digestCol.nonEmpty) ContainerFormat.verifyContentDigest(chunk, digestCol)
-          val strCols = strNames.map(chunk.col)
-          val strVals = strCols.map(_.bytes.strings)
-          val longCols = longNames.map(chunk.col)
-          val binCols = binNames.map(chunk.col)
-          val fltCols = fltNames.map(chunk.col)
+          // the encoder's live column c, decoded; NULLs must propagate or
+          // compaction would turn them into their stored placeholders
+          val cols = enc.columns.map(s => chunk.col(s.name)).toArray
           var j = 0
           while (j < chunk.rows) {
-            if (drop != null && drop.matches(chunk, j)) { dropped += 1; j += 1 }
+            if (drop != null && drop.matches(chunk, j)) dropped += 1
             else {
-            val strs = new Array[String](strNames.length)
-            var i = 0
-            while (i < strNames.length) {
-              if (anyNullable) strNulls(i) = !strCols(i).validAt(j)
-              strs(i) = strVals(i)(j)
-              i += 1
+              var c = 0
+              while (c < cols.length) { enc.putDecoded(c, cols(c), j); c += 1 }
+              enc.endRow()
             }
-            val longs = new Array[Long](longNames.length)
-            i = 0
-            while (i < longNames.length) {
-              val c = longCols(i)
-              if (anyNullable) longNulls(i) = !c.validAt(j)
-              longs(i) = c.lane match {
-                // booleans (kind 9) decode into the int lane as 0/1;
-                // floats (kind 10) pass their sortable bits through
-                case Lane.Ints => c.ints(j).toLong
-                // back to the sortable-long storage form (bijective on
-                // stored values: the writer already canonicalized NaN)
-                case Lane.Doubles => graft.codecs.DoubleBits.toSortableLong(c.doubles(j))
-                // kind 8 (decimal unscaled) passes through the long lane
-                case _ => c.longs(j)
-              }
-              i += 1
-            }
-            val binsRow = new Array[Array[Byte]](binNames.length)
-            i = 0
-            while (i < binNames.length) {
-              if (anyNullable) binNulls(i) = !binCols(i).validAt(j)
-              val u = binCols(i).bytes
-              binsRow(i) = java.util.Arrays.copyOfRange(
-                u.pool, u.offsets(j), u.offsets(j) + u.lens(j))
-              i += 1
-            }
-            val fltsRow = new Array[Array[Float]](fltNames.length)
-            i = 0
-            while (i < fltNames.length) {
-              if (anyNullable) fltNulls(i) = !fltCols(i).validAt(j)
-              fltsRow(i) = fltCols(i).floats.slice(j)
-              i += 1
-            }
-            enc.addRow(strs, longs, binsRow, fltsRow, strNulls, longNulls,
-              binNulls, fltNulls)
             j += 1
-            }
           }
         }
       } finally in.close()

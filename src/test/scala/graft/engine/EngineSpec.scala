@@ -98,6 +98,13 @@ class EngineSpec extends AnyFunSuite {
     rows.foreach(enc.add)
     val m = enc.finish()
     assert(m.chunks === 8)
+    // the encoder's container bytes are pinned (block order, codec
+    // choice, zone stats inputs, chunk digests)
+    assert(java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Files.readAllBytes(Paths.get(dir, "blocks", "part-0.gblk")))
+      .map(b => f"$b%02x").mkString ===
+      "2129aa98420bbc924320571208d9a383703355474339370559757beafbb798b0",
+      "PartitionEncoder container bytes changed")
     val decoded = ColumnarEngine.decode(spark, dir)
     assert(decoded.rdd.getNumPartitions === 8,
       "one giant container must decode across one task per chunk")

@@ -107,11 +107,11 @@ class BinaryFloatSpec extends AnyFunSuite {
       StructField("payload", BinaryType, nullable = true),
       StructField("vec", ArrayType(FloatType, containsNull = false),
         nullable = true)))
-    val rows = (0L until 120L).map { i =>
+    def rowOf(i: Long) =
       Row(i,
         if (i % 4 == 0) null else Array.fill((i % 9).toInt + 1)((i & 0xff).toByte),
         if (i % 3 == 0) null else Array.tabulate(8)(j => i * 0.5f + j))
-    }
+    val rows = (0L until 120L).map(rowOf)
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       .write.format("graft").option("chunkRows", "50").mode("overwrite").save(d)
     val back = spark.read.format("graft").load(d)
@@ -122,6 +122,36 @@ class BinaryFloatSpec extends AnyFunSuite {
     assert(r7.getAs[Array[Byte]]("payload").toSeq ===
       Array.fill(8)(7.toByte).toSeq)
     assert(r7.getSeq[Float](2) === Array.tabulate(8)(j => 3.5f + j).toSeq)
+
+    // the same rows through both rewrites — a compaction (decoded lanes
+    // back into the encoder) and an UPDATE (visible internal rows back
+    // into the encoder): NULLs keep their rows, non-null payloads and
+    // vectors stay bit-exact
+    val more = (120L until 180L).map(rowOf)
+    spark.createDataFrame(spark.sparkContext.parallelize(more, 1), schema)
+      .write.format("graft").option("chunkRows", "50").mode("append").save(d)
+    type Cells = (Option[Seq[Byte]], Option[Seq[Int]])
+    def bits(v: Iterable[Float]): Seq[Int] =
+      v.map(java.lang.Float.floatToRawIntBits).toSeq
+    val want: Map[Long, Cells] = (rows ++ more).map { r =>
+      r.getLong(0) -> ((Option(r.getAs[Array[Byte]](1)).map(_.toSeq),
+        Option(r.getAs[Array[Float]](2)).map(v => bits(v))))
+    }.toMap
+    def state(): Map[Long, Cells] =
+      spark.read.format("graft").load(d).collect().map { r =>
+        r.getLong(0) -> ((Option(r.getAs[Array[Byte]]("payload")).map(_.toSeq),
+          Option(r.getSeq[Float](2)).map(v => bits(v))))
+      }.toMap
+    assert(state() === want)
+    val (consumed, produced) = GraftMaintenance.compact(spark, d, minContainers = 2)
+    assert(consumed === 2 && produced === 1)
+    assert(state() === want, "compaction must keep NULLs and bit-exact values")
+    val updated = GraftMaintenance.update(spark, d, "id % 5 = 1",
+      Map("payload" -> "CAST(NULL AS BINARY)"))
+    assert(updated === 36L)
+    assert(state() === want.map { case (i, (p, v)) =>
+      i -> ((if (i % 5 == 1) None else p, v)) },
+      "update must keep NULLs and bit-exact values")
   }
 
   test("compaction preserves binary payloads and embeddings bit-exact") {

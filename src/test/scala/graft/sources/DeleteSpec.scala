@@ -217,7 +217,8 @@ class DeleteSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     def publishEpoch(e: Int, taskId: Long, ids: Range): Unit = {
-      val w = new GraftDataWriter(d, 0, s"q-e$e", confKv, 64, taskId, schema)
+      val w = new GraftDataWriter(d, 0, s"q-e$e", confKv, 64, taskId, schema,
+        Nil, Nil)
       ids.foreach(i => w.write(new GenericInternalRow(
         Array[Any](i.toLong, UTF8String.fromString(s"t$i")))))
       GraftCommits.publish(confKv, d, truncate = false, Array(w.commit()))

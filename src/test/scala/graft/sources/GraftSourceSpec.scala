@@ -288,7 +288,8 @@ class GraftSourceSpec extends AnyFunSuite {
     val confKv = graft.engine.ContainerIO.confSnapshot(spark)
     val conf = graft.engine.ContainerIO.localConf()
     val rows = ColumnarEngine.derive(SourceTable.synthesize(spark, 60, 2)).collect()
-    val factory = new GraftWriterFactory(d, "ep0", confKv, 32)
+    val factory = new GraftWriterFactory(d, "ep0", confKv, 32,
+      GraftDataSource.schema, Nil, Nil)
     // attempt 1 stages and commits its container, then "dies" before its
     // commit message reaches the driver
     val w1 = factory.createWriter(0, 1L)
@@ -317,7 +318,8 @@ class GraftSourceSpec extends AnyFunSuite {
     val conf = graft.engine.ContainerIO.localConf()
     val rows = ColumnarEngine.derive(SourceTable.synthesize(spark, 40, 2)).collect()
     def publishEpoch(taskId: Long): Unit = {
-      val w = new GraftDataWriter(d, 0, "q1-e5", confKv, 32, taskId)
+      val w = new GraftDataWriter(d, 0, "q1-e5", confKv, 32, taskId,
+        GraftDataSource.schema, Nil, Nil)
       rows.foreach(r => w.write(internalRowOf(r)))
       GraftCommits.publish(confKv, d, truncate = false, Array(w.commit()))
     }

@@ -27,7 +27,8 @@ class MaintenanceSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     val msgs = parts.map { case (p, ids) =>
-      val w = new GraftDataWriter(d, p, s"q-e$e", confKv, 64, taskId + p, schema)
+      val w = new GraftDataWriter(d, p, s"q-e$e", confKv, 64, taskId + p, schema,
+        Nil, Nil)
       ids.foreach(i => w.write(new GenericInternalRow(
         Array[Any](i.toLong, UTF8String.fromString(s"t$i")))))
       w.commit()
@@ -142,7 +143,8 @@ class MaintenanceSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     def publishEpoch(e: Int, taskId: Long, ids: Range): Unit = {
-      val w = new GraftDataWriter(d, 0, s"q-e$e", confKv, 64, taskId, schema)
+      val w = new GraftDataWriter(d, 0, s"q-e$e", confKv, 64, taskId, schema,
+        Nil, Nil)
       ids.foreach(i => w.write(new GenericInternalRow(
         Array[Any](i.toLong, UTF8String.fromString(s"t$i")))))
       GraftCommits.publish(confKv, d, truncate = false, Array(w.commit()))
@@ -237,7 +239,8 @@ class MaintenanceSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     def stage(e: Int, taskId: Long, ids: Range): GraftCommitMessage = {
-      val w = new GraftDataWriter(d, 0, s"q-e$e", confKv, 64, taskId, schema)
+      val w = new GraftDataWriter(d, 0, s"q-e$e", confKv, 64, taskId, schema,
+        Nil, Nil)
       ids.foreach(i => w.write(new GenericInternalRow(
         Array[Any](i.toLong, UTF8String.fromString(s"t$i")))))
       w.commit().asInstanceOf[GraftCommitMessage]

@@ -312,6 +312,20 @@ class NullableDoubleSpec extends AnyFunSuite {
     def messages(t: Throwable): String =
       if (t == null) "" else Option(t.getMessage).getOrElse("") + messages(t.getCause)
     assert(messages(ex).contains("tag"), s"got $ex")
+    // a null ELEMENT of a float array is rejected too (a dense vector
+    // has no slot for it; it would read back as 0.0f)
+    val vecSchema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("vec", ArrayType(FloatType, containsNull = true), nullable = true)))
+    val ex2 = intercept[Exception] {
+      spark.createDataFrame(spark.sparkContext.parallelize(
+          Seq(Row(1L, Seq(1.0f, 2.0f)), Row(2L, Seq(1.0f, null))), 1), vecSchema)
+        .write.format("graft").mode("overwrite").save(tmp("null-elem"))
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(ex2).exists(t => t.isInstanceOf[IllegalArgumentException] &&
+      t.getMessage.contains("'vec'")), s"got $ex2")
   }
 
   test("appends adopt the table's nullability; nulls survive compaction") {
