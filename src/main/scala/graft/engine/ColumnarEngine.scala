@@ -24,47 +24,25 @@ final case class ColumnMetric(column: String, codec: String,
     rawBytes: Long, encodedBytes: Long,
     minVal: Long = 0L, maxVal: Long = 0L, hasRange: Boolean = false)
 
-/** One column of a graft table: kind 0 = long (int64), kind 1 = string
-  * (UTF-8), kind 2 = int (i32, decoded through the overflow-checked
-  * narrow iterators — [[graft.codecs.IntCodecs]]), kind 3 = timestamp
-  * (TIMESTAMP_NTZ micros, stored through the kind-0 long codec path),
-  * kind 4 = date (epoch days, stored through the kind-2 narrow path),
-  * kind 5 = double (order-preserving sortable-long bits —
-  * [[graft.codecs.DoubleBits]] — through the kind-0 path, so zone maps,
-  * comparison pushdown, and MIN/MAX pushdown work unchanged), kind 6 =
-  * binary (length-prefixed blob blocks), kind 7 = float array
-  * (per-row dims + packed little-endian floats — the embedding shape),
-  * kind 8 = decimal (p <= 18: the unscaled long through the kind-0
-  * machinery — zone maps, comparison pushdown, and MIN/MAX pushdown
-  * inherit, since unscaled order IS decimal order at a fixed scale),
-  * kind 9 = boolean (0/1 through the kind-0 stats-selected codecs —
-  * bit-pack stores it at ~1 bit per row, RLE collapses runs — decoded
-  * back through the narrow int surface), kind 10 = float (32-bit
-  * scalar: order-preserving sortable-int bits —
-  * [[graft.codecs.FloatBits]] — through the kind-2 NARROW path, the
-  * kind-5 pattern at half width; zone maps and MIN/MAX inherit, pushed
-  * Float constants pre-translate to sortable ints).
-  * The container format stores (name, kind, block) per column per chunk,
-  * so any schema of these kinds round-trips; [[DerivedRow]] is simply
-  * the engine's own schema ([[ColumnarEngine.DefaultSchema]]).
+/** One column of a graft table: its name, its kind (Spark type, stored
+  * form and value conversions are the [[Kinds]] entry), nullability and,
+  * for DECIMAL, precision and scale. The container format stores (name,
+  * kind, block) per column per chunk, so any schema of these kinds
+  * round-trips; [[DerivedRow]] is simply the engine's own schema
+  * ([[ColumnarEngine.DefaultSchema]]).
   *
-  * `nullable` columns (round 7) store a per-chunk validity prefix on
-  * chunks that actually contain nulls (kind byte flagged with 0x80);
-  * all-present chunks of a nullable column stay in the plain layout.
-  * In the manifest's `schema` array the flag is packed into the kind
-  * int as bit 7 ([[ColumnSpec.packed]]) so legacy parsers' `(name,
-  * kind)` shape is preserved; decimal precision and scale pack into
-  * bits 8-15 and 16-23 of the same int (zero for every other kind, so
-  * pre-decimal values are unchanged).
+  * `nullable` columns store a per-chunk validity prefix on chunks that
+  * actually contain nulls (kind byte flagged with 0x80); all-present
+  * chunks of a nullable column stay in the plain layout. In the
+  * manifest's `schema` array the flag is packed into the kind int as bit
+  * 7 ([[ColumnSpec.packed]]) so legacy parsers' `(name, kind)` shape is
+  * preserved; decimal precision and scale pack into bits 8-15 and 16-23
+  * of the same int (zero for every other kind).
   */
 final case class ColumnSpec(name: String, kind: Int, nullable: Boolean = false,
                             precision: Int = 0, scale: Int = 0,
                             dropped: Boolean = false) {
-  require(kind >= 0 && kind <= 10, s"unknown column kind $kind")
-  require(kind != 8 || (precision >= 1 && precision <= 18 &&
-    scale >= 0 && scale <= precision),
-    s"decimal kind needs 1 <= precision <= 18 and 0 <= scale <= precision, " +
-      s"got ($precision, $scale)")
+  Kinds(kind).check(this)
   require(name.nonEmpty && name.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= 1024,
     s"column name out of range: '$name'")
   /** Manifest-schema encoding: kind | 0x80 when nullable; decimal
@@ -76,6 +54,8 @@ final case class ColumnSpec(name: String, kind: Int, nullable: Boolean = false,
   def packed: Int = kind | (if (nullable) ColumnSpec.NullableFlag else 0) |
     (precision << 8) | (scale << 16) |
     (if (dropped) ColumnSpec.DroppedFlag else 0)
+  def dataType: org.apache.spark.sql.types.DataType = Kinds(kind).dataType(this)
+  private[graft] def lane: Lane = Kinds(kind).lane
 }
 
 object ColumnSpec {
@@ -147,9 +127,8 @@ object ColumnarEngine {
     * string column, else none (block CRCs still cover every read).
     */
   def digestColumnOf(schema: Seq[ColumnSpec]): String = {
-    val live = schema.filterNot(_.dropped)
-    live.find(_.name == "content").filter(_.kind == 1).map(_.name)
-      .orElse(live.find(_.kind == 1).map(_.name))
+    val strings = schema.filter(s => !s.dropped && Kinds(s.kind).stored == Stored.Utf8)
+    strings.find(_.name == "content").orElse(strings.headOption).map(_.name)
       .getOrElse("")
   }
 
@@ -318,13 +297,13 @@ object ColumnarEngine {
     * `schema` may hold any [[ColumnSpec]] kinds
     * ([[ColumnarEngine.DefaultSchema]] = the engine's [[DerivedRow]]
     * shape): buffering is columnar, one buffer per live column whose
-    * stored form its kind fixes here, once. The chunk digest covers
-    * [[ColumnarEngine.digestColumnOf]] (all-zero when the schema has no
+    * stored form ([[Kind.stored]]) is fixed here, once. The chunk digest
+    * covers [[ColumnarEngine.digestColumnOf]] (all-zero when the schema has no
     * string column), and the manifest records the schema + digest column
     * so readers infer both.
     */
   private[graft] final class PartitionEncoder(
-      part: Int, outDir: String,
+      val part: Int, outDir: String,
       conf: org.apache.hadoop.conf.Configuration,
       partName: String = null,
       chunkRowsCap: Int = ChunkRows,
@@ -342,6 +321,7 @@ object ColumnarEngine {
     val columns: IndexedSeq[ColumnSpec] = schema.filterNot(_.dropped).toIndexedSeq
     private val bufs: Array[ColumnBuffer] =
       columns.map(ColumnBuffer(_, chunkRowsCap)).toArray
+    private val kinds: Array[Kind] = columns.map(s => Kinds(s.kind)).toArray
     /** Block order inside a chunk: numeric columns, then strings,
       * binaries and float arrays, each group in schema order (stable sort).
       */
@@ -657,36 +637,12 @@ object ColumnarEngine {
     }
 
     /** The one Spark-value -> stored-value conversion: field `c` of `row`,
-      * in Spark's internal representation of live column `c`'s type —
-      * sortable-long bits for doubles, sortable-int bits for floats, the
-      * unscaled long for decimals, 0/1 for booleans. A float array may
-      * hold no null element (the stored shape is a dense vector; a null
-      * would silently decode as 0.0f).
+      * in Spark's internal representation of live column `c`'s type
+      * ([[Kind.putField]]).
       */
     def putField(c: Int, row: InternalRow): Unit =
       if (row.isNullAt(c)) putNull(c)
-      else {
-        val s = bufs(c).spec
-        s.kind match {
-          case 0 | 3 => putLong(c, row.getLong(c))
-          case 2 | 4 => putLong(c, row.getInt(c).toLong)
-          case 5 => putLong(c, DoubleBits.toSortableLong(row.getDouble(c)))
-          case 8 => putLong(c, row.getDecimal(c, s.precision, s.scale).toUnscaledLong)
-          case 9 => putLong(c, if (row.getBoolean(c)) 1L else 0L)
-          case 10 => putLong(c, FloatBits.toSortableInt(row.getFloat(c)).toLong)
-          case 1 => putString(c, row.getUTF8String(c).toString)
-          case 6 => putBinary(c, row.getBinary(c))
-          case 7 =>
-            val a = row.getArray(c)
-            var e = 0
-            while (e < a.numElements()) {
-              if (a.isNullAt(e)) throw new IllegalArgumentException(
-                s"null element in float array column '${s.name}' (partition $part)")
-              e += 1
-            }
-            putFloats(c, a.toFloatArray())
-        }
-      }
+      else kinds(c).putField(this, c, row, bufs(c).spec)
 
     /** One row whose field i is live column i ([[putField]] each), closed. */
     def putRow(row: InternalRow): Unit = {
@@ -708,7 +664,7 @@ object ColumnarEngine {
         case Lane.Doubles => putLong(c, DoubleBits.toSortableLong(d.doubles(j)))
         case Lane.Bytes =>
           val u = d.bytes
-          if (bufs(c).spec.kind == 1) putString(c, u.string(j))
+          if (kinds(c).stored == Stored.Utf8) putString(c, u.string(j))
           else putBinary(c, java.util.Arrays.copyOfRange(
             u.pool, u.offsets(j), u.offsets(j) + u.lens(j)))
         case Lane.Floats => putFloats(c, d.floats.slice(j))
@@ -792,21 +748,21 @@ object ColumnarEngine {
     }
 
     private object ColumnBuffer {
-      def apply(s: ColumnSpec, chunkRowsCap: Int): ColumnBuffer = s.kind match {
-        case 1 => new StrBuffer(s)
-        case 6 => new BinBuffer(s)
-        case 7 => new FltBuffer(s)
-        case _ => new LongBuffer(s, chunkRowsCap)
+      def apply(s: ColumnSpec, chunkRowsCap: Int): ColumnBuffer = Kinds(s.kind).stored match {
+        case Stored.Utf8 => new StrBuffer(s)
+        case Stored.Binary => new BinBuffer(s)
+        case Stored.FloatArray => new FltBuffer(s)
+        case Stored.WideLong | Stored.NarrowInt => new LongBuffer(s, chunkRowsCap)
       }
     }
 
-    /** Integer-stored kinds: wide int64 (0/3/5/8/9) or narrow i32
-      * (2/4/10). Grows by doubling up to the chunk row cap.
+    /** Integer-stored kinds: wide int64 or narrow i32. Grows by doubling
+      * up to the chunk row cap.
       */
     private final class LongBuffer(spec: ColumnSpec, maxRows: Int)
         extends ColumnBuffer(spec) {
       def group = 0
-      val narrow: Boolean = spec.kind == 2 || spec.kind == 4 || spec.kind == 10
+      val narrow: Boolean = Kinds(spec.kind).stored == Stored.NarrowInt
       var vals = new Array[Long](math.min(maxRows, 1024))
       def put(r: Int, v: Long): Unit = {
         if (r == vals.length)

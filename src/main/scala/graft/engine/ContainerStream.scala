@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.hadoop.fs.FSDataInputStream
 
 import graft.core.{DecodeError, PrefixVarInt}
-import graft.codecs.{LongCodecs, StringCodecs}
+import graft.codecs.LongCodecs
 
 
 /** Bounded incremental reader over `[start, end)` of an open container
@@ -125,7 +125,7 @@ private[graft] final class ContainerInput(
   }
 }
 
-/** The in-memory lane a stored column kind decodes into. */
+/** The in-memory lane a stored column kind decodes into ([[Kind.lane]]). */
 private[graft] sealed abstract class Lane(val label: String)
 
 private[graft] object Lane {
@@ -136,24 +136,9 @@ private[graft] object Lane {
   case object Bytes extends Lane("byte-slice")
   case object Floats extends Lane("float-array")
 
-  /** The kind -> lane mapping. Temporal kinds are integer columns with a
-    * logical label (3 = timestamp micros, 4 = date days), 8 (decimal) is
-    * the unscaled long, 9 (boolean) surfaces as 0/1 ints, 10 (float) as
-    * its sortable-int bits, and 5 (double) is un-mapped from its
-    * sortable-long storage form.
-    */
-  def of(kind: Int): Lane = kind match {
-    case 0 | 3 | 8 => Longs
-    case 2 | 4 | 9 | 10 => Ints
-    case 5 => Doubles
-    case 1 | 6 => Bytes
-    case 7 => Floats
-    case k => throw new IllegalArgumentException(s"unknown column kind $k")
-  }
-
   /** Lanes of a schema's live columns (dropped positions hold no data). */
   def ofSpecs(specs: Seq[ColumnSpec]): Map[String, Lane] =
-    specs.filterNot(_.dropped).map(s => s.name -> of(s.kind)).toMap
+    specs.filterNot(_.dropped).map(s => s.name -> s.lane).toMap
 }
 
 /** One decoded column of a chunk: its lane's values and, when the chunk
@@ -268,7 +253,8 @@ private[graft] object ContainerFormat {
 
   /** Parse one chunk starting at the cursor. Non-needed column blocks are
     * position advances (no IO); needed blocks are read, CRC-verified when
-    * the manifest recorded a CRC, and decoded into their kind's lane. A
+    * the manifest recorded a CRC, and decoded into their kind's lane
+    * ([[Kind.decode]]). A
     * needed column that is missing, short, or of another lane than asked
     * for fails the read.
     */
@@ -294,9 +280,8 @@ private[graft] object ContainerFormat {
       val rawKind = ci.readByte()
       // bit 7 = this chunk's column carries a validity-bitmap prefix
       // (nullable columns write it only on chunks that contain nulls)
-      val kind = rawKind & 0x7f
+      val kind = Kinds(rawKind & 0x7f)
       val hasNulls = (rawKind & 0x80) != 0
-      require(kind >= 0 && kind <= 10, s"unknown column kind $kind")
       val blockLen = {
         val l = ci.readVarint()
         require(l >= 0 && l <= ci.remaining, s"block length $l overruns container")
@@ -316,35 +301,7 @@ private[graft] object ContainerFormat {
         val bm = if (hasNulls) (n + 7) >> 3 else 0
         require(blockLen >= bm, s"column $name block shorter than its validity bitmap")
         val nulls = if (hasNulls) java.util.Arrays.copyOfRange(block, 0, bm) else null
-        val lane = Lane.of(kind)
-        val values: AnyRef = lane match {
-          case Lane.Longs => LongCodecs.decodeSlice(block, bm, block.length)
-          // boolean: kind-0 stats-selected storage (bit-pack/RLE); anything
-          // outside 0/1 is corruption, not data
-          case Lane.Ints if kind == 9 =>
-            val wide = LongCodecs.decodeSlice(block, bm, block.length)
-            val out = new Array[Int](wide.length)
-            var i = 0
-            while (i < wide.length) {
-              val v = wide(i)
-              if (v != 0L && v != 1L) throw new graft.core.DecodeError.Overflow
-              out(i) = v.toInt
-              i += 1
-            }
-            out
-          // kind 10 (float) is kind-2 narrow storage behind the
-          // order-preserving bit mapping; readers flip at the boundary
-          case Lane.Ints => graft.codecs.IntCodecs.decodeSlice(block, bm, block.length)
-          case Lane.Doubles => graft.codecs.DoubleBits.toDoubles(
-            LongCodecs.decodeSlice(block, bm, block.length))
-          // binary decodes zero-copy into the slice shape strings use —
-          // readers pick Binary vs UTF8String by the Spark field type
-          case Lane.Bytes if kind == 6 =>
-            graft.codecs.BytesCodecs.decodeBinary(block, bm, block.length)
-          case Lane.Bytes => StringCodecs.decodeSliceUtf8(block, bm, block.length)
-          case Lane.Floats => graft.codecs.BytesCodecs.decodeFloats(block, bm, block.length)
-        }
-        cols.put(name, new DecodedColumn(lane, values, nulls))
+        cols.put(name, new DecodedColumn(kind.lane, kind.decode(block, bm), nulls))
       } else ci.skipBytes(blockLen.toLong)
       c += 1
     }

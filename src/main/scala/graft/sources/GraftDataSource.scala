@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.{ChunkStats, ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, DecodedChunk, DecodedColumn, DerivedRow, Lane, Manifests, ParsedManifest}
+import graft.engine.{ChunkStats, ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, DecodedChunk, DecodedColumn, DerivedRow, Kinds, Lane, Manifests, ParsedManifest, Stored}
 
 /** `spark.read.format("graft")` / `df.write.format("graft")` — the
   * engine's container+manifest layout as a DataSource V2 table.
@@ -85,68 +85,18 @@ object GraftDataSource {
   /** The engine's table schema ([[DerivedRow]] field order) — the
     * default for tables that don't exist yet.
     */
-  val schema: StructType = StructType(
-    ColumnarEngine.stringColumns.map(StructField(_, StringType, nullable = false)) ++
-      ColumnarEngine.longColumns.map(StructField(_, LongType, nullable = false)))
+  val schema: StructType = schemaOf(ColumnarEngine.DefaultSchema)
 
   private[sources] def schemaOf(specs: Seq[graft.engine.ColumnSpec]): StructType =
-    StructType(specs.map(s => StructField(s.name, s.kind match {
-      case 0 => LongType
-      case 2 => IntegerType
-      case 3 => TimestampNTZType
-      case 4 => DateType
-      case 5 => DoubleType
-      case 6 => BinaryType
-      case 7 => ArrayType(FloatType, containsNull = false)
-      case 8 => DecimalType(s.precision, s.scale)
-      case 9 => BooleanType
-      case 10 => FloatType
-      case _ => StringType
-    }, nullable = s.nullable)))
+    StructType(specs.map(s => StructField(s.name, s.dataType, nullable = s.nullable)))
 
-  /** Validate + translate a Spark write/table schema into column specs;
-    * rejects anything the container format can't hold. Temporal types
-    * (round 6) ride the integer codec paths: TIMESTAMP_NTZ is kind 3 —
-    * int64 micros through the kind-0 machinery (zone maps, filters,
-    * aggregate pushdown apply unchanged); DATE is kind 4 — int32 days
-    * through the kind-2 narrow path. DOUBLE (round 7) is kind 5 —
-    * order-preserving sortable-long bits ([[graft.codecs.DoubleBits]])
-    * through the kind-0 machinery, same inheritance. Field nullability
-    * is recorded per column: nullable columns store per-chunk validity
-    * bitmaps and support IS NULL / IS NOT NULL pushdown.
+  /** Validate + translate a Spark write/table schema into column specs
+    * ([[Kinds.specOf]]); rejects anything the container format can't
+    * hold. Field nullability is recorded per column.
     */
   private[sources] def specsOf(st: StructType): Seq[graft.engine.ColumnSpec] = {
     require(st.fields.nonEmpty, "graft table needs at least one column")
-    st.fields.toSeq.map { f =>
-      f.dataType match {
-        case LongType => graft.engine.ColumnSpec(f.name, 0, f.nullable)
-        case StringType => graft.engine.ColumnSpec(f.name, 1, f.nullable)
-        case IntegerType => graft.engine.ColumnSpec(f.name, 2, f.nullable)
-        case TimestampNTZType => graft.engine.ColumnSpec(f.name, 3, f.nullable)
-        case DateType => graft.engine.ColumnSpec(f.name, 4, f.nullable)
-        case DoubleType => graft.engine.ColumnSpec(f.name, 5, f.nullable)
-        // the LLM-pipeline shapes (round 7): opaque media payloads and
-        // embeddings live in the engine's own table
-        case BinaryType => graft.engine.ColumnSpec(f.name, 6, f.nullable)
-        case ArrayType(FloatType, _) => graft.engine.ColumnSpec(f.name, 7, f.nullable)
-        // DECIMAL (round 8): the unscaled long rides the kind-0 codec
-        // machinery — p <= 18 is exactly what a long's 63 bits hold
-        case d: DecimalType if d.precision <= 18 =>
-          graft.engine.ColumnSpec(f.name, 8, f.nullable, d.precision, d.scale)
-        case d: DecimalType => throw new IllegalArgumentException(
-          s"graft DECIMAL columns support precision <= 18 (long-backed); " +
-            s"column '${f.name}' is $d")
-        case BooleanType => graft.engine.ColumnSpec(f.name, 9, f.nullable)
-        // FLOAT (round 9): sortable-int bits through the kind-2 narrow
-        // path — the kind-5 pattern at half width (a model-score column
-        // no longer forces a cast to DOUBLE)
-        case FloatType => graft.engine.ColumnSpec(f.name, 10, f.nullable)
-        case other => throw new IllegalArgumentException(
-          s"graft supports only BIGINT, INT, STRING, TIMESTAMP_NTZ, " +
-            s"DATE, DOUBLE, FLOAT, BINARY, ARRAY<FLOAT>, DECIMAL(<=18), " +
-            s"and BOOLEAN columns; column '${f.name}' is $other")
-      }
-    }
+    st.fields.toSeq.map(Kinds.specOf)
   }
 
   /** Committed schema of an existing table, from its manifests. Legacy
@@ -279,117 +229,69 @@ object GraftDataSource {
 
   /** The table's column layout: name -> [[graft.engine.ColumnSpec]]
     * (kind, nullability, decimal scale). Pushdown, readers and rewrites
-    * address decoded data through it; a column's decoded lane is
-    * [[Lane.of]] its kind.
+    * address decoded data through it; a column's decoded lane is its
+    * kind's ([[graft.engine.Kind.lane]]).
     */
   private[sources] def layoutOf(st: StructType): Map[String, ColumnSpec] =
     specsOf(st).map(s => s.name -> s).toMap
 
-  /** Rewrite pushed filters on DECIMAL/BOOLEAN columns into their
-    * PHYSICAL form (unscaled-long / 0-1 int constants) so every
-    * downstream stage — zone-map admission, chunk pruning, row-level
-    * re-check — runs the existing long/int machinery unchanged.
-    * Comparisons against a constant finer than the column's scale
-    * translate to the equivalent grid bound (floor/ceil of the scaled
-    * value); an equality that can't be represented at the column scale
-    * matches nothing and stays UNTRANSLATED (so [[pushable]] rejects it
-    * and Spark evaluates it residually). Constants beyond long range
-    * likewise stay untranslated.
-    *
-    * (Round 9) FLOAT (kind 10) constants likewise pre-translate to their
-    * order-preserving sortable-int storage form: the mapping is a
-    * bijection so every comparison is exact — except ±0.0f, which SQL
-    * calls equal but which map to TWO adjacent storage values (-1, 0):
-    * equality expands to an IN over both, and each range bound picks the
-    * side that preserves SQL semantics. NaN constants stay untranslated
-    * (unpushed — Spark evaluates them residually), mirroring kind 5.
+  /** Rewrite pushed filters into the STORED domain, once, so every
+    * downstream stage — zone-map admission, chunk pruning, runtime
+    * filters, the row-level re-check — sees only lane-typed constants.
+    * Each constant maps through its column kind's
+    * [[graft.engine.Kind.storedRange]] (the range of stored values SQL
+    * calls equal to it): an equality becomes that one value, or an IN
+    * over the two of FLOAT ±0.0; a range bound takes the side that keeps
+    * SQL semantics (the DECIMAL grid's floor/ceil), and only on ordered
+    * kinds; IN drops members no stored value equals. A filter whose
+    * constant does not translate (NaN, an unrepresentable equality, a
+    * constant beyond long range, a non-ordered range) stays as pushed, so
+    * [[pushable]] rejects it and Spark evaluates it residually.
     */
   private[sources] def translateFilters(filters: Array[Filter],
       layout: Map[String, ColumnSpec]): Array[Filter] = {
-    def f32(f: Float): java.lang.Integer =
-      java.lang.Integer.valueOf(graft.codecs.FloatBits.toSortableInt(f))
-    // the inclusive sortable range SQL considers EQUAL to the constant
-    def f32Lo(f: Float): java.lang.Integer = f32(if (f == 0.0f) -0.0f else f)
-    def f32Hi(f: Float): java.lang.Integer = f32(if (f == 0.0f) 0.0f else f)
-    def floorU(bd: java.math.BigDecimal, s: Int): Long =
-      bd.setScale(s, java.math.RoundingMode.FLOOR).unscaledValue().longValueExact()
-    def ceilU(bd: java.math.BigDecimal, s: Int): Long =
-      bd.setScale(s, java.math.RoundingMode.CEILING).unscaledValue().longValueExact()
-    def exactU(bd: java.math.BigDecimal, s: Int): Option[Long] =
-      try Some(bd.setScale(s).unscaledValue().longValueExact())
-      catch { case _: ArithmeticException => None }
-    def decimal(f: Filter, s: Int): Filter = f match {
-      case EqualTo(c, x: java.math.BigDecimal) =>
-        exactU(x, s).fold(f)(u => EqualTo(c, java.lang.Long.valueOf(u)))
-      case GreaterThan(c, x: java.math.BigDecimal) =>
-        GreaterThan(c, java.lang.Long.valueOf(floorU(x, s)))
-      case GreaterThanOrEqual(c, x: java.math.BigDecimal) =>
-        GreaterThanOrEqual(c, java.lang.Long.valueOf(ceilU(x, s)))
-      case LessThan(c, x: java.math.BigDecimal) =>
-        LessThan(c, java.lang.Long.valueOf(ceilU(x, s)))
-      case LessThanOrEqual(c, x: java.math.BigDecimal) =>
-        LessThanOrEqual(c, java.lang.Long.valueOf(floorU(x, s)))
-      case In(c, vs) if vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[java.math.BigDecimal]) =>
-        // members unrepresentable at the column scale can never match:
-        // dropping them preserves IN semantics exactly
-        val exact = vs.flatMap(v => exactU(v.asInstanceOf[java.math.BigDecimal], s))
-        if (exact.isEmpty) f
-        else In(c, exact.map(java.lang.Long.valueOf(_): AnyRef))
-      case other => other
-    }
-    def float(f: Filter): Filter = f match {
-      case EqualTo(c, x: java.lang.Float) if !x.isNaN =>
-        val (lo, hi) = (f32Lo(x), f32Hi(x))
-        if (lo == hi) EqualTo(c, lo) else In(c, Array[Any](lo, hi))
-      case GreaterThan(c, x: java.lang.Float) if !x.isNaN => GreaterThan(c, f32Hi(x))
-      case GreaterThanOrEqual(c, x: java.lang.Float) if !x.isNaN =>
-        GreaterThanOrEqual(c, f32Lo(x))
-      case LessThan(c, x: java.lang.Float) if !x.isNaN => LessThan(c, f32Lo(x))
-      case LessThanOrEqual(c, x: java.lang.Float) if !x.isNaN =>
-        LessThanOrEqual(c, f32Hi(x))
-      case In(c, vs) if vs.nonEmpty &&
-          vs.forall(v => v.isInstanceOf[java.lang.Float] &&
-            !v.asInstanceOf[java.lang.Float].isNaN) =>
-        In(c, vs.flatMap { v =>
-          val x = v.asInstanceOf[java.lang.Float].floatValue()
-          if (x == 0.0f) Seq[Any](f32Lo(x), f32Hi(x)) else Seq[Any](f32(x))
-        })
-      case other => other
-    }
-    def bool(f: Filter): Filter = f match {
-      case EqualTo(c, x: java.lang.Boolean) =>
-        EqualTo(c, java.lang.Integer.valueOf(if (x) 1 else 0))
-      case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Boolean]) =>
-        In(c, vs.map(v => java.lang.Integer.valueOf(
-          if (v.asInstanceOf[java.lang.Boolean]) 1 else 0): AnyRef))
-      case other => other
-    }
-    def tr(f: Filter): Filter =
-      try f.references match {
-        case Array(c) => layout.get(c) match {
-          case Some(s) if s.kind == 8 => decimal(f, s.scale)
-          case Some(s) if s.kind == 9 => bool(f)
-          case Some(s) if s.kind == 10 => float(f)
+    def tr(f: Filter, s: ColumnSpec): Filter = {
+      val k = Kinds(s.kind)
+      def range(x: Any) = k.storedRange(x, s)
+      // a constant's stored points: at most two adjacent values
+      def points(r: (Long, Long)): Seq[AnyRef] =
+        if (r._1 == r._2) Seq(k.box(r._1))
+        else if (r._1 < r._2) Seq(k.box(r._1), k.box(r._2))
+        else Nil
+      f match {
+        case EqualTo(c, x) => range(x).map(points) match {
+          case Some(Seq(v)) => EqualTo(c, v)
+          case Some(vs) if vs.nonEmpty => In(c, vs.toArray[Any])
           case _ => f
         }
+        case GreaterThan(c, x) if k.ordered =>
+          range(x).fold(f)(r => GreaterThan(c, k.box(r._2)))
+        case GreaterThanOrEqual(c, x) if k.ordered =>
+          range(x).fold(f)(r => GreaterThanOrEqual(c, k.box(r._1)))
+        case LessThan(c, x) if k.ordered =>
+          range(x).fold(f)(r => LessThan(c, k.box(r._1)))
+        case LessThanOrEqual(c, x) if k.ordered =>
+          range(x).fold(f)(r => LessThanOrEqual(c, k.box(r._2)))
+        case In(c, vs) if vs.nonEmpty =>
+          // a member beyond long range equals no stored value: dropping it
+          // (an empty range) keeps IN exact
+          val rs = vs.map { v =>
+            try range(v) catch { case _: ArithmeticException => Some((1L, 0L)) }
+          }
+          val vals: Array[Any] =
+            if (rs.forall(_.isDefined)) rs.flatMap(r => points(r.get)) else Array.empty
+          if (vals.isEmpty) f else In(c, vals)
         case _ => f
-      } catch { case _: ArithmeticException => f } // out-of-long constant
-    filters.map(tr)
-  }
-
-  /** Physical value of a pushed temporal filter constant: TIMESTAMP_NTZ
-    * constants arrive as [[java.time.LocalDateTime]] (micros since epoch
-    * is the stored long), DATE constants as [[java.sql.Date]] or
-    * [[java.time.LocalDate]] depending on the session's Java-8-API flag
-    * (epoch days is the stored int).
-    */
-  private[sources] def microsOf(x: java.time.LocalDateTime): Long =
-    x.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + x.getNano / 1000L
-  private[sources] def daysOf(x: Any): Option[Int] = x match {
-    case d: java.time.LocalDate => Some(d.toEpochDay.toInt)
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay.toInt)
-    case _ => None
+      }
+    }
+    filters.map { f =>
+      f.references match {
+        case Array(c) if layout.contains(c) =>
+          try tr(f, layout(c))
+          catch { case _: ArithmeticException => f } // out-of-long constant
+        case _ => f
+      }
+    }
   }
 
   /** Default target split size (encoded bytes) when grouping admitted
@@ -460,9 +362,9 @@ object GraftDataSource {
 
   /** Bucket id of a pushed filter constant for column `col` of a
     * manifest recording `n`-bucket ids; None = not a bucketable constant
-    * (admit). Decimal/boolean columns cannot be bucket columns (the
-    * write builder rejects them), so the physical-constant translation
-    * never reaches here with a rescaled meaning.
+    * (admit). Only kinds whose stored value is their Spark value can be
+    * bucket columns ([[graft.engine.Kind.bucketable]]), so the
+    * stored-domain translation never reaches here with a changed meaning.
     */
   private[sources] def bucketIdOfConstant(x: Any, n: Int): Option[Int] = x match {
     case v: java.lang.Long => Some(bucketIdOfLong(v.longValue(), n))
@@ -517,15 +419,13 @@ object GraftDataSource {
     def num(x: Any): Option[(Long, Long)] = x match {
       case v: java.lang.Long => val l = v.longValue(); Some((l, l))
       case v: java.lang.Integer => val l = v.longValue(); Some((l, l))
-      // temporal constants prune against the same physical zone maps
-      case v: java.time.LocalDateTime => val m = microsOf(v); Some((m, m))
       case v: java.lang.Double =>
         val d = v.doubleValue()
         if (d.isNaN) None
         else Some((
           graft.codecs.DoubleBits.toSortableLong(if (d == 0.0) -0.0 else d),
           graft.codecs.DoubleBits.toSortableLong(if (d == 0.0) 0.0 else d)))
-      case _ => daysOf(x).map(d => (d.toLong, d.toLong))
+      case _ => None
     }
     filters.forall {
       case EqualTo(c, x) if ranges.contains(c) && num(x).isDefined =>
@@ -557,19 +457,17 @@ object GraftDataSource {
     * from both IEEE and the sortable mapping's tail; they stay in Spark.
     * IsNotNull/IsNull prune whole chunks via per-chunk null counts and
     * re-check against the validity bitmaps. Dispatch is on the column's
-    * lane first, then on the filter shape.
+    * lane first, then on the filter shape; constants are already in the
+    * stored domain ([[translateFilters]]).
     */
   private[sources] def pushable(f: Filter,
                                 layout: Map[String, ColumnSpec]): Boolean =
     f.references match {
       case Array(c) if layout.contains(c) =>
-        val lane = Lane.of(layout(c).kind)
-        // constants arrive typed by the column: temporal ones as
-        // LocalDateTime (micros lane) or Date/LocalDate (days lane)
+        val lane = layout(c).lane
         def const(x: Any): Boolean = (lane, x) match {
-          case (Lane.Longs, _: java.lang.Long | _: java.time.LocalDateTime) => true
+          case (Lane.Longs, _: java.lang.Long) => true
           case (Lane.Ints, _: java.lang.Integer) => true
-          case (Lane.Ints, _) => daysOf(x).isDefined
           case (Lane.Doubles, d: java.lang.Double) => !d.isNaN
           case (Lane.Bytes, _: String) => true
           case _ => false
@@ -599,18 +497,6 @@ object GraftDataSource {
     */
   private[sources] type RowPred = DecodedChunk => (Int => Boolean)
 
-  /** Physical value of a pushed long-lane constant (micros for TIMESTAMP_NTZ). */
-  private def longOf(x: Any): Long = x match {
-    case t: java.time.LocalDateTime => microsOf(t)
-    case v => v.asInstanceOf[java.lang.Long].longValue()
-  }
-
-  /** Physical value of a pushed int-lane constant (days for DATE). */
-  private def intOf(x: Any): Int = x match {
-    case v: java.lang.Integer => v.intValue()
-    case _ => daysOf(x).get
-  }
-
   /** The inclusive [lo, hi] an integer comparison admits (empty when
     * lo > hi).
     */
@@ -629,20 +515,20 @@ object GraftDataSource {
       layout: Map[String, ColumnSpec]): Array[RowPred] = filters.map { f =>
     val c = f.references.head
     val test: DecodedColumn => (Int => Boolean) =
-      (Lane.of(layout(c).kind), f) match {
+      (layout(c).lane, f) match {
         case (_, IsNotNull(_)) => d => j => d.validAt(j)
         case (_, IsNull(_)) => d => j => !d.validAt(j)
         case (Lane.Longs, In(_, vs)) =>
-          val set = vs.map(longOf).toSet
+          val set = vs.map(_.asInstanceOf[java.lang.Long].longValue()).toSet
           d => { val a = d.longs; j => set.contains(a(j)) }
         case (Lane.Longs, _) =>
-          val (lo, hi) = bounds(f, longOf)
+          val (lo, hi) = bounds(f, _.asInstanceOf[java.lang.Long].longValue())
           d => { val a = d.longs; j => a(j) >= lo && a(j) <= hi }
         case (Lane.Ints, In(_, vs)) =>
-          val set = vs.map(intOf).toSet
+          val set = vs.map(_.asInstanceOf[java.lang.Integer].intValue()).toSet
           d => { val a = d.ints; j => set.contains(a(j)) }
         case (Lane.Ints, _) =>
-          val (lo, hi) = bounds(f, intOf(_).toLong)
+          val (lo, hi) = bounds(f, _.asInstanceOf[java.lang.Integer].longValue())
           d => { val a = d.ints; j => a(j) >= lo && a(j) <= hi }
         // doubles: IEEE comparisons except that a NaN ROW ranks above
         // every constant (Spark's total order); NaN CONSTANTS are never
@@ -930,18 +816,20 @@ class GraftTable(path: String, tableSchema: StructType)
 
 // ------------------------------------------------------------------- read
 
-/** One fully-pushed aggregate, answered from the manifests alone. `dt`
-  * is the column's Spark type: every pushable type stores a physical
-  * long/int whose zone maps live in the same manifest ranges, and the
-  * result surfaces back as the column's own type (i32 for INT, micros
-  * long for TIMESTAMP_NTZ, days int for DATE).
+/** One fully-pushed aggregate, answered from the manifests alone. MIN/MAX
+  * carry the column's spec: an ordered kind folds its zone maps and
+  * surfaces the bound as its own Spark value
+  * ([[graft.engine.Kind.zoneValue]]); a string folds its all-ASCII
+  * ranges.
   */
 private[sources] sealed trait GraftAgg
 private[sources] case object CountStarAgg extends GraftAgg
-private[sources] final case class MinAgg(col: String,
-                                         dt: DataType = LongType) extends GraftAgg
-private[sources] final case class MaxAgg(col: String,
-                                         dt: DataType = LongType) extends GraftAgg
+private[sources] final case class MinAgg(spec: ColumnSpec) extends GraftAgg {
+  override def toString: String = s"MinAgg(${spec.name},${spec.dataType})"
+}
+private[sources] final case class MaxAgg(spec: ColumnSpec) extends GraftAgg {
+  override def toString: String = s"MaxAgg(${spec.name},${spec.dataType})"
+}
 /** COUNT(col) = rows − Σ per-chunk null counts (round 7). `nullable`
   * false = the schema proves zero nulls (count == row count, any kind,
   * any manifest vintage); true = every committed manifest's chunks were
@@ -950,11 +838,6 @@ private[sources] final case class MaxAgg(col: String,
   */
 private[sources] final case class CountAgg(col: String,
                                            nullable: Boolean) extends GraftAgg
-
-private[sources] object GraftAgg {
-  /** Does this pushed-aggregate type store its values as int32? */
-  def narrow(dt: DataType): Boolean = dt == IntegerType || dt == DateType
-}
 
 class GraftScanBuilder(path: String, tableSchema: StructType,
                        options: CaseInsensitiveStringMap)
@@ -1042,29 +925,21 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
     */
   private def translate(agg: Aggregation): Option[Seq[GraftAgg]] = {
     if (agg.groupByExpressions().nonEmpty || pushed.nonEmpty) return None
-    def pushableType(c: String): Option[DataType] =
-      tableSchema.fields.find(_.name == c).flatMap { f =>
-        f.dataType match {
-          case LongType | IntegerType | TimestampNTZType | DateType |
-               DoubleType | FloatType => Some(f.dataType)
-          // decimal zone maps hold unscaled longs, whose order IS the
-          // decimal order at the column's fixed scale — MIN/MAX exact
-          case d: DecimalType => Some(d)
+    def minMaxable(c: String): Option[ColumnSpec] =
+      layout.get(c).filter { s =>
+        Kinds(s.kind).ordered ||
           // string MIN/MAX: sound only when (a) the column is
           // non-nullable ("" null placeholders would pollute the chunk
           // mins) and (b) EVERY chunk of every committed manifest
           // recorded an all-ASCII range — where Java, UTF8String, and
           // DuckDB collation provably agree. Anything else stays in
           // Spark.
-          case StringType if !f.nullable &&
-              committedForStats.exists(_.forall(m =>
-                // zero-row tombstones (delete) contribute no values
-                m.schemaMarker || m.rows == 0 ||
-                  (m.hasChunkIndex && m.env.strRanges
-                    .contains(storedNameIn(m, c))))) =>
-            Some(StringType)
-          case _ => None
-        }
+          (Kinds(s.kind).stored == Stored.Utf8 && !s.nullable &&
+            committedForStats.exists(_.forall(m =>
+              // zero-row tombstones (delete) contribute no values
+              m.schemaMarker || m.rows == 0 ||
+                (m.hasChunkIndex && m.env.strRanges
+                  .contains(storedNameIn(m, c))))))
       }
     def countable(c: String): Option[CountAgg] =
       tableSchema.fields.find(_.name == c).flatMap { f =>
@@ -1082,10 +957,8 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
       }
     val specs = agg.aggregateExpressions().toSeq.map {
       case _: CountStar => Some(CountStarAgg)
-      case m: Min => fieldName(m.column)
-        .flatMap(c => pushableType(c).map(MinAgg(c, _)))
-      case m: Max => fieldName(m.column)
-        .flatMap(c => pushableType(c).map(MaxAgg(c, _)))
+      case m: Min => fieldName(m.column).flatMap(minMaxable).map(MinAgg)
+      case m: Max => fieldName(m.column).flatMap(minMaxable).map(MaxAgg)
       case c: Count if !c.isDistinct => fieldName(c.column).flatMap(countable)
       case _ => None
     }
@@ -1107,23 +980,15 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
     // string, and only then binary/float-array — the heaviest blocks to
     // decode just for counting rows
     required =
-      if (requiredSchema.isEmpty) {
-        def weight(dt: DataType): Int = dt match {
-          case LongType | IntegerType | TimestampNTZType | DateType |
-               DoubleType | FloatType | BooleanType | _: DecimalType => 0
-          case StringType => 1
-          case _ => 2 // binary / float-array
-        }
-        StructType(Seq(tableSchema.fields.minBy(f => weight(f.dataType))))
-      }
+      if (requiredSchema.isEmpty)
+        StructType(Seq(tableSchema.fields.minBy(f =>
+          Kinds(layout(f.name).kind).stored.weight)))
       else requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // decimal/boolean/float predicates are first rewritten to their
-    // PHYSICAL constants (unscaled long / 0-1 int / sortable int), then
-    // the existing long/int pushdown machinery admits them untouched; a
-    // filter whose translated form is unpushable stays residual in its
-    // ORIGINAL form
+    // predicates are first rewritten into the stored domain, then the
+    // lane pushdown machinery admits them; a filter whose translated
+    // form is unpushable stays residual in its ORIGINAL form
     val (in, out) = filters.zip(GraftDataSource.translateFilters(filters, layout))
       .partition(p => GraftDataSource.pushable(p._2, layout))
     pushed = in.map(_._2)
@@ -1158,8 +1023,8 @@ class GraftAggScan(path: String, specs: Seq[GraftAgg],
                    tableCols: Seq[String] = Nil) extends Scan with Batch {
   override def readSchema(): StructType = StructType(specs.map {
     case CountStarAgg => StructField("count_star", LongType, nullable = false)
-    case MinAgg(c, dt) => StructField(s"min_$c", dt, nullable = true)
-    case MaxAgg(c, dt) => StructField(s"max_$c", dt, nullable = true)
+    case MinAgg(s) => StructField(s"min_${s.name}", s.dataType, nullable = true)
+    case MaxAgg(s) => StructField(s"max_${s.name}", s.dataType, nullable = true)
     case CountAgg(c, _) => StructField(s"count_$c", LongType, nullable = false)
   })
   override def toBatch: Batch = this
@@ -1181,9 +1046,10 @@ class GraftAggScan(path: String, specs: Seq[GraftAgg],
     var nonNull = Map.empty[String, Long]
     // string MIN/MAX fold the per-chunk all-ASCII ranges (translate()
     // admitted the pushdown only after proving every chunk carries one)
+    def str(s: ColumnSpec): Boolean = Kinds(s.kind).stored == Stored.Utf8
     val strAggCols = specs.collect {
-      case MinAgg(c, StringType) => c
-      case MaxAgg(c, StringType) => c
+      case MinAgg(s) if str(s) => s.name
+      case MaxAgg(s) if str(s) => s.name
     }.toSet
     var sMins = Map.empty[String, String]
     var sMaxs = Map.empty[String, String]
@@ -1248,37 +1114,16 @@ class GraftAggScan(path: String, specs: Seq[GraftAgg],
         }
       }
     }
-    // double zone maps store the order-preserving sortable-long mapping;
-    // surface the aggregate back as the double it encodes
-    def surface(v: Long, dt: DataType): Any =
-      if (GraftAgg.narrow(dt)) java.lang.Integer.valueOf(v.toInt)
-      else if (dt == DoubleType)
-        java.lang.Double.valueOf(graft.codecs.DoubleBits.fromSortableLong(v))
-      else if (dt == FloatType)
-        // kind-10 zone maps carry the widened sortable ints
-        java.lang.Float.valueOf(graft.codecs.FloatBits.fromSortableInt(v.toInt))
-      else dt match {
-        case d: DecimalType =>
-          org.apache.spark.sql.types.Decimal.createUnsafe(v, d.precision, d.scale)
-        case _ => java.lang.Long.valueOf(v)
-      }
+    // the one output row, in Spark's internal representation
     val values: Array[Any] = specs.map {
-      case CountStarAgg => java.lang.Long.valueOf(rows)
-      case MinAgg(c, StringType) => sMins.get(c).orNull
-      case MaxAgg(c, StringType) => sMaxs.get(c).orNull
-      case MinAgg(c, dt) => mins.get(c).map(surface(_, dt)).orNull
-      case MaxAgg(c, dt) => maxs.get(c).map(surface(_, dt)).orNull
-      case CountAgg(c, _) => java.lang.Long.valueOf(nonNull.getOrElse(c, 0L))
+      case CountStarAgg => rows
+      case MinAgg(s) if str(s) => sMins.get(s.name).map(UTF8String.fromString).orNull
+      case MaxAgg(s) if str(s) => sMaxs.get(s.name).map(UTF8String.fromString).orNull
+      case MinAgg(s) => mins.get(s.name).map(Kinds(s.kind).zoneValue(_, s)).orNull
+      case MaxAgg(s) => maxs.get(s.name).map(Kinds(s.kind).zoneValue(_, s)).orNull
+      case CountAgg(c, _) => nonNull.getOrElse(c, 0L)
     }.toArray
-    Array(GraftAggPartition(values.map {
-      case null => null
-      case i: java.lang.Integer => i.intValue()
-      case l: java.lang.Long => l.longValue()
-      case d: java.lang.Double => d.doubleValue()
-      case f: java.lang.Float => f.floatValue()
-      case dec: org.apache.spark.sql.types.Decimal => dec
-      case s: String => s
-    }))
+    Array(GraftAggPartition(values))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1289,23 +1134,7 @@ class GraftAggScan(path: String, specs: Seq[GraftAgg],
           private var emitted = false
           override def next(): Boolean =
             if (emitted) false else { emitted = true; true }
-          override def get(): InternalRow = {
-            val row = new GenericInternalRow(vals.length)
-            var i = 0
-            while (i < vals.length) {
-              vals(i) match {
-                case null => row.setNullAt(i)
-                case l: Long => row.setLong(i, l)
-                case n: Int => row.setInt(i, n)
-                case d: Double => row.setDouble(i, d)
-                case f: Float => row.setFloat(i, f)
-                case s: String => row.update(i, UTF8String.fromString(s))
-                case other => row.update(i, other)
-              }
-              i += 1
-            }
-            row
-          }
+          override def get(): InternalRow = new GenericInternalRow(vals.clone())
           override def close(): Unit = ()
         }
     }
@@ -1363,8 +1192,8 @@ class GraftScan(path: String, required: StructType,
       org.apache.spark.sql.connector.expressions.Expressions.column)
 
   override def filter(runtime: Array[Filter]): Unit = {
-    // runtime (DPP) filters on decimal/boolean keys arrive in LOGICAL
-    // form — translate to physical constants like the builder did
+    // runtime (DPP) filters arrive in LOGICAL form — translate to stored
+    // constants like the builder did
     val accepted = GraftDataSource.translateFilters(runtime, layout)
       .filter(GraftDataSource.pushable(_, layout))
     filters = filters ++ accepted
@@ -1582,10 +1411,11 @@ class GraftColumnarReader(p: GraftInputPartition, required: StructType,
   private val effFilters = GraftDataSource.effectiveFilters(filters, p.absentCols)
   private val cursor = new ChunkCursor(p.file, p.chunks,
     ((required.fieldNames ++ effFilters.flatMap(_.references)).toSet -- p.absentCols)
-      .map(c => c -> Lane.of(layout(c).kind)).toMap,
+      .map(c => c -> layout(c).lane).toMap,
     confKv, if (verifyContent) p.digestCol else "", p.renames)
   private val preds = GraftDataSource.compileFilters(effFilters, layout)
   private val fields = required.fields
+  private val specs: Array[ColumnSpec] = fields.map(f => layout(f.name))
   private val fieldAbsent: Array[Boolean] =
     required.fields.map(f => p.absentCols.contains(f.name))
   private var batch: ColumnarBatch = _
@@ -1612,7 +1442,7 @@ class GraftColumnarReader(p: GraftInputPartition, required: StructType,
         while (i < fields.length) {
           val v = new OnHeapColumnVector(m, fields(i).dataType)
           if (fieldAbsent(i)) v.putNulls(0, m)
-          else fill(v, fields(i).dataType, chunk.col(fields(i).name), sel, m)
+          else Kinds(specs(i).kind).fill(v, chunk.col(fields(i).name), sel, m, specs(i))
           vecs(i) = v
           i += 1
         }
@@ -1622,103 +1452,6 @@ class GraftColumnarReader(p: GraftInputPartition, required: StructType,
       }
     }
     false
-  }
-
-  /** Copy the selected rows of one decoded column into a vector; NULL
-    * rows (per the chunk's validity bitmap) become vector nulls, their
-    * placeholder values are never surfaced.
-    */
-  private def fill(v: OnHeapColumnVector, dt: DataType, col: DecodedColumn,
-                   sel: Array[Int], m: Int): Unit = dt match {
-    case LongType | TimestampNTZType =>
-      val src = col.longs
-      var k = 0
-      while (k < m) {
-        val r = sel(k)
-        if (!col.validAt(r)) v.putNull(k) else v.putLong(k, src(r))
-        k += 1
-      }
-    case IntegerType | DateType =>
-      val src = col.ints
-      var k = 0
-      while (k < m) {
-        val r = sel(k)
-        if (!col.validAt(r)) v.putNull(k) else v.putInt(k, src(r))
-        k += 1
-      }
-    case DoubleType =>
-      val src = col.doubles
-      var k = 0
-      while (k < m) {
-        val r = sel(k)
-        if (!col.validAt(r)) v.putNull(k) else v.putDouble(k, src(r))
-        k += 1
-      }
-    case d: DecimalType =>
-      // p <= 18: the vector's decimal storage is the unscaled long —
-      // exactly what the chunk holds
-      val src = col.longs
-      var k = 0
-      while (k < m) {
-        val r = sel(k)
-        if (!col.validAt(r)) v.putNull(k)
-        else v.putDecimal(k, org.apache.spark.sql.types.Decimal
-          .createUnsafe(src(r), d.precision, d.scale), d.precision)
-        k += 1
-      }
-    case BooleanType =>
-      val src = col.ints
-      var k = 0
-      while (k < m) {
-        val r = sel(k)
-        if (!col.validAt(r)) v.putNull(k) else v.putBoolean(k, src(r) != 0)
-        k += 1
-      }
-    case FloatType =>
-      // kind 10: sortable-int bits in the narrow lane
-      val src = col.ints
-      var k = 0
-      while (k < m) {
-        val r = sel(k)
-        if (!col.validAt(r)) v.putNull(k)
-        else v.putFloat(k, graft.codecs.FloatBits.fromSortableInt(src(r)))
-        k += 1
-      }
-    case _: ArrayType =>
-      // ARRAY<FLOAT>: one float child vector per batch, each row an
-      // (offset, length) view into it
-      val fc = col.floats
-      val child = v.arrayData()
-      var total = 0
-      var k = 0
-      while (k < m) {
-        if (col.validAt(sel(k))) total += fc.lens(sel(k))
-        k += 1
-      }
-      child.reserve(total)
-      var off = 0
-      k = 0
-      while (k < m) {
-        val r = sel(k)
-        if (!col.validAt(r)) v.putNull(k)
-        else {
-          child.putFloats(off, fc.lens(r), fc.pool, fc.offsets(r))
-          v.putArray(k, off, fc.lens(r))
-          off += fc.lens(r)
-        }
-        k += 1
-      }
-    case _ =>
-      // strings and binary straight from the decoded byte slices: no
-      // String materialization, no re-encode
-      val u = col.bytes
-      var k = 0
-      while (k < m) {
-        val r = sel(k)
-        if (!col.validAt(r)) v.putNull(k)
-        else v.putByteArray(k, u.pool, u.offsets(r), u.lens(r))
-        k += 1
-      }
   }
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
@@ -2083,14 +1816,14 @@ class GraftWriteBuilder(path: String, info: LogicalWriteInfo)
         throw new IllegalArgumentException(
           s"partitionBy column '${t.col}' is not in the write schema " +
             in.simpleString))
+      val kind = Kinds.of(f.dataType)
       t match {
         case GraftDataSource.DaysT(c) =>
-          require(f.dataType == TimestampNTZType || f.dataType == DateType,
-            s"days($c) needs a TIMESTAMP_NTZ or DATE column, got ${f.dataType}")
+          require(kind.exists(_.temporal),
+            s"days($c) needs a ${Kinds.names(_.temporal)} column, got ${f.dataType}")
         case GraftDataSource.BucketT(_, c) =>
-          require(f.dataType == LongType || f.dataType == IntegerType ||
-              f.dataType == StringType,
-            s"bucket(n, $c) needs a BIGINT, INT, or STRING column, " +
+          require(kind.exists(_.bucketable),
+            s"bucket(n, $c) needs a ${Kinds.names(_.bucketable)} column, " +
               s"got ${f.dataType}")
         case _ => ()
       }
@@ -2492,7 +2225,7 @@ class GraftDataWriter(path: String, part: Int, epoch: String,
   private val bucketSpecs: Array[(Int, Int, Lane)] = partBy.collect {
     case GraftDataSource.BucketT(bn, c) =>
       val pos = writeSchema.fieldNames.indexOf(c)
-      (pos, bn, Lane.of(enc.columns(pos).kind))
+      (pos, bn, enc.columns(pos).lane)
   }.toArray
   private val bucketSeen: Array[scala.collection.mutable.BitSet] =
     bucketSpecs.map(s => new scala.collection.mutable.BitSet(s._2))

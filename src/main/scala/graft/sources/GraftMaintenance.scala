@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, Lane, Manifests, ParsedManifest, PartManifest}
+import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, Kinds, Lane, Manifests, ParsedManifest, PartManifest}
 
 /** Table maintenance for graft tables — the operational side a
   * long-running streaming sink needs: every micro-batch epoch commits
@@ -366,8 +366,8 @@ object GraftMaintenance {
       .bindReference(cond, out)
 
     // container admission: the predicate's conjuncts, translated to
-    // source filters and through the scan's decimal/boolean
-    // physical-constant translation — untranslatable conjuncts prune
+    // source filters and through the scan's stored-domain constant
+    // translation — untranslatable conjuncts prune
     // nothing (conservative over-approximation of "has matches").
     // Hand-rolled attribute-vs-literal translation (Spark's own
     // DataSourceStrategy.translateFilter is protected[sql]); constants
@@ -398,16 +398,10 @@ object GraftMaintenance {
         .map { case (m0, bin) =>
           val c2 = ContainerIO.confFrom(confKv)
           val m = Manifests.loadChunkIndex(c2, path, m0)
-          val storedChain: Seq[(String, Int)] =
-            if (m.schemaCols.isEmpty)
-              ColumnarEngine.DefaultSchema.map(s => (s.name, s.packed))
-            else m.schemaCols
-          val schema = storedChain.map { case (n, k) =>
-            ColumnSpec.fromPacked(n, k) }
+          val schema = GraftDataSource.specsOfManifest(m)
           // the matcher's ordinals are VISIBLE positions; the covered
           // ones form a prefix (full positions are ascending)
-          val containerCols = visPositions
-            .takeWhile(_ < storedChain.size).map(storedChain)
+          val containerCols = visPositions.takeWhile(_ < schema.size).map(schema)
           val matcher = new StoredRowMatcher(bound, containerCols, width)
           val (pm, dropped) = rewriteBin(c2, path, Seq(m), schema,
             m.digestCol, s"delete-$runId-$bin", bin, drop = matcher)
@@ -542,21 +536,16 @@ object GraftMaintenance {
 
     val runId = "r" + java.util.UUID.randomUUID().toString.take(7)
     val width = visPositions.size
-    val chainCols: Seq[(String, Int)] = chain.map(s => (s.name, s.packed))
     val targetOrds = boundAssigns.map(_._1)
     val outs: Array[(String, PartManifest, Long)] =
       try spark.sparkContext.parallelize(affected.zipWithIndex, affected.size)
         .map { case (m0, bin) =>
           val c2 = ContainerIO.confFrom(confKv)
           val m = Manifests.loadChunkIndex(c2, path, m0)
-          val storedChain: Seq[(String, Int)] =
-            if (m.schemaCols.isEmpty)
-              ColumnarEngine.DefaultSchema.map(s => (s.name, s.packed))
-            else m.schemaCols
-          val containerCols = visPositions
-            .takeWhile(_ < storedChain.size).map(storedChain)
+          val schema = GraftDataSource.specsOfManifest(m)
+          val containerCols = visPositions.takeWhile(_ < schema.size).map(schema)
           val matcher = new StoredRowMatcher(cond, containerCols, width)
-          val (pm, updated) = rewriteUpdate(c2, path, m, chainCols,
+          val (pm, updated) = rewriteUpdate(c2, path, m, chain,
             visPositions, matcher, boundAssigns, targetOrds,
             s"update-$runId-$bin", bin)
           if (updated == 0L) {
@@ -649,7 +638,7 @@ object GraftMaintenance {
     val keyVis = keys.map(st.fieldIndex)
     keyVis.foreach { v =>
       val kind = visible(v).kind
-      require(Set(0, 1, 2, 3, 4, 8, 9)(kind),
+      require(Kinds(kind).keyable,
         s"upsert key '${visible(v).name}' has unsupported kind $kind " +
           "(float/double/binary/array keys are not comparable-by-value)")
     }
@@ -696,69 +685,33 @@ object GraftMaintenance {
     require(keyRows.length.toLong == srcCount,
       s"upsert source has ${srcCount - keyRows.length} duplicate key rows")
     require(keyRows.forall(r => !r.anyNull), "upsert keys must be non-null")
-    def storedKeyOf(x: Any, spec: ColumnSpec): Any = spec.kind match {
-      case 0 => x.asInstanceOf[java.lang.Long].longValue()
-      case 3 => GraftDataSource.microsOf(x.asInstanceOf[java.time.LocalDateTime])
-      case 8 => x.asInstanceOf[java.math.BigDecimal]
-        .setScale(spec.scale).unscaledValue().longValueExact()
-      case 2 => x.asInstanceOf[java.lang.Integer].intValue()
-      case 4 => GraftDataSource.daysOf(x).getOrElse(
-        throw new IllegalArgumentException(s"bad DATE key value $x"))
-      case 9 => if (x.asInstanceOf[java.lang.Boolean]) 1 else 0
-      case _ => x.asInstanceOf[String]
-    }
-    val keySet: Set[Seq[Any]] = keyRows.map(r =>
-      keys.indices.map(i => storedKeyOf(r.get(i), visible(keyVis(i))))).toSet
+    val keySpecs = keyVis.map(visible)
+    val keySet: Set[Seq[Any]] = keyRows.map(r => keys.indices.map { i =>
+      Kinds(keySpecs(i).kind).storedValue(r.get(i), keySpecs(i))
+    }).toSet
     val keySetB = spark.sparkContext.broadcast(keySet)
 
-    // container admission: per-column IN over the external key values —
-    // implied conjuncts of key membership (zone maps, dicts, bucket
-    // facts all apply). Above the IN cap, per-column [min, max] RANGE
-    // conjuncts take over (also implied by membership): bounded-size
+    // container admission: per-column IN over the stored keys — implied
+    // conjuncts of key membership (zone maps, dicts, bucket facts all
+    // apply). Above the IN cap, per-column [min, max] RANGE conjuncts on
+    // ordered kinds take over (also implied by membership): bounded-size
     // admission at ANY source size, so key-sorted/clustered tables keep
     // pruning whole containers outside the source's key range.
-    val admission: Seq[org.apache.spark.sql.sources.Filter] =
-      if (keyRows.isEmpty) Nil
-      else {
-        import org.apache.spark.sql.{sources => sf}
-        val raw: Seq[sf.Filter] =
-          if (keyRows.length <= 4096)
-            keys.indices.map(i =>
-              sf.In(keys(i), keyRows.map(_.get(i)).distinct.toArray))
-          else keys.indices.flatMap { i =>
-            // one Spark type per column, so values are mutually
-            // comparable; booleans get no range proof (and need none)
-            val vs = keyRows.map(_.get(i))
-            def lt(a: Any, b: Any): Boolean = (a, b) match {
-              case (x: java.lang.Long, y: java.lang.Long) => x < y
-              case (x: java.lang.Integer, y: java.lang.Integer) => x < y
-              case (x: String, y: String) => x.compareTo(y) < 0
-              case (x: java.math.BigDecimal, y: java.math.BigDecimal) =>
-                x.compareTo(y) < 0
-              case (x: java.time.LocalDateTime, y: java.time.LocalDateTime) =>
-                x.isBefore(y)
-              case (x: java.sql.Date, y: java.sql.Date) => x.before(y)
-              case (x: java.time.LocalDate, y: java.time.LocalDate) =>
-                x.isBefore(y)
-              case _ => false
-            }
-            val comparable = vs.head match {
-              case _: java.lang.Long | _: java.lang.Integer | _: String |
-                   _: java.math.BigDecimal | _: java.time.LocalDateTime |
-                   _: java.sql.Date | _: java.time.LocalDate => true
-              case _ => false
-            }
-            if (!comparable) Nil
-            else {
-              val lo = vs.reduceLeft((a, b) => if (lt(b, a)) b else a)
-              val hi = vs.reduceLeft((a, b) => if (lt(a, b)) b else a)
-              Seq(sf.GreaterThanOrEqual(keys(i), lo),
-                sf.LessThanOrEqual(keys(i), hi))
-            }
-          }
-        GraftDataSource.translateFilters(raw.toArray,
-          GraftDataSource.layoutOf(st)).toSeq
+    val admission: Seq[org.apache.spark.sql.sources.Filter] = {
+      import org.apache.spark.sql.{sources => sf}
+      if (keySet.isEmpty) Nil
+      else if (keySet.size <= 4096)
+        keys.indices.map(i => sf.In(keys(i), keySet.map(_(i)).toArray))
+      else keys.indices.flatMap { i =>
+        val k = Kinds(keySpecs(i).kind)
+        if (!k.ordered) Nil
+        else {
+          val vs = keySet.iterator.map(_(i).asInstanceOf[Number].longValue()).toSeq
+          Seq(sf.GreaterThanOrEqual(keys(i), k.box(vs.min)),
+            sf.LessThanOrEqual(keys(i), k.box(vs.max)))
+        }
       }
+    }
     val defaultNames = GraftDataSource.schema.fieldNames.toSeq
     val affected =
       if (keyRows.isEmpty) Nil
@@ -824,20 +777,14 @@ object GraftMaintenance {
           .map { case (m0, bin) =>
             val c2 = ContainerIO.confFrom(confKv)
             val m = Manifests.loadChunkIndex(c2, path, m0)
-            val storedChain: Seq[(String, Int)] =
-              if (m.schemaCols.isEmpty)
-                ColumnarEngine.DefaultSchema.map(s => (s.name, s.packed))
-              else m.schemaCols
+            val schema = GraftDataSource.specsOfManifest(m)
             val keyFull = keyVisSer.map(visPosSer)
-            if (keyFull.exists(_ >= storedChain.size))
+            if (keyFull.exists(_ >= schema.size))
               // the container predates a key column: all-null keys,
               // nothing can match
               (m.name, null: PartManifest, 0L)
             else {
-              val schema = storedChain.map { case (n, k) =>
-                ColumnSpec.fromPacked(n, k) }
-              val matcher = new StoredKeyMatcher(
-                keyFull.map(storedChain), keySetB.value)
+              val matcher = new StoredKeyMatcher(keyFull.map(schema), keySetB.value)
               val (pm, dropped) = rewriteBin(c2, path, Seq(m), schema,
                 m.digestCol, s"merge-$runId-$bin", bin, drop = matcher)
               if (dropped == 0L) {
@@ -894,20 +841,17 @@ object GraftMaintenance {
     */
   private def rewriteUpdate(conf: org.apache.hadoop.conf.Configuration,
                             path: String, m: ParsedManifest,
-                            chainCols: Seq[(String, Int)],
+                            chain: Seq[ColumnSpec],
                             visPositions: Seq[Int],
                             matcher: StoredRowMatcher,
                             assigns: Seq[(Int,
                               org.apache.spark.sql.catalyst.expressions.Expression)],
                             targetOrds: Seq[Int],
                             partName: String, bin: Int): (PartManifest, Long) = {
-    val chainSpecs = chainCols.map { case (n, k) => ColumnSpec.fromPacked(n, k) }
-    val containerSpecs: Seq[ColumnSpec] =
-      if (m.schemaCols.isEmpty) ColumnarEngine.DefaultSchema
-      else m.schemaCols.map { case (n, k) => ColumnSpec.fromPacked(n, k) }
+    val containerSpecs = GraftDataSource.specsOfManifest(m)
     // the visible row's field i is the chain's live column i
     val enc = new ColumnarEngine.PartitionEncoder(bin, path, conf,
-      partName = partName, schema = chainSpecs)
+      partName = partName, schema = chain)
     // read EVERY live column of the container (full rewrite)
     val needed = Lane.ofSpecs(containerSpecs)
     val ancestors = Manifests.capAncestors(
@@ -1330,24 +1274,24 @@ private[sources] trait RowDropper extends Serializable {
 }
 
 /** Key-set membership over decoded STORED rows (the upsert matcher): a
-  * row matches when its key tuple — each component normalized to the
-  * stored representation (unscaled/micros/days/0-1) — is in `keySet`.
+  * row matches when its key tuple — each component its lane value, the
+  * stored form [[graft.engine.Kind.storedValue]] gave the keys — is in
+  * `keySet`.
   * Rows with a NULL key component never match (SQL join semantics).
   */
 private[sources] final class StoredKeyMatcher(
-    keyCols: Seq[(String, Int)], keySet: Set[Seq[Any]]) extends RowDropper {
+    keyCols: Seq[ColumnSpec], keySet: Set[Seq[Any]]) extends RowDropper {
   import graft.engine.DecodedChunk
 
   @transient private lazy val getters: Array[(DecodedChunk, Int) => Any] =
-    keyCols.toArray.map { case (n0, packed) =>
-      val s = graft.engine.ColumnSpec.fromPacked(n0, packed)
+    keyCols.toArray.map { s =>
       val n = s.name
-      val get: (DecodedChunk, Int) => Any = s.kind match {
-        case 0 | 3 | 8 => (c, j) => c.col(n).longs(j)
-        case 2 | 4 | 9 => (c, j) => c.col(n).ints(j)
-        case 1 => (c, j) => c.col(n).bytes.string(j)
+      val get: (DecodedChunk, Int) => Any = s.lane match {
+        case Lane.Longs => (c, j) => c.col(n).longs(j)
+        case Lane.Ints => (c, j) => c.col(n).ints(j)
+        case Lane.Bytes => (c, j) => c.col(n).bytes.string(j)
         case other => throw new IllegalStateException(
-          s"unsupported upsert key kind $other for '$n'")
+          s"unsupported upsert key lane ${other.label} for '$n'")
       }
       if (s.nullable) (c: DecodedChunk, j: Int) =>
         if (c.validAt(n, j)) get(c, j) else null
@@ -1370,9 +1314,9 @@ private[sources] final class StoredKeyMatcher(
 /** Evaluates a Catalyst predicate — resolved against the table's CURRENT
   * schema and bound to positional ordinals — on decoded STORED rows of
   * one container (the copy-on-write DELETE row filter). Positions the
-  * container covers are surfaced in Spark's internal representation per
-  * kind (micros/days for temporals, unscaled [[Decimal]], UTF8String
-  * slices over the decoded pool — no String materialization); positions
+  * container covers are surfaced in Spark's internal representation
+  * ([[graft.engine.Kind.internalValue]]: UTF8String views over the
+  * decoded pool, no String materialization); positions
   * past the container's width (add-only evolution) stay null, matching
   * the reader's null-fill. Ships to tasks with the bound expression;
   * the generated predicate and per-column getters build lazily on the
@@ -1380,7 +1324,7 @@ private[sources] final class StoredKeyMatcher(
   */
 private[sources] final class StoredRowMatcher(
     bound: org.apache.spark.sql.catalyst.expressions.Expression,
-    containerCols: Seq[(String, Int)], width: Int) extends RowDropper {
+    containerCols: Seq[ColumnSpec], width: Int) extends RowDropper {
   import graft.engine.DecodedChunk
 
   @transient private lazy val pred = {
@@ -1390,33 +1334,10 @@ private[sources] final class StoredRowMatcher(
   }
 
   @transient private lazy val getters: Array[(DecodedChunk, Int) => Any] =
-    containerCols.toArray.map { case (n0, packed) =>
-      val s = graft.engine.ColumnSpec.fromPacked(n0, packed)
+    containerCols.toArray.map { s =>
       val n = s.name
-      val get: (DecodedChunk, Int) => Any = s.kind match {
-        case 0 | 3 => (c, j) => c.col(n).longs(j)
-        case 2 | 4 => (c, j) => c.col(n).ints(j)
-        case 5 => (c, j) => c.col(n).doubles(j)
-        case 8 => (c, j) => org.apache.spark.sql.types.Decimal
-          .createUnsafe(c.col(n).longs(j), s.precision, s.scale)
-        case 9 => (c, j) => c.col(n).ints(j) != 0
-        case 10 => (c, j) => java.lang.Float.valueOf(
-          graft.codecs.FloatBits.fromSortableInt(c.col(n).ints(j)))
-        case 1 => (c, j) => {
-          val u = c.col(n).bytes
-          org.apache.spark.unsafe.types.UTF8String
-            .fromBytes(u.pool, u.offsets(j), u.lens(j))
-        }
-        case 6 => (c, j) => {
-          val u = c.col(n).bytes
-          java.util.Arrays.copyOfRange(u.pool, u.offsets(j),
-            u.offsets(j) + u.lens(j))
-        }
-        case 7 => (c, j) => org.apache.spark.sql.catalyst.expressions
-          .UnsafeArrayData.fromPrimitiveArray(c.col(n).floats.slice(j))
-        case other => throw new IllegalStateException(
-          s"unknown column kind $other for '$n'")
-      }
+      val value = Kinds(s.kind).internalValue(s)
+      val get: (DecodedChunk, Int) => Any = (c, j) => value(c.col(n), j)
       if (s.nullable) (c: DecodedChunk, j: Int) =>
         if (c.validAt(n, j)) get(c, j) else null
       else get

@@ -71,6 +71,15 @@ class DecimalBoolSpec extends AnyFunSuite {
       .filter(col("amount") > lit(new java.math.BigDecimal("10.005")))
     assert(fine.count() ===
       (0 until 400).count(i => i * 25L > 1000L))
+    // an IN member beyond long range equals no stored value: it is
+    // dropped and the rest of the IN still pushes
+    val layout = GraftDataSource.layoutOf(schema)
+    val in = org.apache.spark.sql.sources.In("amount",
+      Array[Any](bd(75), new java.math.BigDecimal("1e30")))
+    val Array(t) = GraftDataSource.translateFilters(Array(in), layout)
+    assert(t === org.apache.spark.sql.sources.In("amount",
+      Array[Any](java.lang.Long.valueOf(75L))), t)
+    assert(GraftDataSource.pushable(t, layout))
   }
 
   test("boolean equality pushes down; IS NULL semantics on nullable cols") {

@@ -187,23 +187,47 @@ class DeleteSpec extends AnyFunSuite {
       StructField("id", LongType, nullable = false),
       StructField("amount", DecimalType(12, 2), nullable = false),
       StructField("flag", BooleanType, nullable = false),
-      StructField("ts", TimestampNTZType, nullable = false)))
+      StructField("ts", TimestampNTZType, nullable = false),
+      StructField("n", IntegerType, nullable = false),
+      StructField("day", DateType, nullable = false),
+      StructField("score", DoubleType, nullable = false),
+      StructField("payload", BinaryType, nullable = false),
+      StructField("vec", ArrayType(FloatType, containsNull = false),
+        nullable = false)))
+    // amount/flag/ts match i in {51, 54, ..., 78}; each newer column fails
+    // on its own residue (n: multiples of 7, day: i % 11 < 3, score:
+    // multiples of 17, payload: i % 23 < 2, vec: multiples of 5), so every
+    // conjunct is the only one some row fails
     val rows = (0 until 100).map { i =>
       Row(i.toLong, new java.math.BigDecimal(s"$i.25"), i % 3 == 0,
-        java.time.LocalDateTime.of(2026, 1, 1, 0, 0).plusMinutes(i.toLong))
+        java.time.LocalDateTime.of(2026, 1, 1, 0, 0).plusMinutes(i.toLong),
+        i, java.sql.Date.valueOf(java.time.LocalDate.of(2026, 1, 1)
+          .plusDays((i % 11) * 3L)),
+        (i % 17) * 25.0, Array.fill(i % 23)(i.toByte),
+        Seq.fill(if (i % 5 == 0) 3 else 2)(i.toFloat))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 2), schema)
-      .write.format("graft").mode("append").save(d)
-    val n = GraftMaintenance.delete(spark, d,
-      "amount > 49.90 AND flag = true AND ts < timestamp'2026-01-01T01:20:00'")
-    // matching ids: i > 49 (amount i.25 > 49.90), i % 3 == 0, i < 80
-    val expect = (0 until 100).count(i => i > 49 && i % 3 == 0 && i < 80)
+    def df() =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 2), schema)
+    df().write.format("graft").mode("append").save(d)
+    // one conjunct per kind: every StoredRowMatcher getter feeds the
+    // predicate
+    val conjuncts = Seq("amount > 49.90", "flag = true",
+      "ts < timestamp'2026-01-01T01:20:00'", "n % 7 <> 0",
+      "day >= date'2026-01-10'", "score > 20.0", "length(payload) > 1",
+      "size(vec) = 2")
+    def matching(cs: Seq[String]) = df().filter(expr(cs.mkString(" AND "))).count()
+    val p = conjuncts.mkString(" AND ")
+    val expect = matching(conjuncts)
+    assert(expect > 0)
+    // each conjunct alone decides some row: a getter that always passes
+    // would delete more
+    conjuncts.foreach(c =>
+      assert(matching(conjuncts.filterNot(_ == c)) > expect, s"$c decides no row"))
+    val n = GraftMaintenance.delete(spark, d, p)
     assert(n === expect)
     val left = spark.read.format("graft").load(d)
     assert(left.count() === 100 - expect)
-    assert(left.filter(expr(
-      "amount > 49.90 AND flag = true AND ts < timestamp'2026-01-01T01:20:00'"
-    )).count() === 0)
+    assert(left.filter(expr(p)).count() === 0)
   }
 
   test("epoch replay AFTER delete is dropped whole: deleted rows can " +

@@ -197,8 +197,9 @@ class GraftSourceSpec extends AnyFunSuite {
     // data), execution must fail retriable-loud, never fold a wrong MIN
     val confKv = graft.engine.ContainerIO.confSnapshot(
       spark.sparkContext.hadoopConfiguration)
+    val tagSpec = graft.engine.ColumnSpec("tag", graft.engine.Kinds.STRING.id)
     val raceScan = new GraftAggScan(dMixed,
-      Seq(MinAgg("tag", StringType), MaxAgg("tag", StringType)), confKv)
+      Seq(MinAgg(tagSpec), MaxAgg(tagSpec)), confKv)
     val ex = intercept[IllegalStateException](raceScan.planInputPartitions())
     assert(ex.getMessage.contains("retry the query"), ex.getMessage)
   }

@@ -92,6 +92,42 @@ class UpsertSpec extends AnyFunSuite {
         x.getLong(2))).toSeq
     assert(r === Seq(("eu", "1.50", 100L), ("eu", "2.50", 2L),
       ("us", "1.50", 3L), ("us", "9.99", 200L)))
+
+    // the other keyable kinds: INT, TIMESTAMP_NTZ, DATE and BOOLEAN keys
+    val tSchema = StructType(Seq(
+      StructField("i", IntegerType, nullable = false),
+      StructField("ts", TimestampNTZType, nullable = false),
+      StructField("day", DateType, nullable = false),
+      StructField("flag", BooleanType, nullable = false),
+      StructField("n", LongType, nullable = false)))
+    val t0 = java.time.LocalDateTime.of(2026, 3, 1, 12, 0)
+    val d0 = java.time.LocalDate.of(2026, 3, 1)
+    def trow(k: Int, n: Long) = Row(k, t0.plusSeconds(k.toLong),
+      java.sql.Date.valueOf(d0.plusDays(k.toLong)), k % 2 == 0, n)
+    def tdf(rows: Seq[Row]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), tSchema)
+    def readBack(dk: String): Seq[(Int, Long)] =
+      spark.read.format("graft").load(dk).select("i", "n").collect()
+        .map(x => (x.getInt(0), x.getLong(1))).toSeq.sorted
+    Seq("i", "ts", "day").foreach { key =>
+      val dk = tmp(s"typed-$key")
+      tdf((0 until 10).map(k => trow(k, k.toLong)))
+        .write.format("graft").mode("append").save(dk)
+      // keys 7..11: 7, 8, 9 replace, 10 and 11 insert
+      val (rk, ak) = GraftMaintenance.upsert(spark, dk,
+        tdf((7 until 12).map(k => trow(k, 100L + k))), Seq(key))
+      assert(rk === 3L && ak === 5L, key)
+      assert(readBack(dk) === (0 until 7).map(k => (k, k.toLong)) ++
+        (7 until 12).map(k => (k, 100L + k)), key)
+    }
+    val db = tmp("typed-flag")
+    tdf(Seq(trow(0, 0L), trow(1, 1L)))
+      .write.format("graft").mode("append").save(db)
+    // flag = true (k = 2) replaces the k = 0 row; the false row stays
+    val (rb, ab) = GraftMaintenance.upsert(spark, db, tdf(Seq(trow(2, 102L))),
+      Seq("flag"))
+    assert(rb === 1L && ab === 1L)
+    assert(readBack(db) === Seq((1, 1L), (2, 102L)))
   }
 
   test("upsert keys resolve through renames (current names, stored " +
@@ -143,6 +179,26 @@ class UpsertSpec extends AnyFunSuite {
     assert(r.count() === 2000 + 2000 - 2000 + 5000)
     assert(r.filter(col("id") === 100500L).select("tag")
       .collect().head.getString(0).startsWith("b"))
+
+    // the same on a TIMESTAMP_NTZ key: 5000 keys past the cap, all inside
+    // the low container's time range
+    val tsSchema = StructType(Seq(
+      StructField("ts", TimestampNTZType, nullable = false),
+      StructField("tag", StringType, nullable = false)))
+    val base = java.time.LocalDateTime.of(2026, 1, 1, 0, 0)
+    def tsdf(ids: Seq[Long], tag: String) = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        ids.map(i => Row(base.plusSeconds(i), s"$tag$i")), 1), tsSchema)
+    val dt = tmp("range-ts")
+    tsdf(0L until 2000L, "a").write.format("graft").mode("append").save(dt)
+    tsdf(100000L until 102000L, "b").write.format("graft").mode("append").save(dt)
+    val beforeTs = names(dt)
+    val (repTs, appTs) = GraftMaintenance.upsert(spark, dt,
+      tsdf(0L until 5000L, "u"), Seq("ts"))
+    assert(repTs === 2000L && appTs === 5000L)
+    assert((beforeTs intersect names(dt)).size === 1,
+      "range admission must keep the far TIMESTAMP_NTZ container's manifest untouched")
+    assert(spark.read.format("graft").load(dt).count() === 2000 + 5000)
   }
 
   test("guards: duplicate source keys, null keys, schema mismatch") {
