@@ -35,9 +35,9 @@ final case class ColumnMetric(column: String, codec: String,
   * actually contain nulls (kind byte flagged with 0x80); all-present
   * chunks of a nullable column stay in the plain layout. In the
   * manifest's `schema` array the flag is packed into the kind int as bit
-  * 7 ([[ColumnSpec.packed]]) so legacy parsers' `(name, kind)` shape is
-  * preserved; decimal precision and scale pack into bits 8-15 and 16-23
-  * of the same int (zero for every other kind).
+  * 7 ([[ColumnSpec.packed]]), so each entry stays one `(name, kind)`
+  * pair; decimal precision and scale pack into bits 8-15 and 16-23 of
+  * the same int (zero for every other kind).
   */
 final case class ColumnSpec(name: String, kind: Int, nullable: Boolean = false,
                             precision: Int = 0, scale: Int = 0,
@@ -815,7 +815,6 @@ object ColumnarEngine {
     // task per indexed chunk, so a single giant container decodes across
     // tasks instead of serializing on one (round 5 planned one task per
     // CONTAINER here, which was right only when containers ≈ partitions).
-    // Legacy manifests without a chunk index stream their whole file.
     val planConf = ContainerIO.confFrom(confKv)
     val tasks = Manifests.readCommitted(planConf, outDir)
       .filter(_.rows > 0)
@@ -826,8 +825,7 @@ object ColumnarEngine {
       .map(Manifests.loadChunkIndex(planConf, outDir, _))
       .flatMap { m =>
         val file = m.blockFile(outDir)
-        if (m.chunkIndex.isEmpty) Seq((file, Seq.empty[ChunkStats]))
-        else m.chunkIndex.map(cs => (file, Seq(cs)))
+        m.chunkIndex.map(cs => (file, cs))
       }
     val needed = Lane.ofSpecs(DefaultSchema)
     // parallelize places exactly one chunk task per partition WITHOUT
@@ -836,12 +834,12 @@ object ColumnarEngine {
     // ~0.1 s/job of pure scheduling at n=8)
     val rdd = spark.sparkContext
       .parallelize(tasks, math.max(tasks.size, 1))
-      .flatMap { case (file, chunkIndex) =>
+      .flatMap { case (file, cs) =>
         val (in, fileLen) =
           ContainerFormat.open(file, ContainerIO.confFrom(confKv))
         Option(TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit](_ => in.close()))
-        ContainerFormat.chunks(in, fileLen, file, chunkIndex, needed).flatMap { chunk =>
+        ContainerFormat.chunks(in, fileLen, file, Seq(cs), needed).flatMap { chunk =>
           ContainerFormat.verifyContentDigest(chunk)
           // typed rows need Java Strings: materialize each column once
           val Seq(repo, pth, cmt, lng, content) =

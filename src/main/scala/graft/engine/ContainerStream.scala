@@ -193,9 +193,11 @@ private[graft] trait ChunkRange {
   def crcs: Map[String, Long]
 }
 
-/** Streaming parse of the container format (prelude + chunks), shared by
-  * every read of a container: the DSv2 reader, the engine decode, and
-  * maintenance rewrites.
+/** Streaming parse of the container format, shared by every read of a
+  * container: the DSv2 reader, the engine decode, and maintenance
+  * rewrites. A container is a prelude (magic + part id) followed by
+  * chunks; reads address chunks only through the byte ranges of the
+  * manifest's chunk index, so the prelude is written but never parsed.
   */
 private[graft] object ContainerFormat {
 
@@ -209,14 +211,6 @@ private[graft] object ContainerFormat {
     */
   final val MaxBlockBytes: Long = 256L << 20
 
-  /** Magic + part id; returns the part id. */
-  def readPrelude(ci: ContainerInput): Long = {
-    val magic = ci.readFullyBytes(ColumnarEngine.Magic.length)
-    require(java.util.Arrays.equals(magic, ColumnarEngine.Magic),
-      "bad container magic")
-    ci.readVarint()
-  }
-
   /** Open a container file: its input stream and length. */
   def open(file: String, conf: org.apache.hadoop.conf.Configuration)
       : (FSDataInputStream, Long) = {
@@ -226,15 +220,14 @@ private[graft] object ContainerFormat {
     (fs.open(p), len)
   }
 
-  /** The decoded chunks of one open container: the indexed `ranges` when
-    * given (each range must lie inside the file, parse to exactly its
-    * end, and hold its indexed row count), else the whole file streamed
-    * from its prelude (legacy manifests without a chunk index).
+  /** The decoded chunks of one open container at the indexed `ranges`:
+    * each range must lie inside the file, parse to exactly its end, and
+    * hold its indexed row count.
     */
   def chunks(in: FSDataInputStream, fileLen: Long, file: String,
              ranges: Seq[ChunkRange],
              needed: Map[String, Lane]): Iterator[DecodedChunk] =
-    if (ranges.nonEmpty) ranges.iterator.map { cs =>
+    ranges.iterator.map { cs =>
       require(cs.offset >= 0 && cs.length >= 0 && cs.offset + cs.length <= fileLen,
         s"chunk range [${cs.offset}, +${cs.length}) overruns $file ($fileLen bytes)")
       val ci = new ContainerInput(in, cs.offset, cs.offset + cs.length)
@@ -242,13 +235,6 @@ private[graft] object ContainerFormat {
       require(ci.atEnd, s"chunk at ${cs.offset} shorter than its indexed length")
       require(chunk.rows == cs.rows, s"chunk at ${cs.offset} row count mismatch")
       chunk
-    } else {
-      val ci = new ContainerInput(in, 0L, fileLen)
-      readPrelude(ci)
-      new Iterator[DecodedChunk] {
-        override def hasNext: Boolean = !ci.atEnd
-        override def next(): DecodedChunk = readChunk(ci, needed, Map.empty)
-      }
     }
 
   /** Parse one chunk starting at the cursor. Non-needed column blocks are

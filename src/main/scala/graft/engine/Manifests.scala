@@ -29,10 +29,10 @@ import org.apache.hadoop.conf.Configuration
   *  - `nullCounts`:  column -> number of NULL rows in the chunk, recorded
   *                   for every NULLABLE column (0 included — the explicit
   *                   zero is what makes `IS NULL` pruning proof-based: an
-  *                   ABSENT entry means "written before null counts" and
-  *                   must admit). `IS NOT NULL` skips all-null chunks
-  *                   (count == rows); `IS NULL` skips fully-present ones
-  *                   (count == 0).
+  *                   ABSENT entry — a non-nullable column, or one the
+  *                   container predates — must admit). `IS NOT NULL`
+  *                   skips all-null chunks (count == rows); `IS NULL`
+  *                   skips fully-present ones (count == 0).
   */
 final case class ChunkStats(
     offset: Long, length: Long, rows: Int,
@@ -94,10 +94,11 @@ object ManifestEnvelope {
 }
 
 /** Driver-side view of one committed partition manifest. `schemaCols`
-  * is (name, kind 0=long/1=string) in table order — empty for legacy
-  * (pre-round-5) manifests, which are always the engine's
-  * [[ColumnarEngine.DefaultSchema]]; `digestCol` names the string column
-  * whose per-row sha256 feeds the chunk digests ("" = none).
+  * is the container's own schema, (name, [[ColumnSpec.packed]] kind) in
+  * table order; `digestCol` names the string column whose per-row
+  * sha256 feeds the chunk digests ("" = none). [[Manifests.parse]]
+  * guarantees both, and a chunk index (inline or elided) whenever
+  * `rows > 0`.
   *
   * Two-level metadata (round 8): entries read from the consolidated
   * index carry `chunksElided = true` — their per-chunk stats were
@@ -113,8 +114,8 @@ final case class ParsedManifest(
     rawBytes: Long, encodedBytes: Long, digest: String,
     longRanges: Map[String, (Long, Long)],
     chunkIndex: Seq[ChunkStats],
-    schemaCols: Seq[(String, Int)] = Nil,
-    digestCol: String = "content",
+    schemaCols: Seq[(String, Int)],
+    digestCol: String,
     ancestors: Seq[String] = Nil,
     commitId: String = "",
     commitParts: Int = 0,
@@ -124,11 +125,6 @@ final case class ParsedManifest(
     bucketIds: Map[String, Set[Int]] = Map.empty,
     schemaMarker: Boolean = false) {
   def blockFile(tableDir: String): String = s"$tableDir/blocks/part-$name.gblk"
-
-  /** Does this container HAVE a chunk index (inline or elided)? False
-    * only for legacy whole-container-stream manifests.
-    */
-  def hasChunkIndex: Boolean = chunksElided || chunkIndex.nonEmpty
 
   /** Container-level stats fold: the stored summary when elided, else
     * computed from the inline chunk index (identical by construction).
@@ -155,9 +151,8 @@ final case class ParsedManifest(
   * concurrent appends — two batch jobs, or a streaming-sink epoch next
   * to a batch append — can never drop each other's manifests (round 4's
   * single-file read-modify-write could). Readers take the highest
-  * version, fall back to the legacy unversioned `_manifest-index.json`
-  * (pre-round-5 tables), then to listing `manifests/` (mid-encode resume
-  * reads). At true 10^12-file scale the snapshot itself would be
+  * version, else list `manifests/` (mid-encode resume, disaster
+  * recovery). At true 10^12-file scale the snapshot itself would be
   * sharded/partitioned Iceberg-style; one file per snapshot is right up
   * to ~10^5 partitions.
   */
@@ -173,8 +168,6 @@ object Manifests {
     * UPPER bounds are unsafe without parquet-style increment logic).
     */
   final val StrValueCap = 64
-
-  final val IndexFile = "_manifest-index.json"
 
   /** Logical partition identity of a (staged) container name: the
     * attempt-qualifying `-a<taskId>` suffix stripped (a replayed epoch
@@ -255,7 +248,7 @@ object Manifests {
         val e = j.indexOf('"', s)
         if (e > s) j.substring(s, e) else ""
       } else if (!j.contains("\"commitId\"")) "" // unstamped (engine encode)
-      else parseWithFallback(j).commitId // non-canonical order: full parse
+      else parse(j).commitId // non-canonical order: full parse
     val prev = readCommittedJsons(conf, tableDir).iterator
       .map(j => idOf(j).takeWhile(_.isDigit))
       .filter(f => f.nonEmpty && f.length <= 17)
@@ -286,10 +279,10 @@ object Manifests {
 
   /** Normalize a `manifests/` LISTING into a consistent snapshot. The
     * versioned index is the authority; the listing is the fallback
-    * (legacy tables, mid-encode resume, disaster recovery) and can
-    * contain stale commit markers from crash windows — a publish or
-    * compaction that died between its index commit and its cleanup
-    * deletes. Resurrecting those doubles rows, so:
+    * (mid-encode resume, disaster recovery) and can contain stale commit
+    * markers from crash windows — a publish or compaction that died
+    * between its index commit and its cleanup deletes. Resurrecting
+    * those doubles rows, so:
     *
     *  1. among PLAIN manifests (no ancestors) sharing an epoch, only
     *     the newest commit generation is kept — an epoch replay may
@@ -303,7 +296,7 @@ object Manifests {
     *     generation are dropped (their rows live in it).
     */
   private[engine] def normalizeFallback(jsons: Seq[String]): Seq[String] = {
-    val parsed = jsons.map(parseWithFallback)
+    val parsed = jsons.map(parse)
     if (parsed.forall(_.ancestors.isEmpty) &&
         parsed.map(m => epochKey(logicalName(m.name))).distinct.size ==
           parsed.size) return jsons // common shape: nothing to normalize
@@ -312,8 +305,8 @@ object Manifests {
     // newest COMPLETE generation per plain epoch: a generation whose
     // recorded commitParts exceeds the manifests present is a publish
     // that crashed mid-stage — it must never beat the complete
-    // committed generation below it (commitParts 0 = legacy/unknown,
-    // treated as complete)
+    // committed generation below it (commitParts 0 = an unstamped
+    // engine-encode manifest, treated as complete)
     val keptPlain = plain.groupBy(p => epochKey(logicalName(p._2.name)))
       .values.flatMap { group =>
         val gens = group.groupBy(_._2.commitId).toSeq
@@ -328,19 +321,16 @@ object Manifests {
         // index (a crashed publish is retried by its job/stream anyway)
         gens.find(g => complete(g._2)).map(_._2).getOrElse(Nil)
       }.toSeq
-    // compacted generations, newest first, no overlapping coverage.
-    // Coverage keys include epochKey of each stored ancestor so
-    // manifests written when ancestors were per-container logical
-    // names (pre-commit-generation format) still match
+    // compacted generations, newest first, no overlapping coverage
+    // (stored ancestors are epoch keys, so coverage is exact key match)
     var covered = Set.empty[String]
     val keptCompacts = compacts
       .sortBy(p => (p._2.commitId, p._2.name))(Ordering.Tuple2(
         Ordering.String.reverse, Ordering.String.reverse))
       .filter { p =>
         val anc = p._2.ancestors.toSet
-        val ancKeys = anc ++ anc.map(epochKey)
-        if ((ancKeys & covered).nonEmpty) false
-        else { covered ++= ancKeys; true }
+        if ((anc & covered).nonEmpty) false
+        else { covered ++= anc; true }
       }
     val out = keptCompacts ++
       keptPlain.filterNot(p => covered.contains(epochKey(logicalName(p._2.name))))
@@ -349,7 +339,6 @@ object Manifests {
     pairs.collect { case (j, pm) if keep(pm.name) => j }
   }
 
-  def indexPath(tableDir: String): String = s"$tableDir/$IndexFile"
   def manifestPath(tableDir: String, name: String): String =
     s"$tableDir/manifests/part-$name.json"
 
@@ -458,8 +447,8 @@ object Manifests {
     // are index-served either way; at worst it leaks until the next
     // consolidate after a genuinely newer commit).
     val listed = listedManifestJsons(conf, tableDir)
-    val parsed = listed.map(parseWithFallback)
-    val keptNames = normalizeFallback(listed).map(parseWithFallback(_).name).toSet
+    val parsed = listed.map(parse)
+    val keptNames = normalizeFallback(listed).map(parse(_).name).toSet
     val maxKept = parsed.filter(m => keptNames(m.name))
       .map(_.commitId).maxOption.getOrElse("")
     val fs = ContainerIO.fs(tableDir, conf)
@@ -486,9 +475,9 @@ object Manifests {
     * `"chunksElided":true` plus the container-level [[ManifestEnvelope]].
     * The full detail stays in the container's own commit marker
     * (`manifests/part-<name>.json`), which planning reads lazily for
-    * admitted containers only. Idempotent; legacy manifests without a
-    * chunk index pass through unchanged (their absence of an index is
-    * itself load-bearing: it means whole-container streaming).
+    * admitted containers only. Idempotent; a manifest without chunks
+    * (a zero-row container, a schema marker) has nothing to elide and
+    * passes through unchanged.
     */
   private[engine] def elideChunks(json: String): String = {
     val om = new ObjectMapper()
@@ -521,7 +510,8 @@ object Manifests {
     * compaction/overwrite superseded the snapshot this plan was built
     * on: surface the controlled retriable error, never a raw
     * FileNotFoundException. No-op for manifests already carrying their
-    * chunk index.
+    * chunk index. A marker that is itself elided has no detail to give
+    * and is rejected, so a corrupt marker never plans as zero chunks.
     */
   def loadChunkIndex(conf: Configuration, tableDir: String,
                      m: ParsedManifest): ParsedManifest =
@@ -530,7 +520,7 @@ object Manifests {
       chunkLoadCounter.incrementAndGet()
       val p = manifestPath(tableDir, m.name)
       val full =
-        try parseWithFallback(new String(ContainerIO.readAll(conf, p),
+        try parse(new String(ContainerIO.readAll(conf, p),
           java.nio.charset.StandardCharsets.UTF_8))
         catch {
           case e: java.io.FileNotFoundException =>
@@ -539,6 +529,8 @@ object Manifests {
                 "concurrent compaction/overwrite since planning; retry " +
                 "the query", e)
         }
+      require(!full.chunksElided,
+        s"manifest ${m.name} lacks required field \"chunkIndex\" in its marker $p")
       m.copy(chunkIndex = full.chunkIndex, chunksElided = false,
         storedEnvelope = None)
     }
@@ -554,22 +546,34 @@ object Manifests {
       .mkString("""{"version":1,"manifests":[""", ",", "]}")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  private def parseIndexJsons(bytes: Array[Byte]): Seq[String] = {
-    val om = new ObjectMapper()
-    val root = om.readTree(new String(bytes,
-      java.nio.charset.StandardCharsets.UTF_8))
+  /** The manifest JSONs of one index snapshot body. Anything but the
+    * shape [[indexBody]] writes — an object with `"version":1` and a
+    * `manifests` array — is corrupt, and so is unparseable JSON: both
+    * fail CONTROLLED (the fuzz contract). Reading such an index as empty
+    * would let the next commit publish that emptiness over the table.
+    */
+  private def parseIndexJsons(bytes: Array[Byte], where: String): Seq[String] = {
+    val root =
+      try new ObjectMapper().readTree(new String(bytes,
+        java.nio.charset.StandardCharsets.UTF_8))
+      catch {
+        case e: com.fasterxml.jackson.core.JacksonException =>
+          throw new IllegalArgumentException(s"corrupt manifest index $where", e)
+      }
+    val version = root.get("version")
     val arr = root.get("manifests")
-    if (arr == null || !arr.isArray) Nil
-    else arr.elements().asScala.map(_.toString).toSeq
+    require(root.isObject && version != null && version.isInt &&
+        version.asInt() == 1 && arr != null && arr.isArray,
+      s"corrupt manifest index $where: expected {\"version\":1,\"manifests\":[...]}")
+    arr.elements().asScala.map(_.toString).toSeq
   }
 
   /** Highest LIVE committed index snapshot: (version, manifest JSONs).
     * Superseded versions are TOMBSTONED (truncated to zero bytes, see
     * [[commitIndex]]) — a tombstone at the top of a stale listing, a
     * vanished file, or a mid-truncation read all retry against a fresh
-    * listing. Version -1 is the legacy unversioned
-    * `_manifest-index.json` (pre-round-5 tables); `None` means no index
-    * exists and callers fall back to listing `manifests/`.
+    * listing. `None` means no versioned index exists and callers fall
+    * back to listing `manifests/`; a corrupt index fails controlled.
     */
   def readIndexSnapshot(conf: Configuration,
                         tableDir: String): Option[(Long, Seq[String])] = {
@@ -577,41 +581,20 @@ object Manifests {
     // stale listing can lose the open-vs-GC race several times in a row
     var tries = 0
     while (tries < 64) {
-      versionedIndexes(conf, tableDir).lastOption match {
-        case None =>
-          val legacy = indexPath(tableDir)
-          if (!ContainerIO.exists(conf, legacy)) return None
-          try {
-            val bytes = ContainerIO.readAll(conf, legacy)
-            if (bytes.nonEmpty) return Some((-1L, parseIndexJsons(bytes)))
-            tries += 1
-          } catch {
-            case _: java.io.FileNotFoundException => tries += 1
-            // status said non-empty but the read hit the truncation: a
-            // concurrent tombstone landed mid-read — retry fresh
-            case _: java.io.EOFException => tries += 1
-            case e: com.fasterxml.jackson.core.JacksonException =>
-              throw new IllegalArgumentException(
-                s"corrupt manifest index $legacy", e)
-          }
-        case Some((v, name)) =>
-          try {
-            val bytes = ContainerIO.readAll(conf, s"$tableDir/$name")
-            // empty = we raced a commit that just tombstoned this
-            // version (max moved past it between our listing and read)
-            if (bytes.nonEmpty) return Some((v, parseIndexJsons(bytes)))
-            tries += 1
-          } catch {
-            case _: java.io.FileNotFoundException => tries += 1
-            // status said non-empty but the read hit the truncation: a
-            // concurrent tombstone landed mid-read — retry fresh
-            case _: java.io.EOFException => tries += 1
-            case e: com.fasterxml.jackson.core.JacksonException =>
-              // persistent corruption is a CONTROLLED failure (the fuzz
-              // contract), not a raw parser exception
-              throw new IllegalArgumentException(
-                s"corrupt manifest index $tableDir/$name", e)
-          }
+      val (v, name) = versionedIndexes(conf, tableDir).lastOption
+        .getOrElse(return None)
+      try {
+        val bytes = ContainerIO.readAll(conf, s"$tableDir/$name")
+        // empty = we raced a commit that just tombstoned this
+        // version (max moved past it between our listing and read)
+        if (bytes.nonEmpty)
+          return Some((v, parseIndexJsons(bytes, s"$tableDir/$name")))
+        tries += 1
+      } catch {
+        case _: java.io.FileNotFoundException => tries += 1
+        // status said non-empty but the read hit the truncation: a
+        // concurrent tombstone landed mid-read — retry fresh
+        case _: java.io.EOFException => tries += 1
       }
     }
     throw new java.io.IOException(
@@ -727,8 +710,7 @@ object Manifests {
                   transform: Seq[String] => Seq[String]): Seq[String] = {
     var attempts = 0
     while (attempts < 64) {
-      val snap = readIndexSnapshot(conf, tableDir)
-      val (ver, cur) = snap.getOrElse(
+      val (ver, cur) = readIndexSnapshot(conf, tableDir).getOrElse(
         (-1L, normalizeFallback(listedManifestJsons(conf, tableDir))))
       val next = ver + 1
       beforeClaimHook()
@@ -770,8 +752,6 @@ object Manifests {
               catch { case _: java.io.IOException => () }
             }
           }
-          if (ver == -1L && snap.isDefined) // migrated off the legacy file
-            f.delete(new org.apache.hadoop.fs.Path(indexPath(tableDir)), false)
           return cur
         }
       }
@@ -821,26 +801,34 @@ object Manifests {
       parseLongRanges(n.get("longRanges")), dicts, sranges, crcs, nulls)
   }
 
-  /** Parse one manifest JSON; `fallbackName` covers legacy manifests
-    * written before the `name` field existed (derived from the filename).
-    * Any malformation — parser errors AND structurally-wrong-but-valid
-    * JSON (an NPE from a mutated field) — surfaces as
+  /** Parse one manifest JSON — the one place every read path (index,
+    * listing, hydration) turns manifest bytes into a [[ParsedManifest]].
+    * A manifest must carry what every current writer records: a
+    * non-empty `name`, a non-empty `schema`, a `digestCol`, and, when
+    * `rows > 0`, a chunk index (inline `chunkIndex`, or `chunksElided`
+    * in an index entry); the error names the manifest and the missing
+    * field. Any malformation — parser errors AND structurally-wrong-but-
+    * valid JSON (an NPE from a mutated field) — surfaces as
     * IllegalArgumentException: this runs inside Spark planning/analysis,
     * where a raw exception becomes an opaque internal error (fuzz
     * contract).
     */
-  def parse(json: String, fallbackName: String): ParsedManifest =
-    try parseUnchecked(json, fallbackName)
+  def parse(json: String): ParsedManifest =
+    try parseUnchecked(json)
     catch {
       case e: IllegalArgumentException => throw e
       case scala.util.control.NonFatal(e) =>
         throw new IllegalArgumentException(s"corrupt manifest JSON", e)
     }
 
-  private def parseUnchecked(json: String, fallbackName: String): ParsedManifest = {
+  private def parseUnchecked(json: String): ParsedManifest = {
     val om = new ObjectMapper()
     val root = om.readTree(json)
-    val name = Option(root.get("name")).map(_.asText()).getOrElse(fallbackName)
+    val name = Option(root.get("name")).map(_.asText()).getOrElse("")
+    def need(ok: Boolean, field: String): Unit = require(ok,
+      s"manifest ${if (name.nonEmpty) name else s"part ${jLong(root, "part")}"} " +
+        s"lacks required field \"$field\"")
+    need(name.nonEmpty, "name")
     val ranges = Option(root.get("columns")).filter(_.isArray).map {
       _.elements().asScala.flatMap { c =>
         if (c.get("hasRange") != null && c.get("hasRange").asBoolean(false))
@@ -852,19 +840,23 @@ object Manifests {
     val chunkIndex = Option(root.get("chunkIndex")).filter(_.isArray).map {
       _.elements().asScala.map(parseChunk).toSeq
     }.getOrElse(Nil)
-    val schemaCols = Option(root.get("schema")).filter(_.isArray).map {
-      _.elements().asScala.map { c =>
-        val n = c.get("name")
-        val k = c.get("kind")
-        require(n != null && k != null && k.canConvertToInt,
-          s"corrupt manifest schema entry: $c")
-        (n.asText(), k.asInt())
-      }.toSeq
-    }.getOrElse(Nil)
+    val schema = root.get("schema")
+    need(schema != null && schema.isArray && !schema.isEmpty, "schema")
+    val schemaCols = schema.elements().asScala.map { c =>
+      val n = c.get("name")
+      val k = c.get("kind")
+      require(n != null && k != null && k.canConvertToInt,
+        s"corrupt manifest schema entry: $c")
+      (n.asText(), k.asInt())
+    }.toSeq
+    val digestCol = root.get("digestCol")
+    need(digestCol != null, "digestCol")
     val ancestors = Option(root.get("ancestors")).filter(_.isArray).map {
       _.elements().asScala.map(_.asText()).toSeq
     }.getOrElse(Nil)
     val elided = Option(root.get("chunksElided")).exists(_.asBoolean(false))
+    val rows = jLong(root, "rows")
+    need(rows <= 0 || chunkIndex.nonEmpty || elided, "chunkIndex")
     val envelope = Option(root.get("envelope")).filter(_.isObject).map { e =>
       val sr = Option(e.get("strRanges")).filter(_.isObject)
         .map(_.properties().asScala.map { p =>
@@ -887,12 +879,11 @@ object Manifests {
       .map(_.properties().asScala.map { p =>
         p.getKey -> p.getValue.elements().asScala.map(_.asInt()).toSet
       }.toMap).getOrElse(Map.empty[String, Set[Int]])
-    ParsedManifest(name, jLong(root, "part").toInt, jLong(root, "rows"),
+    ParsedManifest(name, jLong(root, "part").toInt, rows,
       jLong(root, "chunks").toInt, jLong(root, "rawBytes"),
       jLong(root, "encodedBytes"),
       Option(root.get("digest")).map(_.asText()).getOrElse(""),
-      ranges, chunkIndex, schemaCols,
-      Option(root.get("digestCol")).map(_.asText()).getOrElse("content"),
+      ranges, chunkIndex, schemaCols, digestCol.asText(),
       ancestors,
       Option(root.get("commitId")).map(_.asText()).getOrElse(""),
       jLong(root, "commitParts").toInt,
@@ -903,17 +894,8 @@ object Manifests {
       schemaMarker = Option(root.get("schemaMarker")).exists(_.asBoolean(false)))
   }
 
-  /** Parse a manifest JSON whose block-file name falls back to the
-    * numeric `part` field when the `name` field is absent (legacy
-    * pre-round-4 manifests, whose block files were named by part id).
-    */
-  def parseWithFallback(json: String): ParsedManifest = {
-    val m = parse(json, "")
-    if (m.name.nonEmpty) m else m.copy(name = m.part.toString)
-  }
-
   /** Raw manifest JSONs from a `manifests/` listing (tables without an
-    * index: legacy and mid-encode-resume reads).
+    * index: mid-encode-resume and disaster-recovery reads).
     */
   private[engine] def listedManifestJsons(conf: Configuration,
                                           tableDir: String): Seq[String] =
@@ -924,10 +906,10 @@ object Manifests {
 
   /** Every COMMITTED partition of the table: one index read when an
     * index snapshot exists (highest version wins), else a `manifests/`
-    * listing + per-file reads (legacy / mid-encode tables).
+    * listing + per-file reads (mid-encode resume, disaster recovery).
     */
   def readCommitted(conf: Configuration, tableDir: String): Seq[ParsedManifest] =
-    readCommittedJsons(conf, tableDir).map(parseWithFallback)
+    readCommittedJsons(conf, tableDir).map(parse)
 
   // -------------------------------------------------------- time travel
 
@@ -954,12 +936,7 @@ object Manifests {
         s"retained (the table keeps the last ${snapshotRetention(conf)} " +
         "superseded versions; expired earlier if " +
         "graft.system.expire_snapshots ran)")
-    try parseIndexJsons(bytes).map(parseWithFallback)
-    catch {
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        throw new IllegalArgumentException(
-          s"corrupt manifest index $tableDir/$name", e)
-    }
+    parseIndexJsons(bytes, s"$tableDir/$name").map(parse)
   }
 
   /** Highest snapshot version committed at or before `tsMillis` (the
@@ -983,18 +960,20 @@ object Manifests {
 
   /** Names referenced by ANY retained index version (latest included):
     * vacuum's reference set, so a block only a retained time-travel
-    * snapshot still needs survives the sweep.
+    * snapshot still needs survives the sweep. An unreadable or corrupt
+    * snapshot body references nothing.
     */
   def retainedSnapshotNames(conf: Configuration, tableDir: String): Set[String] =
     versionedIndexes(conf, tableDir).iterator.flatMap { case (_, n) =>
-      try {
-        val bytes = ContainerIO.readAll(conf, s"$tableDir/$n")
-        if (bytes.isEmpty) Nil
-        else parseIndexJsons(bytes).map(parseWithFallback(_).name)
-      } catch {
-        case _: java.io.FileNotFoundException => Nil
-        case _: com.fasterxml.jackson.core.JacksonException => Nil
-      }
+      val jsons =
+        try {
+          val bytes = ContainerIO.readAll(conf, s"$tableDir/$n")
+          if (bytes.isEmpty) Nil else parseIndexJsons(bytes, s"$tableDir/$n")
+        } catch {
+          case _: java.io.FileNotFoundException => Nil
+          case _: IllegalArgumentException => Nil
+        }
+      jsons.map(parse(_).name)
     }.toSet
 
   /** Raw committed manifest JSONs (job-commit index merging). */

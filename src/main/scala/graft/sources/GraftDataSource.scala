@@ -99,17 +99,6 @@ object GraftDataSource {
     st.fields.toSeq.map(Kinds.specOf)
   }
 
-  /** Committed schema of an existing table, from its manifests. Legacy
-    * manifests (no schema field) are always the engine schema. With
-    * add-only schema EVOLUTION (round 7) manifests may carry different
-    * widths: every committed schema must be a PREFIX of the widest one
-    * (appends may only add trailing nullable columns), and the widest
-    * is the table's schema — containers written before a column was
-    * added read back all-NULL for it. ANY parse failure surfaces as
-    * IllegalArgumentException — this runs inside Spark's ANALYSIS
-    * phase, where a raw NPE/parser exception would be wrapped as an
-    * opaque internal error (fuzz contract).
-    */
   /** Snapshot pin from read options (time travel, round 8):
     * `versionAsOf` = an explicit retained index version;
     * `timestampAsOf` = epoch millis or `java.sql.Timestamp` syntax,
@@ -138,12 +127,10 @@ object GraftDataSource {
     v.orElse(ts.map(Manifests.versionAt(conf, path, _)))
   }
 
-  /** Per-manifest column specs (legacy = the engine schema). */
+  /** Per-manifest column specs: the container's own recorded schema. */
   private[sources] def specsOfManifest(
       m: ParsedManifest): Seq[graft.engine.ColumnSpec] =
-    if (m.schemaCols.isEmpty) specsOf(schema)
-    else m.schemaCols.map { case (n, k) =>
-      graft.engine.ColumnSpec.fromPacked(n, k) }
+    m.schemaCols.map { case (n, k) => graft.engine.ColumnSpec.fromPacked(n, k) }
 
   /** The table's CURRENT schema from a committed-manifest snapshot
     * (round 8, rename support). Field IDENTITY is positional — sound
@@ -186,6 +173,16 @@ object GraftDataSource {
     }
   }
 
+  /** Committed schema of an existing table, from its manifests. With
+    * add-only schema EVOLUTION (round 7) manifests may carry different
+    * widths: every committed schema must be a PREFIX of the widest one
+    * (appends may only add trailing nullable columns), and the widest
+    * is the table's schema — containers written before a column was
+    * added read back all-NULL for it. ANY parse failure surfaces as
+    * IllegalArgumentException — this runs inside Spark's ANALYSIS
+    * phase, where a raw NPE/parser exception would be wrapped as an
+    * opaque internal error (fuzz contract).
+    */
   private[sources] def inferFrom(path: String,
       conf: org.apache.hadoop.conf.Configuration = null,
       asOf: Option[Long] = None): Option[StructType] = {
@@ -379,8 +376,7 @@ object GraftDataSource {
     * where Java, UTF8String, and DuckDB collation agree. Null counts are
     * recorded for every nullable column (explicit zeros included), so
     * `IS NOT NULL` skips all-null chunks and `IS NULL` skips
-    * fully-present ones; an ABSENT entry (legacy manifest, non-nullable
-    * column) admits.
+    * fully-present ones; an ABSENT entry (a non-nullable column) admits.
     */
   private[sources] def admitChunk(c: ChunkStats, filters: Seq[Filter]): Boolean =
     admit(c.longRanges, filters) && filters.forall {
@@ -402,8 +398,8 @@ object GraftDataSource {
       case _ => true
     }
 
-  /** Container/partition-level numeric zone-map admission (legacy
-    * manifests without a chunk index plan at this granularity). Int
+  /** Numeric zone-map admission over one range map — a chunk's
+    * ([[admitChunk]]) or a whole container's ([[admitManifest]]). Int
     * (kind 2) columns record their ranges in the same map; their filter
     * constants arrive as Integer. Double (kind 5) columns record ranges
     * over their order-preserving sortable-long mapping; a constant maps
@@ -593,7 +589,7 @@ object GraftDataSource {
     * positions this container covers (empty in the common no-renames
     * case, which keeps the fast paths allocation-free). `tableCols` is
     * the table's current schema names in positional order; Nil disables
-    * translation (legacy callers).
+    * translation (callers that address columns by stored name).
     */
   private[sources] def storedNamesOf(m: ParsedManifest,
       tableCols: Seq[String]): Map[String, String] =
@@ -618,13 +614,10 @@ object GraftDataSource {
     * whose rows ALL match the current X IS NULL (round-8 advice, high).
     */
   private[sources] def containerFilters(m: ParsedManifest,
-      filters: Seq[Filter], tableCols: Seq[String],
-      defaultNames: Seq[String]): Option[Seq[Filter]] = {
-    val storedNames: Seq[String] =
-      if (m.schemaCols.isEmpty) defaultNames else m.schemaCols.map(_._1)
+      filters: Seq[Filter], tableCols: Seq[String]): Option[Seq[Filter]] = {
     val present: Set[String] =
-      if (tableCols.isEmpty) storedNames.toSet
-      else tableCols.take(storedNames.size).toSet
+      if (tableCols.isEmpty) m.schemaCols.map(_._1).toSet
+      else tableCols.take(m.schemaCols.size).toSet
     val (covered, uncovered) = filters.partition(_.references.forall(present))
     if (uncovered.exists(!_.isInstanceOf[IsNull])) None
     else {
@@ -707,7 +700,6 @@ object GraftDataSource {
         m
       },
       tableCols: Seq[String] = Nil): Array[InputPartition] = {
-    val defaultNames: Seq[String] = schema.fieldNames.toSeq
     val parts = Array.newBuilder[InputPartition]
     manifests.filterNot(_.schemaMarker).sortBy(_.name).foreach { m =>
       val file = m.blockFile(path)
@@ -716,8 +708,6 @@ object GraftDataSource {
       // the reader translate between the CURRENT names the query uses
       // and this container's stored names, positionally
       val toStored = storedNamesOf(m, tableCols)
-      val storedNames: Seq[String] =
-        if (m.schemaCols.isEmpty) defaultNames else m.schemaCols.map(_._1)
       // add-only schema evolution: a container written before a column
       // was added has no block for it — its rows are all-NULL there. A
       // value predicate or IsNotNull on such a column matches NOTHING in
@@ -728,39 +718,33 @@ object GraftDataSource {
       // and dropped reader-side by effectiveFilters. `present` is in
       // CURRENT-name space (what neededCols/filters use).
       val present: Set[String] =
-        if (tableCols.isEmpty) storedNames.toSet
-        else tableCols.take(storedNames.size).toSet
+        if (tableCols.isEmpty) m.schemaCols.map(_._1).toSet
+        else tableCols.take(m.schemaCols.size).toSet
       val absent = neededCols -- present
-      val admission =
-        containerFilters(m, filters.toSeq, tableCols, defaultNames)
+      val admission = containerFilters(m, filters.toSeq, tableCols)
       if (admission.exists(admitManifest(m, _))) {
         val mFilters = admission.get
         val hm = if (m.chunksElided) hydrate(m) else m
         val digestCur = toStored.collectFirst {
           case (cur, st) if st == m.digestCol => cur
         }.getOrElse(m.digestCol)
-        if (hm.chunkIndex.isEmpty) {
-          // legacy manifest: whole-container sequential stream
-          parts += GraftInputPartition(file, Nil, digestCur, absent, toStored)
-        } else {
-          val admitted = hm.chunkIndex
-            .filter(admitChunk(_, mFilters))
-            .map(c => ChunkSpec(c.offset, c.length, c.rows, c.blockCrcs))
-          var run = List.empty[ChunkSpec]
-          var runBytes = 0L
-          admitted.foreach { c =>
-            if (run.nonEmpty && runBytes + c.length > maxSplitBytes) {
-              parts += GraftInputPartition(file, run.reverse, digestCur,
-                absent, toStored)
-              run = Nil; runBytes = 0L
-            }
-            run = c :: run
-            runBytes += c.length
-          }
-          if (run.nonEmpty)
+        val admitted = hm.chunkIndex
+          .filter(admitChunk(_, mFilters))
+          .map(c => ChunkSpec(c.offset, c.length, c.rows, c.blockCrcs))
+        var run = List.empty[ChunkSpec]
+        var runBytes = 0L
+        admitted.foreach { c =>
+          if (run.nonEmpty && runBytes + c.length > maxSplitBytes) {
             parts += GraftInputPartition(file, run.reverse, digestCur,
               absent, toStored)
+            run = Nil; runBytes = 0L
+          }
+          run = c :: run
+          runBytes += c.length
         }
+        if (run.nonEmpty)
+          parts += GraftInputPartition(file, run.reverse, digestCur,
+            absent, toStored)
       }
     }
     parts.result()
@@ -831,10 +815,11 @@ private[sources] final case class MaxAgg(spec: ColumnSpec) extends GraftAgg {
   override def toString: String = s"MaxAgg(${spec.name},${spec.dataType})"
 }
 /** COUNT(col) = rows − Σ per-chunk null counts (round 7). `nullable`
-  * false = the schema proves zero nulls (count == row count, any kind,
-  * any manifest vintage); true = every committed manifest's chunks were
-  * verified at translate time to carry a null-count entry for `col`
-  * (legacy manifests reject the pushdown instead of undercounting).
+  * false = the schema proves zero nulls (count == row count, any kind);
+  * true = every committed manifest's chunks were verified at translate
+  * time to carry a null-count entry for `col`, or to predate it (a
+  * manifest without the entry rejects the pushdown instead of
+  * undercounting).
   */
 private[sources] final case class CountAgg(col: String,
                                            nullable: Boolean) extends GraftAgg
@@ -864,8 +849,8 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
 
   /** Committed-manifest snapshot for aggregate-pushdown PROOFS:
     * COUNT(col) of a NULLABLE column is answerable only when every
-    * chunk carries a null-count entry for it (a legacy manifest would
-    * silently undercount nulls — reject instead), and string MIN/MAX
+    * chunk carries a null-count entry for it (a manifest without one
+    * would silently undercount nulls — reject instead), and string MIN/MAX
     * only when every chunk carries an all-ASCII range for it (the
     * collation-agreement proof). One driver-side metadata read, same
     * cost class as the schema inference that already happened; lazy at
@@ -938,8 +923,7 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
             committedForStats.exists(_.forall(m =>
               // zero-row tombstones (delete) contribute no values
               m.schemaMarker || m.rows == 0 ||
-                (m.hasChunkIndex && m.env.strRanges
-                  .contains(storedNameIn(m, c))))))
+                m.env.strRanges.contains(storedNameIn(m, c)))))
       }
     def countable(c: String): Option[CountAgg] =
       tableSchema.fields.find(_.name == c).flatMap { f =>
@@ -949,10 +933,8 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
           // a manifest that PREDATES the column (add-only evolution)
           // is all-NULL for it — provable by POSITION (names are labels;
           // the FULL chain keeps dropped positions in the count)
-          (m.schemaCols.nonEmpty &&
-            chainNames.indexOf(c) >= m.schemaCols.size) ||
-            (m.hasChunkIndex && m.env.nullCounts
-              .contains(storedNameIn(m, c)))))
+          chainNames.indexOf(c) >= m.schemaCols.size ||
+            m.env.nullCounts.contains(storedNameIn(m, c))))
           .map(_ => CountAgg(c, nullable = true))
       }
     val specs = agg.aggregateExpressions().toSeq.map {
@@ -1066,10 +1048,9 @@ class GraftAggScan(path: String, specs: Seq[GraftAgg],
       def stored(c: String): String = toStored.getOrElse(c, c)
       // a container PREDATES a column iff the column's table POSITION
       // is past the container's width (names are labels, not identity)
-      def predates(c: String): Boolean = m.schemaCols.nonEmpty && {
+      def predates(c: String): Boolean =
         if (tableCols.isEmpty) !m.schemaCols.exists(_._1 == c)
         else tableCols.indexOf(c) >= m.schemaCols.size
-      }
       m.longRanges.foreach { case (c0, (lo, hi)) =>
         val c = toCur.getOrElse(c0, c0)
         mins = mins.updated(c, mins.get(c).fold(lo)(math.min(_, lo)))
@@ -1146,14 +1127,13 @@ case class GraftAggPartition(values: Array[Any]) extends InputPartition
 case class ChunkSpec(offset: Long, length: Long, rows: Int,
                      crcs: Map[String, Long]) extends graft.engine.ChunkRange
 
-/** A run of chunks from one container. Empty `chunks` = stream the whole
-  * file sequentially (legacy manifests without a chunk index, and the
-  * direct-reader fuzz surface). `digestCol` is the manifest's recorded
-  * digest column ("" = chunk digests not verifiable for this partition).
-  * `absentCols` (round 7, add-only schema evolution): needed columns the
-  * container predates — the reader surfaces them as NULL for every row
-  * (planning already skipped containers a non-IsNull filter on such a
-  * column would empty).
+/** A run of chunks from one container, read at their indexed byte
+  * ranges. `digestCol` is the manifest's recorded digest column ("" =
+  * chunk digests not verifiable for this partition). `absentCols`
+  * (round 7, add-only schema evolution): needed columns the container
+  * predates — the reader surfaces them as NULL for every row (planning
+  * already skipped containers a non-IsNull filter on such a column
+  * would empty).
   */
 case class GraftInputPartition(file: String, chunks: Seq[ChunkSpec],
                                digestCol: String = "content",
@@ -1246,17 +1226,14 @@ class GraftScan(path: String, required: StructType,
       // also drops IsNull on columns the container predates and zeroes
       // containers a value filter on such a column can't match.
       val admittedRows =
-        GraftDataSource.containerFilters(m, filters.toSeq, tableCols,
-            tableCols) match {
+        GraftDataSource.containerFilters(m, filters.toSeq, tableCols) match {
           case None => 0L
           case Some(mFilters) =>
             if (m.chunksElided)
               if (GraftDataSource.admitManifest(m, mFilters)) m.rows else 0L
-            else if (m.chunkIndex.nonEmpty)
+            else
               m.chunkIndex.filter(GraftDataSource.admitChunk(_, mFilters))
                 .map(_.rows.toLong).sum
-            else if (GraftDataSource.admit(m.longRanges, mFilters)) m.rows
-            else 0L
         }
       if (admittedRows > 0) {
         rows += admittedRows
@@ -1652,18 +1629,12 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
           Manifests.epochKey(Manifests.logicalName(n)))
         val missEpochs = unresolved.map(n =>
           Manifests.epochKey(Manifests.logicalName(n)))
-        // legacy manifests may record per-container ancestor names —
-        // match both the raw key and its epoch-stripped form
-        def inSet(set: Set[String])(a: String): Boolean =
-          set(a) || set(Manifests.epochKey(a))
         ms.filter { m =>
-          !want.contains(m.name) && m.ancestors.nonEmpty &&
-            m.ancestors.exists(inSet(missEpochs)) &&
-            m.ancestors.forall(inSet(rangeEpochs))
+          !want.contains(m.name) && m.ancestors.exists(missEpochs) &&
+            m.ancestors.forall(rangeEpochs)
         }
       }
-    val coveredEpochs = substituted
-      .flatMap(m => m.ancestors ++ m.ancestors.map(Manifests.epochKey)).toSet
+    val coveredEpochs = substituted.flatMap(_.ancestors).toSet
     val dropped = unresolved.filterNot(n =>
       coveredEpochs(Manifests.epochKey(Manifests.logicalName(n))))
     if (substituted.nonEmpty) log.info(
@@ -1680,8 +1651,7 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
       // compaction boundary and needs a fresh checkpoint.
       def inLive(n: String): Boolean = {
         val ek = Manifests.epochKey(Manifests.logicalName(n))
-        ms.exists(m => m.ancestors.nonEmpty &&
-          m.ancestors.exists(a => a == ek || Manifests.epochKey(a) == ek))
+        ms.exists(_.ancestors.contains(ek))
       }
       val foldedAway = dropped.filter(inLive)
       if (foldedAway.nonEmpty) throw new IllegalStateException(
@@ -2008,12 +1978,12 @@ private[sources] object GraftCommits {
     // exactly the state this commit's deletes must be judged against
     val newSchema: Seq[(String, Int)] =
       if (fresh.isEmpty) Nil
-      else Manifests.parseWithFallback(fresh.head.manifestJson).schemaCols
+      else Manifests.parse(fresh.head.manifestJson).schemaCols
     try Manifests.commitIndex(conf, path, old => {
       // parse each old manifest ONCE per attempt: this transform runs on
       // the commit hot path of every write/epoch, over O(partitions)
       // JSONs
-      val parsedOld = old.map(Manifests.parseWithFallback)
+      val parsedOld = old.map(Manifests.parse)
       priorNames = parsedOld.map(_.name)
       // add-only evolution guard (round 7, rename-aware since round 8):
       // this write's schema must match or extend the snapshot's CURRENT
@@ -2033,15 +2003,8 @@ private[sources] object GraftCommits {
               s"with this write's ${newSchema.map(_._1).mkString(",")}; " +
               "this append aborted")
       }
-      // ancestors written before the commit-generation format were
-      // per-container logical names: include their epochKey so legacy
-      // compacted tables keep their replay protection
       val liveAncestors: Set[String] =
-        if (truncate) Set.empty
-        else {
-          val anc = parsedOld.flatMap(_.ancestors).toSet
-          anc ++ anc.map(Manifests.epochKey)
-        }
+        if (truncate) Set.empty else parsedOld.flatMap(_.ancestors).toSet
       val (replays, active) = fresh.partition(m =>
         liveAncestors.contains(Manifests.epochKey(logicalName(m.name))))
       droppedReplays = replays.map(_.name).toSet

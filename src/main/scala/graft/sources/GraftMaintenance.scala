@@ -137,11 +137,11 @@ object GraftMaintenance {
     // dry run: report the fold this run WOULD perform — (containers
     // consumed, containers produced) — without touching the table
     if (dryRun) return (work.map(_._3.size).sum, work.size)
-    // the leading letter keeps the run id non-numeric: epochKey strips a
-    // trailing all-digit segment, and an all-digit run id would let a
-    // double epochKey application collapse "compact-<runId>" to the
-    // constant "compact" — two such generations' coverage sets would
-    // falsely intersect in the listing-fallback normalizer
+    // the leading letter keeps the run id non-numeric, so the epoch key
+    // "compact-<runId>" is a fixed point of epochKey (which strips one
+    // trailing all-digit segment) and can never collapse to the constant
+    // "compact" — two generations sharing that key would falsely
+    // intersect in the listing-fallback normalizer
     val runId = "r" + java.util.UUID.randomUUID().toString.take(7)
     // one task per bin; RDD because the payload is driver-planned
     // manifest metadata, not table rows (genuine per-partition
@@ -157,9 +157,7 @@ object GraftMaintenance {
         .map { case ((schemaCols, digestCol, ms0), bin) =>
           val c2 = ContainerIO.confFrom(confKv)
           val ms = ms0.map(Manifests.loadChunkIndex(c2, path, _))
-          val schema =
-            if (schemaCols.isEmpty) ColumnarEngine.DefaultSchema
-            else schemaCols.map { case (n, k) => ColumnSpec.fromPacked(n, k) }
+          val schema = schemaCols.map { case (n, k) => ColumnSpec.fromPacked(n, k) }
           rewriteBin(c2, path, ms, schema,
             digestCol, s"compact-$runId-$bin", bin)._1
         }
@@ -226,7 +224,7 @@ object GraftMaintenance {
     afterStage()
     try {
       Manifests.commitIndex(conf, path, old => {
-        val parsedOld = old.map(Manifests.parseWithFallback)
+        val parsedOld = old.map(Manifests.parse)
         val live = parsedOld.map(_.name).toSet
         // A concurrent Manifests.consolidate (end of every engine encode)
         // normalizes the LISTING — where this run's staged manifests
@@ -238,9 +236,7 @@ object GraftMaintenance {
         // its epoch (pre-round-7 this path threw CompactionConflict and
         // the handler deleted index-live compacted blocks — data loss).
         val adopted = parsedOld.filter(m => newNames(m.name))
-        val adoptedCover = adopted
-          .flatMap(m => m.ancestors ++ m.ancestors.map(Manifests.epochKey))
-          .toSet
+        val adoptedCover = adopted.flatMap(_.ancestors).toSet
         val gone = consumed.filterNot(live).filterNot(n =>
           adoptedCover(Manifests.epochKey(Manifests.logicalName(n))))
         if (gone.nonEmpty) throw new CompactionConflict(
@@ -249,8 +245,9 @@ object GraftMaintenance {
         val adoptedNames = adopted.map(_.name).toSet
         old.lazyZip(parsedOld).collect {
           case (j, pm) if !consumed(pm.name) => j
-        }.toSeq ++ newJsons.filter(j =>
-          !adoptedNames(Manifests.parseWithFallback(j).name))
+        }.toSeq ++ stamped.lazyZip(newJsons).collect {
+          case (m, j) if !adoptedNames(m.name) => j
+        }
       })
     } catch {
       case e: CompactionConflict =>
@@ -379,9 +376,8 @@ object GraftMaintenance {
     val pushed = conjuncts(cond).flatMap(sourceFilterOf)
     val admission = GraftDataSource.translateFilters(pushed.toArray,
       GraftDataSource.layoutOf(st)).toSeq
-    val defaultNames = GraftDataSource.schema.fieldNames.toSeq
     val affected = committed.filter { m =>
-      GraftDataSource.containerFilters(m, admission, tableCols, defaultNames)
+      GraftDataSource.containerFilters(m, admission, tableCols)
         .exists(GraftDataSource.admitManifest(m, _))
     }
     if (affected.isEmpty) return 0L
@@ -527,9 +523,8 @@ object GraftMaintenance {
     val pushed = conjuncts(cond).flatMap(sourceFilterOf)
     val admission = GraftDataSource.translateFilters(pushed.toArray,
       GraftDataSource.layoutOf(st)).toSeq
-    val defaultNames = GraftDataSource.schema.fieldNames.toSeq
     val affected = committed.filter { m =>
-      GraftDataSource.containerFilters(m, admission, tableCols, defaultNames)
+      GraftDataSource.containerFilters(m, admission, tableCols)
         .exists(GraftDataSource.admitManifest(m, _))
     }
     if (affected.isEmpty) return 0L
@@ -712,11 +707,10 @@ object GraftMaintenance {
         }
       }
     }
-    val defaultNames = GraftDataSource.schema.fieldNames.toSeq
     val affected =
       if (keyRows.isEmpty) Nil
       else committed.filter { m =>
-        GraftDataSource.containerFilters(m, admission, tableCols, defaultNames)
+        GraftDataSource.containerFilters(m, admission, tableCols)
           .exists(GraftDataSource.admitManifest(m, _))
       }
 
@@ -1058,7 +1052,7 @@ object GraftMaintenance {
     beforeCommit()
     try Manifests.commitIndex(conf, path, old => {
       // re-check against the snapshot this commit actually lands on
-      val parsedOld = old.map(Manifests.parseWithFallback)
+      val parsedOld = old.map(Manifests.parse)
       val cur = GraftDataSource.currentSpecsOf(parsedOld)
       recheck(cur, idx)
       // last-commit-wins label resolution: the marker must outrank
@@ -1139,8 +1133,7 @@ object GraftMaintenance {
     // from storage. Without a live index nothing is judged (disaster
     // recovery keeps everything).
     val indexLive = Manifests.readIndexSnapshot(c, path).isDefined
-    val ancestorCover = committedMs
-      .flatMap(m => m.ancestors ++ m.ancestors.map(Manifests.epochKey)).toSet
+    val ancestorCover = committedMs.flatMap(_.ancestors).toSet
     def superseded(n: String): Boolean = indexLive && !committedRefs(n) &&
       ancestorCover(Manifests.epochKey(Manifests.logicalName(n)))
     val listedNames = ContainerIO.listNames(c, s"$path/manifests")

@@ -2,7 +2,8 @@ package graft.codecs
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{BlockReader, BlockWriter, DecodeError, PrefixVarInt}
-import graft.engine.{ColumnarEngine, ContainerFormat, Lane, SourceTable, SparkTestSession}
+import graft.engine.{ChunkRange, ColumnarEngine, ContainerFormat, ContainerIO, Lane, Manifests, SourceTable, SparkTestSession}
+import graft.sources.ChunkSpec
 
 /** Fuzz-grade decode robustness, porting the intent of the reference's
   * libFuzzer targets (reference: the fuzz/fuzz_targets dir, tests/fuzz.rs:4-17):
@@ -26,13 +27,27 @@ class FuzzSpec extends AnyFunSuite {
 
   private lazy val engineLanes = Lane.ofSpecs(ColumnarEngine.DefaultSchema)
 
-  /** Whole-container decode through the production parser: the
-    * prelude + chunk stream every reader uses, with each chunk's content
-    * digest verified (the engine schema's `content` column).
+  /** Container decode through the production parser: the indexed
+    * chunk ranges every reader uses, with each chunk's content digest
+    * verified (the engine schema's `content` column).
     */
-  private def parseContainer(bytes: Array[Byte]): Unit =
-    ContainerFormat.chunks(memStream(bytes), bytes.length.toLong, "fuzz", Nil,
+  private def parseContainer(bytes: Array[Byte], ranges: Seq[ChunkRange]): Unit =
+    ContainerFormat.chunks(memStream(bytes), bytes.length.toLong, "fuzz", ranges,
       engineLanes).foreach(ContainerFormat.verifyContentDigest(_))
+
+  /** Each committed container's chunk ranges, by block file name, taken
+    * from the table's own manifests — with NO block CRCs: these targets
+    * exist to reach the decoders, which a recorded CRC would shield from
+    * most flips.
+    */
+  private def chunkRanges(dir: String): Map[String, Seq[ChunkRange]] = {
+    val conf = ContainerIO.localConf()
+    Manifests.readCommitted(conf, dir).filter(_.rows > 0)
+      .map(Manifests.loadChunkIndex(conf, dir, _))
+      .map(m => s"part-${m.name}.gblk" ->
+        m.chunkIndex.map(c => ChunkSpec(c.offset, c.length, c.rows, Map.empty)))
+      .toMap
+  }
 
   test("random bytes never crash decodePair / BlockReader / codec / container decode (>1M buffers)") {
     val rnd = new java.util.Random(0xf00dL)
@@ -50,7 +65,8 @@ class FuzzSpec extends AnyFunSuite {
       }
       controlled(hex(b))(LongCodecs.decodeSlice(b, 0, b.length))
       controlled(hex(b))(StringCodecs.decodeSlice(b, 0, b.length))
-      controlled(hex(b))(parseContainer(b))
+      // the whole buffer as one chunk range: every buffer reaches readChunk
+      controlled(hex(b))(parseContainer(b, Seq(ChunkSpec(0L, b.length.toLong, 1, Map.empty))))
       // force a valid codec id so decode gets past the id check
       b(0) = longIds(rnd.nextInt(longIds.length))
       controlled(hex(b))(LongCodecs.decodeSlice(b, 0, b.length))
@@ -108,17 +124,20 @@ class FuzzSpec extends AnyFunSuite {
       ColumnarEngine.derive(SourceTable.synthesize(spark, 1500, 2)), dir, numParts = 2)
     val files = new java.io.File(s"$dir/blocks").listFiles().filter(_.getName.endsWith(".gblk"))
     assert(files.nonEmpty)
+    val ranges = chunkRanges(dir)
     val rnd = new java.util.Random(7L)
     for (f <- files) {
       val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+      val rs = ranges(f.getName)
+      parseContainer(bytes, rs) // the unmutated container must parse clean
       var k = 0
       while (k < 600) {
         val m = bytes.clone()
         m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte
-        controlled(s"container mut $k")(parseContainer(m))
+        controlled(s"container mut $k")(parseContainer(m, rs))
         val cut = 1 + rnd.nextInt(bytes.length)
         controlled(s"container trunc $k")(
-          parseContainer(java.util.Arrays.copyOf(bytes, cut)))
+          parseContainer(java.util.Arrays.copyOf(bytes, cut), rs))
         k += 1
       }
     }
@@ -202,23 +221,22 @@ class FuzzSpec extends AnyFunSuite {
       // boolean + float ride the int lane
       "i" -> Lane.Ints, "dt" -> Lane.Ints, "f" -> Lane.Ints, "g" -> Lane.Ints,
       "d" -> Lane.Doubles, "v" -> Lane.Floats)
-    def parseAll(bytes: Array[Byte]): Unit = {
-      val ci = new graft.engine.ContainerInput(memStream(bytes), 0L, bytes.length.toLong)
-      graft.engine.ContainerFormat.readPrelude(ci)
-      while (!ci.atEnd)
-        graft.engine.ContainerFormat.readChunk(ci, needed, Map.empty)
-    }
+    val ranges = chunkRanges(dir)
+    def parseAll(bytes: Array[Byte], rs: Seq[ChunkRange]): Unit =
+      ContainerFormat.chunks(memStream(bytes), bytes.length.toLong, "fuzz", rs, needed)
+        .foreach(_ => ())
     val rnd = new java.util.Random(29L)
     for (f <- files) {
       val bytes = java.nio.file.Files.readAllBytes(f.toPath)
-      parseAll(bytes) // the unmutated container must parse clean
+      val rs = ranges(f.getName)
+      parseAll(bytes, rs) // the unmutated container must parse clean
       var k = 0
       while (k < 600) {
         val m = bytes.clone()
         m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte
-        controlled(s"kind-fuzz mut $k")(parseAll(m))
+        controlled(s"kind-fuzz mut $k")(parseAll(m, rs))
         controlled(s"kind-fuzz trunc $k")(
-          parseAll(java.util.Arrays.copyOf(bytes, 1 + rnd.nextInt(bytes.length))))
+          parseAll(java.util.Arrays.copyOf(bytes, 1 + rnd.nextInt(bytes.length)), rs))
         k += 1
       }
     }

@@ -135,7 +135,10 @@ class EngineSpec extends AnyFunSuite {
     val conf = ContainerIO.localConf()
     val d = tempDir("occ-lost")
     ContainerIO.mkdirs(conf, s"$d/manifests")
-    def entry(n: String) = s"""{"name":"$n","part":0,"rows":1,"chunks":1}"""
+    def entry(n: String) = Manifests.manifestJson(PartManifest(0, 1L, 1, 8L, 8L,
+      skipped = false, "", Nil, name = n, schemaCols = Seq("x" -> 0),
+      digestCol = "", chunkIndex = Seq(ChunkStats(ColumnarEngine.Magic.length + 1L,
+        8L, 1, Map.empty, Map.empty, Map.empty, Map.empty))))
     Manifests.commitIndex(conf, d, _ => Seq(entry("a"))) // v0
     // a committer reads v0 (claiming v1), then stalls while the world
     // advances PAST the tombstone-retention envelope: the live tip is
@@ -157,7 +160,7 @@ class EngineSpec extends AnyFunSuite {
     val Some((ver, jsons)) = Manifests.readIndexSnapshot(conf, d)
     assert(ver === tip + 1,
       s"the withdrawn claim must retry ON TOP of the true tip, got v$ver")
-    val names = jsons.map(Manifests.parseWithFallback(_).name)
+    val names = jsons.map(Manifests.parse(_).name)
     assert(names.contains("tip") && names.contains("b"),
       s"retry must preserve the tip's content and land the update: $names")
     assert(!ContainerIO.exists(conf, s"$d/${Manifests.versionedIndexName(1L)}"),

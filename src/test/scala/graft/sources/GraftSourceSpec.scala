@@ -18,6 +18,21 @@ class GraftSourceSpec extends AnyFunSuite {
     scans.head.asInstanceOf[GraftScan]
   }
 
+  /** The indexed chunk ranges of one written container (`block` is its
+    * file name under `blocks/`), with NO block CRCs: the fuzz tests use
+    * them to reach the decoders, which a recorded CRC would shield from
+    * most flips.
+    */
+  private def chunkRanges(table: String, block: String): Seq[ChunkSpec] = {
+    import graft.engine.{ContainerIO, Manifests}
+    val conf = ContainerIO.localConf()
+    val m = Manifests.readCommitted(conf, table)
+      .find(m => s"part-${m.name}.gblk" == block)
+      .map(Manifests.loadChunkIndex(conf, table, _))
+      .getOrElse(fail(s"no committed manifest for $block"))
+    m.chunkIndex.map(c => ChunkSpec(c.offset, c.length, c.rows, Map.empty))
+  }
+
   private lazy val dir = {
     val d = java.nio.file.Files.createTempDirectory("graft-dsv2").toString
     val derived = ColumnarEngine.derive(SourceTable.synthesize(spark, 600, 3))
@@ -343,7 +358,10 @@ class GraftSourceSpec extends AnyFunSuite {
     val d = mkTableDir("graft-dsv2-occ")
     val conf = graft.engine.ContainerIO.localConf()
     def mkJson(name: String) = Manifests.manifestJson(PartManifest(
-      0, 5L, 1, 10L, 8L, skipped = false, "", Seq.empty[ColumnMetric], name = name))
+      0, 5L, 1, 10L, 8L, skipped = false, "", Seq.empty[ColumnMetric], name = name,
+      schemaCols = Seq("x" -> 0), chunkIndex = Seq(graft.engine.ChunkStats(
+        ColumnarEngine.Magic.length + 1L, 8L, 5, Map.empty, Map.empty, Map.empty,
+        Map.empty))))
     // deterministic interleave: A reads its snapshot, then B commits a
     // full snapshot BEFORE A writes — A's version claim must fail and
     // retry on top of B's. Round 4's read-modify-write lost B here.
@@ -638,7 +656,9 @@ class GraftSourceSpec extends AnyFunSuite {
     // format level: a crafted container whose kind-2 block holds an
     // overflowing value fails the read with DecodeError, never a wrong int
     val d = java.nio.file.Files.createTempDirectory("graft-int-ovf").toString
-    def crafted(name: String, kind2Block: Array[Byte]): String = {
+    // the crafted file plus its one chunk range, right after the prelude
+    // (magic + a one-byte part id), as a manifest would index it
+    def crafted(name: String, kind2Block: Array[Byte]): (String, Seq[ChunkSpec]) = {
       val w = new graft.core.BlockWriter(256)
       w.putBytes(ColumnarEngine.Magic)
       w.putVarint(0L) // part id
@@ -650,11 +670,14 @@ class GraftSourceSpec extends AnyFunSuite {
       w.putVarint(kind2Block.length.toLong); w.putBytes(kind2Block)
       w.putBytes(new Array[Byte](32)) // digest (no string columns)
       val file = s"$d/$name.gblk"
-      java.nio.file.Files.write(java.nio.file.Paths.get(file), w.result())
-      file
+      val bytes = w.result()
+      java.nio.file.Files.write(java.nio.file.Paths.get(file), bytes)
+      val pre = ColumnarEngine.Magic.length + 1
+      (file, Seq(ChunkSpec(pre, bytes.length - pre, 3, Map.empty)))
     }
     val confKv = graft.engine.ContainerIO.confSnapshot(spark)
-    val cursor = new ChunkCursor(crafted("crafted", block), Nil,
+    val (craftedFile, craftedChunks) = crafted("crafted", block)
+    val cursor = new ChunkCursor(craftedFile, craftedChunks,
       Map("x" -> Lane.Ints), confKv, digestCol = "", renames = Map.empty)
     try intercept[graft.core.DecodeError] { cursor.chunkIter.next() }
     finally cursor.close()
@@ -663,8 +686,9 @@ class GraftSourceSpec extends AnyFunSuite {
     // or NullPointerException
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val asLong = StructType(Seq(StructField("x", LongType, nullable = false)))
+    val (mismatchFile, mismatchChunks) = crafted("lane-mismatch", ok)
     val reader = new GraftColumnarReader(
-      GraftInputPartition(crafted("lane-mismatch", ok), Nil, digestCol = ""),
+      GraftInputPartition(mismatchFile, mismatchChunks, digestCol = ""),
       asLong, Array.empty, GraftDataSource.layoutOf(asLong), confKv,
       Int.MaxValue, verifyContent = false)
     val e = try intercept[IllegalArgumentException] { reader.next() }
@@ -692,11 +716,12 @@ class GraftSourceSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempFile("graft-dsv2-fuzz", ".gblk")
     val schema = StructType(Seq(StructField("repo", StringType),
       StructField("hash64", LongType)))
-    // the columnar reader over the whole-file stream (a partition with
-    // no chunk index: the ChunkCursor path with Nil chunks), unverified
+    val chunks = chunkRanges(dir, block)
+    // the columnar reader over the container's own indexed chunk ranges,
+    // unverified: no content digest, no block CRCs shielding the flips
     def readAll(): Unit = {
       val r = new GraftColumnarReader(
-        GraftInputPartition(tmp.toString, Nil, digestCol = ""), schema,
+        GraftInputPartition(tmp.toString, chunks, digestCol = ""), schema,
         Array.empty, GraftDataSource.layoutOf(schema), Map.empty,
         Int.MaxValue, verifyContent = false)
       try while (r.next()) r.get() finally r.close()
@@ -735,6 +760,7 @@ class GraftSourceSpec extends AnyFunSuite {
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$d/blocks/$block"))
     val tmp = java.nio.file.Files.createTempFile("graft-int-fuzz", ".gblk")
+    val chunks = chunkRanges(d, block)
     val rnd = new scala.util.Random(29)
     var k = 0
     while (k < 200) {
@@ -742,9 +768,9 @@ class GraftSourceSpec extends AnyFunSuite {
       m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte
       java.nio.file.Files.write(tmp, m)
       try {
-        // direct sequential reader (no manifest CRCs shielding the flip):
+        // direct chunk reader (no manifest CRCs shielding the flip):
         // every outcome must be correct data or a typed decode failure
-        val cursor = new ChunkCursor(tmp.toString, Nil, Map("n" -> Lane.Ints),
+        val cursor = new ChunkCursor(tmp.toString, chunks, Map("n" -> Lane.Ints),
           graft.engine.ContainerIO.confSnapshot(spark), digestCol = "",
           renames = Map.empty)
         try while (cursor.chunkIter.hasNext) cursor.chunkIter.next()
@@ -843,6 +869,26 @@ class GraftSourceSpec extends AnyFunSuite {
         spark.read.format("graft").load(d).select("len_content").collect()
       }
       k += 1
+    }
+    // an index that parses as JSON but is not the shape the writer
+    // produces is corrupt too: read as an empty table, the next commit
+    // would publish that emptiness over every existing container
+    def causedBy[T](t: Throwable)(implicit ct: scala.reflect.ClassTag[T]): Boolean =
+      t != null && (ct.runtimeClass.isInstance(t) || causedBy[T](t.getCause))
+    for (bad <- Seq("{\"version\":1}", "{\"version\":2,\"manifests\":[]}", "[]")) {
+      writeNoSidecar(idxPath, bad.getBytes("UTF-8"))
+      val re = intercept[IllegalArgumentException] {
+        spark.read.format("graft").load(d).select("len_content").collect()
+      }
+      assert(re.getMessage.contains("corrupt manifest index"), re.getMessage)
+      val we = intercept[Exception] {
+        ColumnarEngine.derive(SourceTable.synthesize(spark, 10, 1))
+          .write.format("graft").mode("append").save(d)
+      }
+      assert(causedBy[IllegalArgumentException](we), s"append over $bad: $we")
+      assert(graft.engine.ContainerIO.listNames(conf, d)
+        .filter(_.startsWith("_manifest-index")) === Seq(idxName),
+        s"an append over the corrupt index $bad committed a new snapshot")
     }
     // restore: the table reads clean again
     writeNoSidecar(mfPath, orig.getBytes("UTF-8"))
@@ -984,7 +1030,7 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(joined === want)
   }
 
-  test("legacy manifests (no chunkIndex/name) still read: sequential streaming") {
+  test("manifests without a required field are rejected, naming the field") {
     import com.fasterxml.jackson.databind.ObjectMapper
     val d = java.nio.file.Files.createTempDirectory("graft-dsv2-legacy").toString
     val derived = ColumnarEngine.derive(SourceTable.synthesize(spark, 150, 2))
@@ -1009,17 +1055,52 @@ class GraftSourceSpec extends AnyFunSuite {
           java.nio.file.Paths.get(s"$d/manifests/part-$legacyName.json"),
           root.toString.getBytes("UTF-8"))
       }
-    graft.engine.ContainerIO.listNames(conf, d)
-      .filter(_.startsWith("_manifest-index"))
-      .foreach(n => java.nio.file.Files.delete(java.nio.file.Paths.get(s"$d/$n")))
-    // DSv2 read and engine decode both fall back to whole-file streaming
-    assert(spark.read.format("graft").load(d).count() === 150)
-    assert(ColumnarEngine.decode(spark, d).count() === 150)
-    assert(ColumnarEngine.decode(spark, d).toDF().except(derived.toDF()).isEmpty)
-    // partition-level zone maps still admit/skip
-    val all = spark.read.format("graft").load(d)
-      .filter(col("len_content") >= 0L).count()
-    assert(all === 150)
+    def dropIndex(table: String): Unit =
+      graft.engine.ContainerIO.listNames(conf, table)
+        .filter(_.startsWith("_manifest-index"))
+        .foreach(n => java.nio.file.Files.delete(java.nio.file.Paths.get(s"$table/$n")))
+    dropIndex(d)
+    // DSv2 read and engine decode both reject the table, naming the
+    // first missing field — never a silent whole-file stream
+    def rejects(field: String)(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException] { f; () }
+      assert(e.getMessage.contains(s"lacks required field \"$field\""), e.getMessage)
+    }
+    rejects("name")(spark.read.format("graft").load(d).count())
+    rejects("name")(ColumnarEngine.decode(spark, d).count())
+    // each remaining required field alone, on a current table: through the
+    // listing (index dropped) and, for the chunk index, through an intact
+    // index whose elided entries hydrate from the stripped markers
+    val d2 = java.nio.file.Files.createTempDirectory("graft-dsv2-required").toString
+    derived.write.format("graft").mode("overwrite").save(d2)
+    val markers = graft.engine.ContainerIO.listNames(conf, s"$d2/manifests")
+      .filter(_.endsWith(".json")).map { n =>
+        val p = java.nio.file.Paths.get(s"$d2/manifests/$n")
+        java.nio.file.Files.deleteIfExists(p.resolveSibling(s".$n.crc"))
+        p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      }
+    val idx = graft.engine.ContainerIO.listNames(conf, d2)
+      .filter(_.startsWith("_manifest-index")).map { n =>
+        val p = java.nio.file.Paths.get(s"$d2/$n")
+        java.nio.file.Files.deleteIfExists(p.resolveSibling(s".$n.crc"))
+        p -> java.nio.file.Files.readAllBytes(p)
+      }
+    for (field <- Seq("chunkIndex", "schema", "digestCol")) {
+      markers.foreach { case (p, json) =>
+        val root = om.readTree(json)
+          .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        root.remove(field)
+        java.nio.file.Files.write(p, root.toString.getBytes("UTF-8"))
+      }
+      if (field == "chunkIndex") {
+        rejects(field)(spark.read.format("graft").load(d2).collect())
+        rejects(field)(ColumnarEngine.decode(spark, d2).count())
+      }
+      dropIndex(d2)
+      rejects(field)(spark.read.format("graft").load(d2).count())
+      rejects(field)(ColumnarEngine.decode(spark, d2).count())
+      idx.foreach { case (p, b) => java.nio.file.Files.write(p, b) }
+    }
   }
 
   test("orphan containers (no manifest) are invisible to every read path") {

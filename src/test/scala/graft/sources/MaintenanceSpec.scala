@@ -14,6 +14,19 @@ class MaintenanceSpec extends AnyFunSuite {
     ContainerIO.listNames(ContainerIO.localConf(), s"$d/blocks")
       .filter(_.endsWith(".gblk"))
 
+  /** The (id BIGINT, tag STRING) schema [[publishEpochParts]] writes, as
+    * a manifest records it (non-nullable: packed kind = kind).
+    */
+  private val idTagCols = Seq("id" -> 0, "tag" -> 1)
+
+  /** A one-chunk index for a hand-built manifest of `rows` rows: the
+    * shape every current writer leaves behind (one chunk right after
+    * the container prelude).
+    */
+  private def oneChunk(rows: Int): Seq[graft.engine.ChunkStats] =
+    Seq(graft.engine.ChunkStats(graft.engine.ColumnarEngine.Magic.length + 1L,
+      64L, rows, Map.empty, Map.empty, Map.empty, Map.empty))
+
   /** Publish one epoch (`q-e<e>`) of an (id BIGINT, tag STRING) table as
     * the given (partition, id-range) containers — the streaming-sink
     * commit shape, driven directly for exact layout control.
@@ -205,7 +218,8 @@ class MaintenanceSpec extends AnyFunSuite {
     // NEWER commitId) — the fallback must keep the COMPLETE committed
     // generation, not the newer partial
     val partial = graft.engine.PartManifest(0, 30L, 1, 100L, 80L,
-      skipped = false, "", Nil, name = "q-e1-0-a77")
+      skipped = false, "", Nil, name = "q-e1-0-a77", chunkIndex = oneChunk(30),
+      schemaCols = idTagCols, digestCol = "tag")
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-partial",
       Manifests.manifestPath(d, partial.name),
       Manifests.stampCommit(Manifests.manifestJson(partial),
@@ -334,7 +348,10 @@ class MaintenanceSpec extends AnyFunSuite {
     // the replay replaces the epoch in the INDEX, but the publish
     // "crashed" before deleting the old generation's files: re-create
     // the old manifests afterwards to simulate the leftover markers
+    // hydrated now, while the old markers still exist: the re-created
+    // stale markers must carry their chunk index like the originals
     val oldJsons = Manifests.readCommitted(conf, d)
+      .map(Manifests.loadChunkIndex(conf, d, _))
     publishEpochParts(d, 1, 30L, Seq((0, 0 until 50)))
     oldJsons.foreach { m =>
       // the old generation's manifest comes back as a stale marker (its
@@ -381,6 +398,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // commitId covering the same epochs
     val staleStage = graft.engine.PartManifest(0, 60L, 1, 100L, 80L,
       skipped = false, "", Nil, name = "compact-dead0-0",
+      chunkIndex = oneChunk(60), schemaCols = idTagCols, digestCol = "tag",
       ancestors = Seq("q-e1", "q-e2", "q-e3"),
       commitId = "0000000000001-dead")
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-deadstage",
@@ -461,7 +479,8 @@ class MaintenanceSpec extends AnyFunSuite {
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-resume",
       Manifests.manifestPath(d, "resume7"),
       Manifests.manifestJson(graft.engine.PartManifest(7, 1L, 1, 3L, 3L,
-        skipped = false, "", Nil, name = "resume7"))
+        skipped = false, "", Nil, name = "resume7", chunkIndex = oneChunk(1),
+        schemaCols = m.schemaCols, digestCol = m.digestCol))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val deleted = GraftMaintenance.vacuum(spark, d, graceMs = 3600 * 1000L)
     assert(deleted === 3, s"expected the 3 aged dead files gone, got $deleted")
@@ -716,7 +735,8 @@ class MaintenanceSpec extends AnyFunSuite {
     // generations as superseded garbage.
     val future = System.currentTimeMillis() + 1000000000L
     val m = graft.engine.PartManifest(0, 10L, 1, 50L, 40L, skipped = false,
-      "", Nil, name = "skew-e1-0",
+      "", Nil, name = "skew-e1-0", chunkIndex = oneChunk(10),
+      schemaCols = idTagCols, digestCol = "tag",
       commitId = f"$future%013d-deadbeef")
     Manifests.writeManifest(conf, d, m, 0L)
     Manifests.commitIndex(conf, d, _ => Seq(Manifests.manifestJson(m)))
@@ -728,8 +748,8 @@ class MaintenanceSpec extends AnyFunSuite {
   test("compaction run ids can never collapse under double epochKey") {
     // epochKey strips ONE trailing all-digit segment; the run id's leading
     // letter guarantees "compact-<runId>" is a fixed point, so two
-    // compacted generations' coverage keys can't falsely intersect when
-    // the normalizer applies epochKey to already-keyed ancestors
+    // compacted generations' coverage keys can't falsely intersect even
+    // if epochKey is applied to an already-keyed ancestor
     val k = Manifests.epochKey(Manifests.logicalName("compact-r12345ab-0"))
     assert(k === "compact-r12345ab")
     assert(Manifests.epochKey(k) === k, "epochKey must be idempotent here")
@@ -752,7 +772,8 @@ class MaintenanceSpec extends AnyFunSuite {
     // index would be transient wrong rows; the crashed publish's
     // job/stream retries it anyway
     val partial = graft.engine.PartManifest(0, 30L, 1, 100L, 80L,
-      skipped = false, "", Nil, name = "q-e7-0-a91")
+      skipped = false, "", Nil, name = "q-e7-0-a91", chunkIndex = oneChunk(30),
+      schemaCols = idTagCols, digestCol = "tag")
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-partial7",
       Manifests.manifestPath(d, partial.name),
       Manifests.stampCommit(Manifests.manifestJson(partial),

@@ -150,7 +150,7 @@ class SnapshotSpec extends AnyFunSuite {
     // simulate a replace that crashed before its file deletes: commit an
     // index without A, remove A's commit marker, leave A's block behind
     Manifests.commitIndex(conf, d, old =>
-      old.filterNot(j => Manifests.parseWithFallback(j).name == a.name))
+      old.filterNot(j => Manifests.parse(j).name == a.name))
     val fs = ContainerIO.fs(d, conf)
     fs.delete(new org.apache.hadoop.fs.Path(
       Manifests.manifestPath(d, a.name)), false)
