@@ -342,6 +342,16 @@ object Manifests {
   def manifestPath(tableDir: String, name: String): String =
     s"$tableDir/manifests/part-$name.json"
 
+  /** Remove one container: its commit marker first, then its block — a
+    * crash in between leaves an unreferenced block for vacuum, never a
+    * marker naming a missing block.
+    */
+  def deleteContainer(fs: org.apache.hadoop.fs.FileSystem, tableDir: String,
+                      name: String): Unit = {
+    fs.delete(new org.apache.hadoop.fs.Path(manifestPath(tableDir, name)), false)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$tableDir/blocks/part-$name.gblk"), false)
+  }
+
   // --------------------------------------------------------------- write
 
   private def q(s: String) =
@@ -454,12 +464,7 @@ object Manifests {
     val fs = ContainerIO.fs(tableDir, conf)
     parsed.filterNot(m => keptNames(m.name))
       .filter(_.commitId < maxKept)
-      .foreach { m =>
-        fs.delete(new org.apache.hadoop.fs.Path(
-          manifestPath(tableDir, m.name)), false)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"$tableDir/blocks/part-${m.name}.gblk"), false)
-      }
+      .foreach(m => deleteContainer(fs, tableDir, m.name))
   }
 
   private val VersionedIndexRe = """_manifest-index\.v(\d+)\.json""".r

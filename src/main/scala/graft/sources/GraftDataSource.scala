@@ -1915,14 +1915,27 @@ class SchemaEvolutionConflict(msg: String) extends IllegalStateException(msg)
 
 private[sources] object GraftCommits {
 
-  /** Logical partition identity of a staged container name (see
-    * [[Manifests.logicalName]]). A replayed streaming epoch (or a task
-    * retry) re-stages the same logical name under a fresh attempt id;
-    * publish REPLACES any previous generation of the same logical name
-    * instead of appending a duplicate.
+  /** The add-only evolution guard of an OCC commit (round 7,
+    * rename-aware since round 8): a landing manifest's `schema` must
+    * match or extend the CURRENT schema of the snapshot the commit
+    * actually lands on (positional identity with last-commit-wins names
+    * — an old container's historical label is not a conflict, a
+    * concurrent divergent add, rename or drop IS). Writers validate
+    * against the snapshot they SAW; this re-check inside the OCC
+    * transform is what catches the race.
     */
-  private[sources] def logicalName(n: String): String =
-    Manifests.logicalName(n)
+  private[sources] def checkSchema(path: String, parsedOld: Seq[ParsedManifest],
+                                   schema: Seq[(String, Int)]): Unit =
+    if (schema.nonEmpty && parsedOld.nonEmpty) {
+      val cur = GraftDataSource.currentSpecsOf(parsedOld)
+        .map(s => (s.name, s.packed))
+      if (cur != schema.take(cur.size) && schema != cur.take(schema.size))
+        throw new SchemaEvolutionConflict(
+          s"concurrent schema evolution on $path: the table's current " +
+            s"columns are ${cur.map(_._1).mkString(",")}, incompatible " +
+            s"with this write's ${schema.map(_._1).mkString(",")}; " +
+            "this append aborted")
+    }
 
   /** Publish one job's (or micro-batch's) staged containers: write the
     * manifests (commit markers) first, then commit the new consolidated
@@ -1951,11 +1964,11 @@ private[sources] object GraftCommits {
     val raw = messages.collect {
       case m: GraftCommitMessage if m.rows > 0 => m
     }.sortBy(_.name)
-    val epochParts = raw.groupBy(m =>
-      Manifests.epochKey(logicalName(m.name))).view.mapValues(_.length).toMap
+    val epochParts = raw.groupBy(m => Manifests.epochKey(
+      Manifests.logicalName(m.name))).view.mapValues(_.length).toMap
     val fresh = raw.map(m => m.copy(manifestJson = Manifests.stampCommit(
       m.manifestJson, commitId,
-      epochParts(Manifests.epochKey(logicalName(m.name))))))
+      epochParts(Manifests.epochKey(Manifests.logicalName(m.name))))))
     if (fresh.isEmpty && !truncate) return
     fresh.foreach { m =>
       ContainerIO.writeAtomic(conf,
@@ -1985,28 +1998,11 @@ private[sources] object GraftCommits {
       // JSONs
       val parsedOld = old.map(Manifests.parse)
       priorNames = parsedOld.map(_.name)
-      // add-only evolution guard (round 7, rename-aware since round 8):
-      // this write's schema must match or extend the snapshot's CURRENT
-      // schema (positional identity with last-commit-wins names — an
-      // old container's historical label is not a conflict, a
-      // concurrent divergent add or rename IS). The write builder
-      // already validated against the snapshot it SAW; this re-check
-      // inside the OCC transform is what catches the race.
-      if (!truncate && newSchema.nonEmpty && parsedOld.nonEmpty) {
-        val cur = GraftDataSource.currentSpecsOf(parsedOld)
-          .map(s => (s.name, s.packed))
-        if (cur != newSchema.take(cur.size) &&
-            newSchema != cur.take(newSchema.size))
-          throw new SchemaEvolutionConflict(
-            s"concurrent schema evolution on $path: the table's current " +
-              s"columns are ${cur.map(_._1).mkString(",")}, incompatible " +
-              s"with this write's ${newSchema.map(_._1).mkString(",")}; " +
-              "this append aborted")
-      }
+      if (!truncate) checkSchema(path, parsedOld, newSchema)
       val liveAncestors: Set[String] =
         if (truncate) Set.empty else parsedOld.flatMap(_.ancestors).toSet
-      val (replays, active) = fresh.partition(m =>
-        liveAncestors.contains(Manifests.epochKey(logicalName(m.name))))
+      val (replays, active) = fresh.partition(m => liveAncestors.contains(
+        Manifests.epochKey(Manifests.logicalName(m.name))))
       droppedReplays = replays.map(_.name).toSet
       // replacement is EPOCH-granular too: a replayed epoch may
       // re-partition the same rows, so per-logical-name replacement
@@ -2014,12 +2010,12 @@ private[sources] object GraftCommits {
       // the full replay — duplicates. Publishing an epoch replaces
       // EVERY container of its previous generation.
       val activeEpochs = active
-        .map(m => Manifests.epochKey(logicalName(m.name))).toSet
+        .map(m => Manifests.epochKey(Manifests.logicalName(m.name))).toSet
       val kept =
         if (truncate) Nil
         else old.lazyZip(parsedOld).collect {
           case (j, pm) if !activeEpochs.contains(
-            Manifests.epochKey(logicalName(pm.name))) => j
+            Manifests.epochKey(Manifests.logicalName(pm.name))) => j
         }.toSeq
       kept ++ active.map(_.manifestJson)
     })
@@ -2029,32 +2025,21 @@ private[sources] object GraftCommits {
         // index reads (never committed) but the listing fallback and
         // schema inference would trip over them
         val f = ContainerIO.fs(path, conf)
-        fresh.foreach { m =>
-          f.delete(new org.apache.hadoop.fs.Path(
-            s"$path/blocks/part-${m.name}.gblk"), false)
-          f.delete(new org.apache.hadoop.fs.Path(
-            Manifests.manifestPath(path, m.name)), false)
-        }
+        fresh.foreach(m => Manifests.deleteContainer(f, path, m.name))
         throw e
     }
     val activeNames = fresh.map(_.name).toSet -- droppedReplays
-    val activeEpochs = activeNames.map(n => Manifests.epochKey(logicalName(n)))
+    val activeEpochs =
+      activeNames.map(n => Manifests.epochKey(Manifests.logicalName(n)))
     def replaced(name: String): Boolean =
-      !activeNames.contains(name) &&
-        (truncate ||
-          activeEpochs.contains(Manifests.epochKey(logicalName(name))))
+      !activeNames.contains(name) && (truncate ||
+        activeEpochs.contains(Manifests.epochKey(Manifests.logicalName(name))))
     val doomed = priorNames.filter(replaced)
     val f = ContainerIO.fs(path, conf)
-    doomed.foreach { n =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/blocks/part-$n.gblk"), false)
-      f.delete(new org.apache.hadoop.fs.Path(Manifests.manifestPath(path, n)), false)
-    }
+    doomed.foreach(Manifests.deleteContainer(f, path, _))
     // a dropped replay's staged container + just-written manifest file
     // are dead weight (its rows live in the compacted generation)
-    droppedReplays.foreach { n =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/blocks/part-$n.gblk"), false)
-      f.delete(new org.apache.hadoop.fs.Path(Manifests.manifestPath(path, n)), false)
-    }
+    droppedReplays.foreach(Manifests.deleteContainer(f, path, _))
   }
 
   /** Drop an aborted epoch's staged containers (unreachable anyway — no

@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, Kinds, Lane, Manifests, ParsedManifest, PartManifest}
+import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, DecodedChunk, Kinds, Lane, Manifests, ParsedManifest, PartManifest}
 
 /** Table maintenance for graft tables — the operational side a
   * long-running streaming sink needs: every micro-batch epoch commits
@@ -14,6 +15,15 @@ import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, K
   * `rewrite_data_files` maintenance procedure, built on the machinery
   * the write path already has ([[Manifests.commitIndex]] + the
   * manifest-as-commit-marker discipline of [[GraftCommits.publish]]).
+  *
+  * Compaction and the row-level mutations (DELETE, UPDATE, UPSERT) are
+  * ONE copy-on-write pipeline: one [[Snapshot]] read, one container
+  * admission ([[admitted]]), one rewrite job ([[rewriteJob]]) streaming
+  * containers through [[rewriteBin]], and one commit tail
+  * ([[commitTail]] -> [[swapGeneration]]). Each operation supplies only
+  * its per-container step: which rows to drop (compaction none, DELETE
+  * a bound predicate, UPSERT a key set) or, for UPDATE, which rows to
+  * re-assign.
   */
 object GraftMaintenance {
 
@@ -89,10 +99,7 @@ object GraftMaintenance {
     require(targetBytes > 0 && minContainers >= 2,
       s"need targetBytes > 0 and minContainers >= 2, " +
         s"got ($targetBytes, $minContainers)")
-    val confKv = ContainerIO.confSnapshot(spark)
-    val conf = ContainerIO.confFrom(confKv)
-    val committed = Manifests.readCommitted(conf, path).filter(_.rows > 0)
-    if (committed.isEmpty) return (0, 0)
+    val snap = new Snapshot(path, ContainerIO.confSnapshot(spark))
     // one BIN holds one schema generation: add-only evolution (round 7)
     // means a table may hold containers of different widths. An epoch is
     // always schema-homogeneous (one write job, one schema), so binning
@@ -105,10 +112,10 @@ object GraftMaintenance {
     // qualifies — replay protection records ancestor EPOCHS, and "epoch
     // is an ancestor" must mean "all of its rows live in compacted
     // generations". An epoch with one over-size container is skipped.
-    val work: Seq[(Seq[(String, Int)], String, Seq[ParsedManifest])] =
-      committed.groupBy(m => (m.schemaCols, m.digestCol)).toSeq
+    val work: Seq[Seq[ParsedManifest]] =
+      snap.committed.groupBy(m => (m.schemaCols, m.digestCol)).toSeq
         .sortBy(_._2.map(_.name).min)
-        .flatMap { case ((schemaCols, digestCol), group) =>
+        .flatMap { case (_, group) =>
           val smallNames = group
             .filter(_.encodedBytes < targetBytes).map(_.name).toSet
           val groups = group
@@ -131,148 +138,20 @@ object GraftMaintenance {
           }
           if (run.nonEmpty) bins += run.reverse.flatten
           bins.result().filter(_.size >= minContainers)
-            .map(b => (schemaCols, digestCol, b))
         }
     if (work.isEmpty) return (0, 0)
     // dry run: report the fold this run WOULD perform — (containers
     // consumed, containers produced) — without touching the table
-    if (dryRun) return (work.map(_._3.size).sum, work.size)
-    // the leading letter keeps the run id non-numeric, so the epoch key
-    // "compact-<runId>" is a fixed point of epochKey (which strips one
-    // trailing all-digit segment) and can never collapse to the constant
-    // "compact" — two generations sharing that key would falsely
-    // intersect in the listing-fallback normalizer
-    val runId = "r" + java.util.UUID.randomUUID().toString.take(7)
-    // one task per bin; RDD because the payload is driver-planned
-    // manifest metadata, not table rows (genuine per-partition
-    // imperative rewrite). Chunk detail (index entries are summary-only
-    // since round 8) hydrates INSIDE each task from the container's own
-    // commit marker — the driver plans from summaries alone, so its
-    // memory stays O(containers), not O(containers x chunks), at any
-    // table size (round 9; the rewrite tasks need per-chunk offsets +
-    // CRCs for verified streaming)
-    val newManifests: Array[PartManifest] =
-      try spark.sparkContext
-        .parallelize(work.zipWithIndex, work.size)
-        .map { case ((schemaCols, digestCol, ms0), bin) =>
-          val c2 = ContainerIO.confFrom(confKv)
-          val ms = ms0.map(Manifests.loadChunkIndex(c2, path, _))
-          val schema = schemaCols.map { case (n, k) => ColumnSpec.fromPacked(n, k) }
-          rewriteBin(c2, path, ms, schema,
-            digestCol, s"compact-$runId-$bin", bin)._1
-        }
-        .collect()
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          // a task hit FileNotFound (a concurrent overwrite/compaction
-          // deleted a source container mid-read) or failed outright:
-          // sweep THIS run's staged containers so nothing leaks, then
-          // surface the controlled conflict shape for the FNF case.
-          // Fatal errors (OOM, interrupts) propagate untouched — their
-          // staged leftovers are vacuum's job
-          val f = ContainerIO.fs(path, conf)
-          ContainerIO.listNames(conf, s"$path/blocks")
-            .filter(_.startsWith(s"part-compact-$runId-"))
-            .foreach(n => f.delete(
-              new org.apache.hadoop.fs.Path(s"$path/blocks/$n"), false))
-          def hasFnf(t: Throwable): Boolean =
-            t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-              hasFnf(t.getCause))
-          if (hasFnf(e)) {
-            val c = new CompactionConflict(
-              s"a source container of $path vanished during the rewrite " +
-                "(concurrent overwrite/compaction); compaction aborted, " +
-                "staged output removed")
-            c.initCause(e)
-            throw c
-          }
-          throw e
-      }
-
-    beforeCommit()
-    val consumed = work.flatMap(_._3).map(_.name).toSet
-    swapGeneration(conf, path, consumed, newManifests.toSeq,
-      what = "compaction", reclaimConsumed = true, afterStage = afterStage)
-    (consumed.size, newManifests.length)
-  }
-
-  /** Publish a rewrite generation (shared by [[compact]] and [[delete]]):
-    * stamp ONE commit id across the run's bins (a crashed run's stale
-    * stage and its committed retry stay distinguishable in the
-    * listing-fallback normalizer), write the new manifests first (the
-    * commit-marker discipline of [[GraftCommits.publish]]), then ONE OCC
-    * index swap replacing exactly `consumed`. A consumed container
-    * replaced by a concurrent commit aborts with [[CompactionConflict]]
-    * and the staged generation is swept.
-    *
-    * `reclaimConsumed = true` deletes the consumed generation's files
-    * once the new snapshot is live (compaction's documented expire-now
-    * semantics); [[delete]] passes false, so retained time-travel
-    * snapshots keep reading the pre-delete rows until the generation
-    * ages out of retention and [[vacuum]] sweeps it.
-    */
-  private def swapGeneration(conf: org.apache.hadoop.conf.Configuration,
-                             path: String, consumed: Set[String],
-                             newManifests: Seq[PartManifest],
-                             what: String, reclaimConsumed: Boolean,
-                             afterStage: () => Unit): Unit = {
-    val commitId = Manifests.newCommitId(conf, path)
-    val stamped = newManifests.map(_.copy(commitId = commitId))
-    val newJsons = stamped.map(Manifests.manifestJson)
-    val newNames = stamped.map(_.name).toSet
-    stamped.foreach(m => Manifests.writeManifest(conf, path, m, 0L))
-    afterStage()
-    try {
-      Manifests.commitIndex(conf, path, old => {
-        val parsedOld = old.map(Manifests.parse)
-        val live = parsedOld.map(_.name).toSet
-        // A concurrent Manifests.consolidate (end of every engine encode)
-        // normalizes the LISTING — where this run's staged manifests
-        // already sit as commit markers — and may have ADOPTED some or
-        // all of this run's generation into the index, deleting the
-        // consumed originals as superseded. Those bins are already
-        // committed: a consumed name missing from the snapshot is a
-        // genuine conflict only when no adopted bin of THIS run covers
-        // its epoch (pre-round-7 this path threw CompactionConflict and
-        // the handler deleted index-live compacted blocks — data loss).
-        val adopted = parsedOld.filter(m => newNames(m.name))
-        val adoptedCover = adopted.flatMap(_.ancestors).toSet
-        val gone = consumed.filterNot(live).filterNot(n =>
-          adoptedCover(Manifests.epochKey(Manifests.logicalName(n))))
-        if (gone.nonEmpty) throw new CompactionConflict(
-          s"containers ${gone.toSeq.sorted.mkString(", ")} were replaced " +
-            s"by a concurrent commit during $what of $path; aborting")
-        val adoptedNames = adopted.map(_.name).toSet
-        old.lazyZip(parsedOld).collect {
-          case (j, pm) if !consumed(pm.name) => j
-        }.toSeq ++ stamped.lazyZip(newJsons).collect {
-          case (m, j) if !adoptedNames(m.name) => j
-        }
-      })
-    } catch {
-      case e: CompactionConflict =>
-        // drop the staged generation — but ONLY the part the live index
-        // does not reference: a racing consolidate may have adopted some
-        // bins (see above), and deleting those would orphan index-live
-        // rows
-        val liveNow = Manifests.readCommitted(conf, path).map(_.name).toSet
-        val f = ContainerIO.fs(path, conf)
-        newManifests.filterNot(m => liveNow(m.name)).foreach { m =>
-          f.delete(new org.apache.hadoop.fs.Path(
-            s"$path/blocks/part-${m.name}.gblk"), false)
-          f.delete(new org.apache.hadoop.fs.Path(
-            Manifests.manifestPath(path, m.name)), false)
-        }
-        throw e
+    if (dryRun) return (work.map(_.size).sum, work.size)
+    val folded = rewriteJob(spark, snap, "compact", newRunId(), work,
+        "compaction") { (conf, ms, partName, bin) =>
+      val (pm, _) = rewriteBin(conf, path, ms,
+        GraftDataSource.specsOfManifest(ms.head), partName, bin)(copyRows(null))
+      (pm, pm.rows) // a fold changes every row it moves
     }
-    if (reclaimConsumed) {
-      // new snapshot is live: delete the consumed generation
-      val f = ContainerIO.fs(path, conf)
-      consumed.foreach { n =>
-        f.delete(new org.apache.hadoop.fs.Path(s"$path/blocks/part-$n.gblk"), false)
-        f.delete(new org.apache.hadoop.fs.Path(Manifests.manifestPath(path, n)), false)
-      }
-    }
+    val changed = commitTail(snap, folded, Nil, what = "compaction",
+      reclaimConsumed = true, beforeCommit, afterStage)
+    (changed.map(_.consumed.size).sum, changed.size)
   }
 
   /** Copy-on-write row-level DELETE (round 9) — the first operation a
@@ -327,119 +206,20 @@ object GraftMaintenance {
                                     predicate: String,
                                     beforeCommit: () => Unit,
                                     afterStage: () => Unit = () => ()): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{And, Expression, SubqueryExpression}
-    val confKv = ContainerIO.confSnapshot(spark)
-    val conf = ContainerIO.confFrom(confKv)
-    val all = Manifests.readCommitted(conf, path)
-    require(all.nonEmpty, s"no graft table at $path")
-    val committed = all.filter(m => m.rows > 0 && !m.schemaMarker)
-    if (committed.isEmpty) return 0L
-    // the FULL positional chain (dropped positions included) drives the
-    // positional zips; the predicate resolves against the VISIBLE schema
-    val chain = GraftDataSource.currentSpecsOf(all)
-    val st = GraftDataSource.schemaOf(chain.filterNot(_.dropped))
-    val tableCols = chain.map(_.name)
-    // full positions of the visible columns, ascending — a container
-    // covers a PREFIX of them (chains are prefix-extensions)
-    val visPositions: Seq[Int] =
-      chain.zipWithIndex.filterNot(_._1.dropped).map(_._2)
-
-    // resolve through the ordinary analyzer — full Spark SQL
-    // expressiveness, name resolution, implicit casts — then bind to
-    // positional ordinals for stored-row evaluation in the tasks
-    val analyzed = spark.read.format("graft").load(path)
-      .filter(org.apache.spark.sql.functions.expr(predicate))
-      .queryExecution.analyzed
-    val (cond, out) = analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        (f.condition, f.child.output)
-    }.getOrElse(throw new IllegalArgumentException(
-      s"cannot resolve delete predicate '$predicate' against $path"))
-    require(cond.deterministic,
-      s"delete predicate must be deterministic: $predicate")
-    require(!cond.exists(_.isInstanceOf[SubqueryExpression]),
-      s"delete predicate must not contain a subquery: $predicate")
-    val bound = org.apache.spark.sql.catalyst.expressions.BindReferences
-      .bindReference(cond, out)
-
-    // container admission: the predicate's conjuncts, translated to
-    // source filters and through the scan's stored-domain constant
-    // translation — untranslatable conjuncts prune
-    // nothing (conservative over-approximation of "has matches").
-    // Hand-rolled attribute-vs-literal translation (Spark's own
-    // DataSourceStrategy.translateFilter is protected[sql]); constants
-    // surface as EXTERNAL values, the form pushed filters arrive in.
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case o => Seq(o)
-    }
-    val pushed = conjuncts(cond).flatMap(sourceFilterOf)
-    val admission = GraftDataSource.translateFilters(pushed.toArray,
-      GraftDataSource.layoutOf(st)).toSeq
-    val affected = committed.filter { m =>
-      GraftDataSource.containerFilters(m, admission, tableCols)
-        .exists(GraftDataSource.admitManifest(m, _))
-    }
-    if (affected.isEmpty) return 0L
-
-    val runId = "r" + java.util.UUID.randomUUID().toString.take(7)
-    val width = visPositions.size
+    val snap = new Snapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
+    if (snap.committed.isEmpty) return 0L
+    val (cond, _) = bindPredicate(spark, path, predicate, Nil, "delete predicate")
+    val visPositions = snap.visPositions
     // one task per affected container (1:1 rewrite keeps the schema
-    // generation, partitioning metadata, and epoch coverage of each);
-    // chunk detail hydrates INSIDE the task (driver stays O(containers)).
-    // The collect (here and in update/upsert) returns ONE manifest per
-    // affected container — bounded metadata, never rows.
-    val outs: Array[(String, PartManifest, Long)] =
-      try spark.sparkContext.parallelize(affected.zipWithIndex, affected.size)
-        .map { case (m0, bin) =>
-          val c2 = ContainerIO.confFrom(confKv)
-          val m = Manifests.loadChunkIndex(c2, path, m0)
-          val schema = GraftDataSource.specsOfManifest(m)
-          // the matcher's ordinals are VISIBLE positions; the covered
-          // ones form a prefix (full positions are ascending)
-          val containerCols = visPositions.takeWhile(_ < schema.size).map(schema)
-          val matcher = new StoredRowMatcher(bound, containerCols, width)
-          val (pm, dropped) = rewriteBin(c2, path, Seq(m), schema,
-            m.digestCol, s"delete-$runId-$bin", bin, drop = matcher)
-          if (dropped == 0L) {
-            // nothing matched here (admission over-approximates):
-            // discard the staged rewrite, the original stays committed
-            ContainerIO.fs(path, c2).delete(new org.apache.hadoop.fs.Path(
-              s"$path/blocks/part-${pm.name}.gblk"), false)
-          }
-          (m.name, pm, dropped)
-        }
-        .collect()
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          // same failure discipline as compact: sweep THIS run's staged
-          // containers; surface a vanished source as the controlled
-          // conflict shape
-          val f = ContainerIO.fs(path, conf)
-          ContainerIO.listNames(conf, s"$path/blocks")
-            .filter(_.startsWith(s"part-delete-$runId-"))
-            .foreach(n => f.delete(
-              new org.apache.hadoop.fs.Path(s"$path/blocks/$n"), false))
-          def hasFnf(t: Throwable): Boolean =
-            t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-              hasFnf(t.getCause))
-          if (hasFnf(e)) {
-            val c = new CompactionConflict(
-              s"a source container of $path vanished during the delete " +
-                "rewrite (concurrent overwrite/compaction); delete " +
-                "aborted, staged output removed")
-            c.initCause(e)
-            throw c
-          }
-          throw e
-      }
-    val changed = outs.filter(_._3 > 0L)
-    if (changed.isEmpty) return 0L
-    beforeCommit()
-    swapGeneration(conf, path, changed.map(_._1).toSet,
-      changed.map(_._2).toSeq, what = s"DELETE WHERE $predicate",
-      reclaimConsumed = false, afterStage = afterStage)
-    changed.map(_._3).sum
+    // generation, partitioning metadata, and epoch coverage of each)
+    val done = rewriteJob(spark, snap, "delete", newRunId(),
+        admittedBy(snap, cond).map(Seq(_)), "delete") { (conf, ms, partName, bin) =>
+      val schema = GraftDataSource.specsOfManifest(ms.head)
+      rewriteBin(conf, path, ms, schema, partName, bin)(
+        copyRows(rowMatcher(cond, visPositions, schema)))
+    }
+    commitTail(snap, done, Nil, what = s"DELETE WHERE $predicate",
+      reclaimConsumed = false, beforeCommit, afterStage).map(_.changed).sum
   }
 
   /** Copy-on-write row-level UPDATE (round 9) — DELETE's sibling on the
@@ -469,114 +249,38 @@ object GraftMaintenance {
                                     predicate: String,
                                     set: Map[String, String],
                                     beforeCommit: () => Unit): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{And, Expression, SubqueryExpression}
     require(set.nonEmpty, "update needs at least one column assignment")
-    val confKv = ContainerIO.confSnapshot(spark)
-    val conf = ContainerIO.confFrom(confKv)
-    val all = Manifests.readCommitted(conf, path)
-    require(all.nonEmpty, s"no graft table at $path")
-    val committed = all.filter(m => m.rows > 0 && !m.schemaMarker)
-    if (committed.isEmpty) return 0L
-    val chain = GraftDataSource.currentSpecsOf(all)
-    val visible = chain.filterNot(_.dropped)
-    val st = GraftDataSource.schemaOf(visible)
-    val tableCols = chain.map(_.name)
-    val visPositions: Seq[Int] =
-      chain.zipWithIndex.filterNot(_._1.dropped).map(_._2)
+    val snap = new Snapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
+    if (snap.committed.isEmpty) return 0L
+    val st = snap.st
     set.keys.foreach(c => require(st.fieldNames.contains(c),
       s"update target '$c' is not a column of ${st.fieldNames.mkString(",")}"))
-
-    // resolve the predicate AND the assignments through the analyzer in
-    // one pass: a filter over a projection of (assignment expressions
-    // cast to their target types), all bound to the relation's output
-    val df = spark.read.format("graft").load(path)
     val setSeq = set.toSeq
-    val probe = df.select(setSeq.map { case (c, e) =>
-        org.apache.spark.sql.functions.expr(e)
-          .cast(st(st.fieldIndex(c)).dataType).as(c)
-      } :+ org.apache.spark.sql.functions.expr(predicate).as("_pred"): _*)
-      .queryExecution.analyzed
-    val (projList, out) = probe.collectFirst {
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        (p.projectList, p.child.output)
-    }.getOrElse(throw new IllegalArgumentException(
-      s"cannot resolve update of $path"))
-    def bind(e: Expression): Expression = {
-      require(e.deterministic, s"update expressions must be deterministic: $e")
-      require(!e.exists(_.isInstanceOf[SubqueryExpression]),
-        s"update expressions must not contain a subquery: $e")
-      org.apache.spark.sql.catalyst.expressions.BindReferences
-        .bindReference(e, out)
+    val (cond, bound) = bindPredicate(spark, path, predicate, setSeq,
+      "update expressions")
+    val assigns: Seq[(Int, Expression)] = setSeq.map(a => st.fieldIndex(a._1)).zip(bound)
+    val (chain, visPositions) = (snap.chain, snap.visPositions)
+    val done = rewriteJob(spark, snap, "update", newRunId(),
+        admittedBy(snap, cond).map(Seq(_)), "update") { (conf, ms, partName, bin) =>
+      val m = ms.head
+      val containerSpecs = GraftDataSource.specsOfManifest(m)
+      // partition-transform metadata survives only when no updated column
+      // is one of its source columns (stale bucket-id/range facts would
+      // prune wrongly); stored names compared, since the metadata was
+      // recorded under them
+      val targetStored = assigns.map(a => visPositions(a._1))
+        .filter(_ < containerSpecs.size).map(fp => containerSpecs(fp).name).toSet
+      val keepPart = !m.partitioning.exists(p => targetStored.exists(t =>
+        p.contains(s"($t)") || p.contains(s",$t)")))
+      // the encoder writes the CURRENT chain: containers predating an
+      // added column widen to it (a backfilling UPDATE works on them)
+      val (pm, updated) = rewriteBin(conf, path, ms, chain, partName, bin)(
+        updateRows(rowMatcher(cond, visPositions, containerSpecs), assigns))
+      (if (keepPart) pm else pm.copy(partitioning = Nil, bucketIds = Map.empty),
+        updated)
     }
-    import org.apache.spark.sql.catalyst.expressions.Alias
-    val boundAssigns: Seq[(Int, Expression)] =
-      projList.init.lazyZip(setSeq).map { case (a, (c, _)) =>
-        (st.fieldIndex(c), bind(a.asInstanceOf[Alias].child))
-      }.toSeq
-    val cond = bind(projList.last.asInstanceOf[Alias].child)
-
-    // admission: identical to delete's
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case o => Seq(o)
-    }
-    val pushed = conjuncts(cond).flatMap(sourceFilterOf)
-    val admission = GraftDataSource.translateFilters(pushed.toArray,
-      GraftDataSource.layoutOf(st)).toSeq
-    val affected = committed.filter { m =>
-      GraftDataSource.containerFilters(m, admission, tableCols)
-        .exists(GraftDataSource.admitManifest(m, _))
-    }
-    if (affected.isEmpty) return 0L
-
-    val runId = "r" + java.util.UUID.randomUUID().toString.take(7)
-    val width = visPositions.size
-    val targetOrds = boundAssigns.map(_._1)
-    val outs: Array[(String, PartManifest, Long)] =
-      try spark.sparkContext.parallelize(affected.zipWithIndex, affected.size)
-        .map { case (m0, bin) =>
-          val c2 = ContainerIO.confFrom(confKv)
-          val m = Manifests.loadChunkIndex(c2, path, m0)
-          val schema = GraftDataSource.specsOfManifest(m)
-          val containerCols = visPositions.takeWhile(_ < schema.size).map(schema)
-          val matcher = new StoredRowMatcher(cond, containerCols, width)
-          val (pm, updated) = rewriteUpdate(c2, path, m, chain,
-            visPositions, matcher, boundAssigns, targetOrds,
-            s"update-$runId-$bin", bin)
-          if (updated == 0L) {
-            ContainerIO.fs(path, c2).delete(new org.apache.hadoop.fs.Path(
-              s"$path/blocks/part-${pm.name}.gblk"), false)
-          }
-          (m.name, pm, updated)
-        }
-        .collect()
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          val f = ContainerIO.fs(path, conf)
-          ContainerIO.listNames(conf, s"$path/blocks")
-            .filter(_.startsWith(s"part-update-$runId-"))
-            .foreach(n => f.delete(
-              new org.apache.hadoop.fs.Path(s"$path/blocks/$n"), false))
-          def hasFnf(t: Throwable): Boolean =
-            t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-              hasFnf(t.getCause))
-          if (hasFnf(e)) {
-            val c = new CompactionConflict(
-              s"a source container of $path vanished during the update " +
-                "rewrite (concurrent overwrite/compaction); update " +
-                "aborted, staged output removed")
-            c.initCause(e)
-            throw c
-          }
-          throw e
-      }
-    val changed = outs.filter(_._3 > 0L)
-    if (changed.isEmpty) return 0L
-    beforeCommit()
-    swapGeneration(conf, path, changed.map(_._1).toSet,
-      changed.map(_._2).toSeq, what = s"UPDATE WHERE $predicate",
-      reclaimConsumed = false, afterStage = () => ())
-    changed.map(_._3).sum
+    commitTail(snap, done, Nil, what = s"UPDATE WHERE $predicate",
+      reclaimConsumed = false, beforeCommit, () => ()).map(_.changed).sum
   }
 
   /** Copy-on-write MERGE-style UPSERT (round 9) — the third leg of
@@ -596,7 +300,9 @@ object GraftMaintenance {
     * the ordinary write machinery; ONE OCC swap publishes rewrites +
     * appends together — readers never see a state with both (or
     * neither) version of a key. Concurrency, retention, and replay
-    * interplay are DELETE's.
+    * interplay are DELETE's; a concurrent rename or drop the appended
+    * containers' labels would revert aborts the upsert with
+    * [[SchemaEvolutionConflict]].
     *
     * Returns (rows replaced or deleted from the old generation, rows
     * appended from the source).
@@ -611,17 +317,8 @@ object GraftMaintenance {
                                     keys: Seq[String],
                                     beforeCommit: () => Unit): (Long, Long) = {
     require(keys.nonEmpty, "upsert needs at least one key column")
-    val confKv = ContainerIO.confSnapshot(spark)
-    val conf = ContainerIO.confFrom(confKv)
-    val all = Manifests.readCommitted(conf, path)
-    require(all.nonEmpty, s"no graft table at $path")
-    val committed = all.filter(m => m.rows > 0 && !m.schemaMarker)
-    val chain = GraftDataSource.currentSpecsOf(all)
-    val visible = chain.filterNot(_.dropped)
-    val st = GraftDataSource.schemaOf(visible)
-    val tableCols = chain.map(_.name)
-    val visPositions: Seq[Int] =
-      chain.zipWithIndex.filterNot(_._1.dropped).map(_._2)
+    val snap = new Snapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
+    val (visible, st) = (snap.visible, snap.st)
     // the source must BE the visible schema (same names, kinds, order)
     val srcSpecs = GraftDataSource.specsOf(source.schema)
     require(srcSpecs.map(s => (s.name, s.kind, s.precision, s.scale)) ==
@@ -630,39 +327,29 @@ object GraftMaintenance {
         s"the table's ${st.simpleString}")
     keys.foreach(k => require(st.fieldNames.contains(k),
       s"upsert key '$k' is not a column of ${st.fieldNames.mkString(",")}"))
-    val keyVis = keys.map(st.fieldIndex)
-    keyVis.foreach { v =>
+    keys.map(st.fieldIndex).foreach { v =>
       val kind = visible(v).kind
       require(Kinds(kind).keyable,
         s"upsert key '${visible(v).name}' has unsupported kind $kind " +
           "(float/double/binary/array keys are not comparable-by-value)")
     }
 
-    // the source is read THREE times (count, key collect, staging):
-    // persist it for the op so all three see the SAME rows even when
-    // the source plan is nondeterministic/non-idempotent (a shuffled
-    // sample, a REST-backed view) — otherwise staged rows could carry
-    // keys the collected set never saw and a key could end up twice
+    // the source is read TWICE (the grouped key aggregation, staging):
+    // persist it for the op so both see the SAME rows even when the
+    // source plan is nondeterministic/non-idempotent (a shuffled sample,
+    // a REST-backed view) — otherwise staged rows could carry keys the
+    // collected set never saw and a key could end up twice
     val src = source.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try upsertPersisted(spark, path, src, keys, beforeCommit)
+    try upsertPersisted(spark, snap, src, keys, beforeCommit)
     finally { src.unpersist(); () }
   }
 
-  private def upsertPersisted(spark: SparkSession, path: String,
+  private def upsertPersisted(spark: SparkSession, snap: Snapshot,
                               source: org.apache.spark.sql.DataFrame,
                               keys: Seq[String],
                               beforeCommit: () => Unit): (Long, Long) = {
-    val confKv = ContainerIO.confSnapshot(spark)
-    val conf = ContainerIO.confFrom(confKv)
-    val all = Manifests.readCommitted(conf, path)
-    val committed = all.filter(m => m.rows > 0 && !m.schemaMarker)
-    val chain = GraftDataSource.currentSpecsOf(all)
-    val visible = chain.filterNot(_.dropped)
-    val st = GraftDataSource.schemaOf(visible)
-    val tableCols = chain.map(_.name)
-    val visPositions: Seq[Int] =
-      chain.zipWithIndex.filterNot(_._1.dropped).map(_._2)
+    val (path, confKv, st) = (snap.path, snap.confKv, snap.st)
     val keyVis = keys.map(st.fieldIndex)
 
     // distinct external key tuples -> driver; uniqueness is the upsert
@@ -680,7 +367,7 @@ object GraftMaintenance {
     require(keyRows.length.toLong == srcCount,
       s"upsert source has ${srcCount - keyRows.length} duplicate key rows")
     require(keyRows.forall(r => !r.anyNull), "upsert keys must be non-null")
-    val keySpecs = keyVis.map(visible)
+    val keySpecs = keyVis.map(snap.visible)
     val keySet: Set[Seq[Any]] = keyRows.map(r => keys.indices.map { i =>
       Kinds(keySpecs(i).kind).storedValue(r.get(i), keySpecs(i))
     }).toSet
@@ -691,11 +378,12 @@ object GraftMaintenance {
     // apply). Above the IN cap, per-column [min, max] RANGE conjuncts on
     // ordered kinds take over (also implied by membership): bounded-size
     // admission at ANY source size, so key-sorted/clustered tables keep
-    // pruning whole containers outside the source's key range.
-    val admission: Seq[org.apache.spark.sql.sources.Filter] = {
+    // pruning whole containers outside the source's key range. The
+    // constants already are stored values, which the admission's
+    // stored-domain translation passes through unchanged.
+    val keyFilters: Seq[org.apache.spark.sql.sources.Filter] = {
       import org.apache.spark.sql.{sources => sf}
-      if (keySet.isEmpty) Nil
-      else if (keySet.size <= 4096)
+      if (keySet.size <= 4096)
         keys.indices.map(i => sf.In(keys(i), keySet.map(_(i)).toArray))
       else keys.indices.flatMap { i =>
         val k = Kinds(keySpecs(i).kind)
@@ -707,30 +395,15 @@ object GraftMaintenance {
         }
       }
     }
-    val affected =
-      if (keyRows.isEmpty) Nil
-      else committed.filter { m =>
-        GraftDataSource.containerFilters(m, admission, tableCols)
-          .exists(GraftDataSource.admitManifest(m, _))
-      }
+    val affected = if (keySet.isEmpty) Nil else admitted(snap, keyFilters)
 
-    val runId = "r" + java.util.UUID.randomUUID().toString.take(7)
+    val runId = newRunId()
     val epoch = s"upsert-$runId"
     val chunkRows = ColumnarEngine.ChunkRows
     val fullCols: Seq[(String, Int)] =
-      if (chain.exists(_.dropped)) chain.map(s => (s.name, s.packed)) else Nil
-    def drainQuietly(f: scala.concurrent.Future[_]): Unit =
-      if (f != null)
-        try scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)
-        catch { case scala.util.control.NonFatal(_) => () }
-    def sweepStaged(): Unit = {
-      val f = ContainerIO.fs(path, conf)
-      ContainerIO.listNames(conf, s"$path/blocks")
-        .filter(n => n.startsWith(s"part-$epoch-") ||
-          n.startsWith(s"part-merge-$runId-"))
-        .foreach(n => f.delete(
-          new org.apache.hadoop.fs.Path(s"$path/blocks/$n"), false))
-    }
+      if (snap.chain.exists(_.dropped)) snap.chain.map(s => (s.name, s.packed))
+      else Nil
+    val keyFull = keyVis.map(snap.visPositions)
     var appendedF: scala.concurrent.Future[Array[PartManifest]] = null
     try {
       // 1) stage the source as fresh containers (attempt-qualified, one
@@ -763,135 +436,333 @@ object GraftMaintenance {
       }(scala.concurrent.ExecutionContext.global)
 
       // 2) rewrite the admitted containers, dropping matched keys
-      val keyVisSer = keyVis
-      val visPosSer = visPositions
-      val outs: Array[(String, PartManifest, Long)] =
-        if (affected.isEmpty) Array.empty
-        else spark.sparkContext.parallelize(affected.zipWithIndex, affected.size)
-          .map { case (m0, bin) =>
-            val c2 = ContainerIO.confFrom(confKv)
-            val m = Manifests.loadChunkIndex(c2, path, m0)
-            val schema = GraftDataSource.specsOfManifest(m)
-            val keyFull = keyVisSer.map(visPosSer)
-            if (keyFull.exists(_ >= schema.size))
-              // the container predates a key column: all-null keys,
-              // nothing can match
-              (m.name, null: PartManifest, 0L)
-            else {
-              val matcher = new StoredKeyMatcher(keyFull.map(schema), keySetB.value)
-              val (pm, dropped) = rewriteBin(c2, path, Seq(m), schema,
-                m.digestCol, s"merge-$runId-$bin", bin, drop = matcher)
-              if (dropped == 0L) {
-                ContainerIO.fs(path, c2).delete(new org.apache.hadoop.fs.Path(
-                  s"$path/blocks/part-${pm.name}.gblk"), false)
-              }
-              (m.name, pm, dropped)
-            }
-          }.collect()
+      val done = rewriteJob(spark, snap, "merge", runId,
+          affected.map(Seq(_)), "upsert") { (conf, ms, partName, bin) =>
+        val schema = GraftDataSource.specsOfManifest(ms.head)
+        // a container predating a key column holds all-null keys:
+        // nothing can match, nothing is staged
+        if (keyFull.exists(_ >= schema.size)) (null, 0L)
+        else rewriteBin(conf, path, ms, schema, partName, bin)(copyRows(
+          new StoredKeyMatcher(keyFull.map(schema), keySetB.value)))
+      }
       val appended = scala.concurrent.Await.result(
         appendedF, scala.concurrent.duration.Duration.Inf)
-      val changed = outs.filter(_._3 > 0L)
-      if (changed.isEmpty && appended.isEmpty) return (0L, 0L)
-      beforeCommit()
       // ONE swap: rewrites replace their originals, appends just land —
       // no reader ever sees a key twice or not at all
-      swapGeneration(conf, path, changed.map(_._1).toSet,
-        changed.map(_._2).toSeq ++ appended,
+      val changed = commitTail(snap, done, appended.toSeq,
         what = s"UPSERT ON ${keys.mkString(",")}",
-        reclaimConsumed = false, afterStage = () => ())
-      (changed.map(_._3).sum, appended.map(_.rows).sum)
+        reclaimConsumed = false, beforeCommit, () => ())
+      (changed.map(_.changed).sum, appended.map(_.rows).sum)
     } catch {
-      case e: CompactionConflict =>
-        // rewrite-side conflicts sweep their own staging, but the
+      case scala.util.control.NonFatal(e) =>
+        // the rewrite job and the swap sweep their own staging, but the
         // CONCURRENT source staging may still be landing containers:
         // drain it, then sweep (idempotent) so nothing survives the abort
-        drainQuietly(appendedF)
-        sweepStaged()
-        throw e
-      case scala.util.control.NonFatal(e) =>
-        drainQuietly(appendedF)
-        sweepStaged()
-        def hasFnf(t: Throwable): Boolean =
-          t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-            hasFnf(t.getCause))
-        if (hasFnf(e)) {
-          val c = new CompactionConflict(
-            s"a source container of $path vanished during the upsert " +
-              "rewrite (concurrent overwrite/compaction); upsert aborted, " +
-              "staged output removed")
-          c.initCause(e)
-          throw c
-        }
-        throw e
+        if (appendedF != null)
+          try scala.concurrent.Await.ready(appendedF,
+            scala.concurrent.duration.Duration.Inf)
+          catch { case scala.util.control.NonFatal(_) => () }
+        sweepStaged(snap, epoch, s"merge-$runId")
+        throw aborted(path, "upsert", e)
     } finally keySetB.destroy()
   }
 
-  /** Stream one container through a CURRENT-width re-encoder, applying
-    * the bound assignments to matched rows (UPDATE's rewrite). Every row
-    * round-trips through the visible internal representation (the same
-    * bijective per-kind conversions the matcher and readers use), which
-    * also WIDENS containers predating added columns to the current
-    * chain — a backfilling UPDATE works on them.
+  // ------------------------------------------- the copy-on-write pipeline
+
+  /** One operation's view of the table, read ONCE: conf, the committed
+    * manifests, the full positional chain and the visible schema. The
+    * operation validates, binds, admits and plans its rewrite against
+    * this one snapshot; the swap re-checks the snapshot it lands on.
     */
-  private def rewriteUpdate(conf: org.apache.hadoop.conf.Configuration,
-                            path: String, m: ParsedManifest,
-                            chain: Seq[ColumnSpec],
-                            visPositions: Seq[Int],
-                            matcher: StoredRowMatcher,
-                            assigns: Seq[(Int,
-                              org.apache.spark.sql.catalyst.expressions.Expression)],
-                            targetOrds: Seq[Int],
-                            partName: String, bin: Int): (PartManifest, Long) = {
-    val containerSpecs = GraftDataSource.specsOfManifest(m)
-    // the visible row's field i is the chain's live column i
-    val enc = new ColumnarEngine.PartitionEncoder(bin, path, conf,
-      partName = partName, schema = chain)
-    // read EVERY live column of the container (full rewrite)
-    val needed = Lane.ofSpecs(containerSpecs)
-    val ancestors = Manifests.capAncestors(
-      Seq(Manifests.epochKey(Manifests.logicalName(m.name))) ++ m.ancestors)
-    // partition-transform metadata survives only when no updated column
-    // is one of its source columns (stale bucket-id/range facts would
-    // prune wrongly); stored names compared, since the metadata was
-    // recorded under them
-    val targetStored = targetOrds.map(visPositions).filter(_ < containerSpecs.size)
-      .map(fp => containerSpecs(fp).name).toSet
-    val keepPart = m.partitioning.nonEmpty &&
-      !m.partitioning.exists(p => targetStored.exists(t =>
-        p.contains(s"($t)") || p.contains(s",$t)")))
-    var updated = 0L
-    val file = m.blockFile(path)
-    val (in, fileLen) = ContainerFormat.open(file, conf)
-    try {
-      ContainerFormat.chunks(in, fileLen, file, m.chunkIndex, needed).foreach { chunk =>
-        if (m.digestCol.nonEmpty)
-          ContainerFormat.verifyContentDigest(chunk, m.digestCol)
-        var j = 0
-        while (j < chunk.rows) {
-          val row = matcher.buildRow(chunk, j)
-          if (matcher.matchesRow(row)) {
-            updated += 1
-            // all assignments see the ORIGINAL row: evaluate first,
-            // apply after
-            val vals = assigns.map(_._2.eval(row))
-            assigns.lazyZip(vals).foreach { case ((ord, _), v) =>
-              row.update(ord, v)
-            }
-          }
-          enc.putRow(row)
-          j += 1
+  private final class Snapshot(val path: String,
+                               val confKv: Map[String, String]) {
+    val conf: org.apache.hadoop.conf.Configuration = ContainerIO.confFrom(confKv)
+    val all: Seq[ParsedManifest] = Manifests.readCommitted(conf, path)
+    /** The data containers (schema markers and tombstones hold no rows). */
+    val committed: Seq[ParsedManifest] =
+      all.filter(m => m.rows > 0 && !m.schemaMarker)
+    // the FULL positional chain (dropped positions included) drives the
+    // positional zips; predicates and sources resolve against the
+    // VISIBLE schema
+    lazy val chain: Seq[ColumnSpec] = GraftDataSource.currentSpecsOf(all)
+    lazy val visible: Seq[ColumnSpec] = chain.filterNot(_.dropped)
+    lazy val st: org.apache.spark.sql.types.StructType =
+      GraftDataSource.schemaOf(visible)
+    lazy val tableCols: Seq[String] = chain.map(_.name)
+    // full positions of the visible columns, ascending — a container
+    // covers a PREFIX of them (chains are prefix-extensions)
+    lazy val visPositions: Seq[Int] =
+      chain.zipWithIndex.filterNot(_._1.dropped).map(_._2)
+
+    def requireTable(): Snapshot = {
+      require(all.nonEmpty, s"no graft table at $path")
+      this
+    }
+  }
+
+  /** A fresh run id. The leading letter keeps it non-numeric, so a
+    * staged epoch key like "compact-<runId>" is a fixed point of
+    * [[Manifests.epochKey]] (which strips one trailing all-digit segment)
+    * and can never collapse to the constant "compact" — two generations
+    * sharing that key would falsely intersect in the listing-fallback
+    * normalizer.
+    */
+  private def newRunId(): String =
+    "r" + java.util.UUID.randomUUID().toString.take(7)
+
+  /** The one predicate binder (DELETE, UPDATE): resolve `predicate` and
+    * UPDATE's `set` assignments (column -> expression, cast to the
+    * column's type) through the ordinary analyzer — full Spark SQL
+    * expressiveness, name resolution, implicit casts — in one probe plan
+    * (a projection over a filter of the table), then bind them to
+    * positional ordinals for stored-row evaluation in the rewrite tasks.
+    * Returns the bound predicate and the bound assignments, in `set`
+    * order.
+    */
+  private def bindPredicate(spark: SparkSession, path: String,
+                            predicate: String, set: Seq[(String, String)],
+                            noun: String): (Expression, Seq[Expression]) = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, SubqueryExpression}
+    import org.apache.spark.sql.functions.expr
+    val df = spark.read.format("graft").load(path)
+    val filtered = df.filter(expr(predicate))
+    val analyzed = (if (set.isEmpty) filtered
+      else filtered.select(set.map { case (c, e) =>
+        expr(e).cast(df.schema(c).dataType).as(c) }: _*)).queryExecution.analyzed
+    val filter = analyzed.collectFirst { case f: Filter => f }
+      .getOrElse(throw new IllegalArgumentException(
+        s"cannot resolve $noun '$predicate' against $path"))
+    val assigns = analyzed.collectFirst { case p: Project =>
+      p.projectList.map(_.asInstanceOf[Alias].child) }.getOrElse(Nil)
+    val exprs = filter.condition +: assigns
+    exprs.lazyZip(predicate +: set.map(_._2)).foreach { (e, text) =>
+      require(e.deterministic, s"$noun must be deterministic: $text")
+      require(!e.exists(_.isInstanceOf[SubqueryExpression]),
+        s"$noun must not contain a subquery: $text")
+    }
+    val bound = exprs.map(BindReferences.bindReference(_, filter.child.output))
+    (bound.head, bound.tail)
+  }
+
+  /** The one container admission: `filters` pass the scan's
+    * stored-domain constant translation ([[GraftDataSource.translateFilters]]
+    * — constants that already are stored values pass unchanged), then
+    * the scan's per-container admission (zone maps, envelopes, null
+    * counts, bucket ids, rename translation, add-only-evolution
+    * coverage). Returns the containers that MAY hold a matching row.
+    */
+  private def admitted(snap: Snapshot,
+                       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[ParsedManifest] = {
+    val admission = GraftDataSource.translateFilters(filters.toArray,
+      GraftDataSource.layoutOf(snap.st)).toSeq
+    snap.committed.filter { m =>
+      GraftDataSource.containerFilters(m, admission, snap.tableCols)
+        .exists(GraftDataSource.admitManifest(m, _))
+    }
+  }
+
+  /** A bound predicate's admission: its conjuncts, translated to source
+    * filters ([[sourceFilterOf]]); untranslatable conjuncts prune
+    * nothing (a conservative over-approximation of "has matches").
+    */
+  private def admittedBy(snap: Snapshot, cond: Expression): Seq[ParsedManifest] = {
+    import org.apache.spark.sql.catalyst.expressions.And
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case o => Seq(o)
+    }
+    admitted(snap, conjuncts(cond).flatMap(sourceFilterOf))
+  }
+
+  /** One bin's rewrite: the source containers it consumed, its staged
+    * manifest (null when nothing was staged), and how many rows the
+    * operation changed in it (a fold changes every row it moves).
+    */
+  private final case class Rewritten(consumed: Seq[String],
+                                     staged: PartManifest, changed: Long)
+
+  /** The one rewrite job: one Spark task per bin (an RDD, because the
+    * payload is driver-planned manifest metadata, not table rows), each
+    * staging `part-<op>-<runId>-<bin>` through `step` (the operation's
+    * per-container rewrite). Chunk detail (index entries are
+    * summary-only since round 8) hydrates INSIDE each task from the
+    * container's own commit marker, so the driver plans from summaries
+    * alone and its memory stays O(containers), not O(containers x
+    * chunks). A staged rewrite that changed nothing is discarded — the
+    * original stays committed. The collect returns ONE manifest per bin:
+    * bounded metadata, never rows.
+    *
+    * A failed task (a source container deleted mid-read by a concurrent
+    * overwrite or compaction, or an outright error) sweeps THIS run's
+    * staged containers, then raises the failure as [[aborted]] maps it.
+    * Tasks of the failed stage that are still running may land staged
+    * output after the sweep; fatal errors (OOM, interrupts) propagate
+    * untouched. Both kinds of leftovers are vacuum's job.
+    */
+  private def rewriteJob(spark: SparkSession, snap: Snapshot, op: String,
+                         runId: String, bins: Seq[Seq[ParsedManifest]],
+                         noun: String)(
+      step: (org.apache.hadoop.conf.Configuration, Seq[ParsedManifest],
+        String, Int) => (PartManifest, Long)): Seq[Rewritten] =
+    if (bins.isEmpty) Nil
+    else {
+      val (path, confKv) = (snap.path, snap.confKv)
+      try spark.sparkContext.parallelize(bins.zipWithIndex, bins.size)
+        .map { case (ms0, bin) =>
+          val conf = ContainerIO.confFrom(confKv)
+          val ms = ms0.map(Manifests.loadChunkIndex(conf, path, _))
+          val (pm, changed) = step(conf, ms, s"$op-$runId-$bin", bin)
+          if (pm != null && changed == 0L)
+            ContainerIO.fs(path, conf).delete(new org.apache.hadoop.fs.Path(
+              s"$path/blocks/part-${pm.name}.gblk"), false)
+          Rewritten(ms.map(_.name), pm, changed)
         }
+        .collect().toSeq
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          sweepStaged(snap, s"$op-$runId")
+          throw aborted(path, noun, e)
       }
-    } finally in.close()
-    (enc.finish(publishManifest = false).copy(ancestors = ancestors,
-      partitioning = if (keepPart) m.partitioning else Nil,
-      bucketIds =
-        if (keepPart) m.bucketIds.map { case (k, v) => k -> v.toSeq.sorted }
-        else Map.empty), updated)
+    }
+
+  /** Delete the staged blocks (`part-<stage>-...`) of the given stages. */
+  private def sweepStaged(snap: Snapshot, stages: String*): Unit = {
+    val f = ContainerIO.fs(snap.path, snap.conf)
+    ContainerIO.listNames(snap.conf, s"${snap.path}/blocks")
+      .filter(n => stages.exists(s => n.startsWith(s"part-$s-")))
+      .foreach(n => f.delete(
+        new org.apache.hadoop.fs.Path(s"${snap.path}/blocks/$n"), false))
+  }
+
+  /** How a failed copy-on-write operation surfaces: a source container
+    * that vanished mid-rewrite (FileNotFound anywhere in the cause chain
+    * — a concurrent overwrite or compaction deleted it) becomes the
+    * controlled [[CompactionConflict]]; anything else, a conflict
+    * included, is raised as it is.
+    */
+  private def aborted(path: String, noun: String, e: Throwable): Throwable = {
+    def hasFnf(t: Throwable): Boolean =
+      t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
+        hasFnf(t.getCause))
+    e match {
+      case c: CompactionConflict => c
+      case _ if hasFnf(e) =>
+        val c = new CompactionConflict(
+          s"a source container of $path vanished during the $noun rewrite " +
+            s"(concurrent overwrite/compaction); $noun aborted, staged " +
+            "output removed")
+        c.initCause(e)
+        c
+      case _ => e
+    }
+  }
+
+  /** The one commit tail: the bins that changed something, plus any
+    * `appended` containers (UPSERT's staged source), publish through ONE
+    * [[swapGeneration]]; the `beforeCommit` test seam runs just before
+    * it. Returns the changed bins (nothing commits when there are none
+    * and nothing is appended).
+    */
+  private def commitTail(snap: Snapshot, done: Seq[Rewritten],
+                         appended: Seq[PartManifest], what: String,
+                         reclaimConsumed: Boolean, beforeCommit: () => Unit,
+                         afterStage: () => Unit): Seq[Rewritten] = {
+    val changed = done.filter(_.changed > 0L)
+    if (changed.nonEmpty || appended.nonEmpty) {
+      beforeCommit()
+      swapGeneration(snap.conf, snap.path, changed.flatMap(_.consumed).toSet,
+        changed.map(_.staged) ++ appended, what, reclaimConsumed, afterStage)
+    }
+    changed
+  }
+
+  /** Publish a rewrite generation (the commit of every copy-on-write
+    * operation — compact, DELETE, UPDATE, UPSERT): stamp ONE commit id
+    * across the run's bins (a crashed run's stale stage and its
+    * committed retry stay distinguishable in the listing-fallback
+    * normalizer), write the new manifests first (the commit-marker
+    * discipline of [[GraftCommits.publish]]), then ONE OCC index swap
+    * replacing exactly `consumed`. A consumed container replaced by a
+    * concurrent commit aborts with [[CompactionConflict]], a concurrent
+    * schema change the new manifests' labels would revert with
+    * [[SchemaEvolutionConflict]]; either way the staged generation is
+    * swept.
+    *
+    * `reclaimConsumed = true` deletes the consumed generation's files
+    * once the new snapshot is live (compaction's documented expire-now
+    * semantics); the row-level mutations pass false, so retained
+    * time-travel snapshots keep reading the pre-mutation rows until the
+    * generation ages out of retention and [[vacuum]] sweeps it.
+    */
+  private def swapGeneration(conf: org.apache.hadoop.conf.Configuration,
+                             path: String, consumed: Set[String],
+                             newManifests: Seq[PartManifest],
+                             what: String, reclaimConsumed: Boolean,
+                             afterStage: () => Unit): Unit = {
+    val commitId = Manifests.newCommitId(conf, path)
+    val stamped = newManifests.map(_.copy(commitId = commitId))
+    val newJsons = stamped.map(Manifests.manifestJson)
+    val newNames = stamped.map(_.name).toSet
+    // containers WITHOUT ancestors (UPSERT's appended source) are plain
+    // appends to label resolution (currentSpecsOf takes current names
+    // from them): they carry publish's add-only/label re-check, or their
+    // planning-time labels under this newer commit id would silently
+    // revert a rename or drop that committed meanwhile. Rewritten
+    // generations carry ancestors and never label-resolve.
+    val appendSchemas = stamped.filter(_.ancestors.isEmpty).map(_.schemaCols).distinct
+    stamped.foreach(m => Manifests.writeManifest(conf, path, m, 0L))
+    afterStage()
+    try {
+      Manifests.commitIndex(conf, path, old => {
+        val parsedOld = old.map(Manifests.parse)
+        appendSchemas.foreach(GraftCommits.checkSchema(path, parsedOld, _))
+        val live = parsedOld.map(_.name).toSet
+        // A concurrent Manifests.consolidate (end of every engine encode)
+        // normalizes the LISTING — where this run's staged manifests
+        // already sit as commit markers — and may have ADOPTED some or
+        // all of this run's generation into the index, deleting the
+        // consumed originals as superseded. Those bins are already
+        // committed: a consumed name missing from the snapshot is a
+        // genuine conflict only when no adopted bin of THIS run covers
+        // its epoch (pre-round-7 this path threw CompactionConflict and
+        // the handler deleted index-live compacted blocks — data loss).
+        val adopted = parsedOld.filter(m => newNames(m.name))
+        val adoptedCover = adopted.flatMap(_.ancestors).toSet
+        val gone = consumed.filterNot(live).filterNot(n =>
+          adoptedCover(Manifests.epochKey(Manifests.logicalName(n))))
+        if (gone.nonEmpty) throw new CompactionConflict(
+          s"containers ${gone.toSeq.sorted.mkString(", ")} were replaced " +
+            s"by a concurrent commit during $what of $path; aborting")
+        val adoptedNames = adopted.map(_.name).toSet
+        old.lazyZip(parsedOld).collect {
+          case (j, pm) if !consumed(pm.name) => j
+        }.toSeq ++ stamped.lazyZip(newJsons).collect {
+          case (m, j) if !adoptedNames(m.name) => j
+        }
+      })
+    } catch {
+      case e @ (_: CompactionConflict | _: SchemaEvolutionConflict) =>
+        // drop the staged generation — but ONLY the part the live index
+        // does not reference: a racing consolidate may have adopted some
+        // bins (see above), and deleting those would orphan index-live
+        // rows
+        val liveNow = Manifests.readCommitted(conf, path).map(_.name).toSet
+        val f = ContainerIO.fs(path, conf)
+        newManifests.filterNot(m => liveNow(m.name))
+          .foreach(m => Manifests.deleteContainer(f, path, m.name))
+        throw e
+    }
+    if (reclaimConsumed) {
+      // new snapshot is live: delete the consumed generation
+      val f = ContainerIO.fs(path, conf)
+      consumed.foreach(Manifests.deleteContainer(f, path, _))
+    }
   }
 
   /** Conservative Catalyst-expression -> source-Filter translation for
-    * DELETE's container admission: attribute-vs-literal comparisons, IN,
+    * the predicate admission (DELETE, UPDATE): attribute-vs-literal
+    * comparisons, IN,
     * IS [NOT] NULL, and AND/OR compositions translate; anything else
     * (casts around the attribute, functions, UDFs) returns None and the
     * conjunct simply prunes nothing. Literal constants convert to their
@@ -899,7 +770,8 @@ object GraftMaintenance {
     * — String / BigDecimal / LocalDateTime / Date — the exact form the
     * scan's pushed filters arrive in, so the admission machinery
     * ([[GraftDataSource.translateFilters]] + zone maps) applies
-    * unchanged.
+    * unchanged. (Spark's own DataSourceStrategy.translateFilter is
+    * protected[sql].)
     */
   private def sourceFilterOf(
       e: org.apache.spark.sql.catalyst.expressions.Expression):
@@ -1193,17 +1065,20 @@ object GraftMaintenance {
       ContainerIO.confFrom(ContainerIO.confSnapshot(spark)), path,
       retainLast, olderThanMs)
 
-  /** Stream one bin's containers chunk-by-chunk (CRC + digest verified)
-    * into a fresh encoder under an unpublished manifest. Task memory is
-    * bounded by one decoded chunk plus one encoder chunk buffer.
-    * `drop` (the copy-on-write DELETE path) filters matched rows out of
-    * the rewrite; the second return is how many rows were dropped.
+  /** The one container stream of every rewrite: `ms`' containers in
+    * turn, each chunk over the container's live lanes (dropped positions
+    * hold no data), CRC + content-digest verified, handed to `rows` — the
+    * operation's row loop, which re-encodes into a fresh encoder of
+    * `schema` and returns how many rows it changed. The staged manifest
+    * is unpublished and records the consumed epochs as `ancestors`. Task
+    * memory is bounded by one decoded chunk plus one encoder chunk
+    * buffer.
     */
   private def rewriteBin(conf: org.apache.hadoop.conf.Configuration,
                          path: String, ms: Seq[ParsedManifest],
-                         schema: Seq[ColumnSpec], digestCol: String,
-                         partName: String, bin: Int,
-                         drop: RowDropper = null): (PartManifest, Long) = {
+                         schema: Seq[ColumnSpec], partName: String, bin: Int)(
+      rows: (ColumnarEngine.PartitionEncoder, DecodedChunk) => Long
+  ): (PartManifest, Long) = {
     val enc = new ColumnarEngine.PartitionEncoder(bin, path, conf,
       partName = partName, schema = schema)
     // EPOCH identities folded into this container — with those the
@@ -1213,29 +1088,15 @@ object GraftMaintenance {
     val ancestors = Manifests.capAncestors(
       ms.map(m => Manifests.epochKey(Manifests.logicalName(m.name))) ++
         ms.flatMap(_.ancestors))
-    // dropped positions (round 9) hold no data: request no block, read
-    // no lane (the encoder's own lanes are live-filtered the same way)
-    val needed = Lane.ofSpecs(schema)
-    var dropped = 0L
+    var changed = 0L
     ms.foreach { m =>
       val file = m.blockFile(path)
+      val needed = Lane.ofSpecs(GraftDataSource.specsOfManifest(m))
       val (in, fileLen) = ContainerFormat.open(file, conf)
       try {
         ContainerFormat.chunks(in, fileLen, file, m.chunkIndex, needed).foreach { chunk =>
-          if (digestCol.nonEmpty) ContainerFormat.verifyContentDigest(chunk, digestCol)
-          // the encoder's live column c, decoded; NULLs must propagate or
-          // compaction would turn them into their stored placeholders
-          val cols = enc.columns.map(s => chunk.col(s.name)).toArray
-          var j = 0
-          while (j < chunk.rows) {
-            if (drop != null && drop.matches(chunk, j)) dropped += 1
-            else {
-              var c = 0
-              while (c < cols.length) { enc.putDecoded(c, cols(c), j); c += 1 }
-              enc.endRow()
-            }
-            j += 1
-          }
+          if (m.digestCol.nonEmpty) ContainerFormat.verifyContentDigest(chunk, m.digestCol)
+          changed += rows(enc, chunk)
         }
       } finally in.close()
     }
@@ -1254,13 +1115,68 @@ object GraftMaintenance {
         .map(c => c -> ms.flatMap(_.bucketIds(c)).distinct.sorted)
         .toMap
     (enc.finish(publishManifest = false).copy(ancestors = ancestors,
-      partitioning = partitioning, bucketIds = bucketIds), dropped)
+      partitioning = partitioning, bucketIds = bucketIds), changed)
   }
+
+  /** The row loop of compaction, DELETE and UPSERT: every decoded row
+    * `drop` does not match (every row, when `drop` is null) re-encodes
+    * column by column; returns the rows dropped.
+    */
+  private def copyRows(drop: RowDropper)(enc: ColumnarEngine.PartitionEncoder,
+                                         chunk: DecodedChunk): Long = {
+    // the encoder's live column c, decoded; NULLs must propagate or
+    // compaction would turn them into their stored placeholders
+    val cols = enc.columns.map(s => chunk.col(s.name)).toArray
+    var dropped = 0L
+    var j = 0
+    while (j < chunk.rows) {
+      if (drop != null && drop.matches(chunk, j)) dropped += 1
+      else {
+        var c = 0
+        while (c < cols.length) { enc.putDecoded(c, cols(c), j); c += 1 }
+        enc.endRow()
+      }
+      j += 1
+    }
+    dropped
+  }
+
+  /** UPDATE's row loop: every row round-trips through the visible
+    * internal representation (the same bijective per-kind conversions
+    * the matcher and readers use) — the visible row's field i is the
+    * encoder chain's live column i — and matched rows get the bound
+    * `assigns` (visible ordinal -> expression); returns the rows updated.
+    */
+  private def updateRows(matcher: StoredRowMatcher, assigns: Seq[(Int, Expression)])(
+      enc: ColumnarEngine.PartitionEncoder, chunk: DecodedChunk): Long = {
+    var updated = 0L
+    var j = 0
+    while (j < chunk.rows) {
+      val row = matcher.buildRow(chunk, j)
+      if (matcher.matchesRow(row)) {
+        updated += 1
+        // all assignments see the ORIGINAL row: evaluate first, apply after
+        val vals = assigns.map(_._2.eval(row))
+        assigns.lazyZip(vals).foreach { case ((ord, _), v) => row.update(ord, v) }
+      }
+      enc.putRow(row)
+      j += 1
+    }
+    updated
+  }
+
+  /** A predicate matcher over one container of `schema`: the bound
+    * predicate's ordinals are VISIBLE positions, and the ones the
+    * container covers form a prefix (full positions are ascending).
+    */
+  private def rowMatcher(cond: Expression, visPositions: Seq[Int],
+                         schema: Seq[ColumnSpec]): StoredRowMatcher =
+    new StoredRowMatcher(cond, visPositions.takeWhile(_ < schema.size).map(schema),
+      visPositions.size)
 }
 
-/** A row-removal decision over decoded stored rows — the hook
-  * [[GraftMaintenance]]'s rewrite streams matched rows through
-  * (predicate DELETE, key-set upsert).
+/** A row decision over decoded stored rows: the rows the copy-on-write
+  * row loop drops (a predicate for DELETE, a key set for UPSERT).
   */
 private[sources] trait RowDropper extends Serializable {
   def matches(chunk: graft.engine.DecodedChunk, j: Int): Boolean
@@ -1306,7 +1222,7 @@ private[sources] final class StoredKeyMatcher(
 
 /** Evaluates a Catalyst predicate — resolved against the table's CURRENT
   * schema and bound to positional ordinals — on decoded STORED rows of
-  * one container (the copy-on-write DELETE row filter). Positions the
+  * one container (the DELETE and UPDATE row matcher). Positions the
   * container covers are surfaced in Spark's internal representation
   * ([[graft.engine.Kind.internalValue]]: UTF8String views over the
   * decoded pool, no String materialization); positions

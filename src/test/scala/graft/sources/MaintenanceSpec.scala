@@ -789,4 +789,40 @@ class MaintenanceSpec extends AnyFunSuite {
     Manifests.consolidate(conf, d)
     assert(count() === 60)
   }
+
+  test("a source container that vanishes mid-rewrite aborts compact, " +
+    "delete, update and upsert with CompactionConflict") {
+    import spark.implicits._
+    val conf = ContainerIO.localConf()
+    val ops: Seq[(String, String => Any)] = Seq(
+      "compact" -> (d => GraftMaintenance.compact(spark, d)),
+      "delete" -> (d => GraftMaintenance.delete(spark, d, "id >= 0")),
+      "update" -> (d => GraftMaintenance.update(spark, d, "id >= 0",
+        Map("tag" -> "'u'"))),
+      "upsert" -> (d => GraftMaintenance.upsert(spark, d,
+        Seq((10L, "u"), (60L, "u"), (500L, "n")).toDF("id", "tag"), Seq("id"))))
+    ops.foreach { case (op, run) =>
+      val d = tempDir(s"vanish-$op")
+      Seq(0 until 50, 50 until 100).foreach { ids =>
+        ids.map(i => (i.toLong, s"t$i")).toDF("id", "tag").coalesce(1)
+          .write.format("graft").mode("append").save(d)
+      }
+      val before = Manifests.readCommitted(conf, d)
+      // the container of ids 0..49 (the first commit) loses its block —
+      // and its Hadoop .crc sidecar, so the file is simply absent
+      val gone = before.minBy(_.commitId).name
+      val f = ContainerIO.fs(d, conf)
+      f.delete(new org.apache.hadoop.fs.Path(s"$d/blocks/part-$gone.gblk"), false)
+      f.delete(new org.apache.hadoop.fs.Path(s"$d/blocks/.part-$gone.gblk.crc"), false)
+      intercept[GraftMaintenance.CompactionConflict](run(d))
+      val after = Manifests.readCommitted(conf, d)
+      assert(after.map(_.name).toSet === before.map(_.name).toSet,
+        s"no manifest of the aborted $op may commit")
+      assert(!after.exists(m => Seq("compact-", "delete-", "update-", "merge-",
+        "upsert-").exists(m.name.startsWith)), op)
+      // the surviving container is intact (its zone map skips the other)
+      assert(spark.read.format("graft").load(d).filter(col("id") >= 50)
+        .count() === 50, op)
+    }
+  }
 }

@@ -162,6 +162,37 @@ class UpsertSpec extends AnyFunSuite {
       .collect().head.getLong(0) === 10L)
   }
 
+  test("upsert racing a rename or drop aborts instead of reverting it") {
+    import spark.implicits._
+    // the appended source containers carry the labels the upsert planned
+    // against: landing them over a concurrent rename/drop must conflict,
+    // never silently restore the old column
+    Seq[(String, String => Unit, Seq[String])](
+      ("rename", d => GraftMaintenance.renameColumn(spark, d, "tag", "label"),
+        Seq("id", "label", "score")),
+      ("drop", d => GraftMaintenance.dropColumn(spark, d, "tag"),
+        Seq("id", "score"))
+    ).foreach { case (what, race, cols) =>
+      val d = tmp(s"race-$what")
+      append(d, 0, 50, "a")
+      // one matched key, one new key
+      val src = Seq((1L, "u", -1L), (999L, "n", 0L)).toDF("id", "tag", "score")
+      intercept[SchemaEvolutionConflict] {
+        GraftMaintenance.upsertWithHook(spark, d, src, Seq("id"),
+          beforeCommit = () => race(d))
+      }
+      val r = spark.read.format("graft").load(d)
+      assert(r.columns.toSeq === cols, s"the $what must survive")
+      assert(r.count() === 50, what)
+      assert(r.filter(col("id") === 1L).select("score")
+        .collect().head.getLong(0) === 10L, what)
+      def staged(n: String) = n.startsWith("part-upsert-") || n.startsWith("part-merge-")
+      assert(ContainerIO.listNames(conf, s"$d/blocks").count(staged) === 0 &&
+        ContainerIO.listNames(conf, s"$d/manifests").count(staged) === 0,
+        s"the aborted upsert must sweep its staged output ($what)")
+    }
+  }
+
   test("a source past the IN cap still prunes via key-range admission") {
     import spark.implicits._
     val d = tmp("range")
