@@ -136,7 +136,7 @@ object Bench {
       // best of `reps` (plus up to 2 noise-guard extras when the reps
       // disagree >3x) so throughput reflects the engine, not the noise
       val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-      var manifests: Array[graft.engine.PartManifest] = null
+      var manifests: Array[graft.engine.TableManifest] = null
       val encDirs = scala.collection.mutable.ArrayBuffer.empty[String]
       // between reps (untimed): keep only the newest output dir, so N
       // reps never hold N encoded copies of the table on disk at once

@@ -20,10 +20,6 @@ final case class DerivedRow(
     len_content: Long, hash64: Long, commit_ord: Long,
     repo_code: Long, lang_code: Long, path_code: Long)
 
-final case class ColumnMetric(column: String, codec: String,
-    rawBytes: Long, encodedBytes: Long,
-    minVal: Long = 0L, maxVal: Long = 0L, hasRange: Boolean = false)
-
 /** One column of a graft table: its name, its kind (Spark type, stored
   * form and value conversions are the [[Kinds]] entry), nullability and,
   * for DECIMAL, precision and scale. The container format stores (name,
@@ -66,25 +62,6 @@ object ColumnSpec {
       (packed >> 8) & 0xff, (packed >> 16) & 0xff,
       (packed & DroppedFlag) != 0)
 }
-
-/** Per-partition manifest: lineage + metrics + integrity digest + the
-  * per-chunk index ([[ChunkStats]]: byte ranges, zone maps, block CRCs).
-  * Presence of the manifest file is the partition's commit marker for
-  * checkpoint-resume AND for every read path (orphan containers from
-  * failed attempts are invisible). `name` is the block-file suffix
-  * (`blocks/part-<name>.gblk`): the numeric part id for the engine encode
-  * job, `<epoch>-<part>` for DataSource V2 writes so appends never
-  * collide.
-  */
-final case class PartManifest(part: Int, rows: Long, chunks: Int,
-    rawBytes: Long, encodedBytes: Long, skipped: Boolean,
-    digest: String, columns: Seq[ColumnMetric],
-    name: String = "", chunkIndex: Seq[ChunkStats] = Nil,
-    schemaCols: Seq[(String, Int)] = Nil, digestCol: String = "content",
-    ancestors: Seq[String] = Nil, commitId: String = "",
-    partitioning: Seq[String] = Nil,
-    bucketIds: Map[String, Seq[Int]] = Map.empty,
-    schemaMarker: Boolean = false)
 
 /** The per-column lightweight-compression engine (SURVEY.md §3.4).
   *
@@ -220,12 +197,12 @@ object ColumnarEngine {
   /** Resumable encode: partitions whose manifest already exists are
     * skipped (checkpoint-resume at partition granularity; container files
     * are written tmp-then-atomic-rename, manifest last, so a killed run
-    * leaves either nothing or a fully committed partition).
+    * leaves either nothing or a fully committed partition). Returns the
+    * manifests this run wrote, by part.
     */
   def encode(ds: Dataset[DerivedRow], outDir: String, numParts: Int,
-             saltBuckets: Int = 16): Array[PartManifest] = {
+             saltBuckets: Int = 16): Array[TableManifest] = {
     val spark = ds.sparkSession
-    import spark.implicits._
     // all container/manifest IO goes through the Hadoop FileSystem API so
     // outDir may be file://, hdfs://, s3a://… on a real cluster; tasks
     // rebuild the driver's Hadoop conf from this broadcast snapshot
@@ -251,11 +228,10 @@ object ColumnarEngine {
     val manifests = partitionForEncoding(ds, numParts, saltBuckets)
       .mapPartitions { it =>
         val part = TaskContext.getPartitionId()
-        if (doneB.value.contains(part)) Iterator.single(
-          PartManifest(part, 0L, 0, 0L, 0L, skipped = true, "", Nil))
+        if (doneB.value.contains(part)) Iterator.empty
         else Iterator.single(
           encodePartition(part, it, out, ContainerIO.confFrom(confB.value)))
-      }
+      }(org.apache.spark.sql.Encoders.javaSerialization(classOf[TableManifest]))
       .collect()
     // consolidated manifest index: query planning over this table becomes
     // ONE driver read instead of O(partitions); rewritten on every encode
@@ -280,7 +256,7 @@ object ColumnarEngine {
 
   private def encodePartition(part: Int, it: Iterator[DerivedRow],
                               outDir: String,
-                              conf: org.apache.hadoop.conf.Configuration): PartManifest = {
+                              conf: org.apache.hadoop.conf.Configuration): TableManifest = {
     val e = new PartitionEncoder(part, outDir, conf)
     while (it.hasNext) e.add(it.next())
     e.finish()
@@ -682,7 +658,7 @@ object ColumnarEngine {
       endRow()
     }
 
-    def finish(): PartManifest = finish(publishManifest = true)
+    def finish(): TableManifest = finish(publishManifest = true)
 
     /** Flush, write the container, and build the manifest. The engine
       * encode job publishes the manifest here (partition-granular commit);
@@ -690,7 +666,7 @@ object ColumnarEngine {
       * publication to JOB commit ([[graft.sources.GraftBatchWrite]]) so a
       * failed/killed write job never exposes a partial table.
       */
-    def finish(publishManifest: Boolean): PartManifest = {
+    def finish(publishManifest: Boolean): TableManifest = {
       flushChunk()
 
       val digestHex = partDigest.digest().map(b => f"$b%02x").mkString
@@ -713,9 +689,9 @@ object ColumnarEngine {
         b.result()
       }
       val encTotal = cols.map(_.encodedBytes).sum
-      val manifest = PartManifest(part, rows, chunks, rawTotal, encTotal,
-        skipped = false, digestHex, cols, name, chunkIndex.result(),
-        schemaCols = schema.map(s => (s.name, s.packed)), digestCol = digestCol)
+      val manifest = TableManifest(name, part, rows, chunks, rawTotal, encTotal,
+        digestHex, schema.map(s => (s.name, s.packed)), digestCol, cols,
+        chunkIndex.result())
       if (publishManifest) Manifests.writeManifest(conf, outDir, manifest, attemptId)
       manifest
     }

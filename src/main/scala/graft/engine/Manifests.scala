@@ -2,6 +2,7 @@ package graft.engine
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonGenerator
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 
@@ -93,38 +94,74 @@ object ManifestEnvelope {
   }
 }
 
-/** Driver-side view of one committed partition manifest. `schemaCols`
-  * is the container's own schema, (name, [[ColumnSpec.packed]] kind) in
-  * table order; `digestCol` names the string column whose per-row
-  * sha256 feeds the chunk digests ("" = none). [[Manifests.parse]]
-  * guarantees both, and a chunk index (inline or elided) whenever
-  * `rows > 0`.
-  *
-  * Two-level metadata (round 8): entries read from the consolidated
-  * index carry `chunksElided = true` — their per-chunk stats were
-  * stripped at index commit (the index stays O(containers), not
-  * O(chunks)) and replaced by the container-level [[ManifestEnvelope]].
-  * Planning prunes whole containers against the envelope first and
-  * hydrates per-chunk detail ([[Manifests.loadChunkIndex]], one read of
-  * the container's own `manifests/part-<name>.json`) only for
-  * containers the summary admits.
+/** One column's encode metrics: the codec the selector chose, raw and
+  * encoded bytes, and — for integer columns (`hasRange`) — the
+  * container-wide (min, max) zone map.
   */
-final case class ParsedManifest(
+final case class ColumnMetric(column: String, codec: String,
+    rawBytes: Long, encodedBytes: Long,
+    minVal: Long = 0L, maxVal: Long = 0L, hasRange: Boolean = false)
+
+/** One partition manifest — the one in-memory form of a container's
+  * commit marker (`manifests/part-<name>.json`) and of its entry in the
+  * manifest index. Writers build it ([[ColumnarEngine.PartitionEncoder]]
+  * `finish`), commits stamp it (`copy(commitId = ..)`), and every read
+  * path gets it from [[Manifests.parse]]; [[Manifests.toJson]] is its
+  * one serialization.
+  *
+  *  - `name`: the block-file suffix (`blocks/part-<name>.gblk`): the
+  *    numeric part id for the engine encode job, `<epoch>-<part>` (plus
+  *    the attempt suffix) for DataSource V2 writes so appends never
+  *    collide.
+  *  - `schemaCols`: the container's own schema, (name,
+  *    [[ColumnSpec.packed]] kind) in table order; `digestCol` names the
+  *    string column whose per-row sha256 feeds the chunk digests
+  *    ("" = none). [[Manifests.parse]] guarantees both, and a chunk index
+  *    (inline or elided) whenever `rows > 0`.
+  *  - `ancestors`: the EPOCH keys this container compacted away (exactly
+  *    the epochs whose rows it holds): publish drops a replayed epoch
+  *    whole by them, and the listing-fallback normalizer uses them as
+  *    the coverage set.
+  *  - `partitioning`, `bucketIds`: the write's declared partition
+  *    transforms and, for `bucket(n, col)`, the container's OBSERVED
+  *    bucket ids (container elimination for point filters on the bucket
+  *    column, where zone maps can't help).
+  *  - `schemaMarker`: a zero-row manifest whose only payload is its
+  *    schema (a RENAME or DROP commits one through the ordinary OCC
+  *    path; current names resolve by the highest commit id per
+  *    position).
+  *  - `commitId`, `commitParts`: the commit generation stamp and, for a
+  *    publish, how many containers the epoch's generation holds (the
+  *    listing fallback's completeness check); "" / 0 = unstamped.
+  *
+  * Two-level metadata (round 8): index entries carry
+  * `chunksElided = true` — their per-chunk stats are stripped at index
+  * commit (the index stays O(containers), not O(chunks)) and replaced by
+  * the container-level [[ManifestEnvelope]]. Planning prunes whole
+  * containers against the envelope first and hydrates per-chunk detail
+  * ([[Manifests.loadChunkIndex]], one read of the container's own
+  * commit marker) only for containers the summary admits.
+  */
+final case class TableManifest(
     name: String, part: Int, rows: Long, chunks: Int,
     rawBytes: Long, encodedBytes: Long, digest: String,
-    longRanges: Map[String, (Long, Long)],
-    chunkIndex: Seq[ChunkStats],
     schemaCols: Seq[(String, Int)],
     digestCol: String,
+    columns: Seq[ColumnMetric] = Nil,
+    chunkIndex: Seq[ChunkStats] = Nil,
     ancestors: Seq[String] = Nil,
+    partitioning: Seq[String] = Nil,
+    bucketIds: Map[String, Set[Int]] = Map.empty,
+    schemaMarker: Boolean = false,
     commitId: String = "",
     commitParts: Int = 0,
     chunksElided: Boolean = false,
-    storedEnvelope: Option[ManifestEnvelope] = None,
-    partitioning: Seq[String] = Nil,
-    bucketIds: Map[String, Set[Int]] = Map.empty,
-    schemaMarker: Boolean = false) {
+    storedEnvelope: Option[ManifestEnvelope] = None) {
   def blockFile(tableDir: String): String = s"$tableDir/blocks/part-$name.gblk"
+
+  /** Container-wide integer zone maps: the ranged columns' (min, max). */
+  lazy val longRanges: Map[String, (Long, Long)] =
+    columns.collect { case c if c.hasRange => c.column -> (c.minVal, c.maxVal) }.toMap
 
   /** Container-level stats fold: the stored summary when elided, else
     * computed from the inline chunk index (identical by construction).
@@ -155,6 +192,12 @@ final case class ParsedManifest(
   * recovery). At true 10^12-file scale the snapshot itself would be
   * sharded/partitioned Iceberg-style; one file per snapshot is right up
   * to ~10^5 partitions.
+  *
+  * One codec: [[toJson]] writes a [[TableManifest]] and [[parse]] reads
+  * one, both through the one shared [[Json]] mapper. An index snapshot
+  * body is the same writer applied to each manifest's [[elided]] form,
+  * and is parsed once, straight into manifests. Commits
+  * ([[commitIndex]]) transform typed manifests, never JSON strings.
   */
 object Manifests {
 
@@ -237,44 +280,22 @@ object Manifests {
     * cleanup would then permanently delete the newer generation in the
     * crash-window case.
     */
-  def newCommitId(conf: Configuration, tableDir: String): String = {
-    // only the commitId field matters here, and stampCommit always
-    // serializes it FIRST — extract by prefix instead of building a
-    // full JSON tree per manifest on the commit hot path (the index
-    // snapshot is parsed again by commitIndex moments later anyway)
-    def idOf(j: String): String =
-      if (j.startsWith("{\"commitId\":\"")) {
-        val s = 13
-        val e = j.indexOf('"', s)
-        if (e > s) j.substring(s, e) else ""
-      } else if (!j.contains("\"commitId\"")) "" // unstamped (engine encode)
-      else parse(j).commitId // non-canonical order: full parse
-    val prev = readCommittedJsons(conf, tableDir).iterator
-      .map(j => idOf(j).takeWhile(_.isDigit))
-      .filter(f => f.nonEmpty && f.length <= 17)
-      .map(_.toLong).maxOption.getOrElse(0L)
+  def newCommitId(conf: Configuration, tableDir: String): String =
+    commitIdAbove(readCommitted(conf, tableDir))
+
+  /** A fresh commit id whose generation field orders above every
+    * manifest of `ms` (see [[newCommitId]]).
+    */
+  def commitIdAbove(ms: Seq[TableManifest]): String = {
+    val prev = ms.iterator.map(m => generation(m.commitId)).maxOption.getOrElse(0L)
     f"${math.max(prev + 1, System.currentTimeMillis())}%013d-" +
       java.util.UUID.randomUUID().toString.take(8)
   }
 
-  /** Inject a commitId into a writer-produced manifest JSON (publish
-    * stamps at commit time; the writers that serialize the manifest
-    * can't know it).
-    */
-  def stampCommitId(json: String, id: String): String = {
-    require(json.startsWith("{"), "manifest JSON must be an object")
-    s"""{"commitId":${q(id)},""" + json.substring(1)
-  }
-
-  /** As [[stampCommitId]], also recording how many containers this
-    * epoch's generation consists of — the fallback normalizer's
-    * COMPLETENESS check (a publish that crashed mid-way through its
-    * manifest-file writes leaves a partial newer generation, which must
-    * never beat the complete committed one).
-    */
-  def stampCommit(json: String, id: String, epochParts: Int): String = {
-    require(json.startsWith("{"), "manifest JSON must be an object")
-    s"""{"commitId":${q(id)},"commitParts":$epochParts,""" + json.substring(1)
+  /** The leading numeric field of a commit id; 0 when unstamped. */
+  def generation(commitId: String): Long = {
+    val f = commitId.takeWhile(_.isDigit)
+    if (f.nonEmpty && f.length <= 17) f.toLong else 0L
   }
 
   /** Normalize a `manifests/` LISTING into a consistent snapshot. The
@@ -295,48 +316,44 @@ object Manifests {
     *  3. plain manifests whose epoch is covered by a kept compacted
     *     generation are dropped (their rows live in it).
     */
-  private[engine] def normalizeFallback(jsons: Seq[String]): Seq[String] = {
-    val parsed = jsons.map(parse)
-    if (parsed.forall(_.ancestors.isEmpty) &&
-        parsed.map(m => epochKey(logicalName(m.name))).distinct.size ==
-          parsed.size) return jsons // common shape: nothing to normalize
-    val pairs = jsons.lazyZip(parsed).toSeq
-    val (compacts, plain) = pairs.partition(_._2.ancestors.nonEmpty)
+  private[engine] def normalizeFallback(ms: Seq[TableManifest]): Seq[TableManifest] = {
+    def epoch(m: TableManifest) = epochKey(logicalName(m.name))
+    if (ms.forall(_.ancestors.isEmpty) && ms.map(epoch).distinct.size == ms.size)
+      return ms // common shape: nothing to normalize
+    val (compacts, plain) = ms.partition(_.ancestors.nonEmpty)
     // newest COMPLETE generation per plain epoch: a generation whose
     // recorded commitParts exceeds the manifests present is a publish
     // that crashed mid-stage — it must never beat the complete
     // committed generation below it (commitParts 0 = an unstamped
     // engine-encode manifest, treated as complete)
-    val keptPlain = plain.groupBy(p => epochKey(logicalName(p._2.name)))
-      .values.flatMap { group =>
-        val gens = group.groupBy(_._2.commitId).toSeq
-          .sortBy(_._1)(Ordering.String.reverse)
-        def complete(g: Seq[(String, ParsedManifest)]): Boolean = {
-          val want = g.map(_._2.commitParts).max
-          want == 0 || g.size >= want
-        }
-        // NO complete generation at all = every generation of this epoch
-        // is a publish that crashed mid-manifest-writes: surface NOTHING
-        // rather than promote a partial epoch into the authoritative
-        // index (a crashed publish is retried by its job/stream anyway)
-        gens.find(g => complete(g._2)).map(_._2).getOrElse(Nil)
-      }.toSeq
+    val keptPlain = plain.groupBy(epoch).values.flatMap { group =>
+      val gens = group.groupBy(_.commitId).toSeq
+        .sortBy(_._1)(Ordering.String.reverse)
+      def complete(g: Seq[TableManifest]): Boolean = {
+        val want = g.map(_.commitParts).max
+        want == 0 || g.size >= want
+      }
+      // NO complete generation at all = every generation of this epoch
+      // is a publish that crashed mid-manifest-writes: surface NOTHING
+      // rather than promote a partial epoch into the authoritative
+      // index (a crashed publish is retried by its job/stream anyway)
+      gens.find(g => complete(g._2)).map(_._2).getOrElse(Nil)
+    }.toSeq
     // compacted generations, newest first, no overlapping coverage
     // (stored ancestors are epoch keys, so coverage is exact key match)
     var covered = Set.empty[String]
     val keptCompacts = compacts
-      .sortBy(p => (p._2.commitId, p._2.name))(Ordering.Tuple2(
+      .sortBy(m => (m.commitId, m.name))(Ordering.Tuple2(
         Ordering.String.reverse, Ordering.String.reverse))
-      .filter { p =>
-        val anc = p._2.ancestors.toSet
+      .filter { m =>
+        val anc = m.ancestors.toSet
         if ((anc & covered).nonEmpty) false
         else { covered ++= anc; true }
       }
-    val out = keptCompacts ++
-      keptPlain.filterNot(p => covered.contains(epochKey(logicalName(p._2.name))))
+    val keep = (keptCompacts ++ keptPlain.filterNot(m => covered(epoch(m))))
+      .map(_.name).toSet
     // preserve listing order for deterministic index bodies
-    val keep = out.map(_._2.name).toSet
-    pairs.collect { case (j, pm) if keep(pm.name) => j }
+    ms.filter(m => keep(m.name))
   }
 
   def manifestPath(tableDir: String, name: String): String =
@@ -352,91 +369,246 @@ object Manifests {
     fs.delete(new org.apache.hadoop.fs.Path(s"$tableDir/blocks/part-$name.gblk"), false)
   }
 
+  // --------------------------------------------------------------- codec
+
+  /** The one JSON mapper of graft's metadata: manifests, index
+    * snapshots and the stream seen-log. Thread-safe once configured.
+    */
+  private[graft] val Json = new ObjectMapper()
+
+  /** A manifest's JSON: the commit-marker bytes, and (of its [[elided]]
+    * form) an index entry. Keys keep one fixed order — optional fields
+    * only when set, map-valued stats sorted by column — and `commitId`
+    * first, so every writer of a manifest produces identical bytes.
+    */
+  def toJson(m: TableManifest): String = render(write(_, m))
+
+  private def render(body: JsonGenerator => Unit): String = {
+    val out = new java.io.StringWriter()
+    val g = Json.getFactory.createGenerator(out)
+    body(g)
+    g.close()
+    out.toString
+  }
+
+  private def write(g: JsonGenerator, m: TableManifest): Unit = {
+    def strings(xs: Iterable[String]): Unit = {
+      g.writeStartArray(); xs.foreach(g.writeString); g.writeEndArray()
+    }
+    def pair(r: (String, String)): Unit = strings(Seq(r._1, r._2))
+    def sorted[T](field: String, kv: Map[String, T])(v: T => Unit): Unit = {
+      g.writeObjectFieldStart(field)
+      kv.toSeq.sortBy(_._1).foreach { case (k, x) => g.writeFieldName(k); v(x) }
+      g.writeEndObject()
+    }
+    g.writeStartObject()
+    if (m.commitId.nonEmpty) g.writeStringField("commitId", m.commitId)
+    if (m.commitParts > 0) g.writeNumberField("commitParts", m.commitParts)
+    g.writeNumberField("part", m.part)
+    g.writeStringField("name", m.name)
+    g.writeNumberField("rows", m.rows)
+    g.writeNumberField("chunks", m.chunks)
+    g.writeNumberField("rawBytes", m.rawBytes)
+    g.writeNumberField("encodedBytes", m.encodedBytes)
+    g.writeStringField("digest", m.digest)
+    g.writeArrayFieldStart("schema")
+    m.schemaCols.foreach { case (n, k) =>
+      g.writeStartObject()
+      g.writeStringField("name", n)
+      g.writeNumberField("kind", k)
+      g.writeEndObject()
+    }
+    g.writeEndArray()
+    g.writeStringField("digestCol", m.digestCol)
+    if (m.ancestors.nonEmpty) { g.writeFieldName("ancestors"); strings(m.ancestors) }
+    if (m.partitioning.nonEmpty) { g.writeFieldName("partitioning"); strings(m.partitioning) }
+    if (m.bucketIds.nonEmpty) sorted("bucketIds", m.bucketIds) { ids =>
+      g.writeStartArray(); ids.toSeq.sorted.foreach(g.writeNumber(_)); g.writeEndArray()
+    }
+    if (m.schemaMarker) g.writeBooleanField("schemaMarker", true)
+    g.writeArrayFieldStart("columns")
+    m.columns.foreach { c =>
+      g.writeStartObject()
+      g.writeStringField("column", c.column)
+      g.writeStringField("codec", c.codec)
+      g.writeNumberField("rawBytes", c.rawBytes)
+      g.writeNumberField("encodedBytes", c.encodedBytes)
+      g.writeNumberField("minVal", c.minVal)
+      g.writeNumberField("maxVal", c.maxVal)
+      g.writeBooleanField("hasRange", c.hasRange)
+      g.writeEndObject()
+    }
+    g.writeEndArray()
+    if (m.chunksElided) {
+      g.writeBooleanField("chunksElided", true)
+      g.writeObjectFieldStart("envelope")
+      sorted("strRanges", m.env.strRanges)(pair)
+      sorted("strDicts", m.env.strDicts)(strings)
+      sorted("nullCounts", m.env.nullCounts)(g.writeNumber(_))
+      g.writeEndObject()
+    } else {
+      g.writeArrayFieldStart("chunkIndex")
+      m.chunkIndex.foreach { c =>
+        g.writeStartObject()
+        g.writeNumberField("offset", c.offset)
+        g.writeNumberField("length", c.length)
+        g.writeNumberField("rows", c.rows)
+        sorted("longRanges", c.longRanges) { r =>
+          g.writeStartArray(); g.writeNumber(r._1); g.writeNumber(r._2); g.writeEndArray()
+        }
+        sorted("strDicts", c.strDicts)(strings)
+        sorted("strRanges", c.strRanges)(pair)
+        sorted("blockCrcs", c.blockCrcs)(g.writeNumber(_))
+        // omitted entirely for non-nullable schemas; nullable columns
+        // always carry an entry, explicit zeros included (see ChunkStats)
+        if (c.nullCounts.nonEmpty) sorted("nullCounts", c.nullCounts)(g.writeNumber(_))
+        g.writeEndObject()
+      }
+      g.writeEndArray()
+    }
+    g.writeEndObject()
+  }
+
+  /** A manifest's index-entry form (two-level metadata, round 8): the
+    * per-chunk stats replaced by `chunksElided` plus the container-level
+    * [[ManifestEnvelope]]. The full detail stays in the container's own
+    * commit marker, which planning reads lazily for admitted containers
+    * only. Idempotent; a manifest without chunks (a zero-row container,
+    * a schema marker) has nothing to elide and is returned as it is.
+    */
+  private[engine] def elided(m: TableManifest): TableManifest =
+    if (m.chunkIndex.isEmpty) m
+    else m.copy(chunkIndex = Nil, chunksElided = true,
+      storedEnvelope = Some(ManifestEnvelope.fromChunks(m.chunkIndex)))
+
+  /** Parse one manifest JSON — the one place every read path (index,
+    * listing, hydration) turns manifest bytes into a [[TableManifest]].
+    * A manifest must carry what every current writer records: a
+    * non-empty `name`, a non-empty `schema`, a `digestCol`, and, when
+    * `rows > 0`, a chunk index (inline `chunkIndex`, or `chunksElided`
+    * in an index entry); the error names the manifest and the missing
+    * field. Any malformation — parser errors AND structurally-wrong-but-
+    * valid JSON (an NPE from a mutated field) — surfaces as
+    * IllegalArgumentException: this runs inside Spark planning/analysis,
+    * where a raw exception becomes an opaque internal error (fuzz
+    * contract).
+    */
+  def parse(json: String): TableManifest = controlled(manifestOf(Json.readTree(json)))
+
+  private def controlled(read: => TableManifest): TableManifest =
+    try read
+    catch {
+      case e: IllegalArgumentException => throw e
+      case scala.util.control.NonFatal(e) =>
+        throw new IllegalArgumentException(s"corrupt manifest JSON", e)
+    }
+
+  private def jLong(n: JsonNode, f: String): Long = {
+    val v = n.get(f); if (v == null) 0L else v.asLong(0L)
+  }
+  private def jText(n: JsonNode, f: String): String =
+    Option(n.get(f)).map(_.asText()).getOrElse("")
+  private def jBool(n: JsonNode, f: String): Boolean =
+    Option(n.get(f)).exists(_.asBoolean(false))
+  private def elems(n: JsonNode): Seq[JsonNode] =
+    if (n == null || !n.isArray) Nil else n.elements().asScala.toSeq
+  private def texts(n: JsonNode): Seq[String] = elems(n).map(_.asText())
+  private def fields[T](n: JsonNode)(v: JsonNode => T): Map[String, T] =
+    if (n == null || !n.isObject) Map.empty
+    else n.properties().asScala.iterator.map(e => e.getKey -> v(e.getValue)).toMap
+  private def strPair(n: JsonNode): (String, String) = (n.get(0).asText(), n.get(1).asText())
+
+  private def chunkOf(n: JsonNode): ChunkStats =
+    ChunkStats(jLong(n, "offset"), jLong(n, "length"), jLong(n, "rows").toInt,
+      fields(n.get("longRanges"))(r => (r.get(0).asLong(), r.get(1).asLong())),
+      fields(n.get("strDicts"))(texts), fields(n.get("strRanges"))(strPair),
+      fields(n.get("blockCrcs"))(_.asLong()), fields(n.get("nullCounts"))(_.asInt()))
+
+  private def manifestOf(root: JsonNode): TableManifest = {
+    val name = jText(root, "name")
+    def need(ok: Boolean, field: String): Unit = require(ok,
+      s"manifest ${if (name.nonEmpty) name else s"part ${jLong(root, "part")}"} " +
+        s"lacks required field \"$field\"")
+    need(name.nonEmpty, "name")
+    val schema = root.get("schema")
+    need(schema != null && schema.isArray && !schema.isEmpty, "schema")
+    val schemaCols = elems(schema).map { c =>
+      val n = c.get("name")
+      val k = c.get("kind")
+      require(n != null && k != null && k.canConvertToInt,
+        s"corrupt manifest schema entry: $c")
+      (n.asText(), k.asInt())
+    }
+    val digestCol = root.get("digestCol")
+    need(digestCol != null, "digestCol")
+    val chunkIndex = elems(root.get("chunkIndex")).map(chunkOf)
+    val elided = jBool(root, "chunksElided")
+    val rows = jLong(root, "rows")
+    need(rows <= 0 || chunkIndex.nonEmpty || elided, "chunkIndex")
+    TableManifest(name, jLong(root, "part").toInt, rows,
+      jLong(root, "chunks").toInt, jLong(root, "rawBytes"),
+      jLong(root, "encodedBytes"), jText(root, "digest"),
+      schemaCols, digestCol.asText(),
+      columns = elems(root.get("columns")).map(c => ColumnMetric(
+        c.get("column").asText(), jText(c, "codec"), jLong(c, "rawBytes"),
+        jLong(c, "encodedBytes"), jLong(c, "minVal"), jLong(c, "maxVal"),
+        jBool(c, "hasRange"))),
+      chunkIndex = chunkIndex,
+      ancestors = texts(root.get("ancestors")),
+      partitioning = texts(root.get("partitioning")),
+      bucketIds = fields(root.get("bucketIds"))(elems(_).map(_.asInt()).toSet),
+      schemaMarker = jBool(root, "schemaMarker"),
+      commitId = jText(root, "commitId"),
+      commitParts = jLong(root, "commitParts").toInt,
+      chunksElided = elided,
+      storedEnvelope = Option(root.get("envelope")).filter(_.isObject).map(e =>
+        ManifestEnvelope(fields(e.get("strRanges"))(strPair),
+          fields(e.get("strDicts"))(texts), fields(e.get("nullCounts"))(_.asLong()))))
+  }
+
+  /** An index snapshot body: `{"version":1,"manifests":[...]}` over the
+    * [[elided]] form of each manifest.
+    */
+  private def indexBody(ms: Seq[TableManifest]): Array[Byte] =
+    render { g =>
+      g.writeStartObject()
+      g.writeNumberField("version", 1)
+      g.writeArrayFieldStart("manifests")
+      ms.foreach(m => write(g, elided(m)))
+      g.writeEndArray()
+      g.writeEndObject()
+    }.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** The manifests of one index snapshot body, parsed once. Anything but
+    * the shape [[indexBody]] writes — an object with `"version":1` and a
+    * `manifests` array — is corrupt, and so is unparseable JSON: both
+    * fail CONTROLLED (the fuzz contract). Reading such an index as empty
+    * would let the next commit publish that emptiness over the table.
+    */
+  private def parseIndex(bytes: Array[Byte], where: String): Seq[TableManifest] = {
+    val root =
+      try Json.readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
+      catch {
+        case e: com.fasterxml.jackson.core.JacksonException =>
+          throw new IllegalArgumentException(s"corrupt manifest index $where", e)
+      }
+    val version = root.get("version")
+    val arr = root.get("manifests")
+    require(root.isObject && version != null && version.isInt &&
+        version.asInt() == 1 && arr != null && arr.isArray,
+      s"corrupt manifest index $where: expected {\"version\":1,\"manifests\":[...]}")
+    elems(arr).map(e => controlled(manifestOf(e)))
+  }
+
   // --------------------------------------------------------------- write
 
-  private def q(s: String) =
-    "\"" + s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case c if c < 0x20 => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  def chunkJson(c: ChunkStats): String = {
-    def longPairs(m: Map[String, (Long, Long)]) =
-      m.toSeq.sortBy(_._1).map { case (k, (lo, hi)) => s"${q(k)}:[$lo,$hi]" }
-        .mkString("{", ",", "}")
-    val dicts = c.strDicts.toSeq.sortBy(_._1).map { case (k, vs) =>
-      s"${q(k)}:${vs.map(q).mkString("[", ",", "]")}"
-    }.mkString("{", ",", "}")
-    val sranges = c.strRanges.toSeq.sortBy(_._1).map { case (k, (lo, hi)) =>
-      s"${q(k)}:[${q(lo)},${q(hi)}]"
-    }.mkString("{", ",", "}")
-    val crcs = c.blockCrcs.toSeq.sortBy(_._1).map { case (k, v) => s"${q(k)}:$v" }
-      .mkString("{", ",", "}")
-    // omitted entirely for non-nullable schemas (no bytes spent); nullable
-    // columns always carry an entry, including explicit zeros (see class doc)
-    val nulls =
-      if (c.nullCounts.isEmpty) ""
-      else c.nullCounts.toSeq.sortBy(_._1).map { case (k, v) => s"${q(k)}:$v" }
-        .mkString(""","nullCounts":{""", ",", "}")
-    s"""{"offset":${c.offset},"length":${c.length},"rows":${c.rows},""" +
-      s""""longRanges":${longPairs(c.longRanges)},"strDicts":$dicts,""" +
-      s""""strRanges":$sranges,"blockCrcs":$crcs$nulls}"""
-  }
-
-  def manifestJson(m: PartManifest): String = {
-    val cols = m.columns.map(c =>
-      s"""{"column":${q(c.column)},"codec":${q(c.codec)},"rawBytes":${c.rawBytes},""" +
-      s""""encodedBytes":${c.encodedBytes},"minVal":${c.minVal},"maxVal":${c.maxVal},""" +
-      s""""hasRange":${c.hasRange}}"""
-    ).mkString("[", ",", "]")
-    val chunks = m.chunkIndex.map(chunkJson).mkString("[", ",", "]")
-    val schema = m.schemaCols.map { case (n, k) =>
-      s"""{"name":${q(n)},"kind":$k}"""
-    }.mkString("[", ",", "]")
-    // ancestors: EPOCH keys this container compacted away (exactly the
-    // epochs whose rows it holds) — publish() uses them to drop a
-    // replayed epoch whole (exactly-once across compact), and the
-    // listing-fallback normalizer uses them as the coverage set
-    val anc =
-      if (m.ancestors.isEmpty) ""
-      else s""""ancestors":${m.ancestors.map(q).mkString("[", ",", "]")},"""
-    val cid =
-      if (m.commitId.isEmpty) ""
-      else s""""commitId":${q(m.commitId)},"""
-    // partition transforms (round 8): the write's declared transforms
-    // and, for bucket(n, col) transforms, the container's OBSERVED
-    // bucket ids — coarse container elimination for point filters on
-    // the bucket column (zone maps can't help there: hash-colliding
-    // values span the domain)
-    val pt =
-      if (m.partitioning.isEmpty) ""
-      else s""""partitioning":${m.partitioning.map(q).mkString("[", ",", "]")},"""
-    // a SCHEMA MARKER is a zero-row manifest whose only payload is its
-    // schema: a column RENAME commits one through the ordinary OCC path
-    // (real commit marker file, so the listing fallback preserves it),
-    // and current-name resolution takes the highest-commitId schema per
-    // position (round 8, field-identity-by-position under add-only)
-    val sm = if (m.schemaMarker) s""""schemaMarker":true,""" else ""
-    val bids =
-      if (m.bucketIds.isEmpty) ""
-      else m.bucketIds.toSeq.sortBy(_._1).map { case (c, ids) =>
-        s"${q(c)}:${ids.sorted.mkString("[", ",", "]")}"
-      }.mkString(""""bucketIds":{""", ",", "},")
-    s"""{$cid"part":${m.part},"name":${q(m.name)},"rows":${m.rows},"chunks":${m.chunks},""" +
-      s""""rawBytes":${m.rawBytes},"encodedBytes":${m.encodedBytes},""" +
-      s""""digest":${q(m.digest)},"schema":$schema,"digestCol":${q(m.digestCol)},$anc$pt$bids$sm""" +
-      s""""columns":$cols,"chunkIndex":$chunks}"""
-  }
-
   /** Publish one manifest (the partition's commit marker) atomically. */
-  def writeManifest(conf: Configuration, tableDir: String, m: PartManifest,
+  def writeManifest(conf: Configuration, tableDir: String, m: TableManifest,
                     attempt: Long): Unit =
     ContainerIO.writeAtomic(conf,
       s"$tableDir/manifests/.tmp-part-${m.name}-a$attempt",
       manifestPath(tableDir, m.name),
-      manifestJson(m).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      toJson(m).getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Consolidate every committed manifest currently in `manifests/` into
     * the index (end of an engine encode job, including resumed runs).
@@ -448,7 +620,7 @@ object Manifests {
     // out of the loop would re-commit a stale pre-race view and drop
     // the concurrent writer's rows from the index)
     commitIndex(conf, tableDir,
-      _ => normalizeFallback(listedManifestJsons(conf, tableDir)))
+      _ => normalizeFallback(listedManifests(conf, tableDir)))
     // cleanup pass: stale generations the normalizer proves superseded
     // would otherwise leak forever (vacuum spares manifests/ and counts
     // their blocks as referenced). Only generations OLDER than every
@@ -456,13 +628,12 @@ object Manifests {
     // to an in-flight publish whose index commit is imminent (its rows
     // are index-served either way; at worst it leaks until the next
     // consolidate after a genuinely newer commit).
-    val listed = listedManifestJsons(conf, tableDir)
-    val parsed = listed.map(parse)
-    val keptNames = normalizeFallback(listed).map(parse(_).name).toSet
-    val maxKept = parsed.filter(m => keptNames(m.name))
-      .map(_.commitId).maxOption.getOrElse("")
+    val listed = listedManifests(conf, tableDir)
+    val kept = normalizeFallback(listed)
+    val keptNames = kept.map(_.name).toSet
+    val maxKept = kept.map(_.commitId).maxOption.getOrElse("")
     val fs = ContainerIO.fs(tableDir, conf)
-    parsed.filterNot(m => keptNames(m.name))
+    listed.filterNot(m => keptNames(m.name))
       .filter(_.commitId < maxKept)
       .foreach(m => deleteContainer(fs, tableDir, m.name))
   }
@@ -475,41 +646,6 @@ object Manifests {
       case n @ VersionedIndexRe(v) => (v.toLong, n)
     }.sortBy(_._1)
 
-  /** Strip a manifest JSON's per-chunk stats for the consolidated index
-    * (two-level metadata, round 8): `chunkIndex` is replaced by
-    * `"chunksElided":true` plus the container-level [[ManifestEnvelope]].
-    * The full detail stays in the container's own commit marker
-    * (`manifests/part-<name>.json`), which planning reads lazily for
-    * admitted containers only. Idempotent; a manifest without chunks
-    * (a zero-row container, a schema marker) has nothing to elide and
-    * passes through unchanged.
-    */
-  private[engine] def elideChunks(json: String): String = {
-    val om = new ObjectMapper()
-    val root = om.readTree(json)
-    if (!root.isObject) return json
-    val obj = root.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val ci = obj.get("chunkIndex")
-    if (ci == null || !ci.isArray || ci.isEmpty) return json
-    val chunks = ci.elements().asScala.map(parseChunk).toSeq
-    val envl = ManifestEnvelope.fromChunks(chunks)
-    obj.remove("chunkIndex")
-    obj.put("chunksElided", true)
-    val e = om.createObjectNode()
-    val sr = e.putObject("strRanges")
-    envl.strRanges.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
-      val a = sr.putArray(c); a.add(lo); a.add(hi)
-    }
-    val sd = e.putObject("strDicts")
-    envl.strDicts.toSeq.sortBy(_._1).foreach { case (c, vs) =>
-      val a = sd.putArray(c); vs.foreach(a.add)
-    }
-    val nc = e.putObject("nullCounts")
-    envl.nullCounts.toSeq.sortBy(_._1).foreach { case (c, n) => nc.put(c, n) }
-    obj.set("envelope", e)
-    om.writeValueAsString(obj)
-  }
-
   /** Hydrate an index-elided manifest's per-chunk stats from its own
     * commit marker file. A marker that vanished means a concurrent
     * compaction/overwrite superseded the snapshot this plan was built
@@ -519,7 +655,7 @@ object Manifests {
     * and is rejected, so a corrupt marker never plans as zero chunks.
     */
   def loadChunkIndex(conf: Configuration, tableDir: String,
-                     m: ParsedManifest): ParsedManifest =
+                     m: TableManifest): TableManifest =
     if (!m.chunksElided) m
     else {
       chunkLoadCounter.incrementAndGet()
@@ -546,34 +682,7 @@ object Manifests {
     */
   val chunkLoadCounter = new java.util.concurrent.atomic.AtomicLong()
 
-  private def indexBody(manifestJsons: Seq[String]): Array[Byte] =
-    manifestJsons.map(elideChunks)
-      .mkString("""{"version":1,"manifests":[""", ",", "]}")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-  /** The manifest JSONs of one index snapshot body. Anything but the
-    * shape [[indexBody]] writes — an object with `"version":1` and a
-    * `manifests` array — is corrupt, and so is unparseable JSON: both
-    * fail CONTROLLED (the fuzz contract). Reading such an index as empty
-    * would let the next commit publish that emptiness over the table.
-    */
-  private def parseIndexJsons(bytes: Array[Byte], where: String): Seq[String] = {
-    val root =
-      try new ObjectMapper().readTree(new String(bytes,
-        java.nio.charset.StandardCharsets.UTF_8))
-      catch {
-        case e: com.fasterxml.jackson.core.JacksonException =>
-          throw new IllegalArgumentException(s"corrupt manifest index $where", e)
-      }
-    val version = root.get("version")
-    val arr = root.get("manifests")
-    require(root.isObject && version != null && version.isInt &&
-        version.asInt() == 1 && arr != null && arr.isArray,
-      s"corrupt manifest index $where: expected {\"version\":1,\"manifests\":[...]}")
-    arr.elements().asScala.map(_.toString).toSeq
-  }
-
-  /** Highest LIVE committed index snapshot: (version, manifest JSONs).
+  /** Highest LIVE committed index snapshot: (version, manifests).
     * Superseded versions are TOMBSTONED (truncated to zero bytes, see
     * [[commitIndex]]) — a tombstone at the top of a stale listing, a
     * vanished file, or a mid-truncation read all retry against a fresh
@@ -581,7 +690,7 @@ object Manifests {
     * back to listing `manifests/`; a corrupt index fails controlled.
     */
   def readIndexSnapshot(conf: Configuration,
-                        tableDir: String): Option[(Long, Seq[String])] = {
+                        tableDir: String): Option[(Long, Seq[TableManifest])] = {
     // generous retry budget: under heavy commit contention a reader's
     // stale listing can lose the open-vs-GC race several times in a row
     var tries = 0
@@ -593,7 +702,7 @@ object Manifests {
         // empty = we raced a commit that just tombstoned this
         // version (max moved past it between our listing and read)
         if (bytes.nonEmpty)
-          return Some((v, parseIndexJsons(bytes, s"$tableDir/$name")))
+          return Some((v, parseIndex(bytes, s"$tableDir/$name")))
         tries += 1
       } catch {
         case _: java.io.FileNotFoundException => tries += 1
@@ -701,22 +810,16 @@ object Manifests {
     * successful create always extends the true tip. Ancient tombstones
     * (> [[TombstoneRetention]] versions behind) are finally deleted.
     *
-    * Returns the superseded snapshot's manifest JSONs (what the winning
+    * Returns the superseded snapshot's manifests (what the winning
     * `transform` call saw), so callers can delete generations their
     * commit replaced.
     */
-  /** Test seam: runs between the snapshot read and the version claim —
-    * the window the tombstone-retention envelope protects. Production
-    * value is a no-op.
-    */
-  private[engine] var beforeClaimHook: () => Unit = () => ()
-
   def commitIndex(conf: Configuration, tableDir: String,
-                  transform: Seq[String] => Seq[String]): Seq[String] = {
+                  transform: Seq[TableManifest] => Seq[TableManifest]): Seq[TableManifest] = {
     var attempts = 0
     while (attempts < 64) {
       val (ver, cur) = readIndexSnapshot(conf, tableDir).getOrElse(
-        (-1L, normalizeFallback(listedManifestJsons(conf, tableDir))))
+        (-1L, normalizeFallback(listedManifests(conf, tableDir))))
       val next = ver + 1
       beforeClaimHook()
       if (ContainerIO.createExclusive(conf,
@@ -766,6 +869,12 @@ object Manifests {
       s"manifest index commit for $tableDir contended $attempts times")
   }
 
+  /** Test seam: runs between the snapshot read and the version claim —
+    * the window the tombstone-retention envelope protects. Production
+    * value is a no-op.
+    */
+  private[engine] var beforeClaimHook: () => Unit = () => ()
+
   def versionedIndexName(version: Long): String =
     s"_manifest-index.v$version.json"
 
@@ -775,146 +884,25 @@ object Manifests {
     ContainerIO.listNames(conf, s"$tableDir/manifests")
       .filter(n => n.startsWith("part-") && n.endsWith(".json"))
 
-  private def jLong(n: JsonNode, f: String, dflt: Long = 0L): Long = {
-    val v = n.get(f); if (v == null) dflt else v.asLong(dflt)
-  }
-
-  private def parseLongRanges(n: JsonNode): Map[String, (Long, Long)] =
-    if (n == null || !n.isObject) Map.empty
-    else n.properties().asScala.map { e =>
-      e.getKey -> (e.getValue.get(0).asLong(), e.getValue.get(1).asLong())
-    }.toMap
-
-  def parseChunk(n: JsonNode): ChunkStats = {
-    val dicts =
-      Option(n.get("strDicts")).filter(_.isObject).map(_.properties().asScala.map { e =>
-        e.getKey -> e.getValue.elements().asScala.map(_.asText()).toSeq
-      }.toMap).getOrElse(Map.empty[String, Seq[String]])
-    val sranges =
-      Option(n.get("strRanges")).filter(_.isObject).map(_.properties().asScala.map { e =>
-        e.getKey -> (e.getValue.get(0).asText(), e.getValue.get(1).asText())
-      }.toMap).getOrElse(Map.empty[String, (String, String)])
-    val crcs =
-      Option(n.get("blockCrcs")).filter(_.isObject).map(_.properties().asScala.map { e =>
-        e.getKey -> e.getValue.asLong()
-      }.toMap).getOrElse(Map.empty[String, Long])
-    val nulls =
-      Option(n.get("nullCounts")).filter(_.isObject).map(_.properties().asScala.map { e =>
-        e.getKey -> e.getValue.asInt()
-      }.toMap).getOrElse(Map.empty[String, Int])
-    ChunkStats(jLong(n, "offset"), jLong(n, "length"), jLong(n, "rows").toInt,
-      parseLongRanges(n.get("longRanges")), dicts, sranges, crcs, nulls)
-  }
-
-  /** Parse one manifest JSON — the one place every read path (index,
-    * listing, hydration) turns manifest bytes into a [[ParsedManifest]].
-    * A manifest must carry what every current writer records: a
-    * non-empty `name`, a non-empty `schema`, a `digestCol`, and, when
-    * `rows > 0`, a chunk index (inline `chunkIndex`, or `chunksElided`
-    * in an index entry); the error names the manifest and the missing
-    * field. Any malformation — parser errors AND structurally-wrong-but-
-    * valid JSON (an NPE from a mutated field) — surfaces as
-    * IllegalArgumentException: this runs inside Spark planning/analysis,
-    * where a raw exception becomes an opaque internal error (fuzz
-    * contract).
+  /** The manifests of a `manifests/` listing (tables without an index:
+    * mid-encode-resume and disaster-recovery reads), unnormalized.
     */
-  def parse(json: String): ParsedManifest =
-    try parseUnchecked(json)
-    catch {
-      case e: IllegalArgumentException => throw e
-      case scala.util.control.NonFatal(e) =>
-        throw new IllegalArgumentException(s"corrupt manifest JSON", e)
-    }
-
-  private def parseUnchecked(json: String): ParsedManifest = {
-    val om = new ObjectMapper()
-    val root = om.readTree(json)
-    val name = Option(root.get("name")).map(_.asText()).getOrElse("")
-    def need(ok: Boolean, field: String): Unit = require(ok,
-      s"manifest ${if (name.nonEmpty) name else s"part ${jLong(root, "part")}"} " +
-        s"lacks required field \"$field\"")
-    need(name.nonEmpty, "name")
-    val ranges = Option(root.get("columns")).filter(_.isArray).map {
-      _.elements().asScala.flatMap { c =>
-        if (c.get("hasRange") != null && c.get("hasRange").asBoolean(false))
-          Some(c.get("column").asText() ->
-            (c.get("minVal").asLong(), c.get("maxVal").asLong()))
-        else None
-      }.toMap
-    }.getOrElse(Map.empty[String, (Long, Long)])
-    val chunkIndex = Option(root.get("chunkIndex")).filter(_.isArray).map {
-      _.elements().asScala.map(parseChunk).toSeq
-    }.getOrElse(Nil)
-    val schema = root.get("schema")
-    need(schema != null && schema.isArray && !schema.isEmpty, "schema")
-    val schemaCols = schema.elements().asScala.map { c =>
-      val n = c.get("name")
-      val k = c.get("kind")
-      require(n != null && k != null && k.canConvertToInt,
-        s"corrupt manifest schema entry: $c")
-      (n.asText(), k.asInt())
-    }.toSeq
-    val digestCol = root.get("digestCol")
-    need(digestCol != null, "digestCol")
-    val ancestors = Option(root.get("ancestors")).filter(_.isArray).map {
-      _.elements().asScala.map(_.asText()).toSeq
-    }.getOrElse(Nil)
-    val elided = Option(root.get("chunksElided")).exists(_.asBoolean(false))
-    val rows = jLong(root, "rows")
-    need(rows <= 0 || chunkIndex.nonEmpty || elided, "chunkIndex")
-    val envelope = Option(root.get("envelope")).filter(_.isObject).map { e =>
-      val sr = Option(e.get("strRanges")).filter(_.isObject)
-        .map(_.properties().asScala.map { p =>
-          p.getKey -> (p.getValue.get(0).asText(), p.getValue.get(1).asText())
-        }.toMap).getOrElse(Map.empty[String, (String, String)])
-      val sd = Option(e.get("strDicts")).filter(_.isObject)
-        .map(_.properties().asScala.map { p =>
-          p.getKey -> p.getValue.elements().asScala.map(_.asText()).toSeq
-        }.toMap).getOrElse(Map.empty[String, Seq[String]])
-      val nc = Option(e.get("nullCounts")).filter(_.isObject)
-        .map(_.properties().asScala.map { p =>
-          p.getKey -> p.getValue.asLong()
-        }.toMap).getOrElse(Map.empty[String, Long])
-      ManifestEnvelope(sr, sd, nc)
-    }
-    val partitioning = Option(root.get("partitioning")).filter(_.isArray).map {
-      _.elements().asScala.map(_.asText()).toSeq
-    }.getOrElse(Nil)
-    val bucketIds = Option(root.get("bucketIds")).filter(_.isObject)
-      .map(_.properties().asScala.map { p =>
-        p.getKey -> p.getValue.elements().asScala.map(_.asInt()).toSet
-      }.toMap).getOrElse(Map.empty[String, Set[Int]])
-    ParsedManifest(name, jLong(root, "part").toInt, rows,
-      jLong(root, "chunks").toInt, jLong(root, "rawBytes"),
-      jLong(root, "encodedBytes"),
-      Option(root.get("digest")).map(_.asText()).getOrElse(""),
-      ranges, chunkIndex, schemaCols, digestCol.asText(),
-      ancestors,
-      Option(root.get("commitId")).map(_.asText()).getOrElse(""),
-      jLong(root, "commitParts").toInt,
-      chunksElided = elided,
-      storedEnvelope = envelope,
-      partitioning = partitioning,
-      bucketIds = bucketIds,
-      schemaMarker = Option(root.get("schemaMarker")).exists(_.asBoolean(false)))
-  }
-
-  /** Raw manifest JSONs from a `manifests/` listing (tables without an
-    * index: mid-encode-resume and disaster-recovery reads).
-    */
-  private[engine] def listedManifestJsons(conf: Configuration,
-                                          tableDir: String): Seq[String] =
+  private[engine] def listedManifests(conf: Configuration,
+                                      tableDir: String): Seq[TableManifest] =
     listManifestNames(conf, tableDir).sorted.map { n =>
-      new String(ContainerIO.readAll(conf, s"$tableDir/manifests/$n"),
-        java.nio.charset.StandardCharsets.UTF_8)
+      parse(new String(ContainerIO.readAll(conf, s"$tableDir/manifests/$n"),
+        java.nio.charset.StandardCharsets.UTF_8))
     }
 
   /** Every COMMITTED partition of the table: one index read when an
     * index snapshot exists (highest version wins), else a `manifests/`
     * listing + per-file reads (mid-encode resume, disaster recovery).
     */
-  def readCommitted(conf: Configuration, tableDir: String): Seq[ParsedManifest] =
-    readCommittedJsons(conf, tableDir).map(parse)
+  def readCommitted(conf: Configuration, tableDir: String): Seq[TableManifest] =
+    readIndexSnapshot(conf, tableDir) match {
+      case Some((_, ms)) => ms
+      case None => normalizeFallback(listedManifests(conf, tableDir))
+    }
 
   // -------------------------------------------------------- time travel
 
@@ -924,7 +912,7 @@ object Manifests {
     * IllegalArgumentException — this runs inside Spark planning.
     */
   def readCommittedAt(conf: Configuration, tableDir: String,
-                      version: Long): Seq[ParsedManifest] = {
+                      version: Long): Seq[TableManifest] = {
     val name = versionedIndexName(version)
     val available = versionedIndexes(conf, tableDir)
     if (!available.exists(_._1 == version))
@@ -941,7 +929,7 @@ object Manifests {
         s"retained (the table keeps the last ${snapshotRetention(conf)} " +
         "superseded versions; expired earlier if " +
         "graft.system.expire_snapshots ran)")
-    parseIndexJsons(bytes, s"$tableDir/$name").map(parse)
+    parseIndex(bytes, s"$tableDir/$name")
   }
 
   /** Highest snapshot version committed at or before `tsMillis` (the
@@ -970,23 +958,16 @@ object Manifests {
     */
   def retainedSnapshotNames(conf: Configuration, tableDir: String): Set[String] =
     versionedIndexes(conf, tableDir).iterator.flatMap { case (_, n) =>
-      val jsons =
+      val ms =
         try {
           val bytes = ContainerIO.readAll(conf, s"$tableDir/$n")
-          if (bytes.isEmpty) Nil else parseIndexJsons(bytes, s"$tableDir/$n")
+          if (bytes.isEmpty) Nil else parseIndex(bytes, s"$tableDir/$n")
         } catch {
           case _: java.io.FileNotFoundException => Nil
           case _: IllegalArgumentException => Nil
         }
-      jsons.map(parse(_).name)
+      ms.map(_.name)
     }.toSet
-
-  /** Raw committed manifest JSONs (job-commit index merging). */
-  def readCommittedJsons(conf: Configuration, tableDir: String): Seq[String] =
-    readIndexSnapshot(conf, tableDir) match {
-      case Some((_, jsons)) => jsons
-      case None => normalizeFallback(listedManifestJsons(conf, tableDir))
-    }
 
   def crc32c(bytes: Array[Byte], off: Int, len: Int): Long = {
     val c = new java.util.zip.CRC32C

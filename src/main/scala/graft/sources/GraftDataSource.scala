@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.{ChunkStats, ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, DecodedChunk, DecodedColumn, DerivedRow, Kinds, Lane, Manifests, ParsedManifest, Stored}
+import graft.engine.{ChunkStats, ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, DecodedChunk, DecodedColumn, DerivedRow, Kinds, Lane, Manifests, Stored, TableManifest}
 
 /** `spark.read.format("graft")` / `df.write.format("graft")` — the
   * engine's container+manifest layout as a DataSource V2 table.
@@ -129,7 +129,7 @@ object GraftDataSource {
 
   /** Per-manifest column specs: the container's own recorded schema. */
   private[sources] def specsOfManifest(
-      m: ParsedManifest): Seq[graft.engine.ColumnSpec] =
+      m: TableManifest): Seq[graft.engine.ColumnSpec] =
     m.schemaCols.map { case (n, k) => graft.engine.ColumnSpec.fromPacked(n, k) }
 
   /** The table's CURRENT schema from a committed-manifest snapshot
@@ -143,7 +143,7 @@ object GraftDataSource {
     * and readers translate per container).
     */
   private[sources] def currentSpecsOf(
-      ms: Seq[ParsedManifest]): Seq[graft.engine.ColumnSpec] = {
+      ms: Seq[TableManifest]): Seq[graft.engine.ColumnSpec] = {
     val perManifest = ms.map(m =>
       (m.name, m.commitId, specsOfManifest(m), m.ancestors.nonEmpty))
     val widest = perManifest.map(_._3.size).max
@@ -379,24 +379,32 @@ object GraftDataSource {
     * fully-present ones; an ABSENT entry (a non-nullable column) admits.
     */
   private[sources] def admitChunk(c: ChunkStats, filters: Seq[Filter]): Boolean =
-    admit(c.longRanges, filters) && filters.forall {
-      case IsNotNull(col) => !c.nullCounts.get(col).contains(c.rows)
-      case IsNull(col) => c.nullCounts.get(col).forall(_ > 0)
-      case EqualTo(col, v: String) =>
-        c.strDicts.get(col).forall(_.contains(v)) &&
-          c.strRanges.get(col).forall { case (lo, hi) =>
-            v.compareTo(lo) >= 0 && v.compareTo(hi) <= 0
-          }
-      case In(col, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        vs.exists { x =>
-          val v = x.asInstanceOf[String]
-          c.strDicts.get(col).forall(_.contains(v)) &&
-            c.strRanges.get(col).forall { case (lo, hi) =>
-              v.compareTo(lo) >= 0 && v.compareTo(hi) <= 0
-            }
+    admit(c.longRanges, filters) && admitProofs(c.rows,
+      c.nullCounts.get(_).map(_.toLong), c.strDicts, c.strRanges, filters)
+
+  /** The null-count and string dict/range proofs, written once for both
+    * granularities: a chunk's own stats ([[admitChunk]]) and a
+    * container's envelope fold ([[admitManifest]]). `nullCount` answers
+    * None for a column without a recorded count (admit).
+    */
+  private def admitProofs(rows: Long, nullCount: String => Option[Long],
+                          strDicts: Map[String, Seq[String]],
+                          strRanges: Map[String, (String, String)],
+                          filters: Seq[Filter]): Boolean = {
+    def mayHold(col: String, v: String): Boolean =
+      strDicts.get(col).forall(_.contains(v)) &&
+        strRanges.get(col).forall { case (lo, hi) =>
+          v.compareTo(lo) >= 0 && v.compareTo(hi) <= 0
         }
+    filters.forall {
+      case IsNotNull(col) => !nullCount(col).contains(rows)
+      case IsNull(col) => nullCount(col).forall(_ > 0L)
+      case EqualTo(col, v: String) => mayHold(col, v)
+      case In(col, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
+        vs.exists(x => mayHold(col, x.asInstanceOf[String]))
       case _ => true
     }
+  }
 
   /** Numeric zone-map admission over one range map — a chunk's
     * ([[admitChunk]]) or a whole container's ([[admitManifest]]). Int
@@ -591,7 +599,7 @@ object GraftDataSource {
     * the table's current schema names in positional order; Nil disables
     * translation (callers that address columns by stored name).
     */
-  private[sources] def storedNamesOf(m: ParsedManifest,
+  private[sources] def storedNamesOf(m: TableManifest,
       tableCols: Seq[String]): Map[String, String] =
     if (tableCols.isEmpty) Map.empty
     else {
@@ -613,7 +621,7 @@ object GraftDataSource {
     * THAT column's null counts (explicit 0) would prune a container
     * whose rows ALL match the current X IS NULL (round-8 advice, high).
     */
-  private[sources] def containerFilters(m: ParsedManifest,
+  private[sources] def containerFilters(m: TableManifest,
       filters: Seq[Filter], tableCols: Seq[String]): Option[Seq[Filter]] = {
     val present: Set[String] =
       if (tableCols.isEmpty) m.schemaCols.map(_._1).toSet
@@ -634,7 +642,7 @@ object GraftDataSource {
     * at group granularity, so a pruned container's per-chunk detail is
     * NEVER read off storage.
     */
-  private[sources] def admitManifest(m: ParsedManifest,
+  private[sources] def admitManifest(m: TableManifest,
                                      filters: Seq[Filter]): Boolean = {
     // bucket(n, col) transforms recorded by the writer: a point/IN
     // constant admits only containers whose observed bucket-id set can
@@ -658,24 +666,8 @@ object GraftDataSource {
       case In(col, vs) if vs.nonEmpty => vs.exists(bucketAdmits(col, _))
       case _ => true
     }
-    buckets && admit(m.longRanges, filters) && filters.forall {
-      case IsNotNull(col) => !m.env.nullCounts.get(col).contains(m.rows)
-      case IsNull(col) => m.env.nullCounts.get(col).forall(_ > 0L)
-      case EqualTo(col, v: String) =>
-        m.env.strDicts.get(col).forall(_.contains(v)) &&
-          m.env.strRanges.get(col).forall { case (lo, hi) =>
-            v.compareTo(lo) >= 0 && v.compareTo(hi) <= 0
-          }
-      case In(col, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        vs.exists { x =>
-          val v = x.asInstanceOf[String]
-          m.env.strDicts.get(col).forall(_.contains(v)) &&
-            m.env.strRanges.get(col).forall { case (lo, hi) =>
-              v.compareTo(lo) >= 0 && v.compareTo(hi) <= 0
-            }
-        }
-      case _ => true
-    }
+    buckets && admit(m.longRanges, filters) && admitProofs(m.rows,
+      m.env.nullCounts.get, m.env.strDicts, m.env.strRanges, filters)
   }
 
   /** Chunk-granular input partitions for a set of committed manifests:
@@ -690,10 +682,10 @@ object GraftDataSource {
     * containers.
     */
   private[sources] def planPartitions(path: String,
-      manifests: Seq[ParsedManifest], filters: Array[Filter],
+      manifests: Seq[TableManifest], filters: Array[Filter],
       maxSplitBytes: Long,
       neededCols: Set[String] = Set.empty,
-      hydrate: ParsedManifest => ParsedManifest = m => {
+      hydrate: TableManifest => TableManifest = m => {
         require(!m.chunksElided,
           "planner bug: an index-elided manifest reached planPartitions " +
             "without a hydrator")
@@ -866,7 +858,7 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
     org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration,
     path)
 
-  private lazy val committedForStats: Option[Seq[graft.engine.ParsedManifest]] =
+  private lazy val committedForStats: Option[Seq[graft.engine.TableManifest]] =
     try {
       val conf = ContainerIO.confFrom(ContainerIO.confSnapshot(
         org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration))
@@ -901,7 +893,7 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
   /** A column's STORED (historical) label inside one manifest — the
     * key its stats use (rename support).
     */
-  private def storedNameIn(m: graft.engine.ParsedManifest, c: String): String =
+  private def storedNameIn(m: graft.engine.TableManifest, c: String): String =
     GraftDataSource.storedNamesOf(m, chainNames).getOrElse(c, c)
 
   /** COUNT(*)/COUNT(col)/MIN/MAX over integer columns, ungrouped and
@@ -1185,14 +1177,14 @@ class GraftScan(path: String, required: StructType,
     * manifest set) — at 10^5 partitions the index parse is the driver
     * cost worth not paying three times per query.
     */
-  private lazy val committedSnapshot: Seq[ParsedManifest] = {
+  private lazy val committedSnapshot: Seq[TableManifest] = {
     val conf = ContainerIO.confFrom(confKv)
     asOf.fold(Manifests.readCommitted(conf, path))(
       Manifests.readCommittedAt(conf, path, _))
       .filter(_.rows > 0)
   }
 
-  private def committed(): Seq[ParsedManifest] = committedSnapshot
+  private def committed(): Seq[TableManifest] = committedSnapshot
 
   /** Per-scan hydration cache (two-level metadata): an index-elided
     * manifest's chunk detail is read from its commit marker AT MOST
@@ -1201,8 +1193,8 @@ class GraftScan(path: String, required: StructType,
     * never with table size.
     */
   private val hydrated =
-    new java.util.concurrent.ConcurrentHashMap[String, ParsedManifest]()
-  private def hydrate(m: ParsedManifest): ParsedManifest =
+    new java.util.concurrent.ConcurrentHashMap[String, TableManifest]()
+  private def hydrate(m: TableManifest): TableManifest =
     if (!m.chunksElided) m
     else hydrated.computeIfAbsent(m.name, _ =>
       Manifests.loadChunkIndex(ContainerIO.confFrom(confKv), path, m))
@@ -1453,14 +1445,7 @@ case class GraftStreamOffset(batch: Long)
 
 object GraftStreamOffset {
   def parse(json: String): GraftStreamOffset = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = om.readTree(json)
-    if (root.isArray) // the short-lived pre-release name-set format
-      throw new IllegalArgumentException(
-        "this checkpoint holds a pre-release graft stream offset " +
-          "(manifest-name array); restart the query with a fresh " +
-          "checkpoint location")
-    val b = root.get("batch")
+    val b = Manifests.Json.readTree(json).get("batch")
     require(b != null && b.canConvertToLong, s"bad graft stream offset: $json")
     GraftStreamOffset(b.asLong())
   }
@@ -1513,18 +1498,11 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
   private var compactedThrough: Long = -1L
   private var compactedNames: Set[String] = Set.empty
 
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case c if c < 0x20 => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private def namesJson(names: Seq[String]): Array[Byte] =
+    Manifests.Json.writeValueAsBytes(names.toArray)
 
   private def readNames(file: String): Seq[String] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = om.readTree(new String(ContainerIO.readAll(conf, file),
-      java.nio.charset.StandardCharsets.UTF_8))
+    val root = Manifests.Json.readTree(ContainerIO.readAll(conf, file))
     require(root.isArray, s"corrupt graft stream seen-log entry $file")
     root.elements().asScala.map(_.asText()).toSeq
   }
@@ -1553,9 +1531,9 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
   // the same trigger's planInputPartitions reuses (replaced manifests
   // since the refresh just stop resolving — same semantics as a fresh
   // read); a restart-replay with no prior latestOffset reads directly
-  @volatile private var lastCommitted: Seq[ParsedManifest] = null
+  @volatile private var lastCommitted: Seq[TableManifest] = null
 
-  private def committed(): Seq[ParsedManifest] = {
+  private def committed(): Seq[TableManifest] = {
     val ms = Manifests.readCommitted(conf, path).filter(_.rows > 0)
     lastCommitted = ms
     ms
@@ -1574,9 +1552,7 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
     else {
       val next = maxBatch + 1
       ContainerIO.mkdirs(conf, logDir)
-      val body = fresh.map(q).mkString("[", ",", "]")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      if (ContainerIO.createExclusive(conf, s"$logDir/$next.json", body))
+      if (ContainerIO.createExclusive(conf, s"$logDir/$next.json", namesJson(fresh)))
         seenLog(next) = fresh
       else refreshLog() // lost a (restart) race; the log has the truth
       GraftStreamOffset(maxBatch)
@@ -1622,7 +1598,7 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
     // whole epochs, so coverage is all-or-nothing per epoch; an ancestor
     // outside the range would smuggle another batch's rows in — those
     // candidates stay warn-and-drop, the documented residual).
-    val substituted: Seq[graft.engine.ParsedManifest] =
+    val substituted: Seq[graft.engine.TableManifest] =
       if (unresolved.isEmpty) Nil
       else {
         val rangeEpochs = want.map(n =>
@@ -1695,10 +1671,8 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
     if (foldable.size < GraftMicroBatchStream.CompactInterval) return
     val names = (compactedNames ++
       foldable.flatMap(seenLog(_))).toSeq.sorted
-    val body = names.map(q).mkString("[", ",", "]")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val top = foldable.max
-    if (ContainerIO.createExclusive(conf, s"$logDir/$top.compact.json", body)) {
+    if (ContainerIO.createExclusive(conf, s"$logDir/$top.compact.json", namesJson(names))) {
       val f = ContainerIO.fs(logDir, conf)
       // covered per-batch files and superseded compact files are GC'd
       ContainerIO.listNames(conf, logDir).foreach {
@@ -1902,8 +1876,8 @@ class GraftWrite(path: String, truncate: Boolean, epoch: String,
   }
 }
 
-case class GraftCommitMessage(name: String, rows: Long,
-                              manifestJson: String) extends WriterCommitMessage
+/** A task's staged container, described by its unpublished manifest. */
+case class GraftCommitMessage(manifest: TableManifest) extends WriterCommitMessage
 
 /** Two concurrent appends can each be a valid add-only extension of the
   * schema they SAW yet incompatible with each other (one adds `b`, one
@@ -1924,7 +1898,7 @@ private[sources] object GraftCommits {
     * against the snapshot they SAW; this re-check inside the OCC
     * transform is what catches the race.
     */
-  private[sources] def checkSchema(path: String, parsedOld: Seq[ParsedManifest],
+  private[sources] def checkSchema(path: String, parsedOld: Seq[TableManifest],
                                    schema: Seq[(String, Int)]): Unit =
     if (schema.nonEmpty && parsedOld.nonEmpty) {
       val cur = GraftDataSource.currentSpecsOf(parsedOld)
@@ -1951,6 +1925,11 @@ private[sources] object GraftCommits {
     * as the compacted manifest's `ancestors`), the replay is DROPPED
     * instead of appended: its rows already live inside the compacted
     * container, so re-adding them would double every row of the epoch.
+    *
+    * Each [[GraftCommitMessage]] carries its task's unpublished
+    * [[TableManifest]]; publish stamps the commit generation onto it
+    * (`copy(commitId, commitParts)`), writes it as the commit marker,
+    * and the OCC transform works on the typed snapshot.
     */
   def publish(confKv: Map[String, String], path: String, truncate: Boolean,
               messages: Array[WriterCommitMessage]): Unit = {
@@ -1961,21 +1940,15 @@ private[sources] object GraftCommits {
     // per-epoch container count lets it tell a complete generation from
     // a publish that crashed mid-way through its manifest writes
     val commitId = Manifests.newCommitId(conf, path)
+    def epochOf(name: String) = Manifests.epochKey(Manifests.logicalName(name))
     val raw = messages.collect {
-      case m: GraftCommitMessage if m.rows > 0 => m
+      case m: GraftCommitMessage if m.manifest.rows > 0 => m.manifest
     }.sortBy(_.name)
-    val epochParts = raw.groupBy(m => Manifests.epochKey(
-      Manifests.logicalName(m.name))).view.mapValues(_.length).toMap
-    val fresh = raw.map(m => m.copy(manifestJson = Manifests.stampCommit(
-      m.manifestJson, commitId,
-      epochParts(Manifests.epochKey(Manifests.logicalName(m.name))))))
+    val epochParts = raw.groupBy(m => epochOf(m.name)).view.mapValues(_.length).toMap
+    val fresh = raw.map(m =>
+      m.copy(commitId = commitId, commitParts = epochParts(epochOf(m.name))))
     if (fresh.isEmpty && !truncate) return
-    fresh.foreach { m =>
-      ContainerIO.writeAtomic(conf,
-        s"$path/manifests/.tmp-part-${m.name}-commit",
-        Manifests.manifestPath(path, m.name),
-        m.manifestJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+    fresh.foreach(Manifests.writeManifest(conf, path, _, 0L))
     // names among `fresh` whose EPOCH was already folded into a live
     // compacted container — decided against the snapshot the WINNING
     // commit attempt saw (set by the last transform run). Matching is
@@ -1989,35 +1962,23 @@ private[sources] object GraftCommits {
     @volatile var priorNames = Seq.empty[String]
     // priorNames captures the snapshot the winning commit superseded —
     // exactly the state this commit's deletes must be judged against
-    val newSchema: Seq[(String, Int)] =
-      if (fresh.isEmpty) Nil
-      else Manifests.parse(fresh.head.manifestJson).schemaCols
+    val newSchema = fresh.headOption.map(_.schemaCols).getOrElse(Nil)
     try Manifests.commitIndex(conf, path, old => {
-      // parse each old manifest ONCE per attempt: this transform runs on
-      // the commit hot path of every write/epoch, over O(partitions)
-      // JSONs
-      val parsedOld = old.map(Manifests.parse)
-      priorNames = parsedOld.map(_.name)
-      if (!truncate) checkSchema(path, parsedOld, newSchema)
+      priorNames = old.map(_.name)
+      if (!truncate) checkSchema(path, old, newSchema)
       val liveAncestors: Set[String] =
-        if (truncate) Set.empty else parsedOld.flatMap(_.ancestors).toSet
-      val (replays, active) = fresh.partition(m => liveAncestors.contains(
-        Manifests.epochKey(Manifests.logicalName(m.name))))
+        if (truncate) Set.empty else old.flatMap(_.ancestors).toSet
+      val (replays, active) = fresh.partition(m => liveAncestors(epochOf(m.name)))
       droppedReplays = replays.map(_.name).toSet
       // replacement is EPOCH-granular too: a replayed epoch may
       // re-partition the same rows, so per-logical-name replacement
       // would leave the old generation's surplus partitions alongside
       // the full replay — duplicates. Publishing an epoch replaces
       // EVERY container of its previous generation.
-      val activeEpochs = active
-        .map(m => Manifests.epochKey(Manifests.logicalName(m.name))).toSet
+      val activeEpochs = active.map(m => epochOf(m.name)).toSet
       val kept =
-        if (truncate) Nil
-        else old.lazyZip(parsedOld).collect {
-          case (j, pm) if !activeEpochs.contains(
-            Manifests.epochKey(Manifests.logicalName(pm.name))) => j
-        }.toSeq
-      kept ++ active.map(_.manifestJson)
+        if (truncate) Nil else old.filterNot(m => activeEpochs(epochOf(m.name)))
+      kept ++ active
     })
     catch {
       case e: SchemaEvolutionConflict =>
@@ -2029,11 +1990,9 @@ private[sources] object GraftCommits {
         throw e
     }
     val activeNames = fresh.map(_.name).toSet -- droppedReplays
-    val activeEpochs =
-      activeNames.map(n => Manifests.epochKey(Manifests.logicalName(n)))
+    val activeEpochs = activeNames.map(epochOf)
     def replaced(name: String): Boolean =
-      !activeNames.contains(name) && (truncate ||
-        activeEpochs.contains(Manifests.epochKey(Manifests.logicalName(name))))
+      !activeNames.contains(name) && (truncate || activeEpochs.contains(epochOf(name)))
     val doomed = priorNames.filter(replaced)
     val f = ContainerIO.fs(path, conf)
     doomed.foreach(Manifests.deleteContainer(f, path, _))
@@ -2202,17 +2161,14 @@ class GraftDataWriter(path: String, part: Int, epoch: String,
     * stage appends under their own OCC swap instead of
     * [[GraftCommits.publish]].
     */
-  private[sources] def commitManifest(): graft.engine.PartManifest =
+  private[sources] def commitManifest(): TableManifest =
     enc.finish(publishManifest = false).copy(
       partitioning = partBy.map(_.render),
       bucketIds = bucketSpecs.lazyZip(bucketSeen).map { case ((pos, _, _), seen) =>
-        writeSchema.fields(pos).name -> seen.toSeq.sorted
+        writeSchema.fields(pos).name -> seen.toSet
       }.toMap)
 
-  override def commit(): WriterCommitMessage = {
-    val manifest = commitManifest()
-    GraftCommitMessage(manifest.name, n, Manifests.manifestJson(manifest))
-  }
+  override def commit(): WriterCommitMessage = GraftCommitMessage(commitManifest())
 
   /** Best-effort delete of this attempt's own staged container (present
     * only when `commit()` already ran but the driver discarded the

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, DecodedChunk, Kinds, Lane, Manifests, ParsedManifest, PartManifest}
+import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, DecodedChunk, Kinds, Lane, Manifests, TableManifest}
 
 /** Table maintenance for graft tables — the operational side a
   * long-running streaming sink needs: every micro-batch epoch commits
@@ -112,7 +112,7 @@ object GraftMaintenance {
     // qualifies — replay protection records ancestor EPOCHS, and "epoch
     // is an ancestor" must mean "all of its rows live in compacted
     // generations". An epoch with one over-size container is skipped.
-    val work: Seq[Seq[ParsedManifest]] =
+    val work: Seq[Seq[TableManifest]] =
       snap.committed.groupBy(m => (m.schemaCols, m.digestCol)).toSeq
         .sortBy(_._2.map(_.name).min)
         .flatMap { case (_, group) =>
@@ -125,8 +125,8 @@ object GraftMaintenance {
             .map(_.sortBy(_.name))
             .sortBy(_.head.name)
           // greedy size-binning over whole epoch groups, in epoch order
-          val bins = Seq.newBuilder[Seq[ParsedManifest]]
-          var run = List.empty[Seq[ParsedManifest]]
+          val bins = Seq.newBuilder[Seq[TableManifest]]
+          var run = List.empty[Seq[TableManifest]]
           var runBytes = 0L
           groups.foreach { g =>
             val gBytes = g.map(_.encodedBytes).sum
@@ -404,7 +404,7 @@ object GraftMaintenance {
       if (snap.chain.exists(_.dropped)) snap.chain.map(s => (s.name, s.packed))
       else Nil
     val keyFull = keyVis.map(snap.visPositions)
-    var appendedF: scala.concurrent.Future[Array[PartManifest]] = null
+    var appendedF: scala.concurrent.Future[Array[TableManifest]] = null
     try {
       // 1) stage the source as fresh containers (attempt-qualified, one
       // new epoch) through the ordinary writer — unpublished until the
@@ -477,9 +477,9 @@ object GraftMaintenance {
   private final class Snapshot(val path: String,
                                val confKv: Map[String, String]) {
     val conf: org.apache.hadoop.conf.Configuration = ContainerIO.confFrom(confKv)
-    val all: Seq[ParsedManifest] = Manifests.readCommitted(conf, path)
+    val all: Seq[TableManifest] = Manifests.readCommitted(conf, path)
     /** The data containers (schema markers and tombstones hold no rows). */
-    val committed: Seq[ParsedManifest] =
+    val committed: Seq[TableManifest] =
       all.filter(m => m.rows > 0 && !m.schemaMarker)
     // the FULL positional chain (dropped positions included) drives the
     // positional zips; predicates and sources resolve against the
@@ -553,7 +553,7 @@ object GraftMaintenance {
     * coverage). Returns the containers that MAY hold a matching row.
     */
   private def admitted(snap: Snapshot,
-                       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[ParsedManifest] = {
+                       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[TableManifest] = {
     val admission = GraftDataSource.translateFilters(filters.toArray,
       GraftDataSource.layoutOf(snap.st)).toSeq
     snap.committed.filter { m =>
@@ -566,7 +566,7 @@ object GraftMaintenance {
     * filters ([[sourceFilterOf]]); untranslatable conjuncts prune
     * nothing (a conservative over-approximation of "has matches").
     */
-  private def admittedBy(snap: Snapshot, cond: Expression): Seq[ParsedManifest] = {
+  private def admittedBy(snap: Snapshot, cond: Expression): Seq[TableManifest] = {
     import org.apache.spark.sql.catalyst.expressions.And
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -580,7 +580,7 @@ object GraftMaintenance {
     * operation changed in it (a fold changes every row it moves).
     */
   private final case class Rewritten(consumed: Seq[String],
-                                     staged: PartManifest, changed: Long)
+                                     staged: TableManifest, changed: Long)
 
   /** The one rewrite job: one Spark task per bin (an RDD, because the
     * payload is driver-planned manifest metadata, not table rows), each
@@ -596,19 +596,24 @@ object GraftMaintenance {
     * A failed task (a source container deleted mid-read by a concurrent
     * overwrite or compaction, or an outright error) sweeps THIS run's
     * staged containers, then raises the failure as [[aborted]] maps it.
-    * Tasks of the failed stage that are still running may land staged
-    * output after the sweep; fatal errors (OOM, interrupts) propagate
-    * untouched. Both kinds of leftovers are vacuum's job.
+    * The job fails as soon as one task does, while its sibling tasks
+    * may still be staging, so the sweep first waits ([[awaitJobTasks]])
+    * until no task of the job is running. Fatal errors (OOM, interrupts)
+    * propagate untouched; their leftovers, and those of a sibling that
+    * outlives the wait, are vacuum's job.
     */
   private def rewriteJob(spark: SparkSession, snap: Snapshot, op: String,
-                         runId: String, bins: Seq[Seq[ParsedManifest]],
+                         runId: String, bins: Seq[Seq[TableManifest]],
                          noun: String)(
-      step: (org.apache.hadoop.conf.Configuration, Seq[ParsedManifest],
-        String, Int) => (PartManifest, Long)): Seq[Rewritten] =
+      step: (org.apache.hadoop.conf.Configuration, Seq[TableManifest],
+        String, Int) => (TableManifest, Long)): Seq[Rewritten] =
     if (bins.isEmpty) Nil
     else {
       val (path, confKv) = (snap.path, snap.confKv)
-      try spark.sparkContext.parallelize(bins.zipWithIndex, bins.size)
+      val sc = spark.sparkContext
+      val tag = s"graft-$op-$runId"
+      sc.addJobTag(tag)
+      try sc.parallelize(bins.zipWithIndex, bins.size)
         .map { case (ms0, bin) =>
           val conf = ContainerIO.confFrom(confKv)
           val ms = ms0.map(Manifests.loadChunkIndex(conf, path, _))
@@ -621,10 +626,38 @@ object GraftMaintenance {
         .collect().toSeq
       catch {
         case scala.util.control.NonFatal(e) =>
+          awaitJobTasks(spark, tag)
           sweepStaged(snap, s"$op-$runId")
           throw aborted(path, noun, e)
+      } finally sc.removeJobTag(tag)
+    }
+
+  /** Wait (at most [[TaskDrainMs]]) until no task of the jobs tagged
+    * `tag` is still running. The status store applies listener events in
+    * order: a job shows as ended only after every task start of its
+    * stages, and a stage's active-task count reaches 0 only once its
+    * last running task has ended — so "ended, and no active tasks" is
+    * exact once the job is visible at all.
+    */
+  private def awaitJobTasks(spark: SparkSession, tag: String): Unit = {
+    val t = spark.sparkContext.statusTracker
+    def drained: Boolean = {
+      val jobs = t.getJobIdsForTag(tag)
+      jobs.nonEmpty && jobs.forall { j =>
+        t.getJobInfo(j).exists { info =>
+          info.status != org.apache.spark.JobExecutionStatus.RUNNING &&
+            info.stageIds.forall(s => t.getStageInfo(s).forall(_.numActiveTasks == 0))
+        }
       }
     }
+    val deadline = System.nanoTime() + TaskDrainMs * 1000000L
+    while (!drained && System.nanoTime() < deadline) Thread.sleep(20)
+  }
+
+  /** Bound on [[awaitJobTasks]]: a sibling rewrite task still running
+    * after this long leaves its staged block to vacuum.
+    */
+  private final val TaskDrainMs = 60000L
 
   /** Delete the staged blocks (`part-<stage>-...`) of the given stages. */
   private def sweepStaged(snap: Snapshot, stages: String*): Unit = {
@@ -665,7 +698,7 @@ object GraftMaintenance {
     * and nothing is appended).
     */
   private def commitTail(snap: Snapshot, done: Seq[Rewritten],
-                         appended: Seq[PartManifest], what: String,
+                         appended: Seq[TableManifest], what: String,
                          reclaimConsumed: Boolean, beforeCommit: () => Unit,
                          afterStage: () => Unit): Seq[Rewritten] = {
     val changed = done.filter(_.changed > 0L)
@@ -697,12 +730,11 @@ object GraftMaintenance {
     */
   private def swapGeneration(conf: org.apache.hadoop.conf.Configuration,
                              path: String, consumed: Set[String],
-                             newManifests: Seq[PartManifest],
+                             newManifests: Seq[TableManifest],
                              what: String, reclaimConsumed: Boolean,
                              afterStage: () => Unit): Unit = {
     val commitId = Manifests.newCommitId(conf, path)
     val stamped = newManifests.map(_.copy(commitId = commitId))
-    val newJsons = stamped.map(Manifests.manifestJson)
     val newNames = stamped.map(_.name).toSet
     // containers WITHOUT ancestors (UPSERT's appended source) are plain
     // appends to label resolution (currentSpecsOf takes current names
@@ -715,9 +747,8 @@ object GraftMaintenance {
     afterStage()
     try {
       Manifests.commitIndex(conf, path, old => {
-        val parsedOld = old.map(Manifests.parse)
-        appendSchemas.foreach(GraftCommits.checkSchema(path, parsedOld, _))
-        val live = parsedOld.map(_.name).toSet
+        appendSchemas.foreach(GraftCommits.checkSchema(path, old, _))
+        val live = old.map(_.name).toSet
         // A concurrent Manifests.consolidate (end of every engine encode)
         // normalizes the LISTING — where this run's staged manifests
         // already sit as commit markers — and may have ADOPTED some or
@@ -727,7 +758,7 @@ object GraftMaintenance {
         // genuine conflict only when no adopted bin of THIS run covers
         // its epoch (pre-round-7 this path threw CompactionConflict and
         // the handler deleted index-live compacted blocks — data loss).
-        val adopted = parsedOld.filter(m => newNames(m.name))
+        val adopted = old.filter(m => newNames(m.name))
         val adoptedCover = adopted.flatMap(_.ancestors).toSet
         val gone = consumed.filterNot(live).filterNot(n =>
           adoptedCover(Manifests.epochKey(Manifests.logicalName(n))))
@@ -735,11 +766,8 @@ object GraftMaintenance {
           s"containers ${gone.toSeq.sorted.mkString(", ")} were replaced " +
             s"by a concurrent commit during $what of $path; aborting")
         val adoptedNames = adopted.map(_.name).toSet
-        old.lazyZip(parsedOld).collect {
-          case (j, pm) if !consumed(pm.name) => j
-        }.toSeq ++ stamped.lazyZip(newJsons).collect {
-          case (m, j) if !adoptedNames(m.name) => j
-        }
+        old.filterNot(m => consumed(m.name)) ++
+          stamped.filterNot(m => adoptedNames(m.name))
       })
     } catch {
       case e @ (_: CompactionConflict | _: SchemaEvolutionConflict) =>
@@ -913,10 +941,9 @@ object GraftMaintenance {
     val current = GraftDataSource.currentSpecsOf(committed)
     val mutated = mutate(current)
     val idx = current.indices.find(i => current(i) != mutated(i)).getOrElse(0)
-    def mkMarker(commitId: String): PartManifest =
-      PartManifest(part = 0, rows = 0L, chunks = 0,
-        rawBytes = 0L, encodedBytes = 0L, skipped = false, digest = "",
-        columns = Nil, name = s"schemamarker-$commitId-0",
+    def mkMarker(commitId: String): TableManifest =
+      TableManifest(name = s"schemamarker-$commitId-0", part = 0, rows = 0L,
+        chunks = 0, rawBytes = 0L, encodedBytes = 0L, digest = "",
         schemaCols = mutated.map(s => (s.name, s.packed)), digestCol = "",
         commitId = commitId, schemaMarker = true)
     var marker = mkMarker(Manifests.newCommitId(conf, path))
@@ -924,8 +951,7 @@ object GraftMaintenance {
     beforeCommit()
     try Manifests.commitIndex(conf, path, old => {
       // re-check against the snapshot this commit actually lands on
-      val parsedOld = old.map(Manifests.parse)
-      val cur = GraftDataSource.currentSpecsOf(parsedOld)
+      val cur = GraftDataSource.currentSpecsOf(old)
       recheck(cur, idx)
       // last-commit-wins label resolution: the marker must outrank
       // EVERY manifest in the snapshot this commit actually lands on.
@@ -937,22 +963,15 @@ object GraftMaintenance {
       // writing the new marker BEFORE the index commit keeps the
       // commit-marker-first discipline; the outranked marker file is
       // removed so it can't confuse the listing fallback.
-      val maxPrefix = parsedOld.iterator
-        .map(_.commitId.takeWhile(_.isDigit))
-        .filter(f => f.nonEmpty && f.length <= 17)
-        .map(_.toLong).maxOption.getOrElse(0L)
-      val myPrefix = marker.commitId.takeWhile(_.isDigit).toLong
-      if (myPrefix <= maxPrefix) {
+      if (old.exists(m => Manifests.generation(m.commitId) >=
+          Manifests.generation(marker.commitId))) {
         val stale = marker
-        val id = f"${math.max(maxPrefix + 1,
-          System.currentTimeMillis())}%013d-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        marker = mkMarker(id)
+        marker = mkMarker(Manifests.commitIdAbove(old))
         Manifests.writeManifest(conf, path, marker, 0L)
         ContainerIO.fs(path, conf).delete(new org.apache.hadoop.fs.Path(
           Manifests.manifestPath(path, stale.name)), false)
       }
-      old :+ Manifests.manifestJson(marker)
+      old :+ marker
     })
     catch {
       case e: SchemaEvolutionConflict =>
@@ -1075,10 +1094,10 @@ object GraftMaintenance {
     * buffer.
     */
   private def rewriteBin(conf: org.apache.hadoop.conf.Configuration,
-                         path: String, ms: Seq[ParsedManifest],
+                         path: String, ms: Seq[TableManifest],
                          schema: Seq[ColumnSpec], partName: String, bin: Int)(
       rows: (ColumnarEngine.PartitionEncoder, DecodedChunk) => Long
-  ): (PartManifest, Long) = {
+  ): (TableManifest, Long) = {
     val enc = new ColumnarEngine.PartitionEncoder(bin, path, conf,
       partName = partName, schema = schema)
     // EPOCH identities folded into this container — with those the
@@ -1108,11 +1127,11 @@ object GraftMaintenance {
       if (ms.nonEmpty && ms.forall(_.partitioning == ms.head.partitioning))
         ms.head.partitioning
       else Nil
-    val bucketIds: Map[String, Seq[Int]] =
+    val bucketIds: Map[String, Set[Int]] =
       if (partitioning.isEmpty) Map.empty
       else ms.head.bucketIds.keySet
         .filter(c => ms.forall(_.bucketIds.contains(c)))
-        .map(c => c -> ms.flatMap(_.bucketIds(c)).distinct.sorted)
+        .map(c => c -> ms.flatMap(_.bucketIds(c)).toSet)
         .toMap
     (enc.finish(publishManifest = false).copy(ancestors = ancestors,
       partitioning = partitioning, bucketIds = bucketIds), changed)

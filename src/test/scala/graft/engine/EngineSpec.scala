@@ -41,7 +41,7 @@ class EngineSpec extends AnyFunSuite {
     val src = SourceTable.synthesize(spark, 2000, 8)
     val derived = ColumnarEngine.derive(src).cache()
     val manifests = ColumnarEngine.encode(derived, dir, numParts = 8)
-    assert(manifests.count(!_.skipped) === 8)
+    assert(manifests.length === 8)
     val rows = manifests.map(_.rows).sum
     assert(rows === 2000)
     val raw = manifests.map(_.rawBytes).sum
@@ -118,13 +118,13 @@ class EngineSpec extends AnyFunSuite {
     val src = SourceTable.synthesize(spark, 1000, 4)
     val derived = ColumnarEngine.derive(src).cache()
     val first = ColumnarEngine.encode(derived, dir, numParts = 4)
-    assert(first.count(!_.skipped) === 4)
+    assert(first.length === 4)
     // simulate a partial failure: delete one partition's outputs
     Files.delete(Paths.get(dir, "manifests", "part-2.json"))
     Files.delete(Paths.get(dir, "blocks", "part-2.gblk"))
     val second = ColumnarEngine.encode(derived, dir, numParts = 4)
-    assert(second.filter(!_.skipped).map(_.part).toSeq === Seq(2), "only part 2 re-encoded")
-    assert(second.count(_.skipped) === 3)
+    assert(second.map(_.part).toSeq === Seq(2), "only part 2 re-encoded")
+    assert(ColumnarEngine.completedParts(dir) === Set(0, 1, 2, 3))
     // and the result is complete + correct
     val decoded = ColumnarEngine.decode(spark, dir)
     assert(decoded.count() === 1000)
@@ -135,10 +135,10 @@ class EngineSpec extends AnyFunSuite {
     val conf = ContainerIO.localConf()
     val d = tempDir("occ-lost")
     ContainerIO.mkdirs(conf, s"$d/manifests")
-    def entry(n: String) = Manifests.manifestJson(PartManifest(0, 1L, 1, 8L, 8L,
-      skipped = false, "", Nil, name = n, schemaCols = Seq("x" -> 0),
-      digestCol = "", chunkIndex = Seq(ChunkStats(ColumnarEngine.Magic.length + 1L,
-        8L, 1, Map.empty, Map.empty, Map.empty, Map.empty))))
+    def entry(n: String) = TableManifest(n, 0, 1L, 1, 8L, 8L, "",
+      schemaCols = Seq("x" -> 0), digestCol = "",
+      chunkIndex = Seq(ChunkStats(ColumnarEngine.Magic.length + 1L,
+        8L, 1, Map.empty, Map.empty, Map.empty, Map.empty)))
     Manifests.commitIndex(conf, d, _ => Seq(entry("a"))) // v0
     // a committer reads v0 (claiming v1), then stalls while the world
     // advances PAST the tombstone-retention envelope: the live tip is
@@ -150,17 +150,17 @@ class EngineSpec extends AnyFunSuite {
       fired = true
       ContainerIO.createExclusive(conf,
         s"$d/${Manifests.versionedIndexName(tip)}",
-        s"""{"version":1,"manifests":[${entry("tip")}]}"""
+        s"""{"version":1,"manifests":[${Manifests.toJson(entry("tip"))}]}"""
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(d, Manifests.versionedIndexName(0L)))
     }
     try Manifests.commitIndex(conf, d, old => old :+ entry("b"))
     finally Manifests.beforeClaimHook = () => ()
-    val Some((ver, jsons)) = Manifests.readIndexSnapshot(conf, d)
+    val Some((ver, ms)) = Manifests.readIndexSnapshot(conf, d)
     assert(ver === tip + 1,
       s"the withdrawn claim must retry ON TOP of the true tip, got v$ver")
-    val names = jsons.map(Manifests.parse(_).name)
+    val names = ms.map(_.name)
     assert(names.contains("tip") && names.contains("b"),
       s"retry must preserve the tip's content and land the update: $names")
     assert(!ContainerIO.exists(conf, s"$d/${Manifests.versionedIndexName(1L)}"),

@@ -354,14 +354,14 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   test("concurrent index commits: OCC retries keep BOTH appends (no lost update)") {
-    import graft.engine.{ColumnMetric, Manifests, PartManifest}
+    import graft.engine.{Manifests, TableManifest}
     val d = mkTableDir("graft-dsv2-occ")
     val conf = graft.engine.ContainerIO.localConf()
-    def mkJson(name: String) = Manifests.manifestJson(PartManifest(
-      0, 5L, 1, 10L, 8L, skipped = false, "", Seq.empty[ColumnMetric], name = name,
-      schemaCols = Seq("x" -> 0), chunkIndex = Seq(graft.engine.ChunkStats(
+    def mk(name: String) = TableManifest(name, 0, 5L, 1, 10L, 8L, "",
+      schemaCols = Seq("x" -> 0), digestCol = "content",
+      chunkIndex = Seq(graft.engine.ChunkStats(
         ColumnarEngine.Magic.length + 1L, 8L, 5, Map.empty, Map.empty, Map.empty,
-        Map.empty))))
+        Map.empty)))
     // deterministic interleave: A reads its snapshot, then B commits a
     // full snapshot BEFORE A writes — A's version claim must fail and
     // retry on top of B's. Round 4's read-modify-write lost B here.
@@ -369,9 +369,9 @@ class GraftSourceSpec extends AnyFunSuite {
     Manifests.commitIndex(conf, d, old => {
       if (!fired) {
         fired = true
-        Manifests.commitIndex(conf, d, o2 => o2 :+ mkJson("bbb"))
+        Manifests.commitIndex(conf, d, o2 => o2 :+ mk("bbb"))
       }
-      old :+ mkJson("aaa")
+      old :+ mk("aaa")
     })
     val names = Manifests.readCommitted(conf, d).map(_.name)
     assert(names.toSet === Set("aaa", "bbb"))
@@ -379,7 +379,7 @@ class GraftSourceSpec extends AnyFunSuite {
     // that DIES mid-commit is a lost update too — surface its exception
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (0 until 6).map(i => new Thread(() => {
-      try { Manifests.commitIndex(conf, d, old => old :+ mkJson(s"t$i")); () }
+      try { Manifests.commitIndex(conf, d, old => old :+ mk(s"t$i")); () }
       catch { case t: Throwable => errs.add(t); () }
     }))
     threads.foreach(_.start())

@@ -217,14 +217,12 @@ class MaintenanceSpec extends AnyFunSuite {
     // only 1 of its 2 containers' manifests landed (commitParts = 2,
     // NEWER commitId) — the fallback must keep the COMPLETE committed
     // generation, not the newer partial
-    val partial = graft.engine.PartManifest(0, 30L, 1, 100L, 80L,
-      skipped = false, "", Nil, name = "q-e1-0-a77", chunkIndex = oneChunk(30),
-      schemaCols = idTagCols, digestCol = "tag")
+    val partial = graft.engine.TableManifest("q-e1-0-a77", 0, 30L, 1, 100L, 80L, "",
+      idTagCols, "tag", chunkIndex = oneChunk(30),
+      commitId = Manifests.newCommitId(conf, d), commitParts = 2)
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-partial",
       Manifests.manifestPath(d, partial.name),
-      Manifests.stampCommit(Manifests.manifestJson(partial),
-        Manifests.newCommitId(conf, d), 2)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Manifests.toJson(partial).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     ContainerIO.listNames(conf, d).filter(_.startsWith("_manifest-index"))
       .foreach { n =>
         java.nio.file.Files.delete(java.nio.file.Paths.get(d, n))
@@ -270,8 +268,8 @@ class MaintenanceSpec extends AnyFunSuite {
     // manifest of compacted epoch 2 lingers as a commit marker
     val stale = stage(2, 99L, 200 until 220)
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-stale",
-      Manifests.manifestPath(d, stale.name),
-      stale.manifestJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Manifests.manifestPath(d, stale.manifest.name),
+      Manifests.toJson(stale.manifest).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // the documented listing-fallback recovery: delete ALL index files —
     // including the local-FS .crc sidecars, or a later re-created
     // same-named version pairs with a stale sidecar (CLAUDE.md pitfall)
@@ -359,13 +357,7 @@ class MaintenanceSpec extends AnyFunSuite {
       ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-stale-${m.name}",
         Manifests.manifestPath(d, m.name),
         // re-serialize with the ORIGINAL (older) commitId preserved
-        Manifests.stampCommitId(
-          Manifests.manifestJson(graft.engine.PartManifest(
-            m.part, m.rows, m.chunks, m.rawBytes, m.encodedBytes,
-            skipped = false, m.digest, Nil, name = m.name,
-            chunkIndex = m.chunkIndex, schemaCols = m.schemaCols,
-            digestCol = m.digestCol)), m.commitId)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        Manifests.toJson(m).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
     // with the index live, reads are unaffected
     assert(spark.read.format("graft").load(d).count() === 50)
@@ -396,14 +388,13 @@ class MaintenanceSpec extends AnyFunSuite {
     // a first compaction run "crashes" after writing its manifests but
     // before its index commit: craft its leftover stage with an OLDER
     // commitId covering the same epochs
-    val staleStage = graft.engine.PartManifest(0, 60L, 1, 100L, 80L,
-      skipped = false, "", Nil, name = "compact-dead0-0",
-      chunkIndex = oneChunk(60), schemaCols = idTagCols, digestCol = "tag",
+    val staleStage = graft.engine.TableManifest("compact-dead0-0", 0, 60L, 1,
+      100L, 80L, "", idTagCols, "tag", chunkIndex = oneChunk(60),
       ancestors = Seq("q-e1", "q-e2", "q-e3"),
       commitId = "0000000000001-dead")
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-deadstage",
       Manifests.manifestPath(d, staleStage.name),
-      Manifests.manifestJson(staleStage)
+      Manifests.toJson(staleStage)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // the RETRY commits for real
     val (c, p) = GraftMaintenance.compact(spark, d)
@@ -478,9 +469,8 @@ class MaintenanceSpec extends AnyFunSuite {
     val m = committed.head
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-resume",
       Manifests.manifestPath(d, "resume7"),
-      Manifests.manifestJson(graft.engine.PartManifest(7, 1L, 1, 3L, 3L,
-        skipped = false, "", Nil, name = "resume7", chunkIndex = oneChunk(1),
-        schemaCols = m.schemaCols, digestCol = m.digestCol))
+      Manifests.toJson(graft.engine.TableManifest("resume7", 7, 1L, 1, 3L, 3L,
+        "", m.schemaCols, m.digestCol, chunkIndex = oneChunk(1)))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val deleted = GraftMaintenance.vacuum(spark, d, graceMs = 3600 * 1000L)
     assert(deleted === 3, s"expected the 3 aged dead files gone, got $deleted")
@@ -511,9 +501,8 @@ class MaintenanceSpec extends AnyFunSuite {
     // it as a committed rename of b -> c
     val specs = GraftDataSource.currentSpecsOf(Manifests.readCommitted(conf, d))
     val orphanId = Manifests.newCommitId(conf, d)
-    val orphan = graft.engine.PartManifest(part = 0, rows = 0L, chunks = 0,
-      rawBytes = 0L, encodedBytes = 0L, skipped = false, digest = "",
-      columns = Nil, name = s"schemamarker-$orphanId-0",
+    val orphan = graft.engine.TableManifest(name = s"schemamarker-$orphanId-0",
+      part = 0, rows = 0L, chunks = 0, rawBytes = 0L, encodedBytes = 0L, digest = "",
       schemaCols = specs.map(s =>
         (if (s.name == "b") "c" else s.name, s.packed)),
       digestCol = "", commitId = orphanId, schemaMarker = true)
@@ -734,12 +723,11 @@ class MaintenanceSpec extends AnyFunSuite {
     // consolidate's `commitId < maxKept` cleanup would treat our newer
     // generations as superseded garbage.
     val future = System.currentTimeMillis() + 1000000000L
-    val m = graft.engine.PartManifest(0, 10L, 1, 50L, 40L, skipped = false,
-      "", Nil, name = "skew-e1-0", chunkIndex = oneChunk(10),
-      schemaCols = idTagCols, digestCol = "tag",
+    val m = graft.engine.TableManifest("skew-e1-0", 0, 10L, 1, 50L, 40L, "",
+      idTagCols, "tag", chunkIndex = oneChunk(10),
       commitId = f"$future%013d-deadbeef")
     Manifests.writeManifest(conf, d, m, 0L)
-    Manifests.commitIndex(conf, d, _ => Seq(Manifests.manifestJson(m)))
+    Manifests.commitIndex(conf, d, _ => Seq(m))
     val id = Manifests.newCommitId(conf, d)
     assert(id.takeWhile(_.isDigit).toLong > future,
       s"newCommitId must order above every committed predecessor, got $id")
@@ -771,14 +759,12 @@ class MaintenanceSpec extends AnyFunSuite {
     // must surface NOTHING for it — a partial epoch promoted into the
     // index would be transient wrong rows; the crashed publish's
     // job/stream retries it anyway
-    val partial = graft.engine.PartManifest(0, 30L, 1, 100L, 80L,
-      skipped = false, "", Nil, name = "q-e7-0-a91", chunkIndex = oneChunk(30),
-      schemaCols = idTagCols, digestCol = "tag")
+    val partial = graft.engine.TableManifest("q-e7-0-a91", 0, 30L, 1, 100L, 80L, "",
+      idTagCols, "tag", chunkIndex = oneChunk(30),
+      commitId = Manifests.newCommitId(conf, d), commitParts = 2)
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-partial7",
       Manifests.manifestPath(d, partial.name),
-      Manifests.stampCommit(Manifests.manifestJson(partial),
-        Manifests.newCommitId(conf, d), 2)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Manifests.toJson(partial).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     ContainerIO.listNames(conf, d).filter(_.startsWith("_manifest-index"))
       .foreach { n =>
         java.nio.file.Files.delete(java.nio.file.Paths.get(d, n))
@@ -818,8 +804,19 @@ class MaintenanceSpec extends AnyFunSuite {
       val after = Manifests.readCommitted(conf, d)
       assert(after.map(_.name).toSet === before.map(_.name).toSet,
         s"no manifest of the aborted $op may commit")
-      assert(!after.exists(m => Seq("compact-", "delete-", "update-", "merge-",
-        "upsert-").exists(m.name.startsWith)), op)
+      val runPrefixes = Seq("compact-", "delete-", "update-", "merge-", "upsert-")
+      assert(!after.exists(m => runPrefixes.exists(m.name.startsWith)), op)
+      // every task of the failed job has finished before the sweep: no
+      // sibling's staged block outlives the abort (looked for once no
+      // task of the application is running any more)
+      val tracker = spark.sparkContext.statusTracker
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while ((tracker.getActiveJobIds.nonEmpty ||
+          tracker.getExecutorInfos.exists(_.numRunningTasks > 0)) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      val staged = ContainerIO.listNames(conf, s"$d/blocks")
+        .filter(n => runPrefixes.exists(p => n.startsWith(s"part-$p")))
+      assert(staged.isEmpty, s"the aborted $op left staged blocks: $staged")
       // the surviving container is intact (its zone map skips the other)
       assert(spark.read.format("graft").load(d).filter(col("id") >= 50)
         .count() === 50, op)

@@ -217,14 +217,13 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     // readable.
     val confKv = graft.engine.ContainerIO.confSnapshot(
       spark.sparkContext.hadoopConfiguration)
-    val loser = graft.engine.PartManifest(0, 1L, 1, 8L, 8L, skipped = false,
-      digest = "00", columns = Nil, name = "race9z9z9z-0",
+    val loser = graft.engine.TableManifest("race9z9z9z-0", 0, 1L, 1, 8L, 8L,
+      digest = "00",
       schemaCols = Seq(("id", 0), ("a", 1 | 0x80), ("z", 0 | 0x80)),
       digestCol = "a", chunkIndex = Seq(graft.engine.ChunkStats(
         graft.engine.ColumnarEngine.Magic.length + 1L, 8L, 1,
         Map.empty, Map.empty, Map.empty, Map.empty)))
-    val msg = GraftCommitMessage(loser.name, 1L,
-      graft.engine.Manifests.manifestJson(loser))
+    val msg = GraftCommitMessage(loser)
     val ex = intercept[SchemaEvolutionConflict] {
       GraftCommits.publish(confKv, d, truncate = false, Array(msg))
     }

@@ -149,8 +149,7 @@ class SnapshotSpec extends AnyFunSuite {
     val a = Manifests.readCommittedAt(conf, d, 0L).head
     // simulate a replace that crashed before its file deletes: commit an
     // index without A, remove A's commit marker, leave A's block behind
-    Manifests.commitIndex(conf, d, old =>
-      old.filterNot(j => Manifests.parse(j).name == a.name))
+    Manifests.commitIndex(conf, d, old => old.filterNot(_.name == a.name))
     val fs = ContainerIO.fs(d, conf)
     fs.delete(new org.apache.hadoop.fs.Path(
       Manifests.manifestPath(d, a.name)), false)
