@@ -682,6 +682,12 @@ object Manifests {
     */
   val chunkLoadCounter = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Observability seam: per-process count of committed-snapshot reads
+    * ([[readCommitted]], [[readCommittedAt]]) — the planning tests
+    * assert how many times one query or write reads the index.
+    */
+  val indexReadCounter = new java.util.concurrent.atomic.AtomicLong()
+
   /** Highest LIVE committed index snapshot: (version, manifests).
     * Superseded versions are TOMBSTONED (truncated to zero bytes, see
     * [[commitIndex]]) — a tombstone at the top of a stale listing, a
@@ -898,11 +904,13 @@ object Manifests {
     * index snapshot exists (highest version wins), else a `manifests/`
     * listing + per-file reads (mid-encode resume, disaster recovery).
     */
-  def readCommitted(conf: Configuration, tableDir: String): Seq[TableManifest] =
+  def readCommitted(conf: Configuration, tableDir: String): Seq[TableManifest] = {
+    indexReadCounter.incrementAndGet()
     readIndexSnapshot(conf, tableDir) match {
       case Some((_, ms)) => ms
       case None => normalizeFallback(listedManifests(conf, tableDir))
     }
+  }
 
   // -------------------------------------------------------- time travel
 
@@ -913,6 +921,7 @@ object Manifests {
     */
   def readCommittedAt(conf: Configuration, tableDir: String,
                       version: Long): Seq[TableManifest] = {
+    indexReadCounter.incrementAndGet()
     val name = versionedIndexName(version)
     val available = versionedIndexes(conf, tableDir)
     if (!available.exists(_._1 == version))

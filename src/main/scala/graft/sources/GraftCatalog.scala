@@ -36,10 +36,7 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog {
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
     if (namespace.sameElements(System) || namespace.isEmpty)
-      Array(Identifier.of(System, "compact"), Identifier.of(System, "vacuum"),
-        Identifier.of(System, "rename_column"), Identifier.of(System, "delete"),
-        Identifier.of(System, "expire_snapshots"),
-        Identifier.of(System, "drop_column"), Identifier.of(System, "update"))
+      GraftCatalog.Procedures.map(p => Identifier.of(System, p.name())).toArray
     else Array.empty
 
   override def loadProcedure(ident: Identifier): UnboundProcedure = {
@@ -47,30 +44,27 @@ class GraftCatalog extends CatalogPlugin with ProcedureCatalog {
       throw new RuntimeException(
         s"graft catalog has no namespace ${ident.namespace.mkString(".")}; " +
           "procedures live under `system`")
-    ident.name.toLowerCase match {
-      case "compact" => GraftCatalog.CompactProcedure
-      case "vacuum" => GraftCatalog.VacuumProcedure
-      case "rename_column" => GraftCatalog.RenameColumnProcedure
-      case "delete" => GraftCatalog.DeleteProcedure
-      case "expire_snapshots" => GraftCatalog.ExpireSnapshotsProcedure
-      case "drop_column" => GraftCatalog.DropColumnProcedure
-      case "update" => GraftCatalog.UpdateProcedure
-      case other => throw new RuntimeException(
-        s"unknown graft procedure $other; have: compact, vacuum, " +
-          "rename_column, delete, expire_snapshots, drop_column, update")
-    }
+    val n = ident.name.toLowerCase
+    GraftCatalog.Procedures.find(_.name() == n).getOrElse(
+      throw new RuntimeException(s"unknown graft procedure $n; have: " +
+        GraftCatalog.Procedures.map(_.name()).mkString(", ")))
   }
 }
 
 object GraftCatalog {
 
-  private def in(name: String, dt: DataType, default: String = null,
-                 comment: String = null): ProcedureParameter = {
+  private def param(name: String, dt: DataType, default: String = null,
+                    comment: String = null): ProcedureParameter = {
     var b = ProcedureParameter.in(name, dt)
     if (default != null) b = b.defaultValue(default)
     if (comment != null) b = b.comment(comment)
     b.build()
   }
+
+  private def field(name: String, dt: DataType): StructField =
+    StructField(name, dt, nullable = false)
+
+  private def str(r: InternalRow, i: Int): String = r.getUTF8String(i).toString
 
   /** One-row driver-side result relation for a procedure's report. */
   private final case class Report(schema: StructType, row: Array[Any])
@@ -80,210 +74,132 @@ object GraftCatalog {
       Array(new GenericInternalRow(row))
   }
 
-  private def one(scan: Scan): java.util.Iterator[Scan] =
-    java.util.Collections.singletonList(scan).iterator()
+  /** One procedure definition: `run` calls the [[GraftMaintenance]]
+    * entry point on the driver and returns the report row, one value per
+    * `result` field.
+    */
+  private final class Procedure(name0: String, description0: String,
+                                params: Array[ProcedureParameter],
+                                result: Seq[StructField],
+                                run: InternalRow => Array[Any])
+      extends UnboundProcedure with BoundProcedure {
+    override def name(): String = name0
+    override def description(): String = description0
+    override def bind(inputType: StructType): BoundProcedure = this
+    override def isDeterministic: Boolean = false
+    override def parameters(): Array[ProcedureParameter] = params
+    override def call(input: InternalRow): java.util.Iterator[Scan] =
+      java.util.Collections.singletonList[Scan](
+        Report(StructType(result), run(input))).iterator()
+  }
 
-  object CompactProcedure extends UnboundProcedure with BoundProcedure {
-    override def name(): String = "compact"
-    override def description(): String =
+  /** Every procedure under `system`, in listing order. */
+  private val Procedures: Seq[Procedure] = Seq(
+    new Procedure("compact",
       "Fold small committed containers of a graft table at whole-epoch " +
         "granularity (one OCC commit; concurrent appends survive). " +
-        "dry_run => true reports the fold without performing it."
-    override def bind(inputType: StructType): BoundProcedure = this
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      in("path", StringType, comment = "graft table directory"),
-      in("target_bytes", LongType, default = (128L << 20).toString,
-        comment = "max encoded bytes per compacted container"),
-      in("min_containers", IntegerType, default = "2",
-        comment = "smallest fold worth rewriting"),
-      in("dry_run", BooleanType, default = "false"))
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val (consumed, produced) = GraftMaintenance.compact(
-        SparkSession.active,
-        input.getUTF8String(0).toString,
-        targetBytes = input.getLong(1),
-        minContainers = input.getInt(2),
-        dryRun = input.getBoolean(3))
-      one(Report(
-        StructType(Seq(
-          StructField("containers_consumed", IntegerType, nullable = false),
-          StructField("containers_produced", IntegerType, nullable = false),
-          StructField("dry_run", BooleanType, nullable = false))),
-        Array(consumed, produced, input.getBoolean(3))))
-    }
-  }
-
-  object RenameColumnProcedure extends UnboundProcedure with BoundProcedure {
-    override def name(): String = "rename_column"
-    override def description(): String =
+        "dry_run => true reports the fold without performing it.",
+      Array(
+        param("path", StringType, comment = "graft table directory"),
+        param("target_bytes", LongType, default = (128L << 20).toString,
+          comment = "max encoded bytes per compacted container"),
+        param("min_containers", IntegerType, default = "2",
+          comment = "smallest fold worth rewriting"),
+        param("dry_run", BooleanType, default = "false")),
+      Seq(field("containers_consumed", IntegerType),
+        field("containers_produced", IntegerType),
+        field("dry_run", BooleanType)),
+      r => {
+        val (consumed, produced) = GraftMaintenance.compact(
+          SparkSession.active, str(r, 0), targetBytes = r.getLong(1),
+          minContainers = r.getInt(2), dryRun = r.getBoolean(3))
+        Array(consumed, produced, r.getBoolean(3))
+      }),
+    new Procedure("vacuum",
+      "Delete aged orphan blocks and tmp fragments of a graft table " +
+        "(referenced = index snapshot UNION manifest listing). " +
+        "dry_run => true counts without deleting.",
+      Array(
+        param("path", StringType, comment = "graft table directory"),
+        param("grace_ms", LongType, default = (72L * 60 * 60 * 1000).toString,
+          comment = "minimum age before an unreferenced file is swept"),
+        param("dry_run", BooleanType, default = "false")),
+      Seq(field("files_deleted", IntegerType), field("dry_run", BooleanType)),
+      r => Array(GraftMaintenance.vacuum(SparkSession.active, str(r, 0),
+        graceMs = r.getLong(1), dryRun = r.getBoolean(2)), r.getBoolean(2))),
+    new Procedure("rename_column",
       "Rename a column of a graft table (metadata-only: commits a " +
         "zero-row schema marker; committed containers keep their " +
-        "historical labels and readers translate per container)."
-    override def bind(inputType: StructType): BoundProcedure = this
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      in("path", StringType, comment = "graft table directory"),
-      in("from", StringType, comment = "current column name"),
-      in("to", StringType, comment = "new column name"))
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      GraftMaintenance.renameColumn(
-        SparkSession.active,
-        input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString,
-        input.getUTF8String(2).toString)
-      one(Report(
-        StructType(Seq(
-          StructField("renamed", BooleanType, nullable = false))),
-        Array(true)))
-    }
-  }
-
-  object UpdateProcedure extends UnboundProcedure with BoundProcedure {
-    override def name(): String = "update"
-    override def description(): String =
-      "Copy-on-write row-level UPDATE: rows matching the predicate are " +
-        "rewritten with set_column = set_expr (any deterministic Spark " +
-        "SQL expression over the row's original values, cast to the " +
-        "column's type); only containers that may hold matches rewrite, " +
-        "one OCC swap. Multi-column updates: the Scala API " +
-        "GraftMaintenance.update(spark, path, predicate, Map(...))."
-    override def bind(inputType: StructType): BoundProcedure = this
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      in("path", StringType, comment = "graft table directory"),
-      in("predicate", StringType,
-        comment = "SQL boolean expression; matching rows are updated"),
-      in("set_column", StringType, comment = "column to assign"),
-      in("set_expr", StringType,
-        comment = "SQL expression for the new value"))
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val updated = GraftMaintenance.update(
-        SparkSession.active,
-        input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString,
-        Map(input.getUTF8String(2).toString ->
-          input.getUTF8String(3).toString))
-      one(Report(
-        StructType(Seq(
-          StructField("rows_updated", LongType, nullable = false))),
-        Array(updated)))
-    }
-  }
-
-  object DropColumnProcedure extends UnboundProcedure with BoundProcedure {
-    override def name(): String = "drop_column"
-    override def description(): String =
-      "Drop a column of a graft table (metadata-only: a zero-row schema " +
-        "marker tombstones the POSITION; committed containers keep " +
-        "their data for time travel, readers project it out, appends " +
-        "supply only the visible columns, and the name may later be " +
-        "re-added as a fresh trailing column)."
-    override def bind(inputType: StructType): BoundProcedure = this
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      in("path", StringType, comment = "graft table directory"),
-      in("col", StringType, comment = "current column name to drop"))
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      GraftMaintenance.dropColumn(
-        SparkSession.active,
-        input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString)
-      one(Report(
-        StructType(Seq(
-          StructField("dropped", BooleanType, nullable = false))),
-        Array(true)))
-    }
-  }
-
-  object DeleteProcedure extends UnboundProcedure with BoundProcedure {
-    override def name(): String = "delete"
-    override def description(): String =
+        "historical labels and readers translate per container).",
+      Array(
+        param("path", StringType, comment = "graft table directory"),
+        param("from", StringType, comment = "current column name"),
+        param("to", StringType, comment = "new column name")),
+      Seq(field("renamed", BooleanType)),
+      r => {
+        GraftMaintenance.renameColumn(SparkSession.active, str(r, 0),
+          str(r, 1), str(r, 2))
+        Array(true)
+      }),
+    new Procedure("delete",
       "Copy-on-write row-level DELETE: rewrite exactly the containers " +
         "that may hold rows matching the predicate (any deterministic " +
         "Spark SQL boolean expression), swap under one OCC commit. " +
         "Retained snapshots keep time-traveling to the pre-delete rows " +
-        "until expire_snapshots + vacuum purge them."
-    override def bind(inputType: StructType): BoundProcedure = this
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      in("path", StringType, comment = "graft table directory"),
-      in("predicate", StringType,
-        comment = "SQL boolean expression; matching rows are deleted"))
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val deleted = GraftMaintenance.delete(
-        SparkSession.active,
-        input.getUTF8String(0).toString,
-        input.getUTF8String(1).toString)
-      one(Report(
-        StructType(Seq(
-          StructField("rows_deleted", LongType, nullable = false))),
-        Array(deleted)))
-    }
-  }
-
-  object ExpireSnapshotsProcedure extends UnboundProcedure with BoundProcedure {
-    override def name(): String = "expire_snapshots"
-    override def description(): String =
+        "until expire_snapshots + vacuum purge them.",
+      Array(
+        param("path", StringType, comment = "graft table directory"),
+        param("predicate", StringType,
+          comment = "SQL boolean expression; matching rows are deleted")),
+      Seq(field("rows_deleted", LongType)),
+      r => Array(GraftMaintenance.delete(SparkSession.active, str(r, 0),
+        str(r, 1)))),
+    new Procedure("expire_snapshots",
       "Expire retained time-travel snapshots now: keep the newest " +
         "retain_last content-bearing versions (the tip counts), " +
         "optionally only versions older than older_than_ms. Expired " +
         "versions fail reads with the controlled 'no longer retained' " +
         "error and stop protecting their blocks from vacuum (the " +
         "delete-purge path). The rolling per-commit window is the " +
-        "graft.snapshot.retention configuration key (default 8)."
-    override def bind(inputType: StructType): BoundProcedure = this
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      in("path", StringType, comment = "graft table directory"),
-      in("retain_last", LongType, default = "2",
-        comment = "newest content-bearing versions to keep (>= 1)"),
-      in("older_than_ms", LongType, default = "0",
-        comment = "only expire versions at least this old"))
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val expired = GraftMaintenance.expireSnapshots(
-        SparkSession.active,
-        input.getUTF8String(0).toString,
-        retainLast = input.getLong(1),
-        olderThanMs = input.getLong(2))
-      one(Report(
-        StructType(Seq(
-          StructField("snapshots_expired", IntegerType, nullable = false))),
-        Array(expired)))
-    }
-  }
-
-  object VacuumProcedure extends UnboundProcedure with BoundProcedure {
-    override def name(): String = "vacuum"
-    override def description(): String =
-      "Delete aged orphan blocks and tmp fragments of a graft table " +
-        "(referenced = index snapshot UNION manifest listing). " +
-        "dry_run => true counts without deleting."
-    override def bind(inputType: StructType): BoundProcedure = this
-    override def isDeterministic: Boolean = false
-    override def parameters(): Array[ProcedureParameter] = Array(
-      in("path", StringType, comment = "graft table directory"),
-      in("grace_ms", LongType, default = (72L * 60 * 60 * 1000).toString,
-        comment = "minimum age before an unreferenced file is swept"),
-      in("dry_run", BooleanType, default = "false"))
-
-    override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val deleted = GraftMaintenance.vacuum(
-        SparkSession.active,
-        input.getUTF8String(0).toString,
-        graceMs = input.getLong(1),
-        dryRun = input.getBoolean(2))
-      one(Report(
-        StructType(Seq(
-          StructField("files_deleted", IntegerType, nullable = false),
-          StructField("dry_run", BooleanType, nullable = false))),
-        Array(deleted, input.getBoolean(2))))
-    }
-  }
+        "graft.snapshot.retention configuration key (default 8).",
+      Array(
+        param("path", StringType, comment = "graft table directory"),
+        param("retain_last", LongType, default = "2",
+          comment = "newest content-bearing versions to keep (>= 1)"),
+        param("older_than_ms", LongType, default = "0",
+          comment = "only expire versions at least this old")),
+      Seq(field("snapshots_expired", IntegerType)),
+      r => Array(GraftMaintenance.expireSnapshots(SparkSession.active,
+        str(r, 0), retainLast = r.getLong(1), olderThanMs = r.getLong(2)))),
+    new Procedure("drop_column",
+      "Drop a column of a graft table (metadata-only: a zero-row schema " +
+        "marker tombstones the POSITION; committed containers keep " +
+        "their data for time travel, readers project it out, appends " +
+        "supply only the visible columns, and the name may later be " +
+        "re-added as a fresh trailing column).",
+      Array(
+        param("path", StringType, comment = "graft table directory"),
+        param("col", StringType, comment = "current column name to drop")),
+      Seq(field("dropped", BooleanType)),
+      r => {
+        GraftMaintenance.dropColumn(SparkSession.active, str(r, 0), str(r, 1))
+        Array(true)
+      }),
+    new Procedure("update",
+      "Copy-on-write row-level UPDATE: rows matching the predicate are " +
+        "rewritten with set_column = set_expr (any deterministic Spark " +
+        "SQL expression over the row's original values, cast to the " +
+        "column's type); only containers that may hold matches rewrite, " +
+        "one OCC swap. Multi-column updates: the Scala API " +
+        "GraftMaintenance.update(spark, path, predicate, Map(...)).",
+      Array(
+        param("path", StringType, comment = "graft table directory"),
+        param("predicate", StringType,
+          comment = "SQL boolean expression; matching rows are updated"),
+        param("set_column", StringType, comment = "column to assign"),
+        param("set_expr", StringType,
+          comment = "SQL expression for the new value")),
+      Seq(field("rows_updated", LongType)),
+      r => Array(GraftMaintenance.update(SparkSession.active, str(r, 0),
+        str(r, 1), Map(str(r, 2) -> str(r, 3))))))
 }

@@ -54,20 +54,20 @@ import graft.engine.{ChunkStats, ColumnarEngine, ColumnSpec, ContainerFormat, Co
 class GraftDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft"
 
-  /** Table schema from the committed manifests (any long/string mix —
-    * round 5); the engine's fixed [[DerivedRow]] schema only as the
-    * default for empty/absent tables (round 4 hard-coded it for every
-    * table).
+  /** Table schema from the committed manifests ([[TableSnapshot.schema]]);
+    * the engine's fixed [[DerivedRow]] schema only as the default for
+    * empty/absent tables.
     */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     Option(options.get("path"))
-      .flatMap { p =>
+      .map { p =>
         val conf = org.apache.spark.sql.SparkSession.active
           .sparkContext.hadoopConfiguration
         // a time-traveled read infers the PINNED snapshot's schema — an
         // older snapshot may predate added columns (add-only evolution)
-        GraftDataSource.inferFrom(p, conf,
+        val snap = new TableSnapshot(p, ContainerIO.confSnapshot(conf),
           GraftDataSource.asOfVersion(options, conf, p))
+        if (snap.exists) snap.schema else GraftDataSource.schema
       }
       .getOrElse(GraftDataSource.schema)
 
@@ -171,57 +171,6 @@ object GraftDataSource {
       val latest = labelSources.maxBy(_._2)._3(i)
       covering.head._3(i).copy(name = latest.name, dropped = latest.dropped)
     }
-  }
-
-  /** Committed schema of an existing table, from its manifests. With
-    * add-only schema EVOLUTION (round 7) manifests may carry different
-    * widths: every committed schema must be a PREFIX of the widest one
-    * (appends may only add trailing nullable columns), and the widest
-    * is the table's schema — containers written before a column was
-    * added read back all-NULL for it. ANY parse failure surfaces as
-    * IllegalArgumentException — this runs inside Spark's ANALYSIS
-    * phase, where a raw NPE/parser exception would be wrapped as an
-    * opaque internal error (fuzz contract).
-    */
-  private[sources] def inferFrom(path: String,
-      conf: org.apache.hadoop.conf.Configuration = null,
-      asOf: Option[Long] = None): Option[StructType] = {
-    val c = if (conf != null) conf
-      else org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    try {
-      val ms = asOf.fold(Manifests.readCommitted(c, path))(
-        Manifests.readCommittedAt(c, path, _))
-      if (ms.isEmpty) None
-      else {
-        // dropped positions (round 9) stay in the positional chain but
-        // are projected out of the visible schema; the duplicate-name
-        // guard applies to visible labels only (a re-added column may
-        // legitimately reuse a dropped one's name at a new position)
-        val visible = currentSpecsOf(ms).filterNot(_.dropped)
-        require(visible.map(_.name).distinct.size == visible.size,
-          s"graft table $path resolves duplicate current column names: " +
-            visible.map(_.name).mkString(","))
-        require(visible.nonEmpty,
-          s"graft table $path has no visible columns (all dropped)")
-        Some(schemaOf(visible))
-      }
-    } catch {
-      case e: IllegalArgumentException => throw e
-      case scala.util.control.NonFatal(e) => throw new IllegalArgumentException(
-        s"corrupt graft table metadata under $path", e)
-    }
-  }
-
-  /** The table's FULL positional spec chain — dropped positions included
-    * (round 9). None = no committed table yet.
-    */
-  private[sources] def fullSpecsFrom(path: String,
-      conf: org.apache.hadoop.conf.Configuration = null)
-      : Option[Seq[graft.engine.ColumnSpec]] = {
-    val c = if (conf != null) conf
-      else org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    val ms = Manifests.readCommitted(c, path)
-    if (ms.isEmpty) None else Some(currentSpecsOf(ms))
   }
 
   /** The table's column layout: name -> [[graft.engine.ColumnSpec]]
@@ -593,48 +542,6 @@ object GraftDataSource {
       case other => other
     }
 
-  /** Per-container rename map CURRENT name -> STORED name for the
-    * positions this container covers (empty in the common no-renames
-    * case, which keeps the fast paths allocation-free). `tableCols` is
-    * the table's current schema names in positional order; Nil disables
-    * translation (callers that address columns by stored name).
-    */
-  private[sources] def storedNamesOf(m: TableManifest,
-      tableCols: Seq[String]): Map[String, String] =
-    if (tableCols.isEmpty) Map.empty
-    else {
-      val stored = specsOfManifest(m).map(_.name)
-      tableCols.zip(stored).filter(p => p._1 != p._2).toMap
-    }
-
-  /** The filters THIS container may be admitted against, translated to
-    * its stored (historical) labels — or None when a non-IsNull filter
-    * references a column the container does not cover (it predates the
-    * column, add-only evolution: all rows NULL there, so the filter
-    * matches nothing and the container is skipped whole).
-    *
-    * IsNull on an uncovered column is trivially TRUE in that container
-    * and MUST be dropped BEFORE name translation: after a rename X->Y
-    * followed by a new column reusing the name X, the untranslated
-    * current name "X" collides with the container's STORED pre-rename
-    * label "X" at another position, and evaluating IsNull("X") against
-    * THAT column's null counts (explicit 0) would prune a container
-    * whose rows ALL match the current X IS NULL (round-8 advice, high).
-    */
-  private[sources] def containerFilters(m: TableManifest,
-      filters: Seq[Filter], tableCols: Seq[String]): Option[Seq[Filter]] = {
-    val present: Set[String] =
-      if (tableCols.isEmpty) m.schemaCols.map(_._1).toSet
-      else tableCols.take(m.schemaCols.size).toSet
-    val (covered, uncovered) = filters.partition(_.references.forall(present))
-    if (uncovered.exists(!_.isInstanceOf[IsNull])) None
-    else {
-      val toStored = storedNamesOf(m, tableCols)
-      Some(if (toStored.isEmpty) covered
-           else covered.map(renameRefs(_, toStored)))
-    }
-  }
-
   /** Container-level admission against the index SUMMARY (round 8,
     * two-level metadata): the manifest's whole-partition zone maps plus
     * the [[graft.engine.ManifestEnvelope]] fold of its chunk stats.
@@ -670,73 +577,52 @@ object GraftDataSource {
       m.env.nullCounts.get, m.env.strDicts, m.env.strRanges, filters)
   }
 
-  /** Chunk-granular input partitions for a set of committed manifests:
-    * admitted chunks grouped into runs of ≤ maxSplitBytes (shared by the
-    * batch scan and the micro-batch stream).
+  /** Chunk-granular input partitions for some of `snap`'s manifests,
+    * seen through the query's chain names `cols`: admitted chunks grouped
+    * into runs of ≤ maxSplitBytes (shared by the batch scan and the
+    * micro-batch stream).
     *
     * Two-level planning (round 8): containers are admitted against the
     * index summary FIRST ([[admitManifest]]); only survivors have their
-    * per-chunk stats hydrated via `hydrate` (one commit-marker read per
-    * admitted container) — index bytes parsed per plan are bounded by
-    * the table's container count, chunk-stat bytes by ADMITTED
-    * containers.
+    * per-chunk stats hydrated ([[TableSnapshot.hydrate]], one
+    * commit-marker read per admitted container) — index bytes parsed per
+    * plan are bounded by the table's container count, chunk-stat bytes by
+    * ADMITTED containers.
     */
-  private[sources] def planPartitions(path: String,
-      manifests: Seq[TableManifest], filters: Array[Filter],
-      maxSplitBytes: Long,
-      neededCols: Set[String] = Set.empty,
-      hydrate: TableManifest => TableManifest = m => {
-        require(!m.chunksElided,
-          "planner bug: an index-elided manifest reached planPartitions " +
-            "without a hydrator")
-        m
-      },
-      tableCols: Seq[String] = Nil): Array[InputPartition] = {
+  private[sources] def planPartitions(snap: TableSnapshot,
+      manifests: Seq[TableManifest], cols: Seq[String],
+      filters: Array[Filter], maxSplitBytes: Long,
+      neededCols: Set[String]): Array[InputPartition] = {
     val parts = Array.newBuilder[InputPartition]
     manifests.filterNot(_.schemaMarker).sortBy(_.name).foreach { m =>
-      val file = m.blockFile(path)
-      // rename support (round 8): a container written before a rename
-      // stores blocks/stats under its HISTORICAL labels — admission and
-      // the reader translate between the CURRENT names the query uses
-      // and this container's stored names, positionally
-      val toStored = storedNamesOf(m, tableCols)
-      // add-only schema evolution: a container written before a column
-      // was added has no block for it — its rows are all-NULL there. A
-      // value predicate or IsNotNull on such a column matches NOTHING in
-      // this container (SQL three-valued logic): containerFilters
-      // returns None and the container is skipped whole. IsNull on it is
-      // trivially TRUE — dropped from the admission set BEFORE name
-      // translation (rename + name-reuse collision, see containerFilters)
-      // and dropped reader-side by effectiveFilters. `present` is in
-      // CURRENT-name space (what neededCols/filters use).
-      val present: Set[String] =
-        if (tableCols.isEmpty) m.schemaCols.map(_._1).toSet
-        else tableCols.take(m.schemaCols.size).toSet
-      val absent = neededCols -- present
-      val admission = containerFilters(m, filters.toSeq, tableCols)
+      val file = m.blockFile(snap.path)
+      // the reader translates between the query's CURRENT names and this
+      // container's stored labels (rename support), and null-fills the
+      // needed columns the container predates (add-only evolution: a
+      // value filter on one already skipped the container whole, IsNull
+      // on one is dropped reader-side by effectiveFilters)
+      val v = snap.view(m, cols)
+      val absent = neededCols.filterNot(v.covered)
+      val admission = v.admission(filters.toSeq)
       if (admission.exists(admitManifest(m, _))) {
         val mFilters = admission.get
-        val hm = if (m.chunksElided) hydrate(m) else m
-        val digestCur = toStored.collectFirst {
-          case (cur, st) if st == m.digestCol => cur
-        }.getOrElse(m.digestCol)
-        val admitted = hm.chunkIndex
+        val admitted = snap.hydrate(m).chunkIndex
           .filter(admitChunk(_, mFilters))
           .map(c => ChunkSpec(c.offset, c.length, c.rows, c.blockCrcs))
+        def emit(run: List[ChunkSpec]): Unit =
+          parts += GraftInputPartition(file, run.reverse, v.digestCol,
+            absent, v.toStored)
         var run = List.empty[ChunkSpec]
         var runBytes = 0L
         admitted.foreach { c =>
           if (run.nonEmpty && runBytes + c.length > maxSplitBytes) {
-            parts += GraftInputPartition(file, run.reverse, digestCur,
-              absent, toStored)
+            emit(run)
             run = Nil; runBytes = 0L
           }
           run = c :: run
           runBytes += c.length
         }
-        if (run.nonEmpty)
-          parts += GraftInputPartition(file, run.reverse, digestCur,
-            absent, toStored)
+        if (run.nonEmpty) emit(run)
       }
     }
     parts.result()
@@ -839,62 +725,22 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
     case _ => None
   }
 
-  /** Committed-manifest snapshot for aggregate-pushdown PROOFS:
-    * COUNT(col) of a NULLABLE column is answerable only when every
-    * chunk carries a null-count entry for it (a manifest without one
-    * would silently undercount nulls — reject instead), and string MIN/MAX
-    * only when every chunk carries an all-ASCII range for it (the
-    * collation-agreement proof). One driver-side metadata read, same
-    * cost class as the schema inference that already happened; lazy at
-    * the BUILDER level so COUNT(*)/numeric-MIN/MAX-only pushdowns never
-    * pay it and the supportCompletePushDown + pushAggregation pair
-    * reads it once.
+  /** The table snapshot this query plans against, read ONCE (at the
+    * snapshot version `versionAsOf`/`timestampAsOf` pin, if any): the
+    * aggregate-pushdown proofs, the scan's statistics, runtime filters
+    * and partition planning, or the aggregate scan's fold all use it.
+    * A failed read fails planning with the snapshot's controlled error.
     */
-  /** Snapshot version pinned by `versionAsOf`/`timestampAsOf` read
-    * options (time travel, round 8); None = the live table.
-    */
-  private lazy val pinned: Option[Long] = GraftDataSource.asOfVersion(
-    options,
-    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration,
-    path)
-
-  private lazy val committedForStats: Option[Seq[graft.engine.TableManifest]] =
-    try {
-      val conf = ContainerIO.confFrom(ContainerIO.confSnapshot(
-        org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration))
-      Some(pinned.fold(Manifests.readCommitted(conf, path))(
-        Manifests.readCommittedAt(conf, path, _)))
-    }
-    catch { case scala.util.control.NonFatal(_) => None }
-
-  /** The table's FULL positional name chain: the query's (visible)
-    * field names at their full positions, with position-DROPPED columns
-    * (round 9) keeping their tombstone labels in between — what every
-    * positional zip between current and stored names must use. Without
-    * drops this is exactly `tableSchema.fieldNames` (the fast path).
-    */
-  private lazy val chainNames: Seq[String] = {
-    val visNames = tableSchema.fieldNames.toSeq
-    committedForStats match {
-      case Some(ms) if ms.nonEmpty =>
-        val chain = GraftDataSource.currentSpecsOf(ms)
-        if (!chain.exists(_.dropped)) visNames
-        else {
-          val it = visNames.iterator
-          chain.map(s =>
-            if (s.dropped) s.name
-            else if (it.hasNext) it.next()
-            else s.name) ++ it
-        }
-      case _ => visNames
-    }
+  private lazy val snap: TableSnapshot = {
+    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
+    new TableSnapshot(path, ContainerIO.confSnapshot(conf),
+      GraftDataSource.asOfVersion(options, conf, path))
   }
 
-  /** A column's STORED (historical) label inside one manifest — the
-    * key its stats use (rename support).
+  /** The query's chain names ([[TableSnapshot.chainOf]]): its load-time
+    * visible names on the snapshot's positional chain.
     */
-  private def storedNameIn(m: graft.engine.TableManifest, c: String): String =
-    GraftDataSource.storedNamesOf(m, chainNames).getOrElse(c, c)
+  private lazy val cols: Seq[String] = snap.chainOf(tableSchema.fieldNames.toSeq)
 
   /** COUNT(*)/COUNT(col)/MIN/MAX over integer columns, ungrouped and
     * unfiltered, translate to manifest lookups (row counts, per-chunk
@@ -912,22 +758,21 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
           // DuckDB collation provably agree. Anything else stays in
           // Spark.
           (Kinds(s.kind).stored == Stored.Utf8 && !s.nullable &&
-            committedForStats.exists(_.forall(m =>
+            snap.all.forall(m =>
               // zero-row tombstones (delete) contribute no values
               m.schemaMarker || m.rows == 0 ||
-                m.env.strRanges.contains(storedNameIn(m, c)))))
+                m.env.strRanges.contains(snap.view(m, cols).stored(c))))
       }
     def countable(c: String): Option[CountAgg] =
       tableSchema.fields.find(_.name == c).flatMap { f =>
         if (!f.nullable) Some(CountAgg(c, nullable = false))
-        else committedForStats.filter(_.forall(m =>
-          m.schemaMarker || m.rows == 0 ||
-          // a manifest that PREDATES the column (add-only evolution)
-          // is all-NULL for it — provable by POSITION (names are labels;
-          // the FULL chain keeps dropped positions in the count)
-          chainNames.indexOf(c) >= m.schemaCols.size ||
-            m.env.nullCounts.contains(storedNameIn(m, c))))
-          .map(_ => CountAgg(c, nullable = true))
+        else Option.when(snap.all.forall { m =>
+          val v = snap.view(m, cols)
+          // a manifest that PREDATES the column (add-only evolution) is
+          // all-NULL for it — provable by POSITION (names are labels)
+          m.schemaMarker || m.rows == 0 || v.predates(c) ||
+            m.env.nullCounts.contains(v.stored(c))
+        })(CountAgg(c, nullable = true))
       }
     val specs = agg.aggregateExpressions().toSeq.map {
       case _: CountStar => Some(CountStarAgg)
@@ -973,28 +818,26 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan = {
-    val confKv = ContainerIO.confSnapshot(
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
     val maxSplit = Option(options.get("maxSplitBytes")).map(_.toLong)
       .getOrElse(GraftDataSource.DefaultMaxSplitBytes)
     val verify = Option(options.get("verifyContent")).forall(_.toBoolean)
     aggs match {
-      case Some(specs) => new GraftAggScan(path, specs, confKv, pinned,
-        chainNames)
-      case None => new GraftScan(path, required, pushed, confKv, limit,
-        maxSplit, verify, layout, pinned, chainNames)
+      case Some(specs) => new GraftAggScan(snap, cols, specs)
+      case None => new GraftScan(snap, tableSchema.fieldNames.toSeq,
+        required, pushed, limit, maxSplit, verify, layout)
     }
   }
 }
 
 /** Completely-pushed aggregate scan: the answer comes from the manifest
   * index (exact row counts and per-partition zone maps), so the query
-  * never opens a container. Emits exactly one row.
+  * never opens a container. Emits exactly one row. It answers from its
+  * PLANNING snapshot — exactly the manifests the builder checked its
+  * proofs on — so an append landing between planning and execution is
+  * simply not part of this query's answer (snapshot isolation).
   */
-class GraftAggScan(path: String, specs: Seq[GraftAgg],
-                   confKv: Map[String, String],
-                   asOf: Option[Long] = None,
-                   tableCols: Seq[String] = Nil) extends Scan with Batch {
+class GraftAggScan private[sources] (snap: TableSnapshot, cols: Seq[String],
+                                     specs: Seq[GraftAgg]) extends Scan with Batch {
   override def readSchema(): StructType = StructType(specs.map {
     case CountStarAgg => StructField("count_star", LongType, nullable = false)
     case MinAgg(s) => StructField(s"min_${s.name}", s.dataType, nullable = true)
@@ -1003,19 +846,16 @@ class GraftAggScan(path: String, specs: Seq[GraftAgg],
   })
   override def toBatch: Batch = this
   override def description(): String =
-    s"graft $path, PushedAggregates: [${specs.mkString(", ")}] (manifest-answered)"
+    s"graft ${snap.path}, PushedAggregates: [${specs.mkString(", ")}] (manifest-answered)"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = ContainerIO.confFrom(confKv)
     var rows = 0L
     var mins = Map.empty[String, Long]
     var maxs = Map.empty[String, Long]
     // COUNT(col) accumulators: rows minus the chunk null counts. A
     // non-nullable CountAgg never reads counts (zero by schema proof); a
     // nullable one was admitted only after translate() verified every
-    // committed manifest carries entries, so getOrElse(0) here can only
-    // fire on a manifest appended SINCE planning — written by this
-    // library, which always records entries for nullable columns.
+    // manifest of this snapshot carries entries.
     val countCols = specs.collect { case CountAgg(c, n) => (c, n) }
     var nonNull = Map.empty[String, Long]
     // string MIN/MAX fold the per-chunk all-ASCII ranges (translate()
@@ -1027,22 +867,12 @@ class GraftAggScan(path: String, specs: Seq[GraftAgg],
     }.toSet
     var sMins = Map.empty[String, String]
     var sMaxs = Map.empty[String, String]
-    // a pinned (time-travel) read folds an immutable snapshot — the
-    // concurrent-append race guards below can never fire for it
-    asOf.fold(Manifests.readCommitted(conf, path))(
-      Manifests.readCommittedAt(conf, path, _))
-      .filterNot(_.schemaMarker).foreach { m =>
+    snap.all.filterNot(_.schemaMarker).foreach { m =>
       rows += m.rows
       // rename support: this container's stats are keyed by its stored
       // (historical) labels; fold them under the CURRENT names
-      val toStored = GraftDataSource.storedNamesOf(m, tableCols)
-      val toCur = toStored.map(_.swap)
-      def stored(c: String): String = toStored.getOrElse(c, c)
-      // a container PREDATES a column iff the column's table POSITION
-      // is past the container's width (names are labels, not identity)
-      def predates(c: String): Boolean =
-        if (tableCols.isEmpty) !m.schemaCols.exists(_._1 == c)
-        else tableCols.indexOf(c) >= m.schemaCols.size
+      val v = snap.view(m, cols)
+      val toCur = v.toStored.map(_.swap)
       m.longRanges.foreach { case (c0, (lo, hi)) =>
         val c = toCur.getOrElse(c0, c0)
         mins = mins.updated(c, mins.get(c).fold(lo)(math.min(_, lo)))
@@ -1050,41 +880,25 @@ class GraftAggScan(path: String, specs: Seq[GraftAgg],
       }
       countCols.foreach { case (c, nullable) =>
         val nulls =
-          if (!nullable) 0L
-          else if (predates(c))
-            m.rows // container predates the column: all-NULL for it
-          // translate() proved every committed manifest carries entries —
-          // but this is a FRESH read, and a manifest appended since
-          // planning could legally lack one (a non-current writer).
-          // Silently treating it as zero nulls would OVERCOUNT: fail
-          // retriable-loud, mirroring the string MIN/MAX guard below.
-          else m.env.nullCounts.getOrElse(stored(c),
-            if (m.rows == 0) 0L
-            else throw new IllegalStateException(
-              s"graft COUNT snapshot changed: column '$c' gained a " +
-                s"manifest without null counts since planning (concurrent " +
-                s"append to $path); retry the query"))
+          if (!nullable || m.rows == 0) 0L
+          else if (v.predates(c)) m.rows // all-NULL for a predated column
+          else {
+            val n = m.env.nullCounts.get(v.stored(c))
+            require(n.isDefined, s"planner bug: COUNT($c) pushed over " +
+              s"${m.name}, which records no null counts for it")
+            n.get
+          }
         nonNull = nonNull.updated(c, nonNull.getOrElse(c, 0L) + m.rows - nulls)
       }
-      // translate() proved every committed container's envelope carries
-      // a range for these columns — but this is a FRESH manifest read,
-      // and an append landing between planning and here can legally add
-      // a non-ASCII container with no range. Silently excluding its
-      // values would be a wrong MIN/MAX: fail retriable-loud instead
-      // (the re-planned query sees the new container and keeps the
-      // aggregate in Spark).
       if (strAggCols.nonEmpty && m.rows > 0) strAggCols.foreach { c =>
-        m.env.strRanges.get(stored(c)) match {
-          case None => throw new IllegalStateException(
-            s"graft string aggregate snapshot changed: column '$c' gained " +
-              s"a container without an ASCII range since planning " +
-              s"(concurrent append to $path); retry the query")
-          case Some((lo, hi)) =>
-            sMins = sMins.updated(c,
-              sMins.get(c).filter(_.compareTo(lo) <= 0).getOrElse(lo))
-            sMaxs = sMaxs.updated(c,
-              sMaxs.get(c).filter(_.compareTo(hi) >= 0).getOrElse(hi))
-        }
+        val r = m.env.strRanges.get(v.stored(c))
+        require(r.isDefined, s"planner bug: string MIN/MAX($c) pushed over " +
+          s"${m.name}, which records no ASCII range for it")
+        val (lo, hi) = r.get
+        sMins = sMins.updated(c,
+          sMins.get(c).filter(_.compareTo(lo) <= 0).getOrElse(lo))
+        sMaxs = sMaxs.updated(c,
+          sMaxs.get(c).filter(_.compareTo(hi) >= 0).getOrElse(hi))
       }
     }
     // the one output row, in Spark's internal representation
@@ -1133,15 +947,19 @@ case class GraftInputPartition(file: String, chunks: Seq[ChunkSpec],
                                renames: Map[String, String] = Map.empty)
     extends InputPartition
 
-class GraftScan(path: String, required: StructType,
-                initialFilters: Array[Filter],
-                confKv: Map[String, String], limit: Int,
-                maxSplitBytes: Long, verifyContent: Boolean,
-                layout: Map[String, ColumnSpec],
-                asOf: Option[Long] = None,
-                tableCols: Seq[String] = Nil)
+/** The batch scan over the builder's [[TableSnapshot]]: statistics,
+  * runtime-filter admission and input-partition planning all read the
+  * same manifests (filters only affect chunk admission, never the
+  * manifest set). `visNames` are the query's load-time visible names.
+  */
+class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
+                                  required: StructType,
+                                  initialFilters: Array[Filter], limit: Int,
+                                  maxSplitBytes: Long, verifyContent: Boolean,
+                                  layout: Map[String, ColumnSpec])
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
+  private val cols = snap.chainOf(visNames)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
@@ -1171,34 +989,6 @@ class GraftScan(path: String, required: StructType,
     filters = filters ++ accepted
   }
 
-  /** Parsed committed manifests, read ONCE per scan: statistics,
-    * runtime-filter admission, and input-partition planning all reuse
-    * this snapshot (filters only affect chunk admission, never the
-    * manifest set) — at 10^5 partitions the index parse is the driver
-    * cost worth not paying three times per query.
-    */
-  private lazy val committedSnapshot: Seq[TableManifest] = {
-    val conf = ContainerIO.confFrom(confKv)
-    asOf.fold(Manifests.readCommitted(conf, path))(
-      Manifests.readCommittedAt(conf, path, _))
-      .filter(_.rows > 0)
-  }
-
-  private def committed(): Seq[TableManifest] = committedSnapshot
-
-  /** Per-scan hydration cache (two-level metadata): an index-elided
-    * manifest's chunk detail is read from its commit marker AT MOST
-    * once per scan, and only for containers the summary-level admission
-    * let through — the planning cost scales with admitted containers,
-    * never with table size.
-    */
-  private val hydrated =
-    new java.util.concurrent.ConcurrentHashMap[String, TableManifest]()
-  private def hydrate(m: TableManifest): TableManifest =
-    if (!m.chunksElided) m
-    else hydrated.computeIfAbsent(m.name, _ =>
-      Manifests.loadChunkIndex(ContainerIO.confFrom(confKv), path, m))
-
   /** Manifest-derived table statistics, so Catalyst/AQE can size joins
     * (e.g. auto-broadcast a small graft table) without scanning it.
     * Conservative: raw (decoded) bytes, prorated over ADMITTED chunks —
@@ -1208,17 +998,16 @@ class GraftScan(path: String, required: StructType,
     var rows = 0L
     var bytes = 0L
     var any = false
-    committed().filterNot(_.schemaMarker).foreach { m =>
+    snap.committed.foreach { m =>
       // index-elided manifests estimate at SUMMARY granularity (whole
       // container in or out) rather than paying a chunk-detail read per
       // container just for statistics — a conservative overestimate
       // under selective filters, refined to chunk granularity by the
-      // actual planning that follows. Filters translate to the
-      // container's stored names (rename support); containerFilters
-      // also drops IsNull on columns the container predates and zeroes
-      // containers a value filter on such a column can't match.
+      // actual planning that follows. The container's admission set
+      // ([[ContainerView.admission]]) zeroes containers a value filter
+      // on a predated column can't match.
       val admittedRows =
-        GraftDataSource.containerFilters(m, filters.toSeq, tableCols) match {
+        snap.view(m, cols).admission(filters.toSeq) match {
           case None => 0L
           case Some(mFilters) =>
             if (m.chunksElided)
@@ -1243,7 +1032,7 @@ class GraftScan(path: String, required: StructType,
   }
 
   override def description(): String =
-    s"graft $path, ReadSchema: ${required.fieldNames.mkString(",")}, " +
+    s"graft ${snap.path}, ReadSchema: ${required.fieldNames.mkString(",")}, " +
       s"PushedFilters: [${filters.mkString(", ")}]" +
       (if (limit != Int.MaxValue) s", PushedLimit: $limit" else "")
 
@@ -1255,12 +1044,11 @@ class GraftScan(path: String, required: StructType,
     * commit marker on the read side too).
     */
   override def planInputPartitions(): Array[InputPartition] =
-    GraftDataSource.planPartitions(path, committed(), filters, maxSplitBytes,
-      required.fieldNames.toSet ++ filters.flatMap(_.references), hydrate,
-      tableCols)
+    GraftDataSource.planPartitions(snap, snap.committed, cols, filters,
+      maxSplitBytes, required.fieldNames.toSet ++ filters.flatMap(_.references))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, filters, layout, confKv, limit,
+    new GraftReaderFactory(required, filters, layout, snap.confKv, limit,
       verifyContent)
 
   /** `readStream.format("graft")` — micro-batch TAILING of this table:
@@ -1271,11 +1059,11 @@ class GraftScan(path: String, required: StructType,
     */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    require(asOf.isEmpty,
+    require(snap.asOf.isEmpty,
       "graft time travel (versionAsOf/timestampAsOf) is batch-only; a " +
         "stream tails the live table")
-    new GraftMicroBatchStream(path, checkpointLocation, required, filters,
-      confKv, maxSplitBytes, verifyContent, layout, tableCols)
+    new GraftMicroBatchStream(snap.path, checkpointLocation, required,
+      filters, snap.confKv, maxSplitBytes, verifyContent, layout, visNames)
   }
 }
 
@@ -1458,7 +1246,9 @@ object GraftStreamOffset {
   * so `planInputPartitions(start, end)` (including replays after a
   * restart) resolves any (start, end] range from the durable log, while
   * the offsets Spark checkpoints stay O(1). Batches plan chunk-granular
-  * with the scan's pushed filters and pruned columns. Append-mostly
+  * with the scan's pushed filters and pruned columns, against one
+  * [[TableSnapshot]] per trigger that lays the query's load-time visible
+  * names `visNames` on the trigger's chain. Append-mostly
   * semantics: an epoch REPLAY or an overwrite re-commits new names,
   * which the tail emits as new data (the `FileStreamSource` contract on
   * rewrites).
@@ -1479,7 +1269,7 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
                             confKv: Map[String, String],
                             maxSplitBytes: Long, verifyContent: Boolean,
                             layout: Map[String, ColumnSpec],
-                            tableCols: Seq[String] = Nil)
+                            visNames: Seq[String] = Nil)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
@@ -1527,16 +1317,15 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
     }
   }
 
-  // one manifest-index read+parse per trigger: latestOffset refreshes,
-  // the same trigger's planInputPartitions reuses (replaced manifests
-  // since the refresh just stop resolving — same semantics as a fresh
-  // read); a restart-replay with no prior latestOffset reads directly
-  @volatile private var lastCommitted: Seq[TableManifest] = null
+  // one table snapshot per trigger: latestOffset reads it, the same
+  // trigger's planInputPartitions reuses it (replaced manifests since the
+  // read just stop resolving — same semantics as a fresh read); a
+  // restart-replay with no prior latestOffset reads directly
+  @volatile private var lastSnap: TableSnapshot = null
 
-  private def committed(): Seq[TableManifest] = {
-    val ms = Manifests.readCommitted(conf, path).filter(_.rows > 0)
-    lastCommitted = ms
-    ms
+  private def snapshot(): TableSnapshot = {
+    lastSnap = new TableSnapshot(path, confKv)
+    lastSnap
   }
 
   override def initialOffset(): Offset = GraftStreamOffset(-1L)
@@ -1547,7 +1336,7 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
   override def latestOffset(): Offset = {
     refreshLog()
     val seenAll = compactedNames ++ seenLog.values.flatten
-    val fresh = committed().map(_.name).filterNot(seenAll).sorted
+    val fresh = snapshot().committed.map(_.name).filterNot(seenAll).sorted
     if (fresh.isEmpty) GraftStreamOffset(maxBatch)
     else {
       val next = maxBatch + 1
@@ -1587,7 +1376,8 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
     }.flatten.toSet
     // logged-but-since-replaced names (epoch replay, truncate) simply no
     // longer resolve; their replacements arrive as a later batch
-    val ms = Option(lastCommitted).getOrElse(committed())
+    val snap = Option(lastSnap).getOrElse(snapshot())
+    val ms = snap.committed
     val fresh = ms.filter(m => want.contains(m.name))
     val unresolved = want -- fresh.map(_.name)
     // SUBSTITUTION across compaction (round 7): a logged container that
@@ -1646,9 +1436,9 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
           (if (dropped.size > 8) ", …" else "") +
           "; their replacement generations arrive as later batches")
     }
-    GraftDataSource.planPartitions(path, fresh ++ substituted, filters,
-      maxSplitBytes, required.fieldNames.toSet ++ filters.flatMap(_.references),
-      Manifests.loadChunkIndex(conf, path, _), tableCols)
+    GraftDataSource.planPartitions(snap, fresh ++ substituted,
+      snap.chainOf(visNames), filters, maxSplitBytes,
+      required.fieldNames.toSet ++ filters.flatMap(_.references))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1717,9 +1507,13 @@ class GraftWriteBuilder(path: String, info: LogicalWriteInfo)
     // appends adopt the committed nullability — an actual null aimed at
     // a non-nullable table column still fails per value in the encoder
     val specs0 = GraftDataSource.specsOf(in0)
+    // the committed table an append lands on, read once (an overwrite
+    // replaces it and reads nothing)
+    val snap = Option.when(!doTruncate)(new TableSnapshot(path,
+      ContainerIO.confSnapshot(org.apache.spark.sql.SparkSession.active
+        .sparkContext.hadoopConfiguration))).filter(_.exists)
     val in =
-      if (doTruncate) in0
-      else GraftDataSource.inferFrom(path).map { existing =>
+      snap.map(_.schema).map { existing =>
         val tableSpecs = GraftDataSource.specsOf(existing)
         val tPairs = tableSpecs.map(s => (s.name, s.kind))
         val wPairs = specs0.map(s => (s.name, s.kind))
@@ -1781,15 +1575,13 @@ class GraftWriteBuilder(path: String, info: LogicalWriteInfo)
     // dropped positions (field identity is positional) — interleave the
     // visible write specs into the committed full chain. Tables without
     // drops pass Nil (the untouched fast path).
-    val fullCols: Seq[(String, Int)] =
-      if (doTruncate) Nil
-      else GraftDataSource.fullSpecsFrom(path) match {
-        case Some(chain) if chain.exists(_.dropped) =>
-          val it = GraftDataSource.specsOf(in).iterator
-          (chain.map(s => if (s.dropped) s else it.next()) ++ it)
-            .map(s => (s.name, s.packed))
-        case _ => Nil
-      }
+    val fullCols: Seq[(String, Int)] = snap.map(_.chain) match {
+      case Some(chain) if chain.exists(_.dropped) =>
+        val it = GraftDataSource.specsOf(in).iterator
+        (chain.map(s => if (s.dropped) s else it.next()) ++ it)
+          .map(s => (s.name, s.packed))
+      case _ => Nil
+    }
     new GraftWrite(path, doTruncate, info.queryId(), chunkRows, in, sortBy,
       partBy, writeParts, fullCols)
   }

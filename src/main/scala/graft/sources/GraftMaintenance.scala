@@ -17,7 +17,7 @@ import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, D
   * manifest-as-commit-marker discipline of [[GraftCommits.publish]]).
   *
   * Compaction and the row-level mutations (DELETE, UPDATE, UPSERT) are
-  * ONE copy-on-write pipeline: one [[Snapshot]] read, one container
+  * ONE copy-on-write pipeline: one [[TableSnapshot]] read, one container
   * admission ([[admitted]]), one rewrite job ([[rewriteJob]]) streaming
   * containers through [[rewriteBin]], and one commit tail
   * ([[commitTail]] -> [[swapGeneration]]). Each operation supplies only
@@ -99,7 +99,7 @@ object GraftMaintenance {
     require(targetBytes > 0 && minContainers >= 2,
       s"need targetBytes > 0 and minContainers >= 2, " +
         s"got ($targetBytes, $minContainers)")
-    val snap = new Snapshot(path, ContainerIO.confSnapshot(spark))
+    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark))
     // one BIN holds one schema generation: add-only evolution (round 7)
     // means a table may hold containers of different widths. An epoch is
     // always schema-homogeneous (one write job, one schema), so binning
@@ -206,9 +206,9 @@ object GraftMaintenance {
                                     predicate: String,
                                     beforeCommit: () => Unit,
                                     afterStage: () => Unit = () => ()): Long = {
-    val snap = new Snapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
+    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
     if (snap.committed.isEmpty) return 0L
-    val (cond, _) = bindPredicate(spark, path, predicate, Nil, "delete predicate")
+    val (cond, _) = bindPredicate(spark, snap, predicate, Nil, "delete predicate")
     val visPositions = snap.visPositions
     // one task per affected container (1:1 rewrite keeps the schema
     // generation, partitioning metadata, and epoch coverage of each)
@@ -250,13 +250,13 @@ object GraftMaintenance {
                                     set: Map[String, String],
                                     beforeCommit: () => Unit): Long = {
     require(set.nonEmpty, "update needs at least one column assignment")
-    val snap = new Snapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
+    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
     if (snap.committed.isEmpty) return 0L
-    val st = snap.st
+    val st = snap.schema
     set.keys.foreach(c => require(st.fieldNames.contains(c),
       s"update target '$c' is not a column of ${st.fieldNames.mkString(",")}"))
     val setSeq = set.toSeq
-    val (cond, bound) = bindPredicate(spark, path, predicate, setSeq,
+    val (cond, bound) = bindPredicate(spark, snap, predicate, setSeq,
       "update expressions")
     val assigns: Seq[(Int, Expression)] = setSeq.map(a => st.fieldIndex(a._1)).zip(bound)
     val (chain, visPositions) = (snap.chain, snap.visPositions)
@@ -317,8 +317,8 @@ object GraftMaintenance {
                                     keys: Seq[String],
                                     beforeCommit: () => Unit): (Long, Long) = {
     require(keys.nonEmpty, "upsert needs at least one key column")
-    val snap = new Snapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
-    val (visible, st) = (snap.visible, snap.st)
+    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
+    val (visible, st) = (snap.visible, snap.schema)
     // the source must BE the visible schema (same names, kinds, order)
     val srcSpecs = GraftDataSource.specsOf(source.schema)
     require(srcSpecs.map(s => (s.name, s.kind, s.precision, s.scale)) ==
@@ -345,11 +345,11 @@ object GraftMaintenance {
     finally { src.unpersist(); () }
   }
 
-  private def upsertPersisted(spark: SparkSession, snap: Snapshot,
+  private def upsertPersisted(spark: SparkSession, snap: TableSnapshot,
                               source: org.apache.spark.sql.DataFrame,
                               keys: Seq[String],
                               beforeCommit: () => Unit): (Long, Long) = {
-    val (path, confKv, st) = (snap.path, snap.confKv, snap.st)
+    val (path, confKv, st) = (snap.path, snap.confKv, snap.schema)
     val keyVis = keys.map(st.fieldIndex)
 
     // distinct external key tuples -> driver; uniqueness is the upsert
@@ -469,37 +469,6 @@ object GraftMaintenance {
 
   // ------------------------------------------- the copy-on-write pipeline
 
-  /** One operation's view of the table, read ONCE: conf, the committed
-    * manifests, the full positional chain and the visible schema. The
-    * operation validates, binds, admits and plans its rewrite against
-    * this one snapshot; the swap re-checks the snapshot it lands on.
-    */
-  private final class Snapshot(val path: String,
-                               val confKv: Map[String, String]) {
-    val conf: org.apache.hadoop.conf.Configuration = ContainerIO.confFrom(confKv)
-    val all: Seq[TableManifest] = Manifests.readCommitted(conf, path)
-    /** The data containers (schema markers and tombstones hold no rows). */
-    val committed: Seq[TableManifest] =
-      all.filter(m => m.rows > 0 && !m.schemaMarker)
-    // the FULL positional chain (dropped positions included) drives the
-    // positional zips; predicates and sources resolve against the
-    // VISIBLE schema
-    lazy val chain: Seq[ColumnSpec] = GraftDataSource.currentSpecsOf(all)
-    lazy val visible: Seq[ColumnSpec] = chain.filterNot(_.dropped)
-    lazy val st: org.apache.spark.sql.types.StructType =
-      GraftDataSource.schemaOf(visible)
-    lazy val tableCols: Seq[String] = chain.map(_.name)
-    // full positions of the visible columns, ascending — a container
-    // covers a PREFIX of them (chains are prefix-extensions)
-    lazy val visPositions: Seq[Int] =
-      chain.zipWithIndex.filterNot(_._1.dropped).map(_._2)
-
-    def requireTable(): Snapshot = {
-      require(all.nonEmpty, s"no graft table at $path")
-      this
-    }
-  }
-
   /** A fresh run id. The leading letter keeps it non-numeric, so a
     * staged epoch key like "compact-<runId>" is a fixed point of
     * [[Manifests.epochKey]] (which strips one trailing all-digit segment)
@@ -514,25 +483,26 @@ object GraftMaintenance {
     * UPDATE's `set` assignments (column -> expression, cast to the
     * column's type) through the ordinary analyzer — full Spark SQL
     * expressiveness, name resolution, implicit casts — in one probe plan
-    * (a projection over a filter of the table), then bind them to
-    * positional ordinals for stored-row evaluation in the rewrite tasks.
-    * Returns the bound predicate and the bound assignments, in `set`
-    * order.
+    * (a projection over a filter of the table, loaded with the snapshot's
+    * schema: no second index read, and the predicate binds against the
+    * schema admission uses), then bind them to positional ordinals for
+    * stored-row evaluation in the rewrite tasks. Returns the bound
+    * predicate and the bound assignments, in `set` order.
     */
-  private def bindPredicate(spark: SparkSession, path: String,
+  private def bindPredicate(spark: SparkSession, snap: TableSnapshot,
                             predicate: String, set: Seq[(String, String)],
                             noun: String): (Expression, Seq[Expression]) = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
     import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, SubqueryExpression}
     import org.apache.spark.sql.functions.expr
-    val df = spark.read.format("graft").load(path)
+    val df = spark.read.format("graft").schema(snap.schema).load(snap.path)
     val filtered = df.filter(expr(predicate))
     val analyzed = (if (set.isEmpty) filtered
       else filtered.select(set.map { case (c, e) =>
         expr(e).cast(df.schema(c).dataType).as(c) }: _*)).queryExecution.analyzed
     val filter = analyzed.collectFirst { case f: Filter => f }
       .getOrElse(throw new IllegalArgumentException(
-        s"cannot resolve $noun '$predicate' against $path"))
+        s"cannot resolve $noun '$predicate' against ${snap.path}"))
     val assigns = analyzed.collectFirst { case p: Project =>
       p.projectList.map(_.asInstanceOf[Alias].child) }.getOrElse(Nil)
     val exprs = filter.condition +: assigns
@@ -552,13 +522,12 @@ object GraftMaintenance {
     * counts, bucket ids, rename translation, add-only-evolution
     * coverage). Returns the containers that MAY hold a matching row.
     */
-  private def admitted(snap: Snapshot,
+  private def admitted(snap: TableSnapshot,
                        filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[TableManifest] = {
     val admission = GraftDataSource.translateFilters(filters.toArray,
-      GraftDataSource.layoutOf(snap.st)).toSeq
+      GraftDataSource.layoutOf(snap.schema)).toSeq
     snap.committed.filter { m =>
-      GraftDataSource.containerFilters(m, admission, snap.tableCols)
-        .exists(GraftDataSource.admitManifest(m, _))
+      snap.view(m).admission(admission).exists(GraftDataSource.admitManifest(m, _))
     }
   }
 
@@ -566,7 +535,7 @@ object GraftMaintenance {
     * filters ([[sourceFilterOf]]); untranslatable conjuncts prune
     * nothing (a conservative over-approximation of "has matches").
     */
-  private def admittedBy(snap: Snapshot, cond: Expression): Seq[TableManifest] = {
+  private def admittedBy(snap: TableSnapshot, cond: Expression): Seq[TableManifest] = {
     import org.apache.spark.sql.catalyst.expressions.And
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -602,7 +571,7 @@ object GraftMaintenance {
     * propagate untouched; their leftovers, and those of a sibling that
     * outlives the wait, are vacuum's job.
     */
-  private def rewriteJob(spark: SparkSession, snap: Snapshot, op: String,
+  private def rewriteJob(spark: SparkSession, snap: TableSnapshot, op: String,
                          runId: String, bins: Seq[Seq[TableManifest]],
                          noun: String)(
       step: (org.apache.hadoop.conf.Configuration, Seq[TableManifest],
@@ -660,7 +629,7 @@ object GraftMaintenance {
   private final val TaskDrainMs = 60000L
 
   /** Delete the staged blocks (`part-<stage>-...`) of the given stages. */
-  private def sweepStaged(snap: Snapshot, stages: String*): Unit = {
+  private def sweepStaged(snap: TableSnapshot, stages: String*): Unit = {
     val f = ContainerIO.fs(snap.path, snap.conf)
     ContainerIO.listNames(snap.conf, s"${snap.path}/blocks")
       .filter(n => stages.exists(s => n.startsWith(s"part-$s-")))
@@ -697,7 +666,7 @@ object GraftMaintenance {
     * it. Returns the changed bins (nothing commits when there are none
     * and nothing is appended).
     */
-  private def commitTail(snap: Snapshot, done: Seq[Rewritten],
+  private def commitTail(snap: TableSnapshot, done: Seq[Rewritten],
                          appended: Seq[TableManifest], what: String,
                          reclaimConsumed: Boolean, beforeCommit: () => Unit,
                          afterStage: () => Unit): Seq[Rewritten] = {
@@ -935,10 +904,9 @@ object GraftMaintenance {
                    beforeCommit: () => Unit,
                    mutate: Seq[ColumnSpec] => Seq[ColumnSpec],
                    recheck: (Seq[ColumnSpec], Int) => Unit): Unit = {
-    val conf = ContainerIO.confFrom(ContainerIO.confSnapshot(spark))
-    val committed = Manifests.readCommitted(conf, path)
-    require(committed.nonEmpty, s"no graft table at $path")
-    val current = GraftDataSource.currentSpecsOf(committed)
+    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
+    val conf = snap.conf
+    val current = snap.chain
     val mutated = mutate(current)
     val idx = current.indices.find(i => current(i) != mutated(i)).getOrElse(0)
     def mkMarker(commitId: String): TableManifest =
@@ -1001,15 +969,15 @@ object GraftMaintenance {
              graceMs: Long = 72L * 60 * 60 * 1000,
              dryRun: Boolean = false): Int = {
     require(graceMs >= 0, s"graceMs must be >= 0: $graceMs")
-    val conf = ContainerIO.confSnapshot(spark)
-    val c = ContainerIO.confFrom(conf)
+    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark))
+    val c = snap.conf
     // referenced = EVERY retained index snapshot (time travel keeps the
     // last SnapshotRetention versions readable — a block only an older
     // retained snapshot references must survive the sweep) UNION the
     // manifests/ listing: a mid-resume engine encode has per-partition
     // manifests the (stale) index doesn't know yet — their blocks are
     // committed data, not orphans
-    val committedMs = Manifests.readCommitted(c, path)
+    val committedMs = snap.all
     val committedNames = committedMs.map(_.name) ++
       Manifests.retainedSnapshotNames(c, path)
     val committedRefs = committedNames.toSet

@@ -371,4 +371,16 @@ class DeleteSpec extends AnyFunSuite {
     }
     assert(spark.read.format("graft").load(d).count() === 10)
   }
+
+  test("SQL surface: CALL graft.system.delete") {
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    val d = tmp("sql")
+    append(d, 0, 20, "a")
+    val r = spark.sql(
+      s"CALL graft.system.delete(path => '$d', predicate => 'id >= 15')")
+    assert(r.schema.fieldNames.toSeq === Seq("rows_deleted"))
+    assert(r.collect()(0).getLong(0) === 5L)
+    val left = spark.read.format("graft").load(d)
+    assert(left.count() === 15 && left.filter(col("id") >= 15).count() === 0)
+  }
 }

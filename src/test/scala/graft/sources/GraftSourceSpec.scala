@@ -207,16 +207,81 @@ class GraftSourceSpec extends AnyFunSuite {
       "nullable string MIN/MAX must not be manifest-answered")
     assert(agg3.collect()(0).getString(0) === "key-0001",
       "SQL MIN skips nulls; the \"\" placeholder must never surface")
-    // append-race guard: if a chunk WITHOUT an ASCII range appears after
-    // planning admitted the pushdown (concurrent append of non-ASCII
-    // data), execution must fail retriable-loud, never fold a wrong MIN
-    val confKv = graft.engine.ContainerIO.confSnapshot(
-      spark.sparkContext.hadoopConfiguration)
-    val tagSpec = graft.engine.ColumnSpec("tag", graft.engine.Kinds.STRING.id)
-    val raceScan = new GraftAggScan(dMixed,
-      Seq(MinAgg(tagSpec), MaxAgg(tagSpec)), confKv)
-    val ex = intercept[IllegalStateException](raceScan.planInputPartitions())
-    assert(ex.getMessage.contains("retry the query"), ex.getMessage)
+  }
+
+  test("a planned manifest-answered MIN/MAX answers from its planning " +
+    "snapshot across a concurrent append") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("tag", StringType, nullable = false)))
+    def write(rows: Seq[Row], mode: String, d: String): Unit =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+        .write.format("graft").option("chunkRows", "100").mode(mode).save(d)
+    val d = java.nio.file.Files.createTempDirectory("graft-stragg-si").toString
+    write((0 until 400).map(i => Row(i.toLong, f"key-$i%04d")), "overwrite", d)
+    def minMax() = spark.read.format("graft").load(d)
+      .agg(min("tag").as("mn"), max("tag").as("mx"))
+    // the optimized plan holds the built scan: its pushdown proofs ran,
+    // its partitions are not planned yet
+    def aggScans(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+          if r.scan.isInstanceOf[GraftAggScan] => r.scan
+      }
+    val planned = minMax()
+    assert(aggScans(planned).size === 1, "ASCII-only MIN/MAX must push")
+    // a container WITHOUT an ASCII range lands between the proofs and the
+    // fold: the planned query folds exactly the manifests its proofs
+    // were checked on
+    write(Seq(Row(400L, "日本語")), "append", d)
+    val r = planned.collect()(0)
+    assert((r.getString(0), r.getString(1)) === (("key-0000", "key-0399")),
+      "the planned query must answer from its planning snapshot")
+    // a fresh query sees the append, and its non-ASCII chunk rejects the
+    // pushdown: the full scan answers in Spark's UTF-8 binary order
+    val fresh = minMax()
+    assert(aggScans(fresh).isEmpty,
+      "a non-ASCII container must reject the string MIN/MAX pushdown")
+    val r2 = fresh.collect()(0)
+    assert((r2.getString(0), r2.getString(1)) === (("key-0000", "日本語")))
+  }
+
+  test("one index read per planned scan, per append's schema resolution " +
+    "and per mutation's planning") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.engine.Manifests
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("tag", StringType, nullable = false)))
+    val d = java.nio.file.Files.createTempDirectory("graft-idxreads").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(
+        (0 until 200).map(i => Row(i.toLong, s"t${i % 5}")), 2), schema)
+      .write.format("graft").mode("overwrite").save(d)
+    def readsDuring(body: => Any): Long = {
+      val before = Manifests.indexReadCounter.get()
+      body
+      Manifests.indexReadCounter.get() - before
+    }
+    val df = spark.read.format("graft").load(d)
+    // statistics, planning and execution all use the builder's snapshot
+    val q = df.filter(col("id") > 150L)
+    assert(readsDuring(q.queryExecution.executedPlan) === 1L)
+    assert(readsDuring(assert(q.collect().length === 49)) === 0L)
+    // an append resolves the committed schema and chain from one read
+    val info = new org.apache.spark.sql.connector.write.LogicalWriteInfo {
+      override def options() =
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()
+      override def queryId(): String = "idxreads"
+      override def schema(): StructType = df.schema
+    }
+    assert(readsDuring(new GraftWriteBuilder(d, info).build()) === 1L)
+    // a mutation binds its predicate against its own snapshot's schema
+    // (no admitted container here, so nothing commits)
+    assert(readsDuring(assert(
+      GraftMaintenance.delete(spark, d, "id < 0") === 0L)) === 1L)
   }
 
   test("SQL surface: CREATE TABLE USING graft, pushdown visible in EXPLAIN") {

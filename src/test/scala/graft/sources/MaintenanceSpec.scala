@@ -602,6 +602,23 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(procs.contains("compact") && procs.contains("vacuum"), procs)
   }
 
+  test("SQL surface: SHOW PROCEDURES lists exactly the seven; an unknown " +
+    "procedure names them") {
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    val all = Seq("compact", "vacuum", "rename_column", "delete",
+      "expire_snapshots", "drop_column", "update")
+    val listed = spark.sql("SHOW PROCEDURES IN graft.system").collect()
+      .map(r => r.getString(r.length - 1)).toSeq
+    assert(listed.sorted === all.sorted, listed.mkString(","))
+    val e = intercept[Exception](
+      spark.sql("CALL graft.system.no_such_proc('/tmp/x')").collect())
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains(
+      "unknown graft procedure no_such_proc; have: " + all.mkString(", "))),
+      messages(e).mkString(" | "))
+  }
+
   test("streaming replay across compaction substitutes the folded " +
       "generation exactly once") {
     import spark.implicits._
