@@ -54,6 +54,144 @@ object Fsst {
     }
   }
 
+  /** The encode-side lookup of a symbol table — the FSST paper's probe
+    * structure (§4.4 of Boncz/Neumann/Leis): lengths >= 3 resolve through
+    * one 2-way hash bucket keyed by the symbol's first 3 bytes ("lossy
+    * perfect hashing" — occupancy is fixed at selection time), lengths
+    * 1-2 through one 65536-entry shortCodes lookup on the first two
+    * bytes. Training re-segments with the SAME lookup, so symbol gains
+    * adapt to bucket eviction.
+    */
+  private final class Dispatch(symbols: Array[Array[Byte]]) {
+    private val hashLen = new Array[Byte](2 * HashSlots)
+    private val hashPacked = new Array[Long](2 * HashSlots)
+    private val hashCodes = new Array[Int](2 * HashSlots)
+    private val shortCodes = new Array[Int](1 << 16)
+    private val code1 = new Array[Int](256)
+
+    locally {
+      java.util.Arrays.fill(shortCodes, -1)
+      java.util.Arrays.fill(code1, -1)
+      var c = 0
+      while (c < symbols.length) {
+        val sym = symbols(c)
+        val first = sym(0) & 0xff
+        sym.length match {
+          case 1 => if (code1(first) < 0) code1(first) = c
+          case 2 =>
+            val k = (first << 8) | (sym(1) & 0xff)
+            // len-2 beats len-1 fills (written below); first-come among len-2
+            if (shortCodes(k) < 0 || (shortCodes(k) & 0xff) < 2) shortCodes(k) = (c << 8) | 2
+          case l =>
+            val packed = packAt(sym, 0, sym.length)
+            val b = hash3((packed >>> 40).toInt) << 1 // 2-way bucket
+            // first empty of the two ways; symbols arrive gain-ordered
+            val idx = if (hashLen(b) == 0) b else b + 1
+            if (hashLen(idx) == 0) {
+              hashLen(idx) = l.toByte
+              hashPacked(idx) = packed
+              hashCodes(idx) = c
+            }
+        }
+        c += 1
+      }
+      // backfill len-1 symbols into every (first, x) shortCodes slot not
+      // already holding a len-2 symbol, so one lookup serves both lengths
+      var f = 0
+      while (f < 256) {
+        if (code1(f) >= 0) {
+          var x = 0
+          while (x < 256) {
+            val k = (f << 8) | x
+            if (shortCodes(k) < 0) shortCodes(k) = (code1(f) << 8) | 1
+            x += 1
+          }
+        }
+        f += 1
+      }
+    }
+
+    /** Longest match at s(i): returns (code << 8) | matchedLen, or -1.
+      * One hash probe (len >= 3) + one shortCodes read (len 1-2).
+      */
+    @inline def longestMatch(s: Array[Byte], i: Int, end: Int): Int = {
+      val rem = end - i
+      if (rem == 1) { // no second byte: only len-1 symbols are legal
+        val c1 = code1(s(i) & 0xff)
+        return if (c1 >= 0) (c1 << 8) | 1 else -1
+      }
+      val w = packAt(s, i, end)
+      val b = hash3((w >>> 40).toInt) << 1
+      // 2-way bucket: prefer the LONGER matching way (greedy semantics)
+      val l0 = hashLen(b)
+      val l1 = hashLen(b + 1)
+      val m0 = l0 != 0 && l0 <= rem && (w & packedMask(l0)) == hashPacked(b)
+      val m1 = l1 != 0 && l1 <= rem && (w & packedMask(l1)) == hashPacked(b + 1)
+      if (m0 && (!m1 || l0 >= l1)) return (hashCodes(b) << 8) | l0
+      if (m1) return (hashCodes(b + 1) << 8) | l1
+      shortCodes(((w >>> 48)).toInt & 0xffff) // already (code << 8) | len, or -1
+    }
+  }
+
+  /** Training gain per candidate symbol, keyed by (packed prefix,
+    * length) in one open-addressing table.
+    */
+  private final class Gains {
+    private var packed = new Array[Long](4096)
+    private var lens = new Array[Byte](4096) // 0 = empty slot
+    private var gains = new Array[Long](4096)
+    private var size = 0
+
+    private def slot(p: Long, len: Int, mask: Int): Int = {
+      var h = p ^ len
+      h ^= h >>> 33
+      h *= 0xff51afd7ed558ccdL
+      h ^= h >>> 33
+      h.toInt & mask
+    }
+
+    def bump(p: Long, len: Int): Unit = {
+      val mask = lens.length - 1
+      var s = slot(p, len, mask)
+      while (lens(s) != 0 && (lens(s) != len || packed(s) != p)) s = (s + 1) & mask
+      if (lens(s) != 0) gains(s) += len
+      else {
+        lens(s) = len.toByte
+        packed(s) = p
+        gains(s) = len
+        size += 1
+        if (2 * size > lens.length) grow()
+      }
+    }
+
+    private def grow(): Unit = {
+      val (oldP, oldL, oldG) = (packed, lens, gains)
+      packed = new Array[Long](2 * oldL.length)
+      lens = new Array[Byte](2 * oldL.length)
+      gains = new Array[Long](2 * oldL.length)
+      val mask = lens.length - 1
+      var k = 0
+      while (k < oldL.length) {
+        if (oldL(k) != 0) {
+          var s = slot(oldP(k), oldL(k), mask)
+          while (lens(s) != 0) s = (s + 1) & mask
+          lens(s) = oldL(k)
+          packed(s) = oldP(k)
+          gains(s) = oldG(k)
+        }
+        k += 1
+      }
+    }
+
+    def foreach(f: (Long, Int, Long) => Unit): Unit = {
+      var k = 0
+      while (k < lens.length) {
+        if (lens(k) != 0) f(packed(k), lens(k), gains(k))
+        k += 1
+      }
+    }
+  }
+
   /** Immutable trained table with longest-match encode lookup.
     *
     * Round-2 used a per-length hash-map ladder (up to 6 probes per input
@@ -65,72 +203,16 @@ object Fsst {
     */
   final class SymbolTable(val symbols: Array[Array[Byte]]) extends Serializable {
     // Encode-side dispatch, built LAZILY on the first encode (the decode
-    // path — readTable per decoded block — only walks `symbols`).
-    //
-    // The FSST paper's probe structure (§4.4 of Boncz/Neumann/Leis):
-    // lengths >= 3 resolve through one 2-way hash bucket keyed by the
-    // symbol's first 3 bytes ("lossy perfect hashing" — occupancy is
-    // fixed at selection time), lengths 1-2 through one 65536-entry
-    // shortCodes lookup on the first two bytes. Training re-segments
-    // with the SAME lookup, so symbol gains adapt to bucket eviction.
-    @transient private var hashLen: Array[Byte] = null
-    @transient private var hashPacked: Array[Long] = null
-    @transient private var hashCodeArr: Array[Int] = null
-    // VOLATILE publish gate for the lazily built encode tables: the
-    // plain-field writes above it in ensureEncodeTables happen-before a
-    // reader that observes shortCodes non-null through this volatile
-    // read, so a second thread can never see half-built tables (a
-    // concurrent double build is benign — the tables are deterministic).
-    // Volatile reads are free on x86; the hot loop pays nothing.
-    @transient @volatile private var shortCodes: Array[Int] = null
-    @transient private var code1: Array[Int] = null
+    // path — readTable per decoded block — only walks `symbols`). A
+    // concurrent double build is benign: the lookup is deterministic, and
+    // its final fields publish it whole through this volatile.
+    @transient @volatile private var dispatchV: Dispatch = null
     private var maxLenV = 0
 
-    private def ensureEncodeTables(): Unit = if (shortCodes == null) {
-      val hl = new Array[Byte](2 * HashSlots)
-      val hp = new Array[Long](2 * HashSlots)
-      val hc = new Array[Int](2 * HashSlots)
-      val sc = Array.fill(1 << 16)(-1)
-      val c1 = Array.fill(256)(-1)
-      var c = 0
-      while (c < symbols.length) {
-        val sym = symbols(c)
-        val first = sym(0) & 0xff
-        sym.length match {
-          case 1 => if (c1(first) < 0) c1(first) = c
-          case 2 =>
-            val k = (first << 8) | (sym(1) & 0xff)
-            // len-2 beats len-1 fills (written below); first-come among len-2
-            if (sc(k) < 0 || (sc(k) & 0xff) < 2) sc(k) = (c << 8) | 2
-          case l =>
-            val packed = packAt(sym, 0, sym.length)
-            val b = hash3((packed >>> 40).toInt) << 1 // 2-way bucket
-            // first empty of the two ways; symbols arrive gain-ordered
-            val idx = if (hl(b) == 0) b else b + 1
-            if (hl(idx) == 0) {
-              hl(idx) = l.toByte
-              hp(idx) = packed
-              hc(idx) = c
-            }
-        }
-        c += 1
-      }
-      // backfill len-1 symbols into every (first, x) shortCodes slot not
-      // already holding a len-2 symbol, so one lookup serves both lengths
-      var f = 0
-      while (f < 256) {
-        if (c1(f) >= 0) {
-          var x = 0
-          while (x < 256) {
-            val k = (f << 8) | x
-            if (sc(k) < 0) sc(k) = (c1(f) << 8) | 1
-            x += 1
-          }
-        }
-        f += 1
-      }
-      code1 = c1; hashLen = hl; hashPacked = hp; hashCodeArr = hc
-      shortCodes = sc // publish last: longestMatch guards on it
+    private[Fsst] def dispatch: Dispatch = {
+      var d = dispatchV
+      if (d == null) { d = new Dispatch(symbols); dispatchV = d }
+      d
     }
 
     def maxLen: Int = {
@@ -146,44 +228,28 @@ object Fsst {
       maxLenV
     }
 
-    /** Longest match at s(i): returns (code << 8) | matchedLen, or -1.
-      * One hash probe (len >= 3) + one shortCodes read (len 1-2); the
-      * lazy-init guard is a single always-predicted null check.
-      */
-    @inline def longestMatch(s: Array[Byte], i: Int, end: Int): Int = {
-      if (shortCodes == null) ensureEncodeTables()
-      val rem = end - i
-      if (rem == 1) { // no second byte: only len-1 symbols are legal
-        val c1 = code1(s(i) & 0xff)
-        return if (c1 >= 0) (c1 << 8) | 1 else -1
-      }
-      val w = packAt(s, i, end)
-      val b = hash3((w >>> 40).toInt) << 1
-      // 2-way bucket: prefer the LONGER matching way (greedy semantics)
-      val l0 = hashLen(b)
-      val l1 = hashLen(b + 1)
-      val m0 = l0 != 0 && l0 <= rem && (w & packedMask(l0)) == hashPacked(b)
-      val m1 = l1 != 0 && l1 <= rem && (w & packedMask(l1)) == hashPacked(b + 1)
-      if (m0 && (!m1 || l0 >= l1)) return (hashCodeArr(b) << 8) | l0
-      if (m1) return (hashCodeArr(b + 1) << 8) | l1
-      shortCodes(((w >>> 48)).toInt & 0xffff) // already (code << 8) | len, or -1
-    }
+    /** Longest match at s(i): returns (code << 8) | matchedLen, or -1. */
+    def longestMatch(s: Array[Byte], i: Int, end: Int): Int =
+      dispatch.longestMatch(s, i, end)
 
     /** Greedy longest-match encode of src into w; returns bytes written.
       * Worst case is 2 output bytes per input byte (every byte escaped),
       * so ONE up-front reservation covers the whole value and the loop
       * writes into the raw backing array — byte-identical output to the
       * per-putByte form, without a capacity test per output byte (round
-      * 10; the per-byte form was ~27% of the engine encode leg).
+      * 10; the per-byte form was ~27% of the engine encode leg). The
+      * value is the slice `src(off until off+len)`; the lookup is fetched
+      * once per value, not once per position.
       */
-    def encodeInto(src: Array[Byte], w: BlockWriter): Int = {
-      val n = src.length
-      val b = w.reserveRaw(2 * n)
+    def encodeInto(src: Array[Byte], off: Int, len: Int, w: BlockWriter): Int = {
+      val d = dispatch
+      val end = off + len
+      val b = w.reserveRaw(2 * len)
       val p0 = w.rawPos
       var p = p0
-      var i = 0
-      while (i < n) {
-        val m = longestMatch(src, i, n)
+      var i = off
+      while (i < end) {
+        val m = d.longestMatch(src, i, end)
         if (m >= 0) {
           b(p) = (m >>> 8).toByte
           p += 1
@@ -264,12 +330,24 @@ object Fsst {
     new SymbolTable(syms)
   }
 
-  /** Train a symbol table on a bounded sample: start from literal bytes,
-    * then iteratively re-segment with the current table and promote
-    * frequent symbols and adjacent-symbol concatenations by gain =
+  /** Train a symbol table on a bounded sample of `col`: start from
+    * literal bytes, then iteratively re-segment with the current table and
+    * promote frequent symbols and adjacent-symbol concatenations by gain =
     * frequency x length (the FSST paper's bottom-up construction).
     */
-  def train(strings: Array[String], n: Int): SymbolTable = {
+  def train(col: Utf8Column): SymbolTable =
+    trainOn(sample(col.n, i => (col.pool, col.offsets(i), col.lens(i))))
+
+  def train(strings: Array[String], n: Int): SymbolTable =
+    trainOn(sample(n, { i =>
+      val b = strings(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      (b, 0, b.length)
+    }))
+
+  /** The training sample of an n-row chunk whose row i is the UTF-8
+    * slice `slice(i)` = (bytes, offset, length).
+    */
+  private def sample(n: Int, slice: Int => (Array[Byte], Int, Int)): Array[Byte] = {
     // STRIDED sample with a per-row byte cap: the engine's chunks are
     // sorted (repo, lang, path), so a prefix sample sees only the first
     // ~dozen rows — one repo, one file type — and the trained table fits
@@ -282,31 +360,30 @@ object Fsst {
     val sample = new java.io.ByteArrayOutputStream()
     var i = 0
     while (i < n && total < SampleCap) {
-      val b = strings(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val take = math.min(math.min(b.length, perRow), SampleCap - total)
-      sample.write(b, 0, take)
+      val (b, off, len) = slice(i)
+      val take = math.min(math.min(len, perRow), SampleCap - total)
+      sample.write(b, off, take)
       total += take
       i += stride
     }
-    val s = sample.toByteArray
+    sample.toByteArray
+  }
+
+  private def trainOn(s: Array[Byte]): SymbolTable = {
     if (s.isEmpty) return new SymbolTable(Array.empty)
 
     var table = new SymbolTable(Array.empty)
     var iter = 0
     while (iter < TrainIterations) {
-      // gains per candidate, keyed by (len, packed prefix)
-      val gains = Array.fill(MaxSymbolLen)(new java.util.HashMap[java.lang.Long, java.lang.Long]())
-      @inline def bump(off: Int, len: Int): Unit = {
-        val k = java.lang.Long.valueOf(packAt(s, off, s.length) & packedMask(len))
-        val m = gains(len - 1)
-        val cur = m.get(k)
-        m.put(k, java.lang.Long.valueOf((if (cur eq null) 0L else cur.longValue()) + len))
-      }
+      val gains = new Gains
+      @inline def bump(off: Int, len: Int): Unit =
+        gains.bump(packAt(s, off, s.length) & packedMask(len), len)
+      val d = table.dispatch
       var pos = 0
       var prevStart = -1
       var prevLen = 0
       while (pos < s.length) {
-        val m = table.longestMatch(s, pos, s.length)
+        val m = d.longestMatch(s, pos, s.length)
         val segLen = if (m >= 0) m & 0xff else 1
         bump(pos, segLen)
         if (prevStart >= 0 && prevLen + segLen <= MaxSymbolLen
@@ -319,15 +396,7 @@ object Fsst {
       // collect all candidates, take top-255 by gain (stable order:
       // gain desc, then len desc, then packed value — fully deterministic)
       val cands = new java.util.ArrayList[(Long, Int, Long)]() // (packed, len, gain)
-      var len = 1
-      while (len <= MaxSymbolLen) {
-        val it = gains(len - 1).entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          cands.add((e.getKey.longValue(), len, e.getValue.longValue()))
-        }
-        len += 1
-      }
+      gains.foreach((packed, len, gain) => cands.add((packed, len, gain)))
       cands.sort { (a, b) =>
         val g = java.lang.Long.compare(b._3, a._3)
         if (g != 0) g

@@ -51,7 +51,9 @@ final case class LongStats(
     varintBodySize: Long,
     deltaBodySize: Long,
     rleBodySize: Long,
-    dictBodySize: Long // -1 if cardinality overflowed the tracking cap
+    // -1 if cardinality overflowed the tracking cap, or if the dictionary's
+    // lower bound already reaches another codec's exact size
+    dictBodySize: Long
 ) {
   def forWidth: Int = BitPacker.bitsForUnsigned(max - min)
   def bitpackWidth: Int = if (min >= 0) BitPacker.bitsForUnsigned(max) else 64
@@ -72,21 +74,29 @@ object LongCodecs {
 
   @inline private def zlen(v: Long): Int = PrefixVarInt.len(PrefixVarInt.zigzagEncode(v))
 
-  /** One-pass stats over values(0 until n). */
+  /** One-pass stats over values(0 until n). Each value's zigzag length
+    * is computed once and serves varint, delta and RLE; distinct values go
+    * into a primitive set capped at [[DictCardCap]], and only a value
+    * that starts a run is looked up. The dictionary's sort-and-size step
+    * runs only when its lower bound (one byte per distinct value plus the
+    * packed codes) is below every other codec's exact size; otherwise the
+    * dictionary cannot be chosen and its size is recorded as -1.
+    */
   def stats(values: Array[Long], n: Int): LongStats = {
     require(n > 0, "empty chunk")
     val hist = new Array[Long](10)
     var min = values(0)
     var max = values(0)
     var varintSize = 0L
-    var deltaSize = zlen(values(0)).toLong
+    var deltaSize = 0L
     var runCount = 1
     var rleSize = 0L
     var runStart = 0
-    val set = new java.util.HashSet[Long]()
+    var runLen = 0 // zigzag length of the current run's value
+    val set = new LongOpenSet(DictCardCap, n)
     var overflow = false
-    var i = 0
     var prev = values(0)
+    var i = 0
     while (i < n) {
       val v = values(i)
       if (v < min) min = v
@@ -94,41 +104,128 @@ object LongCodecs {
       val l = zlen(v)
       hist(l) += 1
       varintSize += l
-      if (i > 0) {
+      if (i == 0) {
+        deltaSize += l
+        runLen = l
+        overflow = !set.add(v)
+      } else {
         deltaSize += zlen(v - prev)
         if (v != prev) {
           // close the previous run
-          rleSize += zlen(values(runStart)) + PrefixVarInt.len((i - runStart).toLong)
+          rleSize += runLen + PrefixVarInt.len((i - runStart).toLong)
           runStart = i
+          runLen = l
           runCount += 1
+          if (!overflow) overflow = !set.add(v)
         }
         prev = v
       }
-      if (!overflow) {
-        set.add(v)
-        if (set.size > DictCardCap) overflow = true
-      }
       i += 1
     }
-    rleSize += zlen(values(runStart)) + PrefixVarInt.len((n - runStart).toLong)
-    val dictBody =
-      if (overflow) -1L
-      else {
-        // sorted distinct values stored as first(zigzag) + positive deltas,
-        // then n codes bit-packed at bits(card-1)
-        val card = set.size
-        val arr = new Array[Long](card)
-        val it = set.iterator()
-        var j = 0
-        while (it.hasNext) { arr(j) = it.next(); j += 1 }
-        java.util.Arrays.sort(arr)
-        var dsz = PrefixVarInt.len(card.toLong).toLong + zlen(arr(0))
-        var k = 1
-        while (k < card) { dsz += PrefixVarInt.len(arr(k) - arr(k - 1)); k += 1 }
-        dsz + 1 + BitPacker.packedSize(n, BitPacker.bitsForUnsigned((card - 1).toLong))
+    rleSize += runLen + PrefixVarInt.len((n - runStart).toLong)
+    val card = set.size
+    val noDict = LongStats(n, min, max, runCount, card, overflow, hist, varintSize,
+      deltaSize, rleSize, -1L)
+    if (overflow) return noDict
+    val codes = 1 + BitPacker.packedSize(n, BitPacker.bitsForUnsigned((card - 1).toLong))
+    val lowerBound = headerSize(n) + PrefixVarInt.len(card.toLong) + card + codes
+    // ties go to the earlier codec in `all`, and the dictionary is last
+    if (lowerBound >= all.iterator.map(sizeOf(_, noDict)).min) return noDict
+    // sorted distinct values stored as first(zigzag) + positive deltas,
+    // then n codes bit-packed at bits(card-1)
+    val arr = set.sorted()
+    var dsz = PrefixVarInt.len(card.toLong).toLong + zlen(arr(0))
+    var k = 1
+    while (k < card) { dsz += PrefixVarInt.len(arr(k) - arr(k - 1)); k += 1 }
+    noDict.copy(dictBodySize = dsz + codes)
+  }
+
+  /** min and max of values(0 until n): all a narrow column's block needs. */
+  def range(values: Array[Long], n: Int): (Long, Long) = {
+    require(n > 0, "empty chunk")
+    var min = values(0)
+    var max = values(0)
+    var i = 1
+    while (i < n) {
+      val v = values(i)
+      if (v < min) min = v
+      if (v > max) max = v
+      i += 1
+    }
+    (min, max)
+  }
+
+  /** Open-addressing set of longs holding at most `cap` values; `add`
+    * returns false when v is new and the set is full. Sized for the
+    * distinct values `n` rows can hold, so it rarely grows.
+    */
+  private[codecs] final class LongOpenSet(cap: Int, n: Int) {
+    // 0L = empty slot; 0 itself is `hasZero`
+    private var keys = new Array[Long](
+      Integer.highestOneBit(math.max(8, 2 * math.min(cap, n) - 1)) << 1)
+    private var hasZero = false
+    var size = 0
+
+    // murmur3's 64-bit finalizer: sortable double bits and other values
+    // that differ only in their high bits still spread over every slot
+    @inline private def slot(v: Long, mask: Int): Int = {
+      var h = v ^ (v >>> 33)
+      h *= 0xff51afd7ed558ccdL
+      h ^= h >>> 33
+      h *= 0xc4ceb9fe1a85ec53L
+      (h ^ (h >>> 33)).toInt & mask
+    }
+
+    def add(v: Long): Boolean = {
+      if (v == 0L) {
+        if (!hasZero) {
+          if (size >= cap) return false
+          hasZero = true
+          size += 1
+        }
+        return true
       }
-    LongStats(n, min, max, runCount, math.min(set.size, DictCardCap),
-      overflow, hist, varintSize, deltaSize, rleSize, dictBody)
+      val mask = keys.length - 1
+      var s = slot(v, mask)
+      while (keys(s) != 0L) {
+        if (keys(s) == v) return true
+        s = (s + 1) & mask
+      }
+      if (size >= cap) return false
+      keys(s) = v
+      size += 1
+      if (2 * size > keys.length) grow()
+      true
+    }
+
+    private def grow(): Unit = {
+      val old = keys
+      keys = new Array[Long](2 * old.length)
+      val mask = keys.length - 1
+      var k = 0
+      while (k < old.length) {
+        val v = old(k)
+        if (v != 0L) {
+          var s = slot(v, mask)
+          while (keys(s) != 0L) s = (s + 1) & mask
+          keys(s) = v
+        }
+        k += 1
+      }
+    }
+
+    def sorted(): Array[Long] = {
+      val out = new Array[Long](size)
+      var j = 0
+      if (hasZero) { out(0) = 0L; j = 1 }
+      var k = 0
+      while (k < keys.length) {
+        if (keys(k) != 0L) { out(j) = keys(k); j += 1 }
+        k += 1
+      }
+      java.util.Arrays.sort(out)
+      out
+    }
   }
 
   private def headerSize(n: Int): Long = 1L + PrefixVarInt.len(n.toLong)
@@ -346,15 +443,15 @@ case object DictLongCodec extends LongCodec {
   val id: Byte = 6
   val name = "dict"
   def encode(values: Array[Long], n: Int): Array[Byte] = {
-    val sorted = java.util.Arrays.copyOf(values, n)
-    java.util.Arrays.sort(sorted)
-    // in-place dedupe
-    var card = if (n == 0) 0 else 1
-    var i = 1
+    // the sorted distinct values, from a set: no sort of all n rows
+    val set = new LongCodecs.LongOpenSet(n, n)
+    var i = 0
     while (i < n) {
-      if (sorted(i) != sorted(card - 1)) { sorted(card) = sorted(i); card += 1 }
+      if (i == 0 || values(i) != values(i - 1)) set.add(values(i))
       i += 1
     }
+    val sorted = set.sorted()
+    val card = sorted.length
     val width = BitPacker.bitsForUnsigned((card - 1).toLong)
     val w = header(n, 16 + card * 2 + BitPacker.packedSize(n, width))
     w.putVarint(card.toLong)
@@ -365,7 +462,9 @@ case object DictLongCodec extends LongCodec {
     val codes = new Array[Long](n)
     i = 0
     while (i < n) {
-      codes(i) = java.util.Arrays.binarySearch(sorted, 0, card, values(i)).toLong
+      codes(i) =
+        if (i > 0 && values(i) == values(i - 1)) codes(i - 1)
+        else java.util.Arrays.binarySearch(sorted, 0, card, values(i)).toLong
       i += 1
     }
     w.putBytes(BitPacker.pack(codes, n, width))

@@ -3,16 +3,15 @@ package graft.codecs
 import graft.core.{BlockReader, BlockWriter, PrefixVarInt}
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** One lightweight-compression codec for a chunk of String values.
-  * Block wire format: `[id: u8][count: varint][payload…]`; ids 16+.
-  */
-/** A decoded string column as UTF-8 slices into a shared byte pool —
-  * value i is `pool(offsets(i) until offsets(i)+lens(i))`. Zero-copy for
-  * raw/dict/RLE blocks (the pool IS the block buffer); FSST decodes into
-  * ONE pool allocation per block. Consumers that need Java Strings call
-  * [[strings]]; byte-level consumers (columnar vector fill, UTF8String
-  * rows, the content digest) use the slices directly and never pay the
-  * UTF-8 decode + re-encode round trip a String would cost.
+/** A string column as UTF-8 slices into a shared byte pool — value i
+  * is `pool(offsets(i) until offsets(i)+lens(i))`. It is both the decode
+  * output and the encode input of every string codec. Decode is
+  * zero-copy for raw/dict/RLE blocks (the pool IS the block buffer);
+  * FSST decodes into ONE pool allocation per block. On the write path
+  * the encoder's chunk buffer is the pool, filled straight from Spark's
+  * UTF-8 values, so stats, encode, the chunk digest and the zone stats
+  * all run on byte slices. Consumers that need Java Strings call
+  * [[strings]].
   */
 final class Utf8Column(val pool: Array[Byte], val offsets: Array[Int],
                        val lens: Array[Int]) {
@@ -29,12 +28,121 @@ final class Utf8Column(val pool: Array[Byte], val offsets: Array[Int],
   def equalsBytes(i: Int, b: Array[Byte]): Boolean =
     lens(i) == b.length && java.util.Arrays.equals(
       pool, offsets(i), offsets(i) + lens(i), b, 0, b.length)
+  /** Byte-equality of values i and j. */
+  def same(i: Int, j: Int): Boolean =
+    lens(i) == lens(j) && java.util.Arrays.equals(
+      pool, offsets(i), offsets(i) + lens(i), pool, offsets(j), offsets(j) + lens(j))
+  /** Murmur3 of value i's bytes. */
+  def hash(i: Int): Int =
+    org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(
+      pool, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + offsets(i), lens(i), 42)
 }
 
+object Utf8Column {
+  /** The codec API's one String -> UTF-8 conversion: values(0 until n)
+    * into one pool, with `String.getBytes(UTF_8)` semantics (an unpaired
+    * surrogate becomes '?').
+    */
+  def of(values: Array[String], n: Int): Utf8Column = {
+    val bytes = new Array[Array[Byte]](n)
+    var total = 0L
+    var i = 0
+    while (i < n) { bytes(i) = values(i).getBytes(UTF_8); total += bytes(i).length; i += 1 }
+    require(total <= Int.MaxValue - 16, s"$total UTF-8 bytes exceed one pool")
+    val pool = new Array[Byte](total.toInt)
+    val offs = new Array[Int](n)
+    val lens = new Array[Int](n)
+    var o = 0
+    i = 0
+    while (i < n) {
+      System.arraycopy(bytes(i), 0, pool, o, bytes(i).length)
+      offs(i) = o
+      lens(i) = bytes(i).length
+      o += lens(i)
+      i += 1
+    }
+    new Utf8Column(pool, offs, lens)
+  }
+
+  /** UTF-16 length (`String.length`) of the UTF-8 slice
+    * `pool(off until off+len)`: one char per non-continuation byte, plus
+    * one more per 4-byte lead (a surrogate pair). Exact on valid UTF-8.
+    */
+  def utf16Length(pool: Array[Byte], off: Int, len: Int): Int = {
+    var chars = 0
+    var i = off
+    val end = off + len
+    while (i < end) {
+      val b = pool(i)
+      if ((b & 0xc0) != 0x80) chars += 1
+      if ((b & 0xf8) == 0xf0) chars += 1
+      i += 1
+    }
+    chars
+  }
+}
+
+/** First-seen-order distinct values of a [[Utf8Column]]: an
+  * open-addressing table of codes keyed by the value bytes. `add` returns
+  * a value's code, or -1 when it is new and the dictionary already holds
+  * `cap` values.
+  */
+final class Utf8Dict(col: Utf8Column, cap: Int) {
+  private var slots = new Array[Int](1024) // code + 1; 0 = empty
+  private var hashes = new Array[Int](1024)
+  private var firstRow = new Array[Int](256)
+  var size = 0
+  /** The row that introduced `code`. */
+  def rowOf(code: Int): Int = firstRow(code)
+
+  def add(i: Int): Int = {
+    val h = col.hash(i)
+    val mask = slots.length - 1
+    var s = h & mask
+    while (slots(s) != 0) {
+      val c = slots(s) - 1
+      if (hashes(s) == h && col.same(firstRow(c), i)) return c
+      s = (s + 1) & mask
+    }
+    if (size >= cap) return -1
+    if (size == firstRow.length) firstRow = java.util.Arrays.copyOf(firstRow, 2 * size)
+    firstRow(size) = i
+    slots(s) = size + 1
+    hashes(s) = h
+    size += 1
+    if (2 * size > slots.length) grow()
+    size - 1
+  }
+
+  private def grow(): Unit = {
+    val oldSlots = slots
+    val oldHashes = hashes
+    slots = new Array[Int](2 * oldSlots.length)
+    hashes = new Array[Int](2 * oldSlots.length)
+    val mask = slots.length - 1
+    var k = 0
+    while (k < oldSlots.length) {
+      if (oldSlots(k) != 0) {
+        var s = oldHashes(k) & mask
+        while (slots(s) != 0) s = (s + 1) & mask
+        slots(s) = oldSlots(k)
+        hashes(s) = oldHashes(k)
+      }
+      k += 1
+    }
+  }
+}
+
+/** One lightweight-compression codec for a chunk of string values.
+  * Block wire format: `[id: u8][count: varint][payload…]`; ids 16+.
+  */
 sealed trait StringCodec extends Serializable {
   def id: Byte
   def name: String
-  def encode(values: Array[String], n: Int): Array[Byte]
+  /** Encode every value of `col`: the one encode implementation per codec. */
+  def encodeUtf8(col: Utf8Column): Array[Byte]
+  final def encode(values: Array[String], n: Int): Array[Byte] =
+    encodeUtf8(Utf8Column.of(values, n))
   final def encode(values: Array[String]): Array[Byte] = encode(values, values.length)
   /** Decode a block at buf(off until end) to UTF-8 slices — zero-copy
     * where the layout allows; the single decode implementation per codec
@@ -80,9 +188,7 @@ object StringCodecs {
 
   final val DictCardCap = 1 << 14
 
-  /** UTF-8 encoded length without materializing the bytes — stats must
-    * not copy the whole chunk just to learn sizes.
-    */
+  /** UTF-8 encoded length without materializing the bytes. */
   def utf8Length(s: String): Long = {
     var bytes = 0L
     var i = 0
@@ -104,51 +210,55 @@ object StringCodecs {
     bytes
   }
 
-  def stats(values: Array[String], n: Int): StringStats = {
+  def stats(values: Array[String], n: Int): StringStats = stats(Utf8Column.of(values, n))
+
+  /** One pass: byte totals, runs (each compared with its predecessor)
+    * and the first-seen dictionary, which stops growing past
+    * [[DictCardCap]]. A value equal to its predecessor is neither hashed
+    * nor re-counted.
+    */
+  def stats(col: Utf8Column): StringStats = {
+    val n = col.n
     require(n > 0, "empty chunk")
+    val lens = col.lens
     var totalBytes = 0L
     var rawBody = 0L
     var rleBody = 0L
     var runCount = 1
-    val seen = new java.util.LinkedHashMap[String, Integer]()
+    var runStart = 0
+    val dict = new Utf8Dict(col, DictCardCap)
+    var dictEntries = 0L
     var overflow = false
     var i = 0
     while (i < n) {
-      val b = utf8Length(values(i))
+      val b = lens(i)
+      val sized = PrefixVarInt.len(b.toLong) + b
       totalBytes += b
-      rawBody += PrefixVarInt.len(b) + b
-      if (i > 0 && values(i) != values(i - 1)) runCount += 1
-      if (!overflow && !seen.containsKey(values(i))) {
-        seen.put(values(i), seen.size)
-        if (seen.size > DictCardCap) overflow = true
+      rawBody += sized
+      if (i == 0 || !col.same(i, i - 1)) {
+        if (i > 0) {
+          // rle body: per run, len varint + bytes + runLen varint
+          rleBody += PrefixVarInt.len(lens(runStart).toLong) + lens(runStart) +
+            PrefixVarInt.len((i - runStart).toLong)
+          runStart = i
+          runCount += 1
+        }
+        if (!overflow) {
+          val size = dict.size
+          if (dict.add(i) < 0) overflow = true
+          else if (dict.size > size) dictEntries += sized
+        }
       }
       i += 1
     }
-    // rle body: per run, len varint + bytes + runLen varint
-    var start = 0
-    i = 1
-    while (i <= n) {
-      if (i == n || values(i) != values(start)) {
-        val b = utf8Length(values(start))
-        rleBody += PrefixVarInt.len(b) + b + PrefixVarInt.len((i - start).toLong)
-        start = i
-      }
-      i += 1
-    }
+    rleBody += PrefixVarInt.len(lens(runStart).toLong) + lens(runStart) +
+      PrefixVarInt.len((n - runStart).toLong)
+    val card = dict.size
     val dictBody =
       if (overflow) -1L
-      else {
-        val card = seen.size
-        var dsz = PrefixVarInt.len(card.toLong).toLong
-        val it = seen.keySet().iterator()
-        while (it.hasNext) {
-          val b = utf8Length(it.next())
-          dsz += PrefixVarInt.len(b) + b
-        }
-        dsz + 1 + BitPacker.packedSize(n, BitPacker.bitsForUnsigned((card - 1).toLong))
-      }
-    StringStats(n, totalBytes, rawBody, math.min(seen.size, DictCardCap),
-      overflow, dictBody, runCount, rleBody)
+      else PrefixVarInt.len(card.toLong) + dictEntries + 1 +
+        BitPacker.packedSize(n, BitPacker.bitsForUnsigned((card - 1).toLong))
+    StringStats(n, totalBytes, rawBody, card, overflow, dictBody, runCount, rleBody)
   }
 
   private def headerSize(n: Int): Long = 1L + PrefixVarInt.len(n.toLong)
@@ -176,6 +286,10 @@ object StringCodecs {
     var trainRatio: Double = Double.MaxValue
   }
 
+  def encodeBest(values: Array[String], n: Int, st: StringStats,
+                 fsst: FsstState = null): (StringCodec, Array[Byte]) =
+    encodeBest(Utf8Column.of(values, n), st, fsst)
+
   /** Stats-driven selection + encoding in one pass. Raw/dict/rle are
     * priced exactly from stats (no encode needed to price); FSST is
     * priced by a single (train+)encode whose block is returned directly if
@@ -183,8 +297,8 @@ object StringCodecs {
     * codecs with no duplicated work. Pass a [[FsstState]] to amortize
     * FSST training across the chunks of one partition column.
     */
-  def encodeBest(values: Array[String], n: Int, st: StringStats,
-                 fsst: FsstState = null): (StringCodec, Array[Byte]) = {
+  def encodeBest(col: Utf8Column, st: StringStats,
+                 fsst: FsstState): (StringCodec, Array[Byte]) = {
     var best: StringCodec = RawStringCodec
     var bestSize = sizeOf(RawStringCodec, st)
     for (c <- Seq(DictStringCodec, RleStringCodec)) {
@@ -197,26 +311,26 @@ object StringCodecs {
     // fixed training cost off columns dict/rle already win).
     if (st.totalBytes >= 1024 && bestSize * 4 > st.totalBytes) {
       val fsstBlock =
-        if (fsst == null) FsstStringCodec.encode(values, n)
+        if (fsst == null) FsstStringCodec.encodeUtf8(col)
         else if (fsst.table == null) {
-          fsst.table = Fsst.train(values, n)
-          val b = FsstStringCodec.encodeWith(fsst.table, values, n)
+          fsst.table = Fsst.train(col)
+          val b = FsstStringCodec.encodeWith(fsst.table, col)
           fsst.trainRatio = b.length.toDouble / math.max(st.totalBytes, 1L)
           b
         } else {
-          val b = FsstStringCodec.encodeWith(fsst.table, values, n)
+          val b = FsstStringCodec.encodeWith(fsst.table, col)
           val ratio = b.length.toDouble / math.max(st.totalBytes, 1L)
           if (ratio <= fsst.trainRatio * 1.15) b
           else { // drifted: this chunk's content no longer matches the table
-            fsst.table = Fsst.train(values, n)
-            val b2 = FsstStringCodec.encodeWith(fsst.table, values, n)
+            fsst.table = Fsst.train(col)
+            val b2 = FsstStringCodec.encodeWith(fsst.table, col)
             fsst.trainRatio = b2.length.toDouble / math.max(st.totalBytes, 1L)
             if (b2.length <= b.length) b2 else b
           }
         }
       if (fsstBlock.length < bestSize) return (FsstStringCodec, fsstBlock)
     }
-    (best, best.encode(values, n))
+    (best, best.encodeUtf8(col))
   }
 
   def select(values: Array[String], n: Int, st: StringStats): StringCodec =
@@ -248,16 +362,16 @@ object StringCodecs {
 case object RawStringCodec extends StringCodec {
   val id: Byte = 16
   val name = "raw"
-  def encode(values: Array[String], n: Int): Array[Byte] = {
-    val bytes = new Array[Array[Byte]](n)
+  def encodeUtf8(col: Utf8Column): Array[Byte] = {
+    val n = col.n
     var total = 0L
     var i = 0
-    while (i < n) { bytes(i) = values(i).getBytes(UTF_8); total += bytes(i).length; i += 1 }
+    while (i < n) { total += col.lens(i); i += 1 }
     val w = header(n, (total + n * 2 + 16).toInt)
     i = 0
-    while (i < n) { w.putVarint(bytes(i).length.toLong); i += 1 }
+    while (i < n) { w.putVarint(col.lens(i).toLong); i += 1 }
     i = 0
-    while (i < n) { w.putBytes(bytes(i)); i += 1 }
+    while (i < n) { w.putBytes(col.pool, col.offsets(i), col.lens(i)); i += 1 }
     w.result()
   }
   def decodeUtf8(buf: Array[Byte], off: Int, end: Int): Utf8Column = {
@@ -286,25 +400,25 @@ case object RawStringCodec extends StringCodec {
 case object DictStringCodec extends StringCodec {
   val id: Byte = 17
   val name = "dict"
-  def encode(values: Array[String], n: Int): Array[Byte] = {
-    val codes = new java.util.LinkedHashMap[String, Integer]()
+  def encodeUtf8(col: Utf8Column): Array[Byte] = {
+    val n = col.n
+    val codes = new Utf8Dict(col, Int.MaxValue)
     val codeArr = new Array[Long](n)
     var i = 0
     while (i < n) {
-      var c = codes.get(values(i))
-      if (c == null) { c = codes.size; codes.put(values(i), c) }
-      codeArr(i) = c.longValue()
+      codeArr(i) = if (i > 0 && col.same(i, i - 1)) codeArr(i - 1) else codes.add(i).toLong
       i += 1
     }
     val card = codes.size
     val width = BitPacker.bitsForUnsigned((card - 1).toLong)
     val w = header(n, 64 + n)
     w.putVarint(card.toLong)
-    val it = codes.keySet().iterator()
-    while (it.hasNext) {
-      val b = it.next().getBytes(UTF_8)
-      w.putVarint(b.length.toLong)
-      w.putBytes(b)
+    var c = 0
+    while (c < card) {
+      val r = codes.rowOf(c)
+      w.putVarint(col.lens(r).toLong)
+      w.putBytes(col.pool, col.offsets(r), col.lens(r))
+      c += 1
     }
     w.putByte(width)
     w.putBytes(BitPacker.pack(codeArr, n, width))
@@ -348,19 +462,19 @@ case object DictStringCodec extends StringCodec {
 case object RleStringCodec extends StringCodec {
   val id: Byte = 18
   val name = "rle"
-  def encode(values: Array[String], n: Int): Array[Byte] = {
+  def encodeUtf8(col: Utf8Column): Array[Byte] = {
+    val n = col.n
     var runs = 1
     var i = 1
-    while (i < n) { if (values(i) != values(i - 1)) runs += 1; i += 1 }
+    while (i < n) { if (!col.same(i, i - 1)) runs += 1; i += 1 }
     val w = header(n, n * 4 + 16)
     w.putVarint(runs.toLong)
     var start = 0
     i = 1
     while (i <= n) {
-      if (i == n || values(i) != values(start)) {
-        val b = values(start).getBytes(UTF_8)
-        w.putVarint(b.length.toLong)
-        w.putBytes(b)
+      if (i == n || !col.same(i, start)) {
+        w.putVarint(col.lens(start).toLong)
+        w.putBytes(col.pool, col.offsets(start), col.lens(start))
         w.putVarint((i - start).toLong)
         start = i
       }
@@ -402,25 +516,25 @@ case object FsstStringCodec extends StringCodec {
   val id: Byte = 19
   val name = "fsst"
 
-  def encode(values: Array[String], n: Int): Array[Byte] =
-    encodeWith(Fsst.train(values, n), values, n)
+  def encodeUtf8(col: Utf8Column): Array[Byte] = encodeWith(Fsst.train(col), col)
 
   /** Encode with an externally trained (possibly reused) table; the table
     * is always serialized into the block, so decode stays self-contained.
     */
-  def encodeWith(table: Fsst.SymbolTable, values: Array[String], n: Int): Array[Byte] = {
+  def encodeWith(table: Fsst.SymbolTable, col: Utf8Column): Array[Byte] = {
+    val n = col.n
     val w = header(n, 64)
     table.writeTo(w)
-    val raw = new Array[Array[Byte]](n)
     var i = 0
-    while (i < n) { raw(i) = values(i).getBytes(UTF_8); i += 1 }
-    i = 0
-    while (i < n) { w.putVarint(raw(i).length.toLong); i += 1 }
+    while (i < n) { w.putVarint(col.lens(i).toLong); i += 1 }
     // encode each string into a scratch, record encoded length, then bytes
     val scratch = new BlockWriter(4096)
     val encLens = new Array[Int](n)
     i = 0
-    while (i < n) { encLens(i) = table.encodeInto(raw(i), scratch); i += 1 }
+    while (i < n) {
+      encLens(i) = table.encodeInto(col.pool, col.offsets(i), col.lens(i), scratch)
+      i += 1
+    }
     i = 0
     while (i < n) { w.putVarint(encLens(i).toLong); i += 1 }
     w.putBytes(scratch.result())

@@ -1,7 +1,5 @@
 package graft.engine
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import graft.codecs._
 import graft.core.BlockWriter
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Input row after the derive stage: the five source columns plus the
@@ -302,6 +302,7 @@ object ColumnarEngine {
       * binaries and float arrays, each group in schema order (stable sort).
       */
     private val blockOrder: Array[Int] = bufs.indices.sortBy(bufs(_).group).toArray
+    private val strBufs: Array[StrBuffer] = bufs.collect { case b: StrBuffer => b }
     private val bmBytes = (chunkRowsCap + 7) >> 3
     private val digestCol = digestColumnOf(schema)
     private val digestIdx = columns.indexWhere(_.name == digestCol)
@@ -318,8 +319,9 @@ object ColumnarEngine {
     private var chunks = 0
     private var rawTotal = 0L
 
-    // rows buffered in the current chunk, the value bytes they hold, and
-    // the puts made into the row being built
+    // rows buffered in the current chunk, the value bytes they hold
+    // (strings as UTF-8 bytes; see [[contentSize]]), and the puts made
+    // into the row being built
     private var bufN = 0
     private var bufBytes = 0L
     private var rowPuts = 0
@@ -348,20 +350,22 @@ object ColumnarEngine {
         if (digestIdx < 0) new Array[Byte](32)
         else {
           val chunkSha = java.security.MessageDigest.getInstance("SHA-256")
-          val vals = bufs(digestIdx).asInstanceOf[StrBuffer].vals
+          val s = bufs(digestIdx).asInstanceOf[StrBuffer]
           var i = 0
           while (i < n) {
-            sha.reset()
-            chunkSha.update(sha.digest(vals(i).getBytes(UTF_8)))
+            sha.update(s.pool, s.offsets(i), s.lens(i))
+            chunkSha.update(sha.digest())
             i += 1
           }
           chunkSha.digest()
         }
 
-      def writeCol(name: String, kind: Int, block0: Array[Byte],
+      def writeCol(b: ColumnBuffer, block0: Array[Byte],
                    codecName: String, raw: Long,
                    min: Long = 0L, max: Long = 0L, hasRange: Boolean = false,
                    nullBm: Array[Byte] = null, nullCount: Int = -1): Unit = {
+        val name = b.spec.name
+        val kind = b.spec.kind
         // nullCount >= 0 = the column is declared nullable; -1 = not
         if (nullCount >= 0)
           chunkNullCounts = chunkNullCounts.updated(name, nullCount)
@@ -377,9 +381,8 @@ object ColumnarEngine {
             System.arraycopy(block0, 0, out, bmLen, block0.length)
             out
           }
-        val nb = name.getBytes(UTF_8)
-        w.putVarint(nb.length.toLong)
-        w.putBytes(nb)
+        w.putVarint(b.nameBytes.length.toLong)
+        w.putBytes(b.nameBytes)
         w.putByte(if (nullBm == null) kind else kind | ColumnSpec.NullableFlag)
         w.putVarint(block.length.toLong)
         w.putBytes(block)
@@ -395,14 +398,13 @@ object ColumnarEngine {
           if (max > m(3)) m(3) = max
           m(4) = 1L
         }
-        codecByCol.merge(name, codecName, (a, b) => if (a == b) a else s"$a+$b")
+        codecByCol.merge(name, codecName, (x, y) => if (x == y) x else s"$x+$y")
       }
 
       var k = 0
       while (k < blockOrder.length) {
         val b = bufs(blockOrder(k))
         val nm = b.spec.name
-        val kind = b.spec.kind
         val nc = b.nullCount
         val bm = if (nc > 0) b.nulls else null
         val nullCount = if (b.spec.nullable) nc else -1
@@ -431,36 +433,36 @@ object ColumnarEngine {
             }
             // an all-null chunk has no real values: record no range at all
             val hasRange = nc < n
-            val st = LongCodecs.stats(vals, n)
-            if (l.narrow)
+            if (l.narrow) {
               // narrow i32 column (int / date days / float sortable bits):
               // zigzag-varint block behind the overflow-checked narrow
               // decode ([[graft.codecs.IntCodecs]]); the block carries its
-              // true kind
-              writeCol(nm, kind, IntCodecs.encode(vals, n), "varint-i32",
-                4L * n, st.min, st.max, hasRange, bm, nullCount)
-            else {
+              // true kind, and only its range is needed
+              val (min, max) = LongCodecs.range(vals, n)
+              writeCol(b, IntCodecs.encode(vals, n), "varint-i32",
+                4L * n, min, max, hasRange, bm, nullCount)
+            } else {
               // wide int64 column (long / timestamp micros / double
               // sortable bits / decimal unscaled / boolean 0-1):
               // stats-selected codec through the kind-0 machinery
               // (booleans bit-pack to ~1 bit)
+              val st = LongCodecs.stats(vals, n)
               val codec = LongCodecs.select(st)
-              writeCol(nm, kind, codec.encode(vals, n), codec.name,
+              writeCol(b, codec.encode(vals, n), codec.name,
                 8L * n, st.min, st.max, hasRange, bm, nullCount)
             }
           case s: StrBuffer =>
-            val strs = new Array[String](n)
-            s.vals.copyToArray(strs, 0, n)
-            val st = StringCodecs.stats(strs, n)
-            val (codec, block) = StringCodecs.encodeBest(strs, n, st,
+            val strs = s.column(n)
+            val st = StringCodecs.stats(strs)
+            val (codec, block) = StringCodecs.encodeBest(strs, st,
               fsstStates.computeIfAbsent(nm, _ => new StringCodecs.FsstState))
             // null rows hold the "" placeholder in the block (the digest
             // and string zone stats include it — "" can only widen a
             // dict/range, never exclude a real value, so pruning stays
             // sound)
-            writeCol(nm, kind, block, codec.name, st.totalBytes,
+            writeCol(b, block, codec.name, st.totalBytes,
               nullBm = bm, nullCount = nullCount)
-            val (dict, range) = strZoneStats(strs, n)
+            val (dict, range) = strZoneStats(strs)
             dict.foreach(d => chunkStrDicts = chunkStrDicts.updated(nm, d))
             range.foreach(r => chunkStrRanges = chunkStrRanges.updated(nm, r))
           case bb: BinBuffer =>
@@ -471,7 +473,7 @@ object ColumnarEngine {
             var raw = 0L
             var i = 0
             while (i < n) { raw += vals(i).length; i += 1 }
-            writeCol(nm, kind, BytesCodecs.encodeBinary(vals, n), "bin-raw", raw,
+            writeCol(b, BytesCodecs.encodeBinary(vals, n), "bin-raw", raw,
               nullBm = bm, nullCount = nullCount)
           case f: FltBuffer =>
             // packed little-endian IEEE-754
@@ -480,7 +482,7 @@ object ColumnarEngine {
             var raw = 0L
             var i = 0
             while (i < n) { raw += 4L * vals(i).length; i += 1 }
-            writeCol(nm, kind, BytesCodecs.encodeFloats(vals, n), "f32-raw", raw,
+            writeCol(b, BytesCodecs.encodeFloats(vals, n), "f32-raw", raw,
               nullBm = bm, nullCount = nullCount)
         }
         b.clear()
@@ -501,40 +503,59 @@ object ColumnarEngine {
       * pure ASCII and short — proofs, never guesses (see [[Manifests]]).
       * Length caps short-circuit first, so wide columns (content) cost
       * O(1) per value here.
+      *
+      * The value set is gathered first, skipping a value equal to its
+      * predecessor. While it is complete, the range is judged on its
+      * values alone; only the rows past its overflow are scanned for the
+      * range. Values compare as bytes (for ASCII that is String order);
+      * only recorded values become Strings, and the set is sorted in
+      * String order.
       */
-    private def strZoneStats(vals: Array[String], n: Int)
+    private def strZoneStats(col: Utf8Column)
         : (Option[Seq[String]], Option[(String, String)]) = {
-      val seen = new java.util.LinkedHashSet[String]()
+      val n = col.n
+      val seen = new Utf8Dict(col, Manifests.StrDictCap)
       var dictOk = true
-      var rangeOk = true
-      var min: String = null
-      var max: String = null
       var i = 0
-      while (i < n && (dictOk || rangeOk)) {
-        val v = vals(i)
-        if (v.length > Manifests.StrValueCap) { dictOk = false; rangeOk = false }
-        else {
-          if (dictOk) {
-            seen.add(v)
-            if (seen.size > Manifests.StrDictCap) dictOk = false
-          }
-          if (rangeOk) {
-            var j = 0
-            while (rangeOk && j < v.length) {
-              if (v.charAt(j) >= 0x80) rangeOk = false
-              j += 1
-            }
-            if (rangeOk) {
-              if (min == null || v.compareTo(min) < 0) min = v
-              if (max == null || v.compareTo(max) > 0) max = v
-            }
-          }
-        }
+      while (i < n && dictOk) {
+        if (tooLong(col, i)) return (None, None)
+        if ((i == 0 || !col.same(i, i - 1)) && seen.add(i) < 0) dictOk = false
+        else i += 1
+      }
+      var min = -1
+      var max = -1
+      def inRange(r: Int): Boolean = ascii(col, r) && {
+        if (min < 0 || compare(col, r, min) < 0) min = r
+        if (max < 0 || compare(col, r, max) > 0) max = r
+        true
+      }
+      var rangeOk = (0 until seen.size).forall(c => inRange(seen.rowOf(c)))
+      // rows past the value set's overflow: the range alone
+      while (i < n && rangeOk) {
+        if (tooLong(col, i)) return (None, None)
+        if (!col.same(i, i - 1)) rangeOk = inRange(i)
         i += 1
       }
-      (if (dictOk && i == n) Some(seen.iterator().asScala.toSeq.sorted) else None,
-       if (rangeOk && i == n && min != null) Some((min, max)) else None)
+      (if (dictOk)
+         Some((0 until seen.size).map(c => col.string(seen.rowOf(c))).distinct.sorted)
+       else None,
+       if (rangeOk && min >= 0) Some((col.string(min), col.string(max))) else None)
     }
+
+    private def tooLong(col: Utf8Column, i: Int): Boolean =
+      col.lens(i) > Manifests.StrValueCap &&
+        Utf8Column.utf16Length(col.pool, col.offsets(i), col.lens(i)) > Manifests.StrValueCap
+
+    private def ascii(col: Utf8Column, i: Int): Boolean = {
+      var j = col.offsets(i)
+      val end = j + col.lens(i)
+      while (j < end && col.pool(j) >= 0) j += 1 // a byte >= 0x80 is negative
+      j == end
+    }
+
+    private def compare(col: Utf8Column, i: Int, j: Int): Int =
+      java.util.Arrays.compareUnsigned(col.pool, col.offsets(i), col.offsets(i) + col.lens(i),
+        col.pool, col.offsets(j), col.offsets(j) + col.lens(j))
 
     private def wrongLane(b: ColumnBuffer, lane: String): Nothing =
       throw new IllegalArgumentException(
@@ -553,19 +574,41 @@ object ColumnarEngine {
       case b => wrongLane(b, "long")
     }
 
-    /** A string value; `null` is [[putNull]]. */
-    def putString(c: Int, v: String): Unit = bufs(c) match {
-      case _ if v == null => putNull(c)
+    /** A string value; `null` is [[putNull]]. Converts to UTF-8 once,
+      * here (an unpaired surrogate becomes '?', as `getBytes` does).
+      */
+    def putString(c: Int, v: String): Unit =
+      if (v == null) putNull(c)
+      else {
+        val b = v.getBytes(UTF_8)
+        putUtf8(c, b, Platform.BYTE_ARRAY_OFFSET, b.length)
+      }
+
+    /** A Spark string value, copied byte for byte: invalid UTF-8 is
+      * stored as it is, and reads return the same bytes. `null` is
+      * [[putNull]].
+      */
+    def putUtf8(c: Int, v: UTF8String): Unit =
+      if (v == null) putNull(c)
+      else putUtf8(c, v.getBaseObject, v.getBaseOffset, v.numBytes)
+
+    /** The string whose `len` UTF-8 bytes start at address `off` of
+      * `base` (a byte array with [[Platform.BYTE_ARRAY_OFFSET]], or an
+      * off-heap base).
+      */
+    private def putUtf8(c: Int, base: AnyRef, off: Long, len: Int): Unit = bufs(c) match {
       case b: StrBuffer =>
-        require(v.length <= MaxValueChars,
+        val at = b.append(bufN, len)
+        Platform.copyMemory(base, off, b.pool, Platform.BYTE_ARRAY_OFFSET + at, len)
+        require(len <= MaxValueChars ||
+          Utf8Column.utf16Length(b.pool, at, len) <= MaxValueChars,
           s"string value exceeds MaxValueChars ($MaxValueChars) in column " +
             s"'${b.spec.name}' of partition $part")
-        b.vals += v
         // ALL string bytes count toward the flush threshold (not just
         // content): that is what bounds every encoded block under
         // [[ContainerFormat.MaxBlockBytes]] (256 MiB — sized for the 3x
         // worst-case UTF-8 expansion of a chunk's chars) on wide tables
-        bufBytes += v.length
+        bufBytes += len
         rowPuts += 1
       case b => wrongLane(b, "string")
     }
@@ -609,7 +652,20 @@ object ColumnarEngine {
         s"row has $rowPuts puts for ${bufs.length} columns (partition $part)")
       rowPuts = 0
       bufN += 1
-      if (bufN >= chunkRowsCap || bufBytes >= ChunkContentBytes) flushChunk()
+      if (bufN >= chunkRowsCap ||
+          (bufBytes >= ChunkContentBytes && contentSize >= ChunkContentBytes)) flushChunk()
+    }
+
+    /** The chunk's value size as the flush threshold measures it: strings
+      * in UTF-16 chars, everything else in bytes. Chars never exceed
+      * UTF-8 bytes, so [[bufBytes]] bounds it and chars are counted only
+      * once that bound reaches the threshold.
+      */
+    private def contentSize: Long = {
+      var size = bufBytes
+      var k = 0
+      while (k < strBufs.length) { size += strBufs(k).chars() - strBufs(k).used; k += 1 }
+      size
     }
 
     /** The one Spark-value -> stored-value conversion: field `c` of `row`,
@@ -640,7 +696,8 @@ object ColumnarEngine {
         case Lane.Doubles => putLong(c, DoubleBits.toSortableLong(d.doubles(j)))
         case Lane.Bytes =>
           val u = d.bytes
-          if (kinds(c).stored == Stored.Utf8) putString(c, u.string(j))
+          if (kinds(c).stored == Stored.Utf8)
+            putUtf8(c, u.pool, Platform.BYTE_ARRAY_OFFSET + u.offsets(j), u.lens(j))
           else putBinary(c, java.util.Arrays.copyOfRange(
             u.pool, u.offsets(j), u.offsets(j) + u.lens(j)))
         case Lane.Floats => putFloats(c, d.floats.slice(j))
@@ -676,7 +733,7 @@ object ColumnarEngine {
         // never interleave writes into one tmp file before the atomic rename
         ContainerIO.writeAtomic(conf,
           s"$outDir/blocks/.tmp-part-$name-a$attemptId",
-          s"$outDir/blocks/part-$name.gblk", w.result())
+          s"$outDir/blocks/part-$name.gblk", w.result(), checksummed = false)
       }
       val cols = {
         val b = Seq.newBuilder[ColumnMetric]
@@ -708,6 +765,7 @@ object ColumnarEngine {
     private sealed abstract class ColumnBuffer(val spec: ColumnSpec) {
       /** Block group: 0 numeric, 1 string, 2 binary, 3 float array. */
       def group: Int
+      val nameBytes: Array[Byte] = spec.name.getBytes(UTF_8)
       var nulls: Array[Byte] = null
       var nullCount = 0
       protected def putPlaceholder(r: Int): Unit
@@ -725,7 +783,7 @@ object ColumnarEngine {
 
     private object ColumnBuffer {
       def apply(s: ColumnSpec, chunkRowsCap: Int): ColumnBuffer = Kinds(s.kind).stored match {
-        case Stored.Utf8 => new StrBuffer(s)
+        case Stored.Utf8 => new StrBuffer(s, chunkRowsCap)
         case Stored.Binary => new BinBuffer(s)
         case Stored.FloatArray => new FltBuffer(s)
         case Stored.WideLong | Stored.NarrowInt => new LongBuffer(s, chunkRowsCap)
@@ -755,9 +813,59 @@ object ColumnarEngine {
       protected def putPlaceholder(r: Int): Unit = vals += placeholder
       override def clear(): Unit = { super.clear(); vals.clear() }
     }
-    // the "" placeholder is part of the digest and string zone stats
-    private final class StrBuffer(spec: ColumnSpec)
-        extends RefBuffer[String](spec, "") { def group = 1 }
+    /** UTF-8 strings: one byte pool plus per-row offsets and lengths, the
+      * write-side twin of [[Utf8Column]]. A NULL row holds the empty
+      * string, which is part of the digest and string zone stats.
+      */
+    private final class StrBuffer(spec: ColumnSpec, maxRows: Int)
+        extends ColumnBuffer(spec) {
+      def group = 1
+      var pool = new Array[Byte](1 << 14)
+      var used = 0
+      var offsets = new Array[Int](math.min(maxRows, 1024))
+      var lens = new Array[Int](offsets.length)
+      // UTF-16 chars of pool(0 until counted), counted on demand
+      private var counted = 0
+      private var charCount = 0L
+
+      /** Room for row r's `len` bytes; returns their pool offset. */
+      def append(r: Int, len: Int): Int = {
+        if (r == offsets.length) {
+          val cap = math.min(maxRows.toLong, 2L * r).toInt
+          offsets = java.util.Arrays.copyOf(offsets, cap)
+          lens = java.util.Arrays.copyOf(lens, cap)
+        }
+        if (len > pool.length - used) {
+          val cap = math.max(used.toLong + len, 2L * pool.length)
+          pool = java.util.Arrays.copyOf(pool, math.min(cap, Int.MaxValue - 16L).toInt)
+        }
+        offsets(r) = used
+        lens(r) = len
+        used += len
+        offsets(r)
+      }
+      protected def putPlaceholder(r: Int): Unit = append(r, 0)
+
+      /** UTF-16 chars of the buffered values. */
+      def chars(): Long = {
+        charCount += Utf8Column.utf16Length(pool, counted, used - counted)
+        counted = used
+        charCount
+      }
+
+      /** The first n rows as a column over the pool. */
+      def column(n: Int): Utf8Column =
+        if (n == offsets.length) new Utf8Column(pool, offsets, lens)
+        else new Utf8Column(pool, java.util.Arrays.copyOf(offsets, n),
+          java.util.Arrays.copyOf(lens, n))
+
+      override def clear(): Unit = {
+        super.clear()
+        used = 0
+        counted = 0
+        charCount = 0L
+      }
+    }
     private final class BinBuffer(spec: ColumnSpec)
         extends RefBuffer[Array[Byte]](spec, EmptyBytes) { def group = 2 }
     private final class FltBuffer(spec: ColumnSpec)

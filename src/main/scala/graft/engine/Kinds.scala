@@ -193,7 +193,7 @@ private[graft] sealed abstract class Kind(val id: Int, val sparkType: DataType,
     case 8 => enc.putLong(c, row.getDecimal(c, s.precision, s.scale).toUnscaledLong)
     case 9 => enc.putLong(c, if (row.getBoolean(c)) 1L else 0L)
     case 10 => enc.putLong(c, FloatBits.toSortableInt(row.getFloat(c)).toLong)
-    case 1 => enc.putString(c, row.getUTF8String(c).toString)
+    case 1 => enc.putUtf8(c, row.getUTF8String(c))
     case 6 => enc.putBinary(c, row.getBinary(c))
     case 7 =>
       // the stored shape is a dense vector: a null element would

@@ -279,12 +279,11 @@ object Manifests {
     * generation lexically older, and consolidate's `commitId < maxKept`
     * cleanup would then permanently delete the newer generation in the
     * crash-window case.
-    */
-  def newCommitId(conf: Configuration, tableDir: String): String =
-    commitIdAbove(readCommitted(conf, tableDir))
-
-  /** A fresh commit id whose generation field orders above every
-    * manifest of `ms` (see [[newCommitId]]).
+    *
+    * The id's generation field orders above every manifest of `ms`: the
+    * snapshot the commit's [[commitIndex]] first builds on
+    * ([[readCommittedVersion]]), so the id costs no index read of its
+    * own.
     */
   def commitIdAbove(ms: Seq[TableManifest]): String = {
     val prev = ms.iterator.map(m => generation(m.commitId)).maxOption.getOrElse(0L)
@@ -586,6 +585,7 @@ object Manifests {
     * would let the next commit publish that emptiness over the table.
     */
   private def parseIndex(bytes: Array[Byte], where: String): Seq[TableManifest] = {
+    indexReadCounter.incrementAndGet()
     val root =
       try Json.readTree(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
       catch {
@@ -682,9 +682,11 @@ object Manifests {
     */
   val chunkLoadCounter = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Observability seam: per-process count of committed-snapshot reads
-    * ([[readCommitted]], [[readCommittedAt]]) — the planning tests
-    * assert how many times one query or write reads the index.
+  /** Observability seam: per-process count of manifest-index parses
+    * (every committed-snapshot read, time-travel read, commit attempt
+    * and retained-snapshot scan parses one index body) — the planning
+    * and commit tests assert how many times one query, write or
+    * maintenance call parses the index.
     */
   val indexReadCounter = new java.util.concurrent.atomic.AtomicLong()
 
@@ -821,11 +823,15 @@ object Manifests {
     * commit replaced.
     */
   def commitIndex(conf: Configuration, tableDir: String,
-                  transform: Seq[TableManifest] => Seq[TableManifest]): Seq[TableManifest] = {
+                  transform: Seq[TableManifest] => Seq[TableManifest],
+                  base: Option[(Long, Seq[TableManifest])] = None): Seq[TableManifest] = {
     var attempts = 0
+    // the first attempt builds on `base` (the caller's own
+    // [[readCommittedVersion]]) when given; only a lost claim re-reads
+    var snapshot = base
     while (attempts < 64) {
-      val (ver, cur) = readIndexSnapshot(conf, tableDir).getOrElse(
-        (-1L, normalizeFallback(listedManifests(conf, tableDir))))
+      val (ver, cur) = snapshot.getOrElse(readCommittedVersion(conf, tableDir))
+      snapshot = None
       val next = ver + 1
       beforeClaimHook()
       if (ContainerIO.createExclusive(conf,
@@ -904,13 +910,17 @@ object Manifests {
     * index snapshot exists (highest version wins), else a `manifests/`
     * listing + per-file reads (mid-encode resume, disaster recovery).
     */
-  def readCommitted(conf: Configuration, tableDir: String): Seq[TableManifest] = {
-    indexReadCounter.incrementAndGet()
-    readIndexSnapshot(conf, tableDir) match {
-      case Some((_, ms)) => ms
-      case None => normalizeFallback(listedManifests(conf, tableDir))
-    }
-  }
+  def readCommitted(conf: Configuration, tableDir: String): Seq[TableManifest] =
+    readCommittedVersion(conf, tableDir)._2
+
+  /** [[readCommitted]] with the index version it read: -1 when the
+    * table has no index yet (the `manifests/` listing answered). A
+    * commit passes both to [[commitIndex]] as its first snapshot.
+    */
+  def readCommittedVersion(conf: Configuration,
+                           tableDir: String): (Long, Seq[TableManifest]) =
+    readIndexSnapshot(conf, tableDir).getOrElse(
+      (-1L, normalizeFallback(listedManifests(conf, tableDir))))
 
   // -------------------------------------------------------- time travel
 
@@ -921,7 +931,6 @@ object Manifests {
     */
   def readCommittedAt(conf: Configuration, tableDir: String,
                       version: Long): Seq[TableManifest] = {
-    indexReadCounter.incrementAndGet()
     val name = versionedIndexName(version)
     val available = versionedIndexes(conf, tableDir)
     if (!available.exists(_._1 == version))
@@ -960,13 +969,15 @@ object Manifests {
         s"timestamp $tsMillis"))
   }
 
-  /** Names referenced by ANY retained index version (latest included):
-    * vacuum's reference set, so a block only a retained time-travel
-    * snapshot still needs survives the sweep. An unreadable or corrupt
-    * snapshot body references nothing.
+  /** Names referenced by any retained index version other than
+    * `except` (the version the caller already read): vacuum's reference
+    * set, so a block only a retained time-travel snapshot still needs
+    * survives the sweep. An unreadable or corrupt snapshot body
+    * references nothing.
     */
-  def retainedSnapshotNames(conf: Configuration, tableDir: String): Set[String] =
-    versionedIndexes(conf, tableDir).iterator.flatMap { case (_, n) =>
+  def retainedSnapshotNames(conf: Configuration, tableDir: String,
+                            except: Long): Set[String] =
+    versionedIndexes(conf, tableDir).iterator.filter(_._1 != except).flatMap { case (_, n) =>
       val ms =
         try {
           val bytes = ContainerIO.readAll(conf, s"$tableDir/$n")

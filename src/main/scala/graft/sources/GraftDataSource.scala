@@ -299,11 +299,11 @@ object GraftDataSource {
     pmodInt(org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(v, 42), n)
   private[sources] def bucketIdOfInt(v: Int, n: Int): Int =
     pmodInt(org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(v, 42), n)
-  private[sources] def bucketIdOfString(v: String, n: Int): Int = {
-    val u = UTF8String.fromString(v)
+  private[sources] def bucketIdOfString(v: String, n: Int): Int =
+    bucketIdOfUtf8(UTF8String.fromString(v), n)
+  private[sources] def bucketIdOfUtf8(u: UTF8String, n: Int): Int =
     pmodInt(org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(
       u.getBaseObject, u.getBaseOffset, u.numBytes(), 42), n)
-  }
   @inline private def pmodInt(h: Int, n: Int): Int = ((h % n) + n) % n
 
   /** Bucket id of a pushed filter constant for column `col` of a
@@ -1731,7 +1731,8 @@ private[sources] object GraftCommits {
     // crash window leaves two generations of an epoch on disk, and the
     // per-epoch container count lets it tell a complete generation from
     // a publish that crashed mid-way through its manifest writes
-    val commitId = Manifests.newCommitId(conf, path)
+    val base = Manifests.readCommittedVersion(conf, path)
+    val commitId = Manifests.commitIdAbove(base._2)
     def epochOf(name: String) = Manifests.epochKey(Manifests.logicalName(name))
     val raw = messages.collect {
       case m: GraftCommitMessage if m.manifest.rows > 0 => m.manifest
@@ -1771,7 +1772,7 @@ private[sources] object GraftCommits {
       val kept =
         if (truncate) Nil else old.filterNot(m => activeEpochs(epochOf(m.name)))
       kept ++ active
-    })
+    }, Some(base))
     catch {
       case e: SchemaEvolutionConflict =>
         // the commit markers written above must not linger: invisible to
@@ -1937,8 +1938,7 @@ class GraftDataWriter(path: String, part: Int, epoch: String,
         val id = lane match {
           case Lane.Longs => GraftDataSource.bucketIdOfLong(row.getLong(pos), bn)
           case Lane.Ints => GraftDataSource.bucketIdOfInt(row.getInt(pos), bn)
-          case _ => GraftDataSource.bucketIdOfString( // Lane.Bytes
-            row.getUTF8String(pos).toString, bn)
+          case _ => GraftDataSource.bucketIdOfUtf8(row.getUTF8String(pos), bn) // Lane.Bytes
         }
         bucketSeen(b) += id
       }

@@ -702,7 +702,8 @@ object GraftMaintenance {
                              newManifests: Seq[TableManifest],
                              what: String, reclaimConsumed: Boolean,
                              afterStage: () => Unit): Unit = {
-    val commitId = Manifests.newCommitId(conf, path)
+    val base = Manifests.readCommittedVersion(conf, path)
+    val commitId = Manifests.commitIdAbove(base._2)
     val stamped = newManifests.map(_.copy(commitId = commitId))
     val newNames = stamped.map(_.name).toSet
     // containers WITHOUT ancestors (UPSERT's appended source) are plain
@@ -737,7 +738,7 @@ object GraftMaintenance {
         val adoptedNames = adopted.map(_.name).toSet
         old.filterNot(m => consumed(m.name)) ++
           stamped.filterNot(m => adoptedNames(m.name))
-      })
+      }, Some(base))
     } catch {
       case e @ (_: CompactionConflict | _: SchemaEvolutionConflict) =>
         // drop the staged generation — but ONLY the part the live index
@@ -914,7 +915,9 @@ object GraftMaintenance {
         chunks = 0, rawBytes = 0L, encodedBytes = 0L, digest = "",
         schemaCols = mutated.map(s => (s.name, s.packed)), digestCol = "",
         commitId = commitId, schemaMarker = true)
-    var marker = mkMarker(Manifests.newCommitId(conf, path))
+    // the commit builds on the snapshot read above; a lost claim re-reads
+    val base = (snap.version, snap.all)
+    var marker = mkMarker(Manifests.commitIdAbove(snap.all))
     Manifests.writeManifest(conf, path, marker, 0L)
     beforeCommit()
     try Manifests.commitIndex(conf, path, old => {
@@ -923,7 +926,7 @@ object GraftMaintenance {
       recheck(cur, idx)
       // last-commit-wins label resolution: the marker must outrank
       // EVERY manifest in the snapshot this commit actually lands on.
-      // An append that committed between our newCommitId and here
+      // An append that committed between our base read and here
       // carries a HIGHER id under the OLD label, and the rename would
       // report success but be silently reverted (round-8 advice,
       // medium). Regenerate above the snapshot's max — re-checked on
@@ -940,7 +943,7 @@ object GraftMaintenance {
           Manifests.manifestPath(path, stale.name)), false)
       }
       old :+ marker
-    })
+    }, Some(base))
     catch {
       case e: SchemaEvolutionConflict =>
         ContainerIO.fs(path, conf).delete(new org.apache.hadoop.fs.Path(
@@ -979,7 +982,7 @@ object GraftMaintenance {
     // committed data, not orphans
     val committedMs = snap.all
     val committedNames = committedMs.map(_.name) ++
-      Manifests.retainedSnapshotNames(c, path)
+      Manifests.retainedSnapshotNames(c, path, except = snap.version)
     val committedRefs = committedNames.toSet
     // SUPERSEDED generations (round 9): a delete keeps the consumed
     // generation's files so retained snapshots still time-travel to the
@@ -991,7 +994,7 @@ object GraftMaintenance {
     // `delete` → `expire_snapshots` → `vacuum` removes deleted rows
     // from storage. Without a live index nothing is judged (disaster
     // recovery keeps everything).
-    val indexLive = Manifests.readIndexSnapshot(c, path).isDefined
+    val indexLive = snap.version >= 0
     val ancestorCover = committedMs.flatMap(_.ancestors).toSet
     def superseded(n: String): Boolean = indexLive && !committedRefs(n) &&
       ancestorCover(Manifests.epochKey(Manifests.logicalName(n)))

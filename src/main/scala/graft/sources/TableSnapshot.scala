@@ -35,12 +35,13 @@ private[sources] final class TableSnapshot(val path: String,
         s"corrupt graft table metadata under $path", e)
     }
 
-  /** Every committed manifest: data containers, schema markers and
+  /** The index version read (-1 when the table has no index yet) and
+    * every committed manifest: data containers, schema markers and
     * zero-row tombstones.
     */
-  val all: Seq[TableManifest] = controlled(
-    asOf.fold(Manifests.readCommitted(conf, path))(
-      Manifests.readCommittedAt(conf, path, _)))
+  val (version: Long, all: Seq[TableManifest]) = controlled(
+    asOf.fold(Manifests.readCommittedVersion(conf, path))(v =>
+      (v, Manifests.readCommittedAt(conf, path, v))))
 
   /** The data containers (schema markers and tombstones hold no rows). */
   val committed: Seq[TableManifest] =

@@ -16,6 +16,14 @@ class FakeS3FileSystem extends RawLocalFileSystem {
   override def getUri: URI = URI.create("fakes3:///")
 }
 
+/** Local filesystem under a rename-atomic cluster scheme: the Hadoop
+  * tmp+rename commit path, with no `file`-scheme shortcut.
+  */
+class FakeHdfsFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = "fakehdfs"
+  override def getUri: URI = URI.create("fakehdfs:///")
+}
+
 class ContainerIOSpec extends AnyFunSuite {
 
   private def fakeS3Conf(): Configuration = {
@@ -56,5 +64,40 @@ class ContainerIOSpec extends AnyFunSuite {
     assert(ContainerIO.readAll(conf, dst).toSeq === Seq[Byte](7, 8))
     assert(!new java.io.File(s"$dir/.part-0.gblk.tmp").exists,
       "tmp must be renamed away")
+  }
+
+  test("file scheme: mkdirs and unchecksummed block writes go through java.nio, first commit wins") {
+    val conf = new Configuration()
+    val dir = java.nio.file.Files.createTempDirectory("graft-nio").toString
+    ContainerIO.mkdirs(conf, s"file:$dir/a/b")
+    assert(new java.io.File(s"$dir/a/b").isDirectory)
+    ContainerIO.mkdirs(conf, s"$dir/a/b") // existing: no-op
+    val dst = s"file:$dir/a/b/part-0.gblk"
+    val tmp = s"file:$dir/a/b/.tmp-part-0-a1"
+    ContainerIO.writeAtomic(conf, tmp, dst, Array[Byte](1, 2), checksummed = false)
+    assert(ContainerIO.readAll(conf, dst).toSeq === Seq[Byte](1, 2))
+    // a second attempt loses to the first commit and leaves nothing behind
+    ContainerIO.writeAtomic(conf, tmp, dst, Array[Byte](3), checksummed = false)
+    assert(ContainerIO.readAll(conf, dst).toSeq === Seq[Byte](1, 2))
+    assert(new java.io.File(s"$dir/a/b").list().toSet === Set("part-0.gblk"),
+      "no tmp file and no .crc sidecar")
+    // checksummed writes (commit markers) keep Hadoop's .crc sidecar
+    ContainerIO.writeAtomic(conf, s"file:$dir/a/.tmp-m", s"file:$dir/a/m.json",
+      Array[Byte](4))
+    assert(new java.io.File(s"$dir/a/.m.json.crc").exists)
+    assert(ContainerIO.readAll(conf, s"file:$dir/a/m.json").toSeq === Seq[Byte](4))
+  }
+
+  test("other rename-atomic schemes keep the Hadoop mkdirs and tmp+rename write") {
+    val conf = new Configuration(false)
+    conf.set("fs.fakehdfs.impl", classOf[FakeHdfsFileSystem].getName)
+    val dir = java.nio.file.Files.createTempDirectory("graft-fakehdfs").toString
+    ContainerIO.mkdirs(conf, s"fakehdfs://$dir/blocks")
+    assert(new java.io.File(s"$dir/blocks").isDirectory)
+    val dst = s"fakehdfs://$dir/blocks/part-0.gblk"
+    ContainerIO.writeAtomic(conf, s"fakehdfs://$dir/blocks/.tmp-part-0", dst,
+      Array[Byte](5, 6), checksummed = false)
+    assert(ContainerIO.readAll(conf, dst).toSeq === Seq[Byte](5, 6))
+    assert(new java.io.File(s"$dir/blocks").list().toSet === Set("part-0.gblk"))
   }
 }

@@ -284,6 +284,38 @@ class GraftSourceSpec extends AnyFunSuite {
       GraftMaintenance.delete(spark, d, "id < 0") === 0L)) === 1L)
   }
 
+  test("one index parse per uncontended commit and per vacuum") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.engine.Manifests
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("tag", StringType, nullable = false)))
+    val d = java.nio.file.Files.createTempDirectory("graft-commitreads").toString
+    def rows(from: Int) = spark.createDataFrame(spark.sparkContext.parallelize(
+      (from until from + 100).map(i => Row(i.toLong, s"t${i % 5}")), 2), schema)
+    rows(0).write.format("graft").mode("overwrite").save(d)
+    def parsesDuring(body: => Any): Long = {
+      val before = Manifests.indexReadCounter.get()
+      body
+      Manifests.indexReadCounter.get() - before
+    }
+    // the write builder resolves the schema (1); the commit derives its
+    // id from its own snapshot read (1) and claims the next version on it
+    assert(parsesDuring(rows(100).write.format("graft").mode("append").save(d)) === 2L)
+    // a mutation plans on its snapshot (1) and commits on a fresh read (1)
+    assert(parsesDuring(assert(
+      GraftMaintenance.delete(spark, d, "id < 10") === 10L)) === 2L)
+    // a rename commits on the snapshot it validated against
+    assert(parsesDuring(GraftMaintenance.renameColumn(spark, d, "tag", "label")) === 1L)
+    // vacuum parses the current index once, plus each OTHER retained version
+    val retained = new java.io.File(d).listFiles().count(f =>
+      f.getName.matches("""_manifest-index\.v\d+\.json""") && f.length > 0) - 1
+    assert(retained === 3)
+    assert(parsesDuring(GraftMaintenance.vacuum(spark, d, graceMs = 0L)) === 1L + retained)
+    assert(spark.read.format("graft").load(d).count() === 190L)
+  }
+
   test("SQL surface: CREATE TABLE USING graft, pushdown visible in EXPLAIN") {
     spark.sql("DROP TABLE IF EXISTS graft_sql_t")
     spark.sql(s"CREATE TABLE graft_sql_t USING graft OPTIONS (path '$dir')")

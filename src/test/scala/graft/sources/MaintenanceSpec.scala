@@ -219,7 +219,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // generation, not the newer partial
     val partial = graft.engine.TableManifest("q-e1-0-a77", 0, 30L, 1, 100L, 80L, "",
       idTagCols, "tag", chunkIndex = oneChunk(30),
-      commitId = Manifests.newCommitId(conf, d), commitParts = 2)
+      commitId = Manifests.commitIdAbove(Manifests.readCommitted(conf, d)), commitParts = 2)
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-partial",
       Manifests.manifestPath(d, partial.name),
       Manifests.toJson(partial).getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -500,7 +500,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // (the round-8 low advice window) — the listing fallback would treat
     // it as a committed rename of b -> c
     val specs = GraftDataSource.currentSpecsOf(Manifests.readCommitted(conf, d))
-    val orphanId = Manifests.newCommitId(conf, d)
+    val orphanId = Manifests.commitIdAbove(Manifests.readCommitted(conf, d))
     val orphan = graft.engine.TableManifest(name = s"schemamarker-$orphanId-0",
       part = 0, rows = 0L, chunks = 0, rawBytes = 0L, encodedBytes = 0L, digest = "",
       schemaCols = specs.map(s =>
@@ -745,9 +745,9 @@ class MaintenanceSpec extends AnyFunSuite {
       commitId = f"$future%013d-deadbeef")
     Manifests.writeManifest(conf, d, m, 0L)
     Manifests.commitIndex(conf, d, _ => Seq(m))
-    val id = Manifests.newCommitId(conf, d)
+    val id = Manifests.commitIdAbove(Manifests.readCommitted(conf, d))
     assert(id.takeWhile(_.isDigit).toLong > future,
-      s"newCommitId must order above every committed predecessor, got $id")
+      s"commitIdAbove must order above every committed predecessor, got $id")
   }
 
   test("compaction run ids can never collapse under double epochKey") {
@@ -778,7 +778,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // job/stream retries it anyway
     val partial = graft.engine.TableManifest("q-e7-0-a91", 0, 30L, 1, 100L, 80L, "",
       idTagCols, "tag", chunkIndex = oneChunk(30),
-      commitId = Manifests.newCommitId(conf, d), commitParts = 2)
+      commitId = Manifests.commitIdAbove(Manifests.readCommitted(conf, d)), commitParts = 2)
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-partial7",
       Manifests.manifestPath(d, partial.name),
       Manifests.toJson(partial).getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -102,4 +102,28 @@ class Utf8GoldenSpec extends AnyFunSuite {
     }
     assert(m.chunkIndex.forall(_.strDicts("run") === Seq("naïve")))
   }
+
+  test("invalid UTF-8 is stored and read back byte for byte, also through a rewrite") {
+    // the write path copies Spark's UTF-8 bytes as they are (no U+FFFD
+    // replacement): a malformed 2-byte sequence, a stray 0xFF, an encoded
+    // surrogate (ED A0 80) and the empty string
+    val hexes = Seq("61C328FF62", "EDA080", "", "C3A9")
+    val d = Files.createTempDirectory("graft-utf8-invalid").toString
+    def write(mode: String): Unit =
+      spark.createDataFrame(spark.sparkContext.parallelize(
+          hexes.zipWithIndex.map { case (h, i) => Row(i.toLong, h) }, 1),
+          StructType(Seq(StructField("id", LongType, nullable = false),
+            StructField("h", StringType, nullable = false))))
+        .selectExpr("id", "cast(unhex(h) as string) as s")
+        .write.format("graft").mode(mode).save(d)
+    def readBack(): Seq[String] =
+      spark.read.format("graft").load(d).orderBy("id")
+        .selectExpr("hex(cast(s as binary))").collect().map(_.getString(0)).toSeq
+    write("overwrite")
+    assert(readBack() === hexes)
+    write("append")
+    GraftMaintenance.compact(spark, d)
+    assert(readBack() === hexes.flatMap(h => Seq(h, h)))
+    assert(spark.read.format("graft").load(d).filter("s = 'é'").count() === 2L)
+  }
 }
