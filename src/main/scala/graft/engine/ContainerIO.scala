@@ -120,6 +120,7 @@ object ContainerIO {
     val local = if (checksummed) None else localPath(f, d)
     if (local.isDefined) {
       val t = localPath(f, new Path(tmp)).get
+      java.nio.file.Files.createDirectories(t.getParent) // as Hadoop's create does
       java.nio.file.Files.write(t, bytes)
       try java.nio.file.Files.createLink(local.get, t)
       catch { case _: java.nio.file.FileAlreadyExistsException => () } // lost the race
