@@ -1,11 +1,12 @@
 package graft.engine
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.codecs._
 import graft.core.BlockWriter
+import graft.sources.GraftDataSource
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -66,10 +67,11 @@ object ColumnSpec {
 /** The per-column lightweight-compression engine (SURVEY.md §3.4).
   *
   * Encode job: derive integer columns with Catalyst expressions →
-  * salted `repartitionByRange` over (repo, salt, path) so giant repos
-  * can't skew a partition → `sortWithinPartitions` to maximize run
-  * lengths → `mapPartitions` chunked stats+select+encode → one block
-  * container file + one manifest (commit marker) per partition.
+  * salted hash repartition over (repo, salt) so giant repos can't skew a
+  * partition → `sortWithinPartitions` to maximize run lengths → one
+  * `format("graft")` overwrite: each task's chunked stats+select+encode
+  * stages one block container, and the job commit publishes their
+  * manifests (commit markers) and one OCC index version.
   *
   * Decode job: `binaryFile` scan of containers → per-chunk codec decode →
   * typed rows, with each chunk's sha256-of-row-sha256s digest recomputed
@@ -176,12 +178,12 @@ object ColumnarEngine {
     * Deliberately HASH partitioning (Murmur3, fixed seed — deterministic
     * across runs and cluster sizes), not `repartitionByRange`: Spark's
     * range partitioner derives its reservoir-sampling seed from the RDD
-    * id, so range boundaries drift between job runs — which would break
-    * partition-granular checkpoint-resume (a resumed run must reproduce
-    * the exact partition membership of the failed run). The
-    * `sortWithinPartitions` below restores what the codecs actually need
-    * from range partitioning: long (repo, lang, path) runs inside each
-    * partition for RLE/dict/delta.
+    * id, so range boundaries drift between job runs. Hash partitioning
+    * plus the total (repo, lang, path) order below makes the container
+    * bytes a function of the input alone, which `graft.Bench`'s reuse of
+    * one rep's output relies on. The `sortWithinPartitions` restores what
+    * the codecs actually need from range partitioning: long
+    * (repo, lang, path) runs inside each partition for RLE/dict/delta.
     */
   def partitionForEncoding(ds: Dataset[DerivedRow], numParts: Int,
                            saltBuckets: Int = 16): Dataset[DerivedRow] = {
@@ -194,80 +196,38 @@ object ColumnarEngine {
       .as[DerivedRow]
   }
 
-  /** Resumable encode: partitions whose manifest already exists are
-    * skipped (checkpoint-resume at partition granularity; container files
-    * are written tmp-then-atomic-rename, manifest last, so a killed run
-    * leaves either nothing or a fully committed partition). Returns the
-    * manifests this run wrote, by part.
+  /** Encode `ds` as the `graft` table at `outDir`, REPLACING whatever the
+    * directory held: one DSv2 overwrite (`format("graft")`), so the
+    * containers land through the same staged write and single OCC index
+    * commit as every other table write. A failed encode leaves `outDir`
+    * as it was; a re-encode replaces it. Returns the committed manifests,
+    * by part.
+    *
+    * The rows are re-typed to [[DefaultSchema]]'s Spark schema on the
+    * way in: `derive`'s string columns are Spark-nullable, and the
+    * table's schema (hence every manifest's) must be [[DefaultSchema]],
+    * whose columns are not. A null value fails the encode, never becomes
+    * a stored value.
     */
   def encode(ds: Dataset[DerivedRow], outDir: String, numParts: Int,
              saltBuckets: Int = 16): Array[TableManifest] = {
-    val spark = ds.sparkSession
-    // all container/manifest IO goes through the Hadoop FileSystem API so
-    // outDir may be file://, hdfs://, s3a://… on a real cluster; tasks
-    // rebuild the driver's Hadoop conf from this broadcast snapshot
-    val confKv = ContainerIO.confSnapshot(spark)
-    val dconf = ContainerIO.confFrom(confKv)
-    ContainerIO.mkdirs(dconf, s"$outDir/blocks")
-    ContainerIO.mkdirs(dconf, s"$outDir/manifests")
-    // resume is only meaningful against the same partitioning layout:
-    // refuse to "resume" a run whose numParts/saltBuckets differ, instead
-    // of silently skipping partitions that never existed in this layout.
-    val jobDesc = s"$outDir/_job.json"
-    val desc = s"""{"numParts":$numParts,"saltBuckets":$saltBuckets}"""
-    if (ContainerIO.exists(dconf, jobDesc)) {
-      val prev = new String(ContainerIO.readAll(dconf, jobDesc), UTF_8)
-      require(prev == desc,
-        s"outDir $outDir was written with layout $prev; cannot resume with $desc")
-    } else ContainerIO.writeAtomic(dconf, s"$outDir/.tmp-job.json", jobDesc,
-      desc.getBytes(UTF_8))
-    val done = completedParts(outDir, dconf)
-    val doneB = spark.sparkContext.broadcast(done)
-    val confB = spark.sparkContext.broadcast(confKv)
-    val out = outDir
-    val manifests = partitionForEncoding(ds, numParts, saltBuckets)
-      .mapPartitions { it =>
-        val part = TaskContext.getPartitionId()
-        if (doneB.value.contains(part)) Iterator.empty
-        else Iterator.single(
-          encodePartition(part, it, out, ContainerIO.confFrom(confB.value)))
-      }(org.apache.spark.sql.Encoders.javaSerialization(classOf[TableManifest]))
-      .collect()
-    // consolidated manifest index: query planning over this table becomes
-    // ONE driver read instead of O(partitions); rewritten on every encode
-    // (including resumed runs) from the committed manifests on disk
-    Manifests.consolidate(dconf, outDir)
-    manifests.sortBy(_.part)
-  }
-
-  /** Partition ids with a committed manifest in outDir. */
-  def completedParts(outDir: String,
-                     conf: org.apache.hadoop.conf.Configuration =
-                       ContainerIO.localConf()): Set[Int] = {
-    ContainerIO.listNames(conf, s"$outDir/manifests").collect {
-      case name if name.startsWith("part-") && name.endsWith(".json") =>
-        name.stripPrefix("part-").stripSuffix(".json").toInt
-    }.toSet
+    partitionForEncoding(ds, numParts, saltBuckets).toDF()
+      .map(identity[Row])(Encoders.row(GraftDataSource.schema))
+      .write.format("graft").mode("overwrite").save(outDir)
+    Manifests.readCommitted(ds.sparkSession.sparkContext.hadoopConfiguration, outDir)
+      .toArray.sortBy(_.part)
   }
 
   /** Attempt id for tmp-file uniqueness; 0 outside a task (unit tests). */
   private def attemptId: Long =
     Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
 
-  private def encodePartition(part: Int, it: Iterator[DerivedRow],
-                              outDir: String,
-                              conf: org.apache.hadoop.conf.Configuration): TableManifest = {
-    val e = new PartitionEncoder(part, outDir, conf)
-    while (it.hasNext) e.add(it.next())
-    e.finish()
-  }
-
   /** Push-style single-partition encoder: one typed put per live column
-    * (`putLong`/`putString`/`putBinary`/`putFloats`/`putNull`, addressed
-    * by column index), then `endRow()`; chunks flush at the same
-    * thresholds as the pull path, and `finish` commits the container +
-    * manifest atomically. Shared by the `mapPartitions` encode job, the
-    * `graft` DataSource V2 writer and the maintenance rewrites, so none
+    * (`putLong`/`putUtf8`/`putBinary`/`putFloats`/`putNull`, addressed
+    * by column index), then `endRow()`; chunks flush at fixed row and
+    * content thresholds, and `finish` writes the container and returns
+    * its unpublished manifest. Shared by the `graft` DataSource V2 writer
+    * (hence the engine encode) and the maintenance rewrites, so none
     * buffers more than one chunk beyond the flush thresholds.
     *
     * `schema` may hold any [[ColumnSpec]] kinds
@@ -574,16 +534,6 @@ object ColumnarEngine {
       case b => wrongLane(b, "long")
     }
 
-    /** A string value; `null` is [[putNull]]. Converts to UTF-8 once,
-      * here (an unpaired surrogate becomes '?', as `getBytes` does).
-      */
-    def putString(c: Int, v: String): Unit =
-      if (v == null) putNull(c)
-      else {
-        val b = v.getBytes(UTF_8)
-        putUtf8(c, b, Platform.BYTE_ARRAY_OFFSET, b.length)
-      }
-
     /** A Spark string value, copied byte for byte: invalid UTF-8 is
       * stored as it is, and reads return the same bytes. `null` is
       * [[putNull]].
@@ -703,27 +653,12 @@ object ColumnarEngine {
         case Lane.Floats => putFloats(c, d.floats.slice(j))
       }
 
-    /** [[DerivedRow]] convenience for the engine encode job; valid only
-      * with the default schema (the column indices below ARE
-      * [[DefaultSchema]]'s order).
+    /** Flush, write the container, and build its manifest. Publication
+      * is the caller's: the DSv2 job commit ([[graft.sources.GraftBatchWrite]])
+      * or a maintenance swap, so a failed or killed write never exposes
+      * a partial table.
       */
-    def add(r: DerivedRow): Unit = {
-      putString(0, r.repo); putString(1, r.path); putString(2, r.commit)
-      putString(3, r.lang); putString(4, r.content)
-      putLong(5, r.len_content); putLong(6, r.hash64); putLong(7, r.commit_ord)
-      putLong(8, r.repo_code); putLong(9, r.lang_code); putLong(10, r.path_code)
-      endRow()
-    }
-
-    def finish(): TableManifest = finish(publishManifest = true)
-
-    /** Flush, write the container, and build the manifest. The engine
-      * encode job publishes the manifest here (partition-granular commit);
-      * the DSv2 writer passes `publishManifest = false` and defers
-      * publication to JOB commit ([[graft.sources.GraftBatchWrite]]) so a
-      * failed/killed write job never exposes a partial table.
-      */
-    def finish(publishManifest: Boolean): TableManifest = {
+    def finish(): TableManifest = {
       flushChunk()
 
       val digestHex = partDigest.digest().map(b => f"$b%02x").mkString
@@ -746,11 +681,9 @@ object ColumnarEngine {
         b.result()
       }
       val encTotal = cols.map(_.encodedBytes).sum
-      val manifest = TableManifest(name, part, rows, chunks, rawTotal, encTotal,
+      TableManifest(name, part, rows, chunks, rawTotal, encTotal,
         digestHex, schema.map(s => (s.name, s.packed)), digestCol, cols,
         chunkIndex.result())
-      if (publishManifest) Manifests.writeManifest(conf, outDir, manifest, attemptId)
-      manifest
     }
   }
 
@@ -872,9 +805,16 @@ object ColumnarEngine {
         extends RefBuffer[Array[Float]](spec, EmptyFloats) { def group = 3 }
   }
 
-  /** Manifests as a DataFrame (metrics/lineage query surface). */
-  def manifests(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.json(s"$outDir/manifests/part-*.json")
+  /** The committed snapshot's manifests as a DataFrame (metrics/lineage
+    * query surface): their commit markers, never a `manifests/` glob,
+    * which would also count a generation kept only for time travel and
+    * crash leftovers.
+    */
+  def manifests(spark: SparkSession, outDir: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    spark.read.json(Manifests.readCommitted(conf, outDir)
+      .map(m => Manifests.manifestPath(outDir, m.name)): _*)
+  }
 
   // ---------------------------------------------------------------- decode
 

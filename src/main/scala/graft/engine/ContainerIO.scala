@@ -67,9 +67,6 @@ object ContainerIO {
     ()
   }
 
-  def exists(conf: Configuration, path: String): Boolean =
-    fs(path, conf).exists(new Path(path))
-
   def readAll(conf: Configuration, path: String): Array[Byte] = {
     val p = new Path(path)
     val f = fs(path, conf)

@@ -110,9 +110,9 @@ final case class ColumnMetric(column: String, codec: String,
   * one serialization.
   *
   *  - `name`: the block-file suffix (`blocks/part-<name>.gblk`): the
-  *    numeric part id for the engine encode job, `<epoch>-<part>` (plus
-  *    the attempt suffix) for DataSource V2 writes so appends never
-  *    collide.
+  *    `<epoch>-<part>` plus the attempt suffix for DataSource V2 writes
+  *    (the engine encode among them), so appends never collide; the
+  *    maintenance rewrites name theirs `<op>-<runId>-<bin>`.
   *  - `schemaCols`: the container's own schema, (name,
   *    [[ColumnSpec.packed]] kind) in table order; `digestCol` names the
   *    string column whose per-row sha256 feeds the chunk digests
@@ -178,8 +178,8 @@ final case class TableManifest(
   * statistics, aggregate pushdown all plan from manifests, never from a
   * blocks listing).
   *
-  * `_manifest-index.v<N>.json` is a consolidated snapshot of every
-  * committed manifest, published at job commit so query planning is ONE
+  * `_manifest-index.v<N>.json` is one snapshot of every committed
+  * manifest, published at job commit so query planning is ONE
   * file read instead of O(partitions) sequential round trips (at 10^5
   * partitions the per-file listing costs minutes of driver time per
   * query). Snapshots are VERSIONED and committed with optimistic
@@ -188,10 +188,10 @@ final case class TableManifest(
   * concurrent appends — two batch jobs, or a streaming-sink epoch next
   * to a batch append — can never drop each other's manifests (round 4's
   * single-file read-modify-write could). Readers take the highest
-  * version, else list `manifests/` (mid-encode resume, disaster
-  * recovery). At true 10^12-file scale the snapshot itself would be
-  * sharded/partitioned Iceberg-style; one file per snapshot is right up
-  * to ~10^5 partitions.
+  * version, else list `manifests/` (disaster recovery: every write
+  * commits an index version). At true 10^12-file scale the snapshot
+  * itself would be sharded/partitioned Iceberg-style; one file per
+  * snapshot is right up to ~10^5 partitions.
   *
   * One codec: [[toJson]] writes a [[TableManifest]] and [[parse]] reads
   * one, both through the one shared [[Json]] mapper. An index snapshot
@@ -276,8 +276,8 @@ object Manifests {
     * driver's wall clock runs BEHIND the previous committer's (streaming
     * restart on another machine, maintenance run elsewhere). Pure wall
     * clock (pre-round-7) let a skewed-back clock stamp a newer
-    * generation lexically older, and consolidate's `commitId < maxKept`
-    * cleanup would then permanently delete the newer generation in the
+    * generation lexically older, and the listing fallback below would
+    * then keep the stale generation over the newer one in the
     * crash-window case.
     *
     * The id's generation field orders above every manifest of `ms`: the
@@ -298,11 +298,10 @@ object Manifests {
   }
 
   /** Normalize a `manifests/` LISTING into a consistent snapshot. The
-    * versioned index is the authority; the listing is the fallback
-    * (mid-encode resume, disaster recovery) and can contain stale commit
-    * markers from crash windows — a publish or compaction that died
-    * between its index commit and its cleanup deletes. Resurrecting
-    * those doubles rows, so:
+    * versioned index is the authority; the listing is the disaster-
+    * recovery fallback and can contain stale commit markers from crash
+    * windows — a publish or compaction that died between its index
+    * commit and its cleanup deletes. Resurrecting those doubles rows, so:
     *
     *  1. among PLAIN manifests (no ancestors) sharing an epoch, only
     *     the newest commit generation is kept — an epoch replay may
@@ -323,8 +322,9 @@ object Manifests {
     // newest COMPLETE generation per plain epoch: a generation whose
     // recorded commitParts exceeds the manifests present is a publish
     // that crashed mid-stage — it must never beat the complete
-    // committed generation below it (commitParts 0 = an unstamped
-    // engine-encode manifest, treated as complete)
+    // committed generation below it (commitParts 0 = a marker no
+    // publish counted: a schema marker or an upsert's appended source,
+    // treated as complete)
     val keptPlain = plain.groupBy(epoch).values.flatMap { group =>
       val gens = group.groupBy(_.commitId).toSeq
         .sortBy(_._1)(Ordering.String.reverse)
@@ -603,40 +603,11 @@ object Manifests {
   // --------------------------------------------------------------- write
 
   /** Publish one manifest (the partition's commit marker) atomically. */
-  def writeManifest(conf: Configuration, tableDir: String, m: TableManifest,
-                    attempt: Long): Unit =
+  def writeManifest(conf: Configuration, tableDir: String, m: TableManifest): Unit =
     ContainerIO.writeAtomic(conf,
-      s"$tableDir/manifests/.tmp-part-${m.name}-a$attempt",
+      s"$tableDir/manifests/.tmp-part-${m.name}",
       manifestPath(tableDir, m.name),
       toJson(m).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Consolidate every committed manifest currently in `manifests/` into
-    * the index (end of an engine encode job, including resumed runs).
-    */
-  def consolidate(conf: Configuration, tableDir: String): Unit = {
-    // the listing MUST be taken inside the transform: each OCC retry
-    // re-lists, so a concurrent publish's just-committed manifests are
-    // in the snapshot this commit lands on top of (hoisting the listing
-    // out of the loop would re-commit a stale pre-race view and drop
-    // the concurrent writer's rows from the index)
-    commitIndex(conf, tableDir,
-      _ => normalizeFallback(listedManifests(conf, tableDir)))
-    // cleanup pass: stale generations the normalizer proves superseded
-    // would otherwise leak forever (vacuum spares manifests/ and counts
-    // their blocks as referenced). Only generations OLDER than every
-    // kept commit are deleted — a NEWER partial generation may belong
-    // to an in-flight publish whose index commit is imminent (its rows
-    // are index-served either way; at worst it leaks until the next
-    // consolidate after a genuinely newer commit).
-    val listed = listedManifests(conf, tableDir)
-    val kept = normalizeFallback(listed)
-    val keptNames = kept.map(_.name).toSet
-    val maxKept = kept.map(_.commitId).maxOption.getOrElse("")
-    val fs = ContainerIO.fs(tableDir, conf)
-    listed.filterNot(m => keptNames(m.name))
-      .filter(_.commitId < maxKept)
-      .foreach(m => deleteContainer(fs, tableDir, m.name))
-  }
 
   private val VersionedIndexRe = """_manifest-index\.v(\d+)\.json""".r
 
@@ -897,7 +868,7 @@ object Manifests {
       .filter(n => n.startsWith("part-") && n.endsWith(".json"))
 
   /** The manifests of a `manifests/` listing (tables without an index:
-    * mid-encode-resume and disaster-recovery reads), unnormalized.
+    * disaster-recovery reads), unnormalized.
     */
   private[engine] def listedManifests(conf: Configuration,
                                       tableDir: String): Seq[TableManifest] =
@@ -908,7 +879,7 @@ object Manifests {
 
   /** Every COMMITTED partition of the table: one index read when an
     * index snapshot exists (highest version wins), else a `manifests/`
-    * listing + per-file reads (mid-encode resume, disaster recovery).
+    * listing + per-file reads (disaster recovery).
     */
   def readCommitted(conf: Configuration, tableDir: String): Seq[TableManifest] =
     readCommittedVersion(conf, tableDir)._2

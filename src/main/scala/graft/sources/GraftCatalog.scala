@@ -116,9 +116,10 @@ object GraftCatalog {
         Array(consumed, produced, r.getBoolean(3))
       }),
     new Procedure("vacuum",
-      "Delete aged orphan blocks and tmp fragments of a graft table " +
-        "(referenced = index snapshot UNION manifest listing). " +
-        "dry_run => true counts without deleting.",
+      "Delete aged unreferenced blocks, commit markers and tmp " +
+        "fragments of a graft table (referenced = named by the current " +
+        "or a retained index snapshot; without an index, every listed " +
+        "marker). dry_run => true counts without deleting.",
       Array(
         param("path", StringType, comment = "graft table directory"),
         param("grace_ms", LongType, default = (72L * 60 * 60 * 1000).toString,

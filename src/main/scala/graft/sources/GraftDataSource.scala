@@ -21,9 +21,9 @@ import graft.engine.{ChunkStats, ColumnarEngine, ColumnSpec, ContainerFormat, Co
   * engine's container+manifest layout as a DataSource V2 table.
   *
   * Read side: input partitions are CHUNK ranges (the parquet row-group
-  * shape) planned from the consolidated manifest index — one giant
-  * container parallelizes across tasks, and zone-map skipping works at
-  * chunk granularity. Pruning and filtering are pushed three ways:
+  * shape) planned from the manifest index — one giant container
+  * parallelizes across tasks, and zone-map skipping works at chunk
+  * granularity. Pruning and filtering are pushed three ways:
   * non-selected column blocks are a position advance (never read off
   * storage, never decoded); comparison filters on the integer columns and
   * equality/IN filters on the string columns prune chunks against
@@ -1704,8 +1704,8 @@ private[sources] object GraftCommits {
     }
 
   /** Publish one job's (or micro-batch's) staged containers: write the
-    * manifests (commit markers) first, then commit the new consolidated
-    * index snapshot via OCC ([[Manifests.commitIndex]] — safe against a
+    * manifests (commit markers) first, all of them before the claim,
+    * then commit the new index snapshot via OCC ([[Manifests.commitIndex]] — safe against a
     * concurrent append or streaming epoch), and only AFTER the new
     * snapshot is live delete the generations this commit replaced
     * (everything on truncate; the previous generation of each published
@@ -1741,7 +1741,7 @@ private[sources] object GraftCommits {
     val fresh = raw.map(m =>
       m.copy(commitId = commitId, commitParts = epochParts(epochOf(m.name))))
     if (fresh.isEmpty && !truncate) return
-    fresh.foreach(Manifests.writeManifest(conf, path, _, 0L))
+    writeMarkers(fresh)(Manifests.writeManifest(conf, path, _))
     // names among `fresh` whose EPOCH was already folded into a live
     // compacted container — decided against the snapshot the WINNING
     // commit attempt saw (set by the last transform run). Matching is
@@ -1793,6 +1793,31 @@ private[sources] object GraftCommits {
     // are dead weight (its rows live in the compacted generation)
     droppedReplays.foreach(Manifests.deleteContainer(f, path, _))
   }
+
+  /** At most this many commit markers of one publish are written at once. */
+  private final val MarkerWriters = 8
+
+  /** Run `write` on every marker of `ms`, up to [[MarkerWriters]] at a
+    * time, and return once all of them are written: a marker is one small
+    * file, and its cost is the filesystem's per-create round trip (on a
+    * local disk without Hadoop's native library, the `chmod` forks for
+    * the file and its `.crc`), not bandwidth. The first failure is
+    * raised, after every started write has ended.
+    */
+  private def writeMarkers(ms: Seq[TableManifest])(write: TableManifest => Unit): Unit =
+    if (ms.size <= 1) ms.foreach(write)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(MarkerWriters, ms.size))
+      try {
+        val pending = ms.map(m => pool.submit[Unit](() => write(m)))
+        val failures = pending.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+        }
+        failures.headOption.foreach(e => throw e)
+      } finally pool.shutdown()
+    }
 
   /** Drop an aborted epoch's staged containers (unreachable anyway — no
     * manifest — but don't leave them as garbage).
@@ -1954,7 +1979,7 @@ class GraftDataWriter(path: String, part: Int, epoch: String,
     * [[GraftCommits.publish]].
     */
   private[sources] def commitManifest(): TableManifest =
-    enc.finish(publishManifest = false).copy(
+    enc.finish().copy(
       partitioning = partBy.map(_.render),
       bucketIds = bucketSpecs.lazyZip(bucketSeen).map { case ((pos, _, _), seen) =>
         writeSchema.fields(pos).name -> seen.toSet

@@ -84,17 +84,13 @@ object GraftMaintenance {
     compactWithHook(spark, path, targetBytes, minContainers, () => (),
       dryRun = dryRun)
 
-  /** Test seams: `beforeCommit` runs after the rewritten containers are
+  /** Test seam: `beforeCommit` runs after the rewritten containers are
     * staged but before this run's manifests are written — the window a
-    * concurrent append/replace races into. `afterStage` runs after the
-    * manifests (commit markers) are on disk but before the index commit
-    * — the window a concurrent [[Manifests.consolidate]] (end of every
-    * engine encode) can ADOPT the staged generation in.
+    * concurrent append/replace races into.
     */
   private[graft] def compactWithHook(spark: SparkSession, path: String,
                                      targetBytes: Long, minContainers: Int,
                                      beforeCommit: () => Unit,
-                                     afterStage: () => Unit = () => (),
                                      dryRun: Boolean = false): (Int, Int) = {
     require(targetBytes > 0 && minContainers >= 2,
       s"need targetBytes > 0 and minContainers >= 2, " +
@@ -150,7 +146,7 @@ object GraftMaintenance {
       (pm, pm.rows) // a fold changes every row it moves
     }
     val changed = commitTail(snap, folded, Nil, what = "compaction",
-      reclaimConsumed = true, beforeCommit, afterStage)
+      reclaimConsumed = true, beforeCommit)
     (changed.map(_.consumed.size).sum, changed.size)
   }
 
@@ -197,15 +193,12 @@ object GraftMaintenance {
   def delete(spark: SparkSession, path: String, predicate: String): Long =
     deleteWithHook(spark, path, predicate, () => ())
 
-  /** Test seams: `beforeCommit` runs after the rewrites are staged but
-    * before the swap (the concurrent-append window); `afterStage` runs
-    * after the new manifests (commit markers) are written but before the
-    * index commit.
+  /** Test seam: `beforeCommit` runs after the rewrites are staged but
+    * before the swap (the concurrent-append window).
     */
   private[graft] def deleteWithHook(spark: SparkSession, path: String,
                                     predicate: String,
-                                    beforeCommit: () => Unit,
-                                    afterStage: () => Unit = () => ()): Long = {
+                                    beforeCommit: () => Unit): Long = {
     val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
     if (snap.committed.isEmpty) return 0L
     val (cond, _) = bindPredicate(spark, snap, predicate, Nil, "delete predicate")
@@ -219,7 +212,7 @@ object GraftMaintenance {
         copyRows(rowMatcher(cond, visPositions, schema)))
     }
     commitTail(snap, done, Nil, what = s"DELETE WHERE $predicate",
-      reclaimConsumed = false, beforeCommit, afterStage).map(_.changed).sum
+      reclaimConsumed = false, beforeCommit).map(_.changed).sum
   }
 
   /** Copy-on-write row-level UPDATE (round 9) — DELETE's sibling on the
@@ -280,7 +273,7 @@ object GraftMaintenance {
         updated)
     }
     commitTail(snap, done, Nil, what = s"UPDATE WHERE $predicate",
-      reclaimConsumed = false, beforeCommit, () => ()).map(_.changed).sum
+      reclaimConsumed = false, beforeCommit).map(_.changed).sum
   }
 
   /** Copy-on-write MERGE-style UPSERT (round 9) — the third leg of
@@ -451,7 +444,7 @@ object GraftMaintenance {
       // no reader ever sees a key twice or not at all
       val changed = commitTail(snap, done, appended.toSeq,
         what = s"UPSERT ON ${keys.mkString(",")}",
-        reclaimConsumed = false, beforeCommit, () => ())
+        reclaimConsumed = false, beforeCommit)
       (changed.map(_.changed).sum, appended.map(_.rows).sum)
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -668,13 +661,13 @@ object GraftMaintenance {
     */
   private def commitTail(snap: TableSnapshot, done: Seq[Rewritten],
                          appended: Seq[TableManifest], what: String,
-                         reclaimConsumed: Boolean, beforeCommit: () => Unit,
-                         afterStage: () => Unit): Seq[Rewritten] = {
+                         reclaimConsumed: Boolean,
+                         beforeCommit: () => Unit): Seq[Rewritten] = {
     val changed = done.filter(_.changed > 0L)
     if (changed.nonEmpty || appended.nonEmpty) {
       beforeCommit()
       swapGeneration(snap.conf, snap.path, changed.flatMap(_.consumed).toSet,
-        changed.map(_.staged) ++ appended, what, reclaimConsumed, afterStage)
+        changed.map(_.staged) ++ appended, what, reclaimConsumed)
     }
     changed
   }
@@ -700,12 +693,10 @@ object GraftMaintenance {
   private def swapGeneration(conf: org.apache.hadoop.conf.Configuration,
                              path: String, consumed: Set[String],
                              newManifests: Seq[TableManifest],
-                             what: String, reclaimConsumed: Boolean,
-                             afterStage: () => Unit): Unit = {
+                             what: String, reclaimConsumed: Boolean): Unit = {
     val base = Manifests.readCommittedVersion(conf, path)
     val commitId = Manifests.commitIdAbove(base._2)
     val stamped = newManifests.map(_.copy(commitId = commitId))
-    val newNames = stamped.map(_.name).toSet
     // containers WITHOUT ancestors (UPSERT's appended source) are plain
     // appends to label resolution (currentSpecsOf takes current names
     // from them): they carry publish's add-only/label re-check, or their
@@ -713,42 +704,22 @@ object GraftMaintenance {
     // revert a rename or drop that committed meanwhile. Rewritten
     // generations carry ancestors and never label-resolve.
     val appendSchemas = stamped.filter(_.ancestors.isEmpty).map(_.schemaCols).distinct
-    stamped.foreach(m => Manifests.writeManifest(conf, path, m, 0L))
-    afterStage()
+    stamped.foreach(m => Manifests.writeManifest(conf, path, m))
     try {
       Manifests.commitIndex(conf, path, old => {
         appendSchemas.foreach(GraftCommits.checkSchema(path, old, _))
         val live = old.map(_.name).toSet
-        // A concurrent Manifests.consolidate (end of every engine encode)
-        // normalizes the LISTING — where this run's staged manifests
-        // already sit as commit markers — and may have ADOPTED some or
-        // all of this run's generation into the index, deleting the
-        // consumed originals as superseded. Those bins are already
-        // committed: a consumed name missing from the snapshot is a
-        // genuine conflict only when no adopted bin of THIS run covers
-        // its epoch (pre-round-7 this path threw CompactionConflict and
-        // the handler deleted index-live compacted blocks — data loss).
-        val adopted = old.filter(m => newNames(m.name))
-        val adoptedCover = adopted.flatMap(_.ancestors).toSet
-        val gone = consumed.filterNot(live).filterNot(n =>
-          adoptedCover(Manifests.epochKey(Manifests.logicalName(n))))
+        val gone = consumed.filterNot(live)
         if (gone.nonEmpty) throw new CompactionConflict(
           s"containers ${gone.toSeq.sorted.mkString(", ")} were replaced " +
             s"by a concurrent commit during $what of $path; aborting")
-        val adoptedNames = adopted.map(_.name).toSet
-        old.filterNot(m => consumed(m.name)) ++
-          stamped.filterNot(m => adoptedNames(m.name))
+        old.filterNot(m => consumed(m.name)) ++ stamped
       }, Some(base))
     } catch {
       case e @ (_: CompactionConflict | _: SchemaEvolutionConflict) =>
-        // drop the staged generation — but ONLY the part the live index
-        // does not reference: a racing consolidate may have adopted some
-        // bins (see above), and deleting those would orphan index-live
-        // rows
-        val liveNow = Manifests.readCommitted(conf, path).map(_.name).toSet
+        // no commit landed: drop the staged generation
         val f = ContainerIO.fs(path, conf)
-        newManifests.filterNot(m => liveNow(m.name))
-          .foreach(m => Manifests.deleteContainer(f, path, m.name))
+        newManifests.foreach(m => Manifests.deleteContainer(f, path, m.name))
         throw e
     }
     if (reclaimConsumed) {
@@ -918,7 +889,7 @@ object GraftMaintenance {
     // the commit builds on the snapshot read above; a lost claim re-reads
     val base = (snap.version, snap.all)
     var marker = mkMarker(Manifests.commitIdAbove(snap.all))
-    Manifests.writeManifest(conf, path, marker, 0L)
+    Manifests.writeManifest(conf, path, marker)
     beforeCommit()
     try Manifests.commitIndex(conf, path, old => {
       // re-check against the snapshot this commit actually lands on
@@ -938,7 +909,7 @@ object GraftMaintenance {
           Manifests.generation(marker.commitId))) {
         val stale = marker
         marker = mkMarker(Manifests.commitIdAbove(old))
-        Manifests.writeManifest(conf, path, marker, 0L)
+        Manifests.writeManifest(conf, path, marker)
         ContainerIO.fs(path, conf).delete(new org.apache.hadoop.fs.Path(
           Manifests.manifestPath(path, stale.name)), false)
       }
@@ -952,19 +923,25 @@ object GraftMaintenance {
     }
   }
 
-  /** Remove UNREACHABLE files from a table directory: block containers
-    * no committed manifest references (staged output of crashed or
-    * zombie write attempts — invisible to every read path, but never
-    * deleted when the job dies before its `abort` hook runs) and
-    * leftover `.tmp-*` upload fragments. Only files older than
-    * `graceMs` are touched — and the grace window must EXCEED the
-    * longest write job this table can see: a large batch write's staged
-    * containers are unreferenced from staging until JOB commit, so a
-    * too-short grace deletes a slow job's output out from under its
-    * commit (Iceberg's orphan-file procedure defaults to 3 days for
-    * the same reason; so does this). Manifest files without an index
-    * entry are NOT removed — they are the commit markers that
-    * listing-fallback reads (mid-encode resume) depend on.
+  /** Remove UNREACHABLE files from a table directory under ONE rule: a
+    * container is referenced when the current index snapshot or a
+    * retained one (time travel keeps the last `graft.snapshot.retention`
+    * versions readable) names it. Its commit marker and block stay;
+    * every other marker and block is unreachable — the staged output of
+    * crashed or zombie write attempts, a crashed rename's schema marker,
+    * a generation a DELETE superseded once no retained snapshot reads it
+    * (`delete` → `expire_snapshots` → `vacuum` purges deleted rows), a
+    * crash window's stale generation — and is swept, as are leftover
+    * `.tmp-*` upload fragments. A table without an index (disaster
+    * recovery) has no snapshot to judge by: its listed markers are all
+    * kept, and so are their blocks.
+    *
+    * Only files older than `graceMs` are touched — and the grace window
+    * must EXCEED the longest write job this table can see: a write's
+    * staged containers and markers are unreferenced until its index
+    * commit, so a too-short grace deletes a slow job's output out from
+    * under its commit (Iceberg's orphan-file procedure defaults to 3
+    * days for the same reason; so does this).
     *
     * Returns the number of files deleted.
     */
@@ -974,36 +951,12 @@ object GraftMaintenance {
     require(graceMs >= 0, s"graceMs must be >= 0: $graceMs")
     val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark))
     val c = snap.conf
-    // referenced = EVERY retained index snapshot (time travel keeps the
-    // last SnapshotRetention versions readable — a block only an older
-    // retained snapshot references must survive the sweep) UNION the
-    // manifests/ listing: a mid-resume engine encode has per-partition
-    // manifests the (stale) index doesn't know yet — their blocks are
-    // committed data, not orphans
-    val committedMs = snap.all
-    val committedNames = committedMs.map(_.name) ++
-      Manifests.retainedSnapshotNames(c, path, except = snap.version)
-    val committedRefs = committedNames.toSet
-    // SUPERSEDED generations (round 9): a delete keeps the consumed
-    // generation's files so retained snapshots still time-travel to the
-    // pre-delete rows. Once no current or retained snapshot references
-    // such a container AND its epoch is ancestor-covered by a live
-    // manifest (its surviving rows provably live there — the delete/
-    // compaction coverage invariant), its lingering commit marker and
-    // block are reclaimable. This is the delete-purge tail:
-    // `delete` → `expire_snapshots` → `vacuum` removes deleted rows
-    // from storage. Without a live index nothing is judged (disaster
-    // recovery keeps everything).
     val indexLive = snap.version >= 0
-    val ancestorCover = committedMs.flatMap(_.ancestors).toSet
-    def superseded(n: String): Boolean = indexLive && !committedRefs(n) &&
-      ancestorCover(Manifests.epochKey(Manifests.logicalName(n)))
-    val listedNames = ContainerIO.listNames(c, s"$path/manifests")
-      .filter(n => n.startsWith("part-") && n.endsWith(".json"))
-      .map(_.stripPrefix("part-").stripSuffix(".json"))
-      .filterNot(superseded)
-    val referenced =
-      (committedNames ++ listedNames).map(n => s"part-$n.gblk").toSet
+    val referenced: Set[String] =
+      if (indexLive) (snap.all.map(_.name) ++
+        Manifests.retainedSnapshotNames(c, path, except = snap.version)).toSet
+      else ContainerIO.listNames(c, s"$path/manifests")
+        .collect { case MarkerFile(n) => n }.toSet
     val fs = ContainerIO.fs(path, c)
     val cutoff = System.currentTimeMillis() - graceMs
     var deleted = 0
@@ -1019,27 +972,19 @@ object GraftMaintenance {
         }
       }
     }
-    sweep(s"$path/blocks", n => n.endsWith(".gblk") && !referenced(n))
-    // Orphan SCHEMA MARKERS (round-8 advice, low): a renameColumn that
-    // crashed between its marker write and its index commit leaves a
-    // marker file the listing fallback would wrongly treat as a
-    // committed rename. When a live index exists and neither the
-    // current snapshot nor any retained one references the marker, it
-    // is the stage of a failed rename — swept once aged. Data-container
-    // manifests stay untouched (they are the commit markers mid-encode
-    // resume depends on), and without any index nothing is judged
-    // (disaster recovery keeps every marker).
-    sweep(s"$path/manifests", n => indexLive &&
-      n.startsWith("part-") && n.endsWith(".json") && {
-        val base = n.stripPrefix("part-").stripSuffix(".json")
-        (n.startsWith("part-schemamarker-") && !committedRefs(base)) ||
-          // superseded-generation commit markers (see above): swept so
-          // the listing fallback can never resurrect a generation whose
-          // blocks this run reclaims
-          superseded(base)
-      })
+    sweep(s"$path/blocks", {
+      case BlockFile(n) => !referenced(n)
+      case _ => false
+    })
+    sweep(s"$path/manifests", {
+      case MarkerFile(n) => indexLive && !referenced(n)
+      case _ => false
+    })
     deleted
   }
+
+  private val BlockFile = """part-(.+)\.gblk""".r
+  private val MarkerFile = """part-(.+)\.json""".r
 
   /** Expire retained time-travel snapshots now (see
     * [[Manifests.expireSnapshots]]): keep the newest `retainLast`
@@ -1104,7 +1049,7 @@ object GraftMaintenance {
         .filter(c => ms.forall(_.bucketIds.contains(c)))
         .map(c => c -> ms.flatMap(_.bucketIds(c)).toSet)
         .toMap
-    (enc.finish(publishManifest = false).copy(ancestors = ancestors,
+    (enc.finish().copy(ancestors = ancestors,
       partitioning = partitioning, bucketIds = bucketIds), changed)
   }
 

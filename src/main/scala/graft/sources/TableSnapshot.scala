@@ -12,8 +12,8 @@ import graft.engine.{ColumnSpec, ContainerIO, Manifests, TableManifest}
   * schema inference, the scan builder's aggregate proofs, the scan's
   * statistics, runtime filters and partition planning, the aggregate
   * scan's fold, each stream trigger, and the copy-on-write operations.
-  * The only other committed-manifest read in `sources` is the OCC swap's
-  * re-read after a lost commit.
+  * The only other committed-manifest reads in `sources` are a commit's
+  * own base read and its OCC retries.
   *
   * Construction reads the index; the chain and schema resolve lazily, so
   * an operation that needs only the manifest set (vacuum) never resolves

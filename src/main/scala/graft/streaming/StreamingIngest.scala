@@ -9,16 +9,16 @@ import graft.engine.{ColumnarEngine, SourceFile}
   *
   * The reference's streaming surface is incremental io (reference:
   * src/io.rs) — the engine's analogue at cluster scale is (a) micro-batch
-  * ingest that feeds the resumable columnar encoder, and (b) watermarked
+  * ingest that feeds the columnar encoder, and (b) watermarked
   * event-time aggregation for the pipeline's monitoring stream.
   */
 object StreamingIngest {
 
   /** Continuously encode arriving source files: each micro-batch becomes
-    * its own encode layout under `outDir/batch-<id>` via the engine's
-    * partition-granular resumable encode (a killed batch resumes without
-    * re-encoding committed partitions; replayed batches are idempotent
-    * because the layout guard + manifests make re-encoding a no-op).
+    * its own table under `outDir/batch-<id>` via the engine encode, one
+    * DSv2 overwrite. A killed batch commits nothing; a replayed batch
+    * re-encodes and overwrites `batch-<id>` whole, so the directory holds
+    * exactly one copy of the batch's rows either way.
     */
   def encodeStream(files: Dataset[SourceFile], outDir: String,
                    partsPerBatch: Int = 8): StreamingQuery = {

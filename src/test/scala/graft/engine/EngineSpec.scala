@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -24,6 +25,38 @@ class EngineSpec extends AnyFunSuite {
   private def tempDir(tag: String): String =
     Files.createTempDirectory(s"graft-$tag").toString
 
+  private def sha256Hex(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+      .map(b => f"$b%02x").mkString
+
+  private def blockFiles(dir: String): Seq[java.nio.file.Path] = {
+    val s = Files.list(Paths.get(dir, "blocks"))
+    try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".gblk")).toSeq
+    finally s.close()
+  }
+
+  private def markerNames(dir: String): Seq[String] = {
+    val s = Files.list(Paths.get(dir, "manifests"))
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith("part-") && n.endsWith(".json")).toSeq
+    finally s.close()
+  }
+
+  /** The sorted sha256s of the containers `encode(derive(synthesize(2000,
+    * 8)), dir, 8)` writes: container bytes are the format, whichever
+    * path commits them.
+    */
+  private val PinnedContainers = Seq(
+    "22d32f7c12779fd1d2c1a54b8460ffb86cab8a0e8a697de8adbe86dab4721e30",
+    "2a5eec31c768161a823cafb9b225dfc88acd134aff52bd859a997c9b89c745dc",
+    "30586e692e4ad257439552e3187fac9ce5040d0e961ad412dca1d33efb3c12a1",
+    "47ecfc950f30abe67c176220580430a80caafa6cb28ac97f825a928aa8172961",
+    "4fccee85f779c48e93c4f22666829689ddade8905e202f0f4ac3522662c1192f",
+    "7e60865b8d33560f43a1aedfb7c86e0cd33c89e055e2e52ba975e2c558d7843f",
+    "d794a871e60924d75bade7f784ec57cfefdfffffc0618485a813bd2e33afb244",
+    "fba950b7ae3978c2e92e0658f56f611530f8acce8abe6e68022ee6902945ddfe"
+  )
+
   test("synthesizer is deterministic and zipf-skewed") {
     import spark.implicits._
     val a = SourceTable.synthesize(spark, 500, 4).collect().sortBy(_.path)
@@ -42,6 +75,12 @@ class EngineSpec extends AnyFunSuite {
     val derived = ColumnarEngine.derive(src).cache()
     val manifests = ColumnarEngine.encode(derived, dir, numParts = 8)
     assert(manifests.length === 8)
+    assert(manifests.map(_.part).toSeq === (0 until 8))
+    assert(blockFiles(dir).map(f => sha256Hex(Files.readAllBytes(f))).sorted ===
+      PinnedContainers, "engine-encoded container bytes changed")
+    assert(manifests.forall(_.schemaCols ==
+      ColumnarEngine.DefaultSchema.map(s => (s.name, s.packed))),
+      "the engine table's schema is DefaultSchema, non-nullable columns included")
     val rows = manifests.map(_.rows).sum
     assert(rows === 2000)
     val raw = manifests.map(_.rawBytes).sum
@@ -95,8 +134,17 @@ class EngineSpec extends AnyFunSuite {
     // across tasks like the DSv2 scan does (round-5 nit: one task per
     // container serialized a giant container on a single thread)
     val enc = new ColumnarEngine.PartitionEncoder(0, dir, conf, chunkRowsCap = 50)
-    rows.foreach(enc.add)
+    rows.foreach { r =>
+      Seq(r.repo, r.path, r.commit, r.lang, r.content).zipWithIndex.foreach {
+        case (v, c) => enc.putUtf8(c, org.apache.spark.unsafe.types.UTF8String.fromString(v))
+      }
+      Seq(r.len_content, r.hash64, r.commit_ord, r.repo_code, r.lang_code, r.path_code)
+        .zipWithIndex.foreach { case (v, c) => enc.putLong(5 + c, v) }
+      enc.endRow()
+    }
     val m = enc.finish()
+    Manifests.writeManifest(conf, dir, m)
+    Manifests.commitIndex(conf, dir, _ => Seq(m))
     assert(m.chunks === 8)
     // the encoder's container bytes are pinned (block order, codec
     // choice, zone stats inputs, chunk digests)
@@ -112,23 +160,38 @@ class EngineSpec extends AnyFunSuite {
     assert(decoded.collect().sortBy(_.path).toSeq === rows.toSeq)
   }
 
-  test("checkpoint-resume: completed partitions are skipped, missing ones re-encoded") {
-    import spark.implicits._
-    val dir = tempDir("resume")
-    val src = SourceTable.synthesize(spark, 1000, 4)
-    val derived = ColumnarEngine.derive(src).cache()
-    val first = ColumnarEngine.encode(derived, dir, numParts = 4)
-    assert(first.length === 4)
-    // simulate a partial failure: delete one partition's outputs
-    Files.delete(Paths.get(dir, "manifests", "part-2.json"))
-    Files.delete(Paths.get(dir, "blocks", "part-2.gblk"))
-    val second = ColumnarEngine.encode(derived, dir, numParts = 4)
-    assert(second.map(_.part).toSeq === Seq(2), "only part 2 re-encoded")
-    assert(ColumnarEngine.completedParts(dir) === Set(0, 1, 2, 3))
-    // and the result is complete + correct
+  test("re-encode replaces the table: decode equals the new input") {
+    val dir = tempDir("reencode")
+    val a = ColumnarEngine.derive(SourceTable.synthesize(spark, 600, 4)).cache()
+    val b = ColumnarEngine.derive(SourceTable.synthesize(spark, 1000, 4)).cache()
+    ColumnarEngine.encode(a, dir, numParts = 4)
+    val second = ColumnarEngine.encode(b, dir, numParts = 4)
+    assert(second.map(_.rows).sum === 1000)
+    // the decode is exactly B: none of A's rows survive, none of B's lost
     val decoded = ColumnarEngine.decode(spark, dir)
     assert(decoded.count() === 1000)
-    assert(decoded.except(derived).isEmpty)
+    assert(decoded.except(b).isEmpty && b.except(decoded).isEmpty)
+    // one generation on disk: every block and marker is B's
+    val names = second.map(_.name).toSet
+    assert(blockFiles(dir).map(_.getFileName.toString).toSet ===
+      names.map(n => s"part-$n.gblk"), "A's containers must be gone")
+    assert(markerNames(dir).toSet === names.map(n => s"part-$n.json"),
+      "A's commit markers must be gone")
+  }
+
+  test("a failed encode leaves the table as it was") {
+    import spark.implicits._
+    val dir = tempDir("failed-encode")
+    val first = ColumnarEngine.derive(SourceTable.synthesize(spark, 400, 2)).cache()
+    ColumnarEngine.encode(first, dir, numParts = 2)
+    val bad = SourceTable.synthesize(spark, 50, 2).collect().toSeq.zipWithIndex
+      .map { case (f, i) => if (i == 7) f.copy(content = null) else f }
+    intercept[Exception] {
+      ColumnarEngine.encode(ColumnarEngine.derive(bad.toDS()), dir, numParts = 2)
+    }
+    val decoded = ColumnarEngine.decode(spark, dir)
+    assert(decoded.count() === 400)
+    assert(decoded.except(first).isEmpty && first.except(decoded).isEmpty)
   }
 
   test("OCC lost-claim guard: a recycled version number is withdrawn and retried") {
@@ -163,7 +226,7 @@ class EngineSpec extends AnyFunSuite {
     val names = ms.map(_.name)
     assert(names.contains("tip") && names.contains("b"),
       s"retry must preserve the tip's content and land the update: $names")
-    assert(!ContainerIO.exists(conf, s"$d/${Manifests.versionedIndexName(1L)}"),
+    assert(!Files.exists(Paths.get(d, Manifests.versionedIndexName(1L))),
       "the recycled below-tip claim must be withdrawn")
   }
 
@@ -208,14 +271,20 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("manifests DataFrame exposes lineage metrics") {
+    import org.apache.spark.sql.functions._
     val dir = tempDir("manifest")
     val src = SourceTable.synthesize(spark, 300, 2)
     ColumnarEngine.encode(ColumnarEngine.derive(src), dir, numParts = 2)
     val m = ColumnarEngine.manifests(spark, dir)
     assert(m.count() === 2)
     assert(m.columns.toSet.contains("digest"))
-    import org.apache.spark.sql.functions._
     val total = m.agg(sum("rows")).head.getLong(0)
     assert(total === 300)
+    // only the committed snapshot counts: a DELETE keeps the consumed
+    // container's marker on disk for time travel
+    val t = tempDir("manifest-delete")
+    spark.range(100).coalesce(1).write.format("graft").mode("append").save(t)
+    assert(graft.sources.GraftMaintenance.delete(spark, t, "id < 10") === 10L)
+    assert(ColumnarEngine.manifests(spark, t).agg(sum("rows")).head.getLong(0) === 90L)
   }
 }

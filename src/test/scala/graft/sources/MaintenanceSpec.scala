@@ -50,6 +50,22 @@ class MaintenanceSpec extends AnyFunSuite {
       msgs.toArray[org.apache.spark.sql.connector.write.WriterCommitMessage])
   }
 
+  /** Lose every index version — the disaster-recovery shape — including
+    * the local-FS `.crc` sidecars, or a later re-created same-named
+    * version pairs with a stale sidecar.
+    */
+  private def dropIndex(d: String): Unit =
+    ContainerIO.listNames(ContainerIO.localConf(), d)
+      .filter(_.startsWith("_manifest-index"))
+      .foreach { n =>
+        java.nio.file.Files.delete(java.nio.file.Paths.get(d, n))
+        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(d, s".$n.crc"))
+      }
+
+  private def markers(d: String): Seq[String] =
+    ContainerIO.listNames(ContainerIO.localConf(), s"$d/manifests")
+      .filter(n => n.startsWith("part-") && n.endsWith(".json"))
+
   test("compact: 10 streaming epochs of tiny containers rewrite into one, rows identical") {
     import spark.implicits._
     val srcDir = tempDir("cmp-src")
@@ -223,20 +239,9 @@ class MaintenanceSpec extends AnyFunSuite {
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-partial",
       Manifests.manifestPath(d, partial.name),
       Manifests.toJson(partial).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ContainerIO.listNames(conf, d).filter(_.startsWith("_manifest-index"))
-      .foreach { n =>
-        java.nio.file.Files.delete(java.nio.file.Paths.get(d, n))
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(d, s".$n.crc"))
-      }
+    dropIndex(d)
     assert(count() === 60,
       "the complete committed generation must win over a newer partial one")
-    // consolidate must NOT delete the newer partial (it may belong to an
-    // in-flight publish) — and must not resurrect it either
-    Manifests.consolidate(conf, d)
-    assert(count() === 60)
-    assert(ContainerIO.listNames(conf, s"$d/manifests")
-      .exists(_.contains("q-e1-0-a77")),
-      "a newer-than-kept partial generation is left for a later sweep")
   }
 
   test("crash-leftover replay manifests are not resurrected by listing fallback or consolidate") {
@@ -270,20 +275,15 @@ class MaintenanceSpec extends AnyFunSuite {
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-stale",
       Manifests.manifestPath(d, stale.manifest.name),
       Manifests.toJson(stale.manifest).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // the documented listing-fallback recovery: delete ALL index files —
-    // including the local-FS .crc sidecars, or a later re-created
-    // same-named version pairs with a stale sidecar (CLAUDE.md pitfall)
-    ContainerIO.listNames(conf, d).filter(_.startsWith("_manifest-index"))
-      .foreach { n =>
-        java.nio.file.Files.delete(java.nio.file.Paths.get(d, n))
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(d, s".$n.crc"))
-      }
+    // the documented listing-fallback recovery: delete ALL index files
+    dropIndex(d)
     assert(count() === 60,
       "listing fallback must not resurrect a compacted epoch's stale replay")
-    // consolidate rebuilds the index from the listing: same rule applies
-    Manifests.consolidate(conf, d)
-    assert(count() === 60,
-      "consolidate must not fold the stale replay back into the index")
+    // the next commit re-indexes from the listing: same rule applies
+    GraftCommits.publish(confKv, d, truncate = false,
+      Array(stage(4, 14L, 400 until 420)))
+    assert(count() === 80,
+      "the re-index must not fold the stale replay back into the index")
   }
 
   test("compact consumes only WHOLE epochs: a mixed-size epoch is left intact") {
@@ -350,10 +350,13 @@ class MaintenanceSpec extends AnyFunSuite {
     // stale markers must carry their chunk index like the originals
     val oldJsons = Manifests.readCommitted(conf, d)
       .map(Manifests.loadChunkIndex(conf, d, _))
+    val oldBlocks = oldJsons.map(m => java.nio.file.Paths.get(m.blockFile(d)))
+      .map(p => p -> java.nio.file.Files.readAllBytes(p))
     publishEpochParts(d, 1, 30L, Seq((0, 0 until 50)))
+    // the old generation's block files survive in the crash window
+    oldBlocks.foreach { case (p, bytes) => java.nio.file.Files.write(p, bytes) }
     oldJsons.foreach { m =>
-      // the old generation's manifest comes back as a stale marker (its
-      // block file also survives in the crash window)
+      // the old generation's manifest comes back as a stale marker
       ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-stale-${m.name}",
         Manifests.manifestPath(d, m.name),
         // re-serialize with the ORIGINAL (older) commitId preserved
@@ -363,19 +366,21 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(spark.read.format("graft").load(d).count() === 50)
     // disaster recovery: index lost, listing fallback must keep ONE
     // whole generation (the newest), not mix parts of both
-    ContainerIO.listNames(conf, d).filter(_.startsWith("_manifest-index"))
-      .foreach { n =>
-        java.nio.file.Files.delete(java.nio.file.Paths.get(d, n))
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(d, s".$n.crc"))
-      }
+    dropIndex(d)
     assert(spark.read.format("graft").load(d).count() === 50,
       "fallback must keep exactly the newest generation of the epoch")
-    // consolidate rebuilds the index AND deletes the stale generation
-    Manifests.consolidate(conf, d)
-    assert(spark.read.format("graft").load(d).count() === 50)
-    assert(ContainerIO.listNames(conf, s"$d/manifests")
-      .count(_.endsWith(".json")) === 1,
-      "consolidate must delete the superseded generation's manifests")
+    // the next commit re-indexes from the listing (the newest generation
+    // plus its own epoch), and vacuum then sweeps the stale generation's
+    // markers and blocks, which no snapshot names
+    publishEpochParts(d, 2, 50L, Seq((0, 100 until 110)))
+    assert(spark.read.format("graft").load(d).count() === 60)
+    Thread.sleep(20) // mtimes strictly below the grace cutoff
+    assert(GraftMaintenance.vacuum(spark, d, graceMs = 0L) === 4,
+      "the stale generation's 2 markers and 2 blocks")
+    val live = Manifests.readCommitted(conf, d).map(_.name).toSet
+    assert(markers(d).toSet === live.map(n => s"part-$n.json"))
+    assert(gblks(d).toSet === live.map(n => s"part-$n.gblk"))
+    assert(spark.read.format("graft").load(d).count() === 60)
   }
 
   test("a crashed compaction's stage does not double rows next to its committed retry") {
@@ -396,6 +401,8 @@ class MaintenanceSpec extends AnyFunSuite {
       Manifests.manifestPath(d, staleStage.name),
       Manifests.toJson(staleStage)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(staleStage.blockFile(d)), Array[Byte](1, 2, 3))
     // the RETRY commits for real
     val (c, p) = GraftMaintenance.compact(spark, d)
     assert(c === 3 && p === 1)
@@ -404,18 +411,20 @@ class MaintenanceSpec extends AnyFunSuite {
     // disaster recovery via listing: the dead stage covers the same
     // epochs as the committed retry — newest-commit-first coverage must
     // keep exactly one of them
-    ContainerIO.listNames(conf, d).filter(_.startsWith("_manifest-index"))
-      .foreach { n =>
-        java.nio.file.Files.delete(java.nio.file.Paths.get(d, n))
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(d, s".$n.crc"))
-      }
+    dropIndex(d)
     assert(count() === 60,
       "the crashed stage must not double the compacted epochs' rows")
-    Manifests.consolidate(conf, d)
-    assert(count() === 60)
-    assert(!ContainerIO.listNames(conf, s"$d/manifests")
-      .exists(_.contains("compact-dead0")),
-      "consolidate must delete the crashed stage's manifest")
+    // the next commit re-indexes from the listing; vacuum then sweeps the
+    // crashed stage's marker, which no snapshot names
+    publishEpochParts(d, 4, 40L, Seq((0, 400 until 420)))
+    assert(count() === 80)
+    Thread.sleep(20) // mtimes strictly below the grace cutoff
+    assert(GraftMaintenance.vacuum(spark, d, graceMs = 0L) === 2)
+    assert(!markers(d).exists(_.contains("compact-dead0")),
+      "vacuum must delete the crashed stage's manifest")
+    assert(!gblks(d).exists(_.contains("compact-dead0")),
+      "vacuum must delete the crashed stage's block")
+    assert(count() === 80)
   }
 
   test("compact: a concurrent replace of a consumed container aborts cleanly") {
@@ -462,24 +471,33 @@ class MaintenanceSpec extends AnyFunSuite {
     touch("blocks/.tmp-part-dead-e9-1-a78", 2 * 3600 * 1000L)
     touch("manifests/.tmp-part-dead-e9-0-commit", 2 * 3600 * 1000L)
     touch("blocks/part-live-e1-0-a5.gblk", 1000L)
-    // a committed-but-unconsolidated partition manifest (mid-encode
-    // resume shape): its block must count as referenced
-    val committed = Manifests.readCommitted(conf, d)
-    touch("blocks/part-resume7.gblk", 2 * 3600 * 1000L)
-    val m = committed.head
-    ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-resume",
-      Manifests.manifestPath(d, "resume7"),
-      Manifests.toJson(graft.engine.TableManifest("resume7", 7, 1L, 1, 3L, 3L,
-        "", m.schemaCols, m.digestCol, chunkIndex = oneChunk(1)))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // commit markers no snapshot names: an AGED one with its block (a
+    // write that died between its markers and its index claim) is
+    // swept; a FRESH one (a running publish's) survives the grace window
+    val m = Manifests.readCommitted(conf, d).head
+    def unindexed(name: String, ageMs: Long): Unit = {
+      ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-$name",
+        Manifests.manifestPath(d, name),
+        Manifests.toJson(graft.engine.TableManifest(name, 7, 1L, 1, 3L, 3L,
+          "", m.schemaCols, m.digestCol, chunkIndex = oneChunk(1)))
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Paths.get(Manifests.manifestPath(d, name)).toFile
+        .setLastModified(System.currentTimeMillis() - ageMs)
+      touch(s"blocks/part-$name.gblk", ageMs)
+    }
+    unindexed("resume7", 2 * 3600 * 1000L)
+    unindexed("fresh8", 1000L)
     val deleted = GraftMaintenance.vacuum(spark, d, graceMs = 3600 * 1000L)
-    assert(deleted === 3, s"expected the 3 aged dead files gone, got $deleted")
+    assert(deleted === 5, s"expected the 5 aged dead files gone, got $deleted")
     val blocks = gblks(d)
     assert(!blocks.contains("part-dead-e9-0-a77.gblk"))
     assert(blocks.contains("part-live-e1-0-a5.gblk"),
       "a fresh orphan inside the grace window must survive")
-    assert(blocks.contains("part-resume7.gblk"),
-      "a listed-but-unconsolidated manifest's block must survive")
+    assert(!blocks.contains("part-resume7.gblk") &&
+      !markers(d).contains("part-resume7.json"),
+      "an aged marker no snapshot names goes, with its block")
+    assert(blocks.contains("part-fresh8.gblk") && markers(d).contains("part-fresh8.json"),
+      "a fresh unindexed marker and its block survive the grace window")
     assert(blocks.contains(s"part-${m.name}.gblk"))
     // the table still reads
     assert(spark.read.format("graft").load(d).count() === 100)
@@ -506,7 +524,7 @@ class MaintenanceSpec extends AnyFunSuite {
       schemaCols = specs.map(s =>
         (if (s.name == "b") "c" else s.name, s.packed)),
       digestCol = "", commitId = orphanId, schemaMarker = true)
-    Manifests.writeManifest(conf, d, orphan, 0L)
+    Manifests.writeManifest(conf, d, orphan)
     Thread.sleep(20) // mtime strictly below the grace cutoff
     val deleted = GraftMaintenance.vacuum(spark, d, graceMs = 0L)
     assert(deleted === 1, s"expected exactly the orphan marker, got $deleted")
@@ -519,6 +537,26 @@ class MaintenanceSpec extends AnyFunSuite {
     val back = spark.read.format("graft").load(d)
     assert(back.schema.fieldNames.toSeq === Seq("id", "b"))
     assert(back.count() === 20)
+  }
+
+  test("vacuum without an index keeps every listed marker and its block") {
+    val d = tempDir("vac-noindex")
+    val conf = ContainerIO.localConf()
+    ContainerIO.mkdirs(conf, s"$d/blocks")
+    ContainerIO.mkdirs(conf, s"$d/manifests")
+    publishEpochParts(d, 1, 10L, Seq((0, 0 until 30), (1, 30 until 60)))
+    publishEpochParts(d, 2, 20L, Seq((0, 60 until 90)))
+    val before = (markers(d).toSet, gblks(d).toSet)
+    assert(before._1.size === 3 && before._2.size === 3)
+    dropIndex(d)
+    // an orphan block (no marker) is still swept
+    java.nio.file.Files.write(java.nio.file.Paths.get(d, "blocks", "part-orphan-0.gblk"),
+      Array[Byte](1, 2, 3))
+    Thread.sleep(20) // mtimes strictly below the grace cutoff
+    assert(GraftMaintenance.vacuum(spark, d, graceMs = 0L) === 1)
+    assert((markers(d).toSet, gblks(d).toSet) === before,
+      "without an index the listing decides: no marker or its block is swept")
+    assert(spark.read.format("graft").load(d).count() === 90)
   }
 
   test("streaming source seen-log is compacted: 100 triggers leave a bounded log") {
@@ -695,40 +733,6 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("snapshot superseded"), s"got $ex")
   }
 
-  test("compact survives a racing consolidate that adopts its staged generation") {
-    import spark.implicits._
-    val d = tempDir("cmp-adopt")
-    for (w <- 0 until 4)
-      (0 until 40).map(i => ((w * 40 + i).toLong, s"v$i"))
-        .toDF("id", "tag")
-        .coalesce(1).write.format("graft").mode("append").save(d)
-    val conf = ContainerIO.localConf()
-    assert(gblks(d).size === 4)
-    // the race: compact has staged its manifests (commit markers on the
-    // listing) but not yet committed the index; a consolidate — which the
-    // engine runs at the end of EVERY encode — normalizes the listing,
-    // adopts the staged compacted generation (newest complete commitId)
-    // and deletes the consumed originals as superseded. Pre-round-7
-    // compact then saw its consumed names missing, declared a
-    // CompactionConflict, and its abort handler deleted the compacted
-    // blocks the live index now referenced — every row gone.
-    val (c, p) = GraftMaintenance.compactWithHook(spark, d, 128L << 20, 2,
-      () => (), afterStage = () => Manifests.consolidate(conf, d))
-    assert(c === 4 && p === 1, s"adoption must read as success, got ($c, $p)")
-    val back = spark.read.format("graft").load(d)
-      .as[(Long, String)].collect().sorted
-    assert(back.toSeq === (0 until 160).map(i => (i.toLong, s"v${i % 40}")).sorted,
-      "no rows may be lost to the compact x consolidate race")
-    val ms = Manifests.readCommitted(conf, d)
-    assert(ms.size === 1 && ms.head.name.startsWith("compact-r"),
-      s"the adopted compacted generation must be the committed one: " +
-        ms.map(_.name).mkString(", "))
-    assert(gblks(d).size === 1, "consumed originals must be gone exactly once")
-    // and a later consolidate changes nothing
-    Manifests.consolidate(conf, d)
-    assert(spark.read.format("graft").load(d).count() === 160)
-  }
-
   test("commitIds stay monotone per table even when the wall clock runs behind") {
     val d = tempDir("cmp-clock")
     val conf = ContainerIO.localConf()
@@ -736,14 +740,14 @@ class MaintenanceSpec extends AnyFunSuite {
     ContainerIO.mkdirs(conf, s"$d/manifests")
     // a committed generation stamped by a driver whose clock ran ~12 days
     // AHEAD of this one (equivalently: our clock runs behind). Pure
-    // wall-clock ids would order every commit we make BELOW it, and
-    // consolidate's `commitId < maxKept` cleanup would treat our newer
-    // generations as superseded garbage.
+    // wall-clock ids would order every commit we make BELOW it, and the
+    // listing fallback's newest-generation rule would prefer the stale
+    // generation over ours.
     val future = System.currentTimeMillis() + 1000000000L
     val m = graft.engine.TableManifest("skew-e1-0", 0, 10L, 1, 50L, 40L, "",
       idTagCols, "tag", chunkIndex = oneChunk(10),
       commitId = f"$future%013d-deadbeef")
-    Manifests.writeManifest(conf, d, m, 0L)
+    Manifests.writeManifest(conf, d, m)
     Manifests.commitIndex(conf, d, _ => Seq(m))
     val id = Manifests.commitIdAbove(Manifests.readCommitted(conf, d))
     assert(id.takeWhile(_.isDigit).toLong > future,
@@ -782,15 +786,9 @@ class MaintenanceSpec extends AnyFunSuite {
     ContainerIO.writeAtomic(conf, s"$d/manifests/.tmp-partial7",
       Manifests.manifestPath(d, partial.name),
       Manifests.toJson(partial).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ContainerIO.listNames(conf, d).filter(_.startsWith("_manifest-index"))
-      .foreach { n =>
-        java.nio.file.Files.delete(java.nio.file.Paths.get(d, n))
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(d, s".$n.crc"))
-      }
+    dropIndex(d)
     assert(count() === 60,
       "a sole partial generation must not surface a partial epoch")
-    Manifests.consolidate(conf, d)
-    assert(count() === 60)
   }
 
   test("a source container that vanishes mid-rewrite aborts compact, " +
