@@ -179,7 +179,9 @@ object ContainerIO {
         } catch {
           case _: java.nio.file.FileAlreadyExistsException => false
         } finally {
-          java.nio.file.Files.deleteIfExists(tmp)
+          // a leftover tmp must not turn a won claim into a failure
+          try java.nio.file.Files.deleteIfExists(tmp)
+          catch { case _: java.io.IOException => () }
           ()
         }
       case scheme if commitProtocol(scheme) == ConditionalCreate =>

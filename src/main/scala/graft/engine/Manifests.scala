@@ -201,6 +201,8 @@ final case class TableManifest(
   */
 object Manifests {
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Record a string dict only when the chunk has at most this many
     * distinct values (bounded enum shape: lang, kind columns).
     */
@@ -320,18 +322,16 @@ object Manifests {
       return ms // common shape: nothing to normalize
     val (compacts, plain) = ms.partition(_.ancestors.nonEmpty)
     // newest COMPLETE generation per plain epoch: a generation whose
-    // recorded commitParts exceeds the manifests present is a publish
-    // that crashed mid-stage — it must never beat the complete
-    // committed generation below it (commitParts 0 = a marker no
-    // publish counted: a schema marker or an upsert's appended source,
-    // treated as complete)
+    // recorded commitParts exceeds the manifests present is a commit
+    // that crashed mid-way through its marker writes — it must never
+    // beat the complete committed generation below it (every commit
+    // stamps the count; a schema marker, built at landing, carries none
+    // and is one whole generation by itself)
     val keptPlain = plain.groupBy(epoch).values.flatMap { group =>
       val gens = group.groupBy(_.commitId).toSeq
         .sortBy(_._1)(Ordering.String.reverse)
-      def complete(g: Seq[TableManifest]): Boolean = {
-        val want = g.map(_.commitParts).max
-        want == 0 || g.size >= want
-      }
+      def complete(g: Seq[TableManifest]): Boolean =
+        g.size >= g.map(_.commitParts).max
       // NO complete generation at all = every generation of this epoch
       // is a publish that crashed mid-manifest-writes: surface NOTHING
       // rather than promote a partial epoch into the authoritative
@@ -791,7 +791,10 @@ object Manifests {
     *
     * Returns the superseded snapshot's manifests (what the winning
     * `transform` call saw), so callers can delete generations their
-    * commit replaced.
+    * commit replaced. Once a claim has landed the commit has succeeded:
+    * nothing after it (the lost-claim listing, tombstoning) is raised.
+    * Table changes commit through `GraftCommits.commit`, its one
+    * production caller.
     */
   def commitIndex(conf: Configuration, tableDir: String,
                   transform: Seq[TableManifest] => Seq[TableManifest],
@@ -817,15 +820,26 @@ object Manifests {
         // OUR snapshot, so the tip can only be ~attempts ahead of us;
         // a tip a full retention window ahead proves our number was
         // recycled. Withdraw the claim and retry on the true tip instead
-        // of silently losing the update.
-        val listed = versionedIndexes(conf, tableDir) // includes our claim
-        val maxAfter = listed.map(_._1).max
+        // of silently losing the update. A listing that fails proves
+        // nothing: the claim stands.
+        val listed =
+          try versionedIndexes(conf, tableDir) // includes our claim
+          catch {
+            case scala.util.control.NonFatal(e) =>
+              log.warn(s"graft index commit v$next on $tableDir: versions " +
+                "not listed after the claim", e)
+              Nil
+          }
+        val maxAfter = (next +: listed.map(_._1)).max
         if (maxAfter >= next + TombstoneRetention) {
           f.delete(new org.apache.hadoop.fs.Path(
             s"$tableDir/${versionedIndexName(next)}"), false)
         } else {
+          // the claim has landed: the commit has succeeded, and a failed
+          // tombstone step is logged, never raised (the next commits'
+          // passes overlap its window)
           val retention = snapshotRetention(conf)
-          listed.foreach { case (v, n) =>
+          try listed.foreach { case (v, n) =>
             val p = new org.apache.hadoop.fs.Path(s"$tableDir/$n")
             if (v < ver - TombstoneRetention) f.delete(p, false)
             else if (v < ver - retention &&
@@ -842,6 +856,10 @@ object Manifests {
               try f.create(p, true).close()
               catch { case _: java.io.IOException => () }
             }
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              log.warn(s"graft index commit v$next on $tableDir: superseded " +
+                "versions not tombstoned", e)
           }
           return cur
         }
@@ -853,10 +871,11 @@ object Manifests {
   }
 
   /** Test seam: runs between the snapshot read and the version claim —
-    * the window the tombstone-retention envelope protects. Production
-    * value is a no-op.
+    * the window a concurrent commit races into, and the one the
+    * tombstone-retention envelope protects. Tests arm it for one firing
+    * to race any table change. Production value is a no-op.
     */
-  private[engine] var beforeClaimHook: () => Unit = () => ()
+  private[graft] var beforeClaimHook: () => Unit = () => ()
 
   def versionedIndexName(version: Long): String =
     s"_manifest-index.v$version.json"

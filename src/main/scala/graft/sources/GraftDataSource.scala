@@ -1681,6 +1681,8 @@ class SchemaEvolutionConflict(msg: String) extends IllegalStateException(msg)
 
 private[sources] object GraftCommits {
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** The add-only evolution guard of an OCC commit (round 7,
     * rename-aware since round 8): a landing manifest's `schema` must
     * match or extend the CURRENT schema of the snapshot the commit
@@ -1703,98 +1705,133 @@ private[sources] object GraftCommits {
             "this append aborted")
     }
 
-  /** Publish one job's (or micro-batch's) staged containers: write the
-    * manifests (commit markers) first, all of them before the claim,
-    * then commit the new index snapshot via OCC ([[Manifests.commitIndex]] — safe against a
-    * concurrent append or streaming epoch), and only AFTER the new
-    * snapshot is live delete the generations this commit replaced
-    * (everything on truncate; the previous generation of each published
-    * EPOCH otherwise). Re-publishing an epoch is idempotent BY EPOCH:
-    * the replay's containers replace the original generation WHOLE,
-    * regardless of how the replay re-partitioned the epoch's rows —
-    * and when the original generation was COMPACTED away
-    * ([[GraftMaintenance.compact]] records the consumed logical names
-    * as the compacted manifest's `ancestors`), the replay is DROPPED
+  private def epochOf(name: String): String =
+    Manifests.epochKey(Manifests.logicalName(name))
+
+  /** The one table commit: every change to a graft table (DSv2 batch and
+    * stream writes, compaction, DELETE, UPDATE, UPSERT, rename, drop)
+    * lands through it.
+    *
+    *  1. `staged` is stamped with ONE commit id above `base` and, per
+    *     epoch, the number of containers the commit lands
+    *     (`commitParts`): the listing-fallback normalizer selects whole
+    *     generations by the id and tells a complete generation from a
+    *     crashed one by the count. Their commit markers are written, on
+    *     at most [[MarkerWriters]] threads, before the first claim.
+    *  2. Each OCC attempt ([[Manifests.commitIndex]], whose first
+    *     snapshot is `base`) calls `land(landing snapshot, stamped
+    *     staged, attempt id)` for the next index. A manifest of that
+    *     index that is neither in the landing snapshot nor already
+    *     written (a schema marker built for this attempt, named with its
+    *     id — an id above every manifest it lands on) gets its marker
+    *     before the claim.
+    *  3. `land` raises [[SchemaEvolutionConflict]] or
+    *     [[GraftMaintenance.CompactionConflict]] before any claim: every
+    *     container this commit wrote is then deleted and the conflict
+    *     rethrown. Any other failure deletes nothing; what it leaves is
+    *     unreferenced, and [[GraftMaintenance.vacuum]]'s to sweep.
+    *  4. Once the claim has landed the commit has succeeded, and nothing
+    *     after it is raised: the containers this commit wrote that the
+    *     new index does not name (dropped replays, a superseded schema
+    *     marker) and, with `reclaim`, the old containers the new index
+    *     dropped are deleted, and a failed delete is only logged — a
+    *     caller that saw a failure would drop staged blocks the landed
+    *     index names.
+    */
+  def commit(conf: org.apache.hadoop.conf.Configuration, path: String,
+             base: (Long, Seq[TableManifest]), staged: Seq[TableManifest],
+             reclaim: Boolean)(
+      land: (Seq[TableManifest], Seq[TableManifest], String) => Seq[TableManifest]): Unit = {
+    val commitId = Manifests.commitIdAbove(base._2)
+    val parts = staged.groupBy(m => epochOf(m.name)).view.mapValues(_.size).toMap
+    val stamped = staged.map(m =>
+      m.copy(commitId = commitId, commitParts = parts(epochOf(m.name))))
+    writeMarkers(stamped)(Manifests.writeManifest(conf, path, _))
+    var written = stamped.map(_.name)
+    var attempts = 0
+    var next = Seq.empty[TableManifest]
+    val prior =
+      try Manifests.commitIndex(conf, path, landing => {
+        // the first attempt lands on `base`, which commitId already tops
+        val id = if (attempts == 0) commitId else Manifests.commitIdAbove(landing)
+        attempts += 1
+        next = land(landing, stamped, id)
+        val known = landing.iterator.map(_.name).toSet ++ written
+        next.filterNot(m => known(m.name)).foreach { m =>
+          Manifests.writeManifest(conf, path, m)
+          written :+= m.name
+        }
+        next
+      }, Some(base))
+      catch {
+        case e @ (_: SchemaEvolutionConflict | _: GraftMaintenance.CompactionConflict) =>
+          discard(conf, path, written)
+          throw e
+      }
+    val live = next.iterator.map(_.name).toSet
+    discard(conf, path, (written ++ (if (reclaim) prior.map(_.name) else Nil))
+      .filterNot(live).distinct)
+  }
+
+  /** Delete containers this commit's index does not name, marker first;
+    * a failure is logged, never raised (the leftover is unreferenced,
+    * and vacuum's to sweep).
+    */
+  private def discard(conf: org.apache.hadoop.conf.Configuration, path: String,
+                      names: Seq[String]): Unit =
+    if (names.nonEmpty) {
+      val f = ContainerIO.fs(path, conf)
+      names.foreach { n =>
+        try Manifests.deleteContainer(f, path, n)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            log.warn(s"graft commit on $path: could not delete container $n " +
+              "(left for vacuum)", e)
+        }
+      }
+    }
+
+  /** Publish one job's (or micro-batch's) staged containers through
+    * [[commit]], replacing the previous generation of each published
+    * EPOCH (everything on truncate). Re-publishing an epoch is
+    * idempotent BY EPOCH: the replay's containers replace the original
+    * generation WHOLE, regardless of how the replay re-partitioned the
+    * epoch's rows — and when the original generation was COMPACTED away
+    * ([[GraftMaintenance.compact]] records the consumed epoch keys as
+    * the compacted manifest's `ancestors`), the replay is DROPPED
     * instead of appended: its rows already live inside the compacted
     * container, so re-adding them would double every row of the epoch.
-    *
-    * Each [[GraftCommitMessage]] carries its task's unpublished
-    * [[TableManifest]]; publish stamps the commit generation onto it
-    * (`copy(commitId, commitParts)`), writes it as the commit marker,
-    * and the OCC transform works on the typed snapshot.
+    * Both decisions are made against the snapshot the winning attempt
+    * lands on, and the replaced generation is deleted once the new one
+    * is live.
     */
   def publish(confKv: Map[String, String], path: String, truncate: Boolean,
               messages: Array[WriterCommitMessage]): Unit = {
-    val conf = ContainerIO.confFrom(confKv)
-    // one commit-generation stamp for everything this publish lands: the
-    // listing-fallback normalizer selects WHOLE generations by it when a
-    // crash window leaves two generations of an epoch on disk, and the
-    // per-epoch container count lets it tell a complete generation from
-    // a publish that crashed mid-way through its manifest writes
-    val base = Manifests.readCommittedVersion(conf, path)
-    val commitId = Manifests.commitIdAbove(base._2)
-    def epochOf(name: String) = Manifests.epochKey(Manifests.logicalName(name))
-    val raw = messages.collect {
+    val staged = messages.toSeq.collect {
       case m: GraftCommitMessage if m.manifest.rows > 0 => m.manifest
     }.sortBy(_.name)
-    val epochParts = raw.groupBy(m => epochOf(m.name)).view.mapValues(_.length).toMap
-    val fresh = raw.map(m =>
-      m.copy(commitId = commitId, commitParts = epochParts(epochOf(m.name))))
-    if (fresh.isEmpty && !truncate) return
-    writeMarkers(fresh)(Manifests.writeManifest(conf, path, _))
-    // names among `fresh` whose EPOCH was already folded into a live
-    // compacted container — decided against the snapshot the WINNING
-    // commit attempt saw (set by the last transform run). Matching is
-    // epoch-granular ([[Manifests.epochKey]]): a replay may run with a
-    // different partition count, so per-container matching would drop
-    // only the name-colliding part and append the rest as duplicates.
-    // Compaction consumes only WHOLE epochs (GraftMaintenance), so an
-    // ancestor epoch key always means "every row of that epoch lives in
-    // a compacted generation".
-    @volatile var droppedReplays = Set.empty[String]
-    @volatile var priorNames = Seq.empty[String]
-    // priorNames captures the snapshot the winning commit superseded —
-    // exactly the state this commit's deletes must be judged against
-    val newSchema = fresh.headOption.map(_.schemaCols).getOrElse(Nil)
-    try Manifests.commitIndex(conf, path, old => {
-      priorNames = old.map(_.name)
-      if (!truncate) checkSchema(path, old, newSchema)
-      val liveAncestors: Set[String] =
-        if (truncate) Set.empty else old.flatMap(_.ancestors).toSet
-      val (replays, active) = fresh.partition(m => liveAncestors(epochOf(m.name)))
-      droppedReplays = replays.map(_.name).toSet
-      // replacement is EPOCH-granular too: a replayed epoch may
-      // re-partition the same rows, so per-logical-name replacement
-      // would leave the old generation's surplus partitions alongside
-      // the full replay — duplicates. Publishing an epoch replaces
-      // EVERY container of its previous generation.
-      val activeEpochs = active.map(m => epochOf(m.name)).toSet
-      val kept =
-        if (truncate) Nil else old.filterNot(m => activeEpochs(epochOf(m.name)))
-      kept ++ active
-    }, Some(base))
-    catch {
-      case e: SchemaEvolutionConflict =>
-        // the commit markers written above must not linger: invisible to
-        // index reads (never committed) but the listing fallback and
-        // schema inference would trip over them
-        val f = ContainerIO.fs(path, conf)
-        fresh.foreach(m => Manifests.deleteContainer(f, path, m.name))
-        throw e
+    if (staged.isEmpty && !truncate) return
+    val conf = ContainerIO.confFrom(confKv)
+    val schema = staged.headOption.map(_.schemaCols).getOrElse(Nil)
+    commit(conf, path, Manifests.readCommittedVersion(conf, path), staged,
+        reclaim = true) { (landing, stamped, _) =>
+      if (truncate) stamped
+      else {
+        checkSchema(path, landing, schema)
+        // epoch-granular on both sides: a replay may re-partition the
+        // same rows, so a per-container match would drop or replace
+        // only part of the epoch. Compaction consumes only WHOLE epochs,
+        // so an ancestor epoch key means every row of that epoch lives
+        // in a compacted generation.
+        val ancestors = landing.iterator.flatMap(_.ancestors).toSet
+        val active = stamped.filterNot(m => ancestors(epochOf(m.name)))
+        val epochs = active.map(m => epochOf(m.name)).toSet
+        landing.filterNot(m => epochs(epochOf(m.name))) ++ active
+      }
     }
-    val activeNames = fresh.map(_.name).toSet -- droppedReplays
-    val activeEpochs = activeNames.map(epochOf)
-    def replaced(name: String): Boolean =
-      !activeNames.contains(name) && (truncate || activeEpochs.contains(epochOf(name)))
-    val doomed = priorNames.filter(replaced)
-    val f = ContainerIO.fs(path, conf)
-    doomed.foreach(Manifests.deleteContainer(f, path, _))
-    // a dropped replay's staged container + just-written manifest file
-    // are dead weight (its rows live in the compacted generation)
-    droppedReplays.foreach(Manifests.deleteContainer(f, path, _))
   }
 
-  /** At most this many commit markers of one publish are written at once. */
+  /** At most this many commit markers of one commit are written at once. */
   private final val MarkerWriters = 8
 
   /** Run `write` on every marker of `ms`, up to [[MarkerWriters]] at a
@@ -1819,19 +1856,20 @@ private[sources] object GraftCommits {
       } finally pool.shutdown()
     }
 
-  /** Drop an aborted epoch's staged containers (unreachable anyway — no
-    * manifest — but don't leave them as garbage).
+  /** Delete the staged blocks of the given stages — an aborted write
+    * epoch, a failed rewrite job, a failed upsert's source staging:
+    * unreferenced (no index names them), but not left as garbage. The
+    * match is ANCHORED (staged names are `part-<stage>-<digit>…`): a
+    * substring or bare prefix test could sweep another stage whose name
+    * extends this one; the prefix + leading-digit check can't.
     */
-  def dropStaged(confKv: Map[String, String], path: String, epoch: String): Unit = {
+  def dropStaged(confKv: Map[String, String], path: String, stages: String*): Unit = {
     val conf = ContainerIO.confFrom(confKv)
     val f = ContainerIO.fs(path, conf)
-    // ANCHORED match (staged names are `part-<epoch>-<part>-a<task>`): a
-    // substring test could sweep another epoch whose name embeds this
-    // one; the prefix + leading-digit check can't
-    val prefix = s"part-$epoch-"
+    val prefixes = stages.map(s => s"part-$s-")
     ContainerIO.listNames(conf, s"$path/blocks")
-      .filter(n => n.startsWith(prefix) && n.length > prefix.length &&
-        n.charAt(prefix.length).isDigit)
+      .filter(n => prefixes.exists(p => n.startsWith(p) && n.length > p.length &&
+        n.charAt(p.length).isDigit))
       .foreach(n => f.delete(new org.apache.hadoop.fs.Path(s"$path/blocks/$n"), false))
   }
 }
@@ -1974,9 +2012,8 @@ class GraftDataWriter(path: String, part: Int, epoch: String,
   }
 
   /** The unpublished manifest of this task's staged container — shared
-    * by the DSv2 `commit()` and the maintenance paths (upsert) that
-    * stage appends under their own OCC swap instead of
-    * [[GraftCommits.publish]].
+    * by the DSv2 `commit()` and UPSERT, which stages its source through
+    * this writer and lands it in its own [[GraftCommits.commit]].
     */
   private[sources] def commitManifest(): TableManifest =
     enc.finish().copy(

@@ -12,18 +12,18 @@ import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, D
   * help with (each file IS one small chunk). `compact` rewrites runs of
   * small containers into full-size ones and swaps them into the table
   * in one OCC index commit — the same shape as Iceberg's
-  * `rewrite_data_files` maintenance procedure, built on the machinery
-  * the write path already has ([[Manifests.commitIndex]] + the
-  * manifest-as-commit-marker discipline of [[GraftCommits.publish]]).
+  * `rewrite_data_files` maintenance procedure.
   *
   * Compaction and the row-level mutations (DELETE, UPDATE, UPSERT) are
   * ONE copy-on-write pipeline: one [[TableSnapshot]] read, one container
   * admission ([[admitted]]), one rewrite job ([[rewriteJob]]) streaming
   * containers through [[rewriteBin]], and one commit tail
-  * ([[commitTail]] -> [[swapGeneration]]). Each operation supplies only
-  * its per-container step: which rows to drop (compaction none, DELETE
-  * a bound predicate, UPSERT a key set) or, for UPDATE, which rows to
-  * re-assign.
+  * ([[commitTail]]). Each operation supplies only its per-container
+  * step: which rows to drop (compaction none, DELETE a bound predicate,
+  * UPSERT a key set) or, for UPDATE, which rows to re-assign. Rename
+  * and drop commit one zero-row schema marker ([[changeSchema]]).
+  * Every operation lands through the one table commit,
+  * [[GraftCommits.commit]], as the DSv2 writes do.
   */
 object GraftMaintenance {
 
@@ -49,7 +49,7 @@ object GraftMaintenance {
     * re-selected on the bigger chunks.
     *
     * Commit: new manifests are written first (commit markers), then ONE
-    * OCC index commit ([[Manifests.commitIndex]]) replaces exactly the
+    * OCC index commit ([[GraftCommits.commit]]) replaces exactly the
     * consumed manifests with the compacted ones — a concurrent append
     * or streaming epoch retries on top and is preserved; a concurrent
     * commit that REPLACED one of the consumed containers aborts the
@@ -80,18 +80,7 @@ object GraftMaintenance {
   def compact(spark: SparkSession, path: String,
               targetBytes: Long = 128L << 20,
               minContainers: Int = 2,
-              dryRun: Boolean = false): (Int, Int) =
-    compactWithHook(spark, path, targetBytes, minContainers, () => (),
-      dryRun = dryRun)
-
-  /** Test seam: `beforeCommit` runs after the rewritten containers are
-    * staged but before this run's manifests are written — the window a
-    * concurrent append/replace races into.
-    */
-  private[graft] def compactWithHook(spark: SparkSession, path: String,
-                                     targetBytes: Long, minContainers: Int,
-                                     beforeCommit: () => Unit,
-                                     dryRun: Boolean = false): (Int, Int) = {
+              dryRun: Boolean = false): (Int, Int) = {
     require(targetBytes > 0 && minContainers >= 2,
       s"need targetBytes > 0 and minContainers >= 2, " +
         s"got ($targetBytes, $minContainers)")
@@ -146,7 +135,7 @@ object GraftMaintenance {
       (pm, pm.rows) // a fold changes every row it moves
     }
     val changed = commitTail(snap, folded, Nil, what = "compaction",
-      reclaimConsumed = true, beforeCommit)
+      reclaim = true)
     (changed.map(_.consumed.size).sum, changed.size)
   }
 
@@ -190,15 +179,7 @@ object GraftMaintenance {
     *
     * Returns the number of rows deleted.
     */
-  def delete(spark: SparkSession, path: String, predicate: String): Long =
-    deleteWithHook(spark, path, predicate, () => ())
-
-  /** Test seam: `beforeCommit` runs after the rewrites are staged but
-    * before the swap (the concurrent-append window).
-    */
-  private[graft] def deleteWithHook(spark: SparkSession, path: String,
-                                    predicate: String,
-                                    beforeCommit: () => Unit): Long = {
+  def delete(spark: SparkSession, path: String, predicate: String): Long = {
     val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
     if (snap.committed.isEmpty) return 0L
     val (cond, _) = bindPredicate(spark, snap, predicate, Nil, "delete predicate")
@@ -212,7 +193,7 @@ object GraftMaintenance {
         copyRows(rowMatcher(cond, visPositions, schema)))
     }
     commitTail(snap, done, Nil, what = s"DELETE WHERE $predicate",
-      reclaimConsumed = false, beforeCommit).map(_.changed).sum
+      reclaim = false).map(_.changed).sum
   }
 
   /** Copy-on-write row-level UPDATE (round 9) — DELETE's sibling on the
@@ -235,13 +216,7 @@ object GraftMaintenance {
     * Returns the number of rows updated.
     */
   def update(spark: SparkSession, path: String, predicate: String,
-             set: Map[String, String]): Long =
-    updateWithHook(spark, path, predicate, set, () => ())
-
-  private[graft] def updateWithHook(spark: SparkSession, path: String,
-                                    predicate: String,
-                                    set: Map[String, String],
-                                    beforeCommit: () => Unit): Long = {
+             set: Map[String, String]): Long = {
     require(set.nonEmpty, "update needs at least one column assignment")
     val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
     if (snap.committed.isEmpty) return 0L
@@ -273,7 +248,7 @@ object GraftMaintenance {
         updated)
     }
     commitTail(snap, done, Nil, what = s"UPDATE WHERE $predicate",
-      reclaimConsumed = false, beforeCommit).map(_.changed).sum
+      reclaim = false).map(_.changed).sum
   }
 
   /** Copy-on-write MERGE-style UPSERT (round 9) — the third leg of
@@ -302,13 +277,7 @@ object GraftMaintenance {
     */
   def upsert(spark: SparkSession, path: String,
              source: org.apache.spark.sql.DataFrame,
-             keys: Seq[String]): (Long, Long) =
-    upsertWithHook(spark, path, source, keys, () => ())
-
-  private[graft] def upsertWithHook(spark: SparkSession, path: String,
-                                    source: org.apache.spark.sql.DataFrame,
-                                    keys: Seq[String],
-                                    beforeCommit: () => Unit): (Long, Long) = {
+             keys: Seq[String]): (Long, Long) = {
     require(keys.nonEmpty, "upsert needs at least one key column")
     val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
     val (visible, st) = (snap.visible, snap.schema)
@@ -334,14 +303,13 @@ object GraftMaintenance {
     // collected set never saw and a key could end up twice
     val src = source.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try upsertPersisted(spark, snap, src, keys, beforeCommit)
+    try upsertPersisted(spark, snap, src, keys)
     finally { src.unpersist(); () }
   }
 
   private def upsertPersisted(spark: SparkSession, snap: TableSnapshot,
                               source: org.apache.spark.sql.DataFrame,
-                              keys: Seq[String],
-                              beforeCommit: () => Unit): (Long, Long) = {
+                              keys: Seq[String]): (Long, Long) = {
     val (path, confKv, st) = (snap.path, snap.confKv, snap.schema)
     val keyVis = keys.map(st.fieldIndex)
 
@@ -398,12 +366,12 @@ object GraftMaintenance {
       else Nil
     val keyFull = keyVis.map(snap.visPositions)
     var appendedF: scala.concurrent.Future[Array[TableManifest]] = null
-    try {
+    val (done, appended) = try {
       // 1) stage the source as fresh containers (attempt-qualified, one
       // new epoch) through the ordinary writer — unpublished until the
-      // single swap below. Submitted CONCURRENTLY with the rewrite job in
+      // single commit below. Submitted CONCURRENTLY with the rewrite job in
       // step 2 (guide §2.6 — overlap independent jobs): the two touch
-      // disjoint containers and only meet at the single swap, so the
+      // disjoint containers and only meet at the single commit, so the
       // rewrite's tasks back-fill cores the staging job leaves idle.
       // Failure handling below AWAITS this future before sweeping staged
       // output, so a crash can never race the sweep against a straggling
@@ -438,26 +406,25 @@ object GraftMaintenance {
         else rewriteBin(conf, path, ms, schema, partName, bin)(copyRows(
           new StoredKeyMatcher(keyFull.map(schema), keySetB.value)))
       }
-      val appended = scala.concurrent.Await.result(
-        appendedF, scala.concurrent.duration.Duration.Inf)
-      // ONE swap: rewrites replace their originals, appends just land —
-      // no reader ever sees a key twice or not at all
-      val changed = commitTail(snap, done, appended.toSeq,
-        what = s"UPSERT ON ${keys.mkString(",")}",
-        reclaimConsumed = false, beforeCommit)
-      (changed.map(_.changed).sum, appended.map(_.rows).sum)
+      (done, scala.concurrent.Await.result(
+        appendedF, scala.concurrent.duration.Duration.Inf))
     } catch {
       case scala.util.control.NonFatal(e) =>
-        // the rewrite job and the swap sweep their own staging, but the
-        // CONCURRENT source staging may still be landing containers:
-        // drain it, then sweep (idempotent) so nothing survives the abort
+        // the rewrite job sweeps its own staging, but the CONCURRENT
+        // source staging may still be landing containers: drain it, then
+        // sweep (idempotent) so nothing survives the abort
         if (appendedF != null)
           try scala.concurrent.Await.ready(appendedF,
             scala.concurrent.duration.Duration.Inf)
           catch { case scala.util.control.NonFatal(_) => () }
-        sweepStaged(snap, epoch, s"merge-$runId")
+        GraftCommits.dropStaged(confKv, path, epoch, s"merge-$runId")
         throw aborted(path, "upsert", e)
     } finally keySetB.destroy()
+    // ONE commit: rewrites replace their originals, appends just land —
+    // no reader ever sees a key twice or not at all
+    val changed = commitTail(snap, done, appended.toSeq,
+      what = s"UPSERT ON ${keys.mkString(",")}", reclaim = false)
+    (changed.map(_.changed).sum, appended.map(_.rows).sum)
   }
 
   // ------------------------------------------- the copy-on-write pipeline
@@ -589,7 +556,7 @@ object GraftMaintenance {
       catch {
         case scala.util.control.NonFatal(e) =>
           awaitJobTasks(spark, tag)
-          sweepStaged(snap, s"$op-$runId")
+          GraftCommits.dropStaged(confKv, path, s"$op-$runId")
           throw aborted(path, noun, e)
       } finally sc.removeJobTag(tag)
     }
@@ -621,15 +588,6 @@ object GraftMaintenance {
     */
   private final val TaskDrainMs = 60000L
 
-  /** Delete the staged blocks (`part-<stage>-...`) of the given stages. */
-  private def sweepStaged(snap: TableSnapshot, stages: String*): Unit = {
-    val f = ContainerIO.fs(snap.path, snap.conf)
-    ContainerIO.listNames(snap.conf, s"${snap.path}/blocks")
-      .filter(n => stages.exists(s => n.startsWith(s"part-$s-")))
-      .foreach(n => f.delete(
-        new org.apache.hadoop.fs.Path(s"${snap.path}/blocks/$n"), false))
-  }
-
   /** How a failed copy-on-write operation surfaces: a source container
     * that vanished mid-rewrite (FileNotFound anywhere in the cause chain
     * — a concurrent overwrite or compaction deleted it) becomes the
@@ -654,79 +612,42 @@ object GraftMaintenance {
   }
 
   /** The one commit tail: the bins that changed something, plus any
-    * `appended` containers (UPSERT's staged source), publish through ONE
-    * [[swapGeneration]]; the `beforeCommit` test seam runs just before
-    * it. Returns the changed bins (nothing commits when there are none
-    * and nothing is appended).
+    * `appended` containers (UPSERT's staged source), land through ONE
+    * [[GraftCommits.commit]] replacing exactly the consumed containers.
+    * A consumed container replaced by a concurrent commit aborts with
+    * [[CompactionConflict]]; containers WITHOUT ancestors (the appended
+    * source) are plain appends to label resolution, so they carry
+    * publish's add-only/label re-check ([[GraftCommits.checkSchema]]),
+    * or their planning-time labels under this newer commit id would
+    * revert a rename or drop that committed meanwhile. Rewritten
+    * generations carry ancestors and never label-resolve.
+    *
+    * `reclaim = true` deletes the consumed generation once the new
+    * snapshot is live (compaction's expire-now semantics); the row-level
+    * mutations pass false, so retained time-travel snapshots keep
+    * reading the pre-mutation rows until the generation ages out of
+    * retention and [[vacuum]] sweeps it. Returns the changed bins
+    * (nothing commits when there are none and nothing is appended).
     */
   private def commitTail(snap: TableSnapshot, done: Seq[Rewritten],
                          appended: Seq[TableManifest], what: String,
-                         reclaimConsumed: Boolean,
-                         beforeCommit: () => Unit): Seq[Rewritten] = {
+                         reclaim: Boolean): Seq[Rewritten] = {
     val changed = done.filter(_.changed > 0L)
     if (changed.nonEmpty || appended.nonEmpty) {
-      beforeCommit()
-      swapGeneration(snap.conf, snap.path, changed.flatMap(_.consumed).toSet,
-        changed.map(_.staged) ++ appended, what, reclaimConsumed)
-    }
-    changed
-  }
-
-  /** Publish a rewrite generation (the commit of every copy-on-write
-    * operation — compact, DELETE, UPDATE, UPSERT): stamp ONE commit id
-    * across the run's bins (a crashed run's stale stage and its
-    * committed retry stay distinguishable in the listing-fallback
-    * normalizer), write the new manifests first (the commit-marker
-    * discipline of [[GraftCommits.publish]]), then ONE OCC index swap
-    * replacing exactly `consumed`. A consumed container replaced by a
-    * concurrent commit aborts with [[CompactionConflict]], a concurrent
-    * schema change the new manifests' labels would revert with
-    * [[SchemaEvolutionConflict]]; either way the staged generation is
-    * swept.
-    *
-    * `reclaimConsumed = true` deletes the consumed generation's files
-    * once the new snapshot is live (compaction's documented expire-now
-    * semantics); the row-level mutations pass false, so retained
-    * time-travel snapshots keep reading the pre-mutation rows until the
-    * generation ages out of retention and [[vacuum]] sweeps it.
-    */
-  private def swapGeneration(conf: org.apache.hadoop.conf.Configuration,
-                             path: String, consumed: Set[String],
-                             newManifests: Seq[TableManifest],
-                             what: String, reclaimConsumed: Boolean): Unit = {
-    val base = Manifests.readCommittedVersion(conf, path)
-    val commitId = Manifests.commitIdAbove(base._2)
-    val stamped = newManifests.map(_.copy(commitId = commitId))
-    // containers WITHOUT ancestors (UPSERT's appended source) are plain
-    // appends to label resolution (currentSpecsOf takes current names
-    // from them): they carry publish's add-only/label re-check, or their
-    // planning-time labels under this newer commit id would silently
-    // revert a rename or drop that committed meanwhile. Rewritten
-    // generations carry ancestors and never label-resolve.
-    val appendSchemas = stamped.filter(_.ancestors.isEmpty).map(_.schemaCols).distinct
-    stamped.foreach(m => Manifests.writeManifest(conf, path, m))
-    try {
-      Manifests.commitIndex(conf, path, old => {
-        appendSchemas.foreach(GraftCommits.checkSchema(path, old, _))
-        val live = old.map(_.name).toSet
-        val gone = consumed.filterNot(live)
+      val (conf, path) = (snap.conf, snap.path)
+      val consumed = changed.flatMap(_.consumed).toSet
+      GraftCommits.commit(conf, path, Manifests.readCommittedVersion(conf, path),
+          changed.map(_.staged) ++ appended, reclaim) { (landing, stamped, _) =>
+        stamped.filter(_.ancestors.isEmpty).map(_.schemaCols).distinct
+          .foreach(GraftCommits.checkSchema(path, landing, _))
+        val gone = consumed -- landing.map(_.name)
         if (gone.nonEmpty) throw new CompactionConflict(
           s"containers ${gone.toSeq.sorted.mkString(", ")} were replaced " +
             s"by a concurrent commit during $what of $path; aborting")
-        old.filterNot(m => consumed(m.name)) ++ stamped
-      }, Some(base))
-    } catch {
-      case e @ (_: CompactionConflict | _: SchemaEvolutionConflict) =>
-        // no commit landed: drop the staged generation
-        val f = ContainerIO.fs(path, conf)
-        newManifests.foreach(m => Manifests.deleteContainer(f, path, m.name))
-        throw e
+        landing.filterNot(m => consumed(m.name)) ++ stamped
+      }
     }
-    if (reclaimConsumed) {
-      // new snapshot is live: delete the consumed generation
-      val f = ContainerIO.fs(path, conf)
-      consumed.foreach(Manifests.deleteContainer(f, path, _))
-    }
+    changed
   }
 
   /** Conservative Catalyst-expression -> source-Filter translation for
@@ -800,33 +721,16 @@ object GraftMaintenance {
     * [[SchemaEvolutionConflict]] inside the OCC transform.
     */
   def renameColumn(spark: SparkSession, path: String,
-                   from: String, to: String): Unit =
-    renameColumnWithHook(spark, path, from, to, () => ())
-
-  /** Test seam: `beforeCommit` runs after the marker (with its first
-    * candidate commitId) is staged but before the index commit — the
-    * window a concurrent append races into (advice r8: its higher
-    * commitId under the OLD label must not out-rank the marker).
-    */
-  private[graft] def renameColumnWithHook(spark: SparkSession, path: String,
-                   from: String, to: String,
-                   beforeCommit: () => Unit): Unit = {
+                   from: String, to: String): Unit = {
     require(to.nonEmpty && to != from, s"bad rename target '$to'")
-    schemaMarkerCommit(spark, path, beforeCommit,
-      mutate = current => {
-        val idx = current.indexWhere(_.name == from)
-        require(idx >= 0,
-          s"no column '$from' in ${current.map(_.name).mkString(",")}")
-        require(!current.exists(_.name == to),
-          s"column '$to' already exists in ${current.map(_.name).mkString(",")}")
-        current.updated(idx, current(idx).copy(name = to))
-      },
-      recheck = (cur, idx) =>
-        if (idx >= cur.size || cur(idx).name != from ||
-            cur.exists(_.name == to))
-          throw new SchemaEvolutionConflict(
-            s"concurrent schema change on $path: cannot rename '$from' -> " +
-              s"'$to' (current columns: ${cur.map(_.name).mkString(",")})"))
+    changeSchema(spark, path, s"rename '$from' -> '$to'") { current =>
+      val idx = current.indexWhere(_.name == from)
+      require(idx >= 0,
+        s"no column '$from' in ${current.map(_.name).mkString(",")}")
+      require(!current.exists(_.name == to),
+        s"column '$to' already exists in ${current.map(_.name).mkString(",")}")
+      current.updated(idx, current(idx).copy(name = to))
+    }
   }
 
   /** Drop a column (round 9). Field identity is POSITIONAL, so a drop is
@@ -844,82 +748,51 @@ object GraftMaintenance {
     * with [[SchemaEvolutionConflict]].
     */
   def dropColumn(spark: SparkSession, path: String, col: String): Unit =
-    dropColumnWithHook(spark, path, col, () => ())
+    changeSchema(spark, path, s"drop '$col'") { current =>
+      val idx = current.indexWhere(s => s.name == col && !s.dropped)
+      require(idx >= 0,
+        s"no column '$col' in ${current.filterNot(_.dropped)
+          .map(_.name).mkString(",")}")
+      require(current.count(s => !s.dropped) > 1,
+        s"cannot drop '$col': it is the table's last visible column")
+      val tomb = s"_dropped_p${idx}_" +
+        java.util.UUID.randomUUID().toString.take(8)
+      current.updated(idx, current(idx).copy(name = tomb, dropped = true))
+    }
 
-  private[graft] def dropColumnWithHook(spark: SparkSession, path: String,
-                   col: String, beforeCommit: () => Unit): Unit =
-    schemaMarkerCommit(spark, path, beforeCommit,
-      mutate = current => {
-        val idx = current.indexWhere(s => s.name == col && !s.dropped)
-        require(idx >= 0,
-          s"no column '$col' in ${current.filterNot(_.dropped)
-            .map(_.name).mkString(",")}")
-        require(current.count(s => !s.dropped) > 1,
-          s"cannot drop '$col': it is the table's last visible column")
-        val tomb = s"_dropped_p${idx}_" +
-          java.util.UUID.randomUUID().toString.take(8)
-        current.updated(idx, current(idx).copy(name = tomb, dropped = true))
-      },
-      recheck = (cur, idx) =>
-        if (idx >= cur.size || cur(idx).name != col || cur(idx).dropped)
-          throw new SchemaEvolutionConflict(
-            s"concurrent schema change on $path: cannot drop '$col' " +
-              s"(current columns: ${cur.filterNot(_.dropped)
-                .map(_.name).mkString(",")})"))
-
-  /** Shared zero-row schema-marker commit (rename, drop): `mutate`
-    * produces the marker's chain from the current one (its single
-    * changed position is re-validated by `recheck` against the snapshot
-    * the OCC commit actually lands on).
+  /** The one zero-row schema-marker commit (rename, drop): `mutate` maps
+    * the table's positional chain to the marker's. It is validated once
+    * against the operation's snapshot, so a user error is an
+    * IllegalArgumentException raised before anything is written; then
+    * every commit attempt re-applies it to the chain of the snapshot the
+    * attempt lands on — a concurrent append's added column or another
+    * column's rename or drop is kept, never reverted — and names the
+    * marker with the attempt's commit id, which outranks every manifest
+    * that snapshot holds (last-commit-wins label resolution). A mutation
+    * that no longer applies there (a concurrent change of the same
+    * column) raises [[SchemaEvolutionConflict]].
     */
-  private def schemaMarkerCommit(spark: SparkSession, path: String,
-                   beforeCommit: () => Unit,
-                   mutate: Seq[ColumnSpec] => Seq[ColumnSpec],
-                   recheck: (Seq[ColumnSpec], Int) => Unit): Unit = {
+  private def changeSchema(spark: SparkSession, path: String, what: String)(
+      mutate: Seq[ColumnSpec] => Seq[ColumnSpec]): Unit = {
     val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
-    val conf = snap.conf
-    val current = snap.chain
-    val mutated = mutate(current)
-    val idx = current.indices.find(i => current(i) != mutated(i)).getOrElse(0)
-    def mkMarker(commitId: String): TableManifest =
-      TableManifest(name = s"schemamarker-$commitId-0", part = 0, rows = 0L,
-        chunks = 0, rawBytes = 0L, encodedBytes = 0L, digest = "",
-        schemaCols = mutated.map(s => (s.name, s.packed)), digestCol = "",
-        commitId = commitId, schemaMarker = true)
-    // the commit builds on the snapshot read above; a lost claim re-reads
-    val base = (snap.version, snap.all)
-    var marker = mkMarker(Manifests.commitIdAbove(snap.all))
-    Manifests.writeManifest(conf, path, marker)
-    beforeCommit()
-    try Manifests.commitIndex(conf, path, old => {
-      // re-check against the snapshot this commit actually lands on
-      val cur = GraftDataSource.currentSpecsOf(old)
-      recheck(cur, idx)
-      // last-commit-wins label resolution: the marker must outrank
-      // EVERY manifest in the snapshot this commit actually lands on.
-      // An append that committed between our base read and here
-      // carries a HIGHER id under the OLD label, and the rename would
-      // report success but be silently reverted (round-8 advice,
-      // medium). Regenerate above the snapshot's max — re-checked on
-      // every OCC retry, each of which sees a fresher snapshot —
-      // writing the new marker BEFORE the index commit keeps the
-      // commit-marker-first discipline; the outranked marker file is
-      // removed so it can't confuse the listing fallback.
-      if (old.exists(m => Manifests.generation(m.commitId) >=
-          Manifests.generation(marker.commitId))) {
-        val stale = marker
-        marker = mkMarker(Manifests.commitIdAbove(old))
-        Manifests.writeManifest(conf, path, marker)
-        ContainerIO.fs(path, conf).delete(new org.apache.hadoop.fs.Path(
-          Manifests.manifestPath(path, stale.name)), false)
-      }
-      old :+ marker
-    }, Some(base))
-    catch {
-      case e: SchemaEvolutionConflict =>
-        ContainerIO.fs(path, conf).delete(new org.apache.hadoop.fs.Path(
-          Manifests.manifestPath(path, marker.name)), false)
-        throw e
+    mutate(snap.chain)
+    GraftCommits.commit(snap.conf, path, (snap.version, snap.all), Nil,
+        reclaim = false) { (landing, _, id) =>
+      val current = GraftDataSource.currentSpecsOf(landing)
+      val chain =
+        try mutate(current)
+        catch {
+          case e: IllegalArgumentException =>
+            val c = new SchemaEvolutionConflict(
+              s"concurrent schema change on $path: cannot $what (current " +
+                s"columns: ${current.filterNot(_.dropped).map(_.name).mkString(",")})")
+            c.initCause(e)
+            throw c
+        }
+      landing :+ TableManifest(name = s"schemamarker-$id-0", part = 0,
+        rows = 0L, chunks = 0, rawBytes = 0L, encodedBytes = 0L, digest = "",
+        schemaCols = chain.map(s => (s.name, s.packed)), digestCol = "",
+        commitId = id, schemaMarker = true)
     }
   }
 

@@ -19,6 +19,21 @@ object SparkTestSession {
   }
 }
 
+/** The one race seam of a table change: `race` runs once, inside the
+  * first index commit that reaches its claim ([[Manifests.beforeClaimHook]])
+  * while `op` runs — after the commit's markers are written and before
+  * it claims the next index version, the window a concurrent commit
+  * lands in. The hook disarms itself before `race` runs, so the racing
+  * operation's own commit passes straight through.
+  */
+object ClaimRace {
+  def racing[T](race: => Any)(op: => T): T = {
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    Manifests.beforeClaimHook = () => if (armed.getAndSet(false)) { race; () }
+    try op finally Manifests.beforeClaimHook = () => ()
+  }
+}
+
 class EngineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
 
 /** Copy-on-write row-level DELETE (round 9): predicate-admitted container
   * rewrite under one OCC swap. The contracts under test: untouched
@@ -124,8 +124,9 @@ class DeleteSpec extends AnyFunSuite {
     "the swap") {
     val d = tmp("race")
     append(d, 0, 100, "a")
-    val n = GraftMaintenance.deleteWithHook(spark, d, "id < 10",
-      beforeCommit = () => append(d, 1000, 1010, "z"))
+    val n = ClaimRace.racing(append(d, 1000, 1010, "z")) {
+      GraftMaintenance.delete(spark, d, "id < 10")
+    }
     assert(n === 10)
     val left = spark.read.format("graft").load(d)
     assert(left.count() === 100)
@@ -140,11 +141,12 @@ class DeleteSpec extends AnyFunSuite {
     append(d, 0, 50, "a")
     append(d, 50, 100, "a")
     val ex = intercept[GraftMaintenance.CompactionConflict] {
-      GraftMaintenance.deleteWithHook(spark, d, "id >= 0",
-        beforeCommit = () => {
-          val (c, p) = GraftMaintenance.compact(spark, d, minContainers = 2)
-          assert(c === 2 && p === 1)
-        })
+      ClaimRace.racing {
+        val (c, p) = GraftMaintenance.compact(spark, d, minContainers = 2)
+        assert(c === 2 && p === 1)
+      } {
+        GraftMaintenance.delete(spark, d, "id >= 0")
+      }
     }
     assert(ex.getMessage.contains("DELETE"))
     // the table is exactly what the compaction published
@@ -350,9 +352,10 @@ class DeleteSpec extends AnyFunSuite {
     append(d, 10000, 10100, "b") // high container
     // delete B races into delete A's commit window; their consumed
     // containers are disjoint, so A's OCC retry lands on top of B
-    val nA = GraftMaintenance.deleteWithHook(spark, d, "id < 50",
-      beforeCommit = () =>
-        assert(GraftMaintenance.delete(spark, d, "id >= 10050") === 50L))
+    val nA = ClaimRace.racing(
+        assert(GraftMaintenance.delete(spark, d, "id >= 10050") === 50L)) {
+      GraftMaintenance.delete(spark, d, "id < 50")
+    }
     assert(nA === 50L)
     val r = spark.read.format("graft").load(d)
     assert(r.count() === 100)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
 
 /** Column DROP via positional tombstones (round 9): a zero-row schema
   * marker flags the position dropped; committed containers keep their
@@ -160,11 +160,26 @@ class DropSpec extends AnyFunSuite {
     (0 until 10).map(i => (i.toLong, s"x$i")).toDF("id", "tag")
       .coalesce(1).write.format("graft").mode("append").save(d2)
     intercept[SchemaEvolutionConflict] {
-      GraftMaintenance.dropColumnWithHook(spark, d2, "tag",
-        () => GraftMaintenance.renameColumn(spark, d2, "tag", "label"))
+      ClaimRace.racing(GraftMaintenance.renameColumn(spark, d2, "tag", "label")) {
+        GraftMaintenance.dropColumn(spark, d2, "tag")
+      }
     }
     assert(spark.read.format("graft").load(d2).schema.fieldNames.toSeq ===
       Seq("id", "label"))
+  }
+
+  test("a drop racing a rename of ANOTHER column keeps both") {
+    val d = tmp("race-rename")
+    seed(d, 0, 20)
+    // the drop's marker is rebuilt on the snapshot it lands on, so the
+    // rename that landed first is not reverted
+    ClaimRace.racing(GraftMaintenance.renameColumn(spark, d, "tag", "label")) {
+      GraftMaintenance.dropColumn(spark, d, "score")
+    }
+    val r = spark.read.format("graft").load(d)
+    assert(r.schema.fieldNames.toSeq === Seq("id", "label"))
+    assert(r.count() === 20)
+    assert(r.filter(col("label") === "t3").count() === 4)
   }
 
   test("SQL surface: CALL graft.system.drop_column") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThan, LessThan}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{ColumnarEngine, Lane, SourceTable, SparkTestSession}
+import graft.engine.{ColumnarEngine, ContainerIO, Lane, SourceTable, SparkTestSession}
 
 class GraftSourceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -314,6 +314,29 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(retained === 3)
     assert(parsesDuring(GraftMaintenance.vacuum(spark, d, graceMs = 0L)) === 1L + retained)
     assert(spark.read.format("graft").load(d).count() === 190L)
+  }
+
+  test("an overwrite whose old block cannot be deleted after the claim " +
+    "lands stays committed and readable") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft-landed").toString
+    (0 until 100).map(i => (i.toLong, s"a$i")).toDF("id", "tag")
+      .coalesce(1).write.format("graft").mode("overwrite").save(d)
+    val blocks = ContainerIO.listNames(ContainerIO.localConf(), s"$d/blocks")
+      .filter(_.endsWith(".gblk"))
+    assert(blocks.size === 1)
+    // the old block becomes a non-empty directory: Hadoop's
+    // non-recursive delete of it throws
+    val old = java.nio.file.Paths.get(d, "blocks", blocks.head)
+    java.nio.file.Files.delete(old)
+    java.nio.file.Files.createDirectory(old)
+    java.nio.file.Files.write(old.resolve("x"), Array[Byte](1))
+    val want = (0 until 50).map(i => (i.toLong, s"b$i"))
+    want.toDF("id", "tag").coalesce(1).write.format("graft")
+      .mode("overwrite").save(d)
+    val back = spark.read.format("graft").load(d)
+      .as[(Long, String)].collect().sorted
+    assert(back.toSeq === want)
   }
 
   test("SQL surface: CREATE TABLE USING graft, pushdown visible in EXPLAIN") {

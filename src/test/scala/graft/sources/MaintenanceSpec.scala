@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
 
 class MaintenanceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -149,10 +149,10 @@ class MaintenanceSpec extends AnyFunSuite {
         .write.format("graft").mode("append").save(d)
     assert(gblks(d).size >= 4)
     val appended = (1000 until 1050).map(i => (i.toLong, s"late$i"))
-    val (consumed, produced) = GraftMaintenance.compactWithHook(
-      spark, d, 128L << 20, 2,
-      () => appended.toDF("id", "tag")
-        .write.format("graft").mode("append").save(d))
+    val (consumed, produced) = ClaimRace.racing(appended.toDF("id", "tag")
+        .write.format("graft").mode("append").save(d)) {
+      GraftMaintenance.compact(spark, d, 128L << 20, 2)
+    }
     assert(consumed >= 4 && produced === 1)
     val back = spark.read.format("graft").load(d)
       .as[(Long, String)].collect().sorted
@@ -306,7 +306,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val target = (sizes.last + sizes(sizes.length - 2)) / 2
     assert(ms.count(_.encodedBytes < target) === 3,
       "layout precondition: exactly 3 of 4 containers are under target")
-    val (c, p) = GraftMaintenance.compactWithHook(spark, d, target, 2, () => ())
+    val (c, p) = GraftMaintenance.compact(spark, d, target, 2)
     assert(c === 2 && p === 1,
       s"only epoch A (both containers small) may compact, got ($c, $p)")
     val after = Manifests.readCommitted(conf, d)
@@ -436,10 +436,11 @@ class MaintenanceSpec extends AnyFunSuite {
         .write.format("graft").mode("append").save(d)
     val winner = (0 until 10).map(i => (i.toLong, "winner"))
     val ex = intercept[GraftMaintenance.CompactionConflict] {
-      GraftMaintenance.compactWithHook(spark, d, 128L << 20, 2,
-        // truncate replaces (and deletes) every consumed container
-        () => winner.toDF("id", "tag")
-          .write.format("graft").mode("overwrite").save(d))
+      // truncate replaces (and deletes) every consumed container
+      ClaimRace.racing(winner.toDF("id", "tag")
+          .write.format("graft").mode("overwrite").save(d)) {
+        GraftMaintenance.compact(spark, d, 128L << 20, 2)
+      }
     }
     assert(ex.getMessage.contains("concurrent commit"))
     // the table is exactly what the winner published; no staged leftovers
@@ -451,6 +452,30 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(!ContainerIO.listNames(ContainerIO.localConf(), s"$d/manifests")
       .exists(_.contains("compact-")),
       "aborted compaction must remove its staged manifests")
+  }
+
+  test("compact: a consumed block that cannot be deleted after the claim " +
+    "lands leaves the compaction committed") {
+    import spark.implicits._
+    val d = tempDir("cmp-landed")
+    for (w <- 0 until 3)
+      (0 until 30).map(i => ((w * 30 + i).toLong, s"v$i"))
+        .toDF("id", "tag")
+        .write.format("graft").mode("append").save(d)
+    val victim = java.nio.file.Paths.get(d, "blocks", gblks(d).min)
+    // once the rewrite has read it, the consumed block becomes a
+    // non-empty directory: Hadoop's non-recursive delete of it throws
+    val (consumed, produced) = ClaimRace.racing {
+      java.nio.file.Files.delete(victim)
+      java.nio.file.Files.createDirectory(victim)
+      java.nio.file.Files.write(victim.resolve("x"), Array[Byte](1))
+    } {
+      GraftMaintenance.compact(spark, d, 128L << 20, 2)
+    }
+    assert(consumed >= 3 && produced === 1)
+    val back = spark.read.format("graft").load(d)
+      .as[(Long, String)].collect().sorted
+    assert(back.toSeq === (0 until 90).map(i => (i.toLong, s"v${i % 30}")))
   }
 
   test("vacuum removes aged orphans and tmp fragments, never committed or fresh files") {

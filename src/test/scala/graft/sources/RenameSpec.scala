@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
 
 /** Column renames (round 8): field identity is positional under the
   * add-only invariant; a rename commits a zero-row schema marker, old
@@ -150,11 +150,13 @@ class RenameSpec extends AnyFunSuite {
     // AFTER the rename computed its commitId but BEFORE its index
     // commit — the append's higher commitId under the OLD label would
     // win last-commit-wins resolution and silently revert the rename
-    GraftMaintenance.renameColumnWithHook(spark, d, "v", "value", () => {
+    ClaimRace.racing {
       Thread.sleep(5) // guarantee a strictly higher wall-clock prefix
       (50 until 100).map(i => (i.toLong, i * 3L)).toDF("id", "v")
         .coalesce(1).write.format("graft").mode("append").save(d)
-    })
+    } {
+      GraftMaintenance.renameColumn(spark, d, "v", "value")
+    }
     val back = spark.read.format("graft").load(d)
     assert(back.schema.fieldNames.toSeq === Seq("id", "value"),
       s"rename was reverted by the racing append: ${back.schema.fieldNames.toSeq}")
@@ -162,6 +164,34 @@ class RenameSpec extends AnyFunSuite {
     assert(back.count() === 100)
     assert(back.agg(sum("value")).collect().head.getLong(0) ===
       (0 until 100).map(_ * 3L).sum)
+    // the marker built for the lost attempt is gone; the landed one stays
+    assert(ContainerIO.listNames(conf, s"$d/manifests")
+      .count(_.startsWith("part-schemamarker-")) === 1)
+  }
+
+  test("a rename racing a rename or drop of ANOTHER column keeps both") {
+    import spark.implicits._
+    // the rename's marker is rebuilt on the snapshot it lands on: a
+    // marker built from the chain it planned against would silently
+    // revert the racing change (both calls reporting success)
+    val rows = (0 until 20).map(i => (i.toLong, i * 2L, s"z$i"))
+    Seq[(String, org.apache.spark.sql.DataFrame, String => Unit, Seq[String])](
+      ("rename", rows.map(r => (r._1, r._2)).toDF("x", "y"),
+        d => GraftMaintenance.renameColumn(spark, d, "x", "x2"), Seq("x2", "y2")),
+      ("drop", rows.toDF("x", "y", "z"),
+        d => GraftMaintenance.dropColumn(spark, d, "z"), Seq("x", "y2"))
+    ).foreach { case (what, table, race, cols) =>
+      val d = java.nio.file.Files.createTempDirectory(s"graft-ren-$what").toString
+      table.coalesce(1).write.format("graft").mode("append").save(d)
+      ClaimRace.racing(race(d)) {
+        GraftMaintenance.renameColumn(spark, d, "y", "y2")
+      }
+      val back = spark.read.format("graft").load(d)
+      assert(back.schema.fieldNames.toSeq === cols, what)
+      assert(back.count() === 20, what)
+      assert(back.agg(sum("y2")).collect().head.getLong(0) ===
+        (0 until 20).map(_ * 2L).sum, what)
+    }
   }
 
   test("rename of a nullable evolved column keeps evolution semantics") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
 
 /** Copy-on-write row-level UPDATE (round 9): DELETE's sibling — matched
   * rows rewrite with assignments applied (originals visible to every
@@ -143,9 +143,9 @@ class UpdateSpec extends AnyFunSuite {
   test("update x time travel, replay, and concurrent append") {
     val d = tmp("concur")
     append(d, 0, 50, "a") // version 0
-    val n = GraftMaintenance.updateWithHook(spark, d, "id < 10",
-      Map("score" -> "0L"),
-      beforeCommit = () => append(d, 1000, 1010, "z"))
+    val n = ClaimRace.racing(append(d, 1000, 1010, "z")) {
+      GraftMaintenance.update(spark, d, "id < 10", Map("score" -> "0L"))
+    }
     assert(n === 10)
     val r = spark.read.format("graft").load(d)
     assert(r.count() === 60, "the racing append must survive the swap")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
 
 /** MERGE-style copy-on-write UPSERT (round 9): whole-row replace-by-key
   * — matched target rows drop, the source appends, ONE OCC swap makes
@@ -150,8 +150,9 @@ class UpsertSpec extends AnyFunSuite {
     val d = tmp("concur")
     append(d, 0, 50, "a") // version 0
     val src = Seq((1L, "u", -1L)).toDF("id", "tag", "score")
-    val (rep, app) = GraftMaintenance.upsertWithHook(spark, d, src, Seq("id"),
-      beforeCommit = () => append(d, 2000, 2005, "z"))
+    val (rep, app) = ClaimRace.racing(append(d, 2000, 2005, "z")) {
+      GraftMaintenance.upsert(spark, d, src, Seq("id"))
+    }
     assert(rep === 1L && app === 1L)
     val r = spark.read.format("graft").load(d)
     assert(r.count() === 55, "the racing append must survive the swap")
@@ -178,8 +179,9 @@ class UpsertSpec extends AnyFunSuite {
       // one matched key, one new key
       val src = Seq((1L, "u", -1L), (999L, "n", 0L)).toDF("id", "tag", "score")
       intercept[SchemaEvolutionConflict] {
-        GraftMaintenance.upsertWithHook(spark, d, src, Seq("id"),
-          beforeCommit = () => race(d))
+        ClaimRace.racing(race(d)) {
+          GraftMaintenance.upsert(spark, d, src, Seq("id"))
+        }
       }
       val r = spark.read.format("graft").load(d)
       assert(r.columns.toSeq === cols, s"the $what must survive")
