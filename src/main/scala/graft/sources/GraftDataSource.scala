@@ -181,64 +181,96 @@ object GraftDataSource {
   private[sources] def layoutOf(st: StructType): Map[String, ColumnSpec] =
     specsOf(st).map(s => s.name -> s).toMap
 
-  /** Rewrite pushed filters into the STORED domain, once, so every
-    * downstream stage — zone-map admission, chunk pruning, runtime
-    * filters, the row-level re-check — sees only lane-typed constants.
+  /** The one boundary of pushdown: a Spark filter becomes `Some((shown,
+    * pred))` when this source fully enforces it (chunk skip plus the
+    * reader's row check), None when it stays in Spark. `pred` is the
+    * stored-domain test every later stage consumes; `shown` is the filter
+    * with stored-domain constants, as `pushedFilters()` and EXPLAIN print.
+    *
     * Each constant maps through its column kind's
-    * [[graft.engine.Kind.storedRange]] (the range of stored values SQL
-    * calls equal to it): an equality becomes that one value, or an IN
-    * over the two of FLOAT ±0.0; a range bound takes the side that keeps
-    * SQL semantics (the DECIMAL grid's floor/ceil), and only on ordered
-    * kinds; IN drops members no stored value equals. A filter whose
-    * constant does not translate (NaN, an unrepresentable equality, a
-    * constant beyond long range, a non-ordered range) stays as pushed, so
-    * [[pushable]] rejects it and Spark evaluates it residually.
+    * [[graft.engine.Kind.storedRange]] (the stored values SQL calls equal
+    * to it): an equality becomes that one value, or an IN over the two of
+    * FLOAT ±0.0; a range bound takes the side that keeps SQL semantics
+    * (the DECIMAL grid's floor/ceil), and only on ordered kinds; IN drops
+    * members no stored value equals. Then IS [NOT] NULL pushes on every
+    * column, and =, IN and ranges push when their constants are lane
+    * values (a long, an int, a non-NaN double), = and IN on strings.
+    * String ranges stay in Spark (collation-safe range proofs hold only
+    * for the ASCII-recorded stats), as do NaN constants (Spark orders NaN
+    * above everything, unlike IEEE and the sortable mapping's tail) and
+    * constants that do not translate (an unrepresentable equality, one
+    * beyond long range).
     */
-  private[sources] def translateFilters(filters: Array[Filter],
-      layout: Map[String, ColumnSpec]): Array[Filter] = {
-    def tr(f: Filter, s: ColumnSpec): Filter = {
-      val k = Kinds(s.kind)
-      def range(x: Any) = k.storedRange(x, s)
-      // a constant's stored points: at most two adjacent values
-      def points(r: (Long, Long)): Seq[AnyRef] =
-        if (r._1 == r._2) Seq(k.box(r._1))
-        else if (r._1 < r._2) Seq(k.box(r._1), k.box(r._2))
-        else Nil
-      f match {
-        case EqualTo(c, x) => range(x).map(points) match {
-          case Some(Seq(v)) => EqualTo(c, v)
-          case Some(vs) if vs.nonEmpty => In(c, vs.toArray[Any])
-          case _ => f
+  private[sources] def pushdown(f: Filter,
+      layout: Map[String, ColumnSpec]): Option[(Filter, Pred)] =
+    f.references match {
+      case Array(c) if layout.contains(c) =>
+        val s = layout(c)
+        val k = Kinds(s.kind)
+        def range(x: Any) = k.storedRange(x, s)
+        // a constant's stored points: at most two adjacent values
+        def points(r: (Long, Long)): Array[Any] =
+          if (r._1 == r._2) Array(k.box(r._1))
+          else if (r._1 < r._2) Array(k.box(r._1), k.box(r._2))
+          else Array.empty
+        // a range bound's stored side, on ordered kinds
+        def side(x: Any, hi: Boolean): Any =
+          if (!k.ordered) x else range(x).fold(x)(r => k.box(if (hi) r._2 else r._1))
+        // a constant as a value of the column's lane, when it is one
+        def longOf(x: Any): Option[Long] = (s.lane, x) match {
+          case (Lane.Longs, v: java.lang.Long) => Some(v.longValue)
+          case (Lane.Ints, v: java.lang.Integer) => Some(v.longValue)
+          case _ => None
         }
-        case GreaterThan(c, x) if k.ordered =>
-          range(x).fold(f)(r => GreaterThan(c, k.box(r._2)))
-        case GreaterThanOrEqual(c, x) if k.ordered =>
-          range(x).fold(f)(r => GreaterThanOrEqual(c, k.box(r._1)))
-        case LessThan(c, x) if k.ordered =>
-          range(x).fold(f)(r => LessThan(c, k.box(r._1)))
-        case LessThanOrEqual(c, x) if k.ordered =>
-          range(x).fold(f)(r => LessThanOrEqual(c, k.box(r._2)))
-        case In(c, vs) if vs.nonEmpty =>
-          // a member beyond long range equals no stored value: dropping it
-          // (an empty range) keeps IN exact
-          val rs = vs.map { v =>
-            try range(v) catch { case _: ArithmeticException => Some((1L, 0L)) }
+        def doubleOf(x: Any): Option[Double] = (s.lane, x) match {
+          case (Lane.Doubles, v: java.lang.Double) if !v.isNaN => Some(v.doubleValue)
+          case _ => None
+        }
+        def stringOf(x: Any): Option[String] = (s.lane, x) match {
+          case (Lane.Bytes, v: String) => Some(v)
+          case _ => None
+        }
+        // `c op x`, shown with the constant it pushes
+        def cmp(op: Pred.Cmp, x: Any, shown: Any => Filter): Option[(Filter, Pred)] =
+          longOf(x).map(Pred.longCmp(c, op, _))
+            .orElse(doubleOf(x).map(DoubleCmp(c, op, _)))
+            .orElse(stringOf(x).filter(_ => op == Pred.Eq).map(v => BytesIn(c, Array(v))))
+            .map(shown(x) -> _)
+        def in(xs: Array[Any], shown: Filter): Option[(Filter, Pred)] = {
+          def all[T: scala.reflect.ClassTag](of: Any => Option[T]): Option[Array[T]] = {
+            val vs = xs.map(of)
+            Option.when(vs.forall(_.isDefined))(vs.map(_.get))
           }
-          val vals: Array[Any] =
-            if (rs.forall(_.isDefined)) rs.flatMap(r => points(r.get)) else Array.empty
-          if (vals.isEmpty) f else In(c, vals)
-        case _ => f
-      }
+          all(longOf).map(LongIn(c, _))
+            .orElse(all(doubleOf).map(DoubleIn(c, _)))
+            .orElse(all(stringOf).map(BytesIn(c, _)))
+            .map(shown -> _)
+        }
+        try f match {
+          case IsNull(_) => Some((f, NullTest(c, isNull = true)))
+          case IsNotNull(_) => Some((f, NullTest(c, isNull = false)))
+          case EqualTo(_, x) => range(x).map(points) match {
+            case Some(Array(v)) => cmp(Pred.Eq, v, EqualTo(c, _))
+            case Some(vs) if vs.nonEmpty => in(vs, In(c, vs))
+            case _ => cmp(Pred.Eq, x, _ => f)
+          }
+          case GreaterThan(_, x) => cmp(Pred.Gt, side(x, hi = true), GreaterThan(c, _))
+          case GreaterThanOrEqual(_, x) => cmp(Pred.Ge, side(x, hi = false), GreaterThanOrEqual(c, _))
+          case LessThan(_, x) => cmp(Pred.Lt, side(x, hi = false), LessThan(c, _))
+          case LessThanOrEqual(_, x) => cmp(Pred.Le, side(x, hi = true), LessThanOrEqual(c, _))
+          case In(_, xs) if xs.nonEmpty =>
+            // a member beyond long range equals no stored value: dropping
+            // it (an empty range) keeps IN exact
+            val rs = xs.map { x =>
+              try range(x) catch { case _: ArithmeticException => Some((1L, 0L)) }
+            }
+            val vs: Array[Any] =
+              if (rs.forall(_.isDefined)) rs.flatMap(r => points(r.get)) else Array.empty
+            if (vs.isEmpty) in(xs, f) else in(vs, In(c, vs))
+          case _ => None
+        } catch { case _: ArithmeticException => None } // out-of-long constant
+      case _ => None
     }
-    filters.map { f =>
-      f.references match {
-        case Array(c) if layout.contains(c) =>
-          try tr(f, layout(c))
-          catch { case _: ArithmeticException => f } // out-of-long constant
-        case _ => f
-      }
-    }
-  }
 
   /** Default target split size (encoded bytes) when grouping admitted
     * chunks into input partitions.
@@ -306,30 +338,16 @@ object GraftDataSource {
       u.getBaseObject, u.getBaseOffset, u.numBytes(), 42), n)
   @inline private def pmodInt(h: Int, n: Int): Int = ((h % n) + n) % n
 
-  /** Bucket id of a pushed filter constant for column `col` of a
-    * manifest recording `n`-bucket ids; None = not a bucketable constant
-    * (admit). Only kinds whose stored value is their Spark value can be
-    * bucket columns ([[graft.engine.Kind.bucketable]]), so the
-    * stored-domain translation never reaches here with a changed meaning.
+  /** Can no zone map, string dict/range or null count proof rule this
+    * chunk out? Unknown/absent stats admit (skip only on PROOF). String
+    * ranges are recorded only for all-ASCII chunks, where Java,
+    * UTF8String, and DuckDB collation agree. Null counts are recorded for
+    * every nullable column (explicit zeros included), so `IS NOT NULL`
+    * skips all-null chunks and `IS NULL` skips fully-present ones.
     */
-  private[sources] def bucketIdOfConstant(x: Any, n: Int): Option[Int] = x match {
-    case v: java.lang.Long => Some(bucketIdOfLong(v.longValue(), n))
-    case v: java.lang.Integer => Some(bucketIdOfInt(v.intValue(), n))
-    case v: String => Some(bucketIdOfString(v, n))
-    case _ => None
-  }
-
-  /** Is every long range / string dict / string range / null count proof
-    * UNABLE to rule this chunk out? Unknown/absent stats admit (skip only
-    * on PROOF). String ranges are recorded only for all-ASCII chunks,
-    * where Java, UTF8String, and DuckDB collation agree. Null counts are
-    * recorded for every nullable column (explicit zeros included), so
-    * `IS NOT NULL` skips all-null chunks and `IS NULL` skips
-    * fully-present ones; an ABSENT entry (a non-nullable column) admits.
-    */
-  private[sources] def admitChunk(c: ChunkStats, filters: Seq[Filter]): Boolean =
-    admit(c.longRanges, filters) && admitProofs(c.rows,
-      c.nullCounts.get(_).map(_.toLong), c.strDicts, c.strRanges, filters)
+  private[sources] def admitChunk(c: ChunkStats, preds: Seq[Pred]): Boolean =
+    admit(c.longRanges, preds) && admitProofs(c.rows,
+      c.nullCounts.get(_).map(_.toLong), c.strDicts, c.strRanges, preds)
 
   /** The null-count and string dict/range proofs, written once for both
     * granularities: a chunk's own stats ([[admitChunk]]) and a
@@ -339,208 +357,36 @@ object GraftDataSource {
   private def admitProofs(rows: Long, nullCount: String => Option[Long],
                           strDicts: Map[String, Seq[String]],
                           strRanges: Map[String, (String, String)],
-                          filters: Seq[Filter]): Boolean = {
-    def mayHold(col: String, v: String): Boolean =
-      strDicts.get(col).forall(_.contains(v)) &&
-        strRanges.get(col).forall { case (lo, hi) =>
-          v.compareTo(lo) >= 0 && v.compareTo(hi) <= 0
-        }
-    filters.forall {
-      case IsNotNull(col) => !nullCount(col).contains(rows)
-      case IsNull(col) => nullCount(col).forall(_ > 0L)
-      case EqualTo(col, v: String) => mayHold(col, v)
-      case In(col, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        vs.exists(x => mayHold(col, x.asInstanceOf[String]))
-      case _ => true
-    }
-  }
+                          preds: Seq[Pred]): Boolean =
+    preds.forall(p => p.mayHold(rows, nullCount(p.col), strDicts.get(p.col), strRanges.get(p.col)))
 
-  /** Numeric zone-map admission over one range map — a chunk's
-    * ([[admitChunk]]) or a whole container's ([[admitManifest]]). Int
-    * (kind 2) columns record their ranges in the same map; their filter
-    * constants arrive as Integer. Double (kind 5) columns record ranges
-    * over their order-preserving sortable-long mapping; a constant maps
-    * to a [lo, hi] PAIR because ±0.0 are two storage values SQL calls
-    * equal (NaN constants are never pushed — [[pushable]] excludes
-    * them — so an unmapped constant just admits).
+  /** Zone-map admission over one range map — a chunk's ([[admitChunk]])
+    * or a whole container's ([[admitManifest]]). Int-lane columns record
+    * their ranges in the same map; DOUBLE columns record ranges over
+    * their order-preserving sortable-long mapping.
     */
   private[sources] def admit(ranges: Map[String, (Long, Long)],
-                             filters: Seq[Filter]): Boolean = {
-    // (vLo, vHi): the inclusive sortable range of storage values SQL
-    // considers EQUAL to the constant — a single point for everything
-    // except double ±0.0
-    def num(x: Any): Option[(Long, Long)] = x match {
-      case v: java.lang.Long => val l = v.longValue(); Some((l, l))
-      case v: java.lang.Integer => val l = v.longValue(); Some((l, l))
-      case v: java.lang.Double =>
-        val d = v.doubleValue()
-        if (d.isNaN) None
-        else Some((
-          graft.codecs.DoubleBits.toSortableLong(if (d == 0.0) -0.0 else d),
-          graft.codecs.DoubleBits.toSortableLong(if (d == 0.0) 0.0 else d)))
-      case _ => None
-    }
-    filters.forall {
-      case EqualTo(c, x) if ranges.contains(c) && num(x).isDefined =>
-        val (lo, hi) = ranges(c); val (vLo, vHi) = num(x).get
-        vHi >= lo && vLo <= hi
-      case GreaterThan(c, x) if ranges.contains(c) && num(x).isDefined =>
-        ranges(c)._2 > num(x).get._2
-      case GreaterThanOrEqual(c, x) if ranges.contains(c) && num(x).isDefined =>
-        ranges(c)._2 >= num(x).get._1
-      case LessThan(c, x) if ranges.contains(c) && num(x).isDefined =>
-        ranges(c)._1 < num(x).get._1
-      case LessThanOrEqual(c, x) if ranges.contains(c) && num(x).isDefined =>
-        ranges(c)._1 <= num(x).get._2
-      case In(c, vs) if ranges.contains(c) && vs.nonEmpty &&
-          vs.forall(num(_).isDefined) =>
-        val (lo, hi) = ranges(c)
-        vs.exists(x => { val (vLo, vHi) = num(x).get; vHi >= lo && vLo <= hi })
-      case _ => true
-    }
-  }
+                             preds: Seq[Pred]): Boolean =
+    preds.forall(p => ranges.get(p.col).forall(r => p.overlaps(r._1, r._2)))
 
-  /** A filter this source fully enforces (zone-map/dict chunk skip +
-    * row-level re-check). Long comparisons and IN; string equality and
-    * IN (`lang = 'en'`, `repo IN (...)` — inequality on strings stays in
-    * Spark: collation-safe range proofs only hold for the ASCII-recorded
-    * stats, not arbitrary row values). Double comparisons and IN push
-    * against the sortable-long zone maps — except NaN constants, whose
-    * Spark ordering (greater than everything, equal to itself) diverges
-    * from both IEEE and the sortable mapping's tail; they stay in Spark.
-    * IsNotNull/IsNull prune whole chunks via per-chunk null counts and
-    * re-check against the validity bitmaps. Dispatch is on the column's
-    * lane first, then on the filter shape; constants are already in the
-    * stored domain ([[translateFilters]]).
-    */
-  private[sources] def pushable(f: Filter,
-                                layout: Map[String, ColumnSpec]): Boolean =
-    f.references match {
-      case Array(c) if layout.contains(c) =>
-        val lane = layout(c).lane
-        def const(x: Any): Boolean = (lane, x) match {
-          case (Lane.Longs, _: java.lang.Long) => true
-          case (Lane.Ints, _: java.lang.Integer) => true
-          case (Lane.Doubles, d: java.lang.Double) => !d.isNaN
-          case (Lane.Bytes, _: String) => true
-          case _ => false
-        }
-        def ordered(x: Any): Boolean = lane != Lane.Bytes && const(x)
-        f match {
-          case IsNull(_) | IsNotNull(_) => true
-          case EqualTo(_, x) => const(x)
-          case GreaterThan(_, x) => ordered(x)
-          case GreaterThanOrEqual(_, x) => ordered(x)
-          case LessThan(_, x) => ordered(x)
-          case LessThanOrEqual(_, x) => ordered(x)
-          case In(_, vs) => vs.nonEmpty && vs.forall(const)
-          case _ => false
-        }
-      case _ => false
-    }
-
-  /** Compiled row-level predicate over a decoded chunk: the reader
-    * enforces exactly what pushFilters claimed. Per chunk it looks up
-    * its column once and returns the per-row test. String constants are
-    * pre-encoded to UTF-8 ONCE and compared against the decoded slices —
-    * no per-row String materialization. SQL null semantics: every
-    * comparison/IN on a NULL row is not-true (the chunk's validity
-    * bitmap gates each predicate), IsNull/IsNotNull test the bitmap
+  /** Compiled row-level predicates over a decoded chunk: the reader
+    * enforces exactly what pushFilters claimed. Per chunk each looks up
+    * its column once and returns the per-row test ([[Pred.rows]]). SQL
+    * null semantics: every value test on a NULL row is not-true (the
+    * chunk's validity bitmap gates it); [[NullTest]] tests the bitmap
     * itself.
     */
-  private[sources] type RowPred = DecodedChunk => (Int => Boolean)
-
-  /** The inclusive [lo, hi] an integer comparison admits (empty when
-    * lo > hi).
-    */
-  private def bounds(f: Filter, v: Any => Long): (Long, Long) = f match {
-    case EqualTo(_, x) => val n = v(x); (n, n)
-    case GreaterThan(_, x) =>
-      val n = v(x); if (n == Long.MaxValue) (1L, 0L) else (n + 1, Long.MaxValue)
-    case GreaterThanOrEqual(_, x) => (v(x), Long.MaxValue)
-    case LessThan(_, x) =>
-      val n = v(x); if (n == Long.MinValue) (1L, 0L) else (Long.MinValue, n - 1)
-    case LessThanOrEqual(_, x) => (Long.MinValue, v(x))
-    case _ => throw new IllegalStateException(s"unpushable filter $f")
-  }
-
-  private[sources] def compileFilters(filters: Array[Filter],
-      layout: Map[String, ColumnSpec]): Array[RowPred] = filters.map { f =>
-    val c = f.references.head
-    val test: DecodedColumn => (Int => Boolean) =
-      (layout(c).lane, f) match {
-        case (_, IsNotNull(_)) => d => j => d.validAt(j)
-        case (_, IsNull(_)) => d => j => !d.validAt(j)
-        case (Lane.Longs, In(_, vs)) =>
-          val set = vs.map(_.asInstanceOf[java.lang.Long].longValue()).toSet
-          d => { val a = d.longs; j => set.contains(a(j)) }
-        case (Lane.Longs, _) =>
-          val (lo, hi) = bounds(f, _.asInstanceOf[java.lang.Long].longValue())
-          d => { val a = d.longs; j => a(j) >= lo && a(j) <= hi }
-        case (Lane.Ints, In(_, vs)) =>
-          val set = vs.map(_.asInstanceOf[java.lang.Integer].intValue()).toSet
-          d => { val a = d.ints; j => set.contains(a(j)) }
-        case (Lane.Ints, _) =>
-          val (lo, hi) = bounds(f, _.asInstanceOf[java.lang.Integer].longValue())
-          d => { val a = d.ints; j => a(j) >= lo && a(j) <= hi }
-        // doubles: IEEE comparisons except that a NaN ROW ranks above
-        // every constant (Spark's total order); NaN CONSTANTS are never
-        // pushed. IEEE == makes -0.0 = 0.0, matching SQL equality.
-        case (Lane.Doubles, EqualTo(_, x: Double)) =>
-          d => { val a = d.doubles; j => a(j) == x }
-        case (Lane.Doubles, GreaterThan(_, x: Double)) =>
-          d => { val a = d.doubles; j => a(j) > x || a(j).isNaN }
-        case (Lane.Doubles, GreaterThanOrEqual(_, x: Double)) =>
-          d => { val a = d.doubles; j => a(j) >= x || a(j).isNaN }
-        case (Lane.Doubles, LessThan(_, x: Double)) =>
-          d => { val a = d.doubles; j => a(j) < x }
-        case (Lane.Doubles, LessThanOrEqual(_, x: Double)) =>
-          d => { val a = d.doubles; j => a(j) <= x }
-        case (Lane.Doubles, In(_, vs)) =>
-          // an ARRAY scan with IEEE ==, not a Set: boxed-Double set
-          // membership would miss -0.0 vs 0.0 (SQL calls them equal)
-          val arr = vs.map(_.asInstanceOf[java.lang.Double].doubleValue())
-          d => { val a = d.doubles; j => {
-            val x = a(j)
-            var i = 0
-            var hit = false
-            while (!hit && i < arr.length) { hit = x == arr(i); i += 1 }
-            hit
-          } }
-        case (Lane.Bytes, EqualTo(_, x: String)) =>
-          val b = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          d => { val u = d.bytes; j => u.equalsBytes(j, b) }
-        case (Lane.Bytes, In(_, vs)) =>
-          val bs = vs.map(_.asInstanceOf[String]
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          d => { val u = d.bytes; j => bs.exists(b => u.equalsBytes(j, b)) }
-        case _ => throw new IllegalStateException(s"unpushable filter $f")
-      }
-    val gated = !f.isInstanceOf[IsNull] && !f.isInstanceOf[IsNotNull]
+  private[sources] def compileFilters(preds: Array[Pred], layout: Map[String, ColumnSpec])
+      : Array[DecodedChunk => (Int => Boolean)] = preds.map { p =>
+    val c = p.col
+    val test = p.rows(layout(c).lane)
+    val gated = !p.isInstanceOf[NullTest]
     ch => {
       val d = ch.col(c)
       val t = test(d)
       if (!gated || d.nulls == null) t else j => d.validAt(j) && t(j)
     }
   }
-
-  /** Rewrite a pushed filter's column reference through a rename map
-    * (current name -> a container's stored name, or the reverse). Only
-    * the filter shapes this source ever pushes appear here.
-    */
-  private[sources] def renameRefs(f: Filter, m: Map[String, String]): Filter =
-    if (m.isEmpty) f
-    else f match {
-      case EqualTo(c, v) => EqualTo(m.getOrElse(c, c), v)
-      case GreaterThan(c, v) => GreaterThan(m.getOrElse(c, c), v)
-      case GreaterThanOrEqual(c, v) => GreaterThanOrEqual(m.getOrElse(c, c), v)
-      case LessThan(c, v) => LessThan(m.getOrElse(c, c), v)
-      case LessThanOrEqual(c, v) => LessThanOrEqual(m.getOrElse(c, c), v)
-      case In(c, vs) => In(m.getOrElse(c, c), vs)
-      case IsNull(c) => IsNull(m.getOrElse(c, c))
-      case IsNotNull(c) => IsNotNull(m.getOrElse(c, c))
-      case other => other
-    }
 
   /** Container-level admission against the index SUMMARY (round 8,
     * two-level metadata): the manifest's whole-partition zone maps plus
@@ -550,7 +396,7 @@ object GraftDataSource {
     * NEVER read off storage.
     */
   private[sources] def admitManifest(m: TableManifest,
-                                     filters: Seq[Filter]): Boolean = {
+                                     preds: Seq[Pred]): Boolean = {
     // bucket(n, col) transforms recorded by the writer: a point/IN
     // constant admits only containers whose observed bucket-id set can
     // hold it (n comes from the manifest's own partitioning record, so
@@ -562,19 +408,16 @@ object GraftDataSource {
         case BucketRe(n, c) => Some(c -> n.toInt)
         case _ => None
       }.toMap
-    def bucketAdmits(col: String, x: Any): Boolean =
+    val buckets = m.bucketIds.isEmpty || preds.forall { p =>
       (for {
-        n <- bucketN.get(col)
-        ids <- m.bucketIds.get(col)
-        b <- bucketIdOfConstant(x, n)
-      } yield ids.contains(b)).getOrElse(true)
-    val buckets = m.bucketIds.isEmpty || filters.forall {
-      case EqualTo(col, x) => bucketAdmits(col, x)
-      case In(col, vs) if vs.nonEmpty => vs.exists(bucketAdmits(col, _))
-      case _ => true
+        n <- bucketN.get(p.col)
+        ids <- m.bucketIds.get(p.col)
+      } yield p.inBuckets(ids, n, ints = m.schemaCols.exists { case (c, k) =>
+        c == p.col && ColumnSpec.fromPacked(c, k).lane == Lane.Ints
+      })).getOrElse(true)
     }
-    buckets && admit(m.longRanges, filters) && admitProofs(m.rows,
-      m.env.nullCounts.get, m.env.strDicts, m.env.strRanges, filters)
+    buckets && admit(m.longRanges, preds) && admitProofs(m.rows,
+      m.env.nullCounts.get, m.env.strDicts, m.env.strRanges, preds)
   }
 
   /** Chunk-granular input partitions for some of `snap`'s manifests,
@@ -591,7 +434,7 @@ object GraftDataSource {
     */
   private[sources] def planPartitions(snap: TableSnapshot,
       manifests: Seq[TableManifest], cols: Seq[String],
-      filters: Array[Filter], maxSplitBytes: Long,
+      preds: Array[Pred], maxSplitBytes: Long,
       neededCols: Set[String]): Array[InputPartition] = {
     val parts = Array.newBuilder[InputPartition]
     manifests.filterNot(_.schemaMarker).sortBy(_.name).foreach { m =>
@@ -599,15 +442,15 @@ object GraftDataSource {
       // the reader translates between the query's CURRENT names and this
       // container's stored labels (rename support), and null-fills the
       // needed columns the container predates (add-only evolution: a
-      // value filter on one already skipped the container whole, IsNull
-      // on one is dropped reader-side by effectiveFilters)
+      // value test of one skips the container whole, and IS NULL on one
+      // holds on every row: [[Pred.within]])
       val v = snap.view(m, cols)
       val absent = neededCols.filterNot(v.covered)
-      val admission = v.admission(filters.toSeq)
+      val admission = v.admission(preds.toSeq)
       if (admission.exists(admitManifest(m, _))) {
-        val mFilters = admission.get
+        val mPreds = admission.get
         val admitted = snap.hydrate(m).chunkIndex
-          .filter(admitChunk(_, mFilters))
+          .filter(admitChunk(_, mPreds))
           .map(c => ChunkSpec(c.offset, c.length, c.rows, c.blockCrcs))
         def emit(run: List[ChunkSpec]): Unit =
           parts += GraftInputPartition(file, run.reverse, v.digestCol,
@@ -627,24 +470,6 @@ object GraftDataSource {
     }
     parts.result()
   }
-
-  /** Filters applicable inside a container that predates `absent`
-    * columns: IsNull on an absent column is trivially TRUE (drop it);
-    * any other filter referencing one matches nothing — planning
-    * already skipped such containers, so reaching a reader with one is
-    * a planner bug, not a data condition.
-    */
-  private[sources] def effectiveFilters(filters: Array[Filter],
-      absent: Set[String]): Array[Filter] =
-    if (absent.isEmpty) filters
-    else {
-      val kept = filters.filterNot(f =>
-        f.isInstanceOf[IsNull] && f.references.exists(absent))
-      kept.foreach(f => require(!f.references.exists(absent),
-        s"planner bug: filter $f references a column this container " +
-          s"predates (${absent.mkString(",")})"))
-      kept
-    }
 
   private[sources] def rowPasses(tests: Array[Int => Boolean], j: Int): Boolean = {
     var i = 0
@@ -710,7 +535,7 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
 
   private val layout = GraftDataSource.layoutOf(tableSchema)
   private var required: StructType = tableSchema
-  private var pushed: Array[Filter] = Array.empty
+  private var pushed: Array[(Filter, Pred)] = Array.empty
   private var aggs: Option[Seq[GraftAgg]] = None
   private var limit: Int = Int.MaxValue
 
@@ -805,17 +630,14 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
       else requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // predicates are first rewritten into the stored domain, then the
-    // lane pushdown machinery admits them; a filter whose translated
-    // form is unpushable stays residual in its ORIGINAL form
-    val (in, out) = filters.zip(GraftDataSource.translateFilters(filters, layout))
-      .partition(p => GraftDataSource.pushable(p._2, layout))
-    pushed = in.map(_._2)
-    out.map(_._1)
-    // fully enforced below: chunk zone-map skip + row-level check
+    // fully enforced below (chunk skip + row-level check); a filter the
+    // boundary does not push stays residual in its ORIGINAL form
+    val all = filters.map(f => f -> GraftDataSource.pushdown(f, layout))
+    pushed = all.flatMap(_._2)
+    all.collect { case (f, None) => f }
   }
 
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedFilters(): Array[Filter] = pushed.map(_._1)
 
   override def build(): Scan = {
     val maxSplit = Option(options.get("maxSplitBytes")).map(_.toLong)
@@ -954,7 +776,7 @@ case class GraftInputPartition(file: String, chunks: Seq[ChunkSpec],
   */
 class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
                                   required: StructType,
-                                  initialFilters: Array[Filter], limit: Int,
+                                  initialPushed: Array[(Filter, Pred)], limit: Int,
                                   maxSplitBytes: Long, verifyContent: Boolean,
                                   layout: Map[String, ColumnSpec])
     extends Scan with Batch with SupportsReportStatistics
@@ -964,10 +786,12 @@ class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
   override def toBatch: Batch = this
 
   /** Compile-time pushed filters plus any runtime filters accepted in
-    * [[filter]]; both chunk admission and the row-level re-check use the
-    * combined set.
+    * [[filter]], as [[GraftDataSource.pushdown]] returns them: the shown
+    * filters print in [[description]], and chunk admission and the
+    * row-level re-check use the combined preds.
     */
-  private var filters: Array[Filter] = initialFilters
+  private var pushed: Array[(Filter, Pred)] = initialPushed
+  private def preds: Array[Pred] = pushed.map(_._2)
 
   /** Runtime (DPP-style) filtering: a broadcast join's build-side keys
     * arrive as an `In` filter before `planInputPartitions`, so a
@@ -981,13 +805,10 @@ class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
     required.fieldNames.map(
       org.apache.spark.sql.connector.expressions.Expressions.column)
 
-  override def filter(runtime: Array[Filter]): Unit = {
-    // runtime (DPP) filters arrive in LOGICAL form — translate to stored
-    // constants like the builder did
-    val accepted = GraftDataSource.translateFilters(runtime, layout)
-      .filter(GraftDataSource.pushable(_, layout))
-    filters = filters ++ accepted
-  }
+  override def filter(runtime: Array[Filter]): Unit =
+    // runtime (DPP) filters arrive in LOGICAL form and cross the same
+    // boundary as the filters pushed at planning
+    pushed = pushed ++ runtime.flatMap(GraftDataSource.pushdown(_, layout))
 
   /** Manifest-derived table statistics, so Catalyst/AQE can size joins
     * (e.g. auto-broadcast a small graft table) without scanning it.
@@ -1007,13 +828,13 @@ class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
       // ([[ContainerView.admission]]) zeroes containers a value filter
       // on a predated column can't match.
       val admittedRows =
-        snap.view(m, cols).admission(filters.toSeq) match {
+        snap.view(m, cols).admission(preds.toSeq) match {
           case None => 0L
-          case Some(mFilters) =>
+          case Some(mPreds) =>
             if (m.chunksElided)
-              if (GraftDataSource.admitManifest(m, mFilters)) m.rows else 0L
+              if (GraftDataSource.admitManifest(m, mPreds)) m.rows else 0L
             else
-              m.chunkIndex.filter(GraftDataSource.admitChunk(_, mFilters))
+              m.chunkIndex.filter(GraftDataSource.admitChunk(_, mPreds))
                 .map(_.rows.toLong).sum
         }
       if (admittedRows > 0) {
@@ -1033,7 +854,7 @@ class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
 
   override def description(): String =
     s"graft ${snap.path}, ReadSchema: ${required.fieldNames.mkString(",")}, " +
-      s"PushedFilters: [${filters.mkString(", ")}]" +
+      s"PushedFilters: [${pushed.map(_._1).mkString(", ")}]" +
       (if (limit != Int.MaxValue) s", PushedLimit: $limit" else "")
 
   /** Chunk-granular splits: admitted chunks of each committed container
@@ -1044,11 +865,11 @@ class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
     * commit marker on the read side too).
     */
   override def planInputPartitions(): Array[InputPartition] =
-    GraftDataSource.planPartitions(snap, snap.committed, cols, filters,
-      maxSplitBytes, required.fieldNames.toSet ++ filters.flatMap(_.references))
+    GraftDataSource.planPartitions(snap, snap.committed, cols, preds,
+      maxSplitBytes, required.fieldNames.toSet ++ preds.map(_.col))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, filters, layout, snap.confKv, limit,
+    new GraftReaderFactory(required, preds, layout, snap.confKv, limit,
       verifyContent)
 
   /** `readStream.format("graft")` — micro-batch TAILING of this table:
@@ -1063,11 +884,11 @@ class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
       "graft time travel (versionAsOf/timestampAsOf) is batch-only; a " +
         "stream tails the live table")
     new GraftMicroBatchStream(snap.path, checkpointLocation, required,
-      filters, snap.confKv, maxSplitBytes, verifyContent, layout, visNames)
+      preds, snap.confKv, maxSplitBytes, verifyContent, layout, visNames)
   }
 }
 
-class GraftReaderFactory(required: StructType, filters: Array[Filter],
+class GraftReaderFactory(required: StructType, preds: Array[Pred],
                          layout: Map[String, ColumnSpec],
                          confKv: Map[String, String], limit: Int,
                          verifyContent: Boolean)
@@ -1086,7 +907,7 @@ class GraftReaderFactory(required: StructType, filters: Array[Filter],
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition],
-      required, filters, layout, confKv, limit, verifyContent)
+      required, preds, layout, confKv, limit, verifyContent)
 }
 
 /** Streaming chunk iteration for the reader: per chunk, `needed` column
@@ -1153,7 +974,7 @@ private[sources] final class ChunkCursor(
   * per row; reads that decode the digest column verify the chunk digest.
   */
 class GraftColumnarReader(p: GraftInputPartition, required: StructType,
-                          filters: Array[Filter],
+                          preds: Array[Pred],
                           layout: Map[String, ColumnSpec],
                           confKv: Map[String, String],
                           limit: Int, verifyContent: Boolean)
@@ -1162,15 +983,18 @@ class GraftColumnarReader(p: GraftInputPartition, required: StructType,
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   // schema evolution: this container predates `absentCols` — their rows
-  // are all-NULL here. IsNull on them is trivially true (dropped from
-  // the compiled predicates); planning skipped containers any other
-  // filter on them would empty; the cursor must not request their blocks.
-  private val effFilters = GraftDataSource.effectiveFilters(filters, p.absentCols)
+  // are all-NULL here (the planner's rule, [[Pred.within]]: IS NULL on
+  // them holds and is dropped; planning skipped containers any other
+  // test of them would empty); the cursor must not request their blocks
+  private val effPreds = Pred.within(preds, p.absentCols).getOrElse(
+    throw new IllegalArgumentException(s"planner bug: a pushed filter " +
+      s"tests a column this container predates (${p.absentCols.mkString(",")})"))
+    .toArray
   private val cursor = new ChunkCursor(p.file, p.chunks,
-    ((required.fieldNames ++ effFilters.flatMap(_.references)).toSet -- p.absentCols)
+    ((required.fieldNames ++ effPreds.map(_.col)).toSet -- p.absentCols)
       .map(c => c -> layout(c).lane).toMap,
     confKv, if (verifyContent) p.digestCol else "", p.renames)
-  private val preds = GraftDataSource.compileFilters(effFilters, layout)
+  private val rowPreds = GraftDataSource.compileFilters(effPreds, layout)
   private val fields = required.fields
   private val specs: Array[ColumnSpec] = fields.map(f => layout(f.name))
   private val fieldAbsent: Array[Boolean] =
@@ -1182,7 +1006,7 @@ class GraftColumnarReader(p: GraftInputPartition, required: StructType,
     if (batch != null) { batch.close(); batch = null }
     while (emitted < limit && cursor.chunkIter.hasNext) {
       val chunk = cursor.chunkIter.next()
-      val tests = preds.map(_(chunk))
+      val tests = rowPreds.map(_(chunk))
       // selection vector: row indices surviving the pushed filters
       val sel = new Array[Int](chunk.rows)
       var m = 0
@@ -1265,7 +1089,7 @@ object GraftStreamOffset {
   */
 class GraftMicroBatchStream(path: String, checkpointLocation: String,
                             required: StructType,
-                            filters: Array[Filter],
+                            preds: Array[Pred],
                             confKv: Map[String, String],
                             maxSplitBytes: Long, verifyContent: Boolean,
                             layout: Map[String, ColumnSpec],
@@ -1437,12 +1261,12 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
           "; their replacement generations arrive as later batches")
     }
     GraftDataSource.planPartitions(snap, fresh ++ substituted,
-      snap.chainOf(visNames), filters, maxSplitBytes,
-      required.fieldNames.toSet ++ filters.flatMap(_.references))
+      snap.chainOf(visNames), preds, maxSplitBytes,
+      required.fieldNames.toSet ++ preds.map(_.col))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, filters, layout, confKv, Int.MaxValue,
+    new GraftReaderFactory(required, preds, layout, confKv, Int.MaxValue,
       verifyContent)
 
   /** Fold per-batch seen-log entries at or below the COMMITTED offset

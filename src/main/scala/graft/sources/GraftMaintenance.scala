@@ -147,8 +147,8 @@ object GraftMaintenance {
     * Planning: the predicate (any deterministic Spark SQL boolean
     * expression over the table's columns — no subqueries) is resolved by
     * the ordinary analyzer against the table's current schema; its
-    * conjuncts are translated to source filters and run through the SAME
-    * admission the scan uses (zone maps, envelopes, null counts, bucket
+    * conjuncts cross the scan's pushdown boundary and run through the
+    * SAME admission the scan uses (zone maps, envelopes, null counts, bucket
     * ids, rename translation, add-only-evolution coverage), so
     * containers that provably hold no match are never touched — their
     * manifests, stats, and files stay byte-identical.
@@ -182,12 +182,12 @@ object GraftMaintenance {
   def delete(spark: SparkSession, path: String, predicate: String): Long = {
     val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
     if (snap.committed.isEmpty) return 0L
-    val (cond, _) = bindPredicate(spark, snap, predicate, Nil, "delete predicate")
+    val (cond, _, preds) = bindPredicate(spark, snap, predicate, Nil, "delete predicate")
     val visPositions = snap.visPositions
     // one task per affected container (1:1 rewrite keeps the schema
     // generation, partitioning metadata, and epoch coverage of each)
     val done = rewriteJob(spark, snap, "delete", newRunId(),
-        admittedBy(snap, cond).map(Seq(_)), "delete") { (conf, ms, partName, bin) =>
+        admitted(snap, preds).map(Seq(_)), "delete") { (conf, ms, partName, bin) =>
       val schema = GraftDataSource.specsOfManifest(ms.head)
       rewriteBin(conf, path, ms, schema, partName, bin)(
         copyRows(rowMatcher(cond, visPositions, schema)))
@@ -224,12 +224,12 @@ object GraftMaintenance {
     set.keys.foreach(c => require(st.fieldNames.contains(c),
       s"update target '$c' is not a column of ${st.fieldNames.mkString(",")}"))
     val setSeq = set.toSeq
-    val (cond, bound) = bindPredicate(spark, snap, predicate, setSeq,
+    val (cond, bound, preds) = bindPredicate(spark, snap, predicate, setSeq,
       "update expressions")
     val assigns: Seq[(Int, Expression)] = setSeq.map(a => st.fieldIndex(a._1)).zip(bound)
     val (chain, visPositions) = (snap.chain, snap.visPositions)
     val done = rewriteJob(spark, snap, "update", newRunId(),
-        admittedBy(snap, cond).map(Seq(_)), "update") { (conf, ms, partName, bin) =>
+        admitted(snap, preds).map(Seq(_)), "update") { (conf, ms, partName, bin) =>
       val m = ms.head
       val containerSpecs = GraftDataSource.specsOfManifest(m)
       // partition-transform metadata survives only when no updated column
@@ -339,24 +339,18 @@ object GraftMaintenance {
     // apply). Above the IN cap, per-column [min, max] RANGE conjuncts on
     // ordered kinds take over (also implied by membership): bounded-size
     // admission at ANY source size, so key-sorted/clustered tables keep
-    // pruning whole containers outside the source's key range. The
-    // constants already are stored values, which the admission's
-    // stored-domain translation passes through unchanged.
-    val keyFilters: Seq[org.apache.spark.sql.sources.Filter] = {
-      import org.apache.spark.sql.{sources => sf}
-      if (keySet.size <= 4096)
-        keys.indices.map(i => sf.In(keys(i), keySet.map(_(i)).toArray))
-      else keys.indices.flatMap { i =>
-        val k = Kinds(keySpecs(i).kind)
-        if (!k.ordered) Nil
-        else {
-          val vs = keySet.iterator.map(_(i).asInstanceOf[Number].longValue()).toSeq
-          Seq(sf.GreaterThanOrEqual(keys(i), k.box(vs.min)),
-            sf.LessThanOrEqual(keys(i), k.box(vs.max)))
-        }
-      }
+    // pruning whole containers outside the source's key range. Keys are
+    // stored values already: strings on the Bytes lane, longs otherwise.
+    val keyPreds: Seq[Pred] = keys.indices.flatMap { i =>
+      val vs = keySet.map(_(i)).toArray
+      lazy val longs = vs.map(_.asInstanceOf[Number].longValue())
+      if (keySet.size <= 4096) Some(
+        if (keySpecs(i).lane == Lane.Bytes) BytesIn(keys(i), vs.map(_.asInstanceOf[String]))
+        else LongIn(keys(i), longs))
+      else Option.when(Kinds(keySpecs(i).kind).ordered)(
+        LongRange(keys(i), longs.min, longs.max))
     }
-    val affected = if (keySet.isEmpty) Nil else admitted(snap, keyFilters)
+    val affected = if (keySet.isEmpty) Nil else admitted(snap, keyPreds)
 
     val runId = newRunId()
     val epoch = s"upsert-$runId"
@@ -447,13 +441,19 @@ object GraftMaintenance {
     * schema: no second index read, and the predicate binds against the
     * schema admission uses), then bind them to positional ordinals for
     * stored-row evaluation in the rewrite tasks. Returns the bound
-    * predicate and the bound assignments, in `set` order.
+    * predicate, the bound assignments in `set` order, and the
+    * predicate's container admission: the RESOLVED (unbound, so its
+    * attributes carry the current column names) condition's conjuncts,
+    * with foldable operands folded (the analyzer's `cast(50 as bigint)`
+    * becomes `50L`), through [[sourceFilterOf]] and the scan's pushdown
+    * boundary ([[GraftDataSource.pushdown]]). A conjunct that does not
+    * cross it prunes nothing.
     */
   private def bindPredicate(spark: SparkSession, snap: TableSnapshot,
                             predicate: String, set: Seq[(String, String)],
-                            noun: String): (Expression, Seq[Expression]) = {
+                            noun: String): (Expression, Seq[Expression], Seq[Pred]) = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-    import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, SubqueryExpression}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, And, BindReferences, Literal, SubqueryExpression}
     import org.apache.spark.sql.functions.expr
     val df = spark.read.format("graft").schema(snap.schema).load(snap.path)
     val filtered = df.filter(expr(predicate))
@@ -472,37 +472,31 @@ object GraftMaintenance {
         s"$noun must not contain a subquery: $text")
     }
     val bound = exprs.map(BindReferences.bindReference(_, filter.child.output))
-    (bound.head, bound.tail)
-  }
-
-  /** The one container admission: `filters` pass the scan's
-    * stored-domain constant translation ([[GraftDataSource.translateFilters]]
-    * — constants that already are stored values pass unchanged), then
-    * the scan's per-container admission (zone maps, envelopes, null
-    * counts, bucket ids, rename translation, add-only-evolution
-    * coverage). Returns the containers that MAY hold a matching row.
-    */
-  private def admitted(snap: TableSnapshot,
-                       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[TableManifest] = {
-    val admission = GraftDataSource.translateFilters(filters.toArray,
-      GraftDataSource.layoutOf(snap.schema)).toSeq
-    snap.committed.filter { m =>
-      snap.view(m).admission(admission).exists(GraftDataSource.admitManifest(m, _))
-    }
-  }
-
-  /** A bound predicate's admission: its conjuncts, translated to source
-    * filters ([[sourceFilterOf]]); untranslatable conjuncts prune
-    * nothing (a conservative over-approximation of "has matches").
-    */
-  private def admittedBy(snap: TableSnapshot, cond: Expression): Seq[TableManifest] = {
-    import org.apache.spark.sql.catalyst.expressions.And
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case o => Seq(o)
     }
-    admitted(snap, conjuncts(cond).flatMap(sourceFilterOf))
+    // a constant subexpression that fails to evaluate stays as it is
+    def folded(e: Expression): Expression = e.transformUp {
+      case x if x.foldable && !x.isInstanceOf[Literal] =>
+        try Literal(x.eval(), x.dataType)
+        catch { case scala.util.control.NonFatal(_) => x }
+    }
+    val layout = GraftDataSource.layoutOf(snap.schema)
+    val preds = conjuncts(filter.condition).map(folded).flatMap(sourceFilterOf)
+      .flatMap(GraftDataSource.pushdown(_, layout)).map(_._2)
+    (bound.head, bound.tail, preds)
   }
+
+  /** The one container admission: the scan's per-container admission
+    * of `preds` (zone maps, envelopes, null counts, bucket ids, rename
+    * re-keying, add-only-evolution coverage). Returns the containers
+    * that MAY hold a matching row.
+    */
+  private def admitted(snap: TableSnapshot, preds: Seq[Pred]): Seq[TableManifest] =
+    snap.committed.filter { m =>
+      snap.view(m).admission(preds).exists(GraftDataSource.admitManifest(m, _))
+    }
 
   /** One bin's rewrite: the source containers it consumed, its staged
     * manifest (null when nothing was staged), and how many rows the
@@ -650,17 +644,18 @@ object GraftMaintenance {
     changed
   }
 
-  /** Conservative Catalyst-expression -> source-Filter translation for
-    * the predicate admission (DELETE, UPDATE): attribute-vs-literal
-    * comparisons, IN,
-    * IS [NOT] NULL, and AND/OR compositions translate; anything else
-    * (casts around the attribute, functions, UDFs) returns None and the
-    * conjunct simply prunes nothing. Literal constants convert to their
-    * EXTERNAL representation ([[CatalystTypeConverters.convertToScala]])
-    * — String / BigDecimal / LocalDateTime / Date — the exact form the
-    * scan's pushed filters arrive in, so the admission machinery
-    * ([[GraftDataSource.translateFilters]] + zone maps) applies
-    * unchanged. (Spark's own DataSourceStrategy.translateFilter is
+  /** Conservative translation of one conjunct of a resolved DELETE or
+    * UPDATE predicate into the source filter the scan's pushdown
+    * boundary takes: attribute-vs-literal comparisons, IN and IS [NOT]
+    * NULL translate; anything else (casts around the attribute,
+    * functions, UDFs, OR) returns None and the conjunct prunes nothing.
+    * OR stays out on purpose: admission drops a container whole when a
+    * value test reads a column it predates, which is sound for a
+    * conjunct but not for one side of a disjunction. Literal constants
+    * convert to their EXTERNAL representation
+    * ([[CatalystTypeConverters.convertToScala]]) — String / BigDecimal /
+    * LocalDateTime / Date — the exact form the scan's pushed filters
+    * arrive in. (Spark's own DataSourceStrategy.translateFilter is
     * protected[sql].)
     */
   private def sourceFilterOf(
@@ -697,12 +692,6 @@ object GraftMaintenance {
         Some(sf.In(a.name, vs.map(v => ext(v.asInstanceOf[ce.Literal])).toArray))
       case ce.IsNull(a: ce.AttributeReference) => Some(sf.IsNull(a.name))
       case ce.IsNotNull(a: ce.AttributeReference) => Some(sf.IsNotNull(a.name))
-      case ce.And(l, r) =>
-        for { lf <- sourceFilterOf(l); rf <- sourceFilterOf(r) }
-          yield sf.And(lf, rf)
-      case ce.Or(l, r) =>
-        for { lf <- sourceFilterOf(l); rf <- sourceFilterOf(r) }
-          yield sf.Or(lf, rf)
       case _ => None
     }
   }

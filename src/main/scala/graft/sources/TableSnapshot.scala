@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.sources.{Filter, IsNull}
 import org.apache.spark.sql.types.StructType
 
 import graft.engine.{ColumnSpec, ContainerIO, Manifests, TableManifest}
@@ -118,7 +117,7 @@ private[sources] final class TableSnapshot(val path: String,
 
 /** One container seen through a query's chain names `cols` (positional
   * current labels): which columns it covers, the label each is stored
-  * under, its digest column, and the filters it is admitted against. A
+  * under, its digest column, and the preds it is admitted against. A
   * container written before a rename stores blocks and stats under its
   * HISTORICAL labels; one written before a column was added (add-only
   * evolution) has no block for it and reads all-NULL there.
@@ -149,23 +148,15 @@ private[sources] final class ContainerView(m: TableManifest,
     toStored.collectFirst { case (cur, st) if st == m.digestCol => cur }
       .getOrElse(m.digestCol)
 
-  /** The filters this container is admitted against, translated to its
-    * stored labels — or None when a non-IsNull filter references a
-    * column the container predates (all rows NULL there, so the filter
-    * matches nothing and the container is skipped whole).
-    *
-    * IsNull on a predated column is trivially TRUE in this container and
-    * is dropped BEFORE name translation: after a rename X->Y followed by
-    * a new column reusing the name X, the untranslated current name "X"
-    * collides with the container's STORED pre-rename label "X" at
-    * another position, and evaluating IsNull("X") against THAT column's
-    * null counts (explicit 0) would prune a container whose rows ALL
-    * match the current X IS NULL.
+  /** The preds this container is admitted against, re-keyed to its
+    * stored labels — or None when a value test reads a column the
+    * container predates ([[Pred.within]]). IS NULL on a predated column
+    * is dropped BEFORE re-keying: after a rename X->Y and a new column
+    * reusing the name X, the current "X" collides with the container's
+    * stored pre-rename label "X" at another position, whose null counts
+    * (explicit 0) would prune a container whose rows ALL match X IS NULL.
     */
-  def admission(filters: Seq[Filter]): Option[Seq[Filter]] = {
-    val (in, out) = filters.partition(_.references.forall(covered))
-    if (out.exists(!_.isInstanceOf[IsNull])) None
-    else Some(if (toStored.isEmpty) in
-              else in.map(GraftDataSource.renameRefs(_, toStored)))
-  }
+  def admission(preds: Seq[Pred]): Option[Seq[Pred]] =
+    Pred.within(preds, predates).map(in =>
+      if (toStored.isEmpty) in else in.map(p => p.on(stored(p.col))))
 }

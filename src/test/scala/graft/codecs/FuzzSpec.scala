@@ -2,7 +2,7 @@ package graft.codecs
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{BlockReader, BlockWriter, DecodeError, PrefixVarInt}
-import graft.engine.{ChunkRange, ColumnarEngine, ContainerFormat, ContainerIO, Lane, Manifests, SourceTable, SparkTestSession}
+import graft.engine.{ChunkRange, ColumnarEngine, ContainerFormat, ContainerIO, Lane, Manifests, SourceTable, SparkTestSession, TestDirs}
 import graft.sources.ChunkSpec
 
 /** Fuzz-grade decode robustness, porting the intent of the reference's
@@ -119,7 +119,7 @@ class FuzzSpec extends AnyFunSuite {
 
   test("bit-flipped and truncated VALID containers never crash container decode") {
     val spark = SparkTestSession.spark
-    val dir = java.nio.file.Files.createTempDirectory("graft-fuzz").toString
+    val dir = TestDirs.createTempDirectory("graft-fuzz").toString
     ColumnarEngine.encode(
       ColumnarEngine.derive(SourceTable.synthesize(spark, 1500, 2)), dir, numParts = 2)
     val files = new java.io.File(s"$dir/blocks").listFiles().filter(_.getName.endsWith(".gblk"))
@@ -210,7 +210,7 @@ class FuzzSpec extends AnyFunSuite {
       // round-9 kind: FLOAT scalar (10, sortable-int narrow path)
       .withColumn("g", when(pmod(col("id"), lit(11)) === 0, lit(null))
         .otherwise((col("id") * 0.25 - 30.0).cast("float")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-kind-fuzz").toString
+    val dir = TestDirs.createTempDirectory("graft-kind-fuzz").toString
     df.write.format("graft").option("chunkRows", "128").mode("overwrite").save(dir)
     val files = new java.io.File(s"$dir/blocks").listFiles()
       .filter(_.getName.endsWith(".gblk"))

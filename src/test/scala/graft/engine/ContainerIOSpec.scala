@@ -42,7 +42,7 @@ class ContainerIOSpec extends AnyFunSuite {
 
   test("writeAtomic on an object-store scheme: direct conditional create, no tmp, first commit wins") {
     val conf = fakeS3Conf()
-    val dir = java.nio.file.Files.createTempDirectory("graft-fakes3").toString
+    val dir = TestDirs.createTempDirectory("graft-fakes3").toString
     val dst = s"fakes3://$dir/part-0.gblk"
     val tmp = s"fakes3://$dir/.part-0.gblk.tmp"
     ContainerIO.writeAtomic(conf, tmp, dst, Array[Byte](1, 2, 3))
@@ -57,7 +57,7 @@ class ContainerIOSpec extends AnyFunSuite {
 
   test("writeAtomic on a rename-atomic scheme still goes through tmp+rename") {
     val conf = new Configuration()
-    val dir = java.nio.file.Files.createTempDirectory("graft-local").toString
+    val dir = TestDirs.createTempDirectory("graft-local").toString
     val dst = s"file:$dir/part-0.gblk"
     val tmp = s"file:$dir/.part-0.gblk.tmp"
     ContainerIO.writeAtomic(conf, tmp, dst, Array[Byte](7, 8))
@@ -68,7 +68,7 @@ class ContainerIOSpec extends AnyFunSuite {
 
   test("file scheme: mkdirs and unchecksummed block writes go through java.nio, first commit wins") {
     val conf = new Configuration()
-    val dir = java.nio.file.Files.createTempDirectory("graft-nio").toString
+    val dir = TestDirs.createTempDirectory("graft-nio").toString
     ContainerIO.mkdirs(conf, s"file:$dir/a/b")
     assert(new java.io.File(s"$dir/a/b").isDirectory)
     ContainerIO.mkdirs(conf, s"$dir/a/b") // existing: no-op
@@ -91,7 +91,7 @@ class ContainerIOSpec extends AnyFunSuite {
   test("other rename-atomic schemes keep the Hadoop mkdirs and tmp+rename write") {
     val conf = new Configuration(false)
     conf.set("fs.fakehdfs.impl", classOf[FakeHdfsFileSystem].getName)
-    val dir = java.nio.file.Files.createTempDirectory("graft-fakehdfs").toString
+    val dir = TestDirs.createTempDirectory("graft-fakehdfs").toString
     ContainerIO.mkdirs(conf, s"fakehdfs://$dir/blocks")
     assert(new java.io.File(s"$dir/blocks").isDirectory)
     val dst = s"fakehdfs://$dir/blocks/part-0.gblk"

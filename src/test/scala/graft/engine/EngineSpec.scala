@@ -19,6 +19,29 @@ object SparkTestSession {
   }
 }
 
+/** Every table and scratch file a test makes lives under one root below
+  * the system temp directory, made on first use and deleted when the
+  * test JVM exits (the test run forks one JVM).
+  */
+object TestDirs {
+  private lazy val root: java.nio.file.Path = {
+    val r = Files.createTempDirectory("graft-tests-")
+    sys.addShutdownHook(deleteTree(r.toFile))
+    r
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+  }
+
+  def createTempDirectory(prefix: String): java.nio.file.Path =
+    Files.createTempDirectory(root, prefix)
+
+  def createTempFile(prefix: String, suffix: String): java.nio.file.Path =
+    Files.createTempFile(root, prefix, suffix)
+}
+
 /** The one race seam of a table change: `race` runs once, inside the
   * first index commit that reaches its claim ([[Manifests.beforeClaimHook]])
   * while `op` runs — after the commit's markers are written and before
@@ -38,7 +61,7 @@ class EngineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
   private def tempDir(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString
+    TestDirs.createTempDirectory(s"graft-$tag").toString
 
   private def sha256Hex(bytes: Array[Byte]): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(bytes)

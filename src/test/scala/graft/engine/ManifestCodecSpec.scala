@@ -64,7 +64,7 @@ class ManifestCodecSpec extends AnyFunSuite {
       assert(Manifests.toJson(m) === golden(s"marker$i.json"), s"marker of ${m.name}")
     }
     val conf = ContainerIO.localConf()
-    val d = java.nio.file.Files.createTempDirectory("graft-golden-index").toString
+    val d = TestDirs.createTempDirectory("graft-golden-index").toString
     Manifests.commitIndex(conf, d, _ => shapes)
     // a second commit re-serializes every entry read back from the index
     Manifests.commitIndex(conf, d, old => old.reverse)

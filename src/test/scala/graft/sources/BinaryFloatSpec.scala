@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.SparkTestSession
+import graft.engine.{SparkTestSession, TestDirs}
 
 /** Round 7: BINARY (kind 6) and ARRAY<FLOAT> (kind 7) columns — the two
   * LLM-pipeline shapes (opaque media payloads, embeddings) can now live
@@ -14,7 +14,7 @@ class BinaryFloatSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    TestDirs.createTempDirectory(s"graft-$tag").toString
 
   private def mediaDf(n: Int) = {
     import spark.implicits._

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** DECIMAL kind 8 (unscaled long, p <= 18) and BOOLEAN kind 9 (0/1
   * through the stats-selected long codecs) — round 8.
@@ -28,7 +28,7 @@ class DecimalBoolSpec extends AnyFunSuite {
     StructField("flag", BooleanType, nullable = false)))
 
   private def write(rows: Seq[Row], sorted: Boolean = false): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-decbool").toString
+    val d = TestDirs.createTempDirectory("graft-decbool").toString
     val w = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema)
       .write.format("graft").option("chunkRows", "100")
@@ -76,10 +76,11 @@ class DecimalBoolSpec extends AnyFunSuite {
     val layout = GraftDataSource.layoutOf(schema)
     val in = org.apache.spark.sql.sources.In("amount",
       Array[Any](bd(75), new java.math.BigDecimal("1e30")))
-    val Array(t) = GraftDataSource.translateFilters(Array(in), layout)
+    val pushed = GraftDataSource.pushdown(in, layout)
+    val t = pushed.map(_._1).orNull
     assert(t === org.apache.spark.sql.sources.In("amount",
       Array[Any](java.lang.Long.valueOf(75L))), t)
-    assert(GraftDataSource.pushable(t, layout))
+    assert(pushed.map(_._2).collect { case LongIn(_, vs) => vs.toSeq } === Some(Seq(75L)))
   }
 
   test("boolean equality pushes down; IS NULL semantics on nullable cols") {
@@ -90,7 +91,7 @@ class DecimalBoolSpec extends AnyFunSuite {
       StructField("id", LongType, nullable = false),
       StructField("amt", DecimalType(10, 2), nullable = true),
       StructField("ok", BooleanType, nullable = true)))
-    val d2 = java.nio.file.Files.createTempDirectory("graft-decbool-n").toString
+    val d2 = TestDirs.createTempDirectory("graft-decbool-n").toString
     spark.createDataFrame(spark.sparkContext.parallelize(
         (0 until 90).map(i => Row(i.toLong,
           if (i % 5 == 0) null else bd(i * 10L),
@@ -123,7 +124,7 @@ class DecimalBoolSpec extends AnyFunSuite {
 
   test("compaction preserves decimal/boolean exactly") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-decbool-c").toString
+    val d = TestDirs.createTempDirectory("graft-decbool-c").toString
     (0 until 3).foreach { g =>
       spark.createDataFrame(spark.sparkContext.parallelize(
           (0 until 40).map(i => Row((g * 40 + i).toLong,
@@ -152,7 +153,7 @@ class DecimalBoolSpec extends AnyFunSuite {
   test("precision > 18 is rejected with a clear error") {
     val wide = StructType(Seq(
       StructField("x", DecimalType(20, 2), nullable = false)))
-    val d = java.nio.file.Files.createTempDirectory("graft-decbool-w").toString
+    val d = TestDirs.createTempDirectory("graft-decbool-w").toString
     val ex = intercept[Exception] {
       spark.createDataFrame(spark.sparkContext.parallelize(
           Seq(Row(new java.math.BigDecimal("1.00"))), 1), wide)

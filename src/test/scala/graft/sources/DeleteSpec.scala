@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** Copy-on-write row-level DELETE (round 9): predicate-admitted container
   * rewrite under one OCC swap. The contracts under test: untouched
@@ -21,7 +21,7 @@ class DeleteSpec extends AnyFunSuite {
   private val conf = ContainerIO.localConf()
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-del-$tag").toString
+    TestDirs.createTempDirectory(s"graft-del-$tag").toString
 
   private def append(d: String, lo: Long, hi: Long, tag: String): Unit = {
     import spark.implicits._
@@ -61,6 +61,36 @@ class DeleteSpec extends AnyFunSuite {
     assert(untouched.size === 1,
       s"exactly one container should survive untouched: $before -> $after")
     assert(spark.read.format("graft").load(d).count() === 150)
+  }
+
+  test("admission skips a container the predicate provably misses: its " +
+    "block is never opened") {
+    val d = tmp("unopened")
+    append(d, 0, 100, "a")     // ids 0..99
+    append(d, 1000, 1100, "b") // ids 1000..1099
+    // without the high-range container's block, a delete that opens it fails
+    val high = Manifests.readCommitted(conf, d).filter(_.longRanges("id")._1 >= 1000)
+    assert(high.size === 1)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(high.head.blockFile(d)))
+    assert(GraftMaintenance.delete(spark, d, "id < 50") === 50L)
+  }
+
+  test("an OR over a column an old container predates prunes nothing: " +
+    "that container's matches are deleted too") {
+    val d = tmp("or-predated")
+    append(d, 0, 40, "a") // (id, tag): predates score
+    val wide = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("tag", StringType, nullable = false),
+      StructField("score", DoubleType, nullable = true)))
+    val rows = (100 until 140).map(i => Row(i.toLong, s"b${i % 7}",
+      java.lang.Double.valueOf(i * 0.5)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), wide)
+      .coalesce(1).write.format("graft").mode("append").save(d)
+    // id = 1 lives in the container without a score block, score = 55.0
+    // (id 110) in the other
+    assert(GraftMaintenance.delete(spark, d, "id = 1 OR score = 55.0") === 2L)
+    assert(spark.read.format("graft").load(d).count() === 78)
   }
 
   test("a delete matching nothing leaves the table byte-identical and " +

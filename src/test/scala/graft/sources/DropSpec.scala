@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** Column DROP via positional tombstones (round 9): a zero-row schema
   * marker flags the position dropped; committed containers keep their
@@ -18,7 +18,7 @@ class DropSpec extends AnyFunSuite {
   private val conf = ContainerIO.localConf()
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-drop-$tag").toString
+    TestDirs.createTempDirectory(s"graft-drop-$tag").toString
 
   private val schema3 = StructType(Seq(
     StructField("id", LongType, nullable = false),

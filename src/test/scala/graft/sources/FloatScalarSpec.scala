@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.codecs.FloatBits
-import graft.engine.SparkTestSession
+import graft.engine.{SparkTestSession, TestDirs}
 
 /** FLOAT kind 10 (round 9): 32-bit scalar through the kind-2 narrow path
   * behind the order-preserving sortable-int mapping — the kind-5 pattern
@@ -32,7 +32,7 @@ class FloatScalarSpec extends AnyFunSuite {
     StructField("score", FloatType, nullable = false)))
 
   private def write(rows: Seq[Row], sorted: Boolean = false): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-f32").toString
+    val d = TestDirs.createTempDirectory("graft-f32").toString
     val w = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       .write.format("graft").option("chunkRows", "100")
     (if (sorted) w.option("sortBy", "score") else w)
@@ -150,7 +150,7 @@ class FloatScalarSpec extends AnyFunSuite {
     val nSchema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("score", FloatType, nullable = true)))
-    val d = java.nio.file.Files.createTempDirectory("graft-f32n").toString
+    val d = TestDirs.createTempDirectory("graft-f32n").toString
     spark.createDataFrame(spark.sparkContext.parallelize(
         (0 until 90).map(i => Row(i.toLong,
           if (i % 3 == 0) null else java.lang.Float.valueOf(i * 0.5f))), 1),
@@ -171,7 +171,7 @@ class FloatScalarSpec extends AnyFunSuite {
   }
 
   test("compaction and DELETE preserve float columns exactly") {
-    val d = java.nio.file.Files.createTempDirectory("graft-f32c").toString
+    val d = TestDirs.createTempDirectory("graft-f32c").toString
     (0 until 3).foreach { g =>
       spark.createDataFrame(spark.sparkContext.parallelize(
           (0 until 40).map(i => Row((g * 40 + i).toLong,

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** Pins the exact bytes the DSv2 write path produces: a seeded table of
   * every column kind (0-10), NULLs in every nullable column, written as
@@ -62,7 +62,7 @@ class GoldenContainerSpec extends AnyFunSuite {
   }
 
   test("golden container: every kind with NULLs writes byte-identical blocks") {
-    val d = Files.createTempDirectory("graft-golden").toString
+    val d = TestDirs.createTempDirectory("graft-golden").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
       .coalesce(1).write.format("graft").option("chunkRows", "64")
       .mode("overwrite").save(d)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThan, LessThan}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{ColumnarEngine, ContainerIO, Lane, SourceTable, SparkTestSession}
+import graft.engine.{ColumnarEngine, ContainerIO, Lane, SourceTable, SparkTestSession, TestDirs}
 
 class GraftSourceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -34,7 +34,7 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2").toString
     val derived = ColumnarEngine.derive(SourceTable.synthesize(spark, 600, 3))
     // range layout on hash64 -> disjoint per-container zone maps, so the
     // skipping tests below can prove files were never opened
@@ -86,16 +86,22 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("zone-map admit(): boundary semantics") {
     val r = Map("x" -> (10L, 20L))
-    assert(GraftDataSource.admit(r, Seq(EqualTo("x", 10L))))
-    assert(GraftDataSource.admit(r, Seq(EqualTo("x", 20L))))
-    assert(!GraftDataSource.admit(r, Seq(EqualTo("x", 21L))))
-    assert(!GraftDataSource.admit(r, Seq(GreaterThan("x", 20L))))
-    assert(GraftDataSource.admit(r, Seq(GreaterThan("x", 19L))))
-    assert(!GraftDataSource.admit(r, Seq(LessThan("x", 10L))))
-    assert(GraftDataSource.admit(r, Seq(LessThan("x", 11L))))
+    // filters cross the pushdown boundary first, as the scan's do
+    import org.apache.spark.sql.sources.Filter
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val layout = GraftDataSource.layoutOf(StructType(Seq(
+      StructField("x", LongType), StructField("y", LongType))))
+    def p(f: Filter): Seq[Pred] = GraftDataSource.pushdown(f, layout).map(_._2).toSeq
+    assert(GraftDataSource.admit(r, p(EqualTo("x", 10L))))
+    assert(GraftDataSource.admit(r, p(EqualTo("x", 20L))))
+    assert(!GraftDataSource.admit(r, p(EqualTo("x", 21L))))
+    assert(!GraftDataSource.admit(r, p(GreaterThan("x", 20L))))
+    assert(GraftDataSource.admit(r, p(GreaterThan("x", 19L))))
+    assert(!GraftDataSource.admit(r, p(LessThan("x", 10L))))
+    assert(GraftDataSource.admit(r, p(LessThan("x", 11L))))
     // unknown column / no stats: always admit (skip only on PROOF)
-    assert(GraftDataSource.admit(Map.empty, Seq(EqualTo("x", 99L))))
-    assert(GraftDataSource.admit(r, Seq(EqualTo("y", 99L))))
+    assert(GraftDataSource.admit(Map.empty, p(EqualTo("x", 99L))))
+    assert(GraftDataSource.admit(r, p(EqualTo("y", 99L))))
   }
 
   test("scan reports manifest statistics; filters shrink the estimate") {
@@ -152,7 +158,7 @@ class GraftSourceSpec extends AnyFunSuite {
       StructField("id", LongType, nullable = false),
       StructField("tag", StringType, nullable = false)))
     def write(rows: Seq[Row]): String = {
-      val d = java.nio.file.Files.createTempDirectory("graft-stragg").toString
+      val d = TestDirs.createTempDirectory("graft-stragg").toString
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
         .write.format("graft").option("chunkRows", "100")
         .mode("overwrite").save(d)
@@ -191,7 +197,7 @@ class GraftSourceSpec extends AnyFunSuite {
       StructField("id", LongType, nullable = false),
       StructField("tag", StringType, nullable = true)))
     val dNull = {
-      val d = java.nio.file.Files.createTempDirectory("graft-stragg-n").toString
+      val d = TestDirs.createTempDirectory("graft-stragg-n").toString
       val rows = (0 until 200).map(i =>
         Row(i.toLong, if (i % 5 == 0) null else f"key-$i%04d"))
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), nSchema)
@@ -219,7 +225,7 @@ class GraftSourceSpec extends AnyFunSuite {
     def write(rows: Seq[Row], mode: String, d: String): Unit =
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
         .write.format("graft").option("chunkRows", "100").mode(mode).save(d)
-    val d = java.nio.file.Files.createTempDirectory("graft-stragg-si").toString
+    val d = TestDirs.createTempDirectory("graft-stragg-si").toString
     write((0 until 400).map(i => Row(i.toLong, f"key-$i%04d")), "overwrite", d)
     def minMax() = spark.read.format("graft").load(d)
       .agg(min("tag").as("mn"), max("tag").as("mx"))
@@ -256,7 +262,7 @@ class GraftSourceSpec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("tag", StringType, nullable = false)))
-    val d = java.nio.file.Files.createTempDirectory("graft-idxreads").toString
+    val d = TestDirs.createTempDirectory("graft-idxreads").toString
     spark.createDataFrame(spark.sparkContext.parallelize(
         (0 until 200).map(i => Row(i.toLong, s"t${i % 5}")), 2), schema)
       .write.format("graft").mode("overwrite").save(d)
@@ -291,7 +297,7 @@ class GraftSourceSpec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("tag", StringType, nullable = false)))
-    val d = java.nio.file.Files.createTempDirectory("graft-commitreads").toString
+    val d = TestDirs.createTempDirectory("graft-commitreads").toString
     def rows(from: Int) = spark.createDataFrame(spark.sparkContext.parallelize(
       (from until from + 100).map(i => Row(i.toLong, s"t${i % 5}")), 2), schema)
     rows(0).write.format("graft").mode("overwrite").save(d)
@@ -319,7 +325,7 @@ class GraftSourceSpec extends AnyFunSuite {
   test("an overwrite whose old block cannot be deleted after the claim " +
     "lands stays committed and readable") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-landed").toString
+    val d = TestDirs.createTempDirectory("graft-landed").toString
     (0 until 100).map(i => (i.toLong, s"a$i")).toDF("id", "tag")
       .coalesce(1).write.format("graft").mode("overwrite").save(d)
     val blocks = ContainerIO.listNames(ContainerIO.localConf(), s"$d/blocks")
@@ -354,7 +360,7 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   test("SQL INSERT INTO appends through the V2 write path") {
-    val d = java.nio.file.Files.createTempDirectory("graft-sql-insert").toString
+    val d = TestDirs.createTempDirectory("graft-sql-insert").toString
     ColumnarEngine.derive(SourceTable.synthesize(spark, 80, 2))
       .write.format("graft").mode("overwrite").save(d)
     spark.sql("DROP TABLE IF EXISTS graft_ins_t")
@@ -384,7 +390,7 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   test("append: epoch-named parts never collide; read sees the union") {
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-append").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-append").toString
     val a = ColumnarEngine.derive(SourceTable.synthesize(spark, 100, 2))
     a.write.format("graft").mode("overwrite").save(d)
     val b = ColumnarEngine.derive(SourceTable.synthesize(spark, 100, 2)).toDF()
@@ -412,7 +418,7 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   private def mkTableDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    val d = TestDirs.createTempDirectory(prefix).toString
     val conf = graft.engine.ContainerIO.localConf()
     graft.engine.ContainerIO.mkdirs(conf, s"$d/blocks")
     graft.engine.ContainerIO.mkdirs(conf, s"$d/manifests")
@@ -530,7 +536,7 @@ class GraftSourceSpec extends AnyFunSuite {
   test("generic schemas: a user's own BIGINT/STRING table round-trips with pushdown") {
     import spark.implicits._
     import org.apache.spark.sql.types.{LongType, StringType}
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-generic").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-generic").toString
     val df = (0 until 500).map(i =>
       (i.toLong, s"cat${i % 7}", s"name-$i", (i * 37L) % 1000))
       .toDF("id", "category", "label", "score")
@@ -578,7 +584,7 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("generic schemas: pure-long table (no digest column) reads under CRC protection") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-longs").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-longs").toString
     val df = (0 until 300).map(i => (i.toLong, i * 2L, (i % 17).toLong))
       .toDF("a", "b", "c")
     df.coalesce(1)
@@ -628,13 +634,13 @@ class GraftSourceSpec extends AnyFunSuite {
         .map(_.asInstanceOf[GraftInputPartition].chunks.size).sum
       admitted.toDouble / total
     }
-    val dManual = java.nio.file.Files.createTempDirectory("graft-sortby-man").toString
+    val dManual = TestDirs.createTempDirectory("graft-sortby-man").toString
     df.orderBy("lang", "id").coalesce(1)
       .write.format("graft").option("chunkRows", "200").mode("overwrite").save(dManual)
-    val dOpt = java.nio.file.Files.createTempDirectory("graft-sortby-opt").toString
+    val dOpt = TestDirs.createTempDirectory("graft-sortby-opt").toString
     df.write.format("graft").option("chunkRows", "200")
       .option("sortBy", "lang,id").mode("overwrite").save(dOpt)
-    val dNone = java.nio.file.Files.createTempDirectory("graft-sortby-none").toString
+    val dNone = TestDirs.createTempDirectory("graft-sortby-none").toString
     df.coalesce(1)
       .write.format("graft").option("chunkRows", "200").mode("overwrite").save(dNone)
     val (fOpt, fManual, fNone) =
@@ -650,7 +656,7 @@ class GraftSourceSpec extends AnyFunSuite {
     // bad column name is rejected up front
     val ex = intercept[Exception] {
       df.write.format("graft").option("sortBy", "nope").mode("overwrite")
-        .save(java.nio.file.Files.createTempDirectory("graft-sortby-bad").toString)
+        .save(TestDirs.createTempDirectory("graft-sortby-bad").toString)
     }
     def messages(t: Throwable): String =
       if (t == null) "" else Option(t.getMessage).getOrElse("") + messages(t.getCause)
@@ -660,7 +666,7 @@ class GraftSourceSpec extends AnyFunSuite {
   test("IntegerType columns: kind-2 narrow blocks round-trip with pushdown") {
     import spark.implicits._
     import org.apache.spark.sql.types.IntegerType
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-ints").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-ints").toString
     val df = (0 until 400).map(i => (i.toLong, i * 3, s"r$i")).toDF("id", "n", "tag")
     df.coalesce(1)
       .write.format("graft").option("chunkRows", "100").mode("overwrite").save(d)
@@ -691,7 +697,7 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("temporal columns: TIMESTAMP_NTZ (kind 3) and DATE (kind 4) round-trip with pushdown") {
     import org.apache.spark.sql.types.{DateType, TimestampNTZType}
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-temporal").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-temporal").toString
     // one row per hour from 2024-01-01T00:00 — ts is monotone, so the 4
     // chunks' micros zone maps are disjoint and pruning is provable
     val df = spark.range(400).select(
@@ -775,7 +781,7 @@ class GraftSourceSpec extends AnyFunSuite {
     }
     // format level: a crafted container whose kind-2 block holds an
     // overflowing value fails the read with DecodeError, never a wrong int
-    val d = java.nio.file.Files.createTempDirectory("graft-int-ovf").toString
+    val d = TestDirs.createTempDirectory("graft-int-ovf").toString
     // the crafted file plus its one chunk range, right after the prelude
     // (magic + a one-byte part id), as a manifest would index it
     def crafted(name: String, kind2Block: Array[Byte]): (String, Seq[ChunkSpec]) = {
@@ -817,7 +823,7 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   test("aggregate pushdown over an empty table: count 0, null min/max") {
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-empty").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-empty").toString
     graft.engine.ContainerIO.mkdirs(graft.engine.ContainerIO.localConf(), s"$d/blocks")
     graft.engine.ContainerIO.mkdirs(graft.engine.ContainerIO.localConf(), s"$d/manifests")
     val r = spark.read.format("graft").load(d)
@@ -833,7 +839,7 @@ class GraftSourceSpec extends AnyFunSuite {
       .listNames(conf, s"$dir/blocks").filter(_.endsWith(".gblk")).head
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/blocks/$block"))
-    val tmp = java.nio.file.Files.createTempFile("graft-dsv2-fuzz", ".gblk")
+    val tmp = TestDirs.createTempFile("graft-dsv2-fuzz", ".gblk")
     val schema = StructType(Seq(StructField("repo", StringType),
       StructField("hash64", LongType)))
     val chunks = chunkRanges(dir, block)
@@ -870,7 +876,7 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("fuzz: bit-flipped kind-2 int containers fail controlled (Overflow/Eob/require)") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-int-fuzz").toString
+    val d = TestDirs.createTempDirectory("graft-int-fuzz").toString
     (0 until 200).map(i => (i - 100, i.toLong)).toDF("n", "id")
       .coalesce(1)
       .write.format("graft").option("chunkRows", "200").mode("overwrite").save(d)
@@ -879,7 +885,7 @@ class GraftSourceSpec extends AnyFunSuite {
       .listNames(conf, s"$d/blocks").filter(_.endsWith(".gblk")).head
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$d/blocks/$block"))
-    val tmp = java.nio.file.Files.createTempFile("graft-int-fuzz", ".gblk")
+    val tmp = TestDirs.createTempFile("graft-int-fuzz", ".gblk")
     val chunks = chunkRanges(d, block)
     val rnd = new scala.util.Random(29)
     var k = 0
@@ -906,7 +912,7 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   test("fuzz: corrupted manifests/chunk indexes never crash reads uncontrolled") {
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-mfuzz").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-mfuzz").toString
     ColumnarEngine.derive(SourceTable.synthesize(spark, 120, 2))
       .coalesce(1)
       .write.format("graft").option("chunkRows", "40").mode("overwrite").save(d)
@@ -1017,7 +1023,7 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   test("overwrite replaces the table") {
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-ow").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-ow").toString
     val a = ColumnarEngine.derive(SourceTable.synthesize(spark, 100, 2))
     a.write.format("graft").mode("overwrite").save(d)
     val b = ColumnarEngine.derive(SourceTable.synthesize(spark, 40, 2))
@@ -1027,7 +1033,7 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("chunk-granular splits: one container plans many partitions; zone maps skip chunks") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-chunks").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-chunks").toString
     // ONE container of 6 chunks (100 rows each), range-sorted on hash64 so
     // per-chunk zone maps are disjoint
     ColumnarEngine.derive(SourceTable.synthesize(spark, 600, 3))
@@ -1058,7 +1064,7 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("string filter pushdown: lang equality prunes chunks via dicts, stays exact") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-str").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-str").toString
     // sort by lang so per-chunk dicts are selective
     ColumnarEngine.derive(SourceTable.synthesize(spark, 600, 3))
       .orderBy(col("lang"), col("path")).coalesce(1)
@@ -1122,7 +1128,7 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("runtime filtering (DPP shape): broadcast-join keys prune chunks") {
     import org.apache.spark.sql.sources.{In => SIn}
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-dpp").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-dpp").toString
     ColumnarEngine.derive(SourceTable.synthesize(spark, 600, 3))
       .orderBy(col("repo_code")).coalesce(1)
       .write.format("graft").option("chunkRows", "100").mode("overwrite").save(d)
@@ -1152,7 +1158,7 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("manifests without a required field are rejected, naming the field") {
     import com.fasterxml.jackson.databind.ObjectMapper
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-legacy").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-legacy").toString
     val derived = ColumnarEngine.derive(SourceTable.synthesize(spark, 150, 2))
     derived.write.format("graft").mode("overwrite").save(d)
     // strip the round-4 fields from every manifest + drop the index,
@@ -1191,7 +1197,7 @@ class GraftSourceSpec extends AnyFunSuite {
     // each remaining required field alone, on a current table: through the
     // listing (index dropped) and, for the chunk index, through an intact
     // index whose elided entries hydrate from the stripped markers
-    val d2 = java.nio.file.Files.createTempDirectory("graft-dsv2-required").toString
+    val d2 = TestDirs.createTempDirectory("graft-dsv2-required").toString
     derived.write.format("graft").mode("overwrite").save(d2)
     val markers = graft.engine.ContainerIO.listNames(conf, s"$d2/manifests")
       .filter(_.endsWith(".json")).map { n =>
@@ -1224,7 +1230,7 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   test("orphan containers (no manifest) are invisible to every read path") {
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-orphan").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-orphan").toString
     ColumnarEngine.derive(SourceTable.synthesize(spark, 100, 2))
       .write.format("graft").mode("overwrite").save(d)
     val before = spark.read.format("graft").load(d).count()
@@ -1244,7 +1250,7 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   test("failed overwrite preserves the previous table (job-level commit)") {
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-atomic").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-atomic").toString
     val a = ColumnarEngine.derive(SourceTable.synthesize(spark, 100, 2))
     a.write.format("graft").mode("overwrite").save(d)
     val poisoned = ColumnarEngine.derive(SourceTable.synthesize(spark, 50, 2)).toDF()
@@ -1259,7 +1265,7 @@ class GraftSourceSpec extends AnyFunSuite {
   }
 
   test("block CRCs catch corruption on PRUNED reads (no content digest in play)") {
-    val d = java.nio.file.Files.createTempDirectory("graft-dsv2-crc").toString
+    val d = TestDirs.createTempDirectory("graft-dsv2-crc").toString
     ColumnarEngine.derive(SourceTable.synthesize(spark, 300, 2))
       .coalesce(1)
       .write.format("graft").option("chunkRows", "300").mode("overwrite").save(d)

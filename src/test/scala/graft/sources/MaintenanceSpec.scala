@@ -2,13 +2,13 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 class MaintenanceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private def tempDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    TestDirs.createTempDirectory(s"graft-$tag").toString
 
   private def gblks(d: String): Seq[String] =
     ContainerIO.listNames(ContainerIO.localConf(), s"$d/blocks")

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.SparkTestSession
+import graft.engine.{SparkTestSession, TestDirs}
 
 /** Model-based randomized testing of the mutation triad (round 9): a
   * seeded random sequence of append / DELETE / UPDATE / upsert / compact
@@ -18,7 +18,7 @@ class MutationModelSpec extends AnyFunSuite {
   test("a random append/delete/update/upsert/compact sequence matches " +
     "the in-memory model after every op") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-model").toString
+    val d = TestDirs.createTempDirectory("graft-model").toString
     val rnd = new scala.util.Random(907L)
     val model = scala.collection.mutable.Map.empty[Long, (String, Long)]
     var nextId = 0L

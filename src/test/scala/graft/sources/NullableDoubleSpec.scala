@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 import graft.codecs.DoubleBits
-import graft.engine.SparkTestSession
+import graft.engine.{SparkTestSession, TestDirs}
 
 /** Round 7: DOUBLE columns (kind 5, order-preserving sortable-long
   * storage) and NULLABLE columns (per-chunk validity bitmaps) in the
@@ -27,7 +27,7 @@ class NullableDoubleSpec extends AnyFunSuite {
   }
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    TestDirs.createTempDirectory(s"graft-$tag").toString
 
   // ------------------------------------------------------------- DoubleBits
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** Partition transforms at the write surface (round 8):
   * `option("partitionBy", "col | days(ts) | bucket(n, col)")` — Spark
@@ -30,7 +30,7 @@ class PartitionSpec extends AnyFunSuite {
   test("identity partitioning: a point filter plans only that " +
     "partition's containers and hydrates only them") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-part-id").toString
+    val d = TestDirs.createTempDirectory("graft-part-id").toString
     val langs = Seq("en", "de", "fr", "zh")
     val rnd = new scala.util.Random(7)
     (0 until 2000).map(i => (i.toLong, langs(rnd.nextInt(4)), s"doc $i"))
@@ -62,7 +62,7 @@ class PartitionSpec extends AnyFunSuite {
 
   test("days(ts) partitioning: a day-range filter prunes containers") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-part-days").toString
+    val d = TestDirs.createTempDirectory("graft-part-days").toString
     val base = java.time.LocalDateTime.of(2026, 1, 1, 0, 0)
     (0 until 1200).map(i => (i.toLong, base.plusMinutes(i * 15L)))
       .toDF("id", "ts")
@@ -83,7 +83,7 @@ class PartitionSpec extends AnyFunSuite {
   test("bucket(n, col) partitioning: recorded bucket-id sets eliminate " +
     "containers for point filters where zone maps cannot") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-part-bkt").toString
+    val d = TestDirs.createTempDirectory("graft-part-bkt").toString
     // high-cardinality key: every container's value RANGE spans the
     // domain, so zone maps prove nothing — bucket ids must do the work
     (0 until 4000).map(i => (i.toLong, s"payload $i"))
@@ -129,7 +129,7 @@ class PartitionSpec extends AnyFunSuite {
     val df = Seq((1L, "x")).toDF("id", "tag")
     def messages(t: Throwable): String =
       if (t == null) "" else Option(t.getMessage).getOrElse("") + messages(t.getCause)
-    val d = java.nio.file.Files.createTempDirectory("graft-part-bad").toString
+    val d = TestDirs.createTempDirectory("graft-part-bad").toString
     val e1 = intercept[Exception] {
       df.write.format("graft").option("partitionBy", "nope")
         .mode("overwrite").save(d)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** Column renames (round 8): field identity is positional under the
   * add-only invariant; a rename commits a zero-row schema marker, old
@@ -23,7 +23,7 @@ class RenameSpec extends AnyFunSuite {
 
   test("rename: new name reads, filters, and pushes down over OLD containers") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-ren").toString
+    val d = TestDirs.createTempDirectory("graft-ren").toString
     (0 until 300).map(i => (i.toLong, s"u${i % 7}", s"body $i"))
       .toDF("id", "user", "body")
       .coalesce(1).write.format("graft").option("chunkRows", "100")
@@ -49,7 +49,7 @@ class RenameSpec extends AnyFunSuite {
   test("rename: appends after the rename carry the new label; both " +
     "generations read as one column") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-ren2").toString
+    val d = TestDirs.createTempDirectory("graft-ren2").toString
     (0 until 100).map(i => (i.toLong, i * 2L)).toDF("id", "v")
       .coalesce(1).write.format("graft").mode("append").save(d)
     GraftMaintenance.renameColumn(spark, d, "v", "value")
@@ -74,7 +74,7 @@ class RenameSpec extends AnyFunSuite {
 
   test("rename survives compaction; time travel sees the old name") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-ren3").toString
+    val d = TestDirs.createTempDirectory("graft-ren3").toString
     (0 until 60).map(i => (i.toLong, s"t$i")).toDF("id", "tag")
       .coalesce(1).write.format("graft").mode("append").save(d) // v0
     (60 until 120).map(i => (i.toLong, s"t$i")).toDF("id", "tag")
@@ -96,7 +96,7 @@ class RenameSpec extends AnyFunSuite {
   test("rename via SQL procedure; conflicts fail controlled") {
     import spark.implicits._
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    val d = java.nio.file.Files.createTempDirectory("graft-ren4").toString
+    val d = TestDirs.createTempDirectory("graft-ren4").toString
     (0 until 10).map(i => (i.toLong, s"x$i")).toDF("id", "a")
       .write.format("graft").mode("append").save(d)
     val r = spark.sql(
@@ -117,7 +117,7 @@ class RenameSpec extends AnyFunSuite {
   test("rename + NAME REUSE: IS NULL on the reused name admits containers " +
     "predating it (no collision with the stored pre-rename label)") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-ren6").toString
+    val d = TestDirs.createTempDirectory("graft-ren6").toString
     // old container stores a nullable string column labeled "x" (explicit
     // 0 null count recorded)
     (0 until 40).map(i => (i.toLong, s"v$i")).toDF("id", "x")
@@ -143,7 +143,7 @@ class RenameSpec extends AnyFunSuite {
   test("rename racing a concurrent append is NOT silently reverted " +
     "(marker regenerated above the snapshot it lands on)") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-ren7").toString
+    val d = TestDirs.createTempDirectory("graft-ren7").toString
     (0 until 50).map(i => (i.toLong, i * 3L)).toDF("id", "v")
       .coalesce(1).write.format("graft").mode("append").save(d)
     // the race window of the round-8 medium advice: an append commits
@@ -181,7 +181,7 @@ class RenameSpec extends AnyFunSuite {
       ("drop", rows.toDF("x", "y", "z"),
         d => GraftMaintenance.dropColumn(spark, d, "z"), Seq("x", "y2"))
     ).foreach { case (what, table, race, cols) =>
-      val d = java.nio.file.Files.createTempDirectory(s"graft-ren-$what").toString
+      val d = TestDirs.createTempDirectory(s"graft-ren-$what").toString
       table.coalesce(1).write.format("graft").mode("append").save(d)
       ClaimRace.racing(race(d)) {
         GraftMaintenance.renameColumn(spark, d, "y", "y2")
@@ -196,7 +196,7 @@ class RenameSpec extends AnyFunSuite {
 
   test("rename of a nullable evolved column keeps evolution semantics") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-ren5").toString
+    val d = TestDirs.createTempDirectory("graft-ren5").toString
     (0 until 40).map(i => (i.toLong, i * 1.5)).toDF("id", "v")
       .coalesce(1).write.format("graft").mode("append").save(d)
     (40 until 80).map(i => (i.toLong, i * 1.5, s"g${i % 3}"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.SparkTestSession
+import graft.engine.{SparkTestSession, TestDirs}
 
 /** Round 7: add-only schema evolution — an append may extend the
   * committed schema with trailing NULLABLE columns; containers written
@@ -19,7 +19,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    TestDirs.createTempDirectory(s"graft-$tag").toString
 
   private val baseSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),

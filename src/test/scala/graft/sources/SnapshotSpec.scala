@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** Snapshot time travel + retention (round 8): superseded index versions
   * inside [[Manifests.SnapshotRetention]] keep their content, reads pin
@@ -22,7 +22,7 @@ class SnapshotSpec extends AnyFunSuite {
   }
 
   test("versionAsOf reads exactly the snapshot each append committed") {
-    val d = java.nio.file.Files.createTempDirectory("graft-tt").toString
+    val d = TestDirs.createTempDirectory("graft-tt").toString
     append(d, 0, "a")
     append(d, 100, "b")
     append(d, 200, "c")
@@ -39,7 +39,7 @@ class SnapshotSpec extends AnyFunSuite {
   }
 
   test("timestampAsOf resolves to the last snapshot committed before it") {
-    val d = java.nio.file.Files.createTempDirectory("graft-tt-ts").toString
+    val d = TestDirs.createTempDirectory("graft-tt-ts").toString
     append(d, 0, "a")
     val between = System.currentTimeMillis()
     Thread.sleep(1100) // local-FS mtime granularity
@@ -56,7 +56,7 @@ class SnapshotSpec extends AnyFunSuite {
 
   test("a version past the retention window fails controlled; retained " +
     "versions keep their content") {
-    val d = java.nio.file.Files.createTempDirectory("graft-tt-ret").toString
+    val d = TestDirs.createTempDirectory("graft-tt-ret").toString
     val total = Manifests.SnapshotRetention.toInt + 3
     (0 until total).foreach(i => append(d, i * 100L, s"t$i", n = 5))
     val tip = total - 1L
@@ -76,7 +76,7 @@ class SnapshotSpec extends AnyFunSuite {
   }
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
+    TestDirs.createTempDirectory(s"graft-$tag").toString
 
   test("snapshot retention is configurable via graft.snapshot.retention") {
     val d = tmp("ret-conf")
@@ -128,7 +128,7 @@ class SnapshotSpec extends AnyFunSuite {
   test("time travel pins the snapshot's SCHEMA (pre-evolution reads are " +
     "narrow)") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-tt-ev").toString
+    val d = TestDirs.createTempDirectory("graft-tt-ev").toString
     (0 until 20).map(i => (i.toLong, i * 2L)).toDF("id", "v")
       .coalesce(1).write.format("graft").mode("append").save(d)
     (20 until 40).map(i => (i.toLong, i * 2L, s"tag$i")).toDF("id", "v", "tag")
@@ -143,7 +143,7 @@ class SnapshotSpec extends AnyFunSuite {
 
   test("vacuum keeps blocks referenced only by a retained older snapshot") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-tt-vac").toString
+    val d = TestDirs.createTempDirectory("graft-tt-vac").toString
     append(d, 0, "a")   // v0: container A
     append(d, 100, "b") // v1: A + B
     val a = Manifests.readCommittedAt(conf, d, 0L).head
@@ -168,7 +168,7 @@ class SnapshotSpec extends AnyFunSuite {
   }
 
   test("time travel rejects streams and ambiguous pins") {
-    val d = java.nio.file.Files.createTempDirectory("graft-tt-err").toString
+    val d = TestDirs.createTempDirectory("graft-tt-err").toString
     append(d, 0, "a")
     intercept[IllegalArgumentException] {
       spark.read.format("graft")

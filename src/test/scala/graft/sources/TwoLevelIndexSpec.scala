@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** Two-level manifest metadata (round 8): the consolidated index carries
   * container SUMMARIES (envelope stats, O(containers) bytes), while
@@ -22,7 +22,7 @@ class TwoLevelIndexSpec extends AnyFunSuite {
     */
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-2lvl").toString
+    val d = TestDirs.createTempDirectory("graft-2lvl").toString
     Seq(("a", 0L), ("b", 1000L), ("c", 2000L)).foreach { case (tag, base) =>
       (0 until 100).map(i => (base + i, tag, s"text $tag $i"))
         .toDF("id", "tag", "body")
@@ -109,7 +109,7 @@ class TwoLevelIndexSpec extends AnyFunSuite {
   test("a vanished commit marker surfaces the retriable snapshot-superseded " +
     "error, not a raw FileNotFoundException") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft-2lvl-gone").toString
+    val d = TestDirs.createTempDirectory("graft-2lvl-gone").toString
     (0 until 50).map(i => (i.toLong, s"v$i")).toDF("id", "v")
       .coalesce(1).write.format("graft").mode("append").save(d)
     val m = Manifests.readCommitted(conf, d).head

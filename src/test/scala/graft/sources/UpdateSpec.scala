@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** Copy-on-write row-level UPDATE (round 9): DELETE's sibling — matched
   * rows rewrite with assignments applied (originals visible to every
@@ -17,7 +17,7 @@ class UpdateSpec extends AnyFunSuite {
   private val conf = ContainerIO.localConf()
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-upd-$tag").toString
+    TestDirs.createTempDirectory(s"graft-upd-$tag").toString
 
   private def append(d: String, lo: Long, hi: Long, tag: String): Unit = {
     import spark.implicits._
@@ -66,6 +66,18 @@ class UpdateSpec extends AnyFunSuite {
     assert(ContainerIO.listNames(conf, s"$d/blocks")
       .count(_.startsWith("part-update-")) <= 1,
       "zero-match rewrites must not leak staged containers")
+  }
+
+  test("admission skips a container the predicate provably misses: its " +
+    "block is never opened") {
+    val d = tmp("unopened")
+    append(d, 0, 100, "a")     // ids 0..99
+    append(d, 1000, 1100, "b") // ids 1000..1099
+    // without the high-range container's block, an update that opens it fails
+    val high = Manifests.readCommitted(conf, d).filter(_.longRanges("id")._1 >= 1000)
+    assert(high.size === 1)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(high.head.blockFile(d)))
+    assert(GraftMaintenance.update(spark, d, "id = 5", Map("score" -> "0L")) === 1L)
   }
 
   test("zone maps re-record from updated values; pushdowns stay exact") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ClaimRace, ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** MERGE-style copy-on-write UPSERT (round 9): whole-row replace-by-key
   * — matched target rows drop, the source appends, ONE OCC swap makes
@@ -16,7 +16,7 @@ class UpsertSpec extends AnyFunSuite {
   private val conf = ContainerIO.localConf()
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-ups-$tag").toString
+    TestDirs.createTempDirectory(s"graft-ups-$tag").toString
 
   private def append(d: String, lo: Long, hi: Long, tag: String): Unit = {
     import spark.implicits._

@@ -6,7 +6,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.codecs.StringCodecs
-import graft.engine.{ContainerIO, Manifests, SparkTestSession}
+import graft.engine.{ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** Pins the bytes the DSv2 write path produces for non-ASCII strings:
   * 2-, 3- and 4-byte UTF-8 characters, empty strings and NULLs, in
@@ -61,7 +61,7 @@ class Utf8GoldenSpec extends AnyFunSuite {
   }
 
   test("golden container: non-ASCII strings through raw, dict, RLE and FSST blocks") {
-    val d = Files.createTempDirectory("graft-utf8-golden").toString
+    val d = TestDirs.createTempDirectory("graft-utf8-golden").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
       .coalesce(1).write.format("graft").option("chunkRows", ChunkRows.toString)
       .mode("overwrite").save(d)
@@ -88,7 +88,7 @@ class Utf8GoldenSpec extends AnyFunSuite {
   }
 
   test("string zone maps keep their stored order") {
-    val d = Files.createTempDirectory("graft-utf8-zones").toString
+    val d = TestDirs.createTempDirectory("graft-utf8-zones").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows.take(400), 1), schema)
       .write.format("graft").option("chunkRows", "200").mode("overwrite").save(d)
     val conf = ContainerIO.localConf()
@@ -108,7 +108,7 @@ class Utf8GoldenSpec extends AnyFunSuite {
     // replacement): a malformed 2-byte sequence, a stray 0xFF, an encoded
     // surrogate (ED A0 80) and the empty string
     val hexes = Seq("61C328FF62", "EDA080", "", "C3A9")
-    val d = Files.createTempDirectory("graft-utf8-invalid").toString
+    val d = TestDirs.createTempDirectory("graft-utf8-invalid").toString
     def write(mode: String): Unit =
       spark.createDataFrame(spark.sparkContext.parallelize(
           hexes.zipWithIndex.map { case (h, i) => Row(i.toLong, h) }, 1),

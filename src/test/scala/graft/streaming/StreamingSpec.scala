@@ -2,16 +2,15 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{ColumnarEngine, SourceTable, SparkTestSession}
-import java.nio.file.Files
+import graft.engine.{ColumnarEngine, SourceTable, SparkTestSession, TestDirs}
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   test("streaming encode: micro-batches land as resumable encode layouts, decode matches input") {
     import spark.implicits._
-    val srcDir = Files.createTempDirectory("graft-stream-src").toString
-    val outDir = Files.createTempDirectory("graft-stream-out").toString
+    val srcDir = TestDirs.createTempDirectory("graft-stream-src").toString
+    val outDir = TestDirs.createTempDirectory("graft-stream-out").toString
     // stage two "arrivals" of source files as parquet
     val all = SourceTable.synthesize(spark, 400, 2)
     all.filter($"path".substr(lit(-7), lit(1)) < "5").write.parquet(s"$srcDir/wave1")
@@ -34,9 +33,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("native streaming sink: writeStream.format(\"graft\") appends epochs, reads back exact") {
     import spark.implicits._
-    val srcDir = Files.createTempDirectory("graft-sink-src").toString
-    val outDir = Files.createTempDirectory("graft-sink-out").toString
-    val ckpt = Files.createTempDirectory("graft-sink-ckpt").toString
+    val srcDir = TestDirs.createTempDirectory("graft-sink-src").toString
+    val outDir = TestDirs.createTempDirectory("graft-sink-out").toString
+    val ckpt = TestDirs.createTempDirectory("graft-sink-ckpt").toString
     val all = SourceTable.synthesize(spark, 200, 2)
     val derived = ColumnarEngine.derive(all)
     derived.write.parquet(s"$srcDir/data")
@@ -70,9 +69,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming source: readStream.format(\"graft\") tails appends exactly once") {
     import spark.implicits._
-    val tableDir = Files.createTempDirectory("graft-src-table").toString
-    val ckpt = Files.createTempDirectory("graft-src-ckpt").toString
-    val outDir = Files.createTempDirectory("graft-src-out").toString
+    val tableDir = TestDirs.createTempDirectory("graft-src-table").toString
+    val ckpt = TestDirs.createTempDirectory("graft-src-ckpt").toString
+    val outDir = TestDirs.createTempDirectory("graft-src-out").toString
     val wave1 = (0 until 120).map(i => (i.toLong, s"cat${i % 3}", i * 7L))
       .toDF("id", "category", "score")
     wave1.write.format("graft").option("chunkRows", "50").mode("append").save(tableDir)
@@ -111,11 +110,11 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming sink + tail carry ALL round-7 kinds (nullable double/binary/float-array) exactly") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val srcDir = Files.createTempDirectory("graft-kinds-src").toString
-    val tableDir = Files.createTempDirectory("graft-kinds-table").toString
-    val sinkCkpt = Files.createTempDirectory("graft-kinds-sinkck").toString
-    val tailCkpt = Files.createTempDirectory("graft-kinds-tailck").toString
-    val tailOut = Files.createTempDirectory("graft-kinds-tailout").toString
+    val srcDir = TestDirs.createTempDirectory("graft-kinds-src").toString
+    val tableDir = TestDirs.createTempDirectory("graft-kinds-table").toString
+    val sinkCkpt = TestDirs.createTempDirectory("graft-kinds-sinkck").toString
+    val tailCkpt = TestDirs.createTempDirectory("graft-kinds-tailck").toString
+    val tailOut = TestDirs.createTempDirectory("graft-kinds-tailout").toString
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("v", DoubleType, nullable = true),
@@ -177,7 +176,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming exact dedup drops repeated texts within the watermark horizon") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dedup-stream").toString
+    val dir = TestDirs.createTempDirectory("graft-dedup-stream").toString
     val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def ts(m: Int) = new java.sql.Timestamp(base.getTime + m * 60000L)
     Seq(
@@ -201,7 +200,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming sessionization: GroupState carries open sessions across micro-batches") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-sess").toString
+    val dir = TestDirs.createTempDirectory("graft-sess").toString
     def ts(min: Long) = java.sql.Timestamp.from(
       java.sql.Timestamp.valueOf("2026-01-01 00:00:00").toInstant.plusSeconds(min * 60))
     // three files = three micro-batches (maxFilesPerTrigger=1)
@@ -285,7 +284,7 @@ class StreamingSpec extends AnyFunSuite {
   test("watermarked windowed aggregation over the events stream (memory sink)") {
     // stage the single-file table into a directory (streaming sources
     // monitor directories, not files)
-    val evDir = Files.createTempDirectory("graft-events").toString
+    val evDir = TestDirs.createTempDirectory("graft-events").toString
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .write.mode("overwrite").parquet(evDir)
     val events = spark.readStream
