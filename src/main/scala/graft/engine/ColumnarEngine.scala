@@ -73,9 +73,10 @@ object ColumnSpec {
   * stages one block container, and the job commit publishes their
   * manifests (commit markers) and one OCC index version.
   *
-  * Decode job: `binaryFile` scan of containers → per-chunk codec decode →
-  * typed rows, with each chunk's sha256-of-row-sha256s digest recomputed
-  * and checked against the stored digest (per-row content integrity).
+  * Decode job: the `format("graft")` scan → per-chunk codec decode
+  * straight into column vectors → typed rows, with each chunk's
+  * sha256-of-row-sha256s digest recomputed and checked against the
+  * stored digest (per-row content integrity).
   */
 object ColumnarEngine {
 
@@ -654,7 +655,7 @@ object ColumnarEngine {
       }
 
     /** Flush, write the container, and build its manifest. Publication
-      * is the caller's: the DSv2 job commit ([[graft.sources.GraftBatchWrite]])
+      * is the caller's: the DSv2 job commit ([[graft.sources.GraftWrite]])
       * or a maintenance swap, so a failed or killed write never exposes
       * a partial table.
       */
@@ -818,65 +819,18 @@ object ColumnarEngine {
 
   // ---------------------------------------------------------------- decode
 
-  /** Decode all COMMITTED containers back to typed rows over the shared
-    * streaming core ([[ContainerInput]]/[[ContainerFormat]], the same
-    * parse the DSv2 readers use): chunk-at-a-time per-block reads (a
-    * task never materializes a whole container), per-block CRC32C
-    * verification against the manifest chunk index, and every chunk's
-    * per-row-content sha256 digest recomputed and enforced.
-    *
-    * Builds [[DerivedRow]]s straight from the decoded column arrays —
-    * for a FULL typed decode that is ~1.7x faster than routing through
-    * the DSv2 scan, whose InternalRow boundary re-encodes every string
-    * (String -> UTF8String -> String). Projected/filtered reads should
-    * use [[readColumns]] / `spark.read.format("graft")`, where pruning
-    * and pushdown win instead.
+  /** All COMMITTED rows of the engine table at `outDir` as typed rows:
+    * the `graft` DSv2 scan read as [[DerivedRow]]s, so a full decode is
+    * planned, read and verified exactly as every other query is
+    * (chunk-granular splits, per-block CRC32C checks, and every chunk's
+    * per-row-content sha256 digest, since the typed rows read
+    * `content`). Projected/filtered reads should use [[readColumns]] /
+    * `spark.read.format("graft")` directly, where pruning and pushdown
+    * skip blocks and chunks.
     */
   def decode(spark: SparkSession, outDir: String): Dataset[DerivedRow] = {
     import spark.implicits._
-    val confKv = ContainerIO.confSnapshot(spark)
-    // CHUNK-granular task planning (the DSv2 scan's split shape): one
-    // task per indexed chunk, so a single giant container decodes across
-    // tasks instead of serializing on one (round 5 planned one task per
-    // CONTAINER here, which was right only when containers ≈ partitions).
-    val planConf = ContainerIO.confFrom(confKv)
-    val tasks = Manifests.readCommitted(planConf, outDir)
-      .filter(_.rows > 0)
-      // a full decode touches every container anyway, so hydrating each
-      // index-elided manifest's chunk detail (one marker read per
-      // container) is proportional to the work, and chunk-granular task
-      // planning needs it
-      .map(Manifests.loadChunkIndex(planConf, outDir, _))
-      .flatMap { m =>
-        val file = m.blockFile(outDir)
-        m.chunkIndex.map(cs => (file, cs))
-      }
-    val needed = Lane.ofSpecs(DefaultSchema)
-    // parallelize places exactly one chunk task per partition WITHOUT
-    // an exchange (createDataset + repartition paid a full shuffle
-    // stage of the task descriptors on every decode job — measured
-    // ~0.1 s/job of pure scheduling at n=8)
-    val rdd = spark.sparkContext
-      .parallelize(tasks, math.max(tasks.size, 1))
-      .flatMap { case (file, cs) =>
-        val (in, fileLen) =
-          ContainerFormat.open(file, ContainerIO.confFrom(confKv))
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => in.close()))
-        ContainerFormat.chunks(in, fileLen, file, Seq(cs), needed).flatMap { chunk =>
-          ContainerFormat.verifyContentDigest(chunk)
-          // typed rows need Java Strings: materialize each column once
-          val Seq(repo, pth, cmt, lng, content) =
-            stringColumns.map(chunk.col(_).bytes.strings)
-          val Seq(lenC, hash, ord, repoC, langC, pathC) =
-            longColumns.map(chunk.col(_).longs)
-          (0 until chunk.rows).iterator.map { j =>
-            DerivedRow(repo(j), pth(j), cmt(j), lng(j), content(j), lenC(j),
-              hash(j), ord(j), repoC(j), langC(j), pathC(j))
-          }
-        }
-      }
-    spark.createDataset(rdd)
+    spark.read.format("graft").load(outDir).as[DerivedRow]
   }
 
   /** Columnar projection read: decode ONLY the requested columns. Routed

@@ -193,11 +193,11 @@ private[graft] trait ChunkRange {
   def crcs: Map[String, Long]
 }
 
-/** Streaming parse of the container format, shared by every read of a
-  * container: the DSv2 reader, the engine decode, and maintenance
-  * rewrites. A container is a prelude (magic + part id) followed by
-  * chunks; reads address chunks only through the byte ranges of the
-  * manifest's chunk index, so the prelude is written but never parsed.
+/** Streaming parse of the container format, behind the one container
+  * read ([[ChunkCursor]]). A container is a prelude (magic + part id)
+  * followed by chunks; reads address chunks only through the byte
+  * ranges of the manifest's chunk index, so the prelude is written but
+  * never parsed.
   */
 private[graft] object ContainerFormat {
 
@@ -301,15 +301,13 @@ private[graft] object ContainerFormat {
   }
 
   /** Recompute the chunk's per-row digest-column sha256 digest and
-    * enforce it against the stored one (the engine decode contract,
-    * available to every DSv2 read that selects the digest column —
-    * `content` for the engine schema, the manifest's `digestCol` for
-    * generic tables).
+    * enforce it against the stored one (every read that decodes the
+    * manifest's `digestCol` — `content` for the engine schema).
     */
-  def verifyContentDigest(chunk: DecodedChunk, digestCol: String = "content"): Unit = {
+  def verifyDigest(chunk: DecodedChunk, digestCol: String): Unit = {
     val col = chunk.col(digestCol)
     require(col != null && col.lane == Lane.Bytes,
-      s"verifyContentDigest needs the $digestCol column")
+      s"digest verification needs the $digestCol column")
     val content = col.bytes
     val sha = java.security.MessageDigest.getInstance("SHA-256")
     val chunkSha = java.security.MessageDigest.getInstance("SHA-256")
@@ -325,4 +323,67 @@ private[graft] object ContainerFormat {
     require(java.util.Arrays.equals(chunkSha.digest(), chunk.storedDigest),
       "chunk content digest mismatch: decoded rows differ from encoded rows")
   }
+}
+
+/** The one stream of a container's chunks, behind every container read:
+  * the DSv2 reader (hence the engine decode) and the maintenance
+  * rewrites. Per indexed chunk of `file`, the `needed` column blocks
+  * (current name -> lane) are read (bounded by one block at a time) and
+  * decoded, the rest are position advances; columns are re-keyed from
+  * their stored labels to the current names (`renames`: current ->
+  * stored); reads that decode `digestCol` verify the chunk digest
+  * ("" = never verify).
+  */
+private[graft] final class ChunkCursor(
+    file: String, chunks: Seq[ChunkRange], needed: Map[String, Lane],
+    conf: org.apache.hadoop.conf.Configuration, digestCol: String,
+    renames: Map[String, String] = Map.empty) {
+
+  private val verify =
+    digestCol.nonEmpty && needed.get(digestCol).contains(Lane.Bytes)
+
+  /** Re-key a decoded chunk's columns stored -> current. Two-phase
+    * (remove all, then insert) so a SWAP rename (a<->b across two
+    * renames) can't clobber one side mid-move.
+    */
+  private def rekey(c: DecodedChunk): DecodedChunk = {
+    val moved = new java.util.HashMap[String, DecodedColumn]()
+    renames.foreach { case (cur, stored) =>
+      if (cur != stored) {
+        val v = c.cols.remove(stored)
+        if (v != null) moved.put(cur, v)
+      }
+    }
+    c.cols.putAll(moved)
+    c
+  }
+
+  /** A read planned from a prior index snapshot can race an overwrite,
+    * epoch replay, or compaction that deletes the old generation's block
+    * files after its new snapshot goes live. That is a CONTROLLED
+    * condition — the table is fine, this reader's snapshot is stale —
+    * so it surfaces as a retriable snapshot-superseded error whose cause
+    * is the `FileNotFoundException` (a rewrite maps a vanished source to
+    * its conflict by that cause).
+    */
+  private val (in, fileLen) =
+    try ContainerFormat.open(file, conf)
+    catch { case e: java.io.FileNotFoundException =>
+      throw new IllegalStateException(
+        s"graft snapshot superseded: $file was removed by a concurrent " +
+          "overwrite/compaction after this scan was planned — re-run the query", e)
+    }
+
+  val chunkIter: Iterator[DecodedChunk] = {
+    // the caller works in CURRENT names, this container's blocks are
+    // keyed by its stored names — request stored, then re-key each
+    // decoded chunk back to current before anything row-level runs
+    val stored = needed.map { case (c, l) => renames.getOrElse(c, c) -> l }
+    val raw0 = ContainerFormat.chunks(in, fileLen, file, chunks, stored)
+    val raw = if (renames.isEmpty) raw0 else raw0.map(rekey)
+    if (!verify) raw
+    else raw.map { c => ContainerFormat.verifyDigest(c, digestCol); c }
+  }
+
+  def close(): Unit = in.close()
 }

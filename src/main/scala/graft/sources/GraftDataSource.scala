@@ -10,12 +10,13 @@ import org.apache.spark.sql.connector.expressions.{Expression, NamedReference, T
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.{ChunkStats, ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, DecodedChunk, DecodedColumn, DerivedRow, Kinds, Lane, Manifests, Stored, TableManifest}
+import graft.engine.{ChunkCursor, ChunkStats, ColumnarEngine, ColumnSpec, ContainerIO, DecodedChunk, DerivedRow, Kinds, Lane, Manifests, Stored, TableManifest}
 
 /** `spark.read.format("graft")` / `df.write.format("graft")` — the
   * engine's container+manifest layout as a DataSource V2 table.
@@ -642,11 +643,10 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
   override def build(): Scan = {
     val maxSplit = Option(options.get("maxSplitBytes")).map(_.toLong)
       .getOrElse(GraftDataSource.DefaultMaxSplitBytes)
-    val verify = Option(options.get("verifyContent")).forall(_.toBoolean)
     aggs match {
       case Some(specs) => new GraftAggScan(snap, cols, specs)
       case None => new GraftScan(snap, tableSchema.fieldNames.toSeq,
-        required, pushed, limit, maxSplit, verify, layout)
+        required, pushed, limit, maxSplit, layout)
     }
   }
 }
@@ -777,7 +777,7 @@ case class GraftInputPartition(file: String, chunks: Seq[ChunkSpec],
 class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
                                   required: StructType,
                                   initialPushed: Array[(Filter, Pred)], limit: Int,
-                                  maxSplitBytes: Long, verifyContent: Boolean,
+                                  maxSplitBytes: Long,
                                   layout: Map[String, ColumnSpec])
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
@@ -869,8 +869,7 @@ class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
       maxSplitBytes, required.fieldNames.toSet ++ preds.map(_.col))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, preds, layout, snap.confKv, limit,
-      verifyContent)
+    new GraftReaderFactory(required, preds, layout, snap.confKv, limit)
 
   /** `readStream.format("graft")` — micro-batch TAILING of this table:
     * each trigger reads exactly the manifests committed since the last
@@ -884,14 +883,13 @@ class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
       "graft time travel (versionAsOf/timestampAsOf) is batch-only; a " +
         "stream tails the live table")
     new GraftMicroBatchStream(snap.path, checkpointLocation, required,
-      preds, snap.confKv, maxSplitBytes, verifyContent, layout, visNames)
+      preds, snap.confKv, maxSplitBytes, layout, visNames)
   }
 }
 
 class GraftReaderFactory(required: StructType, preds: Array[Pred],
                          layout: Map[String, ColumnSpec],
-                         confKv: Map[String, String], limit: Int,
-                         verifyContent: Boolean)
+                         confKv: Map[String, String], limit: Int)
     extends PartitionReaderFactory {
 
   /** The decoded data is already columnar (one array per block) — every
@@ -907,66 +905,7 @@ class GraftReaderFactory(required: StructType, preds: Array[Pred],
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition],
-      required, preds, layout, confKv, limit, verifyContent)
-}
-
-/** Streaming chunk iteration for the reader: per chunk, `needed` column
-  * blocks (current name -> lane) are read (bounded by one block at a
-  * time) and decoded, the rest are position advances; reads that decode
-  * `digestCol` verify the chunk digest ("" = never verify).
-  */
-private[sources] final class ChunkCursor(
-    file: String, chunks: Seq[ChunkSpec], needed: Map[String, Lane],
-    confKv: Map[String, String], digestCol: String,
-    renames: Map[String, String]) {
-
-  private val verify =
-    digestCol.nonEmpty && needed.get(digestCol).contains(Lane.Bytes)
-
-  /** Re-key a decoded chunk's columns stored -> current. Two-phase
-    * (remove all, then insert) so a SWAP rename (a<->b across two
-    * renames) can't clobber one side mid-move.
-    */
-  private def rekey(c: DecodedChunk): DecodedChunk = {
-    val moved = new java.util.HashMap[String, DecodedColumn]()
-    renames.foreach { case (cur, stored) =>
-      if (cur != stored) {
-        val v = c.cols.remove(stored)
-        if (v != null) moved.put(cur, v)
-      }
-    }
-    c.cols.putAll(moved)
-    c
-  }
-
-  /** A scan planned from a prior index snapshot can race an overwrite,
-    * epoch replay, or compaction that deletes the old generation's block
-    * files after its new snapshot goes live. That is a CONTROLLED
-    * condition — the table is fine, this reader's snapshot is stale —
-    * so it must surface as a retriable snapshot-superseded error, never
-    * a raw FileNotFoundException (every other corruption path here is
-    * require-guarded the same way).
-    */
-  private val (in, fileLen) =
-    try ContainerFormat.open(file, ContainerIO.confFrom(confKv))
-    catch { case _: java.io.FileNotFoundException =>
-      throw new IllegalStateException(
-        s"graft snapshot superseded: $file was removed by a concurrent " +
-          "overwrite/compaction after this scan was planned — re-run the query")
-    }
-
-  val chunkIter: Iterator[DecodedChunk] = {
-    // rename support: the query works in CURRENT names, this container's
-    // blocks are keyed by its stored names — request stored, then re-key
-    // each decoded chunk back to current before anything row-level runs
-    val stored = needed.map { case (c, l) => renames.getOrElse(c, c) -> l }
-    val raw0 = ContainerFormat.chunks(in, fileLen, file, chunks, stored)
-    val raw = if (renames.isEmpty) raw0 else raw0.map(rekey)
-    if (!verify) raw
-    else raw.map { c => ContainerFormat.verifyContentDigest(c, digestCol); c }
-  }
-
-  def close(): Unit = in.close()
+      required, preds, layout, confKv, limit)
 }
 
 /** The DSv2 reader: one `ColumnarBatch` per (filtered) chunk, filled
@@ -977,7 +916,7 @@ class GraftColumnarReader(p: GraftInputPartition, required: StructType,
                           preds: Array[Pred],
                           layout: Map[String, ColumnSpec],
                           confKv: Map[String, String],
-                          limit: Int, verifyContent: Boolean)
+                          limit: Int)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
@@ -993,7 +932,7 @@ class GraftColumnarReader(p: GraftInputPartition, required: StructType,
   private val cursor = new ChunkCursor(p.file, p.chunks,
     ((required.fieldNames ++ effPreds.map(_.col)).toSet -- p.absentCols)
       .map(c => c -> layout(c).lane).toMap,
-    confKv, if (verifyContent) p.digestCol else "", p.renames)
+    ContainerIO.confFrom(confKv), p.digestCol, p.renames)
   private val rowPreds = GraftDataSource.compileFilters(effPreds, layout)
   private val fields = required.fields
   private val specs: Array[ColumnSpec] = fields.map(f => layout(f.name))
@@ -1091,7 +1030,7 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
                             required: StructType,
                             preds: Array[Pred],
                             confKv: Map[String, String],
-                            maxSplitBytes: Long, verifyContent: Boolean,
+                            maxSplitBytes: Long,
                             layout: Map[String, ColumnSpec],
                             visNames: Seq[String] = Nil)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
@@ -1266,8 +1205,7 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, preds, layout, confKv, Int.MaxValue,
-      verifyContent)
+    new GraftReaderFactory(required, preds, layout, confKv, Int.MaxValue)
 
   /** Fold per-batch seen-log entries at or below the COMMITTED offset
     * into one `<end>.compact.json` once [[GraftMicroBatchStream
@@ -1473,22 +1411,50 @@ class GraftWrite(path: String, truncate: Boolean, epoch: String,
     ContainerIO.confSnapshot(conf)
   }
 
-  override def toBatch: BatchWrite =
-    new GraftBatchWrite(path, truncate, epoch, prepare(), chunkRows,
-      writeSchema, partBy, fullCols)
+  private def factory(): GraftWriterFactory =
+    new GraftWriterFactory(path, epoch, prepare(), chunkRows, writeSchema,
+      partBy, fullCols)
+
+  /** Job-level commit: tasks publish only attempt-qualified CONTAINERS
+    * (invisible to readers — no manifest); this commit writes every
+    * manifest plus a new OCC-committed `_manifest-index.v<N>.json`
+    * snapshot, and — for overwrite — deletes the old generation only
+    * AFTER the new one is live. A failed/killed job leaves the previous
+    * table fully intact; `abort` garbage-collects this epoch's staged
+    * containers.
+    */
+  override def toBatch: BatchWrite = {
+    val f = factory()
+    new BatchWrite {
+      override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = f
+      override def commit(messages: Array[WriterCommitMessage]): Unit =
+        GraftCommits.publish(f.confKv, path, truncate, messages)
+      override def abort(messages: Array[WriterCommitMessage]): Unit =
+        GraftCommits.dropStaged(f.confKv, path, epoch)
+    }
+  }
 
   /** `writeStream.format("graft")` — append-only micro-batch sink. Each
-    * micro-batch commits as one epoch (`<queryId>-e<epochId>`), so a
-    * replayed batch after a failure re-stages identical containers under
-    * identical names (first-commit-wins) and re-publishes the same
-    * manifests: the sink is idempotent per epoch, which with the
-    * checkpointed epoch id gives effective exactly-once table contents.
+    * micro-batch commits as one epoch (`<queryId>-e<epochId>`) through
+    * the same staged containers + manifest publication as a batch
+    * append, so a replayed batch after a failure re-stages identical
+    * containers under identical names (first-commit-wins) and
+    * re-publishes the same manifests: the sink is idempotent per epoch,
+    * which with the checkpointed epoch id gives effective exactly-once
+    * table contents.
     */
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+  override def toStreaming: StreamingWrite = {
     require(!truncate,
       "graft streaming sink is append-only (outputMode(\"append\"))")
-    new GraftStreamingWrite(path, epoch, prepare(), chunkRows, writeSchema,
-      partBy, fullCols)
+    val f = factory()
+    new StreamingWrite {
+      override def createStreamingWriterFactory(
+          info: PhysicalWriteInfo): StreamingDataWriterFactory = f
+      override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+        GraftCommits.publish(f.confKv, path, truncate = false, messages)
+      override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+        GraftCommits.dropStaged(f.confKv, path, f.epochOf(epochId))
+    }
   }
 }
 
@@ -1698,82 +1664,35 @@ private[sources] object GraftCommits {
   }
 }
 
-/** Job-level commit: tasks publish only attempt-qualified CONTAINERS
-  * (invisible to readers — no manifest); this commit writes every
-  * manifest plus a new OCC-committed `_manifest-index.v<N>.json`
-  * snapshot, and — for overwrite — deletes the old generation only
-  * AFTER the new one is live. A failed/killed job leaves the previous
-  * table fully intact; `abort` garbage-collects this epoch's staged
-  * containers.
+/** The task side of every graft write, batch and streaming alike:
+  * each task stages one attempt-qualified container through a
+  * [[GraftDataWriter]]. A batch task writes under the job's `epoch`; a
+  * streaming task under its micro-batch's epoch, `<epoch>-e<epochId>`.
   */
-class GraftBatchWrite(path: String, truncate: Boolean, epoch: String,
-                      confKv: Map[String, String], chunkRows: Int,
-                      writeSchema: StructType,
-                      partBy: Seq[GraftDataSource.PartTransform],
-                      fullCols: Seq[(String, Int)])
-    extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftWriterFactory(path, epoch, confKv, chunkRows, writeSchema, partBy,
-      fullCols)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    GraftCommits.publish(confKv, path, truncate, messages)
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftCommits.dropStaged(confKv, path, epoch)
-}
-
-/** Micro-batch streaming sink: every epoch appends via the same staged
-  * containers + manifest publication as a batch append.
-  */
-class GraftStreamingWrite(path: String, queryEpoch: String,
-                          confKv: Map[String, String], chunkRows: Int,
-                          writeSchema: StructType,
-                          partBy: Seq[GraftDataSource.PartTransform],
-                          fullCols: Seq[(String, Int)])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
-
-  private def epochOf(epochId: Long) = s"$queryEpoch-e$epochId"
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftStreamingWriterFactory(path, queryEpoch, confKv, chunkRows,
-      writeSchema, partBy, fullCols)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftCommits.publish(confKv, path, truncate = false, messages)
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftCommits.dropStaged(confKv, path, epochOf(epochId))
-}
-
-class GraftStreamingWriterFactory(path: String, queryEpoch: String,
-                                  confKv: Map[String, String], chunkRows: Int,
-                                  writeSchema: StructType,
-                                  partBy: Seq[GraftDataSource.PartTransform],
-                                  fullCols: Seq[(String, Int)])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(path, partitionId, s"$queryEpoch-e$epochId", confKv,
-      chunkRows, taskId, writeSchema, partBy, fullCols)
-}
-
 class GraftWriterFactory(path: String, epoch: String,
-                         confKv: Map[String, String], chunkRows: Int,
+                         val confKv: Map[String, String], chunkRows: Int,
                          writeSchema: StructType,
                          partBy: Seq[GraftDataSource.PartTransform],
                          fullCols: Seq[(String, Int)])
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(path, partitionId, epoch, confKv, chunkRows, taskId,
+    extends DataWriterFactory with StreamingDataWriterFactory {
+  def epochOf(epochId: Long): String = s"$epoch-e$epochId"
+
+  private def writer(partitionId: Int, taskId: Long, taskEpoch: String) =
+    new GraftDataWriter(path, partitionId, taskEpoch, confKv, chunkRows, taskId,
       writeSchema, partBy, fullCols)
+
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    writer(partitionId, taskId, epoch)
+
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    writer(partitionId, taskId, epochOf(epochId))
 }
 
 /** Streams rows through the engine's [[ColumnarEngine.PartitionEncoder]]:
   * chunk-bounded memory; the container written in `commit()` stays
-  * INVISIBLE until [[GraftBatchWrite.commit]] publishes the manifests.
+  * INVISIBLE until the job commit ([[GraftWrite.toBatch]]) publishes the
+  * manifests.
   *
   * The staged name is ATTEMPT-qualified (`<epoch>-<part>-a<taskId>`): a
   * retry or speculative attempt stages its own container and its commit

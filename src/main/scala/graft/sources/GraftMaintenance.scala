@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-import graft.engine.{ColumnarEngine, ColumnSpec, ContainerFormat, ContainerIO, DecodedChunk, Kinds, Lane, Manifests, TableManifest}
+import graft.engine.{ChunkCursor, ColumnarEngine, ColumnSpec, ContainerIO, DecodedChunk, Kinds, Lane, Manifests, TableManifest}
 
 /** Table maintenance for graft tables — the operational side a
   * long-running streaming sink needs: every micro-batch epoch commits
@@ -862,9 +862,10 @@ object GraftMaintenance {
       ContainerIO.confFrom(ContainerIO.confSnapshot(spark)), path,
       retainLast, olderThanMs)
 
-  /** The one container stream of every rewrite: `ms`' containers in
-    * turn, each chunk over the container's live lanes (dropped positions
-    * hold no data), CRC + content-digest verified, handed to `rows` — the
+  /** The rewrite of one bin: `ms`' containers in turn through the one
+    * chunk stream ([[ChunkCursor]]), each chunk over the container's live
+    * lanes (dropped positions hold no data), CRC + content-digest
+    * verified, handed to `rows` — the
     * operation's row loop, which re-encodes into a fresh encoder of
     * `schema` and returns how many rows it changed. The staged manifest
     * is unpublished and records the consumed epochs as `ancestors`. Task
@@ -887,15 +888,10 @@ object GraftMaintenance {
         ms.flatMap(_.ancestors))
     var changed = 0L
     ms.foreach { m =>
-      val file = m.blockFile(path)
-      val needed = Lane.ofSpecs(GraftDataSource.specsOfManifest(m))
-      val (in, fileLen) = ContainerFormat.open(file, conf)
-      try {
-        ContainerFormat.chunks(in, fileLen, file, m.chunkIndex, needed).foreach { chunk =>
-          if (m.digestCol.nonEmpty) ContainerFormat.verifyContentDigest(chunk, m.digestCol)
-          changed += rows(enc, chunk)
-        }
-      } finally in.close()
+      val cursor = new ChunkCursor(m.blockFile(path), m.chunkIndex,
+        Lane.ofSpecs(GraftDataSource.specsOfManifest(m)), conf, m.digestCol)
+      try cursor.chunkIter.foreach(chunk => changed += rows(enc, chunk))
+      finally cursor.close()
     }
     // partition-transform metadata survives compaction CONSERVATIVELY:
     // identical declared transforms across all sources are kept, and a

@@ -33,7 +33,7 @@ class FuzzSpec extends AnyFunSuite {
     */
   private def parseContainer(bytes: Array[Byte], ranges: Seq[ChunkRange]): Unit =
     ContainerFormat.chunks(memStream(bytes), bytes.length.toLong, "fuzz", ranges,
-      engineLanes).foreach(ContainerFormat.verifyContentDigest(_))
+      engineLanes).foreach(ContainerFormat.verifyDigest(_, "content"))
 
   /** Each committed container's chunk ranges, by block file name, taken
     * from the table's own manifests — with NO block CRCs: these targets

@@ -161,16 +161,16 @@ class EngineSpec extends AnyFunSuite {
       s"unexpected failure shape: $ex")
   }
 
-  test("decode plans one task per chunk: a single giant container parallelizes") {
+  test("a single giant container splits into one scan task per chunk; decode reads it back") {
     val dir = tempDir("chunksplit")
     val conf = spark.sparkContext.hadoopConfiguration
     ContainerIO.mkdirs(conf, s"$dir/blocks")
     ContainerIO.mkdirs(conf, s"$dir/manifests")
     val rows = ColumnarEngine.derive(SourceTable.synthesize(spark, 400, 4))
       .collect().sortBy(_.path)
-    // ONE container, chunked small: the decode planner must split it
-    // across tasks like the DSv2 scan does (round-5 nit: one task per
-    // container serialized a giant container on a single thread)
+    // ONE container, chunked small: the scan must split it across tasks
+    // (one task per container would serialize a giant container on a
+    // single thread)
     val enc = new ColumnarEngine.PartitionEncoder(0, dir, conf, chunkRowsCap = 50)
     rows.foreach { r =>
       Seq(r.repo, r.path, r.commit, r.lang, r.content).zipWithIndex.foreach {
@@ -191,9 +191,10 @@ class EngineSpec extends AnyFunSuite {
       .map(b => f"$b%02x").mkString ===
       "2129aa98420bbc924320571208d9a383703355474339370559757beafbb798b0",
       "PartitionEncoder container bytes changed")
+    val scan = spark.read.format("graft").option("maxSplitBytes", "1").load(dir)
+    assert(scan.rdd.getNumPartitions === 8,
+      "one giant container must read across one task per chunk")
     val decoded = ColumnarEngine.decode(spark, dir)
-    assert(decoded.rdd.getNumPartitions === 8,
-      "one giant container must decode across one task per chunk")
     assert(decoded.count() === 400)
     assert(decoded.collect().sortBy(_.path).toSeq === rows.toSeq)
   }

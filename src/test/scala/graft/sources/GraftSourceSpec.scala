@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThan, LessThan}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{ColumnarEngine, ContainerIO, Lane, SourceTable, SparkTestSession, TestDirs}
+import graft.engine.{ChunkCursor, ColumnarEngine, ContainerIO, Lane, SourceTable, SparkTestSession, TestDirs}
 
 class GraftSourceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -33,9 +33,13 @@ class GraftSourceSpec extends AnyFunSuite {
     m.chunkIndex.map(c => ChunkSpec(c.offset, c.length, c.rows, Map.empty))
   }
 
+  /** The rows written to [[dir]]: the reference every read of it is
+    * checked against.
+    */
+  private lazy val derived = ColumnarEngine.derive(SourceTable.synthesize(spark, 600, 3))
+
   private lazy val dir = {
     val d = TestDirs.createTempDirectory("graft-dsv2").toString
-    val derived = ColumnarEngine.derive(SourceTable.synthesize(spark, 600, 3))
     // range layout on hash64 -> disjoint per-container zone maps, so the
     // skipping tests below can prove files were never opened
     derived.repartitionByRange(4, col("hash64"))
@@ -45,7 +49,6 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("DSv2 round trip: write with format(\"graft\"), read back identical") {
     import spark.implicits._
-    val derived = ColumnarEngine.derive(SourceTable.synthesize(spark, 600, 3))
     val back = spark.read.format("graft").load(dir)
     assert(back.count() === 600)
     assert(back.as[graft.engine.DerivedRow].except(
@@ -60,13 +63,13 @@ class GraftSourceSpec extends AnyFunSuite {
     val scan = graftScan(df)
     assert(scan.readSchema().fieldNames.toSet === Set("lang", "len_content"),
       s"scan must read only the projected columns, got ${scan.description()}")
-    // aggregate over the pruned read matches the full decode
+    // aggregate over the pruned read matches the written rows
     val viaSource = df.groupBy("lang").agg(sum("len_content").as("s"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val viaDecode = ColumnarEngine.decode(spark, dir).toDF()
+    val written = derived.toDF()
       .groupBy("lang").agg(sum("len_content").as("s"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(viaSource === viaDecode)
+    assert(viaSource === written)
   }
 
   test("filter pushdown: zone maps skip whole containers; results stay exact") {
@@ -131,7 +134,7 @@ class GraftSourceSpec extends AnyFunSuite {
     assert(scans.nonEmpty && scans.head.isInstanceOf[GraftAggScan],
       "ungrouped COUNT/MIN/MAX must plan the manifest-answered scan:\n" +
         df.queryExecution.executedPlan.toString.take(800))
-    val want = ColumnarEngine.decode(spark, dir).toDF()
+    val want = derived.toDF()
       .agg(count(lit(1)), min("hash64"), max("len_content")).collect()(0)
     assert(got.getLong(0) === want.getLong(0))
     assert(got.getLong(1) === want.getLong(1))
@@ -146,7 +149,7 @@ class GraftSourceSpec extends AnyFunSuite {
       "grouped aggregates must not be manifest-answered")
     val filtered = spark.read.format("graft").load(dir)
       .filter(col("hash64") > 0L).agg(count(lit(1))).collect()(0).getLong(0)
-    val filteredWant = ColumnarEngine.decode(spark, dir).toDF()
+    val filteredWant = derived.toDF()
       .filter(col("hash64") > 0L).count()
     assert(filtered === filteredWant, "filtered count must bypass the manifest path")
   }
@@ -804,7 +807,7 @@ class GraftSourceSpec extends AnyFunSuite {
     val confKv = graft.engine.ContainerIO.confSnapshot(spark)
     val (craftedFile, craftedChunks) = crafted("crafted", block)
     val cursor = new ChunkCursor(craftedFile, craftedChunks,
-      Map("x" -> Lane.Ints), confKv, digestCol = "", renames = Map.empty)
+      Map("x" -> Lane.Ints), ContainerIO.confFrom(confKv), digestCol = "")
     try intercept[graft.core.DecodeError] { cursor.chunkIter.next() }
     finally cursor.close()
     // lane mismatch: a valid kind-2 block read as a BIGINT column fails
@@ -816,7 +819,7 @@ class GraftSourceSpec extends AnyFunSuite {
     val reader = new GraftColumnarReader(
       GraftInputPartition(mismatchFile, mismatchChunks, digestCol = ""),
       asLong, Array.empty, GraftDataSource.layoutOf(asLong), confKv,
-      Int.MaxValue, verifyContent = false)
+      Int.MaxValue)
     val e = try intercept[IllegalArgumentException] { reader.next() }
       finally reader.close()
     assert(e.getMessage.contains("missing/short long column x"), e.getMessage)
@@ -849,7 +852,7 @@ class GraftSourceSpec extends AnyFunSuite {
       val r = new GraftColumnarReader(
         GraftInputPartition(tmp.toString, chunks, digestCol = ""), schema,
         Array.empty, GraftDataSource.layoutOf(schema), Map.empty,
-        Int.MaxValue, verifyContent = false)
+        Int.MaxValue)
       try while (r.next()) r.get() finally r.close()
     }
     def controlled(ctx: String)(f: => Any): Unit =
@@ -897,8 +900,7 @@ class GraftSourceSpec extends AnyFunSuite {
         // direct chunk reader (no manifest CRCs shielding the flip):
         // every outcome must be correct data or a typed decode failure
         val cursor = new ChunkCursor(tmp.toString, chunks, Map("n" -> Lane.Ints),
-          graft.engine.ContainerIO.confSnapshot(spark), digestCol = "",
-          renames = Map.empty)
+          ContainerIO.localConf(), digestCol = "")
         try while (cursor.chunkIter.hasNext) cursor.chunkIter.next()
         finally cursor.close()
       } catch {
@@ -1219,8 +1221,10 @@ class GraftSourceSpec extends AnyFunSuite {
         java.nio.file.Files.write(p, root.toString.getBytes("UTF-8"))
       }
       if (field == "chunkIndex") {
+        // an intact index answers count() from its summaries (no chunk
+        // index read), so both reads decode rows here
         rejects(field)(spark.read.format("graft").load(d2).collect())
-        rejects(field)(ColumnarEngine.decode(spark, d2).count())
+        rejects(field)(ColumnarEngine.decode(spark, d2).collect())
       }
       dropIndex(d2)
       rejects(field)(spark.read.format("graft").load(d2).count())

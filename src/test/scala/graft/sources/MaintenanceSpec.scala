@@ -593,7 +593,7 @@ class MaintenanceSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     def mkStream() = new GraftMicroBatchStream(d, ckpt, schema, Array.empty,
-      confKv, 128L << 20, true, GraftDataSource.layoutOf(schema))
+      confKv, 128L << 20, GraftDataSource.layoutOf(schema))
     val stream = mkStream()
     var last = stream.initialOffset()
     for (w <- 0 until 100) {
@@ -692,7 +692,7 @@ class MaintenanceSpec extends AnyFunSuite {
       StructField("tag", StringType, nullable = false)))
     val confKv = ContainerIO.confSnapshot(spark)
     def mkStream() = new GraftMicroBatchStream(d, ckpt, schema, Array.empty,
-      confKv, 128L << 20, true, GraftDataSource.layoutOf(schema))
+      confKv, 128L << 20, GraftDataSource.layoutOf(schema))
     val s1 = mkStream()
     val off0 = s1.initialOffset()
     Seq((1L, "a"), (2L, "b")).toDF("id", "tag").coalesce(1)
@@ -860,6 +860,58 @@ class MaintenanceSpec extends AnyFunSuite {
       // the surviving container is intact (its zone map skips the other)
       assert(spark.read.format("graft").load(d).filter(col("id") >= 50)
         .count() === 50, op)
+    }
+  }
+
+  /** Flip one byte in the middle of column `col`'s block in the first
+    * indexed chunk of container `m` of table `d`.
+    */
+  private def corruptBlock(d: String, m: graft.engine.TableManifest, col: String): Unit = {
+    val ch = Manifests.loadChunkIndex(ContainerIO.localConf(), d, m).chunkIndex.head
+    val f = java.nio.file.Paths.get(m.blockFile(d))
+    val bytes = java.nio.file.Files.readAllBytes(f)
+    val r = new graft.core.BlockReader(bytes, ch.offset.toInt, (ch.offset + ch.length).toInt)
+    r.getVarint() // chunk rows
+    var at = -1
+    (0 until r.getVarint().toInt).foreach { _ =>
+      val name = new String(r.getBytes(r.getVarint().toInt), "UTF-8")
+      r.getByte() // kind
+      val len = r.getVarint().toInt
+      if (name == col) at = r.position + len / 2
+      r.skip(len)
+    }
+    assert(at >= 0, s"no $col block in the first chunk of ${m.name}")
+    bytes(at) = (bytes(at) ^ 0x5a).toByte
+    java.nio.file.Files.write(f, bytes)
+  }
+
+  test("rewrites verify what they read: a corrupt source block fails compact " +
+    "and delete, and nothing commits") {
+    import spark.implicits._
+    val conf = ContainerIO.localConf()
+    val ops: Seq[(String, String => Any)] = Seq(
+      "compact" -> (d => GraftMaintenance.compact(spark, d)),
+      "delete" -> (d => GraftMaintenance.delete(spark, d, "id = 3")))
+    ops.foreach { case (op, run) =>
+      val d = tempDir(s"corrupt-$op")
+      Seq(0 until 50, 50 until 100).foreach { ids =>
+        ids.map(i => (i.toLong, s"document $i of the corrupt-$op table")).toDF("id", "content")
+          .coalesce(1).write.format("graft").mode("append").save(d)
+      }
+      // the container of ids 0..49 (the first commit) gets one flipped
+      // byte inside its content block
+      corruptBlock(d, Manifests.readCommitted(conf, d).minBy(_.commitId), "content")
+      def committed() = (
+        ContainerIO.listNames(conf, d).filter(_.startsWith("_manifest-index")).toSet,
+        ContainerIO.listNames(conf, s"$d/manifests").toSet,
+        Manifests.readCommitted(conf, d).map(_.name).toSet)
+      val before = committed()
+      val e = intercept[Exception](run(d))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).mkString("\n")
+      assert(msgs.contains("block CRC mismatch for column content") ||
+        msgs.contains("chunk content digest mismatch"), s"$op failed with: $msgs")
+      assert(committed() === before, s"the failed $op must commit nothing")
     }
   }
 }
