@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarMap, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.codecs.{BytesCodecs, DoubleBits, FloatBits, IntCodecs, LongCodecs, StringCodecs}
@@ -92,14 +93,27 @@ private[graft] sealed abstract class Kind(val id: Int, val sparkType: DataType,
     case Stored.FloatArray => BytesCodecs.decodeFloats(block, off, block.length)
   }
 
-  /** Copy the selected rows `sel(0 until m)` of a decoded column into a
-    * vector of [[dataType]]; NULL rows become vector nulls, their
-    * placeholder values never surface. Called once per column per batch;
-    * the vector's static type is the final class, so its puts bind
-    * directly inside the per-row loops.
+  /** The selected rows `sel(0 until m)` of a decoded column as one
+    * batch's vector of [[dataType]]; NULL rows are vector nulls, their
+    * placeholder values never surface. Byte-slice lanes (STRING, BINARY)
+    * are read in place ([[SliceVector]]); every other lane is copied by
+    * [[fill]].
     */
-  def fill(v: OnHeapColumnVector, col: DecodedColumn, sel: Array[Int],
-           m: Int, s: ColumnSpec): Unit = lane match {
+  final def vector(col: DecodedColumn, sel: Array[Int], m: Int,
+                   s: ColumnSpec): ColumnVector =
+    if (lane == Lane.Bytes) new SliceVector(dataType(s), col, sel, m)
+    else {
+      val v = new OnHeapColumnVector(m, dataType(s))
+      fill(v, col, sel, m, s)
+      v
+    }
+
+  /** Copy the selected rows of a decoded numeric or float-array column
+    * into `v` ([[vector]]). The vector's static type is the final class,
+    * so its puts bind directly inside the per-row loops.
+    */
+  protected def fill(v: OnHeapColumnVector, col: DecodedColumn, sel: Array[Int],
+                     m: Int, s: ColumnSpec): Unit = lane match {
     case Lane.Longs =>
       val src = col.longs
       var k = 0
@@ -125,16 +139,7 @@ private[graft] sealed abstract class Kind(val id: Int, val sparkType: DataType,
         k += 1
       }
     case Lane.Bytes =>
-      // strings and binary straight from the decoded byte slices: no
-      // String materialization, no re-encode
-      val u = col.bytes
-      var k = 0
-      while (k < m) {
-        val r = sel(k)
-        if (!col.validAt(r)) v.putNull(k)
-        else v.putByteArray(k, u.pool, u.offsets(r), u.lens(r))
-        k += 1
-      }
+      throw new IllegalStateException("byte slices are read in place (SliceVector)")
     case Lane.Floats =>
       // one float child vector per batch, each row an (offset, length)
       // view into it
@@ -327,7 +332,7 @@ private[graft] object Kinds {
         Some((at(java.math.RoundingMode.CEILING), at(java.math.RoundingMode.FLOOR)))
       case _ => None
     }
-    override def fill(v: OnHeapColumnVector, col: DecodedColumn,
+    override protected def fill(v: OnHeapColumnVector, col: DecodedColumn,
                       sel: Array[Int], m: Int, s: ColumnSpec): Unit = {
       val src = col.longs
       var k = 0
@@ -365,7 +370,7 @@ private[graft] object Kinds {
       }
       out
     }
-    override def fill(v: OnHeapColumnVector, col: DecodedColumn,
+    override protected def fill(v: OnHeapColumnVector, col: DecodedColumn,
                       sel: Array[Int], m: Int, s: ColumnSpec): Unit = {
       val src = col.ints
       var k = 0
@@ -389,7 +394,7 @@ private[graft] object Kinds {
         if (v == 0.0f) Some((bits(-0.0f), bits(0.0f))) else Some((bits(v), bits(v)))
       case _ => None
     }
-    override def fill(v: OnHeapColumnVector, col: DecodedColumn,
+    override protected def fill(v: OnHeapColumnVector, col: DecodedColumn,
                       sel: Array[Int], m: Int, s: ColumnSpec): Unit = {
       val src = col.ints
       var k = 0
@@ -428,4 +433,45 @@ private[graft] object Kinds {
         s"DATE, DOUBLE, FLOAT, BINARY, ARRAY<FLOAT>, DECIMAL(<=18), " +
         s"and BOOLEAN columns; column '${f.name}' is ${f.dataType}"))
     .specOf(f)
+}
+
+/** One batch's read-only vector over the selected rows `sel(0 until m)`
+  * of a decoded byte-slice column (STRING or BINARY). Values stay in the
+  * decoded pool, which nothing writes after decode, so a full read hands
+  * Spark its strings without copying them into a vector first.
+  */
+private[graft] final class SliceVector(dt: DataType, col: DecodedColumn,
+                                       sel: Array[Int], m: Int)
+    extends ColumnVector(dt) {
+  private val u = col.bytes
+  private val nulls: Int =
+    if (col.nulls == null) 0 else (0 until m).count(k => !col.validAt(sel(k)))
+
+  override def close(): Unit = ()
+  override def hasNull: Boolean = nulls > 0
+  override def numNulls: Int = nulls
+  override def isNullAt(rowId: Int): Boolean = !col.validAt(sel(rowId))
+  override def getUTF8String(rowId: Int): UTF8String = {
+    val r = sel(rowId)
+    UTF8String.fromBytes(u.pool, u.offsets(r), u.lens(r))
+  }
+  override def getBinary(rowId: Int): Array[Byte] = {
+    val r = sel(rowId)
+    java.util.Arrays.copyOfRange(u.pool, u.offsets(r), u.offsets(r) + u.lens(r))
+  }
+
+  private def unsupported(what: String): Nothing =
+    throw new UnsupportedOperationException(s"$what on a $dt slice vector")
+  override def getBoolean(rowId: Int): Boolean = unsupported("getBoolean")
+  override def getByte(rowId: Int): Byte = unsupported("getByte")
+  override def getShort(rowId: Int): Short = unsupported("getShort")
+  override def getInt(rowId: Int): Int = unsupported("getInt")
+  override def getLong(rowId: Int): Long = unsupported("getLong")
+  override def getFloat(rowId: Int): Float = unsupported("getFloat")
+  override def getDouble(rowId: Int): Double = unsupported("getDouble")
+  override def getArray(rowId: Int): ColumnarArray = unsupported("getArray")
+  override def getMap(ordinal: Int): ColumnarMap = unsupported("getMap")
+  override def getDecimal(rowId: Int, precision: Int, scale: Int): Decimal =
+    unsupported("getDecimal")
+  override def getChild(ordinal: Int): ColumnVector = unsupported("getChild")
 }

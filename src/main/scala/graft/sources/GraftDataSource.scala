@@ -960,10 +960,12 @@ class GraftColumnarReader(p: GraftInputPartition, required: StructType,
         val vecs = new Array[ColumnVector](fields.length)
         var i = 0
         while (i < fields.length) {
-          val v = new OnHeapColumnVector(m, fields(i).dataType)
-          if (fieldAbsent(i)) v.putNulls(0, m)
-          else Kinds(specs(i).kind).fill(v, chunk.col(fields(i).name), sel, m, specs(i))
-          vecs(i) = v
+          vecs(i) =
+            if (fieldAbsent(i)) {
+              val v = new OnHeapColumnVector(m, fields(i).dataType)
+              v.putNulls(0, m)
+              v
+            } else Kinds(specs(i).kind).vector(chunk.col(fields(i).name), sel, m, specs(i))
           i += 1
         }
         emitted += m
