@@ -161,16 +161,16 @@ class EngineSpec extends AnyFunSuite {
       s"unexpected failure shape: $ex")
   }
 
-  test("a single giant container splits into one scan task per chunk; decode reads it back") {
+  test("decode plans one task per chunk: a single giant container parallelizes") {
     val dir = tempDir("chunksplit")
     val conf = spark.sparkContext.hadoopConfiguration
     ContainerIO.mkdirs(conf, s"$dir/blocks")
     ContainerIO.mkdirs(conf, s"$dir/manifests")
     val rows = ColumnarEngine.derive(SourceTable.synthesize(spark, 400, 4))
       .collect().sortBy(_.path)
-    // ONE container, chunked small: the scan must split it across tasks
-    // (one task per container would serialize a giant container on a
-    // single thread)
+    // ONE container, chunked small: the decode is the DSv2 scan, which
+    // must split it across tasks (one task per container would serialize
+    // a giant container on a single thread)
     val enc = new ColumnarEngine.PartitionEncoder(0, dir, conf, chunkRowsCap = 50)
     rows.foreach { r =>
       Seq(r.repo, r.path, r.commit, r.lang, r.content).zipWithIndex.foreach {
