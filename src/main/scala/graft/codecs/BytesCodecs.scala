@@ -18,17 +18,19 @@ final class FloatsColumn(val pool: Array[Float], val offsets: Array[Int],
   * kind 7 ARRAY<FLOAT> (embeddings).
   *
   * BINARY (id 32, "bin-raw"): varint n, per-value byte-length varints,
-  * concatenated payloads. The same plain layout as [[RawStringCodec]]
-  * but over arbitrary bytes — a String round-trip would corrupt invalid
-  * UTF-8 sequences, so binary never rides the string codecs. Blobs
-  * (compressed media) don't dictionary- or prefix-compress, so raw is
-  * the whole suite. Decodes zero-copy into the [[Utf8Column]] slice
-  * shape (it is just (pool, offsets, lens) over bytes).
+  * concatenated payloads — the raw string block's slice layout, encoded
+  * and decoded by the same code ([[RawStringCodec.encodeSlices]] /
+  * [[RawStringCodec.decodeSlices]]) under its own id and length cap. The
+  * string codecs never select id 32 and never decode it as a string
+  * block. Blobs (compressed media) don't dictionary- or
+  * prefix-compress, so raw is the whole suite. Both sides use the
+  * [[Utf8Column]] slice shape (it is just (pool, offsets, lens) over
+  * bytes); decode is zero-copy.
   *
   * ARRAY<FLOAT> (id 33, "f32-raw"): varint n, per-row dim varints, then
   * the packed little-endian IEEE-754 floats. Embedding floats are
   * near-random in the low mantissa bits — raw 4-byte storage is the
-  * right baseline (byte-exact, SIMD-friendly bulk decode via a
+  * right baseline (byte-exact, SIMD-friendly bulk copies through a
   * little-endian FloatBuffer view).
   */
 object BytesCodecs {
@@ -41,73 +43,45 @@ object BytesCodecs {
 
   // ------------------------------------------------------------- binary
 
-  def encodeBinary(vals: Array[Array[Byte]], n: Int): Array[Byte] = {
-    var total = 0L
-    var i = 0
-    while (i < n) { total += vals(i).length; i += 1 }
-    val w = new BlockWriter((total + n * 2 + 16).min(Int.MaxValue).toInt)
-    w.putByte(BinRawId)
-    w.putVarint(n.toLong)
-    i = 0
-    while (i < n) { w.putVarint(vals(i).length.toLong); i += 1 }
-    i = 0
-    while (i < n) { w.putBytes(vals(i)); i += 1 }
-    w.result()
-  }
+  def encodeBinary(col: Utf8Column): Array[Byte] =
+    RawStringCodec.encodeSlices(BinRawId, col)
 
   /** Zero-copy decode into byte slices over `buf`. */
-  def decodeBinary(buf: Array[Byte], off: Int, end: Int): Utf8Column = {
-    val r = openReader(buf, off, end, BinRawId)
-    val n = readCount(r)
-    val lens = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val l = r.getVarint()
-      require(l >= 0 && l <= MaxBinaryBytes, s"implausible binary length $l")
-      lens(i) = l.toInt
-      i += 1
-    }
-    val offs = new Array[Int](n)
-    i = 0
-    while (i < n) {
-      offs(i) = r.position
-      r.skip(lens(i)) // bounds-checked; drains + raises on a corrupt length
-      i += 1
-    }
-    require(r.remaining == 0, "binary block has trailing bytes")
-    new Utf8Column(buf, offs, lens)
-  }
+  def decodeBinary(buf: Array[Byte], off: Int, end: Int): Utf8Column =
+    RawStringCodec.decodeSlices(buf, off, end, BinRawId, MaxBinaryBytes)
 
   // -------------------------------------------------------- float array
 
-  def encodeFloats(vals: Array[Array[Float]], n: Int): Array[Byte] = {
+  def encodeFloats(col: FloatsColumn): Array[Byte] = {
+    val n = col.n
     var total = 0L
     var i = 0
-    while (i < n) { total += vals(i).length; i += 1 }
-    val w = new BlockWriter((total * 4 + n * 2 + 16).min(Int.MaxValue).toInt)
+    while (i < n) { total += col.lens(i); i += 1 }
+    require(total * 4 <= Int.MaxValue - 16L - n * 2L,
+      s"float payload overflows a block: $total floats")
+    val bytes = (total * 4).toInt
+    val w = new BlockWriter(bytes + n * 2 + 16)
     w.putByte(F32RawId)
     w.putVarint(n.toLong)
     i = 0
-    while (i < n) { w.putVarint(vals(i).length.toLong); i += 1 }
-    val payload = new Array[Byte](
-      if (total * 4 > Int.MaxValue) throw new IllegalArgumentException(
-        s"float payload overflows a block: $total floats") else (total * 4).toInt)
-    val bb = java.nio.ByteBuffer.wrap(payload)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    while (i < n) { w.putVarint(col.lens(i).toLong); i += 1 }
+    val fb = java.nio.ByteBuffer.wrap(w.reserveRaw(bytes), w.rawPos, bytes)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).asFloatBuffer()
     i = 0
-    while (i < n) {
-      val a = vals(i)
-      var j = 0
-      while (j < a.length) { bb.putFloat(a(j)); j += 1 }
-      i += 1
-    }
-    w.putBytes(payload)
+    while (i < n) { fb.put(col.pool, col.offsets(i), col.lens(i)); i += 1 }
+    w.advance(bytes)
     w.result()
   }
 
   def decodeFloats(buf: Array[Byte], off: Int, end: Int): FloatsColumn = {
-    val r = openReader(buf, off, end, F32RawId)
-    val n = readCount(r)
+    require(off >= 0 && off < end && end <= buf.length,
+      "empty or out-of-range block slice")
+    val r = new BlockReader(buf, off, end)
+    val id = r.getByte()
+    require(id == F32RawId, s"unknown bytes-codec id $id (want $F32RawId)")
+    val nv = r.getVarint()
+    require(nv >= 0 && nv <= LongCodecs.MaxDecodeRows, s"implausible row count $nv")
+    val n = nv.toInt
     val lens = new Array[Int](n)
     val offs = new Array[Int](n)
     var total = 0L
@@ -128,23 +102,5 @@ object BytesCodecs {
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       .asFloatBuffer().get(pool)
     new FloatsColumn(pool, offs, lens)
-  }
-
-  // ------------------------------------------------------------ helpers
-
-  private def openReader(buf: Array[Byte], off: Int, end: Int,
-                         wantId: Int): BlockReader = {
-    require(off >= 0 && off < end && end <= buf.length,
-      "empty or out-of-range block slice")
-    val r = new BlockReader(buf, off, end)
-    val id = r.getByte()
-    require(id == wantId, s"unknown bytes-codec id $id (want $wantId)")
-    r
-  }
-
-  private def readCount(r: BlockReader): Int = {
-    val n = r.getVarint()
-    require(n >= 0 && n <= LongCodecs.MaxDecodeRows, s"implausible row count $n")
-    n.toInt
   }
 }

@@ -153,19 +153,20 @@ sealed trait StringCodec extends Serializable {
     decodeUtf8(buf, off, end).strings
   final def decode(block: Array[Byte]): Array[String] = decode(block, 0, block.length)
 
-  protected final def header(n: Int, cap: Int): BlockWriter = {
+  protected final def header(n: Int, cap: Int, blockId: Int = id): BlockWriter = {
     val w = new BlockWriter(cap)
-    w.putByte(id)
+    w.putByte(blockId)
     w.putVarint(n.toLong)
     w
   }
-  protected final def openReader(buf: Array[Byte], off: Int, end: Int): (BlockReader, Int) = {
+  protected final def openReader(buf: Array[Byte], off: Int, end: Int,
+                                 blockId: Int = id): (BlockReader, Int) = {
     val r = new BlockReader(buf, off, end)
     val gotId = r.getByte()
-    require(gotId == id, s"block codec id $gotId, expected $id ($name)")
+    require(gotId == blockId, s"block codec id $gotId, expected $blockId")
     val n = r.getVarint()
     require(n >= 0 && n <= LongCodecs.MaxDecodeRows,
-      s"implausible row count $n in $name block (cap ${LongCodecs.MaxDecodeRows})")
+      s"implausible row count $n in block $blockId (cap ${LongCodecs.MaxDecodeRows})")
     (r, n.toInt)
   }
 }
@@ -358,30 +359,48 @@ object StringCodecs {
   }
 }
 
-/** Plain layout: per-string byte length varints, then concatenated UTF-8. */
+/** Plain layout: per-string byte length varints, then concatenated UTF-8.
+  * The layout is the raw slice layout BINARY blocks share
+  * ([[BytesCodecs.encodeBinary]]): one encode/decode pair serves both,
+  * each under its own block id and per-value length cap.
+  */
 case object RawStringCodec extends StringCodec {
   val id: Byte = 16
   val name = "raw"
-  def encodeUtf8(col: Utf8Column): Array[Byte] = {
+  def encodeUtf8(col: Utf8Column): Array[Byte] = encodeSlices(id, col)
+  def decodeUtf8(buf: Array[Byte], off: Int, end: Int): Utf8Column =
+    decodeSlices(buf, off, end, id, Int.MaxValue)
+
+  /** Block `blockId`: varint n, n byte-length varints, then the slices'
+    * bytes.
+    */
+  private[codecs] def encodeSlices(blockId: Int, col: Utf8Column): Array[Byte] = {
     val n = col.n
     var total = 0L
     var i = 0
     while (i < n) { total += col.lens(i); i += 1 }
-    val w = header(n, (total + n * 2 + 16).toInt)
+    val w = header(n, (total + n * 2 + 16).min(Int.MaxValue).toInt, blockId)
     i = 0
     while (i < n) { w.putVarint(col.lens(i).toLong); i += 1 }
     i = 0
     while (i < n) { w.putBytes(col.pool, col.offsets(i), col.lens(i)); i += 1 }
     w.result()
   }
-  def decodeUtf8(buf: Array[Byte], off: Int, end: Int): Utf8Column = {
-    val (r, n) = openReader(buf, off, end)
+
+  /** Zero-copy decode of a block `blockId` at buf(off until end) whose
+    * values are at most `maxLen` bytes each; the slices index `buf`.
+    */
+  private[codecs] def decodeSlices(buf: Array[Byte], off: Int, end: Int,
+                                   blockId: Int, maxLen: Int): Utf8Column = {
+    require(off >= 0 && off < end && end <= buf.length,
+      "empty or out-of-range block slice")
+    val (r, n) = openReader(buf, off, end, blockId)
     if (n > r.remaining) graft.core.DecodeError.eob() // each len varint >= 1 byte
     val lens = new Array[Int](n)
     var i = 0
     while (i < n) {
       val l = r.getVarint()
-      require(l >= 0 && l <= Int.MaxValue, s"implausible string length $l")
+      require(l >= 0 && l <= maxLen, s"implausible value length $l in block $blockId")
       lens(i) = l.toInt
       i += 1
     }
@@ -392,6 +411,7 @@ case object RawStringCodec extends StringCodec {
       r.skip(lens(i)) // bounds-checked; drains + raises on a corrupt length
       i += 1
     }
+    require(r.remaining == 0, s"block $blockId has trailing bytes")
     new Utf8Column(buf, offs, lens)
   }
 }

@@ -8,6 +8,7 @@ import graft.codecs._
 import graft.core.BlockWriter
 import graft.sources.GraftDataSource
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import java.nio.charset.StandardCharsets.UTF_8
@@ -234,7 +235,12 @@ object ColumnarEngine {
     * `schema` may hold any [[ColumnSpec]] kinds
     * ([[ColumnarEngine.DefaultSchema]] = the engine's [[DerivedRow]]
     * shape): buffering is columnar, one buffer per live column whose
-    * stored form ([[Kind.stored]]) is fixed here, once. The chunk digest
+    * stored form ([[Kind.stored]]) is fixed here, once. Variable-length
+    * values buffer in the shapes the decode returns: STRING and BINARY
+    * bytes in one byte pool with per-row offsets and lengths (flushed as
+    * a [[Utf8Column]]), ARRAY<FLOAT> in one float pool likewise (a
+    * [[FloatsColumn]]), so the codecs read the buffers in place and a
+    * rewrite copies each decoded slice straight into them. The chunk digest
     * covers [[ColumnarEngine.digestColumnOf]] (all-zero when the schema has no
     * string column), and the manifest records the schema + digest column
     * so readers infer both.
@@ -263,7 +269,8 @@ object ColumnarEngine {
       * binaries and float arrays, each group in schema order (stable sort).
       */
     private val blockOrder: Array[Int] = bufs.indices.sortBy(bufs(_).group).toArray
-    private val strBufs: Array[StrBuffer] = bufs.collect { case b: StrBuffer => b }
+    private val strBufs: Array[BytesBuffer] =
+      bufs.collect { case b: BytesBuffer if b.utf8 => b }
     private val bmBytes = (chunkRowsCap + 7) >> 3
     private val digestCol = digestColumnOf(schema)
     private val digestIdx = columns.indexWhere(_.name == digestCol)
@@ -311,7 +318,7 @@ object ColumnarEngine {
         if (digestIdx < 0) new Array[Byte](32)
         else {
           val chunkSha = java.security.MessageDigest.getInstance("SHA-256")
-          val s = bufs(digestIdx).asInstanceOf[StrBuffer]
+          val s = bufs(digestIdx).asInstanceOf[BytesBuffer]
           var i = 0
           while (i < n) {
             sha.update(s.pool, s.offsets(i), s.lens(i))
@@ -412,7 +419,7 @@ object ColumnarEngine {
               writeCol(b, codec.encode(vals, n), codec.name,
                 8L * n, st.min, st.max, hasRange, bm, nullCount)
             }
-          case s: StrBuffer =>
+          case s: BytesBuffer if s.utf8 =>
             val strs = s.column(n)
             val st = StringCodecs.stats(strs)
             val (codec, block) = StringCodecs.encodeBest(strs, st,
@@ -426,25 +433,15 @@ object ColumnarEngine {
             val (dict, range) = strZoneStats(strs)
             dict.foreach(d => chunkStrDicts = chunkStrDicts.updated(nm, d))
             range.foreach(r => chunkStrRanges = chunkStrRanges.updated(nm, r))
-          case bb: BinBuffer =>
+          case bb: BytesBuffer =>
             // raw length-prefixed payloads — no zone stats (blob
             // equality/range pruning has no sound proof shape here)
-            val vals = new Array[Array[Byte]](n)
-            bb.vals.copyToArray(vals, 0, n)
-            var raw = 0L
-            var i = 0
-            while (i < n) { raw += vals(i).length; i += 1 }
-            writeCol(b, BytesCodecs.encodeBinary(vals, n), "bin-raw", raw,
-              nullBm = bm, nullCount = nullCount)
-          case f: FltBuffer =>
+            writeCol(b, BytesCodecs.encodeBinary(bb.column(n)), "bin-raw",
+              bb.used, nullBm = bm, nullCount = nullCount)
+          case f: FloatBuffer =>
             // packed little-endian IEEE-754
-            val vals = new Array[Array[Float]](n)
-            f.vals.copyToArray(vals, 0, n)
-            var raw = 0L
-            var i = 0
-            while (i < n) { raw += 4L * vals(i).length; i += 1 }
-            writeCol(b, BytesCodecs.encodeFloats(vals, n), "f32-raw", raw,
-              nullBm = bm, nullCount = nullCount)
+            writeCol(b, BytesCodecs.encodeFloats(f.column(n)), "f32-raw",
+              4L * f.used, nullBm = bm, nullCount = nullCount)
         }
         b.clear()
         k += 1
@@ -541,50 +538,64 @@ object ColumnarEngine {
       */
     def putUtf8(c: Int, v: UTF8String): Unit =
       if (v == null) putNull(c)
-      else putUtf8(c, v.getBaseObject, v.getBaseOffset, v.numBytes)
+      else putBytes(c, v.getBaseObject, v.getBaseOffset, v.numBytes, utf8 = true)
 
-    /** The string whose `len` UTF-8 bytes start at address `off` of
-      * `base` (a byte array with [[Platform.BYTE_ARRAY_OFFSET]], or an
-      * off-heap base).
+    /** A binary value; `null` is [[putNull]]. */
+    def putBinary(c: Int, v: Array[Byte]): Unit =
+      if (v == null) putNull(c)
+      else putBytes(c, v, Platform.BYTE_ARRAY_OFFSET, v.length, utf8 = false)
+
+    /** The string (`utf8`) or binary value whose `len` bytes start at
+      * address `off` of `base` (a byte array with
+      * [[Platform.BYTE_ARRAY_OFFSET]], or an off-heap base).
       */
-    private def putUtf8(c: Int, base: AnyRef, off: Long, len: Int): Unit = bufs(c) match {
-      case b: StrBuffer =>
+    private def putBytes(c: Int, base: AnyRef, off: Long, len: Int,
+                         utf8: Boolean): Unit = bufs(c) match {
+      case b: BytesBuffer if b.utf8 == utf8 =>
+        require(utf8 || len <= BytesCodecs.MaxBinaryBytes,
+          s"binary value exceeds MaxBinaryBytes in column '${b.spec.name}'")
         val at = b.append(bufN, len)
         Platform.copyMemory(base, off, b.pool, Platform.BYTE_ARRAY_OFFSET + at, len)
-        require(len <= MaxValueChars ||
+        require(!utf8 || len <= MaxValueChars ||
           Utf8Column.utf16Length(b.pool, at, len) <= MaxValueChars,
           s"string value exceeds MaxValueChars ($MaxValueChars) in column " +
             s"'${b.spec.name}' of partition $part")
-        // ALL string bytes count toward the flush threshold (not just
-        // content): that is what bounds every encoded block under
-        // [[ContainerFormat.MaxBlockBytes]] (256 MiB — sized for the 3x
-        // worst-case UTF-8 expansion of a chunk's chars) on wide tables
+        // ALL string and binary bytes count toward the flush threshold
+        // (not just content): that is what bounds every encoded block
+        // under [[ContainerFormat.MaxBlockBytes]] (256 MiB — sized for
+        // the 3x worst-case UTF-8 expansion of a chunk's chars) on wide
+        // tables
         bufBytes += len
         rowPuts += 1
-      case b => wrongLane(b, "string")
+      case b => wrongLane(b, if (utf8) "string" else "binary")
     }
 
-    /** A binary value; `null` is [[putNull]]. */
-    def putBinary(c: Int, v: Array[Byte]): Unit = bufs(c) match {
-      case _ if v == null => putNull(c)
-      case b: BinBuffer =>
-        require(v.length <= BytesCodecs.MaxBinaryBytes,
-          s"binary value exceeds MaxBinaryBytes in column '${b.spec.name}'")
-        b.vals += v
-        bufBytes += v.length
-        rowPuts += 1
-      case b => wrongLane(b, "binary")
+    /** A float-array value, copied into the column's float pool in the
+      * same pass that rejects a null element: the stored shape is a dense
+      * vector, where a null element would silently decode as 0.0f.
+      */
+    def putFloats(c: Int, a: ArrayData): Unit = {
+      val len = a.numElements()
+      val b = appendFloats(c, len)
+      val at = b.offsets(bufN)
+      var e = 0
+      while (e < len) {
+        if (a.isNullAt(e)) throw new IllegalArgumentException(
+          s"null element in float array column '${b.spec.name}' (partition $part)")
+        b.pool(at + e) = a.getFloat(e)
+        e += 1
+      }
     }
 
-    /** A float-array value; `null` is [[putNull]]. */
-    def putFloats(c: Int, v: Array[Float]): Unit = bufs(c) match {
-      case _ if v == null => putNull(c)
-      case b: FltBuffer =>
-        require(v.length <= BytesCodecs.MaxFloatDim,
+    /** Room for this row's `len` floats in column `c`, from `offsets(bufN)`. */
+    private def appendFloats(c: Int, len: Int): FloatBuffer = bufs(c) match {
+      case b: FloatBuffer =>
+        require(len <= BytesCodecs.MaxFloatDim,
           s"float array exceeds MaxFloatDim in column '${b.spec.name}'")
-        b.vals += v
-        bufBytes += 4L * v.length
+        b.append(bufN, len)
+        bufBytes += 4L * len
         rowPuts += 1
+        b
       case b => wrongLane(b, "float-array")
     }
 
@@ -647,11 +658,12 @@ object ColumnarEngine {
         case Lane.Doubles => putLong(c, DoubleBits.toSortableLong(d.doubles(j)))
         case Lane.Bytes =>
           val u = d.bytes
-          if (kinds(c).stored == Stored.Utf8)
-            putUtf8(c, u.pool, Platform.BYTE_ARRAY_OFFSET + u.offsets(j), u.lens(j))
-          else putBinary(c, java.util.Arrays.copyOfRange(
-            u.pool, u.offsets(j), u.offsets(j) + u.lens(j)))
-        case Lane.Floats => putFloats(c, d.floats.slice(j))
+          putBytes(c, u.pool, Platform.BYTE_ARRAY_OFFSET + u.offsets(j), u.lens(j),
+            utf8 = kinds(c).stored == Stored.Utf8)
+        case Lane.Floats =>
+          val f = d.floats
+          val b = appendFloats(c, f.lens(j))
+          System.arraycopy(f.pool, f.offsets(j), b.pool, b.offsets(bufN), f.lens(j))
       }
 
     /** Flush, write the container, and build its manifest. Publication
@@ -689,8 +701,6 @@ object ColumnarEngine {
   }
 
   private[graft] object PartitionEncoder {
-    private val EmptyBytes = new Array[Byte](0)
-    private val EmptyFloats = new Array[Float](0)
 
     /** One live column's chunk buffer; its class is the column's stored
       * form. A NULL row sets a bit in the lazily allocated validity
@@ -717,9 +727,8 @@ object ColumnarEngine {
 
     private object ColumnBuffer {
       def apply(s: ColumnSpec, chunkRowsCap: Int): ColumnBuffer = Kinds(s.kind).stored match {
-        case Stored.Utf8 => new StrBuffer(s, chunkRowsCap)
-        case Stored.Binary => new BinBuffer(s)
-        case Stored.FloatArray => new FltBuffer(s)
+        case Stored.Utf8 | Stored.Binary => new BytesBuffer(s, chunkRowsCap)
+        case Stored.FloatArray => new FloatBuffer(s, chunkRowsCap)
         case Stored.WideLong | Stored.NarrowInt => new LongBuffer(s, chunkRowsCap)
       }
     }
@@ -741,69 +750,77 @@ object ColumnarEngine {
       protected def putPlaceholder(r: Int): Unit = put(r, 0L)
     }
 
-    private sealed abstract class RefBuffer[T <: AnyRef](spec: ColumnSpec, placeholder: T)
-        extends ColumnBuffer(spec) {
-      val vals = new scala.collection.mutable.ArrayBuffer[T](1024)
-      protected def putPlaceholder(r: Int): Unit = vals += placeholder
-      override def clear(): Unit = { super.clear(); vals.clear() }
-    }
-    /** UTF-8 strings: one byte pool plus per-row offsets and lengths, the
-      * write-side twin of [[Utf8Column]]. A NULL row holds the empty
-      * string, which is part of the digest and string zone stats.
+    /** Variable-length values as slices of one pool (row r is
+      * `pool(offsets(r) until offsets(r) + lens(r))`), the write-side
+      * twin of the decoded slice columns. A NULL row holds an empty slice.
       */
-    private final class StrBuffer(spec: ColumnSpec, maxRows: Int)
+    private sealed abstract class SliceBuffer(spec: ColumnSpec, maxRows: Int)
         extends ColumnBuffer(spec) {
-      def group = 1
-      var pool = new Array[Byte](1 << 14)
+      /** Pool slots in use: the buffered values' total length. */
       var used = 0
       var offsets = new Array[Int](math.min(maxRows, 1024))
       var lens = new Array[Int](offsets.length)
-      // UTF-16 chars of pool(0 until counted), counted on demand
-      private var counted = 0
-      private var charCount = 0L
+      /** Grow the pool, by doubling, to at least `need` slots. */
+      protected def reserve(need: Long): Unit
+      protected final def grown(length: Int, need: Long): Int =
+        math.min(math.max(need, 2L * length), Int.MaxValue - 16L).toInt
 
-      /** Room for row r's `len` bytes; returns their pool offset. */
-      def append(r: Int, len: Int): Int = {
+      /** Room for row r's `len` values; returns their pool offset. */
+      final def append(r: Int, len: Int): Int = {
         if (r == offsets.length) {
           val cap = math.min(maxRows.toLong, 2L * r).toInt
           offsets = java.util.Arrays.copyOf(offsets, cap)
           lens = java.util.Arrays.copyOf(lens, cap)
         }
-        if (len > pool.length - used) {
-          val cap = math.max(used.toLong + len, 2L * pool.length)
-          pool = java.util.Arrays.copyOf(pool, math.min(cap, Int.MaxValue - 16L).toInt)
-        }
+        reserve(used.toLong + len)
         offsets(r) = used
         lens(r) = len
         used += len
         offsets(r)
       }
-      protected def putPlaceholder(r: Int): Unit = append(r, 0)
+      protected final def putPlaceholder(r: Int): Unit = append(r, 0)
+      /** `a` cut to the first n rows. */
+      protected final def first(n: Int, a: Array[Int]): Array[Int] =
+        if (n == a.length) a else java.util.Arrays.copyOf(a, n)
+      override def clear(): Unit = { super.clear(); used = 0 }
+    }
 
-      /** UTF-16 chars of the buffered values. */
+    /** STRING (UTF-8) and BINARY values in one byte pool. A NULL string
+      * row's empty slice is part of the digest and string zone stats.
+      */
+    private final class BytesBuffer(spec: ColumnSpec, maxRows: Int)
+        extends SliceBuffer(spec, maxRows) {
+      val utf8: Boolean = Kinds(spec.kind).stored == Stored.Utf8
+      def group = if (utf8) 1 else 2
+      var pool = new Array[Byte](1 << 14)
+      protected def reserve(need: Long): Unit =
+        if (need > pool.length) pool = java.util.Arrays.copyOf(pool, grown(pool.length, need))
+      // UTF-16 chars of pool(0 until counted), counted on demand
+      private var counted = 0
+      private var charCount = 0L
+
+      /** UTF-16 chars of the buffered values (strings only). */
       def chars(): Long = {
         charCount += Utf8Column.utf16Length(pool, counted, used - counted)
         counted = used
         charCount
       }
+      def column(n: Int): Utf8Column = new Utf8Column(pool, first(n, offsets), first(n, lens))
 
-      /** The first n rows as a column over the pool. */
-      def column(n: Int): Utf8Column =
-        if (n == offsets.length) new Utf8Column(pool, offsets, lens)
-        else new Utf8Column(pool, java.util.Arrays.copyOf(offsets, n),
-          java.util.Arrays.copyOf(lens, n))
-
-      override def clear(): Unit = {
-        super.clear()
-        used = 0
-        counted = 0
-        charCount = 0L
-      }
+      override def clear(): Unit = { super.clear(); counted = 0; charCount = 0L }
     }
-    private final class BinBuffer(spec: ColumnSpec)
-        extends RefBuffer[Array[Byte]](spec, EmptyBytes) { def group = 2 }
-    private final class FltBuffer(spec: ColumnSpec)
-        extends RefBuffer[Array[Float]](spec, EmptyFloats) { def group = 3 }
+
+    /** ARRAY<FLOAT> values in one float pool; a NULL row is a
+      * zero-dimension vector.
+      */
+    private final class FloatBuffer(spec: ColumnSpec, maxRows: Int)
+        extends SliceBuffer(spec, maxRows) {
+      def group = 3
+      var pool = new Array[Float](1 << 12)
+      protected def reserve(need: Long): Unit =
+        if (need > pool.length) pool = java.util.Arrays.copyOf(pool, grown(pool.length, need))
+      def column(n: Int): FloatsColumn = new FloatsColumn(pool, first(n, offsets), first(n, lens))
+    }
   }
 
   /** The committed snapshot's manifests as a DataFrame (metrics/lineage

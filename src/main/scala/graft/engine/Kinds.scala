@@ -200,17 +200,7 @@ private[graft] sealed abstract class Kind(val id: Int, val sparkType: DataType,
     case 10 => enc.putLong(c, FloatBits.toSortableInt(row.getFloat(c)).toLong)
     case 1 => enc.putUtf8(c, row.getUTF8String(c))
     case 6 => enc.putBinary(c, row.getBinary(c))
-    case 7 =>
-      // the stored shape is a dense vector: a null element would
-      // silently decode as 0.0f
-      val a = row.getArray(c)
-      var e = 0
-      while (e < a.numElements()) {
-        if (a.isNullAt(e)) throw new IllegalArgumentException(
-          s"null element in float array column '${s.name}' (partition ${enc.part})")
-        e += 1
-      }
-      enc.putFloats(c, a.toFloatArray())
+    case 7 => enc.putFloats(c, row.getArray(c))
   }
 }
 

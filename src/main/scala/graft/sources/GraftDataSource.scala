@@ -377,14 +377,13 @@ object GraftDataSource {
     * chunk's validity bitmap gates it); [[NullTest]] tests the bitmap
     * itself.
     */
-  private[sources] def compileFilters(preds: Array[Pred], layout: Map[String, ColumnSpec])
+  private[sources] def compileFilters(preds: Array[Pred])
       : Array[DecodedChunk => (Int => Boolean)] = preds.map { p =>
     val c = p.col
-    val test = p.rows(layout(c).lane)
     val gated = !p.isInstanceOf[NullTest]
     ch => {
       val d = ch.col(c)
-      val t = test(d)
+      val t = p.rows(d)
       if (!gated || d.nulls == null) t else j => d.validAt(j) && t(j)
     }
   }
@@ -764,7 +763,7 @@ case class ChunkSpec(offset: Long, length: Long, rows: Int,
   * would empty).
   */
 case class GraftInputPartition(file: String, chunks: Seq[ChunkSpec],
-                               digestCol: String = "content",
+                               digestCol: String,
                                absentCols: Set[String] = Set.empty,
                                renames: Map[String, String] = Map.empty)
     extends InputPartition
@@ -933,7 +932,7 @@ class GraftColumnarReader(p: GraftInputPartition, required: StructType,
     ((required.fieldNames ++ effPreds.map(_.col)).toSet -- p.absentCols)
       .map(c => c -> layout(c).lane).toMap,
     ContainerIO.confFrom(confKv), p.digestCol, p.renames)
-  private val rowPreds = GraftDataSource.compileFilters(effPreds, layout)
+  private val rowPreds = GraftDataSource.compileFilters(effPreds)
   private val fields = required.fields
   private val specs: Array[ColumnSpec] = fields.map(f => layout(f.name))
   private val fieldAbsent: Array[Boolean] =

@@ -38,10 +38,11 @@ private[sources] sealed abstract class Pred extends Serializable {
     */
   def inBuckets(ids: Set[Int], n: Int, ints: Boolean): Boolean = true
 
-  /** The row test over a decoded column of `lane`: per chunk it fetches
-    * the lane array once and returns a closure over that primitive array.
+  /** The row test over one chunk's decoded column: it fetches the
+    * column's lane array once and returns a closure over that primitive
+    * array.
     */
-  def rows(lane: Lane): DecodedColumn => (Int => Boolean)
+  def rows(d: DecodedColumn): Int => Boolean
 }
 
 private[sources] object Pred {
@@ -86,11 +87,11 @@ private[sources] final case class LongRange(col: String, lo: Long, hi: Long) ext
   override def overlaps(zlo: Long, zhi: Long): Boolean = lo <= hi && hi >= zlo && lo <= zhi
   override def inBuckets(ids: Set[Int], n: Int, ints: Boolean): Boolean =
     lo != hi || ids(Pred.bucketOf(lo, n, ints))
-  def rows(lane: Lane): DecodedColumn => (Int => Boolean) = {
+  def rows(d: DecodedColumn): Int => Boolean = {
     val l = lo
     val h = hi
-    if (lane == Lane.Ints) d => { val a = d.ints; j => a(j) >= l && a(j) <= h }
-    else d => { val a = d.longs; j => a(j) >= l && a(j) <= h }
+    if (d.lane == Lane.Ints) { val a = d.ints; j => a(j) >= l && a(j) <= h }
+    else { val a = d.longs; j => a(j) >= l && a(j) <= h }
   }
 }
 
@@ -100,14 +101,12 @@ private[sources] final case class LongIn(col: String, values: Array[Long]) exten
   override def overlaps(zlo: Long, zhi: Long): Boolean = values.exists(v => v >= zlo && v <= zhi)
   override def inBuckets(ids: Set[Int], n: Int, ints: Boolean): Boolean =
     values.exists(v => ids(Pred.bucketOf(v, n, ints)))
-  def rows(lane: Lane): DecodedColumn => (Int => Boolean) =
-    if (lane == Lane.Ints) {
-      val set = values.map(_.toInt).toSet
-      d => { val a = d.ints; j => set.contains(a(j)) }
-    } else {
-      val set = values.toSet
-      d => { val a = d.longs; j => set.contains(a(j)) }
-    }
+  // built once per pred, not per chunk
+  @transient private lazy val intSet = values.map(_.toInt).toSet
+  @transient private lazy val longSet = values.toSet
+  def rows(d: DecodedColumn): Int => Boolean =
+    if (d.lane == Lane.Ints) { val set = intSet; val a = d.ints; j => set.contains(a(j)) }
+    else { val set = longSet; val a = d.longs; j => set.contains(a(j)) }
 }
 
 /** `v op x` on the Doubles lane, in Spark's order: a NaN ROW ranks above
@@ -127,15 +126,16 @@ private[sources] final case class DoubleCmp(col: String, op: Pred.Cmp, x: Double
       case Pred.Le => zlo <= vHi
     }
   }
-  def rows(lane: Lane): DecodedColumn => (Int => Boolean) = {
+  def rows(d: DecodedColumn): Int => Boolean = {
     val v = x
+    val a = d.doubles
     op match {
       // IEEE == makes -0.0 = 0.0, matching SQL equality
-      case Pred.Eq => d => { val a = d.doubles; j => a(j) == v }
-      case Pred.Gt => d => { val a = d.doubles; j => a(j) > v || a(j).isNaN }
-      case Pred.Ge => d => { val a = d.doubles; j => a(j) >= v || a(j).isNaN }
-      case Pred.Lt => d => { val a = d.doubles; j => a(j) < v }
-      case Pred.Le => d => { val a = d.doubles; j => a(j) <= v }
+      case Pred.Eq => j => a(j) == v
+      case Pred.Gt => j => a(j) > v || a(j).isNaN
+      case Pred.Ge => j => a(j) >= v || a(j).isNaN
+      case Pred.Lt => j => a(j) < v
+      case Pred.Le => j => a(j) <= v
     }
   }
 }
@@ -145,17 +145,18 @@ private[sources] final case class DoubleIn(col: String, values: Array[Double]) e
   def on(c: String): Pred = copy(col = c)
   override def overlaps(zlo: Long, zhi: Long): Boolean =
     values.exists(DoubleCmp(col, Pred.Eq, _).overlaps(zlo, zhi))
-  def rows(lane: Lane): DecodedColumn => (Int => Boolean) = {
+  def rows(d: DecodedColumn): Int => Boolean = {
     // an ARRAY scan with IEEE ==, not a Set: boxed-Double set membership
     // would miss -0.0 vs 0.0 (SQL calls them equal)
     val arr = values
-    d => { val a = d.doubles; j => {
+    val a = d.doubles
+    j => {
       val x = a(j)
       var i = 0
       var hit = false
       while (!hit && i < arr.length) { hit = x == arr(i); i += 1 }
       hit
-    } }
+    }
   }
 }
 
@@ -170,10 +171,14 @@ private[sources] final case class BytesIn(col: String, values: Array[String]) ex
       range.forall { case (lo, hi) => v.compareTo(lo) >= 0 && v.compareTo(hi) <= 0 })
   override def inBuckets(ids: Set[Int], n: Int, ints: Boolean): Boolean =
     values.exists(v => ids(GraftDataSource.bucketIdOfString(v, n)))
-  def rows(lane: Lane): DecodedColumn => (Int => Boolean) = {
-    val bs = values.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    if (bs.length == 1) { val b = bs(0); d => { val u = d.bytes; j => u.equalsBytes(j, b) } }
-    else d => { val u = d.bytes; j => bs.exists(b => u.equalsBytes(j, b)) }
+  // encoded once per pred, not per chunk
+  @transient private lazy val utf8 =
+    values.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  def rows(d: DecodedColumn): Int => Boolean = {
+    val bs = utf8
+    val u = d.bytes
+    if (bs.length == 1) { val b = bs(0); j => u.equalsBytes(j, b) }
+    else j => bs.exists(b => u.equalsBytes(j, b))
   }
 }
 
@@ -185,6 +190,6 @@ private[sources] final case class NullTest(col: String, isNull: Boolean) extends
   override def mayHold(rows: Long, nulls: Option[Long], dict: Option[Seq[String]],
                        range: Option[(String, String)]): Boolean =
     if (isNull) nulls.forall(_ > 0L) else !nulls.contains(rows)
-  def rows(lane: Lane): DecodedColumn => (Int => Boolean) =
-    if (isNull) d => j => !d.validAt(j) else d => j => d.validAt(j)
+  def rows(d: DecodedColumn): Int => Boolean =
+    if (isNull) j => !d.validAt(j) else j => d.validAt(j)
 }

@@ -157,6 +157,9 @@ class FuzzSpec extends AnyFunSuite {
       controlled(hex(b))(BytesCodecs.decodeBinary(b, 0, b.length))
       b(0) = BytesCodecs.F32RawId.toByte
       controlled(hex(b))(BytesCodecs.decodeFloats(b, 0, b.length))
+      // the raw string block shares the binary block's slice decoder
+      b(0) = RawStringCodec.id
+      controlled(hex(b))(RawStringCodec.decodeUtf8(b, 0, b.length))
       i += 1
     }
   }

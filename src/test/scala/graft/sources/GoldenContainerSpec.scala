@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{ContainerIO, Manifests, SparkTestSession, TestDirs}
@@ -61,11 +62,14 @@ class GoldenContainerSpec extends AnyFunSuite {
     }
   }
 
-  test("golden container: every kind with NULLs writes byte-identical blocks") {
-    val d = TestDirs.createTempDirectory("graft-golden").toString
+  private def writeGolden(d: String, mode: String): Unit =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
       .coalesce(1).write.format("graft").option("chunkRows", "64")
-      .mode("overwrite").save(d)
+      .mode(mode).save(d)
+
+  test("golden container: every kind with NULLs writes byte-identical blocks") {
+    val d = TestDirs.createTempDirectory("graft-golden").toString
+    writeGolden(d, "overwrite")
     val conf = ContainerIO.localConf()
     val blocks = ContainerIO.listNames(conf, s"$d/blocks").filter(_.endsWith(".gblk"))
     assert(blocks.size === 1, s"expected one container, got $blocks")
@@ -78,5 +82,49 @@ class GoldenContainerSpec extends AnyFunSuite {
     assert(ms.head.digest ===
       "14ac5d91089597e1bfb15f3f88e6974051039b152045ade266d2b4cc64feb309",
       "manifest digest changed")
+  }
+
+  test("golden compaction: the rewrite of two golden containers is byte-identical") {
+    // two identical containers: the bin's source order follows the random
+    // epoch names, and identical halves make that order irrelevant
+    val d = TestDirs.createTempDirectory("graft-golden-compact").toString
+    writeGolden(d, "overwrite")
+    writeGolden(d, "append")
+    val conf = ContainerIO.localConf()
+    assert(GraftMaintenance.compact(spark, d) === ((2, 1)))
+    val ms = Manifests.readCommitted(conf, d)
+    assert(ms.size === 1 && ms.head.rows === 600L && ms.head.chunks === 1)
+    val gblk = sha256Hex(Files.readAllBytes(
+      Paths.get(d, "blocks", s"part-${ms.head.name}.gblk")))
+    assert(gblk ===
+      "c5970fbcda38d319bdf12d6054350c370950a49bbe39871f0ec3bb16f4867738",
+      "compacted container bytes changed")
+    assert(ms.head.digest ===
+      "15f0feccfe40c0b0d4241e4a19669f31c14a79bcbeb8d9126f6f1b67aaf546f8",
+      "compacted manifest digest changed")
+  }
+
+  test("chunk boundaries: binary bytes count as bytes, string chars as UTF-16 chars") {
+    // 600 rows in one task: a 64 KiB BINARY payload of UTF-8 continuation
+    // bytes (invalid UTF-8, zero chars if it were ever counted as text)
+    // and 1000 three-byte CJK chars per row. The 32 MiB flush threshold
+    // counts 65536 + 1000 per row, so the first chunk closes at row 505;
+    // counting the string's bytes would close it at 490, counting the
+    // binary as chars would not close it at all.
+    val d = TestDirs.createTempDirectory("graft-golden-wide").toString
+    spark.range(0, 600, 1, 1).select(
+      col("id"),
+      expr("unhex(repeat('80', 65536))").as("payload"),
+      lit("\u8a9e" * 1000).as("text"))
+      .write.format("graft").mode("overwrite").save(d)
+    val conf = ContainerIO.localConf()
+    val ms = Manifests.readCommitted(conf, d)
+    assert(ms.size === 1 && ms.head.rows === 600L)
+    val counts = Manifests.loadChunkIndex(conf, d, ms.head).chunkIndex.map(_.rows)
+    assert(counts === Seq(505, 95))
+    val back = spark.read.format("graft").load(d)
+      .selectExpr("count(*)", "sum(length(payload))", "sum(length(text))").head()
+    assert(back.getLong(0) === 600L && back.getLong(1) === 600L * 65536 &&
+      back.getLong(2) === 600L * 1000)
   }
 }
