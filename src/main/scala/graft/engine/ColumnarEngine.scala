@@ -701,7 +701,6 @@ object ColumnarEngine {
   }
 
   private[graft] object PartitionEncoder {
-
     /** One live column's chunk buffer; its class is the column's stored
       * form. A NULL row sets a bit in the lazily allocated validity
       * bitmap and buffers a placeholder.
