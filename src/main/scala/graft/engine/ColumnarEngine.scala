@@ -278,6 +278,7 @@ object ColumnarEngine {
     w.putBytes(Magic)
     w.putVarint(part.toLong)
     private val sha = java.security.MessageDigest.getInstance("SHA-256")
+    private val rowDigest = new Array[Byte](32) // one row's sha256, reused
     private val partDigest = java.security.MessageDigest.getInstance("SHA-256")
     // name -> (raw, enc, min, max, hasRange)
     private val colMetrics = new java.util.LinkedHashMap[String, Array[Long]]()
@@ -322,7 +323,8 @@ object ColumnarEngine {
           var i = 0
           while (i < n) {
             sha.update(s.pool, s.offsets(i), s.lens(i))
-            chunkSha.update(sha.digest())
+            sha.digest(rowDigest, 0, 32) // also resets sha for the next row
+            chunkSha.update(rowDigest)
             i += 1
           }
           chunkSha.digest()

@@ -311,13 +311,14 @@ private[graft] object ContainerFormat {
     val content = col.bytes
     val sha = java.security.MessageDigest.getInstance("SHA-256")
     val chunkSha = java.security.MessageDigest.getInstance("SHA-256")
+    val rowDigest = new Array[Byte](32)
     var i = 0
     while (i < chunk.rows) {
-      sha.reset()
       // digest straight off the UTF-8 slices — the encode side hashed
       // exactly these bytes, so no String round trip is needed
       sha.update(content.pool, content.offsets(i), content.lens(i))
-      chunkSha.update(sha.digest())
+      sha.digest(rowDigest, 0, 32) // also resets sha for the next row
+      chunkSha.update(rowDigest)
       i += 1
     }
     require(java.util.Arrays.equals(chunkSha.digest(), chunk.storedDigest),
