@@ -7,9 +7,9 @@ import graft.core.{BlockReader, BlockWriter}
   * public paper; implemented from scratch, simplified).
   *
   * A per-chunk table of up to 255 symbols (1..8 bytes, codes 0..254) is
-  * trained by iterative greedy re-segmentation of a bounded sample; code
-  * 255 escapes a literal byte. Strings are encoded independently,
-  * preserving per-row random access.
+  * trained by iterative greedy re-segmentation of a 64 KiB sample drawn
+  * from rows across the chunk; code 255 escapes a literal byte. Strings
+  * are encoded independently, preserving per-row random access.
   *
   * Hot-path design (the paper's §4.4 dispatch): candidate symbols are
   * packed big-endian left-aligned into a Long; lengths ≥ 3 resolve via
@@ -26,6 +26,7 @@ object Fsst {
   // content 3/32K -> 69% of raw, 5/64K -> 59%, 8/128K -> 58% (diminishing)
   final val TrainIterations = 5
   final val SampleCap = 1 << 16 // 64 KiB training sample per chunk
+  final val RowSampleCap = SampleCap / 32 // at most 2 KiB of it from one row
 
   @inline private def packedMask(len: Int): Long = -1L << ((8 - len) * 8)
 
@@ -330,43 +331,40 @@ object Fsst {
     new SymbolTable(syms)
   }
 
-  /** Train a symbol table on a bounded sample of `col`: start from
-    * literal bytes, then iteratively re-segment with the current table and
-    * promote frequent symbols and adjacent-symbol concatenations by gain =
+  /** Train a symbol table on [[sample]] of `col`: start from literal
+    * bytes, then iteratively re-segment with the current table and promote
+    * frequent symbols and adjacent-symbol concatenations by gain =
     * frequency x length (the FSST paper's bottom-up construction).
     */
-  def train(col: Utf8Column): SymbolTable =
-    trainOn(sample(col.n, i => (col.pool, col.offsets(i), col.lens(i))))
+  def train(col: Utf8Column): SymbolTable = trainOn(sample(col))
 
-  def train(strings: Array[String], n: Int): SymbolTable =
-    trainOn(sample(n, { i =>
-      val b = strings(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      (b, 0, b.length)
-    }))
+  def train(strings: Array[String], n: Int): SymbolTable = train(Utf8Column.of(strings, n))
 
-  /** The training sample of an n-row chunk whose row i is the UTF-8
-    * slice `slice(i)` = (bytes, offset, length).
+  /** Up to [[SampleCap]] bytes of `col`, at most [[RowSampleCap]] from a
+    * row, from rows spread over the whole chunk: chunks are sorted (repo,
+    * lang, path), and a prefix sample fit them badly (synthesized source
+    * content: prefix 0.84-0.89 of raw vs strided 0.54-0.66). Row i is
+    * taken while the sample holds less than its share of the capped bytes
+    * of rows 0..i, so a chunk that does not fit fills the sample exactly.
     */
-  private def sample(n: Int, slice: Int => (Array[Byte], Int, Int)): Array[Byte] = {
-    // STRIDED sample with a per-row byte cap: the engine's chunks are
-    // sorted (repo, lang, path), so a prefix sample sees only the first
-    // ~dozen rows — one repo, one file type — and the trained table fits
-    // the rest of the chunk badly (measured on synthesized source content:
-    // prefix-sample ratio 0.84-0.89 vs strided 0.54-0.66). The cap spreads
-    // the same 64 KiB budget over ~32 rows across the whole chunk.
-    val perRow = math.max(1, SampleCap / 32)
-    val stride = math.max(1, n / 32)
-    var total = 0
-    val sample = new java.io.ByteArrayOutputStream()
+  private[codecs] def sample(col: Utf8Column): Array[Byte] = {
+    var total = 0L
     var i = 0
-    while (i < n && total < SampleCap) {
-      val (b, off, len) = slice(i)
-      val take = math.min(math.min(len, perRow), SampleCap - total)
-      sample.write(b, off, take)
-      total += take
-      i += stride
+    while (i < col.n) { total += math.min(col.lens(i), RowSampleCap); i += 1 }
+    val out = new Array[Byte](math.min(total, SampleCap.toLong).toInt)
+    var taken = 0
+    var seen = 0L
+    i = 0
+    while (i < col.n && taken < out.length) {
+      val len = math.min(col.lens(i), RowSampleCap)
+      seen += len
+      if (taken * total < seen * out.length) {
+        System.arraycopy(col.pool, col.offsets(i), out, taken, math.min(len, out.length - taken))
+        taken = math.min(taken + len, out.length)
+      }
+      i += 1
     }
-    sample.toByteArray
+    out
   }
 
   private def trainOn(s: Array[Byte]): SymbolTable = {
@@ -413,9 +411,10 @@ object Fsst {
       val syms = new java.util.ArrayList[Array[Byte]](MaxSymbols)
       var k = 0
       while (k < cands.size && syms.size < MaxSymbols) {
-        val (packed, slen, _) = cands.get(k)
+        val (packed, slen, gain) = cands.get(k)
         val admit =
-          if (slen < 3) true
+          if (gain <= slen + 1) false // saves no more than its table entry costs
+          else if (slen < 3) true
           else { // at most TWO len>=3 symbols per 2-way bucket
             val h = Integer.valueOf(hash3((packed >>> 40).toInt))
             val cnt = claims.getOrDefault(h, 0)

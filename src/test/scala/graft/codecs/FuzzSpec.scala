@@ -90,9 +90,21 @@ class FuzzSpec extends AnyFunSuite {
     } yield c.encode(vs)
     val words = Array("alpha", "beta", "gamma", "the quick brown fox", "", "日本語テキスト")
     val strs = Array.fill(400)(words(rnd.nextInt(words.length)) + rnd.nextInt(4))
+    // an l_comment-shaped column (4 words of a 32-word vocabulary per
+    // row) trains a full 255-symbol table, every code a legal mutation
+    // target; its own generator keeps the other blocks' mutations as they were
+    val vocab = Array("the", "final", "ironic", "deposits", "sleep", "quickly",
+      "furiously", "carefully", "blithely", "express", "regular", "pending",
+      "special", "bold", "even", "silent", "packages", "requests", "accounts",
+      "theodolites", "foxes", "pinto", "beans", "instructions", "dependencies",
+      "asymptotes", "ideas", "platelets", "excuses", "courts", "slyly", "fluffily")
+    val crnd = new java.util.Random(4096L)
+    val comments = Array.fill(4096)(Array.fill(4)(vocab(crnd.nextInt(vocab.length))).mkString(" "))
+    assert(Fsst.train(comments, comments.length).symbols.length === Fsst.MaxSymbols)
     val strBlocks = Seq(
       RawStringCodec.encode(strs), DictStringCodec.encode(strs),
-      RleStringCodec.encode(strs.sorted), FsstStringCodec.encode(strs))
+      RleStringCodec.encode(strs.sorted), FsstStringCodec.encode(strs),
+      FsstStringCodec.encode(comments))
     for (block <- longBlocks ++ Nil) {
       var k = 0
       while (k < 800) {

@@ -85,14 +85,14 @@ class EngineSpec extends AnyFunSuite {
     * path commits them.
     */
   private val PinnedContainers = Seq(
-    "22d32f7c12779fd1d2c1a54b8460ffb86cab8a0e8a697de8adbe86dab4721e30",
-    "2a5eec31c768161a823cafb9b225dfc88acd134aff52bd859a997c9b89c745dc",
-    "30586e692e4ad257439552e3187fac9ce5040d0e961ad412dca1d33efb3c12a1",
-    "47ecfc950f30abe67c176220580430a80caafa6cb28ac97f825a928aa8172961",
-    "4fccee85f779c48e93c4f22666829689ddade8905e202f0f4ac3522662c1192f",
-    "7e60865b8d33560f43a1aedfb7c86e0cd33c89e055e2e52ba975e2c558d7843f",
-    "d794a871e60924d75bade7f784ec57cfefdfffffc0618485a813bd2e33afb244",
-    "fba950b7ae3978c2e92e0658f56f611530f8acce8abe6e68022ee6902945ddfe"
+    "2e6083bd33ac819a4a387226d8d06e4c8f451e56e2ad48afcffa4d6bd593bc86",
+    "5023f7fe74818adcabe283b63550aeaaf8bb6c605671f34afca16cb4437bd222",
+    "5b4978516a27143d4b0c529dbc19ffe23668fe189ade215665007648393593a1",
+    "6cada7deacb235109c20f0d331ef4ebd98755220ce19ee2c4f21d6250a82cc6a",
+    "82a94cc50d0c5d89158071909afc71edee784c6998b3467d46a42ffa70c947ed",
+    "964210bd0e312ea1f265cdb3f95c6c7b4486357ec01713c8950a7b9e4ae8c2bb",
+    "a076efde79eea85efce8d83fb41869ed339ca98f5f8d6367b977f48ff3e67d32",
+    "d5daab1360dfba89fa4d04c1216373e70c97d223d0d45894d8b6973a5fe2576b"
   )
 
   test("synthesizer is deterministic and zipf-skewed") {
@@ -189,7 +189,7 @@ class EngineSpec extends AnyFunSuite {
     assert(java.security.MessageDigest.getInstance("SHA-256")
       .digest(Files.readAllBytes(Paths.get(dir, "blocks", "part-0.gblk")))
       .map(b => f"$b%02x").mkString ===
-      "2129aa98420bbc924320571208d9a383703355474339370559757beafbb798b0",
+      "523276f460401cff662867535b3a8eb434b1a9c8fc4e8b7a774c31522524809f",
       "PartitionEncoder container bytes changed")
     val scan = spark.read.format("graft").option("maxSplitBytes", "1").load(dir)
     assert(scan.rdd.getNumPartitions === 8,
