@@ -184,12 +184,71 @@ object Fsst {
       }
     }
 
-    def foreach(f: (Long, Int, Long) => Unit): Unit = {
+    /** The symbols whose gain exceeds their table entry (length + 1
+      * bytes), as a heap in selection order.
+      */
+    def candidates(): Candidates = {
+      val c = new Candidates(size)
       var k = 0
       while (k < lens.length) {
-        if (lens(k) != 0) f(packed(k), lens(k), gains(k))
+        if (lens(k) != 0 && gains(k) > lens(k) + 1) c.add(packed(k), lens(k), gains(k))
         k += 1
       }
+      c.heapify()
+      c
+    }
+  }
+
+  /** A binary max-heap of training candidates over primitive arrays:
+    * gain desc, then len desc, then packed unsigned asc. (packed, len) is
+    * unique, so the order is total and the pops come out exactly as a
+    * full sort would list them.
+    */
+  private final class Candidates(cap: Int) {
+    val packed = new Array[Long](cap)
+    val len = new Array[Int](cap)
+    private val gain = new Array[Long](cap)
+    private val heap = new Array[Int](cap)
+    private var size = 0
+
+    def add(p: Long, l: Int, g: Long): Unit = {
+      packed(size) = p; len(size) = l; gain(size) = g; heap(size) = size
+      size += 1
+    }
+
+    def nonEmpty: Boolean = size > 0
+
+    @inline private def before(a: Int, b: Int): Boolean =
+      if (gain(a) != gain(b)) gain(a) > gain(b)
+      else if (len(a) != len(b)) len(a) > len(b)
+      else java.lang.Long.compareUnsigned(packed(a), packed(b)) < 0
+
+    private def siftDown(from: Int): Unit = {
+      var i = from
+      val x = heap(i)
+      var done = false
+      while (!done) {
+        var c = 2 * i + 1
+        if (c >= size) done = true
+        else {
+          if (c + 1 < size && before(heap(c + 1), heap(c))) c += 1
+          if (before(heap(c), x)) { heap(i) = heap(c); i = c } else done = true
+        }
+      }
+      heap(i) = x
+    }
+
+    def heapify(): Unit = {
+      var i = size / 2 - 1
+      while (i >= 0) { siftDown(i); i -= 1 }
+    }
+
+    /** Index of the first candidate in selection order, removed. */
+    def pop(): Int = {
+      val top = heap(0)
+      size -= 1
+      if (size > 0) { heap(0) = heap(size); siftDown(0) }
+      top
     }
   }
 
@@ -391,30 +450,24 @@ object Fsst {
         prevLen = segLen
         pos += segLen
       }
-      // collect all candidates, take top-255 by gain (stable order:
-      // gain desc, then len desc, then packed value — fully deterministic)
-      val cands = new java.util.ArrayList[(Long, Int, Long)]() // (packed, len, gain)
-      gains.foreach((packed, len, gain) => cands.add((packed, len, gain)))
-      cands.sort { (a, b) =>
-        val g = java.lang.Long.compare(b._3, a._3)
-        if (g != 0) g
-        else {
-          val l = Integer.compare(b._2, a._2)
-          if (l != 0) l else java.lang.Long.compareUnsigned(a._1, b._1)
-        }
-      }
+      // candidates in gain desc, then len desc, then packed unsigned asc
+      // (fully deterministic) off a heap: only the ones taken are ordered.
+      // A symbol whose gain is no more than its table entry costs is never
+      // admitted, so it never enters the heap.
+      //
       // selection mirrors the encode lookup's single-slot constraint: at
       // most ONE len>=3 symbol per hash slot (the first in gain order —
       // the slot's eventual winner under first-wins), so none of the 255
       // codes is wasted on a symbol the lookup could never return
+      val cands = gains.candidates()
       val claims = new java.util.HashMap[Integer, Integer]()
       val syms = new java.util.ArrayList[Array[Byte]](MaxSymbols)
-      var k = 0
-      while (k < cands.size && syms.size < MaxSymbols) {
-        val (packed, slen, gain) = cands.get(k)
+      while (cands.nonEmpty && syms.size < MaxSymbols) {
+        val c = cands.pop()
+        val packed = cands.packed(c)
+        val slen = cands.len(c)
         val admit =
-          if (gain <= slen + 1) false // saves no more than its table entry costs
-          else if (slen < 3) true
+          if (slen < 3) true
           else { // at most TWO len>=3 symbols per 2-way bucket
             val h = Integer.valueOf(hash3((packed >>> 40).toInt))
             val cnt = claims.getOrDefault(h, 0)
@@ -426,7 +479,6 @@ object Fsst {
           while (j < slen) { bytes(j) = (packed >>> ((7 - j) * 8)).toByte; j += 1 }
           syms.add(bytes)
         }
-        k += 1
       }
       table = new SymbolTable(syms.toArray(new Array[Array[Byte]](syms.size)))
       iter += 1
