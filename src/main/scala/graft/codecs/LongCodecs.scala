@@ -53,10 +53,27 @@ final case class LongStats(
     rleBodySize: Long,
     // -1 if cardinality overflowed the tracking cap, or if the dictionary's
     // lower bound already reaches another codec's exact size
-    dictBodySize: Long
+    dictBodySize: Long,
+    // gcd of every `v - min` as an unsigned value; 0 for a constant chunk
+    gcd: Long,
+    decimal: DecimalLayout
 ) {
   def forWidth: Int = BitPacker.bitsForUnsigned(max - min)
   def bitpackWidth: Int = if (min >= 0) BitPacker.bitsForUnsigned(max) else 64
+  def gcdWidth: Int = ForGcdLongCodec.width(max - min, gcd)
+}
+
+/** What a [[DecimalLongCodec]] block of a chunk holds: the exponent, the
+  * exceptions (their count and the varint bytes of their position gaps)
+  * and the range of the stored integers k = x * 10^e. `e` is -1 when the
+  * chunk's sample is not decimal: the block then stores every value as an
+  * exception.
+  */
+final case class DecimalLayout(e: Int, exceptions: Int, gapBytes: Long,
+    kMin: Long, kMax: Long) {
+  def bodySize(n: Int): Long =
+    1L + PrefixVarInt.len(exceptions.toLong) + PrefixVarInt.len(PrefixVarInt.zigzagEncode(kMin)) +
+      1 + BitPacker.packedSize(n, BitPacker.bitsForUnsigned(kMax - kMin)) + gapBytes + 8L * exceptions
 }
 
 object LongCodecs {
@@ -77,10 +94,13 @@ object LongCodecs {
   /** One-pass stats over values(0 until n). Each value's zigzag length
     * is computed once and serves varint, delta and RLE; distinct values go
     * into a primitive set capped at [[DictCardCap]], and only a value
-    * that starts a run is looked up. The dictionary's sort-and-size step
-    * runs only when its lower bound (one byte per distinct value plus the
-    * packed codes) is below every other codec's exact size; otherwise the
-    * dictionary cannot be chosen and its size is recorded as -1.
+    * that starts a run is looked up. The gcd of the values' distances to
+    * the first value (the divisor frame-of-reference's g) is kept until it
+    * reaches 1. A decimal chunk ([[DecimalLongCodec.layout]]) costs one
+    * more pass. The dictionary's sort-and-size step runs only when its
+    * lower bound ([[dictLowerBound]]) is below every other codec's exact
+    * size; otherwise the dictionary cannot be chosen and its size is
+    * recorded as -1.
     */
   def stats(values: Array[Long], n: Int): LongStats = {
     require(n > 0, "empty chunk")
@@ -95,7 +115,9 @@ object LongCodecs {
     var runLen = 0 // zigzag length of the current run's value
     val set = new LongOpenSet(DictCardCap, n)
     var overflow = false
-    var prev = values(0)
+    val first = values(0)
+    val gcd = new ForGcdLongCodec.Gcd
+    var prev = first
     var i = 0
     while (i < n) {
       val v = values(i)
@@ -117,6 +139,7 @@ object LongCodecs {
           runLen = l
           runCount += 1
           if (!overflow) overflow = !set.add(v)
+          gcd.add(if (v > first) v - first else first - v)
         }
         prev = v
       }
@@ -125,12 +148,15 @@ object LongCodecs {
     rleSize += runLen + PrefixVarInt.len((n - runStart).toLong)
     val card = set.size
     val noDict = LongStats(n, min, max, runCount, card, overflow, hist, varintSize,
-      deltaSize, rleSize, -1L)
+      deltaSize, rleSize, -1L, gcd.g, DecimalLongCodec.layout(values, n))
     if (overflow) return noDict
     val codes = 1 + BitPacker.packedSize(n, BitPacker.bitsForUnsigned((card - 1).toLong))
-    val lowerBound = headerSize(n) + PrefixVarInt.len(card.toLong) + card + codes
-    // ties go to the earlier codec in `all`, and the dictionary is last
-    if (lowerBound >= all.iterator.map(sizeOf(_, noDict)).min) return noDict
+    // ties go to the earlier codec in `all`: the dictionary loses a tie to
+    // the codecs before it and wins one against those after it
+    val lower = dictLowerBound(noDict)
+    val (before, dictAndAfter) = all.span(_ != DictLongCodec)
+    if (before.exists(sizeOf(_, noDict) <= lower) ||
+        dictAndAfter.tail.exists(sizeOf(_, noDict) < lower)) return noDict
     // sorted distinct values stored as first(zigzag) + positive deltas,
     // then n codes bit-packed at bits(card-1)
     val arr = set.sorted()
@@ -140,19 +166,28 @@ object LongCodecs {
     noDict.copy(dictBodySize = dsz + codes)
   }
 
-  /** min and max of values(0 until n): all a narrow column's block needs. */
-  def range(values: Array[Long], n: Int): (Long, Long) = {
-    require(n > 0, "empty chunk")
-    var min = values(0)
-    var max = values(0)
-    var i = 1
-    while (i < n) {
-      val v = values(i)
-      if (v < min) min = v
-      if (v > max) max = v
-      i += 1
-    }
-    (min, max)
+  /** A lower bound on the dictionary block's size that needs no sort. Its
+    * first entry is the chunk's min; each of the card-1 gaps between
+    * sorted distinct values is a multiple of the gcd, so at least gcd;
+    * and in a decimal chunk two decimal values differ by at least
+    * 10^-e - ulp, so their gap in sortable bits is at least
+    * [[DecimalLongCodec.minGap]]. Only the (at most two) gaps beside each
+    * exception escape that last bound.
+    */
+  private[codecs] def dictLowerBound(st: LongStats): Long = {
+    val card = st.distinct
+    val codes = 1 + BitPacker.packedSize(st.count, BitPacker.bitsForUnsigned((card - 1).toLong))
+    val gaps = card - 1L
+    val gcdLen = PrefixVarInt.len(st.gcd).toLong
+    val dec = st.decimal
+    val gapBytes =
+      if (dec.e < 0) gaps * gcdLen
+      else {
+        val free = math.min(gaps, 2L * dec.exceptions)
+        val wide = math.max(PrefixVarInt.len(DecimalLongCodec.minGap(dec)).toLong, gcdLen)
+        free * gcdLen + (gaps - free) * wide
+      }
+    headerSize(st.count) + PrefixVarInt.len(card.toLong) + zlen(st.min) + gapBytes + codes
   }
 
   /** Open-addressing set of longs holding at most `cap` values; `add`
@@ -244,12 +279,15 @@ object LongCodecs {
         else h + 1 + BitPacker.packedSize(st.count, st.bitpackWidth)
       case DictLongCodec =>
         if (st.dictBodySize < 0) Long.MaxValue else h + st.dictBodySize
+      case ForGcdLongCodec =>
+        h + zlen(st.min) + PrefixVarInt.len(st.gcd) + 1 + BitPacker.packedSize(st.count, st.gcdWidth)
+      case DecimalLongCodec => h + st.decimal.bodySize(st.count)
     }
   }
 
   val all: Seq[LongCodec] =
     Seq(VarintLongCodec, DeltaLongCodec, RleLongCodec, ForLongCodec,
-      BitPackLongCodec, DictLongCodec)
+      BitPackLongCodec, DictLongCodec, ForGcdLongCodec, DecimalLongCodec)
 
   /** Stats-driven auto-selection: cheapest exact size wins; ties break
     * toward the earlier codec in `all` (varint first — simplest decode).
@@ -264,6 +302,8 @@ object LongCodecs {
     case 4 => ForLongCodec
     case 5 => BitPackLongCodec
     case 6 => DictLongCodec
+    case 7 => ForGcdLongCodec
+    case 8 => DecimalLongCodec
     case x => throw new IllegalArgumentException(s"unknown long codec id $x")
   }
 
@@ -495,32 +535,326 @@ case object DictLongCodec extends LongCodec {
   }
 }
 
-/** Kind-2 (i32 / `IntegerType`) column blocks: `[count varint][count
-  * zigzag prefix varints]`, decoded under the reference's
-  * overflow-checked NARROW contract — the batch form of the crate's
-  * u16/u32/i32 wrappers (reference: src/core.rs:77-83, 198-203; the
-  * per-value iterator surface is
+/** Frame-of-reference with a common divisor: subtract min, divide by g,
+  * the gcd of every `v - min`, and bit-pack the quotients at the minimal
+  * width. `[min zigzag-varint][g varint][width u8][packed bits]`. Wins on
+  * values on a grid: whole-second timestamps in microseconds, whole
+  * thousands. g = 0 marks a constant chunk. Distances are unsigned, so a
+  * chunk spanning `Long.MinValue` to `Long.MaxValue` needs no guard.
+  */
+case object ForGcdLongCodec extends LongCodec {
+  val id: Byte = 7
+  val name = "for-gcd"
+
+  /** gcd of g and d as unsigned values; gcd(0, d) = d. */
+  def gcd(g: Long, d: Long): Long = {
+    var a = d
+    var b = g
+    while (b != 0L) { val t = java.lang.Long.remainderUnsigned(a, b); a = b; b = t }
+    a
+  }
+
+  /** Bits of the largest quotient, `range / g`. */
+  def width(range: Long, g: Long): Int =
+    if (g == 0L) 0 else BitPacker.bitsForUnsigned(java.lang.Long.divideUnsigned(range, g))
+
+  /** Running gcd of unsigned distances, left alone once it reaches 1. A
+    * distance that g already divides costs one multiply (the odd part's
+    * inverse mod 2^64, Granlund-Montgomery), so a chunk on a fixed grid
+    * divides only when g changes. [[quotient]] divides exactly the same way.
+    */
+  private[codecs] final class Gcd {
+    var g = 0L
+    private var shift = 0
+    private var inv = 0L
+    private var limit = 0L
+
+    def add(d: Long): Unit =
+      if (g != 1L && d != 0L && !divides(d)) {
+        g = gcd(g, d)
+        shift = java.lang.Long.numberOfTrailingZeros(g)
+        val odd = g >>> shift
+        var x = odd // odd * odd = 1 mod 8; each Newton step doubles the bits
+        var k = 0
+        while (k < 5) { x *= 2 - odd * x; k += 1 }
+        inv = x
+        limit = java.lang.Long.divideUnsigned(-1L, odd)
+      }
+
+    @inline private def divides(d: Long): Boolean =
+      g != 0L && java.lang.Long.numberOfTrailingZeros(d) >= shift &&
+        java.lang.Long.compareUnsigned((d >>> shift) * inv, limit) <= 0
+
+    /** d / g for a multiple d of g. */
+    @inline def quotient(d: Long): Long = (d >>> shift) * inv
+  }
+
+  def encode(values: Array[Long], n: Int): Array[Byte] = {
+    var min = values(0)
+    var max = values(0)
+    val acc = new Gcd
+    var i = 1
+    while (i < n) {
+      val v = values(i)
+      if (v < min) min = v
+      if (v > max) max = v
+      acc.add(if (v > values(0)) v - values(0) else values(0) - v)
+      i += 1
+    }
+    val g = acc.g
+    val width = this.width(max - min, g)
+    val quotients = new Array[Long](n)
+    if (g != 0L) {
+      i = 0
+      while (i < n) { quotients(i) = acc.quotient(values(i) - min); i += 1 }
+    }
+    val w = header(n, 24 + BitPacker.packedSize(n, width))
+    w.putSignedVarint(min)
+    w.putVarint(g)
+    w.putByte(width)
+    w.putBytes(BitPacker.pack(quotients, n, width))
+    w.result()
+  }
+
+  def decode(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
+    val (r, n) = openReader(buf, off, end)
+    val min = r.getSignedVarint()
+    val g = r.getVarint()
+    val width = r.getByte()
+    val out = BitPacker.unpack(buf, r.position, n, width)
+    var i = 0
+    while (i < n) { out(i) = min + out(i) * g; i += 1 }
+    out
+  }
+}
+
+/** Decimal doubles, the core of ALP (*Adaptive Lossless floating-Point
+  * Compression*, SIGMOD 2024). The values are DOUBLE sortable bits
+  * ([[DoubleBits]]); a chunk of decimals with at most e fraction digits
+  * is stored as the integers k = round(x * 10^e) by frame-of-reference
+  * and decodes as k / 10^e. One e per chunk, picked on a sample, so data
+  * that is not decimal (BIGINT or timestamp bits read as doubles) is
+  * told apart at once. A value whose bits do not come back exactly
+  * (-0.0, NaN, ±Inf, |x * 10^e| >= 2^51, more digits than e) is an
+  * exception kept at its position with its raw IEEE bits, so decode is
+  * bit-exact for any Long array.
+  * `[e u8][exceptions varint][kMin zigzag-varint][width u8][packed k - kMin]
+  * (position gap varint, raw bits u64 LE)*` — the first gap is the first
+  * position; an exception's k slot holds kMin.
+  */
+case object DecimalLongCodec extends LongCodec {
+  val id: Byte = 8
+  val name = "decimal"
+  final val MaxExp = 18
+  private final val SampleSize = 32
+  // 10^e is exact in a double for e <= 22, and each product rounds exactly
+  private val Pow10: Array[Double] = Array.iterate(1.0, MaxExp + 1)(_ * 10.0)
+  // |x * 10^e| below 2^51 rounds to an integer by adding and taking away
+  // 2^52 + 2^51 (ALP's fast round): the sum's ulp is 1
+  private final val Limit = 2251799813685248.0 // 2^51
+  private final val Magic = 6755399441055744.0 // 2^52 + 2^51
+  private final val NoK = Long.MinValue
+
+  // sortable bits <-> raw IEEE bits (an involution that keeps NaN payloads)
+  @inline private def flip(v: Long): Long = v ^ ((v >> 63) & 0x7fffffffffffffffL)
+
+  /** k with k / 10^e equal to v's double bit for bit, else NoK. */
+  @inline private def kOf(v: Long, p: Double): Long = {
+    val raw = flip(v)
+    val y = java.lang.Double.longBitsToDouble(raw) * p
+    if (!(math.abs(y) < Limit)) return NoK // also NaN
+    val k = (y + Magic) - Magic
+    if (java.lang.Double.doubleToRawLongBits(k / p) == raw) k.toLong else NoK
+  }
+
+  /** The smallest e at which the most of an evenly spaced sample of up to
+    * 32 values round-trips; -1 unless that is at least half the sample
+    * and one of them is not zero (a BIGINT chunk's zeros are decimals).
+    */
+  private def exponent(values: Array[Long], n: Int): Int = {
+    val m = math.min(n, SampleSize)
+    var best = -1
+    var bestHits = 0
+    var e = 0
+    while (e <= MaxExp && bestHits < m) {
+      val p = Pow10(e)
+      var hits = 0
+      var nonZero = false
+      var j = 0
+      while (j < m) {
+        val k = kOf(values((j.toLong * n / m).toInt), p)
+        if (k != NoK) { hits += 1; if (k != 0L) nonZero = true }
+        j += 1
+      }
+      if (nonZero && hits > bestHits) { best = e; bestHits = hits }
+      e += 1
+    }
+    if (2 * bestHits >= m) best else -1
+  }
+
+  /** One pass at exponent e: the layout, and each value's k (NoK for an
+    * exception) into `ks` when it is given.
+    */
+  private def scan(values: Array[Long], n: Int, e: Int, ks: Array[Long]): DecimalLayout = {
+    val p = if (e < 0) 0.0 else Pow10(e)
+    var exceptions = 0
+    var gapBytes = 0L
+    var last = 0
+    var kMin = Long.MaxValue
+    var kMax = Long.MinValue
+    var i = 0
+    while (i < n) {
+      val k = if (e < 0) NoK else kOf(values(i), p)
+      if (ks != null) ks(i) = k
+      if (k == NoK) {
+        gapBytes += PrefixVarInt.len((i - last).toLong)
+        last = i
+        exceptions += 1
+      } else {
+        if (k < kMin) kMin = k
+        if (k > kMax) kMax = k
+      }
+      i += 1
+    }
+    if (exceptions == n) { kMin = 0L; kMax = 0L }
+    DecimalLayout(e, exceptions, gapBytes, kMin, kMax)
+  }
+
+  /** The layout [[encode]] writes for values(0 until n); a chunk whose
+    * sample is not decimal needs no pass: every value is an exception.
+    */
+  def layout(values: Array[Long], n: Int): DecimalLayout = {
+    val e = exponent(values, n)
+    if (e < 0) DecimalLayout(-1, n, n.toLong, 0L, 0L) else scan(values, n, e, null)
+  }
+
+  /** The least gap, in sortable bits, between two distinct decimal values
+    * of a chunk of this layout (at least 1). Both are within
+    * M = (max |k| + 1) / 10^e of zero, where no two neighbouring doubles are
+    * more than ulp(M) apart, and they differ by at least 10^-e - ulp(M).
+    */
+  def minGap(l: DecimalLayout): Long = {
+    val p = Pow10(l.e)
+    val m = (math.max(math.abs(l.kMin.toDouble), math.abs(l.kMax.toDouble)) + 1.0) / p
+    val steps = (1.0 / p) / math.ulp(m) * (1.0 - 1e-9) - 2.0
+    if (steps >= 1.0) steps.toLong else 1L
+  }
+
+  def encode(values: Array[Long], n: Int): Array[Byte] = {
+    val ks = new Array[Long](n)
+    val l = scan(values, n, exponent(values, n), ks)
+    val width = BitPacker.bitsForUnsigned(l.kMax - l.kMin)
+    val w = header(n, 16 + l.bodySize(n).toInt)
+    w.putByte(math.max(l.e, 0))
+    w.putVarint(l.exceptions.toLong)
+    w.putSignedVarint(l.kMin)
+    w.putByte(width)
+    val positions = new Array[Int](l.exceptions)
+    var x = 0
+    var i = 0
+    while (i < n) {
+      if (ks(i) == NoK) { positions(x) = i; x += 1; ks(i) = 0L }
+      else ks(i) -= l.kMin
+      i += 1
+    }
+    w.putBytes(BitPacker.pack(ks, n, width))
+    var last = 0
+    x = 0
+    while (x < positions.length) {
+      w.putVarint((positions(x) - last).toLong)
+      w.putLongLE(flip(values(positions(x))))
+      last = positions(x)
+      x += 1
+    }
+    w.result()
+  }
+
+  def decode(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
+    val (r, n) = openReader(buf, off, end)
+    val e = r.getByte()
+    require(e <= MaxExp, s"decimal exponent $e above $MaxExp")
+    val exceptions = r.getVarint()
+    require(exceptions >= 0 && exceptions <= n, s"$exceptions exceptions in $n rows")
+    val kMin = r.getSignedVarint()
+    val width = r.getByte()
+    val out = BitPacker.unpack(buf, r.position, n, width)
+    r.skip(BitPacker.packedSize(n, width))
+    val p = Pow10(e)
+    var i = 0
+    while (i < n) {
+      out(i) = flip(java.lang.Double.doubleToRawLongBits((kMin + out(i)).toDouble / p))
+      i += 1
+    }
+    var pos = 0L
+    var j = 0
+    while (j < exceptions) {
+      val gap = r.getVarint()
+      require(gap >= (if (j == 0) 0L else 1L) && gap < n - pos,
+        s"decimal exception gap $gap at row $pos of $n")
+      pos += gap
+      out(pos.toInt) = flip(r.getLongLE())
+      j += 1
+    }
+    out
+  }
+}
+
+/** Kind-2 (i32 / `IntegerType`), DATE and FLOAT column blocks, decoded
+  * under the reference's overflow-checked NARROW contract — the batch
+  * form of the crate's u16/u32/i32 wrappers (reference:
+  * src/core.rs:77-83, 198-203; the per-value iterator surface is
   * [[graft.core.BlockReader.varintIteratorI32]]): a well-formed value
-  * outside i32 range raises `DecodeError.Overflow`, a truncated one
-  * `DecodeError.Eob`, so a corrupted or foreign block can never
-  * silently truncate into a wrong int. Encode/decode go through the
-  * BATCH codec APIs (`putSignedVarints` / `readVarints`) — the
-  * per-call cursor methods pay field traffic the JIT won't elide on
-  * this per-chunk hot path.
+  * outside i32 range raises `DecodeError.Overflow`, so a corrupted or
+  * foreign block can never silently truncate into a wrong int.
+  *
+  * A block is `[0x00][long codec block]`: the values go through the one
+  * stats-driven selector of [[LongCodecs]], like BIGINT. Blocks written
+  * before that are `[count varint][count zigzag prefix varints]`; a chunk
+  * has at least one row, so their first byte is never 0x00, and they
+  * still decode.
   */
 object IntCodecs {
 
-  /** Values must each fit i32 (the encoder validates at buffer time). */
-  def encode(values: Array[Long], n: Int): Array[Byte] = {
-    val w = new BlockWriter(8 + n * 2)
-    w.putVarint(n.toLong)
-    w.putSignedVarints(values, 0, n)
-    w.result()
+  /** First byte of a block that holds a long codec block. */
+  final val Marker: Byte = 0
+
+  /** `codec`'s block of values(0 until n), each of which fits i32 (the
+    * encoder validates at buffer time), behind the marker byte.
+    */
+  def encode(codec: LongCodec, values: Array[Long], n: Int): Array[Byte] = {
+    val block = codec.encode(values, n)
+    val out = new Array[Byte](block.length + 1)
+    out(0) = Marker
+    System.arraycopy(block, 0, out, 1, block.length)
+    out
   }
+
+  /** The block the selector picks for values(0 until n). */
+  def encode(values: Array[Long], n: Int): Array[Byte] =
+    encode(LongCodecs.select(LongCodecs.stats(values, n)), values, n)
 
   def decodeSlice(buf: Array[Byte], off: Int, end: Int): Array[Int] = {
     require(off >= 0 && off < end && end <= buf.length,
       "empty or out-of-range int block slice")
+    val raw =
+      if (buf(off) == Marker) LongCodecs.decodeSlice(buf, off + 1, end)
+      else varints(buf, off, end)
+    val out = new Array[Int](raw.length)
+    var i = 0
+    while (i < raw.length) {
+      val v = raw(i)
+      if (v != v.toInt.toLong) throw new graft.core.DecodeError.Overflow
+      out(i) = v.toInt
+      i += 1
+    }
+    out
+  }
+
+  /** The values of a block written before the marker: the BATCH varint
+    * API (`readSignedVarints`), since the per-call cursor methods pay
+    * field traffic the JIT won't elide on this per-chunk hot path.
+    */
+  private def varints(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
     val r = new BlockReader(buf, off, end)
     val n = {
       val l = r.getVarint()
@@ -533,14 +867,6 @@ object IntCodecs {
     // tail loop runs to the cursor's end): fewer decoded values than
     // claimed means the block is truncated
     if (r.readSignedVarints(raw, 0, n) < n) graft.core.DecodeError.eob()
-    val out = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val v = raw(i)
-      if (v != v.toInt.toLong) throw new graft.core.DecodeError.Overflow
-      out(i) = v.toInt
-      i += 1
-    }
-    out
+    raw
   }
 }

@@ -403,24 +403,18 @@ object ColumnarEngine {
             }
             // an all-null chunk has no real values: record no range at all
             val hasRange = nc < n
-            if (l.narrow) {
-              // narrow i32 column (int / date days / float sortable bits):
-              // zigzag-varint block behind the overflow-checked narrow
-              // decode ([[graft.codecs.IntCodecs]]); the block carries its
-              // true kind, and only its range is needed
-              val (min, max) = LongCodecs.range(vals, n)
-              writeCol(b, IntCodecs.encode(vals, n), "varint-i32",
-                4L * n, min, max, hasRange, bm, nullCount)
-            } else {
-              // wide int64 column (long / timestamp micros / double
-              // sortable bits / decimal unscaled / boolean 0-1):
-              // stats-selected codec through the kind-0 machinery
-              // (booleans bit-pack to ~1 bit)
-              val st = LongCodecs.stats(vals, n)
-              val codec = LongCodecs.select(st)
-              writeCol(b, codec.encode(vals, n), codec.name,
-                8L * n, st.min, st.max, hasRange, bm, nullCount)
-            }
+            // int64 columns (long / timestamp micros / double sortable
+            // bits / decimal unscaled / boolean 0-1) and narrow i32 ones
+            // (int / date days / float sortable bits) alike: the
+            // stats-selected long codec (booleans bit-pack to ~1 bit); a
+            // narrow block carries the marker byte of the overflow-checked
+            // narrow decode ([[graft.codecs.IntCodecs]])
+            val st = LongCodecs.stats(vals, n)
+            val codec = LongCodecs.select(st)
+            val block =
+              if (l.narrow) IntCodecs.encode(codec, vals, n) else codec.encode(vals, n)
+            writeCol(b, block, codec.name, (if (l.narrow) 4L else 8L) * n,
+              st.min, st.max, hasRange, bm, nullCount)
           case s: BytesBuffer if s.utf8 =>
             val strs = s.column(n)
             val st = StringCodecs.stats(strs)

@@ -19,8 +19,9 @@ private[graft] sealed abstract class Stored(val weight: Int)
 private[graft] object Stored {
   /** int64 through the stats-selected long codecs. */
   case object WideLong extends Stored(0)
-  /** int32 zigzag varints behind the overflow-checked narrow decode
-    * ([[graft.codecs.IntCodecs]]); an out-of-i32 put is rejected.
+  /** int32 through the same stats-selected long codecs, behind the
+    * overflow-checked narrow decode ([[graft.codecs.IntCodecs]]); an
+    * out-of-i32 put is rejected.
     */
   case object NarrowInt extends Stored(0)
   case object Utf8 extends Stored(1)

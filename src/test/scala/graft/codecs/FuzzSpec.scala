@@ -84,8 +84,11 @@ class FuzzSpec extends AnyFunSuite {
       Array.fill(500)(7L), // rle-friendly
       Array.tabulate(500)(i => (i % 9).toLong), // dict/bitpack-friendly
       Array.tabulate(500)(i => -250L + i)) // FoR with negatives
+    // the codecs before the divisor and decimal ones: the new blocks below
+    // have their own generator, so these keep their mutations
     val longBlocks = for {
       vs <- longShapes; c <- LongCodecs.all
+      if c != ForGcdLongCodec && c != DecimalLongCodec
       if c != BitPackLongCodec || vs.forall(_ >= 0)
     } yield c.encode(vs)
     val words = Array("alpha", "beta", "gamma", "the quick brown fox", "", "日本語テキスト")
@@ -124,6 +127,30 @@ class FuzzSpec extends AnyFunSuite {
         controlled(s"str block mut $k")(StringCodecs.decodeSlice(m, 0, m.length))
         controlled(s"str block trunc $k")(
           StringCodecs.decodeSlice(block, 0, 1 + rnd.nextInt(block.length)))
+        k += 1
+      }
+    }
+    // a decimal-double block with exceptions, a divisor frame-of-reference
+    // block and a narrow block behind its marker, on their own generator
+    val nrnd = new java.util.Random(2020L)
+    val specials = Array(-0.0, Double.NaN, Double.PositiveInfinity, 1e300, math.Pi)
+    val cents = Array.tabulate(500)(i => DoubleBits.toSortableLong(
+      if (i % 25 == 3) specials(i / 25 % specials.length) else nrnd.nextInt(10000000) / 100.0))
+    val seconds = Array.fill(500)(1_700_000_000_000_000L + nrnd.nextInt(1 << 28) * 1000000L)
+    val decimal = DecimalLongCodec.encode(cents)
+    assert(LongCodecs.decode(decimal).toSeq === cents.toSeq)
+    val newBlocks: Seq[(String, Array[Byte], Array[Byte] => Any)] = Seq(
+      ("decimal", decimal, b => LongCodecs.decodeSlice(b, 0, b.length)),
+      ("for-gcd", ForGcdLongCodec.encode(seconds), b => LongCodecs.decodeSlice(b, 0, b.length)),
+      ("narrow", IntCodecs.encode(Array.fill(500)(nrnd.nextInt().toLong), 500),
+        b => IntCodecs.decodeSlice(b, 0, b.length)))
+    for ((label, block, decode) <- newBlocks) {
+      var k = 0
+      while (k < 800) {
+        val m = block.clone()
+        m(nrnd.nextInt(m.length)) = nrnd.nextInt(256).toByte
+        controlled(s"$label block mut $k")(decode(m))
+        controlled(s"$label block trunc $k")(decode(block.take(1 + nrnd.nextInt(block.length))))
         k += 1
       }
     }

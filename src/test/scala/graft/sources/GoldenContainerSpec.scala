@@ -77,7 +77,7 @@ class GoldenContainerSpec extends AnyFunSuite {
     assert(ms.size === 1 && ms.head.rows === 300L && ms.head.chunks === 5)
     val gblk = sha256Hex(Files.readAllBytes(Paths.get(d, "blocks", blocks.head)))
     assert(gblk ===
-      "bdf1787871de46b147b931b49eff7f7edeb9d27b474b05e76c4d26ef6c081790",
+      "26817b95cf2df288148a0d72adfd735f5066cb7c3f82595c0dee55d5528f965c",
       "container bytes changed")
     assert(ms.head.digest ===
       "14ac5d91089597e1bfb15f3f88e6974051039b152045ade266d2b4cc64feb309",
@@ -97,11 +97,76 @@ class GoldenContainerSpec extends AnyFunSuite {
     val gblk = sha256Hex(Files.readAllBytes(
       Paths.get(d, "blocks", s"part-${ms.head.name}.gblk")))
     assert(gblk ===
-      "c5970fbcda38d319bdf12d6054350c370950a49bbe39871f0ec3bb16f4867738",
+      "4b86453ceb02bcd78d4f0e66225281677e019e40457d1f5e600fc7d0e05120bf",
       "compacted container bytes changed")
     assert(ms.head.digest ===
       "15f0feccfe40c0b0d4241e4a19669f31c14a79bcbeb8d9126f6f1b67aaf546f8",
       "compacted manifest digest changed")
+  }
+
+  /** A copy, in a fresh directory, of a golden table written by an
+    * earlier writer and kept under the test resources.
+    */
+  private def fixture(name: String): String = {
+    val src = Paths.get(getClass.getResource(s"/golden-pre-selector/$name").toURI)
+    val dst = TestDirs.createTempDirectory(s"graft-pre-selector-$name")
+    val files = Files.walk(src)
+    try files.forEach { p =>
+      val t = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally files.close()
+    dst.toString
+  }
+
+  private def sorted(df: org.apache.spark.sql.DataFrame): Seq[Row] =
+    df.orderBy("id").collect().toSeq
+
+  // the two tables above as the writer before the narrow selector and the
+  // divisor and decimal codecs wrote them (recorded at a341214 from a
+  // `git archive` copy): INT/DATE/FLOAT in `varint-i32` blocks
+  test("golden containers written before the narrow selector still read their rows") {
+    val conf = ContainerIO.localConf()
+    val expected = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    for ((name, copies, chunks) <- Seq(("every-kind", 1, 5), ("compacted", 2, 1))) {
+      val d = fixture(name)
+      val ms = Manifests.readCommitted(conf, d)
+      assert(ms.size === 1 && ms.head.rows === 300L * copies && ms.head.chunks === chunks, name)
+      assert(ms.head.columns.filter(c => Set("n32", "day", "f32")(c.column))
+        .forall(_.codec.split('+').forall(_ == "varint-i32")), name)
+      val want = sorted((1 until copies).foldLeft(expected)((df, _) => df.union(expected)))
+      assert(sorted(spark.read.format("graft").load(d)) === want, name)
+    }
+  }
+
+  test("narrow columns through the long selector: INT extremes, DATE and FLOAT with NULLs") {
+    val narrow = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("i", IntegerType, nullable = true),
+      StructField("d", DateType, nullable = true),
+      StructField("f", FloatType, nullable = true)))
+    val floats = Array(Float.NaN, -0.0f, 0.0f, Float.PositiveInfinity, Float.NegativeInfinity,
+      Float.MinPositiveValue, Float.MaxValue, -1.5f, 0.1f)
+    val data = (0 until 1000).map { i =>
+      Row(i.toLong,
+        if (i % 5 == 0) null else Seq(Int.MinValue, Int.MaxValue, i, -i)(i % 4),
+        if (i % 3 == 0) null else java.sql.Date.valueOf(
+          java.time.LocalDate.of(2024, 1, 1).plusDays((i % 400).toLong)),
+        if (i % 7 == 0 || i >= 900) null else floats(i % floats.length))
+    }
+    val d = TestDirs.createTempDirectory("graft-narrow").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(data, 1), narrow)
+      .write.format("graft").option("chunkRows", "100").mode("overwrite").save(d)
+    val ms = Manifests.readCommitted(ContainerIO.localConf(), d)
+    assert(ms.flatMap(_.columns).filter(_.column != "id").forall(!_.codec.contains("varint-i32")))
+    val got = sorted(spark.read.format("graft").load(d))
+    assert(got.size === data.size)
+    got.zip(data).foreach { case (g, w) =>
+      assert(g.get(1) === w.get(1) && g.get(2) === w.get(2), s"row ${w.getLong(0)}")
+      assert(g.isNullAt(3) === w.isNullAt(3), s"row ${w.getLong(0)}")
+      if (!w.isNullAt(3))
+        assert(java.lang.Float.floatToIntBits(g.getFloat(3)) ===
+          java.lang.Float.floatToIntBits(w.getFloat(3)), s"row ${w.getLong(0)}")
+    }
   }
 
   test("chunk boundaries: binary bytes count as bytes, string chars as UTF-16 chars") {
