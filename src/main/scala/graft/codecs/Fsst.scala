@@ -450,12 +450,9 @@ object Fsst {
         prevLen = segLen
         pos += segLen
       }
-      // candidates in gain desc, then len desc, then packed unsigned asc
-      // (fully deterministic) off a heap: only the ones taken are ordered.
-      // A symbol whose gain is no more than its table entry costs is never
-      // admitted, so it never enters the heap.
-      //
-      // selection mirrors the encode lookup's single-slot constraint: at
+      // candidates in selection order ([[Candidates]]); only the ones
+      // taken are ordered.
+      // Selection mirrors the encode lookup's single-slot constraint: at
       // most ONE len>=3 symbol per hash slot (the first in gain order —
       // the slot's eventual winner under first-wins), so none of the 255
       // codes is wasted on a symbol the lookup could never return

@@ -117,6 +117,7 @@ object LongCodecs {
     var overflow = false
     val first = values(0)
     val gcd = new ForGcdLongCodec.Gcd
+    var gcdLive = true // false once g is 1: most chunks pay one branch
     var prev = first
     var i = 0
     while (i < n) {
@@ -139,7 +140,10 @@ object LongCodecs {
           runLen = l
           runCount += 1
           if (!overflow) overflow = !set.add(v)
-          gcd.add(if (v > first) v - first else first - v)
+          if (gcdLive) {
+            gcd.add(if (v > first) v - first else first - v)
+            gcdLive = gcd.g != 1L
+          }
         }
         prev = v
       }
@@ -547,7 +551,7 @@ case object ForGcdLongCodec extends LongCodec {
   val name = "for-gcd"
 
   /** gcd of g and d as unsigned values; gcd(0, d) = d. */
-  def gcd(g: Long, d: Long): Long = {
+  private def gcd(g: Long, d: Long): Long = {
     var a = d
     var b = g
     while (b != 0L) { val t = java.lang.Long.remainderUnsigned(a, b); a = b; b = t }
