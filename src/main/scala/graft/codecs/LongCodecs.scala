@@ -72,8 +72,10 @@ final case class LongStats(
 final case class DecimalLayout(e: Int, exceptions: Int, gapBytes: Long,
     kMin: Long, kMax: Long) {
   def bodySize(n: Int): Long =
-    1L + PrefixVarInt.len(exceptions.toLong) + PrefixVarInt.len(PrefixVarInt.zigzagEncode(kMin)) +
-      1 + BitPacker.packedSize(n, BitPacker.bitsForUnsigned(kMax - kMin)) + gapBytes + 8L * exceptions
+    1L + PrefixVarInt.len(exceptions.toLong) +
+      PrefixVarInt.len(PrefixVarInt.zigzagEncode(kMin)) + 1 +
+      BitPacker.packedSize(n, BitPacker.bitsForUnsigned(kMax - kMin)) +
+      gapBytes + 8L * exceptions
 }
 
 object LongCodecs {
@@ -284,7 +286,8 @@ object LongCodecs {
       case DictLongCodec =>
         if (st.dictBodySize < 0) Long.MaxValue else h + st.dictBodySize
       case ForGcdLongCodec =>
-        h + zlen(st.min) + PrefixVarInt.len(st.gcd) + 1 + BitPacker.packedSize(st.count, st.gcdWidth)
+        h + zlen(st.min) + PrefixVarInt.len(st.gcd) + 1 +
+          BitPacker.packedSize(st.count, st.gcdWidth)
       case DecimalLongCodec => h + st.decimal.bodySize(st.count)
     }
   }
