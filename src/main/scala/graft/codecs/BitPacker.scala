@@ -43,14 +43,10 @@ object BitPacker {
     dst
   }
 
-  // unaligned little-endian word loads for the unpack fast path
-  private val LONG_LE: java.lang.invoke.VarHandle =
-    java.lang.invoke.MethodHandles.byteArrayViewVarHandle(
-      classOf[Array[Long]], java.nio.ByteOrder.LITTLE_ENDIAN)
-
   /** Unpack `n` values of `width` bits each from `bytes` starting at `off`. */
   def unpack(bytes: Array[Byte], off: Int, n: Int, width: Int): Array[Long] = {
     require(width >= 0 && width <= 64, s"bit width $width out of range [0, 64]")
+    require(off >= 0, s"negative offset $off")
     if (width != 0 && bytes.length - off < packedSize(n, width))
       graft.core.DecodeError.eob() // validate BEFORE allocating the output
     val out = new Array[Long](n)
@@ -59,12 +55,15 @@ object BitPacker {
     var bitPos = 0L
     var i = 0
     // fast path (width <= 57: any value plus its bit offset fits one
-    // 8-byte load): single unaligned word load, shift, mask
+    // 8-byte load): single unaligned word load, shift, mask. `Mem` does
+    // not check bounds: value i loads 8 bytes at off + (i * width >>> 3),
+    // so the first `fast` values are those whose load starts at or before
+    // safeEnd = bytes.length - 8
     if (width <= 57) {
-      val safeEnd = bytes.length - 8
-      while (i < n && off + (bitPos >>> 3) <= safeEnd) {
-        val byteOff = off + (bitPos >>> 3).toInt
-        val w: Long = LONG_LE.get(bytes, byteOff)
+      val room = bytes.length - 8 - off // safeEnd - off
+      val fast = if (room < 0) 0 else math.min(n.toLong, (room * 8L + 7) / width + 1).toInt
+      while (i < fast) {
+        val w = graft.core.Mem.getLongLE(bytes, off + (bitPos >>> 3).toInt)
         out(i) = (w >>> (bitPos & 7L).toInt) & mask
         bitPos += width
         i += 1

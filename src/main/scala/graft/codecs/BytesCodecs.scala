@@ -1,6 +1,7 @@
 package graft.codecs
 
-import graft.core.{BlockReader, BlockWriter}
+import graft.core.{BlockReader, BlockWriter, Mem, PrefixVarInt}
+import org.apache.spark.unsafe.Platform
 
 /** Decoded float-array column (kind 7): flat float pool + per-row
   * (offset, len) slices — the embedding shape. The reader hands rows
@@ -27,16 +28,28 @@ final class FloatsColumn(val pool: Array[Float], val offsets: Array[Int],
   * [[Utf8Column]] slice shape (it is just (pool, offsets, lens) over
   * bytes); decode is zero-copy.
   *
-  * ARRAY<FLOAT> (id 33, "f32-raw"): varint n, per-row dim varints, then
-  * the packed little-endian IEEE-754 floats. Embedding floats are
-  * near-random in the low mantissa bits — raw 4-byte storage is the
-  * right baseline (byte-exact, SIMD-friendly bulk copies through a
-  * little-endian FloatBuffer view).
+  * ARRAY<FLOAT> blocks start with varint n and the per-row dim varints;
+  * each chunk writes the smaller of two bodies, ties to raw:
+  *  - id 33, "f32-raw": the packed little-endian IEEE-754 floats;
+  *  - id 34, "f32-rd": ALP's scheme for real floats (*ALP: Adaptive
+  *    Lossless floating-Point Compression*, SIGMOD 2024). Embedding
+  *    floats are near-random in their low bits, but their sign, exponent
+  *    and top mantissa bits take few values. Each float's raw bits split
+  *    at one right width r (16..31) per chunk: the left part
+  *    (`bits >>> r`) is a code into a dictionary of at most 8 values, the
+  *    right part is bit-packed at r bits, and a left part outside the
+  *    dictionary is an exception kept at its position.
+  *    `[r u8][dict size u8][dict u16 LE*][exceptions varint]
+  *    [packed codes][packed right parts][(position gap varint, left u16 LE)*]`
+  *    — codes are packed at the bits of (dict size - 1), the first gap is
+  *    the first position, and an exception's code slot holds 0.
+  * Both decode every bit pattern exactly, NaN payloads included.
   */
 object BytesCodecs {
 
   final val BinRawId = 32
   final val F32RawId = 33
+  final val F32RdId = 34
   /** Per-value caps mirror the string path's MaxValueChars discipline. */
   final val MaxBinaryBytes: Int = 64 << 20
   final val MaxFloatDim: Int = 1 << 20
@@ -52,38 +65,121 @@ object BytesCodecs {
 
   // -------------------------------------------------------- float array
 
-  def encodeFloats(col: FloatsColumn): Array[Byte] = {
-    val n = col.n
+  /** The chunk's smaller float block and its codec name: `f32-rd` only
+    * when its body is strictly smaller than the raw floats.
+    */
+  def encodeFloats(col: FloatsColumn): (String, Array[Byte]) = {
+    val bits = rawBits(col)
+    val rd = Rd.layout(bits)
+    if (rd.bodySize < 4L * bits.length) ("f32-rd", encodeRd(col, bits, rd))
+    else ("f32-raw", encodeRaw(col, bits.length))
+  }
+
+  private[codecs] def encodeRaw(col: FloatsColumn): Array[Byte] =
+    encodeRaw(col, floatsOf(col))
+
+  private[codecs] def encodeRd(col: FloatsColumn): Array[Byte] = {
+    val bits = rawBits(col)
+    encodeRd(col, bits, Rd.layout(bits))
+  }
+
+  /** The column's float count; its raw block must fit an array. */
+  private def floatsOf(col: FloatsColumn): Int = {
     var total = 0L
     var i = 0
-    while (i < n) { total += col.lens(i); i += 1 }
-    require(total * 4 <= Int.MaxValue - 16L - n * 2L,
+    while (i < col.n) { total += col.lens(i); i += 1 }
+    require(total * 4 <= Int.MaxValue - 16L - col.n * 2L,
       s"float payload overflows a block: $total floats")
-    val bytes = (total * 4).toInt
-    val w = new BlockWriter(bytes + n * 2 + 16)
-    w.putByte(F32RawId)
+    total.toInt
+  }
+
+  /** Every float of the column in row order, as its raw IEEE bits. */
+  private def rawBits(col: FloatsColumn): Array[Int] = {
+    val n = col.n
+    val bits = new Array[Int](floatsOf(col))
+    var t = 0
+    var i = 0
+    while (i < n) {
+      var j = col.offsets(i)
+      val e = j + col.lens(i)
+      while (j < e) { bits(t) = java.lang.Float.floatToRawIntBits(col.pool(j)); t += 1; j += 1 }
+      i += 1
+    }
+    bits
+  }
+
+  /** The block's id, n and dims, with room for `body` more bytes. */
+  private def header(id: Int, col: FloatsColumn, body: Long): BlockWriter = {
+    val n = col.n
+    val w = new BlockWriter((body + n * 2L + 16).toInt)
+    w.putByte(id)
     w.putVarint(n.toLong)
-    i = 0
+    var i = 0
     while (i < n) { w.putVarint(col.lens(i).toLong); i += 1 }
+    w
+  }
+
+  private def encodeRaw(col: FloatsColumn, total: Int): Array[Byte] = {
+    val bytes = total * 4
+    val w = header(F32RawId, col, bytes)
     val fb = java.nio.ByteBuffer.wrap(w.reserveRaw(bytes), w.rawPos, bytes)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).asFloatBuffer()
-    i = 0
-    while (i < n) { fb.put(col.pool, col.offsets(i), col.lens(i)); i += 1 }
+    var i = 0
+    while (i < col.n) { fb.put(col.pool, col.offsets(i), col.lens(i)); i += 1 }
     w.advance(bytes)
     w.result()
   }
 
+  private def encodeRd(col: FloatsColumn, bits: Array[Int], l: Rd.Layout): Array[Byte] = {
+    val total = bits.length
+    val w = header(F32RdId, col, l.bodySize)
+    w.putByte(l.r)
+    w.putByte(l.dict.length)
+    l.dict.foreach { v => w.putByte(v); w.putByte(v >>> 8) }
+    w.putVarint(l.exceptions.toLong)
+    val codes = new Array[Int](total)
+    val exceptions = new Array[Int](l.exceptions)
+    var x = 0
+    var i = 0
+    while (i < total) {
+      val c = l.codeOf(bits(i) >>> l.r)
+      if (c < 0) { exceptions(x) = i; x += 1 } else codes(i) = c
+      i += 1
+    }
+    val packed = BitPacker.packedSize(total, l.codeWidth) + BitPacker.packedSize(total, l.r)
+    val dst = w.reserveRaw(packed)
+    Rd.pack(bits, total, l.r, dst,
+      Rd.pack(codes, total, l.codeWidth, dst, w.rawPos))
+    w.advance(packed)
+    var last = 0
+    x = 0
+    while (x < exceptions.length) {
+      val left = bits(exceptions(x)) >>> l.r
+      w.putVarint((exceptions(x) - last).toLong)
+      w.putByte(left)
+      w.putByte(left >>> 8)
+      last = exceptions(x)
+      x += 1
+    }
+    w.result()
+  }
+
+  /** A float block of either id. */
   def decodeFloats(buf: Array[Byte], off: Int, end: Int): FloatsColumn = {
     require(off >= 0 && off < end && end <= buf.length,
       "empty or out-of-range block slice")
     val r = new BlockReader(buf, off, end)
     val id = r.getByte()
-    require(id == F32RawId, s"unknown bytes-codec id $id (want $F32RawId)")
+    require(id == F32RawId || id == F32RdId,
+      s"unknown bytes-codec id $id (want $F32RawId or $F32RdId)")
     val nv = r.getVarint()
-    require(nv >= 0 && nv <= LongCodecs.MaxDecodeRows, s"implausible row count $nv")
+    require(nv >= 0 && nv <= LongCodecs.MaxDecodeRows && nv <= r.remaining,
+      s"implausible row count $nv")
     val n = nv.toInt
     val lens = new Array[Int](n)
     val offs = new Array[Int](n)
+    // a raw float takes 4 bytes and an rd one at least its 16 right bits
+    val minBytes = if (id == F32RawId) 4 else 2
     var total = 0L
     var i = 0
     while (i < n) {
@@ -92,15 +188,209 @@ object BytesCodecs {
       lens(i) = d.toInt
       offs(i) = total.toInt
       total += d
-      require(total * 4 <= r.remaining,
+      require(total * minBytes <= r.remaining,
         "float payload shorter than its declared dims")
       i += 1
     }
-    require(total * 4 == r.remaining, "float block has trailing bytes")
     val pool = new Array[Float](total.toInt)
-    java.nio.ByteBuffer.wrap(buf, r.position, pool.length * 4)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .asFloatBuffer().get(pool)
+    if (id == F32RawId) {
+      require(total * 4 == r.remaining, "float block has trailing bytes")
+      java.nio.ByteBuffer.wrap(buf, r.position, pool.length * 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .asFloatBuffer().get(pool)
+    } else Rd.decode(r, buf, pool)
     new FloatsColumn(pool, offs, lens)
+  }
+
+  /** The `f32-rd` body: its layout choice, packing and decode. */
+  private object Rd {
+    final val MinRight = 16
+    final val MaxDict = 8
+    // what an exception costs the layout choice: its left part and a
+    // one-byte gap
+    private final val ExceptionBits = 24
+
+    /** One chunk's split: right width, dictionary (most frequent first),
+      * and the exact body size with its exception count.
+      */
+    final class Layout(val r: Int, val dict: Array[Int], lookup: Array[Byte],
+                       val exceptions: Int, val bodySize: Long) {
+      def codeWidth: Int = BitPacker.bitsForUnsigned(dict.length - 1L)
+      /** The code of a left part, -1 outside the dictionary. */
+      def codeOf(left: Int): Int = lookup(left)
+    }
+
+    /** One histogram of the top 16 bits prices every left width 1..16
+      * with every dictionary size 1..8 (its most frequent left parts);
+      * the cheapest wins, ties to the wider left part and the smaller
+      * dictionary. One pass then counts the chosen split's exceptions.
+      */
+    def layout(bits: Array[Int]): Layout = {
+      val total = bits.length.toLong
+      var h = new Array[Int](1 << MinRight)
+      var i = 0
+      while (i < bits.length) { h(bits(i) >>> MinRight) += 1; i += 1 }
+      val topV = new Array[Int](MaxDict)
+      val topC = new Array[Int](MaxDict)
+      var bestCost = Long.MaxValue
+      var bestL = 32 - MinRight
+      var bestDict = Array(0)
+      var l = 32 - MinRight
+      while (l >= 1) {
+        if (l < 32 - MinRight) {
+          val g = new Array[Int](1 << l)
+          var j = 0
+          while (j < g.length) { g(j) = h(2 * j) + h(2 * j + 1); j += 1 }
+          h = g
+        }
+        // the most frequent left parts, count descending, ties to the
+        // smaller value
+        var k = 0
+        var v = 0
+        while (v < h.length) {
+          val c = h(v)
+          if (c > 0 && (k < MaxDict || c > topC(k - 1))) {
+            var p = if (k < MaxDict) k else k - 1
+            while (p > 0 && topC(p - 1) < c) {
+              topC(p) = topC(p - 1); topV(p) = topV(p - 1); p -= 1
+            }
+            topC(p) = c
+            topV(p) = v
+            if (k < MaxDict) k += 1
+          }
+          v += 1
+        }
+        var covered = 0L
+        var d = 1
+        while (d <= k) {
+          covered += topC(d - 1)
+          val cost = total * (BitPacker.bitsForUnsigned(d - 1L) + 32 - l) +
+            (total - covered) * ExceptionBits + 16L * d
+          if (cost < bestCost) {
+            bestCost = cost
+            bestL = l
+            bestDict = java.util.Arrays.copyOf(topV, d)
+          }
+          d += 1
+        }
+        l -= 1
+      }
+      val r = 32 - bestL
+      val lookup = Array.fill[Byte](1 << bestL)(-1)
+      bestDict.indices.foreach(c => lookup(bestDict(c)) = c.toByte)
+      var exceptions = 0
+      var gapBytes = 0L
+      var last = 0
+      i = 0
+      while (i < bits.length) {
+        if (lookup(bits(i) >>> r) < 0) {
+          gapBytes += PrefixVarInt.len((i - last).toLong)
+          last = i
+          exceptions += 1
+        }
+        i += 1
+      }
+      val body = 2L + 2 * bestDict.length + PrefixVarInt.len(exceptions.toLong) +
+        BitPacker.packedSize(bits.length, BitPacker.bitsForUnsigned(bestDict.length - 1L)) +
+        BitPacker.packedSize(bits.length, r) + gapBytes + 2L * exceptions
+      new Layout(r, bestDict, lookup, exceptions, body)
+    }
+
+    /** Packs the low `width` bits of vs(0 until n) from dst(off) in
+      * [[BitPacker]]'s layout; returns the end offset.
+      */
+    def pack(vs: Array[Int], n: Int, width: Int, dst: Array[Byte], off: Int): Int = {
+      val mask = (1L << width) - 1
+      var acc = 0L
+      var bits = 0
+      var p = off
+      var i = 0
+      while (i < n) {
+        acc |= (vs(i) & mask) << bits
+        bits += width
+        while (bits >= 8) { dst(p) = acc.toByte; p += 1; acc >>>= 8; bits -= 8 }
+        i += 1
+      }
+      if (bits > 0) { dst(p) = acc.toByte; p += 1 }
+      p
+    }
+
+    /** The word at byte `off` of `buf`, little-endian; past the last
+      * whole word, the bytes that remain.
+      */
+    @inline private def word(buf: Array[Byte], off: Int, safeEnd: Int): Long =
+      if (off <= safeEnd) Mem.getLongLE(buf, off) else tail(buf, off)
+
+    private def tail(buf: Array[Byte], off: Int): Long = {
+      var v = 0L
+      var j = 0
+      while (off + j < buf.length) { v |= (buf(off + j) & 0xffL) << (8 * j); j += 1 }
+      v
+    }
+
+    /** Decodes the body at `r` into `pool` (its size is the dims' total)
+      * as raw bits. Sizes are checked before any allocation or read. Both
+      * packed streams are read in place: [[BitPacker.unpack]] would hold
+      * 16 bytes a float besides the pool.
+      */
+    def decode(r: BlockReader, buf: Array[Byte], pool: Array[Float]): Unit = {
+      val total = pool.length
+      val rw = r.getByte()
+      require(rw >= MinRight && rw <= 31, s"f32-rd right width $rw outside [$MinRight, 31]")
+      val dn = r.getByte()
+      require(dn >= 1 && dn <= MaxDict, s"f32-rd dictionary of $dn entries")
+      val leftCap = 1 << (32 - rw)
+      // padded to 8: a code past the dictionary reads 0, then fails below
+      val dict = new Array[Int](MaxDict)
+      var c = 0
+      while (c < dn) {
+        dict(c) = r.getByte() | (r.getByte() << 8)
+        require(dict(c) < leftCap, s"f32-rd left part ${dict(c)} wider than ${32 - rw} bits")
+        c += 1
+      }
+      val exceptions = r.getVarint()
+      require(exceptions >= 0 && exceptions <= total, s"$exceptions exceptions in $total floats")
+      val cw = BitPacker.bitsForUnsigned(dn - 1L)
+      val codeBytes = (total.toLong * cw + 7) >>> 3
+      val rightBytes = (total.toLong * rw + 7) >>> 3
+      // each exception takes at least a gap byte and its left part
+      require(codeBytes + rightBytes + 3L * exceptions <= r.remaining,
+        "f32-rd body shorter than its floats")
+      val codesAt = r.position
+      val rightsAt = codesAt + codeBytes.toInt
+      r.skip((codeBytes + rightBytes).toInt)
+      val cMask = (1 << cw) - 1
+      val rMask = (1 << rw) - 1
+      val safeEnd = buf.length - 8
+      var cb = codesAt.toLong << 3
+      var rb = rightsAt.toLong << 3
+      var bad = 0
+      var i = 0
+      while (i < total) {
+        val code = (word(buf, (cb >>> 3).toInt, safeEnd) >>> (cb & 7).toInt).toInt & cMask
+        val right = (word(buf, (rb >>> 3).toInt, safeEnd) >>> (rb & 7).toInt).toInt & rMask
+        bad |= dn - 1 - code
+        Platform.putInt(pool, Platform.FLOAT_ARRAY_OFFSET + 4L * i, (dict(code) << rw) | right)
+        cb += cw
+        rb += rw
+        i += 1
+      }
+      require(bad >= 0, "f32-rd code outside its dictionary")
+      var pos = 0L
+      var j = 0
+      while (j < exceptions) {
+        val gap = r.getVarint()
+        require(gap >= (if (j == 0) 0L else 1L) && gap < total - pos,
+          s"f32-rd exception gap $gap at float $pos of $total")
+        pos += gap
+        val left = r.getByte() | (r.getByte() << 8)
+        require(left < leftCap, s"f32-rd left part $left wider than ${32 - rw} bits")
+        val at = (rightsAt.toLong << 3) + pos * rw
+        val right = (word(buf, (at >>> 3).toInt, safeEnd) >>> (at & 7).toInt).toInt & rMask
+        Platform.putInt(pool, Platform.FLOAT_ARRAY_OFFSET + 4L * pos, (left << rw) | right)
+        j += 1
+      }
+      require(!r.hasRemaining, "float block has trailing bytes")
+    }
   }
 }

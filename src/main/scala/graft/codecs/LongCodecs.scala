@@ -320,6 +320,15 @@ object LongCodecs {
     require(off >= 0 && off < end && end <= buf.length, "empty or out-of-range block slice")
     byId(buf(off) & 0xff).decode(buf, off, end)
   }
+
+  /** A DOUBLE column's block as doubles: a `decimal` block straight from
+    * its integers, any other block through its sortable bits.
+    */
+  def decodeDoubles(buf: Array[Byte], off: Int, end: Int): Array[Double] = {
+    require(off >= 0 && off < end && end <= buf.length, "empty or out-of-range block slice")
+    if (buf(off) == DecimalLongCodec.id) DecimalLongCodec.decodeDoubles(buf, off, end)
+    else DoubleBits.toDoubles(decodeSlice(buf, off, end))
+  }
 }
 
 /** Zigzag + prefix-varint per value — the reference codec itself, applied
@@ -777,6 +786,52 @@ case object DecimalLongCodec extends LongCodec {
   }
 
   def decode(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
+    val b = open(buf, off, end)
+    val out = b.ks
+    var i = 0
+    while (i < out.length) {
+      out(i) = flip(java.lang.Double.doubleToRawLongBits((b.kMin + out(i)).toDouble / b.p))
+      i += 1
+    }
+    b.exceptions((pos, raw) => out(pos) = flip(raw))
+    out
+  }
+
+  /** The block's doubles: k / 10^e, and each exception from its raw bits
+    * — bit for bit [[decode]]'s values through [[DoubleBits]], without
+    * the two sortable-bit flips.
+    */
+  def decodeDoubles(buf: Array[Byte], off: Int, end: Int): Array[Double] = {
+    val b = open(buf, off, end)
+    val ks = b.ks
+    val out = new Array[Double](ks.length)
+    var i = 0
+    while (i < out.length) { out(i) = (b.kMin + ks(i)).toDouble / b.p; i += 1 }
+    b.exceptions((pos, raw) => out(pos) = java.lang.Double.longBitsToDouble(raw))
+    out
+  }
+
+  /** A block past its packed integers: `ks` holds k - kMin per row, and
+    * `exceptions` hands each exception's row and raw bits on.
+    */
+  private final class Opened(r: BlockReader, val ks: Array[Long], val kMin: Long,
+                             val p: Double, count: Long) {
+    def exceptions(put: (Int, Long) => Unit): Unit = {
+      val n = ks.length
+      var pos = 0L
+      var j = 0
+      while (j < count) {
+        val gap = r.getVarint()
+        require(gap >= (if (j == 0) 0L else 1L) && gap < n - pos,
+          s"decimal exception gap $gap at row $pos of $n")
+        pos += gap
+        put(pos.toInt, r.getLongLE())
+        j += 1
+      }
+    }
+  }
+
+  private def open(buf: Array[Byte], off: Int, end: Int): Opened = {
     val (r, n) = openReader(buf, off, end)
     val e = r.getByte()
     require(e <= MaxExp, s"decimal exponent $e above $MaxExp")
@@ -784,25 +839,9 @@ case object DecimalLongCodec extends LongCodec {
     require(exceptions >= 0 && exceptions <= n, s"$exceptions exceptions in $n rows")
     val kMin = r.getSignedVarint()
     val width = r.getByte()
-    val out = BitPacker.unpack(buf, r.position, n, width)
+    val ks = BitPacker.unpack(buf, r.position, n, width)
     r.skip(BitPacker.packedSize(n, width))
-    val p = Pow10(e)
-    var i = 0
-    while (i < n) {
-      out(i) = flip(java.lang.Double.doubleToRawLongBits((kMin + out(i)).toDouble / p))
-      i += 1
-    }
-    var pos = 0L
-    var j = 0
-    while (j < exceptions) {
-      val gap = r.getVarint()
-      require(gap >= (if (j == 0) 0L else 1L) && gap < n - pos,
-        s"decimal exception gap $gap at row $pos of $n")
-      pos += gap
-      out(pos.toInt) = flip(r.getLongLE())
-      j += 1
-    }
-    out
+    new Opened(r, ks, kMin, Pow10(e), exceptions)
   }
 }
 

@@ -192,7 +192,7 @@ final class BlockReader(buf: Array[Byte], start: Int, end: Int) {
       else {
         val n = PrefixVarInt.leadingOnes(tag) + 1
         pos = p + n
-        PrefixVarInt.decodeMultibyteFast(tag, n, buf, p)
+        PrefixVarInt.decodeMultibyteFast(n, buf, p)
       }
     } else getVarintTail()
   }

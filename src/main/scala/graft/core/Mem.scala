@@ -2,11 +2,12 @@ package graft.core
 
 import org.apache.spark.unsafe.Platform
 
-/** Unaligned big-endian word access via spark-unsafe `Platform` — shared
-  * by the varint kernels and FSST packing. Callers must prove bounds
-  * (off + 8 <= array length) themselves; that is the point: the
-  * byteArrayView VarHandle's per-access bounds checks measured 2x on the
-  * varint decode hot loop. The native-order test folds to a constant.
+/** Unaligned word access via spark-unsafe `Platform` — big-endian for
+  * the varint kernels and FSST packing, little-endian for bit unpacking.
+  * Callers must prove bounds (off + 8 <= array length) themselves; that
+  * is the point: the byteArrayView VarHandle's per-access bounds checks
+  * measured 2x on the varint decode hot loop. The native-order test
+  * folds to a constant.
   */
 object Mem {
   private val NativeLE: Boolean =
@@ -15,6 +16,11 @@ object Mem {
   @inline def getLongBE(src: Array[Byte], off: Int): Long = {
     val w = Platform.getLong(src, Platform.BYTE_ARRAY_OFFSET + off)
     if (NativeLE) java.lang.Long.reverseBytes(w) else w
+  }
+
+  @inline def getLongLE(src: Array[Byte], off: Int): Long = {
+    val w = Platform.getLong(src, Platform.BYTE_ARRAY_OFFSET + off)
+    if (NativeLE) w else java.lang.Long.reverseBytes(w)
   }
 
   @inline def putLongBE(dst: Array[Byte], off: Int, v: Long): Unit =

@@ -216,7 +216,7 @@ object PrefixVarInt {
     * while the merge costs three extra ALU ops on every value; on mixed
     * zipf streams the two are equal. Keep the branch.
     */
-  private[core] def decodeMultibyteFast(tag: Int, n: Int, src: Array[Byte], off: Int): Long = {
+  private[core] def decodeMultibyteFast(n: Int, src: Array[Byte], off: Int): Long = {
     if (n == 9) getLongBE(src, off + 1)
     else (getLongBE(src, off) >>> ((8 - n) * 8)) & MaxValue(n)
   }
@@ -240,14 +240,6 @@ object PrefixVarInt {
         (b(5) << 16) | (b(6) << 8) | b(7)
       case _ => (b(1) << 56) | (b(2) << 48) | (b(3) << 40) | (b(4) << 32) |
         (b(5) << 24) | (b(6) << 16) | (b(7) << 8) | b(8)
-    }
-  }
-
-  @inline private def writeBE(v: Long, dst: Array[Byte], off: Int, n: Int): Unit = {
-    var i = 0
-    while (i < n) {
-      dst(off + i) = (v >>> ((n - 1 - i) * 8)).toByte
-      i += 1
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.io.{EOFException, InputStream, OutputStream}
+import java.io.{InputStream, OutputStream}
 
 /** `java.io` stream adapters for the prefix-varint codec — the analogue
   * of the reference's `std::io` API (reference: src/io.rs:20-60), used by

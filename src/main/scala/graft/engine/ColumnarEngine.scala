@@ -333,7 +333,7 @@ object ColumnarEngine {
       def writeCol(b: ColumnBuffer, block0: Array[Byte],
                    codecName: String, raw: Long,
                    min: Long = 0L, max: Long = 0L, hasRange: Boolean = false,
-                   nullBm: Array[Byte] = null, nullCount: Int = -1): Unit = {
+                   nullBm: Array[Byte], nullCount: Int): Unit = {
         val name = b.spec.name
         val kind = b.spec.kind
         // nullCount >= 0 = the column is declared nullable; -1 = not
@@ -435,9 +435,9 @@ object ColumnarEngine {
             writeCol(b, BytesCodecs.encodeBinary(bb.column(n)), "bin-raw",
               bb.used, nullBm = bm, nullCount = nullCount)
           case f: FloatBuffer =>
-            // packed little-endian IEEE-754
-            writeCol(b, BytesCodecs.encodeFloats(f.column(n)), "f32-raw",
-              4L * f.used, nullBm = bm, nullCount = nullCount)
+            // the smaller of the raw floats and the ALP-RD split
+            val (codec, block) = BytesCodecs.encodeFloats(f.column(n))
+            writeCol(b, block, codec, 4L * f.used, nullBm = bm, nullCount = nullCount)
         }
         b.clear()
         k += 1

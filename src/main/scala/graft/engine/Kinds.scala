@@ -271,7 +271,7 @@ private[graft] object Kinds {
   object DOUBLE extends Kind(5, DoubleType, Stored.WideLong, Lane.Doubles,
       ordered = true, keyable = false, temporal = false, bucketable = false) {
     override def decode(block: Array[Byte], off: Int): AnyRef =
-      DoubleBits.toDoubles(LongCodecs.decodeSlice(block, off, block.length))
+      LongCodecs.decodeDoubles(block, off, block.length)
     override def zoneValue(v: Long, s: ColumnSpec): Any =
       java.lang.Double.valueOf(DoubleBits.fromSortableLong(v))
   }

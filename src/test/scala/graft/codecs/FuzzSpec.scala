@@ -154,6 +154,34 @@ class FuzzSpec extends AnyFunSuite {
         k += 1
       }
     }
+    // the DOUBLE columns' direct decode of a decimal block, and f32-rd
+    // blocks: exceptions among embedding floats with empty rows, and one
+    // left part only; each on its own generator
+    val frnd = new java.util.Random(2121L)
+    val edges = Array(0x7fc00001, 0xff800001, 0x80000000, 0x00000001, 0x7f7fffff)
+    val dims = Array.tabulate(80)(i => if (i % 5 == 0) 0 else 24)
+    val pool = Array.tabulate(dims.sum)(j => java.lang.Float.intBitsToFloat(
+      if (j % 7 == 3) edges(j / 7 % edges.length)
+      else java.lang.Float.floatToRawIntBits(frnd.nextFloat() * 2 - 1)))
+    val floats = new FloatsColumn(pool, dims.scanLeft(0)(_ + _).init, dims)
+    val (codec, rd) = BytesCodecs.encodeFloats(floats)
+    assert(codec === "f32-rd")
+    val flat = BytesCodecs.encodeRd(new FloatsColumn(Array.fill(300)(0.75f), Array(0, 100), Array(100, 200)))
+    val directBlocks: Seq[(String, Array[Byte], Array[Byte] => Any)] = Seq(
+      ("decimal-double", decimal, b => LongCodecs.decodeDoubles(b, 0, b.length)),
+      ("f32-rd", rd, b => BytesCodecs.decodeFloats(b, 0, b.length)),
+      ("f32-rd one-entry", flat, b => BytesCodecs.decodeFloats(b, 0, b.length)))
+    for ((label, block, decode) <- directBlocks) {
+      decode(block)
+      var k = 0
+      while (k < 800) {
+        val m = block.clone()
+        m(frnd.nextInt(m.length)) = frnd.nextInt(256).toByte
+        controlled(s"$label block mut $k")(decode(m))
+        controlled(s"$label block trunc $k")(decode(block.take(1 + frnd.nextInt(block.length))))
+        k += 1
+      }
+    }
   }
 
   test("bit-flipped and truncated VALID containers never crash container decode") {
@@ -199,6 +227,17 @@ class FuzzSpec extends AnyFunSuite {
       // the raw string block shares the binary block's slice decoder
       b(0) = RawStringCodec.id
       controlled(hex(b))(RawStringCodec.decodeUtf8(b, 0, b.length))
+      // f32-rd: the id alone, then one row of at most 63 floats, a legal
+      // right width and dictionary size, so decode reaches the body
+      b(0) = BytesCodecs.F32RdId.toByte
+      controlled(hex(b))(BytesCodecs.decodeFloats(b, 0, b.length))
+      if (len > 4) {
+        b(1) = 1
+        b(2) = (b(2) & 0x3f).toByte
+        b(3) = (16 + (b(3) & 15)).toByte
+        b(4) = (1 + (b(4) & 7)).toByte
+        controlled(hex(b))(BytesCodecs.decodeFloats(b, 0, b.length))
+      }
       i += 1
     }
   }

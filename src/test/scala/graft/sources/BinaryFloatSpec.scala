@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{SparkTestSession, TestDirs}
+import graft.engine.{ContainerIO, Manifests, SparkTestSession, TestDirs}
 
 /** Round 7: BINARY (kind 6) and ARRAY<FLOAT> (kind 7) columns — the two
   * LLM-pipeline shapes (opaque media payloads, embeddings) can now live
@@ -80,6 +80,31 @@ class BinaryFloatSpec extends AnyFunSuite {
           java.lang.Float.floatToRawIntBits(b),
           s"vec ${r.getLong(0)} elem $j: $a vs $b")
       }
+    }
+  }
+
+  test("ARRAY<FLOAT> chunks record their block: f32-rd for embeddings, f32-raw for random bits") {
+    import spark.implicits._
+    val rnd = new java.util.Random(77L)
+    def bits(f: Float): Int = java.lang.Float.floatToRawIntBits(f)
+    // random bits, NaN and Inf exponents moved down one
+    def noise(): Float = {
+      val b = rnd.nextInt()
+      java.lang.Float.intBitsToFloat(if ((b & 0x7f800000) == 0x7f800000) b ^ 0x00800000 else b)
+    }
+    val emb = (0 until 300).map(i => (i.toLong, Array.fill(32)(rnd.nextFloat() * 2 - 1)))
+    val rand = (0 until 300).map(i => (i.toLong, Array.fill(32)(noise())))
+    for ((rows, codec) <- Seq(emb -> "f32-rd", rand -> "f32-raw")) {
+      val d = tmp(s"flt-$codec")
+      rows.toDF("vec_id", "embedding").coalesce(1).write.format("graft")
+        .option("chunkRows", "100").mode("overwrite").save(d)
+      val ms = Manifests.readCommitted(ContainerIO.localConf(), d)
+      assert(ms.flatMap(_.columns).filter(_.column == "embedding")
+        .flatMap(_.codec.split('+')).distinct === Seq(codec))
+      val got = spark.read.format("graft").load(d).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).map(bits)).toMap
+      assert(got.size === rows.size)
+      rows.foreach { case (id, v) => assert(got(id) === v.map(bits).toSeq, s"$codec row $id") }
     }
   }
 

@@ -77,7 +77,7 @@ class GoldenContainerSpec extends AnyFunSuite {
     assert(ms.size === 1 && ms.head.rows === 300L && ms.head.chunks === 5)
     val gblk = sha256Hex(Files.readAllBytes(Paths.get(d, "blocks", blocks.head)))
     assert(gblk ===
-      "26817b95cf2df288148a0d72adfd735f5066cb7c3f82595c0dee55d5528f965c",
+      "ae5c2ef2aa759f64177a41df83c29db2ac014b9aa00e31e56865cbf878f641e6",
       "container bytes changed")
     assert(ms.head.digest ===
       "14ac5d91089597e1bfb15f3f88e6974051039b152045ade266d2b4cc64feb309",
@@ -97,7 +97,7 @@ class GoldenContainerSpec extends AnyFunSuite {
     val gblk = sha256Hex(Files.readAllBytes(
       Paths.get(d, "blocks", s"part-${ms.head.name}.gblk")))
     assert(gblk ===
-      "4b86453ceb02bcd78d4f0e66225281677e019e40457d1f5e600fc7d0e05120bf",
+      "eefa54a42463dadaf03dbf3f2f4cec5030ab4c89ef7dd05ec15574d21c433d0c",
       "compacted container bytes changed")
     assert(ms.head.digest ===
       "15f0feccfe40c0b0d4241e4a19669f31c14a79bcbeb8d9126f6f1b67aaf546f8",
