@@ -2,15 +2,19 @@ package graft.engine
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 
 /** Container/manifest IO through the Hadoop `FileSystem` API, so the
   * engine's `outDir` can live on any cluster filesystem (`file://`,
   * `hdfs://`, `s3a://`…) — `java.nio.file` (round 1) only worked on a
-  * single box. Executors rebuild the driver's Hadoop `Configuration` from
-  * a broadcast key-value snapshot: Spark's own `SerializableConfiguration`
-  * wrapper is `private[spark]`, and `Configuration` itself is not
-  * serializable.
+  * single box. Tasks get the session's Hadoop conf ONLY as the broadcast
+  * [[ContainerIO.ShippedConf]] of [[ContainerIO.shippedConf]], reused
+  * while the conf's content and live `SparkContext` stay the same; each
+  * JVM rebuilds the `Configuration` once per distinct conf (Spark's
+  * `SerializableConfiguration` is `private[spark]`). Driver-only code
+  * takes a `Configuration` directly.
   *
   * Commit protocol: tmp-file + `rename` where rename is atomic
   * (HDFS/local/ABFS); direct `create(overwrite = false)` — a conditional
@@ -38,11 +42,32 @@ object ContainerIO {
     b.result()
   }
 
-  /** Rebuild a Configuration from a snapshot (executor side). */
+  /** Rebuild a Configuration from a snapshot. */
   def confFrom(snapshot: Map[String, String]): Configuration = {
     val c = new Configuration(false)
     snapshot.foreach { case (k, v) => c.set(k, v) }
     c
+  }
+
+  /** The conf as tasks receive it: the snapshot map on the wire, rebuilt
+    * once per JVM and shared read-only by every task there.
+    */
+  final class ShippedConf(kv: Map[String, String]) extends Serializable {
+    @transient lazy val conf: Configuration = confFrom(kv)
+  }
+
+  private var shipped: (SparkContext, Map[String, String], Broadcast[ShippedConf]) = _
+
+  /** The session's conf for tasks: the last broadcast while the conf's
+    * content and live `SparkContext` are the same (a broadcast costs ms
+    * on the driver, so operations share it), else a fresh one.
+    */
+  def shippedConf(spark: SparkSession): Broadcast[ShippedConf] = synchronized {
+    val sc = spark.sparkContext
+    val kv = confSnapshot(sc.hadoopConfiguration)
+    if (shipped == null || !(shipped._1 eq sc) || sc.isStopped || shipped._2 != kv)
+      shipped = (sc, kv, sc.broadcast(new ShippedConf(kv)))
+    shipped._3
   }
 
   /** Driver-side configuration (classpath defaults). */

@@ -41,18 +41,12 @@ object LangIdExpr {
     */
   val Langs: Array[String] = Array("de", "en", "es", "fr")
 
-  private val StopwordSets: Array[java.util.HashSet[String]] = {
-    val words = Map(
-      "en" -> Seq("the", "a", "of", "and", "to", "in", "is", "it", "for", "on"),
-      "es" -> Seq("el", "la", "de", "que", "y", "en", "un", "por", "con", "los"),
-      "fr" -> Seq("le", "la", "de", "et", "un", "les", "des", "en", "du", "que"),
-      "de" -> Seq("der", "die", "und", "das", "von", "zu", "mit", "den", "ein", "ist"))
+  private val StopwordSets: Array[java.util.HashSet[String]] =
     Langs.map { l =>
       val s = new java.util.HashSet[String]()
-      words(l).foreach(s.add)
+      graft.ops.TextAnalysis.Stopwords(l).foreach(s.add)
       s
     }
-  }
 
   /** Matches Java regex \s (what split(text, "\\s+") splits on). */
   @inline private def isSep(c: Char): Boolean =

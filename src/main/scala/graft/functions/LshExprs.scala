@@ -62,19 +62,11 @@ case class LshProbes(child: Expression, dim: Int, planes: Int, tables: Int,
   }
 
   /** Hyperplane matrix [tables*planes][dim] + per-plane 1/||plane|| for
-    * margin ranking. Components match [[graft.ops.Similarity]]'s
-    * splitmix64 construction exactly (bucket parity is tested).
+    * margin ranking: [[graft.ops.Similarity]]'s own splitmix64 planes
+    * (bucket parity is tested).
     */
   @transient private lazy val matrix: Array[Array[Double]] =
-    Array.tabulate(tables * planes) { p =>
-      Array.tabulate(dim) { d =>
-        var h = seed + p.toLong * 0x9e3779b97f4a7c15L + d.toLong * 0xbf58476d1ce4e5b9L
-        h = (h ^ (h >>> 30)) * 0xbf58476d1ce4e5b9L
-        h = (h ^ (h >>> 27)) * 0x94d049bb133111ebL
-        h = h ^ (h >>> 31)
-        (h >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0
-      }
-    }
+    Array.tabulate(tables * planes)(graft.ops.Similarity.hyperplane(seed, _, dim))
 
   @transient private lazy val invNorms: Array[Double] =
     matrix.map { p =>

@@ -32,6 +32,14 @@ object Similarity {
 
   private def asDouble(c: Column): Column = transform(c, _.cast("double"))
 
+  /** Each query's `k` best-`cos` neighbors of `scored`, ties by id. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))
+  }
+
   /** Exact brute-force top-k cosine neighbors for each query vector.
     *
     * Scale shape: the query set is broadcast (queries are the small side
@@ -49,17 +57,13 @@ object Similarity {
     val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", cosineFast(corpus)(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))
+    topK(scored, k)
   }
 
   /** Deterministic random hyperplanes for sign-LSH: plane p, dim d ->
     * component from a splitmix64 of (seed, p, d), mapped to [-1, 1).
     */
-  private[ops] def hyperplane(seed: Long, p: Int, dim: Int): Array[Double] =
+  private[graft] def hyperplane(seed: Long, p: Int, dim: Int): Array[Double] =
     Array.tabulate(dim) { d =>
       var h = seed + p.toLong * 0x9e3779b97f4a7c15L + d.toLong * 0xbf58476d1ce4e5b9L
       h = (h ^ (h >>> 30)) * 0xbf58476d1ce4e5b9L
@@ -191,11 +195,7 @@ object Similarity {
     val scored = c.join(broadcast(q0), Seq("list"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", cosineFast(corpus)(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))
+    topK(scored, k)
   }
 
   /** ANN via multi-table sign-LSH bucketing: candidates are corpus
@@ -242,10 +242,6 @@ object Similarity {
       .withColumn("cos", cosineFast(corpus)(col("qv"), col("cv")))
       .select(col("query_id"), col("neighbor_id"), col("cos"))
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos"))
+    topK(scored, k)
   }
 }

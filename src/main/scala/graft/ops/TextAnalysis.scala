@@ -46,7 +46,7 @@ object TextAnalysis {
           + least(col("n_tokens").cast("double") / 100.0, lit(1.0)) * 0.3))
   }
 
-  private val Stopwords: Map[String, Seq[String]] = Map(
+  private[graft] val Stopwords: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "a", "of", "and", "to", "in", "is", "it", "for", "on"),
     "es" -> Seq("el", "la", "de", "que", "y", "en", "un", "por", "con", "los"),
     "fr" -> Seq("le", "la", "de", "et", "un", "les", "des", "en", "du", "que"),

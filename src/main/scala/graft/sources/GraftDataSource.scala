@@ -3,6 +3,10 @@ package graft.sources
 import java.util
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -16,7 +20,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.{ChunkCursor, ChunkStats, ColumnarEngine, ColumnSpec, ContainerIO, DecodedChunk, DerivedRow, Kinds, Lane, Manifests, Stored, TableManifest}
+import graft.engine.{ChunkCursor, ChunkStats, ColumnarEngine, ColumnSpec, ContainerIO, DecodedChunk, Kinds, Lane, Manifests, Stored, TableManifest}
+import graft.engine.ContainerIO.ShippedConf
 
 /** `spark.read.format("graft")` / `df.write.format("graft")` — the
   * engine's container+manifest layout as a DataSource V2 table.
@@ -56,17 +61,16 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft"
 
   /** Table schema from the committed manifests ([[TableSnapshot.schema]]);
-    * the engine's fixed [[DerivedRow]] schema only as the default for
-    * empty/absent tables.
+    * the engine's fixed [[graft.engine.DerivedRow]] schema only as the
+    * default for empty/absent tables.
     */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     Option(options.get("path"))
       .map { p =>
-        val conf = org.apache.spark.sql.SparkSession.active
-          .sparkContext.hadoopConfiguration
+        val conf = SparkSession.active.sparkContext.hadoopConfiguration
         // a time-traveled read infers the PINNED snapshot's schema — an
         // older snapshot may predate added columns (add-only evolution)
-        val snap = new TableSnapshot(p, ContainerIO.confSnapshot(conf),
+        val snap = new TableSnapshot(p, conf,
           GraftDataSource.asOfVersion(options, conf, p))
         if (snap.exists) snap.schema else GraftDataSource.schema
       }
@@ -83,7 +87,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
 }
 
 object GraftDataSource {
-  /** The engine's table schema ([[DerivedRow]] field order) — the
+  /** The engine's table schema ([[graft.engine.DerivedRow]] field order) — the
     * default for tables that don't exist yet.
     */
   val schema: StructType = schemaOf(ColumnarEngine.DefaultSchema)
@@ -106,8 +110,7 @@ object GraftDataSource {
     * resolved to the highest version committed at or before it.
     */
   private[sources] def asOfVersion(options: CaseInsensitiveStringMap,
-      conf: org.apache.hadoop.conf.Configuration,
-      path: String): Option[Long] = {
+      conf: Configuration, path: String): Option[Long] = {
     val v = Option(options.get("versionAsOf")).map { s =>
       try s.toLong
       catch { case _: NumberFormatException =>
@@ -557,9 +560,8 @@ class GraftScanBuilder(path: String, tableSchema: StructType,
     * A failed read fails planning with the snapshot's controlled error.
     */
   private lazy val snap: TableSnapshot = {
-    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    new TableSnapshot(path, ContainerIO.confSnapshot(conf),
-      GraftDataSource.asOfVersion(options, conf, path))
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    new TableSnapshot(path, conf, GraftDataSource.asOfVersion(options, conf, path))
   }
 
   /** The query's chain names ([[TableSnapshot.chainOf]]): its load-time
@@ -867,8 +869,8 @@ class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
     GraftDataSource.planPartitions(snap, snap.committed, cols, preds,
       maxSplitBytes, required.fieldNames.toSet ++ preds.map(_.col))
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, preds, layout, snap.confKv, limit)
+  override def createReaderFactory(): PartitionReaderFactory = new GraftReaderFactory(
+    required, preds, layout, ContainerIO.shippedConf(SparkSession.active), limit)
 
   /** `readStream.format("graft")` — micro-batch TAILING of this table:
     * each trigger reads exactly the manifests committed since the last
@@ -882,13 +884,13 @@ class GraftScan private[sources] (snap: TableSnapshot, visNames: Seq[String],
       "graft time travel (versionAsOf/timestampAsOf) is batch-only; a " +
         "stream tails the live table")
     new GraftMicroBatchStream(snap.path, checkpointLocation, required,
-      preds, snap.confKv, maxSplitBytes, layout, visNames)
+      preds, ContainerIO.shippedConf(SparkSession.active), maxSplitBytes, layout, visNames)
   }
 }
 
 class GraftReaderFactory(required: StructType, preds: Array[Pred],
                          layout: Map[String, ColumnSpec],
-                         confKv: Map[String, String], limit: Int)
+                         shipped: Broadcast[ShippedConf], limit: Int)
     extends PartitionReaderFactory {
 
   /** The decoded data is already columnar (one array per block) — every
@@ -904,7 +906,7 @@ class GraftReaderFactory(required: StructType, preds: Array[Pred],
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition],
-      required, preds, layout, confKv, limit)
+      required, preds, layout, shipped, limit)
 }
 
 /** The DSv2 reader: one `ColumnarBatch` per (filtered) chunk, filled
@@ -914,7 +916,7 @@ class GraftReaderFactory(required: StructType, preds: Array[Pred],
 class GraftColumnarReader(p: GraftInputPartition, required: StructType,
                           preds: Array[Pred],
                           layout: Map[String, ColumnSpec],
-                          confKv: Map[String, String],
+                          shipped: Broadcast[ShippedConf],
                           limit: Int)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
@@ -931,7 +933,7 @@ class GraftColumnarReader(p: GraftInputPartition, required: StructType,
   private val cursor = new ChunkCursor(p.file, p.chunks,
     ((required.fieldNames ++ effPreds.map(_.col)).toSet -- p.absentCols)
       .map(c => c -> layout(c).lane).toMap,
-    ContainerIO.confFrom(confKv), p.digestCol, p.renames)
+    shipped.value.conf, p.digestCol, p.renames)
   private val rowPreds = GraftDataSource.compileFilters(effPreds)
   private val fields = required.fields
   private val specs: Array[ColumnSpec] = fields.map(f => layout(f.name))
@@ -1030,14 +1032,14 @@ object GraftStreamOffset {
 class GraftMicroBatchStream(path: String, checkpointLocation: String,
                             required: StructType,
                             preds: Array[Pred],
-                            confKv: Map[String, String],
+                            shipped: Broadcast[ShippedConf],
                             maxSplitBytes: Long,
                             layout: Map[String, ColumnSpec],
                             visNames: Seq[String] = Nil)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
-  private val conf = ContainerIO.confFrom(confKv)
+  private val conf = shipped.value.conf
   private val logDir = s"$checkpointLocation/graft-seen"
   private val LogName = """(\d+)\.json""".r
   private val CompactName = """(\d+)\.compact\.json""".r
@@ -1088,7 +1090,7 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
   @volatile private var lastSnap: TableSnapshot = null
 
   private def snapshot(): TableSnapshot = {
-    lastSnap = new TableSnapshot(path, confKv)
+    lastSnap = new TableSnapshot(path, conf)
     lastSnap
   }
 
@@ -1206,7 +1208,7 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, preds, layout, confKv, Int.MaxValue)
+    new GraftReaderFactory(required, preds, layout, shipped, Int.MaxValue)
 
   /** Fold per-batch seen-log entries at or below the COMMITTED offset
     * into one `<end>.compact.json` once [[GraftMicroBatchStream
@@ -1228,13 +1230,11 @@ class GraftMicroBatchStream(path: String, checkpointLocation: String,
     if (ContainerIO.createExclusive(conf, s"$logDir/$top.compact.json", namesJson(names))) {
       val f = ContainerIO.fs(logDir, conf)
       // covered per-batch files and superseded compact files are GC'd
-      ContainerIO.listNames(conf, logDir).foreach {
-        case n @ LogName(b) if b.toLong <= top =>
-          f.delete(new org.apache.hadoop.fs.Path(s"$logDir/$n"), false)
-        case n @ CompactName(b) if b.toLong < top =>
-          f.delete(new org.apache.hadoop.fs.Path(s"$logDir/$n"), false)
-        case _ => ()
-      }
+      ContainerIO.listNames(conf, logDir).filter {
+        case LogName(b) => b.toLong <= top
+        case CompactName(b) => b.toLong < top
+        case _ => false
+      }.foreach(n => f.delete(new Path(s"$logDir/$n"), false))
       compactedNames = names.toSet
       compactedThrough = top
       seenLog.filterInPlace { case (id, _) => id > top }
@@ -1273,8 +1273,7 @@ class GraftWriteBuilder(path: String, info: LogicalWriteInfo)
     // the committed table an append lands on, read once (an overwrite
     // replaces it and reads nothing)
     val snap = Option.when(!doTruncate)(new TableSnapshot(path,
-      ContainerIO.confSnapshot(org.apache.spark.sql.SparkSession.active
-        .sparkContext.hadoopConfiguration))).filter(_.exists)
+      SparkSession.active.sparkContext.hadoopConfiguration)).filter(_.exists)
     val in =
       snap.map(_.schema).map { existing =>
         val tableSpecs = GraftDataSource.specsOf(existing)
@@ -1404,17 +1403,14 @@ class GraftWrite(path: String, truncate: Boolean, epoch: String,
         SortDirection.ASCENDING)).toArray
 
   override def requiredNumPartitions(): Int = writeParts
-  private def prepare(): Map[String, String] = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
+  private def factory(): GraftWriterFactory = {
+    val spark = SparkSession.active
+    val conf = spark.sparkContext.hadoopConfiguration
     ContainerIO.mkdirs(conf, s"$path/blocks")
     ContainerIO.mkdirs(conf, s"$path/manifests")
-    ContainerIO.confSnapshot(conf)
+    new GraftWriterFactory(path, epoch, ContainerIO.shippedConf(spark),
+      chunkRows, writeSchema, partBy, fullCols)
   }
-
-  private def factory(): GraftWriterFactory =
-    new GraftWriterFactory(path, epoch, prepare(), chunkRows, writeSchema,
-      partBy, fullCols)
 
   /** Job-level commit: tasks publish only attempt-qualified CONTAINERS
     * (invisible to readers — no manifest); this commit writes every
@@ -1429,9 +1425,9 @@ class GraftWrite(path: String, truncate: Boolean, epoch: String,
     new BatchWrite {
       override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = f
       override def commit(messages: Array[WriterCommitMessage]): Unit =
-        GraftCommits.publish(f.confKv, path, truncate, messages)
+        GraftCommits.publish(f.conf, path, truncate, messages)
       override def abort(messages: Array[WriterCommitMessage]): Unit =
-        GraftCommits.dropStaged(f.confKv, path, epoch)
+        GraftCommits.dropStaged(f.conf, path, epoch)
     }
   }
 
@@ -1452,9 +1448,9 @@ class GraftWrite(path: String, truncate: Boolean, epoch: String,
       override def createStreamingWriterFactory(
           info: PhysicalWriteInfo): StreamingDataWriterFactory = f
       override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-        GraftCommits.publish(f.confKv, path, truncate = false, messages)
+        GraftCommits.publish(f.conf, path, truncate = false, messages)
       override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-        GraftCommits.dropStaged(f.confKv, path, f.epochOf(epochId))
+        GraftCommits.dropStaged(f.conf, path, f.epochOf(epochId))
     }
   }
 }
@@ -1529,7 +1525,7 @@ private[sources] object GraftCommits {
     *     caller that saw a failure would drop staged blocks the landed
     *     index names.
     */
-  def commit(conf: org.apache.hadoop.conf.Configuration, path: String,
+  def commit(conf: Configuration, path: String,
              base: (Long, Seq[TableManifest]), staged: Seq[TableManifest],
              reclaim: Boolean)(
       land: (Seq[TableManifest], Seq[TableManifest], String) => Seq[TableManifest]): Unit = {
@@ -1568,8 +1564,7 @@ private[sources] object GraftCommits {
     * a failure is logged, never raised (the leftover is unreferenced,
     * and vacuum's to sweep).
     */
-  private def discard(conf: org.apache.hadoop.conf.Configuration, path: String,
-                      names: Seq[String]): Unit =
+  private def discard(conf: Configuration, path: String, names: Seq[String]): Unit =
     if (names.nonEmpty) {
       val f = ContainerIO.fs(path, conf)
       names.foreach { n =>
@@ -1596,13 +1591,12 @@ private[sources] object GraftCommits {
     * lands on, and the replaced generation is deleted once the new one
     * is live.
     */
-  def publish(confKv: Map[String, String], path: String, truncate: Boolean,
+  def publish(conf: Configuration, path: String, truncate: Boolean,
               messages: Array[WriterCommitMessage]): Unit = {
     val staged = messages.toSeq.collect {
       case m: GraftCommitMessage if m.manifest.rows > 0 => m.manifest
     }.sortBy(_.name)
     if (staged.isEmpty && !truncate) return
-    val conf = ContainerIO.confFrom(confKv)
     val schema = staged.headOption.map(_.schemaCols).getOrElse(Nil)
     commit(conf, path, Manifests.readCommittedVersion(conf, path), staged,
         reclaim = true) { (landing, stamped, _) =>
@@ -1654,14 +1648,13 @@ private[sources] object GraftCommits {
     * substring or bare prefix test could sweep another stage whose name
     * extends this one; the prefix + leading-digit check can't.
     */
-  def dropStaged(confKv: Map[String, String], path: String, stages: String*): Unit = {
-    val conf = ContainerIO.confFrom(confKv)
+  def dropStaged(conf: Configuration, path: String, stages: String*): Unit = {
     val f = ContainerIO.fs(path, conf)
     val prefixes = stages.map(s => s"part-$s-")
     ContainerIO.listNames(conf, s"$path/blocks")
       .filter(n => prefixes.exists(p => n.startsWith(p) && n.length > p.length &&
         n.charAt(p.length).isDigit))
-      .foreach(n => f.delete(new org.apache.hadoop.fs.Path(s"$path/blocks/$n"), false))
+      .foreach(n => f.delete(new Path(s"$path/blocks/$n"), false))
   }
 }
 
@@ -1671,15 +1664,18 @@ private[sources] object GraftCommits {
   * streaming task under its micro-batch's epoch, `<epoch>-e<epochId>`.
   */
 class GraftWriterFactory(path: String, epoch: String,
-                         val confKv: Map[String, String], chunkRows: Int,
+                         shipped: Broadcast[ShippedConf], chunkRows: Int,
                          writeSchema: StructType,
                          partBy: Seq[GraftDataSource.PartTransform],
                          fullCols: Seq[(String, Int)])
     extends DataWriterFactory with StreamingDataWriterFactory {
   def epochOf(epochId: Long): String = s"$epoch-e$epochId"
 
+  /** The job's configuration on the driver, for its commit or abort. */
+  def conf: Configuration = shipped.value.conf
+
   private def writer(partitionId: Int, taskId: Long, taskEpoch: String) =
-    new GraftDataWriter(path, partitionId, taskEpoch, confKv, chunkRows, taskId,
+    new GraftDataWriter(path, partitionId, taskEpoch, shipped, chunkRows, taskId,
       writeSchema, partBy, fullCols)
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -1707,7 +1703,7 @@ class GraftWriterFactory(path: String, epoch: String,
   * swept by job-level `abort`.
   */
 class GraftDataWriter(path: String, part: Int, epoch: String,
-                      confKv: Map[String, String], chunkRows: Int,
+                      shipped: Broadcast[ShippedConf], chunkRows: Int,
                       taskId: Long,
                       writeSchema: StructType,
                       partBy: Seq[GraftDataSource.PartTransform],
@@ -1718,7 +1714,7 @@ class GraftDataWriter(path: String, part: Int, epoch: String,
   // chain incl. dropped placeholders, and its live columns are exactly
   // the write schema's, in order
   private val enc = new ColumnarEngine.PartitionEncoder(
-    part, path, ContainerIO.confFrom(confKv),
+    part, path, shipped.value.conf,
     partName = s"$epoch-$part-a$taskId", chunkRowsCap = chunkRows,
     schema = if (fullCols.isEmpty) GraftDataSource.specsOf(writeSchema)
       else fullCols.map { case (n, k) =>
@@ -1774,9 +1770,8 @@ class GraftDataWriter(path: String, part: Int, epoch: String,
     * attempt-unique, so nothing else can reference it.
     */
   override def abort(): Unit = {
-    val conf = ContainerIO.confFrom(confKv)
-    ContainerIO.fs(path, conf).delete(
-      new org.apache.hadoop.fs.Path(s"$path/blocks/part-${enc.name}.gblk"), false)
+    ContainerIO.fs(path, shipped.value.conf)
+      .delete(new Path(s"$path/blocks/part-${enc.name}.gblk"), false)
     ()
   }
   override def close(): Unit = ()

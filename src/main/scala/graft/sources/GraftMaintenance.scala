@@ -84,7 +84,7 @@ object GraftMaintenance {
     require(targetBytes > 0 && minContainers >= 2,
       s"need targetBytes > 0 and minContainers >= 2, " +
         s"got ($targetBytes, $minContainers)")
-    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark))
+    val snap = new TableSnapshot(path, spark.sparkContext.hadoopConfiguration)
     // one BIN holds one schema generation: add-only evolution (round 7)
     // means a table may hold containers of different widths. An epoch is
     // always schema-homogeneous (one write job, one schema), so binning
@@ -180,7 +180,7 @@ object GraftMaintenance {
     * Returns the number of rows deleted.
     */
   def delete(spark: SparkSession, path: String, predicate: String): Long = {
-    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
+    val snap = new TableSnapshot(path, spark.sparkContext.hadoopConfiguration).requireTable()
     if (snap.committed.isEmpty) return 0L
     val (cond, _, preds) = bindPredicate(spark, snap, predicate, Nil, "delete predicate")
     val visPositions = snap.visPositions
@@ -218,7 +218,7 @@ object GraftMaintenance {
   def update(spark: SparkSession, path: String, predicate: String,
              set: Map[String, String]): Long = {
     require(set.nonEmpty, "update needs at least one column assignment")
-    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
+    val snap = new TableSnapshot(path, spark.sparkContext.hadoopConfiguration).requireTable()
     if (snap.committed.isEmpty) return 0L
     val st = snap.schema
     set.keys.foreach(c => require(st.fieldNames.contains(c),
@@ -279,7 +279,7 @@ object GraftMaintenance {
              source: org.apache.spark.sql.DataFrame,
              keys: Seq[String]): (Long, Long) = {
     require(keys.nonEmpty, "upsert needs at least one key column")
-    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
+    val snap = new TableSnapshot(path, spark.sparkContext.hadoopConfiguration).requireTable()
     val (visible, st) = (snap.visible, snap.schema)
     // the source must BE the visible schema (same names, kinds, order)
     val srcSpecs = GraftDataSource.specsOf(source.schema)
@@ -310,7 +310,7 @@ object GraftMaintenance {
   private def upsertPersisted(spark: SparkSession, snap: TableSnapshot,
                               source: org.apache.spark.sql.DataFrame,
                               keys: Seq[String]): (Long, Long) = {
-    val (path, confKv, st) = (snap.path, snap.confKv, snap.schema)
+    val (path, st) = (snap.path, snap.schema)
     val keyVis = keys.map(st.fieldIndex)
 
     // distinct external key tuples -> driver; uniqueness is the upsert
@@ -359,6 +359,7 @@ object GraftMaintenance {
       if (snap.chain.exists(_.dropped)) snap.chain.map(s => (s.name, s.packed))
       else Nil
     val keyFull = keyVis.map(snap.visPositions)
+    val shipped = ContainerIO.shippedConf(spark)
     var appendedF: scala.concurrent.Future[Array[TableManifest]] = null
     val (done, appended) = try {
       // 1) stage the source as fresh containers (attempt-qualified, one
@@ -382,7 +383,7 @@ object GraftMaintenance {
               // failure mode GraftDataWriter's DSv2 path guards against
               val attempt = Option(org.apache.spark.TaskContext.get())
                 .map(_.taskAttemptId()).getOrElse(pid.toLong)
-              val w = new GraftDataWriter(path, pid, epoch, confKv, chunkRows,
+              val w = new GraftDataWriter(path, pid, epoch, shipped, chunkRows,
                 attempt, st, Nil, fullCols)
               it.foreach(w.write)
               Iterator.single(w.commitManifest())
@@ -411,7 +412,7 @@ object GraftMaintenance {
           try scala.concurrent.Await.ready(appendedF,
             scala.concurrent.duration.Duration.Inf)
           catch { case scala.util.control.NonFatal(_) => () }
-        GraftCommits.dropStaged(confKv, path, epoch, s"merge-$runId")
+        GraftCommits.dropStaged(snap.conf, path, epoch, s"merge-$runId")
         throw aborted(path, "upsert", e)
     } finally keySetB.destroy()
     // ONE commit: rewrites replace their originals, appends just land —
@@ -532,13 +533,13 @@ object GraftMaintenance {
         String, Int) => (TableManifest, Long)): Seq[Rewritten] =
     if (bins.isEmpty) Nil
     else {
-      val (path, confKv) = (snap.path, snap.confKv)
+      val (path, shipped) = (snap.path, ContainerIO.shippedConf(spark))
       val sc = spark.sparkContext
       val tag = s"graft-$op-$runId"
       sc.addJobTag(tag)
       try sc.parallelize(bins.zipWithIndex, bins.size)
         .map { case (ms0, bin) =>
-          val conf = ContainerIO.confFrom(confKv)
+          val conf = shipped.value.conf
           val ms = ms0.map(Manifests.loadChunkIndex(conf, path, _))
           val (pm, changed) = step(conf, ms, s"$op-$runId-$bin", bin)
           if (pm != null && changed == 0L)
@@ -550,7 +551,7 @@ object GraftMaintenance {
       catch {
         case scala.util.control.NonFatal(e) =>
           awaitJobTasks(spark, tag)
-          GraftCommits.dropStaged(confKv, path, s"$op-$runId")
+          GraftCommits.dropStaged(snap.conf, path, s"$op-$runId")
           throw aborted(path, noun, e)
       } finally sc.removeJobTag(tag)
     }
@@ -763,7 +764,7 @@ object GraftMaintenance {
     */
   private def changeSchema(spark: SparkSession, path: String, what: String)(
       mutate: Seq[ColumnSpec] => Seq[ColumnSpec]): Unit = {
-    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark)).requireTable()
+    val snap = new TableSnapshot(path, spark.sparkContext.hadoopConfiguration).requireTable()
     mutate(snap.chain)
     GraftCommits.commit(snap.conf, path, (snap.version, snap.all), Nil,
         reclaim = false) { (landing, _, id) =>
@@ -811,7 +812,7 @@ object GraftMaintenance {
              graceMs: Long = 72L * 60 * 60 * 1000,
              dryRun: Boolean = false): Int = {
     require(graceMs >= 0, s"graceMs must be >= 0: $graceMs")
-    val snap = new TableSnapshot(path, ContainerIO.confSnapshot(spark))
+    val snap = new TableSnapshot(path, spark.sparkContext.hadoopConfiguration)
     val c = snap.conf
     val indexLive = snap.version >= 0
     val referenced: Set[String] =
@@ -858,8 +859,7 @@ object GraftMaintenance {
     */
   def expireSnapshots(spark: SparkSession, path: String, retainLast: Long,
                       olderThanMs: Long = 0L): Int =
-    Manifests.expireSnapshots(
-      ContainerIO.confFrom(ContainerIO.confSnapshot(spark)), path,
+    Manifests.expireSnapshots(spark.sparkContext.hadoopConfiguration, path,
       retainLast, olderThanMs)
 
   /** The rewrite of one bin: `ms`' containers in turn through the one

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.types.StructType
 
-import graft.engine.{ColumnSpec, ContainerIO, Manifests, TableManifest}
+import graft.engine.{ColumnSpec, Manifests, TableManifest}
 
 /** One operation's view of a graft table, read ONCE: the committed
   * manifests of the live table (or of the retained version `asOf` pins),
@@ -22,10 +22,7 @@ import graft.engine.{ColumnSpec, ContainerIO, Manifests, TableManifest}
   * internal error (fuzz contract).
   */
 private[sources] final class TableSnapshot(val path: String,
-                                           val confKv: Map[String, String],
-                                           val asOf: Option[Long] = None) {
-  val conf: org.apache.hadoop.conf.Configuration = ContainerIO.confFrom(confKv)
-
+    val conf: org.apache.hadoop.conf.Configuration, val asOf: Option[Long] = None) {
   private def controlled[T](body: => T): T =
     try body
     catch {

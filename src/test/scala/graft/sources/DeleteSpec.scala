@@ -271,13 +271,13 @@ class DeleteSpec extends AnyFunSuite {
     ContainerIO.mkdirs(conf, s"$d/manifests")
     val schema = StructType(Seq(StructField("id", LongType, nullable = false),
       StructField("tag", StringType, nullable = false)))
-    val confKv = ContainerIO.confSnapshot(spark)
+    val shipped = ContainerIO.shippedConf(spark)
     def publishEpoch(e: Int, taskId: Long, ids: Range): Unit = {
-      val w = new GraftDataWriter(d, 0, s"q-e$e", confKv, 64, taskId, schema,
+      val w = new GraftDataWriter(d, 0, s"q-e$e", shipped, 64, taskId, schema,
         Nil, Nil)
       ids.foreach(i => w.write(new GenericInternalRow(
         Array[Any](i.toLong, UTF8String.fromString(s"t$i")))))
-      GraftCommits.publish(confKv, d, truncate = false, Array(w.commit()))
+      GraftCommits.publish(shipped.value.conf, d, truncate = false, Array(w.commit()))
     }
     publishEpoch(1, 11L, 0 until 50)
     publishEpoch(2, 12L, 100 until 150)
@@ -306,9 +306,9 @@ class DeleteSpec extends AnyFunSuite {
     val ckpt = tmp("stream-ckpt")
     val schema = StructType(Seq(StructField("id", LongType, nullable = false),
       StructField("tag", StringType, nullable = false)))
-    val confKv = ContainerIO.confSnapshot(spark)
+    val shipped = ContainerIO.shippedConf(spark)
     def mkStream() = new GraftMicroBatchStream(d, ckpt, schema, Array.empty,
-      confKv, 128L << 20, GraftDataSource.layoutOf(schema))
+      shipped, 128L << 20, GraftDataSource.layoutOf(schema))
     val s1 = mkStream()
     val off0 = s1.initialOffset()
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "tag").coalesce(1)

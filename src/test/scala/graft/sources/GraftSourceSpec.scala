@@ -430,10 +430,10 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("task retry: published manifest describes exactly its own attempt's bytes") {
     val d = mkTableDir("graft-dsv2-retry")
-    val confKv = graft.engine.ContainerIO.confSnapshot(spark)
+    val shipped = graft.engine.ContainerIO.shippedConf(spark)
     val conf = graft.engine.ContainerIO.localConf()
     val rows = ColumnarEngine.derive(SourceTable.synthesize(spark, 60, 2)).collect()
-    val factory = new GraftWriterFactory(d, "ep0", confKv, 32,
+    val factory = new GraftWriterFactory(d, "ep0", shipped, 32,
       GraftDataSource.schema, Nil, Nil)
     // attempt 1 stages and commits its container, then "dies" before its
     // commit message reaches the driver
@@ -445,7 +445,7 @@ class GraftSourceSpec extends AnyFunSuite {
     val w2 = factory.createWriter(0, 2L)
     rows.reverse.foreach(r => w2.write(internalRowOf(r)))
     val m2 = w2.commit()
-    GraftCommits.publish(confKv, d, truncate = false, Array(m2))
+    GraftCommits.publish(shipped.value.conf, d, truncate = false, Array(m2))
     // the published manifest must describe attempt 2's file: a content
     // read re-verifies every block CRC and the chunk digests (round 4's
     // shared final name would publish m2 against attempt 1's bytes here)
@@ -459,14 +459,14 @@ class GraftSourceSpec extends AnyFunSuite {
 
   test("epoch replay is idempotent BY LOGICAL NAME: replaces, never duplicates") {
     val d = mkTableDir("graft-dsv2-replay")
-    val confKv = graft.engine.ContainerIO.confSnapshot(spark)
+    val shipped = graft.engine.ContainerIO.shippedConf(spark)
     val conf = graft.engine.ContainerIO.localConf()
     val rows = ColumnarEngine.derive(SourceTable.synthesize(spark, 40, 2)).collect()
     def publishEpoch(taskId: Long): Unit = {
-      val w = new GraftDataWriter(d, 0, "q1-e5", confKv, 32, taskId,
+      val w = new GraftDataWriter(d, 0, "q1-e5", shipped, 32, taskId,
         GraftDataSource.schema, Nil, Nil)
       rows.foreach(r => w.write(internalRowOf(r)))
-      GraftCommits.publish(confKv, d, truncate = false, Array(w.commit()))
+      GraftCommits.publish(shipped.value.conf, d, truncate = false, Array(w.commit()))
     }
     publishEpoch(7L)
     assert(spark.read.format("graft").load(d).count() === 40)
@@ -804,10 +804,10 @@ class GraftSourceSpec extends AnyFunSuite {
       val pre = ColumnarEngine.Magic.length + 1
       (file, Seq(ChunkSpec(pre, bytes.length - pre, 3, Map.empty)))
     }
-    val confKv = graft.engine.ContainerIO.confSnapshot(spark)
+    val shipped = graft.engine.ContainerIO.shippedConf(spark)
     val (craftedFile, craftedChunks) = crafted("crafted", block)
     val cursor = new ChunkCursor(craftedFile, craftedChunks,
-      Map("x" -> Lane.Ints), ContainerIO.confFrom(confKv), digestCol = "")
+      Map("x" -> Lane.Ints), shipped.value.conf, digestCol = "")
     try intercept[graft.core.DecodeError] { cursor.chunkIter.next() }
     finally cursor.close()
     // lane mismatch: a valid kind-2 block read as a BIGINT column fails
@@ -818,7 +818,7 @@ class GraftSourceSpec extends AnyFunSuite {
     val (mismatchFile, mismatchChunks) = crafted("lane-mismatch", ok)
     val reader = new GraftColumnarReader(
       GraftInputPartition(mismatchFile, mismatchChunks, digestCol = ""),
-      asLong, Array.empty, GraftDataSource.layoutOf(asLong), confKv,
+      asLong, Array.empty, GraftDataSource.layoutOf(asLong), shipped,
       Int.MaxValue)
     val e = try intercept[IllegalArgumentException] { reader.next() }
       finally reader.close()
@@ -851,8 +851,8 @@ class GraftSourceSpec extends AnyFunSuite {
     def readAll(): Unit = {
       val r = new GraftColumnarReader(
         GraftInputPartition(tmp.toString, chunks, digestCol = ""), schema,
-        Array.empty, GraftDataSource.layoutOf(schema), Map.empty,
-        Int.MaxValue)
+        Array.empty, GraftDataSource.layoutOf(schema),
+        graft.engine.ContainerIO.shippedConf(spark), Int.MaxValue)
       try while (r.next()) r.get() finally r.close()
     }
     def controlled(ctx: String)(f: => Any): Unit =

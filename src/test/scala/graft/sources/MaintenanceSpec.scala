@@ -38,15 +38,15 @@ class MaintenanceSpec extends AnyFunSuite {
     import org.apache.spark.unsafe.types.UTF8String
     val schema = StructType(Seq(StructField("id", LongType, nullable = false),
       StructField("tag", StringType, nullable = false)))
-    val confKv = ContainerIO.confSnapshot(spark)
+    val shipped = ContainerIO.shippedConf(spark)
     val msgs = parts.map { case (p, ids) =>
-      val w = new GraftDataWriter(d, p, s"q-e$e", confKv, 64, taskId + p, schema,
+      val w = new GraftDataWriter(d, p, s"q-e$e", shipped, 64, taskId + p, schema,
         Nil, Nil)
       ids.foreach(i => w.write(new GenericInternalRow(
         Array[Any](i.toLong, UTF8String.fromString(s"t$i")))))
       w.commit()
     }
-    GraftCommits.publish(confKv, d, truncate = false,
+    GraftCommits.publish(shipped.value.conf, d, truncate = false,
       msgs.toArray[org.apache.spark.sql.connector.write.WriterCommitMessage])
   }
 
@@ -170,13 +170,13 @@ class MaintenanceSpec extends AnyFunSuite {
     ContainerIO.mkdirs(conf, s"$d/manifests")
     val schema = StructType(Seq(StructField("id", LongType, nullable = false),
       StructField("tag", StringType, nullable = false)))
-    val confKv = ContainerIO.confSnapshot(spark)
+    val shipped = ContainerIO.shippedConf(spark)
     def publishEpoch(e: Int, taskId: Long, ids: Range): Unit = {
-      val w = new GraftDataWriter(d, 0, s"q-e$e", confKv, 64, taskId, schema,
+      val w = new GraftDataWriter(d, 0, s"q-e$e", shipped, 64, taskId, schema,
         Nil, Nil)
       ids.foreach(i => w.write(new GenericInternalRow(
         Array[Any](i.toLong, UTF8String.fromString(s"t$i")))))
-      GraftCommits.publish(confKv, d, truncate = false, Array(w.commit()))
+      GraftCommits.publish(shipped.value.conf, d, truncate = false, Array(w.commit()))
     }
     for (e <- 1 to 4) publishEpoch(e, 10L + e, (e * 100) until (e * 100 + 25))
     def count() = spark.read.format("graft").load(d).count()
@@ -254,16 +254,16 @@ class MaintenanceSpec extends AnyFunSuite {
     ContainerIO.mkdirs(conf, s"$d/manifests")
     val schema = StructType(Seq(StructField("id", LongType, nullable = false),
       StructField("tag", StringType, nullable = false)))
-    val confKv = ContainerIO.confSnapshot(spark)
+    val shipped = ContainerIO.shippedConf(spark)
     def stage(e: Int, taskId: Long, ids: Range): GraftCommitMessage = {
-      val w = new GraftDataWriter(d, 0, s"q-e$e", confKv, 64, taskId, schema,
+      val w = new GraftDataWriter(d, 0, s"q-e$e", shipped, 64, taskId, schema,
         Nil, Nil)
       ids.foreach(i => w.write(new GenericInternalRow(
         Array[Any](i.toLong, UTF8String.fromString(s"t$i")))))
       w.commit().asInstanceOf[GraftCommitMessage]
     }
     for (e <- 1 to 3)
-      GraftCommits.publish(confKv, d, truncate = false,
+      GraftCommits.publish(shipped.value.conf, d, truncate = false,
         Array(stage(e, 10L + e, (e * 100) until (e * 100 + 20))))
     GraftMaintenance.compact(spark, d)
     def count() = spark.read.format("graft").load(d).count()
@@ -280,7 +280,7 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(count() === 60,
       "listing fallback must not resurrect a compacted epoch's stale replay")
     // the next commit re-indexes from the listing: same rule applies
-    GraftCommits.publish(confKv, d, truncate = false,
+    GraftCommits.publish(shipped.value.conf, d, truncate = false,
       Array(stage(4, 14L, 400 until 420)))
     assert(count() === 80,
       "the re-index must not fold the stale replay back into the index")
@@ -591,9 +591,9 @@ class MaintenanceSpec extends AnyFunSuite {
     val ckpt = tempDir("seen-gc-ckpt")
     val schema = StructType(Seq(StructField("id", LongType, nullable = false),
       StructField("tag", StringType, nullable = false)))
-    val confKv = ContainerIO.confSnapshot(spark)
+    val shipped = ContainerIO.shippedConf(spark)
     def mkStream() = new GraftMicroBatchStream(d, ckpt, schema, Array.empty,
-      confKv, 128L << 20, GraftDataSource.layoutOf(schema))
+      shipped, 128L << 20, GraftDataSource.layoutOf(schema))
     val stream = mkStream()
     var last = stream.initialOffset()
     for (w <- 0 until 100) {
@@ -690,9 +690,9 @@ class MaintenanceSpec extends AnyFunSuite {
     val ckpt = tempDir("sub-ckpt")
     val schema = StructType(Seq(StructField("id", LongType, nullable = false),
       StructField("tag", StringType, nullable = false)))
-    val confKv = ContainerIO.confSnapshot(spark)
+    val shipped = ContainerIO.shippedConf(spark)
     def mkStream() = new GraftMicroBatchStream(d, ckpt, schema, Array.empty,
-      confKv, 128L << 20, GraftDataSource.layoutOf(schema))
+      shipped, 128L << 20, GraftDataSource.layoutOf(schema))
     val s1 = mkStream()
     val off0 = s1.initialOffset()
     Seq((1L, "a"), (2L, "b")).toDF("id", "tag").coalesce(1)

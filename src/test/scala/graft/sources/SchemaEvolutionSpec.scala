@@ -215,8 +215,6 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     // with the committed [id, a, b, c]. Its publish must abort inside
     // the OCC commit, clean its commit marker, and leave the table
     // readable.
-    val confKv = graft.engine.ContainerIO.confSnapshot(
-      spark.sparkContext.hadoopConfiguration)
     val loser = graft.engine.TableManifest("race9z9z9z-0", 0, 1L, 1, 8L, 8L,
       digest = "00",
       schemaCols = Seq(("id", 0), ("a", 1 | 0x80), ("z", 0 | 0x80)),
@@ -225,7 +223,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
         Map.empty, Map.empty, Map.empty, Map.empty)))
     val msg = GraftCommitMessage(loser)
     val ex = intercept[SchemaEvolutionConflict] {
-      GraftCommits.publish(confKv, d, truncate = false, Array(msg))
+      GraftCommits.publish(spark.sparkContext.hadoopConfiguration, d, truncate = false, Array(msg))
     }
     assert(ex.getMessage.contains("concurrent schema evolution"), ex.getMessage)
     // the loser's commit marker was swept and the table stays readable
