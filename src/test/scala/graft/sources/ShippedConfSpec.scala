@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{FakeHdfsFileSystem, SparkTestSession, TestDirs}
+import graft.engine.{ContainerIO, FakeHdfsFileSystem, SparkTestSession, TestDirs}
 
 /** A local filesystem under a scheme no other suite registers, so no
   * instance of it sits in Hadoop's `FileSystem` cache before a test
@@ -92,13 +92,19 @@ class ShippedConfSpec extends AnyFunSuite {
   }
 
   test("a broadcast conf is reused until the session conf changes") {
-    val a = graft.engine.ContainerIO.shippedConf(spark)
-    assert(graft.engine.ContainerIO.shippedConf(spark) eq a)
+    val a = ContainerIO.shippedConf(spark)
+    assert(ContainerIO.shippedConf(spark) eq a)
     withKeys("graft.test.reuse" -> "1") {
-      val b = graft.engine.ContainerIO.shippedConf(spark)
+      val b = ContainerIO.shippedConf(spark)
       assert(!(b eq a))
       assert(b.value.conf.get("graft.test.reuse") === "1")
       assert(a.value.conf.get("graft.test.reuse") === null)
+      // an executor of a cluster deserializes the holder and rebuilds
+      // the Configuration from its wire form
+      val wire = new java.io.ObjectInputStream(
+        new java.io.ByteArrayInputStream(javaBytes(b.value)))
+      val copy = wire.readObject().asInstanceOf[ContainerIO.ShippedConf]
+      assert(copy.conf.get("graft.test.reuse") === "1")
     }
   }
 
