@@ -43,6 +43,19 @@ object BitPacker {
     dst
   }
 
+  /** The little-endian word at byte `off` of `buf`; past the last whole
+    * word, the bytes that remain.
+    */
+  @inline def word(buf: Array[Byte], off: Int): Long =
+    if (off <= buf.length - 8) graft.core.Mem.getLongLE(buf, off) else tail(buf, off)
+
+  private def tail(buf: Array[Byte], off: Int): Long = {
+    var v = 0L
+    var j = 0
+    while (off + j < buf.length) { v |= (buf(off + j) & 0xffL) << (8 * j); j += 1 }
+    v
+  }
+
   /** Unpack `n` values of `width` bits each from `bytes` starting at `off`. */
   def unpack(bytes: Array[Byte], off: Int, n: Int, width: Int): Array[Long] = {
     require(width >= 0 && width <= 64, s"bit width $width out of range [0, 64]")
@@ -69,19 +82,11 @@ object BitPacker {
         i += 1
       }
     }
-    while (i < n) { // tail / wide-width byte ladder
+    while (i < n) { // tail, and widths whose value can span a ninth byte
       val byteOff = off + (bitPos >>> 3).toInt
       val bitOff = (bitPos & 7L).toInt
-      val need = (bitOff + width + 7) >>> 3
-      var v = 0L
-      var j = 0
-      val m = if (need < 8) need else 8
-      while (j < m) {
-        v |= (bytes(byteOff + j) & 0xffL) << (8 * j)
-        j += 1
-      }
-      v = v >>> bitOff
-      if (need > 8) v |= (bytes(byteOff + 8) & 0xffL) << (64 - bitOff)
+      var v = word(bytes, byteOff) >>> bitOff
+      if (bitOff + width > 64) v |= (bytes(byteOff + 8) & 0xffL) << (64 - bitOff)
       out(i) = v & mask
       bitPos += width
       i += 1

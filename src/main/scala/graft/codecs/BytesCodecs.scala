@@ -1,6 +1,6 @@
 package graft.codecs
 
-import graft.core.{BlockReader, BlockWriter, Mem, PrefixVarInt}
+import graft.core.{BlockReader, BlockWriter, PrefixVarInt}
 import org.apache.spark.unsafe.Platform
 
 /** Decoded float-array column (kind 7): flat float pool + per-row
@@ -111,9 +111,7 @@ object BytesCodecs {
   /** The block's id, n and dims, with room for `body` more bytes. */
   private def header(id: Int, col: FloatsColumn, body: Long): BlockWriter = {
     val n = col.n
-    val w = new BlockWriter((body + n * 2L + 16).toInt)
-    w.putByte(id)
-    w.putVarint(n.toLong)
+    val w = BlockHeader.write(id, n, (body + n * 2L + 16).toInt)
     var i = 0
     while (i < n) { w.putVarint(col.lens(i).toLong); i += 1 }
     w
@@ -166,16 +164,11 @@ object BytesCodecs {
 
   /** A float block of either id. */
   def decodeFloats(buf: Array[Byte], off: Int, end: Int): FloatsColumn = {
-    require(off >= 0 && off < end && end <= buf.length,
-      "empty or out-of-range block slice")
-    val r = new BlockReader(buf, off, end)
-    val id = r.getByte()
+    val id = BlockHeader.idOf(buf, off, end)
     require(id == F32RawId || id == F32RdId,
       s"unknown bytes-codec id $id (want $F32RawId or $F32RdId)")
-    val nv = r.getVarint()
-    require(nv >= 0 && nv <= LongCodecs.MaxDecodeRows && nv <= r.remaining,
-      s"implausible row count $nv")
-    val n = nv.toInt
+    val (r, n) = BlockHeader.open(buf, off, end, id)
+    require(n <= r.remaining, s"implausible row count $n") // a dim varint each
     val lens = new Array[Int](n)
     val offs = new Array[Int](n)
     // a raw float takes 4 bytes and an rd one at least its 16 right bits
@@ -315,19 +308,6 @@ object BytesCodecs {
       p
     }
 
-    /** The word at byte `off` of `buf`, little-endian; past the last
-      * whole word, the bytes that remain.
-      */
-    @inline private def word(buf: Array[Byte], off: Int, safeEnd: Int): Long =
-      if (off <= safeEnd) Mem.getLongLE(buf, off) else tail(buf, off)
-
-    private def tail(buf: Array[Byte], off: Int): Long = {
-      var v = 0L
-      var j = 0
-      while (off + j < buf.length) { v |= (buf(off + j) & 0xffL) << (8 * j); j += 1 }
-      v
-    }
-
     /** Decodes the body at `r` into `pool` (its size is the dims' total)
       * as raw bits. Sizes are checked before any allocation or read. Both
       * packed streams are read in place: [[BitPacker.unpack]] would hold
@@ -361,14 +341,13 @@ object BytesCodecs {
       r.skip((codeBytes + rightBytes).toInt)
       val cMask = (1 << cw) - 1
       val rMask = (1 << rw) - 1
-      val safeEnd = buf.length - 8
       var cb = codesAt.toLong << 3
       var rb = rightsAt.toLong << 3
       var bad = 0
       var i = 0
       while (i < total) {
-        val code = (word(buf, (cb >>> 3).toInt, safeEnd) >>> (cb & 7).toInt).toInt & cMask
-        val right = (word(buf, (rb >>> 3).toInt, safeEnd) >>> (rb & 7).toInt).toInt & rMask
+        val code = (BitPacker.word(buf, (cb >>> 3).toInt) >>> (cb & 7).toInt).toInt & cMask
+        val right = (BitPacker.word(buf, (rb >>> 3).toInt) >>> (rb & 7).toInt).toInt & rMask
         bad |= dn - 1 - code
         Platform.putInt(pool, Platform.FLOAT_ARRAY_OFFSET + 4L * i, (dict(code) << rw) | right)
         cb += cw
@@ -386,7 +365,7 @@ object BytesCodecs {
         val left = r.getByte() | (r.getByte() << 8)
         require(left < leftCap, s"f32-rd left part $left wider than ${32 - rw} bits")
         val at = (rightsAt.toLong << 3) + pos * rw
-        val right = (word(buf, (at >>> 3).toInt, safeEnd) >>> (at & 7).toInt).toInt & rMask
+        val right = (BitPacker.word(buf, (at >>> 3).toInt) >>> (at & 7).toInt).toInt & rMask
         Platform.putInt(pool, Platform.FLOAT_ARRAY_OFFSET + 4L * pos, (left << rw) | right)
         j += 1
       }

@@ -267,30 +267,12 @@ object Fsst {
     // concurrent double build is benign: the lookup is deterministic, and
     // its final fields publish it whole through this volatile.
     @transient @volatile private var dispatchV: Dispatch = null
-    private var maxLenV = 0
 
     private[Fsst] def dispatch: Dispatch = {
       var d = dispatchV
       if (d == null) { d = new Dispatch(symbols); dispatchV = d }
       d
     }
-
-    def maxLen: Int = {
-      if (maxLenV == 0) {
-        var m = 1
-        var c = 0
-        while (c < symbols.length) {
-          if (symbols(c).length > m) m = symbols(c).length
-          c += 1
-        }
-        maxLenV = m
-      }
-      maxLenV
-    }
-
-    /** Longest match at s(i): returns (code << 8) | matchedLen, or -1. */
-    def longestMatch(s: Array[Byte], i: Int, end: Int): Int =
-      dispatch.longestMatch(s, i, end)
 
     /** Greedy longest-match encode of src into w; returns bytes written.
       * Worst case is 2 output bytes per input byte (every byte escaped),
@@ -323,12 +305,6 @@ object Fsst {
       }
       w.advance(p - p0)
       p - p0
-    }
-
-    def decode(src: Array[Byte], off: Int, encLen: Int, decLen: Int): Array[Byte] = {
-      val out = new Array[Byte](decLen)
-      decodeInto(src, off, encLen, out, 0, decLen)
-      out
     }
 
     /** Decode one value into `dst(dstOff until dstOff+decLen)` — the

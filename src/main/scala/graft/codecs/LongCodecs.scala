@@ -1,43 +1,31 @@
 package graft.codecs
 
-import graft.core.{BlockReader, BlockWriter, PrefixVarInt}
+import graft.core.{BlockReader, PrefixVarInt}
 
 /** One lightweight-compression codec for a chunk of Long values.
-  * Block wire format: `[id: u8][count: varint][payload…]`.
+  * Block wire format: `[id: u8][count: varint][payload…]` ([[BlockHeader]]).
   * All codecs are self-describing and independently decodable — the block
   * is the unit shipped/stored, so decode never needs external metadata.
   */
 sealed trait LongCodec extends Serializable {
   def id: Byte
   def name: String
+  /** The exact size of [[encode]]'s block for the chunk of `st`;
+    * `Long.MaxValue` when the codec cannot encode it.
+    */
+  def size(st: LongStats): Long
   def encode(values: Array[Long], n: Int): Array[Byte]
   final def encode(values: Array[Long]): Array[Byte] = encode(values, values.length)
   /** Decode a block that lives at buf(off until end) — zero-copy slice
     * form so container decode never duplicates block bytes. */
   def decode(buf: Array[Byte], off: Int, end: Int): Array[Long]
   final def decode(block: Array[Byte]): Array[Long] = decode(block, 0, block.length)
-
-  protected final def header(n: Int, cap: Int): BlockWriter = {
-    val w = new BlockWriter(cap)
-    w.putByte(id)
-    w.putVarint(n.toLong)
-    w
-  }
-  protected final def openReader(buf: Array[Byte], off: Int, end: Int): (BlockReader, Int) = {
-    val r = new BlockReader(buf, off, end)
-    val gotId = r.getByte()
-    require(gotId == id, s"block codec id $gotId, expected $id ($name)")
-    val n = r.getVarint()
-    require(n >= 0 && n <= LongCodecs.MaxDecodeRows,
-      s"implausible row count $n in $name block (cap ${LongCodecs.MaxDecodeRows})")
-    (r, n.toInt)
-  }
 }
 
-/** Exact per-codec encoded sizes gathered in ONE pass over the chunk —
-  * the stats the auto-selector consumes (north_rule: "stats-driven
+/** The chunk facts gathered in ONE pass over the chunk from which every
+  * codec prices its exact block size (north_rule: "stats-driven
   * auto-selector (cardinality, run-length, value-range histograms
-  * gathered per partition)"). Sizes here are exact, not estimates, so the
+  * gathered per partition)"). Sizes are exact, not estimates, so the
   * selector is provably optimal within the suite.
   */
 final case class LongStats(
@@ -57,11 +45,7 @@ final case class LongStats(
     // gcd of every `v - min` as an unsigned value; 0 for a constant chunk
     gcd: Long,
     decimal: DecimalLayout
-) {
-  def forWidth: Int = BitPacker.bitsForUnsigned(max - min)
-  def bitpackWidth: Int = if (min >= 0) BitPacker.bitsForUnsigned(max) else 64
-  def gcdWidth: Int = ForGcdLongCodec.width(max - min, gcd)
-}
+)
 
 /** What a [[DecimalLongCodec]] block of a chunk holds: the exponent, the
   * exceptions (their count and the varint bytes of their position gaps)
@@ -91,7 +75,7 @@ object LongCodecs {
     */
   final val MaxDecodeRows = 1 << 24
 
-  @inline private def zlen(v: Long): Int = PrefixVarInt.len(PrefixVarInt.zigzagEncode(v))
+  @inline private[codecs] def zlen(v: Long): Int = PrefixVarInt.len(PrefixVarInt.zigzagEncode(v))
 
   /** One-pass stats over values(0 until n). Each value's zigzag length
     * is computed once and serves varint, delta and RLE; distinct values go
@@ -161,8 +145,8 @@ object LongCodecs {
     // the codecs before it and wins one against those after it
     val lower = dictLowerBound(noDict)
     val (before, dictAndAfter) = all.span(_ != DictLongCodec)
-    if (before.exists(sizeOf(_, noDict) <= lower) ||
-        dictAndAfter.tail.exists(sizeOf(_, noDict) < lower)) return noDict
+    if (before.exists(_.size(noDict) <= lower) ||
+        dictAndAfter.tail.exists(_.size(noDict) < lower)) return noDict
     // sorted distinct values stored as first(zigzag) + positive deltas,
     // then n codes bit-packed at bits(card-1)
     val arr = set.sorted()
@@ -193,7 +177,7 @@ object LongCodecs {
         val wide = math.max(PrefixVarInt.len(DecimalLongCodec.minGap(dec)).toLong, gcdLen)
         free * gcdLen + (gaps - free) * wide
       }
-    headerSize(st.count) + PrefixVarInt.len(card.toLong) + zlen(st.min) + gapBytes + codes
+    BlockHeader.size(st.count) + PrefixVarInt.len(card.toLong) + zlen(st.min) + gapBytes + codes
   }
 
   /** Open-addressing set of longs holding at most `cap` values; `add`
@@ -269,29 +253,6 @@ object LongCodecs {
     }
   }
 
-  private def headerSize(n: Int): Long = 1L + PrefixVarInt.len(n.toLong)
-
-  /** Exact encoded block size per codec, from stats alone. */
-  def sizeOf(codec: LongCodec, st: LongStats): Long = {
-    val h = headerSize(st.count)
-    codec match {
-      case VarintLongCodec => h + st.varintBodySize
-      case DeltaLongCodec  => h + st.deltaBodySize
-      case RleLongCodec    => h + PrefixVarInt.len(st.runCount.toLong) + st.rleBodySize
-      case ForLongCodec =>
-        h + zlen(st.min) + 1 + BitPacker.packedSize(st.count, st.forWidth)
-      case BitPackLongCodec =>
-        if (st.min < 0) Long.MaxValue
-        else h + 1 + BitPacker.packedSize(st.count, st.bitpackWidth)
-      case DictLongCodec =>
-        if (st.dictBodySize < 0) Long.MaxValue else h + st.dictBodySize
-      case ForGcdLongCodec =>
-        h + zlen(st.min) + PrefixVarInt.len(st.gcd) + 1 +
-          BitPacker.packedSize(st.count, st.gcdWidth)
-      case DecimalLongCodec => h + st.decimal.bodySize(st.count)
-    }
-  }
-
   val all: Seq[LongCodec] =
     Seq(VarintLongCodec, DeltaLongCodec, RleLongCodec, ForLongCodec,
       BitPackLongCodec, DictLongCodec, ForGcdLongCodec, DecimalLongCodec)
@@ -300,35 +261,24 @@ object LongCodecs {
     * toward the earlier codec in `all` (varint first — simplest decode).
     */
   def select(st: LongStats): LongCodec =
-    all.minBy(c => sizeOf(c, st))
+    all.minBy(_.size(st))
 
-  def byId(id: Int): LongCodec = id match {
-    case 1 => VarintLongCodec
-    case 2 => DeltaLongCodec
-    case 3 => RleLongCodec
-    case 4 => ForLongCodec
-    case 5 => BitPackLongCodec
-    case 6 => DictLongCodec
-    case 7 => ForGcdLongCodec
-    case 8 => DecimalLongCodec
-    case x => throw new IllegalArgumentException(s"unknown long codec id $x")
-  }
+  def byId(id: Int): LongCodec =
+    all.find(_.id == id)
+      .getOrElse(throw new IllegalArgumentException(s"unknown long codec id $id"))
 
   def decode(block: Array[Byte]): Array[Long] = decodeSlice(block, 0, block.length)
 
-  def decodeSlice(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
-    require(off >= 0 && off < end && end <= buf.length, "empty or out-of-range block slice")
-    byId(buf(off) & 0xff).decode(buf, off, end)
-  }
+  def decodeSlice(buf: Array[Byte], off: Int, end: Int): Array[Long] =
+    byId(BlockHeader.idOf(buf, off, end)).decode(buf, off, end)
 
   /** A DOUBLE column's block as doubles: a `decimal` block straight from
     * its integers, any other block through its sortable bits.
     */
-  def decodeDoubles(buf: Array[Byte], off: Int, end: Int): Array[Double] = {
-    require(off >= 0 && off < end && end <= buf.length, "empty or out-of-range block slice")
-    if (buf(off) == DecimalLongCodec.id) DecimalLongCodec.decodeDoubles(buf, off, end)
+  def decodeDoubles(buf: Array[Byte], off: Int, end: Int): Array[Double] =
+    if (BlockHeader.idOf(buf, off, end) == DecimalLongCodec.id)
+      DecimalLongCodec.decodeDoubles(buf, off, end)
     else DoubleBits.toDoubles(decodeSlice(buf, off, end))
-  }
 }
 
 /** Zigzag + prefix-varint per value — the reference codec itself, applied
@@ -337,13 +287,14 @@ object LongCodecs {
 case object VarintLongCodec extends LongCodec {
   val id: Byte = 1
   val name = "varint"
+  def size(st: LongStats): Long = BlockHeader.size(st.count) + st.varintBodySize
   def encode(values: Array[Long], n: Int): Array[Byte] = {
-    val w = header(n, n * 3 + 16)
+    val w = BlockHeader.write(id, n, n * 3 + 16)
     w.putSignedVarints(values, 0, n) // batch: register-local cursor
     w.result()
   }
   def decode(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
-    val (r, n) = openReader(buf, off, end)
+    val (r, n) = BlockHeader.open(buf, off, end, id)
     if (n > r.remaining) graft.core.DecodeError.eob() // each value >= 1 byte
     val out = new Array[Long](n)
     val got = r.readSignedVarints(out, 0, n) // batch: register-local cursor
@@ -358,8 +309,9 @@ case object VarintLongCodec extends LongCodec {
 case object DeltaLongCodec extends LongCodec {
   val id: Byte = 2
   val name = "delta"
+  def size(st: LongStats): Long = BlockHeader.size(st.count) + st.deltaBodySize
   def encode(values: Array[Long], n: Int): Array[Byte] = {
-    val w = header(n, n * 2 + 16)
+    val w = BlockHeader.write(id, n, n * 2 + 16)
     var prev = 0L
     var i = 0
     while (i < n) {
@@ -370,7 +322,7 @@ case object DeltaLongCodec extends LongCodec {
     w.result()
   }
   def decode(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
-    val (r, n) = openReader(buf, off, end)
+    val (r, n) = BlockHeader.open(buf, off, end, id)
     if (n > r.remaining) graft.core.DecodeError.eob() // each delta >= 1 byte
     val out = new Array[Long](n)
     val got = r.readSignedVarints(out, 0, n) // batch: register-local cursor
@@ -386,8 +338,10 @@ case object DeltaLongCodec extends LongCodec {
 case object RleLongCodec extends LongCodec {
   val id: Byte = 3
   val name = "rle"
+  def size(st: LongStats): Long =
+    BlockHeader.size(st.count) + PrefixVarInt.len(st.runCount.toLong) + st.rleBodySize
   def encode(values: Array[Long], n: Int): Array[Byte] = {
-    val w = header(n, n + 16)
+    val w = BlockHeader.write(id, n, n + 16)
     // count runs first (cheap second pass over the chunk)
     var runs = 1
     var i = 1
@@ -406,7 +360,7 @@ case object RleLongCodec extends LongCodec {
     w.result()
   }
   def decode(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
-    val (r, n) = openReader(buf, off, end)
+    val (r, n) = BlockHeader.open(buf, off, end, id)
     val runsL = r.getVarint()
     require(runsL >= 0 && runsL <= r.remaining, // each run >= 2 bytes
       s"implausible RLE run count $runsL")
@@ -433,6 +387,9 @@ case object RleLongCodec extends LongCodec {
 case object ForLongCodec extends LongCodec {
   val id: Byte = 4
   val name = "for"
+  def size(st: LongStats): Long =
+    BlockHeader.size(st.count) + LongCodecs.zlen(st.min) + 1 +
+      BitPacker.packedSize(st.count, BitPacker.bitsForUnsigned(st.max - st.min))
   def encode(values: Array[Long], n: Int): Array[Byte] = {
     var min = values(0)
     var max = values(0)
@@ -446,14 +403,14 @@ case object ForLongCodec extends LongCodec {
     val offsets = new Array[Long](n)
     i = 0
     while (i < n) { offsets(i) = values(i) - min; i += 1 }
-    val w = header(n, 16 + BitPacker.packedSize(n, width))
+    val w = BlockHeader.write(id, n, 16 + BitPacker.packedSize(n, width))
     w.putSignedVarint(min)
     w.putByte(width)
     w.putBytes(BitPacker.pack(offsets, n, width))
     w.result()
   }
   def decode(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
-    val (r, n) = openReader(buf, off, end)
+    val (r, n) = BlockHeader.open(buf, off, end, id)
     val min = r.getSignedVarint()
     val width = r.getByte()
     val out = BitPacker.unpack(buf, r.position, n, width)
@@ -470,6 +427,10 @@ case object ForLongCodec extends LongCodec {
 case object BitPackLongCodec extends LongCodec {
   val id: Byte = 5
   val name = "bitpack"
+  def size(st: LongStats): Long =
+    if (st.min < 0) Long.MaxValue
+    else BlockHeader.size(st.count) + 1 +
+      BitPacker.packedSize(st.count, BitPacker.bitsForUnsigned(st.max))
   def encode(values: Array[Long], n: Int): Array[Byte] = {
     var max = 0L
     var i = 0
@@ -479,13 +440,13 @@ case object BitPackLongCodec extends LongCodec {
       i += 1
     }
     val width = BitPacker.bitsForUnsigned(max)
-    val w = header(n, 16 + BitPacker.packedSize(n, width))
+    val w = BlockHeader.write(id, n, 16 + BitPacker.packedSize(n, width))
     w.putByte(width)
     w.putBytes(BitPacker.pack(values, n, width))
     w.result()
   }
   def decode(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
-    val (r, n) = openReader(buf, off, end)
+    val (r, n) = BlockHeader.open(buf, off, end, id)
     val width = r.getByte()
     BitPacker.unpack(buf, r.position, n, width)
   }
@@ -498,6 +459,8 @@ case object BitPackLongCodec extends LongCodec {
 case object DictLongCodec extends LongCodec {
   val id: Byte = 6
   val name = "dict"
+  def size(st: LongStats): Long =
+    if (st.dictBodySize < 0) Long.MaxValue else BlockHeader.size(st.count) + st.dictBodySize
   def encode(values: Array[Long], n: Int): Array[Byte] = {
     // the sorted distinct values, from a set: no sort of all n rows
     val set = new LongCodecs.LongOpenSet(n, n)
@@ -509,7 +472,7 @@ case object DictLongCodec extends LongCodec {
     val sorted = set.sorted()
     val card = sorted.length
     val width = BitPacker.bitsForUnsigned((card - 1).toLong)
-    val w = header(n, 16 + card * 2 + BitPacker.packedSize(n, width))
+    val w = BlockHeader.write(id, n, 16 + card * 2 + BitPacker.packedSize(n, width))
     w.putVarint(card.toLong)
     w.putSignedVarint(sorted(0))
     i = 1
@@ -527,7 +490,7 @@ case object DictLongCodec extends LongCodec {
     w.result()
   }
   def decode(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
-    val (r, n) = openReader(buf, off, end)
+    val (r, n) = BlockHeader.open(buf, off, end, id)
     if (n == 0) return new Array[Long](0)
     val cardL = r.getVarint()
     require(cardL >= 1 && cardL <= n && cardL <= r.remaining + 1,
@@ -605,6 +568,10 @@ case object ForGcdLongCodec extends LongCodec {
     @inline def quotient(d: Long): Long = (d >>> shift) * inv
   }
 
+  def size(st: LongStats): Long =
+    BlockHeader.size(st.count) + LongCodecs.zlen(st.min) + PrefixVarInt.len(st.gcd) + 1 +
+      BitPacker.packedSize(st.count, width(st.max - st.min, st.gcd))
+
   def encode(values: Array[Long], n: Int): Array[Byte] = {
     var min = values(0)
     var max = values(0)
@@ -624,7 +591,7 @@ case object ForGcdLongCodec extends LongCodec {
       i = 0
       while (i < n) { quotients(i) = acc.quotient(values(i) - min); i += 1 }
     }
-    val w = header(n, 24 + BitPacker.packedSize(n, width))
+    val w = BlockHeader.write(id, n, 24 + BitPacker.packedSize(n, width))
     w.putSignedVarint(min)
     w.putVarint(g)
     w.putByte(width)
@@ -633,7 +600,7 @@ case object ForGcdLongCodec extends LongCodec {
   }
 
   def decode(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
-    val (r, n) = openReader(buf, off, end)
+    val (r, n) = BlockHeader.open(buf, off, end, id)
     val min = r.getSignedVarint()
     val g = r.getVarint()
     val width = r.getByte()
@@ -756,11 +723,13 @@ case object DecimalLongCodec extends LongCodec {
     if (steps >= 1.0) steps.toLong else 1L
   }
 
+  def size(st: LongStats): Long = BlockHeader.size(st.count) + st.decimal.bodySize(st.count)
+
   def encode(values: Array[Long], n: Int): Array[Byte] = {
     val ks = new Array[Long](n)
     val l = scan(values, n, exponent(values, n), ks)
     val width = BitPacker.bitsForUnsigned(l.kMax - l.kMin)
-    val w = header(n, 16 + l.bodySize(n).toInt)
+    val w = BlockHeader.write(id, n, 16 + l.bodySize(n).toInt)
     w.putByte(math.max(l.e, 0))
     w.putVarint(l.exceptions.toLong)
     w.putSignedVarint(l.kMin)
@@ -832,7 +801,7 @@ case object DecimalLongCodec extends LongCodec {
   }
 
   private def open(buf: Array[Byte], off: Int, end: Int): Opened = {
-    val (r, n) = openReader(buf, off, end)
+    val (r, n) = BlockHeader.open(buf, off, end, id)
     val e = r.getByte()
     require(e <= MaxExp, s"decimal exponent $e above $MaxExp")
     val exceptions = r.getVarint()
@@ -879,17 +848,21 @@ object IntCodecs {
   def encode(values: Array[Long], n: Int): Array[Byte] =
     encode(LongCodecs.select(LongCodecs.stats(values, n)), values, n)
 
-  def decodeSlice(buf: Array[Byte], off: Int, end: Int): Array[Int] = {
-    require(off >= 0 && off < end && end <= buf.length,
-      "empty or out-of-range int block slice")
-    val raw =
-      if (buf(off) == Marker) LongCodecs.decodeSlice(buf, off + 1, end)
-      else varints(buf, off, end)
+  def decodeSlice(buf: Array[Byte], off: Int, end: Int): Array[Int] =
+    narrow(
+      if (BlockHeader.idOf(buf, off, end) == Marker) LongCodecs.decodeSlice(buf, off + 1, end)
+      else varints(buf, off, end),
+      Int.MinValue, Int.MaxValue)
+
+  /** `raw` as ints, each of which must lie in [lo, hi]: a value outside
+    * raises `DecodeError.Overflow`.
+    */
+  def narrow(raw: Array[Long], lo: Int, hi: Int): Array[Int] = {
     val out = new Array[Int](raw.length)
     var i = 0
     while (i < raw.length) {
       val v = raw(i)
-      if (v != v.toInt.toLong) throw new graft.core.DecodeError.Overflow
+      if (v < lo || v > hi) throw new graft.core.DecodeError.Overflow
       out(i) = v.toInt
       i += 1
     }
@@ -902,12 +875,7 @@ object IntCodecs {
     */
   private def varints(buf: Array[Byte], off: Int, end: Int): Array[Long] = {
     val r = new BlockReader(buf, off, end)
-    val n = {
-      val l = r.getVarint()
-      require(l >= 0 && l <= LongCodecs.MaxDecodeRows,
-        s"implausible row count $l in int block (cap ${LongCodecs.MaxDecodeRows})")
-      l.toInt
-    }
+    val n = BlockHeader.rows(r)
     val raw = new Array[Long](n)
     // readSignedVarints drains the block's tail itself (its bounds-checked
     // tail loop runs to the cursor's end): fewer decoded values than

@@ -1,6 +1,6 @@
 package graft.codecs
 
-import graft.core.{BlockReader, BlockWriter, PrefixVarInt}
+import graft.core.{BlockWriter, PrefixVarInt}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** A string column as UTF-8 slices into a shared byte pool — value i
@@ -134,11 +134,16 @@ final class Utf8Dict(col: Utf8Column, cap: Int) {
 }
 
 /** One lightweight-compression codec for a chunk of string values.
-  * Block wire format: `[id: u8][count: varint][payload…]`; ids 16+.
+  * Block wire format: `[id: u8][count: varint][payload…]`
+  * ([[BlockHeader]]); ids 16+.
   */
 sealed trait StringCodec extends Serializable {
   def id: Byte
   def name: String
+  /** The exact size of the codec's block for the chunk of `st`;
+    * `Long.MaxValue` when it is not priced from the stats.
+    */
+  def size(st: StringStats): Long
   /** Encode every value of `col`: the one encode implementation per codec. */
   def encodeUtf8(col: Utf8Column): Array[Byte]
   final def encode(values: Array[String], n: Int): Array[Byte] =
@@ -152,23 +157,6 @@ sealed trait StringCodec extends Serializable {
   final def decode(buf: Array[Byte], off: Int, end: Int): Array[String] =
     decodeUtf8(buf, off, end).strings
   final def decode(block: Array[Byte]): Array[String] = decode(block, 0, block.length)
-
-  protected final def header(n: Int, cap: Int, blockId: Int = id): BlockWriter = {
-    val w = new BlockWriter(cap)
-    w.putByte(blockId)
-    w.putVarint(n.toLong)
-    w
-  }
-  protected final def openReader(buf: Array[Byte], off: Int, end: Int,
-                                 blockId: Int = id): (BlockReader, Int) = {
-    val r = new BlockReader(buf, off, end)
-    val gotId = r.getByte()
-    require(gotId == blockId, s"block codec id $gotId, expected $blockId")
-    val n = r.getVarint()
-    require(n >= 0 && n <= LongCodecs.MaxDecodeRows,
-      s"implausible row count $n in block $blockId (cap ${LongCodecs.MaxDecodeRows})")
-    (r, n.toInt)
-  }
 }
 
 /** One-pass string chunk stats with exact sizes for raw/dict/rle and a
@@ -262,19 +250,9 @@ object StringCodecs {
     StringStats(n, totalBytes, rawBody, card, overflow, dictBody, runCount, rleBody)
   }
 
-  private def headerSize(n: Int): Long = 1L + PrefixVarInt.len(n.toLong)
-
-  def sizeOf(codec: StringCodec, st: StringStats): Long = {
-    val h = headerSize(st.count)
-    codec match {
-      case RawStringCodec  => h + st.rawBodySize
-      case DictStringCodec => if (st.dictBodySize < 0) Long.MaxValue else h + st.dictBodySize
-      case RleStringCodec  => h + PrefixVarInt.len(st.runCount.toLong) + st.rleBodySize
-      case FsstStringCodec => Long.MaxValue // priced by trial, see select()
-    }
-  }
-
+  /** The codecs priced exactly from [[StringStats]]. */
   val exact: Seq[StringCodec] = Seq(RawStringCodec, DictStringCodec, RleStringCodec)
+  val all: Seq[StringCodec] = exact :+ FsstStringCodec
 
   /** Mutable per-(partition, column) FSST training cache: training costs
     * ~5 sample passes per call, so the engine trains on the FIRST chunk of
@@ -300,12 +278,8 @@ object StringCodecs {
     */
   def encodeBest(col: Utf8Column, st: StringStats,
                  fsst: FsstState): (StringCodec, Array[Byte]) = {
-    var best: StringCodec = RawStringCodec
-    var bestSize = sizeOf(RawStringCodec, st)
-    for (c <- Seq(DictStringCodec, RleStringCodec)) {
-      val s = sizeOf(c, st)
-      if (s < bestSize) { best = c; bestSize = s }
-    }
+    val best = exact.minBy(_.size(st))
+    val bestSize = best.size(st)
     // FSST trial gate: worth a train+encode only when the chunk carries
     // real text volume AND no exactly-priced codec already compresses
     // ≥4x (FSST on text rarely beats that; skipping keeps the per-chunk
@@ -337,26 +311,18 @@ object StringCodecs {
   def select(values: Array[String], n: Int, st: StringStats): StringCodec =
     encodeBest(values, n, st)._1
 
-  def byId(id: Int): StringCodec = id match {
-    case 16 => RawStringCodec
-    case 17 => DictStringCodec
-    case 18 => RleStringCodec
-    case 19 => FsstStringCodec
-    case x  => throw new IllegalArgumentException(s"unknown string codec id $x")
-  }
+  def byId(id: Int): StringCodec =
+    all.find(_.id == id)
+      .getOrElse(throw new IllegalArgumentException(s"unknown string codec id $id"))
 
   def decode(block: Array[Byte]): Array[String] = decodeSlice(block, 0, block.length)
 
-  def decodeSlice(buf: Array[Byte], off: Int, end: Int): Array[String] = {
-    require(off >= 0 && off < end && end <= buf.length, "empty or out-of-range block slice")
-    byId(buf(off) & 0xff).decode(buf, off, end)
-  }
+  def decodeSlice(buf: Array[Byte], off: Int, end: Int): Array[String] =
+    decodeSliceUtf8(buf, off, end).strings
 
   /** Slice decode to UTF-8 slices (no String materialization). */
-  def decodeSliceUtf8(buf: Array[Byte], off: Int, end: Int): Utf8Column = {
-    require(off >= 0 && off < end && end <= buf.length, "empty or out-of-range block slice")
-    byId(buf(off) & 0xff).decodeUtf8(buf, off, end)
-  }
+  def decodeSliceUtf8(buf: Array[Byte], off: Int, end: Int): Utf8Column =
+    byId(BlockHeader.idOf(buf, off, end)).decodeUtf8(buf, off, end)
 }
 
 /** Plain layout: per-string byte length varints, then concatenated UTF-8.
@@ -367,6 +333,7 @@ object StringCodecs {
 case object RawStringCodec extends StringCodec {
   val id: Byte = 16
   val name = "raw"
+  def size(st: StringStats): Long = BlockHeader.size(st.count) + st.rawBodySize
   def encodeUtf8(col: Utf8Column): Array[Byte] = encodeSlices(id, col)
   def decodeUtf8(buf: Array[Byte], off: Int, end: Int): Utf8Column =
     decodeSlices(buf, off, end, id, Int.MaxValue)
@@ -379,7 +346,7 @@ case object RawStringCodec extends StringCodec {
     var total = 0L
     var i = 0
     while (i < n) { total += col.lens(i); i += 1 }
-    val w = header(n, (total + n * 2 + 16).min(Int.MaxValue).toInt, blockId)
+    val w = BlockHeader.write(blockId, n, (total + n * 2 + 16).min(Int.MaxValue).toInt)
     i = 0
     while (i < n) { w.putVarint(col.lens(i).toLong); i += 1 }
     i = 0
@@ -392,9 +359,7 @@ case object RawStringCodec extends StringCodec {
     */
   private[codecs] def decodeSlices(buf: Array[Byte], off: Int, end: Int,
                                    blockId: Int, maxLen: Int): Utf8Column = {
-    require(off >= 0 && off < end && end <= buf.length,
-      "empty or out-of-range block slice")
-    val (r, n) = openReader(buf, off, end, blockId)
+    val (r, n) = BlockHeader.open(buf, off, end, blockId)
     if (n > r.remaining) graft.core.DecodeError.eob() // each len varint >= 1 byte
     val lens = new Array[Int](n)
     var i = 0
@@ -420,6 +385,8 @@ case object RawStringCodec extends StringCodec {
 case object DictStringCodec extends StringCodec {
   val id: Byte = 17
   val name = "dict"
+  def size(st: StringStats): Long =
+    if (st.dictBodySize < 0) Long.MaxValue else BlockHeader.size(st.count) + st.dictBodySize
   def encodeUtf8(col: Utf8Column): Array[Byte] = {
     val n = col.n
     val codes = new Utf8Dict(col, Int.MaxValue)
@@ -431,7 +398,7 @@ case object DictStringCodec extends StringCodec {
     }
     val card = codes.size
     val width = BitPacker.bitsForUnsigned((card - 1).toLong)
-    val w = header(n, 64 + n)
+    val w = BlockHeader.write(id, n, 64 + n)
     w.putVarint(card.toLong)
     var c = 0
     while (c < card) {
@@ -445,7 +412,7 @@ case object DictStringCodec extends StringCodec {
     w.result()
   }
   def decodeUtf8(buf: Array[Byte], off: Int, end: Int): Utf8Column = {
-    val (r, n) = openReader(buf, off, end)
+    val (r, n) = BlockHeader.open(buf, off, end, id)
     if (n == 0) return new Utf8Column(buf, new Array[Int](0), new Array[Int](0))
     val cardL = r.getVarint()
     require(cardL >= 1 && cardL <= n && cardL <= r.remaining,
@@ -482,12 +449,14 @@ case object DictStringCodec extends StringCodec {
 case object RleStringCodec extends StringCodec {
   val id: Byte = 18
   val name = "rle"
+  def size(st: StringStats): Long =
+    BlockHeader.size(st.count) + PrefixVarInt.len(st.runCount.toLong) + st.rleBodySize
   def encodeUtf8(col: Utf8Column): Array[Byte] = {
     val n = col.n
     var runs = 1
     var i = 1
     while (i < n) { if (!col.same(i, i - 1)) runs += 1; i += 1 }
-    val w = header(n, n * 4 + 16)
+    val w = BlockHeader.write(id, n, n * 4 + 16)
     w.putVarint(runs.toLong)
     var start = 0
     i = 1
@@ -503,7 +472,7 @@ case object RleStringCodec extends StringCodec {
     w.result()
   }
   def decodeUtf8(buf: Array[Byte], off: Int, end: Int): Utf8Column = {
-    val (r, n) = openReader(buf, off, end)
+    val (r, n) = BlockHeader.open(buf, off, end, id)
     val runsL = r.getVarint()
     require(runsL >= 0 && runsL <= r.remaining, s"implausible RLE run count $runsL")
     val runs = runsL.toInt
@@ -535,6 +504,8 @@ case object RleStringCodec extends StringCodec {
 case object FsstStringCodec extends StringCodec {
   val id: Byte = 19
   val name = "fsst"
+  /** Priced by a trial encode in [[StringCodecs.encodeBest]]. */
+  def size(st: StringStats): Long = Long.MaxValue
 
   def encodeUtf8(col: Utf8Column): Array[Byte] = encodeWith(Fsst.train(col), col)
 
@@ -543,7 +514,7 @@ case object FsstStringCodec extends StringCodec {
     */
   def encodeWith(table: Fsst.SymbolTable, col: Utf8Column): Array[Byte] = {
     val n = col.n
-    val w = header(n, 64)
+    val w = BlockHeader.write(id, n, 64)
     table.writeTo(w)
     var i = 0
     while (i < n) { w.putVarint(col.lens(i).toLong); i += 1 }
@@ -566,7 +537,7 @@ case object FsstStringCodec extends StringCodec {
     encode(values, n).length.toLong
 
   def decodeUtf8(buf: Array[Byte], off: Int, end: Int): Utf8Column = {
-    val (r, n) = openReader(buf, off, end)
+    val (r, n) = BlockHeader.open(buf, off, end, id)
     val table = Fsst.readTable(r)
     val decLens = new Array[Int](n)
     val encLens = new Array[Int](n)

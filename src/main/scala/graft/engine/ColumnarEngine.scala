@@ -173,9 +173,12 @@ object ColumnarEngine {
 
   // ---------------------------------------------------------------- encode
 
+  /** Salt buckets of [[partitionForEncoding]]. */
+  private final val SaltBuckets = 16
+
   /** Salted repartition + in-partition sort (north_rule skew handling):
-    * the salt splits any giant repo across `saltBuckets` partitions, so no
-    * single partition carries more than ~1/saltBuckets of a hot repo.
+    * the salt splits any giant repo across [[SaltBuckets]] partitions, so
+    * no single partition carries more than ~1/16 of a hot repo.
     *
     * Deliberately HASH partitioning (Murmur3, fixed seed — deterministic
     * across runs and cluster sizes), not `repartitionByRange`: Spark's
@@ -187,11 +190,10 @@ object ColumnarEngine {
     * the codecs actually need from range partitioning: long
     * (repo, lang, path) runs inside each partition for RLE/dict/delta.
     */
-  def partitionForEncoding(ds: Dataset[DerivedRow], numParts: Int,
-                           saltBuckets: Int = 16): Dataset[DerivedRow] = {
+  def partitionForEncoding(ds: Dataset[DerivedRow], numParts: Int): Dataset[DerivedRow] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.withColumn("_salt", pmod(xxhash64($"path"), lit(saltBuckets.toLong)))
+    ds.withColumn("_salt", pmod(xxhash64($"path"), lit(SaltBuckets.toLong)))
       .repartition(numParts, $"repo", $"_salt")
       .sortWithinPartitions($"repo", $"lang", $"path")
       .drop("_salt")
@@ -211,9 +213,8 @@ object ColumnarEngine {
     * whose columns are not. A null value fails the encode, never becomes
     * a stored value.
     */
-  def encode(ds: Dataset[DerivedRow], outDir: String, numParts: Int,
-             saltBuckets: Int = 16): Array[TableManifest] = {
-    partitionForEncoding(ds, numParts, saltBuckets).toDF()
+  def encode(ds: Dataset[DerivedRow], outDir: String, numParts: Int): Array[TableManifest] = {
+    partitionForEncoding(ds, numParts).toDF()
       .map(identity[Row])(Encoders.row(GraftDataSource.schema))
       .write.format("graft").mode("overwrite").save(outDir)
     Manifests.readCommitted(ds.sparkSession.sparkContext.hadoopConfiguration, outDir)

@@ -349,18 +349,8 @@ private[graft] object Kinds {
       case _ => None
     }
     // anything outside 0/1 in the block is corruption, not data
-    override def decode(block: Array[Byte], off: Int): AnyRef = {
-      val wide = LongCodecs.decodeSlice(block, off, block.length)
-      val out = new Array[Int](wide.length)
-      var i = 0
-      while (i < wide.length) {
-        val v = wide(i)
-        if (v != 0L && v != 1L) throw new graft.core.DecodeError.Overflow
-        out(i) = v.toInt
-        i += 1
-      }
-      out
-    }
+    override def decode(block: Array[Byte], off: Int): AnyRef =
+      IntCodecs.narrow(LongCodecs.decodeSlice(block, off, block.length), 0, 1)
     override protected def fill(v: OnHeapColumnVector, col: DecodedColumn,
                       sel: Array[Int], m: Int, s: ColumnSpec): Unit = {
       val src = col.ints

@@ -89,25 +89,21 @@ case class IvfLists(child: Expression, cents: Seq[Seq[Double]], nprobe: Int)
       c += 1
     }
     // partial selection of the top nprobe by (score desc, id asc) —
-    // nlist is tiny (<= a few hundred), O(nlist * nprobe) beats a sort
+    // nlist is tiny (<= a few hundred), O(nlist * nprobe) beats a sort.
+    // Consumed lists are tracked apart from the scores: once fewer than
+    // nprobe lists score above -Inf (a NaN vector scores -Inf on all of
+    // them), the rest follow in id order, and no list is picked twice.
+    val consumed = new Array[Boolean](nlist)
     val out = new Array[Any](nprobe)
     var k = 0
     while (k < nprobe) {
       var best = -1
-      var bestS = Double.NegativeInfinity
       var q = 0
       while (q < nlist) {
-        // `|| best < 0` keeps the selection total when every remaining
-        // score is -Inf (a NaN vector maps all scores there above): a bad
-        // vector then ranks lists deterministically and fails in the
-        // caller's exact-cosine verify with a diagnosable NaN, instead of
-        // throwing ArrayIndexOutOfBounds from inside codegen. For any
-        // vector with at least one finite score this picks exactly what
-        // the plain max did.
-        if (scores(q) > bestS || best < 0) { bestS = scores(q); best = q }
+        if (!consumed(q) && (best < 0 || scores(q) > scores(best))) best = q
         q += 1
       }
-      scores(best) = Double.NegativeInfinity // consumed
+      consumed(best) = true
       out(k) = best
       k += 1
     }

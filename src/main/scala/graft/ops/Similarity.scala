@@ -4,9 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Vector similarity search over an embedding column (`array<float>`).
-  * All math is built from codegen'd collection functions (`zip_with`,
-  * `aggregate`) — no UDFs on the hot path.
+/** Vector similarity search over an embedding column (`array<float>` or
+  * `array<double>`). The search paths score the stored vectors as they
+  * are, through native codegen'd expressions ([[graft.functions.CosineSim]],
+  * [[graft.functions.IvfLists]], [[graft.functions.LshProbes]]) that
+  * widen each float to a double exactly as a cast would; the declarative
+  * [[cosine]] and [[lshBucket]], built from `zip_with`/`aggregate`, stay
+  * as the independently derived cross-checks. No UDFs.
   */
 object Similarity {
 
@@ -50,11 +54,11 @@ object Similarity {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     // no input widening here (cf. lshTopK): the corpus-side work is one
     // fused cosine pass, so an extra exchange costs more than the
     // parallelism returns on a narrow input
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
+    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", cosineFast(corpus)(col("qv"), col("cv")))
     topK(scored, k)
@@ -184,10 +188,10 @@ object Similarity {
     val centsSeq: Seq[Seq[Double]] = centroids.toIndexedSeq.map(_.toIndexedSeq)
     // no input widening (cf. lshTopK): ivf_lists assignment is one fused
     // pass — the exchange would cost more than it parallelizes
-    val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
+    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .withColumn("list", element_at(
         graft.functions.IvfLists.ivfLists(col("cv"), centsSeq, 1), 1).cast("long"))
-    val q0 = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
+    val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       // probe the nprobe best lists, in ranked order
       .withColumn("list", explode(
         graft.functions.IvfLists.ivfLists(col("qv"), centsSeq, nprobe)))
@@ -226,10 +230,10 @@ object Similarity {
       graft.functions.LshProbes.lshProbes(vec, dim, planes, tables, nProbes, 42L))
     // input-skew guard shared with the dedup operators (Dedup.widen)
     val c = Dedup.widen(corpus, idCol)
-      .select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
+      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .withColumn("tb", buckets(col("cv"), 0))
       .select(col("neighbor_id"), col("cv"), col("tb.tbl"), col("tb.bucket"))
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("tb", buckets(col("qv"), if (multiprobe) planes else 0))
       .select(col("query_id"), col("qv"), col("tb.tbl"), col("tb.bucket"))
     val scored = c.join(broadcast(q), Seq("tbl", "bucket"))

@@ -59,7 +59,7 @@ class LongCodecsSpec extends AnyFunSuite {
     for ((label, data) <- chunks) {
       val st = LongCodecs.stats(data, data.length)
       for (codec <- LongCodecs.all) {
-        val predicted = LongCodecs.sizeOf(codec, st)
+        val predicted = codec.size(st)
         if (predicted != Long.MaxValue) {
           val actual = codec.encode(data).length.toLong
           assert(predicted === actual, s"$label via ${codec.name}")
@@ -73,7 +73,7 @@ class LongCodecsSpec extends AnyFunSuite {
       val st = LongCodecs.stats(data, data.length)
       val chosen = LongCodecs.select(st)
       val chosenSize = chosen.encode(data).length
-      for (codec <- LongCodecs.all if LongCodecs.sizeOf(codec, st) != Long.MaxValue) {
+      for (codec <- LongCodecs.all if codec.size(st) != Long.MaxValue) {
         assert(chosenSize <= codec.encode(data).length, s"$label: ${chosen.name} beaten by ${codec.name}")
       }
     }
@@ -136,7 +136,7 @@ class LongCodecsSpec extends AnyFunSuite {
       val expected = sizes.minBy(_._2)._1
       val chosen = LongCodecs.select(st)
       assert(chosen === expected, s"$label: sizes $sizes")
-      assert(LongCodecs.sizeOf(chosen, st) === sizes.toMap.apply(chosen), label)
+      assert(chosen.size(st) === sizes.toMap.apply(chosen), label)
       assert(LongCodecs.decode(chosen.encode(data, n)).toSeq === data.toSeq, label)
     }
   }
@@ -159,7 +159,7 @@ class LongCodecsSpec extends AnyFunSuite {
       val st = LongCodecs.stats(data, data.length)
       val dict = DictLongCodec.encode(data).length
       assert(LongCodecs.dictLowerBound(st) <= dict, label)
-      assert(st.dictBodySize < 0 || LongCodecs.sizeOf(DictLongCodec, st) === dict, label)
+      assert(st.dictBodySize < 0 || DictLongCodec.size(st) === dict, label)
     }
   }
 
@@ -179,9 +179,9 @@ class LongCodecsSpec extends AnyFunSuite {
     for ((label, data, g, width) <- cases) {
       val st = LongCodecs.stats(data, data.length)
       assert(st.gcd === g, label)
-      assert(st.gcdWidth === width, label)
+      assert(ForGcdLongCodec.width(st.max - st.min, st.gcd) === width, label)
       val block = ForGcdLongCodec.encode(data)
-      assert(LongCodecs.sizeOf(ForGcdLongCodec, st) === block.length, label)
+      assert(ForGcdLongCodec.size(st) === block.length, label)
       assert(LongCodecs.decode(block).toSeq === data.toSeq, label)
     }
   }
@@ -207,7 +207,7 @@ class DecimalLongCodecSpec extends AnyFunSuite {
     // the DOUBLE columns' direct decode: the same doubles, bit for bit
     assert(LongCodecs.decodeDoubles(block, 0, block.length).map(raw).toSeq === bits.toSeq, label)
     val st = LongCodecs.stats(vs, vs.length)
-    assert(LongCodecs.sizeOf(DecimalLongCodec, st) === block.length.toLong, label)
+    assert(DecimalLongCodec.size(st) === block.length.toLong, label)
     assert(LongCodecs.decode(LongCodecs.select(st).encode(vs)).toSeq === vs.toSeq, label)
     st.decimal
   }
@@ -346,7 +346,7 @@ class StringCodecsSpec extends AnyFunSuite {
     for ((label, data) <- chunks) {
       val st = StringCodecs.stats(data, data.length)
       for (codec <- StringCodecs.exact) {
-        val predicted = StringCodecs.sizeOf(codec, st)
+        val predicted = codec.size(st)
         if (predicted != Long.MaxValue)
           assert(predicted === codec.encode(data).length.toLong, s"$label via ${codec.name}")
       }
@@ -358,7 +358,7 @@ class StringCodecsSpec extends AnyFunSuite {
       val st = StringCodecs.stats(data, data.length)
       val chosen = StringCodecs.select(data, data.length, st)
       val chosenSize = chosen.encode(data).length
-      for (codec <- StringCodecs.exact if StringCodecs.sizeOf(codec, st) != Long.MaxValue)
+      for (codec <- StringCodecs.exact if codec.size(st) != Long.MaxValue)
         assert(chosenSize <= codec.encode(data).length, s"$label: ${chosen.name} beaten by ${codec.name}")
     }
   }
@@ -480,5 +480,51 @@ class FsstSpec extends AnyFunSuite {
     val a = Fsst.train(Utf8Column.of(rows, rows.length)).symbols
     val b = Fsst.train(Utf8Column.of(rows.clone(), rows.length)).symbols
     assert(a.map(_.toSeq).toSeq === b.map(_.toSeq).toSeq)
+  }
+}
+
+class BlockHeaderSpec extends AnyFunSuite {
+  test("every block header fails as a controlled error: wrong id, rows above the cap, bad slice") {
+    type Decode = (Array[Byte], Int, Int) => Any
+    val longs = Array(3L, 1L, 4L, 1L, 5L)
+    val strs = Utf8Column.of(Array("graft", "", "block", "block"), 4)
+    val floats = new FloatsColumn(Array(1f, 2.5f, -3f), Array(0, 2), Array(2, 1))
+    // (label, a valid block, the offset of its `[id][rows]` header, a decode of it)
+    val cases: Seq[(String, Array[Byte], Int, Decode)] =
+      LongCodecs.all.flatMap(c => Seq[(String, Array[Byte], Int, Decode)](
+        (s"long ${c.name}", c.encode(longs), 0, c.decode(_, _, _)),
+        (s"long ${c.name} by id", c.encode(longs), 0, LongCodecs.decodeSlice))) ++
+      StringCodecs.all.flatMap(c => Seq[(String, Array[Byte], Int, Decode)](
+        (s"string ${c.name}", c.encodeUtf8(strs), 0, c.decodeUtf8),
+        (s"string ${c.name} by id", c.encodeUtf8(strs), 0, StringCodecs.decodeSliceUtf8))) ++
+      Seq[(String, Array[Byte], Int, Decode)](
+        ("bin-raw", BytesCodecs.encodeBinary(strs), 0, BytesCodecs.decodeBinary),
+        ("f32-raw", BytesCodecs.encodeRaw(floats), 0, BytesCodecs.decodeFloats),
+        ("f32-rd", BytesCodecs.encodeRd(floats), 0, BytesCodecs.decodeFloats),
+        ("narrow", IntCodecs.encode(DeltaLongCodec, longs, longs.length), 1, IntCodecs.decodeSlice))
+    assert(cases.map(c => c._2(c._3) & 0xff).distinct.sorted ===
+      (1 to 8) ++ (16 to 19) ++ (32 to 34))
+    val overCap = {
+      val w = new graft.core.BlockWriter(16)
+      w.putVarint(LongCodecs.MaxDecodeRows + 1L)
+      w.result()
+    }
+    def controlled(label: String)(decode: => Any): Unit = {
+      val e = intercept[Exception](decode)
+      assert(e.isInstanceOf[IllegalArgumentException] || e.isInstanceOf[graft.core.DecodeError],
+        s"$label: $e")
+    }
+    for ((label, block, at, decode) <- cases) {
+      decode(block, 0, block.length)
+      val wrongId = block.clone()
+      wrongId(at) = 0xee.toByte
+      controlled(s"$label: wrong id")(decode(wrongId, 0, wrongId.length))
+      val tooMany = block.take(at + 1) ++ overCap ++ new Array[Byte](64)
+      controlled(s"$label: rows above the cap")(decode(tooMany, 0, tooMany.length))
+      controlled(s"$label: empty slice")(decode(block, 0, 0))
+      controlled(s"$label: empty slice at the end")(decode(block, block.length, block.length))
+      controlled(s"$label: slice past the buffer")(decode(block, 0, block.length + 1))
+      controlled(s"$label: negative offset")(decode(block, -1, block.length))
+    }
   }
 }

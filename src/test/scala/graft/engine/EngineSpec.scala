@@ -297,7 +297,7 @@ class EngineSpec extends AnyFunSuite {
   test("salted partitioning bounds the zipf-head repo's share of any partition") {
     import spark.implicits._
     val derived = ColumnarEngine.derive(SourceTable.synthesize(spark, 3000, 8))
-    val parted = ColumnarEngine.partitionForEncoding(derived, numParts = 16, saltBuckets = 16)
+    val parted = ColumnarEngine.partitionForEncoding(derived, numParts = 16)
     val sizes = parted.mapPartitions(it => Iterator.single(it.size)).collect()
     val total = sizes.sum
     assert(total === 3000)

@@ -242,6 +242,21 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("ivf_lists never probes a list twice when fewer than nprobe lists score finite") {
+    graft.functions.IvfLists.register(spark)
+    val cents = Seq(Seq(1.0, 0.0), Seq(-1.0, 0.0), Seq(0.0, 1.0), Seq(0.0, -2.0))
+    val inf = Double.PositiveInfinity
+    val probes = Seq(Seq(Double.NaN, Double.NaN), Seq(inf, 0.0), Seq(0.5, 0.25)).toDF("v")
+      .select(graft.functions.IvfLists.ivfLists(col("v"), cents, 3))
+      .collect().map(_.getSeq[Int](0))
+    // a NaN vector scores -Inf on every list: the lists follow in id order
+    assert(probes(0) === Seq(0, 1, 2))
+    // (Inf, 0) scores +Inf on list 0 and -Inf (or NaN, ranked as -Inf) on the rest
+    assert(probes(1) === Seq(0, 1, 2))
+    // finite scores <v, c> - |c|^2 / 2: 0, -1, -0.25, -2.5
+    assert(probes(2) === Seq(0, 2, 1))
+  }
+
   test("approximate ANN/near-dup recall is QUANTIFIED against the exact answers") {
     import org.apache.spark.sql.DataFrame
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
